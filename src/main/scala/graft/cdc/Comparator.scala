@@ -29,58 +29,13 @@ object Comparator {
     *                     compare_timestamps.go:214)
     * @param strictChangeType corrected DELETE-suffix semantics instead of the
     *                     reference's dead branch (SURVEY E12) */
-  /** @param bandJoinTolerance evaluate E10's tolerance as a time-bucketed
-    *                     BAND-JOIN predicate instead of a post-join filter
-    *                     expression — the SURVEY §4 deferred candidate.
-    *                     Same statuses bit-for-bit (cdc46 gates it against
-    *                     cdc04's oracle); the point is the PLAN: the
-    *                     within-tolerance pairs come from an equi-join on
-    *                     (key, time-bucket) with the band check inside the
-    *                     join condition, the q25 range-join shape — the
-    *                     form a tolerance-keyed (rather than position-
-    *                     keyed) reconciliation would need at scale.
-    *                     CONTRACT: the binlog side must be unique per
-    *                     (file, position) — `prepareBinlog`'s last-wins
-    *                     dedup output, the same expectation `compare`
-    *                     documents. Within-band membership keys on
-    *                     (file, pos, avro-µs); a duplicate-keyed binlog
-    *                     side would let a sibling row's in-band timestamp
-    *                     vouch for a pair whose own Δt is out of band.
-    *                     Supported for batch AND the stream-static shape
-    *                     (avro stream ⟕ static binlog — cdc50's gate):
-    *                     there the static side is bucketed once and the
-    *                     within-band flag rides a second chained
-    *                     stream-static equi-join on (key, bucket), with no
-    *                     distinct (the unique-key contract above makes at
-    *                     most one exploded bucket row match). Stream-STREAM
-    *                     band mode is NOT this flag: a second join against
-    *                     the binlog feed would be a second stream-stream
-    *                     join. The working formulation folds the band into
-    *                     the ONE watermarked join — bucket exploded on the
-    *                     binlog side, the band check riding the join
-    *                     condition, unmatched rows resolved at the terminal
-    *                     reconciliation — and lives in
-    *                     [[graft.streaming.StreamingComparator.compareStreamsBandSweep]]
-    *                     (gated by cdc52 against cdc04's oracle). */
-  case class Config(toleranceMs: Long = 100L, strictChangeType: Boolean = false,
-      bandJoinTolerance: Boolean = false)
+  case class Config(toleranceMs: Long = 100L, strictChangeType: Boolean = false)
 
   /** Go's `time.Time` zero value (year 1) in epoch micros: a binlog event with
     * *both* timestamp fields empty is compared against this and therefore
     * always mismatches (reference compare_timestamps.go:197-216). */
   val GoZeroTimeMicros: Long = -62135596800000000L
 
-  /** Phase A (reference loadBinlogData, compare_timestamps.go:101-151):
-    * relevance filter, zero-value key filter, last-wins dedup.
-    *
-    * @param raw    binlog events with at least the columns of
-    *               `Schemas.binlogReadSchema`
-    * @param seq    strictly increasing input-order column — the distributed
-    *               stand-in for the reference's map-insert order (:147).
-    *               Callers reading files should derive it from
-    *               (file sequence, row index), not `monotonically_increasing_id`
-    *               after a repartition.
-    */
   /** P3/P4 + Go-zero-value normalization WITHOUT the dedup aggregate — the
     * streaming-safe prepare (a streaming aggregation cannot precede a
     * stream-stream join; live CDC feeds carry unique (file, position) keys,
@@ -93,6 +48,17 @@ object Comparator {
       .filter(isRelevantEventType(col("event_type")))                    // P3
       .filter(col("binlog_file") =!= "" && col("log_position") =!= 0L)  // P4
 
+  /** Phase A (reference loadBinlogData, compare_timestamps.go:101-151):
+    * relevance filter, zero-value key filter, last-wins dedup.
+    *
+    * @param raw    binlog events with at least the columns of
+    *               `Schemas.binlogReadSchema`
+    * @param seq    strictly increasing input-order column — the distributed
+    *               stand-in for the reference's map-insert order (:147).
+    *               Callers reading files should derive it from
+    *               (file sequence, row index), not `monotonically_increasing_id`
+    *               after a repartition.
+    */
   def prepareBinlog(raw: DataFrame, seq: Column): DataFrame = {
     // Go zero values: a missing field decodes to ""/0, so null folds to the
     // zero value *before* the filters (reference :137-140 drops those rows).
@@ -203,169 +169,107 @@ object Comparator {
       binlog: DataFrame, avro: DataFrame, cfg: Config, joinType: String): DataFrame = {
     val b = renameBinlogSide(binlog)
     val a = renameAvroSide(avro)
-    val joined = a.join(b,
-      a("a_file") === b("b_file") && a("a_pos") === b("b_pos"),
-      joinType)
-    if (!cfg.bandJoinTolerance) statusColumns(joined, cfg)
-    else if (avro.isStreaming && !binlog.isStreaming) {
-      // STREAM-STATIC band mode (E10 served under streaming — cdc50): the
-      // static binlog side is bucketed ONCE (±1 explode, the batch shape
-      // below) and the within-band flag comes from a second chained
-      // stream-static equi-join on (file, pos, bucket) carrying the exact
-      // band check — no distinct, no rejoin of stream-derived frames
-      // (which streaming would reject as a stream-stream self-join). The
-      // unique-(file, pos) contract means the three exploded bucket rows
-      // have distinct bucket values, so at most ONE can match a given
-      // stream row: the join cannot duplicate. At scale the bucketed
-      // static side is built once per (re)start and either broadcast or
-      // shuffled on the same key as the main join.
-      val w = math.max(cfg.toleranceMs * 1000L, 1L)
-      val bBand = renameBinlogSide(binlog)
-        .filter(!binlogTsParseError)
-        .select(col("b_file").as("_bb_file"), col("b_pos").as("_bb_pos"),
-          binlogTsMicros.as("_bb_us"))
-        .select(col("_bb_file"), col("_bb_pos"), col("_bb_us"),
-          explode(array(lit(-1L), lit(0L), lit(1L))).as("_nb"))
-        .select(col("_bb_file"), col("_bb_pos"), col("_bb_us"),
-          (expr(s"_bb_us div ${w}L") + col("_nb")).as("_bb_bkt"))
-      val flagged = joined
-        .withColumn("_a_us", col("a_source_ts_ms") * 1000L)
-        .withColumn("_a_bkt", expr(s"_a_us div ${w}L"))
-        .join(bBand,
-          col("a_file") === col("_bb_file") && col("a_pos") === col("_bb_pos") &&
-            col("_a_bkt") === col("_bb_bkt") &&
-            abs(col("_a_us") - col("_bb_us")) <= lit(cfg.toleranceMs * 1000L),
-          "left")
-        .withColumn("_ts_within", col("_bb_file").isNotNull)
-        .drop("_bb_file", "_bb_pos", "_bb_us", "_bb_bkt", "_a_us", "_a_bkt")
-      val bandOutside = when(col("a_source_ts_ms").isNull,
-        lit(null).cast("boolean")).otherwise(!col("_ts_within"))
-      statusColumns(flagged, cfg, tsOutside = Some(bandOutside))
-        .drop("_ts_within")
-    }
-    else {
-      require(!binlog.isStreaming && !avro.isStreaming,
-        "bandJoinTolerance under streaming is stream-static only (static " +
-          "binlog side); the stream-stream form would need a second " +
-          "stream-stream join, which Spark plans reject")
-      // E10 as a BAND JOIN (q25's time-bucket machinery): a pair is within
-      // tolerance iff |Δt| ≤ tol, and with bucket width W = tol·1000 µs two
-      // in-band timestamps land in the same or adjacent buckets — so the
-      // binlog side explodes to its bucket ± 1 (constant 3×) and the pair
-      // search is an EQUI-join on (key, bucket) carrying the exact band
-      // check, never a theta join. Membership keys on (file, pos, a_µs):
-      // duplicate avro rows on one key are compared independently
-      // (reference :168-247), and rows with equal timestamps are
-      // indistinguishable for tolerance, so the distinct is lossless.
-      // Parse-error binlog rows never enter (they mismatch by E8's rule);
-      // the both-empty Go-zero time DOES enter and matches nothing — the
-      // always-mismatch quirk falls out of the band itself.
-      val w = math.max(cfg.toleranceMs * 1000L, 1L) // tol=0 ⇒ exact-µs bucket
-      val bT = renameBinlogSide(binlog)
-        .filter(!binlogTsParseError)
-        .select(col("b_file"), col("b_pos"), binlogTsMicros.as("_b_us"))
-        .select(col("b_file"), col("b_pos"), col("_b_us"),
-          explode(array(lit(-1L), lit(0L), lit(1L))).as("_nb"))
-        .select(col("b_file"), col("b_pos"), col("_b_us"),
-          (expr(s"_b_us div ${w}L") + col("_nb")).as("_bkt"))
-      val aT = renameAvroSide(avro)
-        .select(col("a_file"), col("a_pos"),
-          (col("a_source_ts_ms") * 1000L).as("_a_us"))
-        .withColumn("_bkt", expr(s"_a_us div ${w}L"))
-      val within = bT.join(aT,
-          bT("b_file") === aT("a_file") && bT("b_pos") === aT("a_pos") &&
-            bT("_bkt") === aT("_bkt") &&
-            abs(aT("_a_us") - bT("_b_us")) <= lit(cfg.toleranceMs * 1000L))
-        .select(col("a_file").as("_w_file"), col("a_pos").as("_w_pos"),
-          col("_a_us").as("_w_us"))
-        .distinct()
-      val flagged = joined.join(within,
-          col("a_file") === col("_w_file") && col("a_pos") === col("_w_pos") &&
-            col("a_source_ts_ms") * 1000L === col("_w_us"), "left")
-        .withColumn("_ts_within", col("_w_file").isNotNull)
-        .drop("_w_file", "_w_pos", "_w_us")
-      // Null-semantics parity with the default path: a null a_source_ts_ms
-      // makes the default tolerance expression NULL (coalesced match-ward
-      // in statusColumns), whereas the band non-membership would read as a
-      // definite out-of-band — so emit NULL, not true, in that case.
-      // (Unreachable after prepareAvro's coalesce; parity for raw callers.)
-      val bandOutside = when(col("a_source_ts_ms").isNull,
-        lit(null).cast("boolean")).otherwise(!col("_ts_within"))
-      statusColumns(flagged, cfg, tsOutside = Some(bandOutside))
-        .drop("_ts_within")
+    statusColumns(a.join(b,
+      a("a_file") === b("b_file") && a("a_pos") === b("b_pos"), joinType), cfg)
+  }
+
+  /** E10 as a BAND over a tolerance sweep — the core shared by the batch
+    * [[compareBandSweep]], the stream-static
+    * [[graft.streaming.StreamingComparator.compareStreamBandSweep]] and the
+    * stream-stream [[graft.streaming.StreamingComparator.compareStreamsBandSweep]].
+    *
+    * A pair is within tolerance iff |Δt| ≤ tol. With bucket width
+    * W = `max(maxTol·1000, 1)` µs (tol = 0 ⇒ exact-µs buckets), two
+    * timestamps within the COARSEST band land in the same or adjacent
+    * buckets, so the binlog side explodes to its bucket ± 1 (constant 3×)
+    * and pair discovery is an EQUI-join on (key, bucket) carrying the exact
+    * band check ([[inBand]]) — never a theta join (q25's range-join shape).
+    * Bands nest (|Δ| ≤ tol ⇒ |Δ| ≤ maxTol), so the |Δ| of a coarsest-band
+    * partner decides every finer tolerance in a stateless post-join
+    * projection ([[statuses]]): each side is joined once, whatever the
+    * sweep width.
+    *
+    * CONTRACT: the binlog side is unique per (file, position) —
+    * `prepareBinlog`'s last-wins dedup output, the expectation `compare`
+    * documents. Then the three bucket rows of one binlog row carry distinct
+    * buckets, so at most one can match a given avro row and the band join
+    * never duplicates a pair. Callers keep their own join types,
+    * watermark/time-bound predicates and E8 parse-error handling; the
+    * both-empty Go-zero time does enter the band and matches nothing, so
+    * that always-mismatch quirk falls out of the band itself.
+    *
+    * Columns: `_b_us`/`_b_bkt` on the binlog side, `_a_us`/`_a_bkt` on the
+    * avro side; [[statuses]] drops all four. */
+  private[graft] final class ToleranceBand(tols: Seq[Long]) {
+    require(tols.nonEmpty, "a tolerance sweep needs at least one tolerance")
+    private val maxUs = tols.max * 1000L
+    private val width = math.max(maxUs, 1L)
+
+    /** A renamed binlog side (`b_*` columns) with its E8 commit micros and
+      * one row per bucket − 1, bucket, bucket + 1. */
+    def bucketBinlog(b: DataFrame): DataFrame =
+      b.withColumn("_b_us", binlogTsMicros)
+        .withColumn("_b_nb", explode(array(lit(-1L), lit(0L), lit(1L))))
+        .withColumn("_b_bkt", expr(s"_b_us div ${width}L") + col("_b_nb"))
+        .drop("_b_nb")
+
+    /** A frame carrying `a_source_ts_ms` with its micros and bucket. */
+    def bucketAvro(a: DataFrame): DataFrame =
+      a.withColumn("_a_us", col("a_source_ts_ms") * 1000L)
+        .withColumn("_a_bkt", expr(s"_a_us div ${width}L"))
+
+    /** The band join condition at the coarsest tolerance (keys apart). */
+    def inBand: Column =
+      col("_a_bkt") === col("_b_bkt") && delta <= lit(maxUs)
+
+    /** |Δ| of a banded pair, in µs. */
+    def delta: Column = abs(col("_a_us") - col("_b_us"))
+
+    /** One row per tolerance (`tolerance_ms`) with the comparison columns;
+      * `pairDelta` is the pair's |Δ| µs, null when no partner lies within
+      * the coarsest band — outside every tolerance then. A null
+      * `a_source_ts_ms` gives a NULL verdict, as the default tolerance
+      * expression does (coalesced match-ward in [[statusColumns]]). */
+    def statuses(flagged: DataFrame, pairDelta: Column, cfg: Config): DataFrame = {
+      val outside = when(col("a_source_ts_ms").isNull, lit(null).cast("boolean"))
+        .otherwise(!coalesce(pairDelta <= col("tolerance_ms") * 1000L, lit(false)))
+      statusColumns(flagged.withColumn("tolerance_ms", explode(typedlit(tols))),
+        cfg, tsOutside = Some(outside))
+        .drop("_a_us", "_a_bkt", "_b_us", "_b_bkt")
     }
   }
 
-  /** The WHOLE tolerance sweep as ONE batch plan (r17, guide §2.4 "do
-    * fewer passes"): `compare(binlog, avro, Config(tol, bandJoinTolerance
-    * = true))` for every `tol`, without re-joining the sides per
-    * tolerance. The tolerance-independent full-outer comparison is
-    * joined ONCE and exploded across the tolerance dimension; the
-    * within-band verdict comes from ONE equi-join on (key, bucket) at
-    * the COARSEST tolerance's width, carrying the smallest |Δ| per
-    * (file, pos, a_µs) membership key — bands nest, so `min |Δ| ≤ tol`
-    * is exactly the single-tolerance band mode's membership at every
-    * `tol` in the sweep (same `max(tol·1000, 1) µs` width semantics,
-    * same ±1 adjacency at the coarsest band, same membership key), and
-    * the statuses are bit-for-bit the per-tolerance runs' — a
-    * 5-tolerance sweep reads each side twice total (join leg + band
-    * leg) instead of ten times, and the band leg no longer multiplies
-    * by the sweep width (the cdc52 stream-stream construction,
-    * [[graft.streaming.StreamingComparator.compareStreamsBandSweep]],
-    * uses the same coarsest-band Δ trick).
-    * Same unique-(file, position) binlog-side contract as the band mode.
-    * Output: `compare`'s columns plus a leading `tolerance_ms`. */
+  /** The WHOLE tolerance sweep as ONE batch plan: for every `tol`, the
+    * statuses of `compare(binlog, avro, Config(tol))`, bit for bit, from one
+    * full-outer join and one [[ToleranceBand]] leg — a 5-tolerance sweep
+    * reads each side twice in total instead of ten times. The band leg
+    * carries the smallest |Δ| per (file, pos, avro-µs) membership key:
+    * duplicate avro rows on one key are compared independently (reference
+    * :168-247), and rows with equal timestamps are indistinguishable for
+    * tolerance. Parse-error binlog rows never enter the band (they mismatch
+    * by E8's rule). Same unique-(file, position) binlog-side contract as
+    * the band core. Output: `compare`'s columns plus `tolerance_ms`. */
   def compareBandSweep(binlog: DataFrame, avro: DataFrame,
       tols: Seq[Long], cfg: Config = Config()): DataFrame = {
-    require(tols.nonEmpty, "compareBandSweep needs at least one tolerance")
+    val band = new ToleranceBand(tols)
     val b = renameBinlogSide(binlog)
     val a = renameAvroSide(avro)
     val joined = a.join(b,
-        a("a_file") === b("b_file") && a("a_pos") === b("b_pos"),
-        "full_outer")
-      .withColumn("tolerance_ms", explode(typedlit(tols)))
-    // the band leg runs ONCE at the COARSEST tolerance (r17, guide
-    // §2.3/§2.4): bands nest (|Δ| ≤ tol ⇒ |Δ| ≤ max tol), so the
-    // smallest |Δ| among coarsest-band partners decides EVERY
-    // tolerance — "∃ partner with |Δ| ≤ tol" ⟺ "min |Δ| ≤ tol". The
-    // old leg exploded (tolerance, bucket ± 1) on the binlog side
-    // (|tols|·3×) and (tolerance) on the avro side (|tols|×) through
-    // the membership join; this shape is 3×/1× with a min-aggregate,
-    // and the per-tolerance verdict is a stateless comparison of the
-    // carried Δ. Bucket width max(maxTol·1000, 1) µs, ± 1 adjacency —
-    // the same q25 construction, so membership at the coarsest band
-    // is exact, and nesting gives every finer band exactly.
-    val wMax = math.max(tols.max * 1000L, 1L)
-    val bT = renameBinlogSide(binlog)
-      .filter(!binlogTsParseError)
-      .select(col("b_file"), col("b_pos"), binlogTsMicros.as("_b_us"))
-      .withColumn("_nb", explode(array(lit(-1L), lit(0L), lit(1L))))
-      .select(col("b_file"), col("b_pos"), col("_b_us"),
-        (expr(s"_b_us div ${wMax}L") + col("_nb")).as("_bkt"))
-    val aT = renameAvroSide(avro)
-      .select(col("a_file"), col("a_pos"),
-        (col("a_source_ts_ms") * 1000L).as("_a_us"))
-      .withColumn("_bkt", expr(s"_a_us div ${wMax}L"))
+      a("a_file") === b("b_file") && a("a_pos") === b("b_pos"), "full_outer")
+    val bT = band.bucketBinlog(renameBinlogSide(binlog).filter(!binlogTsParseError))
+      .select(col("b_file"), col("b_pos"), col("_b_us"), col("_b_bkt"))
+    val aT = band.bucketAvro(renameAvroSide(avro))
+      .select(col("a_file"), col("a_pos"), col("_a_us"), col("_a_bkt"))
     val within = bT.join(aT,
-        bT("b_file") === aT("a_file") && bT("b_pos") === aT("a_pos") &&
-          bT("_bkt") === aT("_bkt") &&
-          abs(aT("_a_us") - bT("_b_us")) <= lit(tols.max * 1000L))
+        col("b_file") === col("a_file") && col("b_pos") === col("a_pos") && band.inBand)
       .groupBy(col("a_file").as("_w_file"), col("a_pos").as("_w_pos"),
         col("_a_us").as("_w_us"))
-      .agg(min(abs(col("_a_us") - col("_b_us"))).as("_w_delta"))
+      .agg(min(band.delta).as("_w_delta"))
     val flagged = joined.join(within,
         col("a_file") === col("_w_file") && col("a_pos") === col("_w_pos") &&
           col("a_source_ts_ms") * 1000L === col("_w_us"), "left")
       .drop("_w_file", "_w_pos", "_w_us")
-    // null-semantics parity with the single-tolerance band mode; a null
-    // _w_delta (no partner within even the coarsest band) is outside
-    // every tolerance
-    val bandOutside = when(col("a_source_ts_ms").isNull,
-      lit(null).cast("boolean"))
-      .otherwise(!coalesce(
-        col("_w_delta") <= col("tolerance_ms") * 1000L, lit(false)))
-    statusColumns(flagged, cfg, tsOutside = Some(bandOutside))
-      .drop("_w_delta")
+    band.statuses(flagged, col("_w_delta"), cfg).drop("_w_delta")
   }
 
   /** The comparison flag/status expressions over an already-joined frame
@@ -385,7 +289,7 @@ object Comparator {
     val avroMicros = col("a_source_ts_ms") * 1000L
 
     val bothPresent = col("_b_present") && col("_a_present")
-    // tsOutside: caller-supplied out-of-band verdict (the band-join mode)
+    // tsOutside: caller-supplied out-of-band verdict (ToleranceBand)
     // replacing the default post-join tolerance expression — E8's
     // parse-error short-circuit stays in front either way
     val tsMismatch = parseError ||

@@ -10,21 +10,6 @@ import org.apache.spark.sql.types._
   */
 object Normalize {
 
-  // ---------------------------------------------------------------- regexes
-
-  /** E1 — event-header extract (reference json_parser.go:29). */
-  def eventHeader(line: Column): Column =
-    regexp_extract(line, "^=== (.+?) ===$", 1)
-
-  /** E2 — key/value extract (reference json_parser.go:30). */
-  def kvKey(line: Column): Column   = regexp_extract(line, "^([^:]+): (.+)$", 1)
-  def kvValue(line: Column): Column = regexp_extract(line, "^([^:]+): (.+)$", 2)
-
-  /** E3 — key normalization: lowercase + space→underscore
-    * (reference json_parser.go:77). */
-  def normalizeKey(k: Column): Column =
-    lower(regexp_replace(k, " ", "_"))
-
   /** E4 — event-type classification from a header or `Event type:` value
     * (reference json_parser.go:55-66,124-131): canonical V2 DML names win,
     * otherwise strip one trailing "Event". */
@@ -51,20 +36,6 @@ object Normalize {
   def parseRfc3339(c: Column): Column =
     when(c.rlike(Rfc3339Pattern), try_to_timestamp(c))
 
-  /** E5 — second-precision date parse, layout `2006-01-02 15:04:05`
-    * (reference json_parser.go:80-87). */
-  def parseDateSeconds(c: Column): Column =
-    try_to_timestamp(c, lit("yyyy-MM-dd HH:mm:ss"))
-
-  /** E6(a) — extract the parenthesized `(...Z)` RFC3339Nano suffix of a
-    * high-precision commit-timestamp value (reference json_parser.go:103-105).
-    */
-  def parenthesizedTimestamp(c: Column): Column =
-    regexp_extract(c, "\\(([^)]+Z)\\)$", 1)
-
-  /** E9 — epoch-millis → timestamp (reference compare_timestamps.go:213). */
-  def epochMillisToTimestamp(c: Column): Column = timestamp_millis(c)
-
   // ------------------------------------------------------------- filenames
 
   /** E14 — basename extraction (reference json_parser.go:24). */
@@ -79,12 +50,6 @@ object Normalize {
     nullif(regexp_extract(name, "\\.(\\d+)$", 1), lit("")).cast(LongType)
 
   // ------------------------------------------------------------ predicates
-
-  /** P1 — blank / `--` separator drop (reference json_parser.go:35-41). */
-  def isContentLine(line: Column): Column = {
-    val t = trim(line)
-    t =!= "" && t =!= "--"
-  }
 
   /** P3 — relevant-event filter (reference compare_timestamps.go:124). */
   def isRelevantEventType(c: Column): Column =

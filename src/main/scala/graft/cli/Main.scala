@@ -54,11 +54,6 @@ import graft.ingest.{AvroSource, BinlogBinaryParser, BinlogTextParser, Sources}
   *                               where a scheduled job owns the build)
   *     [--split-bytes <n>]      (target range size for the auto-built
   *                               index; default 128 MiB)
-  *     [--centroid-chunks <n>]  (sets `spark.graft.centroid.chunks` on the
-  *                               session — the bounded-centroid-fold sizing
-  *                               dial for similarity/k-means operators run
-  *                               in this session; see the sizing note on
-  *                               graft.ops.Similarity.buildCentroids)
   *
   * Outputs under --out (default /tmp/graft_out): `detail/` (every
   * non-match row), `breakdown/` (per schema/table/status counts), a
@@ -80,7 +75,6 @@ object Main {
       splitIndex: Option[String] = None,
       splitIndexAutoBuild: Boolean = true,
       splitBytes: Option[Long] = None,
-      centroidChunks: Option[Int] = None,
       follow: Seq[String] = Nil,
       purgeSafe: Boolean = false,
       maxFilesPerTrigger: Option[Int] = None,
@@ -105,10 +99,6 @@ object Main {
       parseArgs(rest, acc.copy(splitIndexAutoBuild = false))
     case "--split-bytes" :: v :: rest =>
       parseArgs(rest, acc.copy(splitBytes = Some(v.toLong)))
-    case "--centroid-chunks" :: v :: rest =>
-      val n = v.toInt
-      require(n > 0, s"--centroid-chunks must be positive, got $n")
-      parseArgs(rest, acc.copy(centroidChunks = Some(n)))
     case "--follow" :: v :: rest =>
       parseArgs(rest, acc.copy(follow = acc.follow :+ v))
     case "--purge-safe" :: rest => parseArgs(rest, acc.copy(purgeSafe = true))
@@ -199,12 +189,6 @@ object Main {
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // deployment dial for the bounded centroid fold (graft.ops.Similarity):
-    // not used by the CDC pipeline below, but the CLI owns the session, so
-    // this is where a deployment sizes the fold for any similarity/k-means
-    // work sharing it (the sizing note at Similarity.buildCentroids)
-    args.centroidChunks.foreach(n =>
-      spark.conf.set(graft.ops.Similarity.ChunksConfKey, n.toString))
 
     // A3 — the reference's shell job metrics (comparator.sh:103-107,
     // avro_to_json.sh:75-85): count each side's input files up front and
@@ -603,15 +587,8 @@ object Main {
       quarantines: Map[String, DataFrame],
       release: () => Unit)
 
-  /** The comparison plan for the given sources (separated for testing). */
-  def run(spark: SparkSession, args: Args): DataFrame =
-    runWithRelease(spark, args)._1
-
-  def runWithRelease(spark: SparkSession, args: Args): (DataFrame, () => Unit) = {
-    val p = prepare(spark, args)
-    (p.compared, p.release)
-  }
-
+  /** The comparison plan for the given sources: `main` writes its reports
+    * from it; tests read `compared` directly and then call `release()`. */
   def prepare(spark: SparkSession, args: Args): Prepared = {
     val releases = collection.mutable.ArrayBuffer.empty[() => Unit]
     val quarantines = collection.mutable.Map.empty[String, DataFrame]
@@ -620,19 +597,16 @@ object Main {
         val parsed = BinlogTextParser.toComparatorInput(BinlogTextParser.parse(spark, dir))
         Comparator.prepareBinlog(parsed, BinlogTextParser.seqColumn)
       case (None, Some(dir)) =>
-        // S1 — raw binary decode, no external parser process; with
-        // --split-index huge files range-split across tasks (the index is
-        // auto-built by the first run's header-only walk)
-        val parsed = args.splitIndex match {
-          case Some(idx) =>
-            val rd = spark.read.format("binlog")
-              .option("splitIndex", idx)
-              .option("splitIndexAutoBuild", args.splitIndexAutoBuild.toString)
-            args.splitBytes.foreach(b => rd.option("splitBytes", b.toString))
-            rd.load(dir)
-          case None => BinlogBinaryParser.parse(spark, dir).toDF()
+        // S1 — raw binary decode through the DSv2 `binlog` scan, no external
+        // parser process; with --split-index huge files range-split across
+        // tasks (the index is auto-built by the first run's header-only walk)
+        val rd = spark.read.format("binlog")
+        args.splitIndex.foreach { idx =>
+          rd.option("splitIndex", idx)
+            .option("splitIndexAutoBuild", args.splitIndexAutoBuild.toString)
+          args.splitBytes.foreach(b => rd.option("splitBytes", b.toString))
         }
-        Comparator.prepareBinlog(parsed, BinlogBinaryParser.seqColumn)
+        Comparator.prepareBinlog(rd.load(dir), BinlogBinaryParser.seqColumn)
       case (None, None) =>
         // Order-preserving JSON-lines read: (file_seq, basename, line_no) is
         // the reference's `ls -v` + within-file order, independent of how

@@ -24,10 +24,11 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   *
   * The decode is inherently *stateful within a file* (a TABLE_MAP names the
   * schema/table for the row events that follow; a GTID event scopes the
-  * transaction after it), so the parallelism unit is the file — one task
-  * per file over `binaryFiles`, the same unit as the reference's per-file
-  * loop and as [[BinlogTextParser]]. Binlog files are bounded (max_binlog_
-  * size caps them ~1 GiB), so at 100 TB the fan-out is the file count.
+  * transaction after it), so the parallelism unit is the file — the DSv2
+  * `binlog` scan ([[graft.sources.BinlogDataSource]]) plans one task per
+  * file, the same unit as the reference's per-file loop and as
+  * [[BinlogTextParser]], or one per transaction-aligned byte range with a
+  * split index ([[BinlogOffsetIndex]]).
   *
   * Output rows are [[ParsedBinlogEvent]] — identical shape to the text
   * parser, so `Comparator.prepareBinlog(parse(...), seqColumn)` runs the
@@ -56,20 +57,16 @@ object BinlogBinaryParser {
     36 -> "TransactionContext", 37 -> "ViewChange", 38 -> "XAPrepareLog",
     39 -> "PartialUpdateRows", 40 -> "TransactionPayload", 41 -> "HeartbeatV2")
 
-  /** Read a directory/glob of raw `.bin`/`mysql-bin.NNNNNN` files. The
-    * decode streams from each file's `PortableDataStream` one event at a
-    * time — a task's heap holds one event body, not the whole file, so
-    * oversized binlogs (a transaction overshooting max_binlog_size, even
-    * past 2 GiB) decode without pinning file-sized buffers (ADVICE r2/r3:
-    * whole-file `toArray` + Int-truncated lengths). */
+  /** Read a directory/glob of raw `.bin`/`mysql-bin.NNNNNN` files: the
+    * typed view of the DSv2 `binlog` scan, `spark.read.format("binlog")
+    * .load(path)`. Each task streams its file through [[decodeStream]] one
+    * event at a time — a task's heap holds one event body, not the whole
+    * file, so oversized binlogs (a transaction overshooting
+    * max_binlog_size, even past 2 GiB) decode without pinning file-sized
+    * buffers. */
   def parse(spark: SparkSession, path: String): Dataset[ParsedBinlogEvent] = {
     import spark.implicits._
-    spark.sparkContext.binaryFiles(path)
-      .flatMap { case (p, stream) =>
-        val base = p.split('/').last
-        decodeStream(stream.open(), base)
-      }
-      .toDS()
+    spark.read.format("binlog").load(path).as[ParsedBinlogEvent]
   }
 
   /** Decode one in-memory binlog file image (pure function — the spec

@@ -123,8 +123,6 @@ object BinlogBinaryWriter {
   private def be(v: Long, width: Int): Array[Byte] =
     (0 until width).reverse.map(i => ((v >> (8 * i)) & 0xFF).toByte).toArray
 
-  def encTiny(v: Int): Array[Byte] = Array(v.toByte)
-  def encShort(v: Int): Array[Byte] = le(v.toLong, 2)
   def encLong(v: Int): Array[Byte] = le(v.toLong, 4)
   def encLongLong(v: Long): Array[Byte] = le(v, 8)
   def encFloat(v: Float): Array[Byte] =
@@ -253,8 +251,6 @@ object BinlogBinaryWriter {
     def enum(packLen: Int): ColDef = ColDef(254, Array(247.toByte, packLen.toByte))
     def set(packLen: Int): ColDef = ColDef(254, Array(248.toByte, packLen.toByte))
     def char(packLen: Int): ColDef = ColDef(254, Array(254.toByte, packLen.toByte))
-    def timestamp2(fsp: Int): ColDef = ColDef(17, Array(fsp.toByte))
-    def datetime2(fsp: Int): ColDef = ColDef(18, Array(fsp.toByte))
     def time2(fsp: Int): ColDef = ColDef(19, Array(fsp.toByte))
   }
 

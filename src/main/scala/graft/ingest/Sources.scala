@@ -91,13 +91,4 @@ object Sources {
           Seq(col("_corrupt_record"), col("binlog_file_from_path"),
             col("file_seq"), col("line_no"))): _*)
   }
-
-  /** S5/E15 — enrich a file-sourced DataFrame with the binlog natural order:
-    * `file_seq` from the numeric filename suffix (`ls -v` order,
-    * comparator.sh:85) and `binlog_file` basename (E14). */
-  def withBinlogFileOrder(df: DataFrame): DataFrame = {
-    val base = graft.cdc.Normalize.basename(input_file_name())
-    df.withColumn("binlog_file_from_path", base)
-      .withColumn("file_seq", graft.cdc.Normalize.fileSeq(base))
-  }
 }

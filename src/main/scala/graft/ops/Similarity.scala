@@ -21,9 +21,8 @@ object Similarity {
     * count (see [[buildCentroids]]'s sizing note): operators that are not
     * passed an explicit `chunks` resolve it from
     * `spark.graft.centroid.chunks` (default 1024), so a deployment sizes
-    * the fold to its expected max cluster size without a code change —
-    * `--centroid-chunks` in [[graft.cli.Main]] sets it for CLI-launched
-    * sessions. The value is part of the fold-order contract: any oracle
+    * the fold to its expected max cluster size without a code change
+    * (`--conf spark.graft.centroid.chunks=N` at launch). The value is part of the fold-order contract: any oracle
     * mirroring the fold must bake the SAME value (the gate queries pin
     * theirs via `SimilarityQueries.centroidChunks` on both engines). */
   val ChunksConfKey = "spark.graft.centroid.chunks"

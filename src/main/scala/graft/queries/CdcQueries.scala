@@ -2762,27 +2762,23 @@ object CdcQueries {
 
   // cdc46 — E10's tolerance as a BAND-JOIN PREDICATE (SURVEY §4's one
   // deferred Catalyst candidate, closed): the same five-tolerance sweep
-  // as cdc04, but each tolerance's MISMATCH_TS verdict comes from
-  // `Config(bandJoinTolerance = true)` — within-tolerance pairs found by
-  // an equi-join on (key, time-bucket) with the band check riding the
-  // join condition (q25's range-join shape; bucket width = the
+  // as cdc04, but each tolerance's MISMATCH_TS verdict comes from the
+  // band core (`Comparator.ToleranceBand`) — within-tolerance pairs found
+  // by an equi-join on (key, time-bucket) with the band check riding the
+  // join condition (q25's range-join shape; bucket width = the coarsest
   // tolerance), not by a post-join filter expression. Shares cdc04's
   // oracle: identical counts at every tolerance is exactly the
   // "same rows via the band-join plan" contract — a divergence isolates
   // the band machinery (bucket math, ±1 adjacency, duplicate-key
-  // membership) from the tolerance semantics. Five compares instead of
-  // cdc04's one cached pass: the sweep is the gate's job; a deployment
-  // runs one tolerance.
+  // membership) from the tolerance semantics.
   def cdc46BandTolerance(spark: SparkSession, dir: String): DataFrame = {
     val (b, a) = sides(spark, dir)
     val bp = b.localCheckpoint(true) // both sweep legs share the prepared sides
     val ap = a.localCheckpoint(true)
-    // ONE plan for the whole sweep (r17, guide §2.4): the old form ran
-    // compare() per tolerance — five full-outer joins + five band joins
-    // over the same two sides, unioned. compareBandSweep joins the
+    // ONE plan for the whole sweep: compareBandSweep joins the
     // tolerance-independent comparison once and resolves all five bands
-    // in one (key, tolerance, bucket)-keyed equi-join (each side read
-    // twice total instead of ten times); per tolerance the statuses are
+    // in one (key, bucket)-keyed equi-join at the coarsest tolerance
+    // (each side read twice in total); per tolerance the statuses are
     // bit-for-bit compare()'s, which cdc04's shared oracle gates.
     Comparator.compareBandSweep(bp, ap, Seq(0L, 50L, 100L, 250L, 1000L))
       .groupBy("tolerance_ms", "status").agg(count(lit(1)).as("count"))
@@ -2974,13 +2970,11 @@ object CdcQueries {
 
   // cdc50 — E10's tolerance band SERVED UNDER STREAMING: cdc46 gates the
   // band-join plan in batch; this drains the same five-tolerance sweep
-  // through the STREAM-STATIC comparator with
-  // Config(bandJoinTolerance = true) — the within-band flag rides a
-  // second chained stream-static equi-join on (file, pos, time-bucket)
-  // against the once-bucketed static side (Comparator.compareJoined's
-  // streaming branch; no distinct, no stream-derived rejoin). One drain,
-  // five unioned branches (the sweep shares the per-micro-batch feed
-  // scan; a deployment runs one tolerance), BINLOG_ONLY reconciled in
+  // through the STREAM-STATIC comparator
+  // (StreamingComparator.compareStreamBandSweep) — the within-band Δ
+  // rides a second chained stream-static equi-join on (file, pos,
+  // time-bucket) against the once-bucketed static side (no distinct, no
+  // stream-derived rejoin). One drain, BINLOG_ONLY reconciled in
   // the documented end-of-stream batch step — tolerance-independent
   // (left-outer emits every avro row at every tolerance), so it is
   // computed once and replicated across the sweep by explode. Shares
@@ -2995,19 +2989,17 @@ object CdcQueries {
     val sink = new java.io.File(root, "sink").getPath
     val ckpt = new java.io.File(root, "ckpt").getPath
     val (binlogStaticLazy, avroRaw) = sidesRaw(spark, dir)
-    // materialize the static side ONCE: five band branches × four
-    // micro-batches would otherwise re-execute the prepare shuffle 20×
+    // materialize the static side ONCE: the main join and the band leg
+    // would otherwise re-execute the prepare shuffle every micro-batch
     // (a static subtree is re-run per micro-batch unless materialized)
     val binlogStatic = binlogStaticLazy.localCheckpoint(true)
     avroRaw.write.mode("overwrite").json(feed)
     withDrainPartitions(spark) {
       val avroStream = Comparator.prepareAvro(
         spark.readStream.schema(avroRaw.schema).json(feed))
-      // the whole sweep in ONE stream-static plan (r17): one main join +
-      // one coarsest-band leg + a stateless per-tolerance explode,
-      // instead of five banded compareStream runs unioned (ten
-      // stream-static joins per micro-batch) — statuses bit-identical,
-      // see compareStreamBandSweep's nesting argument
+      // the whole sweep in ONE stream-static plan: one main join + one
+      // coarsest-band leg + a stateless per-tolerance explode (the
+      // nesting argument on Comparator.ToleranceBand)
       val q = graft.streaming.StreamingComparator
         .compareStreamBandSweep(avroStream, binlogStatic, tols)
         .select(col("tolerance_ms"), col("binlog_file"),
@@ -3037,14 +3029,13 @@ object CdcQueries {
 
   // cdc52 — the tolerance band under STREAM-STREAM (the one tolerance
   // posture left: cdc46 batch band, cdc50 stream-static band, cdc16
-  // stream-stream post-join-filter). The Config scaladoc's old rejection
-  // assumed the band needs a SECOND stream-stream join; the restructure
-  // that makes it ONE join lives in
-  // StreamingComparator.compareStreamsBandSweep: (tolerance, bucket ± 1)
-  // exploded on the binlog side, (tolerance, bucket) on the avro side, a
-  // single watermarked left-outer equi-join on (file, pos, tol, bucket)
-  // carrying the exact band check — the whole five-tolerance sweep in
-  // one plan (a deployment runs one tolerance: explode factor 3).
+  // stream-stream post-join-filter). The band folds into ONE join in
+  // StreamingComparator.compareStreamsBandSweep: bucket ± 1 at the
+  // coarsest tolerance exploded on the binlog side, the bucket on the
+  // avro side, a single watermarked left-outer equi-join on (file, pos,
+  // bucket) carrying the exact band check, and per-tolerance verdicts
+  // from the carried Δ after the join — the whole five-tolerance sweep
+  // in one plan (explode factor 3).
   // Harness is cdc16's: sentinel files flush the outer join's null side;
   // the terminal batch steps then (a) reclassify an unmatched avro row
   // to MISMATCH_TS when its key exists in the binlog snapshot — which

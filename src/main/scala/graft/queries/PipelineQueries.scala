@@ -16,14 +16,8 @@ import graft.functions.TextHashFunctions.shingleHash60
   */
 object PipelineQueries {
 
-  /** p01's named stage prefixes — the SINGLE definition consumed by both
-    * the benched query below and [[graft.tools.ProfileP01]], so the
-    * profiler's stage attribution can never drift from the real plan
-    * (the r9 review caught a copy-paste drift risk here). */
-  private[graft] final case class P01Stages(docs: DataFrame, quality: DataFrame,
-      exact: DataFrame, sh: DataFrame, pairCounts: DataFrame)
-
-  private[graft] def p01Stages(spark: SparkSession, dir: String): P01Stages = {
+  // p01 — the curated training mix.
+  def p01TrainingMix(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
       .withColumn("toks", split(col("text"), " "))
       .withColumn("n_tokens", size(col("toks")))
@@ -61,16 +55,10 @@ object PipelineQueries {
       .filter(size(col("toks")) >= 3)
       .withColumn("shingles", shingleHash60(col("toks")))
       .withColumn("n_sh", size(col("shingles")))
-    P01Stages(docs, quality, exact, sh, DedupQueries.jaccardPairCounts(sh))
-  }
-
-  // p01 — the curated training mix.
-  def p01TrainingMix(spark: SparkSession, dir: String): DataFrame = {
-    val st = p01Stages(spark, dir)
-    val dupIds = st.pairCounts
+    val dupIds = DedupQueries.jaccardPairCounts(sh)
       .filter(col("inter").cast("double") / (col("na") + col("nb") - col("inter")) >= 0.5)
       .select(col("doc_b").as("dup_id")).distinct()
-    val deduped = st.exact.join(dupIds, col("doc_id") === col("dup_id"), "left_anti")
+    val deduped = exact.join(dupIds, col("doc_id") === col("dup_id"), "left_anti")
 
     // stage 4 — per-(lang, source) cap, deterministic by doc_id
     val wCap = Window.partitionBy("lang", "source").orderBy("doc_id")

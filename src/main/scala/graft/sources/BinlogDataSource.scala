@@ -27,10 +27,12 @@ import graft.ingest.{BinlogBinaryParser, ParsedBinlogEvent}
   *
   * Layout: one `InputPartition` per file (the decode is stateful within a
   * file — TABLE_MAP/GTID association — so the file is the parallelism
-  * unit, exactly like [[BinlogBinaryParser.parse]]'s RDD route; binlog
-  * files are bounded by max_binlog_size, so at 100 TB the fan-out is the
-  * file count). Column pruning is pushed into the reader: unprojected
-  * columns are never materialized into rows.
+  * unit; binlog files are bounded by max_binlog_size, so at 100 TB the
+  * fan-out is the file count), or one per transaction-aligned byte range
+  * with a `splitIndex`. This is the one binlog binary scan: the CLI's
+  * `--binlog-binary` input and [[BinlogBinaryParser.parse]]'s typed view
+  * both read through it. Column pruning is pushed into the reader:
+  * unprojected columns are never materialized into rows.
   */
 class BinlogDataSource extends TableProvider with DataSourceRegister {
 

@@ -103,14 +103,6 @@ object BinlogTailOps {
         offsets.head
     }
 
-  /** The last COMMITTED offset, index-form (plain-tail checkpoints). */
-  def latestCommittedOffset(ckpt: String, conf: Configuration)
-      : Option[(Int, Long, Long, Int)] =
-    latestCommittedOffsetJson(ckpt, conf).map { j =>
-      val o = TailOffset.fromJson(j)
-      (o.n, o.pos, o.idx, o.ck)
-    }
-
   /** Lag metrics for a single-source tail consumer: checkpointed offset
     * vs the feed's current state. Reads BOTH offset forms — the plain
     * tail's listing-index form and the purge-safe suffix-keyed form

@@ -58,58 +58,38 @@ object StreamingComparator {
       cfg: Comparator.Config = Comparator.Config()): DataFrame =
     Comparator.compareJoined(binlogStatic, avroStream, cfg, "left_outer")
 
-  /** The STREAM-STATIC tolerance sweep in one plan (r17, guide §2.4 —
-    * cdc50 previously unioned one [[compareStream]] band run per
-    * tolerance: five stream-static main joins plus five band legs,
-    * every micro-batch). Shape: ONE main stream-static left-outer join
-    * on (file, pos); ONE chained band leg at the COARSEST tolerance
-    * (static side bucketed ±1 at `max(maxTol·1000, 1) µs`, the q25
-    * construction) carrying the partner's exact Δ; then a stateless
-    * per-tolerance explode whose band verdict is `Δ ≤ tol·1000` — bands
-    * nest, and the unique-(file, pos) static-side contract (the same
-    * contract the per-tolerance band legs relied on to not duplicate
-    * rows) means at most one partner exists at any width, so the
-    * carried Δ decides every tolerance exactly as the per-tolerance
-    * runs did. Output: [[compareStream]]'s columns plus `tolerance_ms`. */
+  /** The STREAM-STATIC tolerance sweep in one plan: ONE main stream-static
+    * left-outer join on (file, pos), ONE chained band leg against the
+    * static side bucketed once ([[Comparator.ToleranceBand]] — no distinct,
+    * no rejoin of stream-derived frames, which streaming would reject as a
+    * stream-stream self-join), then the core's stateless per-tolerance
+    * verdict over the partner's carried Δ. The band core's unique-(file,
+    * pos) contract means at most one static bucket row matches a stream
+    * row, so the chained join cannot duplicate. At scale the bucketed
+    * static side is built once per (re)start and either broadcast or
+    * shuffled on the same key as the main join. Output: [[compareStream]]'s
+    * columns plus `tolerance_ms`. */
   def compareStreamBandSweep(
       avroStream: DataFrame,
       binlogStatic: DataFrame,
       tolerances: Seq[Long],
       cfg: Comparator.Config = Comparator.Config()): DataFrame = {
-    require(tolerances.nonEmpty,
-      "compareStreamBandSweep needs at least one tolerance")
-    val wMax = math.max(tolerances.max * 1000L, 1L)
+    val band = new Comparator.ToleranceBand(tolerances)
     val b = Comparator.renameBinlogSide(binlogStatic)
     val a = Comparator.renameAvroSide(avroStream)
     val joined = a.join(b,
       a("a_file") === b("b_file") && a("a_pos") === b("b_pos"), "left_outer")
-    val bBand = Comparator.renameBinlogSide(binlogStatic)
-      .filter(!Comparator.binlogTsParseError)
+    val bBand = band.bucketBinlog(Comparator.renameBinlogSide(binlogStatic)
+        .filter(!Comparator.binlogTsParseError))
       .select(col("b_file").as("_bb_file"), col("b_pos").as("_bb_pos"),
-        Comparator.binlogTsMicros.as("_bb_us"))
-      .select(col("_bb_file"), col("_bb_pos"), col("_bb_us"),
-        explode(array(lit(-1L), lit(0L), lit(1L))).as("_nb"))
-      .select(col("_bb_file"), col("_bb_pos"), col("_bb_us"),
-        (expr(s"_bb_us div ${wMax}L") + col("_nb")).as("_bb_bkt"))
-    val flagged = joined
-      .withColumn("_a_us", col("a_source_ts_ms") * 1000L)
-      .withColumn("_a_bkt", expr(s"_a_us div ${wMax}L"))
+        col("_b_us"), col("_b_bkt"))
+    val flagged = band.bucketAvro(joined)
       .join(bBand,
         col("a_file") === col("_bb_file") && col("a_pos") === col("_bb_pos") &&
-          col("_a_bkt") === col("_bb_bkt") &&
-          abs(col("_a_us") - col("_bb_us")) <= lit(tolerances.max * 1000L),
+          band.inBand,
         "left")
-      .withColumn("tolerance_ms", explode(typedlit(tolerances)))
-    // null-semantics parity with the single-tolerance band mode; a null
-    // Δ (no partner within even the coarsest band) is outside every
-    // tolerance
-    val bandOutside = when(col("a_source_ts_ms").isNull,
-      lit(null).cast("boolean"))
-      .otherwise(!coalesce(
-        abs(col("_a_us") - col("_bb_us")) <= col("tolerance_ms") * 1000L,
-        lit(false)))
-    Comparator.statusColumns(flagged, cfg, tsOutside = Some(bandOutside))
-      .drop("_bb_file", "_bb_pos", "_bb_us", "_bb_bkt", "_a_us", "_a_bkt")
+      .drop("_bb_file", "_bb_pos")
+    band.statuses(flagged, band.delta, cfg)
   }
 
   /** Stream-STREAM comparison: both the binlog feed and the Avro feed are
@@ -186,36 +166,33 @@ object StreamingComparator {
       .drop("a_event_time", "b_event_time")
   }
 
-  /** Stream-STREAM band-join tolerance sweep — E10 with BOTH feeds live
-    * (cdc46 gates the band plan in batch, cdc50 stream-static; this
-    * closes the last tolerance posture). The earlier rejection note
-    * (Comparator.Config) assumed the band needs a SECOND join against
-    * the binlog feed — two stream-stream joins. The restructure that
-    * makes it one join: explode (tolerance, bucket ± 1) on the binlog
-    * side and (tolerance, bucket) on the avro side, so within-band pair
-    * discovery for the WHOLE sweep is a single watermarked stream-stream
-    * equi-join on (file, pos, tolerance, bucket) carrying the exact band
-    * check — plus the event-time range bound that lets Spark evict join
-    * state (`maxSkew`, which must be ≥ the largest tolerance).
+  /** Stream-STREAM band-join tolerance sweep — E10 with BOTH feeds live.
+    * The band folds into the ONE watermarked left-outer join: the binlog
+    * side explodes to its coarsest-width bucket ± 1 and the avro side
+    * carries its bucket ([[Comparator.ToleranceBand]]), so within-band
+    * pair discovery for the WHOLE sweep is a single stream-stream
+    * equi-join on (file, pos, bucket) carrying the exact band check —
+    * plus the event-time range bound that lets Spark evict join state
+    * (`maxSkew`, which must be ≥ the largest tolerance). The per-tolerance
+    * verdicts are the core's stateless projection AFTER the join, so join
+    * state and state commits do not grow with the sweep width.
     *
     * Matched pairs emit per-tolerance MATCH / MISMATCH_GTID /
-    * MISMATCH_CHANGE_TYPE live (within-band ⇒ never a ts mismatch; the
-    * E8 parse-error class must be split off BEFORE this join —
-    * [[partitionUnparseableBinlog]] — since those rows carry no real
-    * event time). An avro row with NO in-band partner at a tolerance
-    * emits once the watermark passes (left-outer, null b-side) as
-    * AVRO_ONLY — provisionally: the terminal batch step must reclassify
-    * it to MISMATCH_TS when the key exists in the binlog snapshot
-    * (out-of-band, parse-error, and Go-zero-time partners all land
-    * there), exactly where BINLOG_ONLY reconciliation already lives.
-    * The unique-(file, pos) binlog contract (Comparator.Config's band
-    * note) guarantees at most one bucket row matches per (avro, tol), so
-    * the explode can never duplicate a pair.
+    * MISMATCH_CHANGE_TYPE live, and MISMATCH_TS where the partner's Δ
+    * lies outside a finer tolerance. The E8 parse-error class must be
+    * split off BEFORE this join — [[partitionUnparseableBinlog]] — since
+    * those rows carry no real event time. An avro row with NO partner in
+    * the coarsest band emits once the watermark passes (left-outer, null
+    * b-side) as AVRO_ONLY at every tolerance — provisionally: the
+    * terminal batch step must reclassify it to MISMATCH_TS when the key
+    * exists in the binlog snapshot (out-of-band, parse-error, and
+    * Go-zero-time partners all land there), exactly where BINLOG_ONLY
+    * reconciliation already lives. The band core's unique-(file, pos)
+    * binlog contract guarantees at most one bucket row matches per avro
+    * row, so the explode never duplicates a pair.
     *
-    * At scale: join state is bounded by maxSkew + delay per side ×
-    * (|tolerances| × 3) bucket rows on the binlog side — the sweep
-    * multiplies state by a small constant; a deployment runs ONE
-    * tolerance (explode factor 3, the q25 band-join constant). */
+    * At scale: join state is bounded by maxSkew + delay per side, × 3
+    * bucket rows on the binlog side (q25's band-join constant). */
   def compareStreamsBandSweep(
       avroStream: DataFrame,
       binlogStream: DataFrame,
@@ -223,28 +200,7 @@ object StreamingComparator {
       maxSkew: String = "10 minutes",
       watermarkDelay: String = "1 minute",
       cfg: Comparator.Config = Comparator.Config()): DataFrame = {
-    // r17 restructure (guide §2.3/§2.4 — shuffle and STORE fewer rows):
-    // the stateful join runs at the COARSEST tolerance only, and the
-    // per-tolerance verdicts are a stateless post-join projection. The
-    // old shape exploded (tolerance, bucket ± 1) on the binlog side
-    // (|tols|·3×) and (tolerance) on the avro side (|tols|×) THROUGH the
-    // watermarked join, multiplying both join states and every state
-    // commit by the sweep width. Equivalence: bands nest (|Δ| ≤ tol ⇒
-    // |Δ| ≤ max tol), and the unique-(file, pos) binlog contract (the
-    // same contract the exploded form needed to not duplicate pairs)
-    // means an avro row has at most ONE in-band partner at the coarsest
-    // tolerance — so carrying its exact Δ out of the join decides every
-    // finer tolerance: within band ⇒ the same field-compare statuses;
-    // out of band at tol but matched at max ⇒ MISMATCH_TS, exactly what
-    // the old AVRO_ONLY row became after the terminal
-    // presence-reclassify (the partner's key is in the snapshot by
-    // construction); no partner at max ⇒ AVRO_ONLY at every tolerance,
-    // as before. A deployment running ONE tolerance sees the identical
-    // plan either way (explode factor 3, q25's band-join constant).
-    require(tolerances.nonEmpty,
-      "compareStreamsBandSweep needs at least one tolerance")
-    val tolMax = tolerances.max
-    val w = math.max(tolMax * 1000L, 1L)
+    val band = new Comparator.ToleranceBand(tolerances)
     val bTimed = binlogStream
       .withColumn("b_event_time", coalesce(
         Normalize.parseRfc3339(col("immediate_commmit_timestamp")),
@@ -254,39 +210,17 @@ object StreamingComparator {
     val aTimed = avroStream
       .withColumn("a_event_time", timestamp_millis(col("source_timestamp")))
       .withWatermark("a_event_time", watermarkDelay)
-    // binlog side: commit micros + bucket ± 1 at the coarsest width —
-    // the cdc46/q25 adjacency construction, constant 3×
-    val bBand = Comparator.renameBinlogSide(bTimed, keep = Seq("b_event_time"))
-      .withColumn("_b_us", Comparator.binlogTsMicros)
-      .select(col("*"),
-        explode(array(lit(-1L), lit(0L), lit(1L))).as("_nb"))
-      .select(col("*"), (expr(s"_b_us div ${w}L") + col("_nb")).as("_b_bkt"))
-      .drop("_nb")
-    val aBand = Comparator.renameAvroSide(aTimed, keep = Seq("a_event_time"))
-      .withColumn("_a_us", col("a_source_ts_ms") * 1000L)
-      .withColumn("_a_bkt", expr(s"_a_us div ${w}L"))
+    val bBand = band.bucketBinlog(
+      Comparator.renameBinlogSide(bTimed, keep = Seq("b_event_time")))
+    val aBand = band.bucketAvro(
+      Comparator.renameAvroSide(aTimed, keep = Seq("a_event_time")))
     val cond: Column =
       aBand("a_file") === bBand("b_file") && aBand("a_pos") === bBand("b_pos") &&
-        aBand("_a_bkt") === bBand("_b_bkt") &&
-        abs(aBand("_a_us") - bBand("_b_us")) <= lit(tolMax * 1000L) &&
+        band.inBand &&
         bBand("b_event_time") >= aBand("a_event_time") - expr(s"INTERVAL $maxSkew") &&
         bBand("b_event_time") <= aBand("a_event_time") + expr(s"INTERVAL $maxSkew")
-    // stateless sweep AFTER the join: one row per tolerance, the band
-    // verdict from the carried Δ (null Δ = no partner at the coarsest
-    // band ⇒ verdict irrelevant, the row is AVRO_ONLY by _b_present).
-    // E8's parse-error short-circuit inside statusColumns stays in
-    // front (vacuously false here — the caller splits unparseable rows
-    // off pre-join).
-    val swept = aBand.join(bBand, cond, "left_outer")
-      .withColumn("tolerance_ms", explode(typedlit(tolerances)))
-    val bandOutside = when(col("a_source_ts_ms").isNull,
-      lit(null).cast("boolean"))
-      .otherwise(!coalesce(
-        abs(col("_a_us") - col("_b_us")) <= col("tolerance_ms") * 1000L,
-        lit(false)))
-    Comparator.statusColumns(swept, cfg, tsOutside = Some(bandOutside))
-      .drop("a_event_time", "b_event_time", "_a_us", "_b_us",
-        "_a_bkt", "_b_bkt")
+    band.statuses(aBand.join(bBand, cond, "left_outer"), band.delta, cfg)
+      .drop("a_event_time", "b_event_time")
   }
 
   /** The documented stream-stream entry with full batch parity: splits

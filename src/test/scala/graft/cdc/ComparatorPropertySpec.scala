@@ -11,7 +11,8 @@ import graft.SparkTestSession
   *   - matched + avro_only == number of valid-key Avro rows;
   *   - output row count == |keys(b)| + avro multiplicity accounting;
   *   - dedup idempotence (preparing twice == preparing once);
-  *   - tolerance monotonicity (larger tolerance ⇒ mismatches non-increasing).
+  *   - tolerance monotonicity (larger tolerance ⇒ mismatches non-increasing);
+  *   - the one-plan band sweep gives `compare`'s statuses at every tolerance.
   *
   * ScalaCheck generators drive small random event sets through the real
   * Spark plan; samples are drawn from fixed seeds (scalatestplus isn't in
@@ -111,6 +112,37 @@ class ComparatorPropertySpec extends AnyFunSuite with SparkTestSession {
       val m100 = mismatches(100)
       val m1000 = mismatches(1000)
       withClue(s"bs=$bs as=$as: ")(assert(m100 <= m50 && m1000 <= m100))
+    }
+  }
+
+  test("band sweep at each tolerance == compare at that tolerance") {
+    import spark.implicits._
+    // the gates' sweep, and one whose coarsest bucket (100 ms) puts
+    // in-band pairs such as 99 ms vs 150 ms in adjacent buckets
+    val sweeps = Seq(Seq(0L, 50L, 100L, 250L, 1000L), Seq(0L, 50L, 100L))
+    // beyond the random events: a Go-zero (both timestamps empty) and an
+    // unparseable commit time, both of which mismatch at every tolerance
+    val odd = Seq(
+      ("WriteRowsEventV2", "", "", "", 21L, "t", "s", "mysql-bin.000001", "", 1000L),
+      ("UpdateRowsEventV2", "", "not-a-time", "", 22L, "t", "s", "mysql-bin.000001", "", 1001L))
+      .toDF("event_type", "timestamp", "immediate_commmit_timestamp",
+        "orignal_commmit_timestamp", "log_position", "table", "schema",
+        "binlog_file", "gtid_next", "seq")
+    def multiset(df: org.apache.spark.sql.DataFrame): Map[(String, Long, String), Long] =
+      df.groupBy("binlog_file", "position", "status").count().collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getString(2)) -> r.getLong(3)).toMap
+    cases.foreach { case (bs, as) =>
+      val b = Comparator.prepareBinlog(binlogDf(bs).unionByName(odd), col("seq"))
+      val a = Comparator.prepareAvro(avroDf(ARow(21L, 0L) :: ARow(22L, 0L) :: as))
+      sweeps.foreach { tols =>
+        val swept = Comparator.compareBandSweep(b, a, tols).cache()
+        try tols.foreach { tol =>
+          withClue(s"tols=$tols tol=$tol bs=$bs as=$as: ") {
+            assert(multiset(swept.filter(col("tolerance_ms") === tol)) ==
+              multiset(Comparator.compare(b, a, Comparator.Config(toleranceMs = tol))))
+          }
+        } finally { swept.unpersist(); () }
+      }
     }
   }
 }

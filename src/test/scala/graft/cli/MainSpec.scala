@@ -2,14 +2,13 @@ package graft.cli
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
 import graft.cdc.{Report, Schemas}
 
 /** End-to-end CLI plan: decoder-text binlog input + Avro-JSON input through
-  * Main.run — the whole reference chain (parse → normalize → compare →
+  * Main.prepare — the whole reference chain (parse → normalize → compare →
   * report) in one Spark job.
   */
 class MainSpec extends AnyFunSuite with SparkTestSession {
@@ -60,8 +59,9 @@ class MainSpec extends AnyFunSuite with SparkTestSession {
       """{"source_timestamp":1714564800000,"source_metadata":{"database":"shop","table":"orders","binlog_file":{"string":"mysql-bin.000001"},"binlog_position":{"long":4242},"primary_keys":["id"]},"payload":{}}"""
     ).mkString("\n").getBytes)
 
-    val compared = Main.run(spark, Main.Args(
+    val prepared = Main.prepare(spark, Main.Args(
       binlogText = Some(binlogDir.getPath), avroJson = Some(avroJson.getPath)))
+    val compared = prepared.compared
 
     val statuses = compared.select("position", "status").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -75,6 +75,7 @@ class MainSpec extends AnyFunSuite with SparkTestSession {
     assert(s.getLong(s.fieldIndex("avro_only")) == 1)
     assert(s.getLong(s.fieldIndex("binlog_only")) == 1)
     assert(!s.getBoolean(s.fieldIndex("consistent")))
+    prepared.release()
   }
 
   test("binlog-json path: last-wins dedup follows (file_seq, line_no) order") {
@@ -128,30 +129,37 @@ class MainSpec extends AnyFunSuite with SparkTestSession {
     Files.write(avroJson.toPath,
       """{"source_timestamp":1714564800000,"source_metadata":{"database":"shop","table":"orders","binlog_file":{"string":"mysql-bin.000001"},"binlog_position":{"long":424242},"primary_keys":["id"]},"payload":{}}""".getBytes)
 
+    def compare(args: Main.Args): Set[org.apache.spark.sql.Row] = {
+      val p = Main.prepare(spark, args)
+      try p.compared.select("position", "status").collect().toSet
+      finally p.release()
+    }
+    val binary = Main.Args(binlogBinary = Some(binDir.getPath),
+      avroJson = Some(avroJson.getPath))
+
+    // no --split-index: the same binlog scan, one task per file
+    val noIndex = compare(binary)
+    assert(noIndex.count(_.getString(1) == Status.BinlogOnly) == 40)
+    assert(noIndex.count(_.getString(1) == Status.AvroOnly) == 1)
+
     // --no-split-index-auto-build: index never built, comparison still runs
     val idxOff = new java.io.File(dir, "idx_off").getPath
-    val comparedOff = Main.run(spark, Main.Args(
-      binlogBinary = Some(binDir.getPath), avroJson = Some(avroJson.getPath),
+    val comparedOff = compare(binary.copy(
       splitIndex = Some(idxOff), splitIndexAutoBuild = false))
-    assert(comparedOff.filter(col("status") === Status.BinlogOnly).count() == 40)
     assert(!new java.io.File(idxOff).exists(), "no-auto-build must not build")
 
     // default auto-build: first run writes shards; the scan range-splits
     val idxOn = new java.io.File(dir, "idx_on").getPath
-    val compared = Main.run(spark, Main.Args(
-      binlogBinary = Some(binDir.getPath), avroJson = Some(avroJson.getPath),
+    val compared = compare(binary.copy(
       splitIndex = Some(idxOn), splitBytes = Some(8192L)))
-    assert(compared.filter(col("status") === Status.BinlogOnly).count() == 40)
-    assert(compared.filter(col("status") === Status.AvroOnly).count() == 1)
     assert(new java.io.File(idxOn).listFiles().exists(_.getName.endsWith(".idx")))
     // the auto-built index actually range-split the file
     val ranges = graft.ingest.BinlogOffsetIndex.loadFile(
       spark.sparkContext.hadoopConfiguration, idxOn,
       new java.io.File(binDir, "mysql-bin.000001").getPath)
     assert(ranges.size > 3, s"expected several ranges, got ${ranges.size}")
-    // identical comparison either way
-    assert(comparedOff.select("position", "status").collect().toSet
-      == compared.select("position", "status").collect().toSet)
+    // identical comparison every way
+    assert(comparedOff == noIndex && compared == noIndex)
 
     // flag parsing
     val a = Main.parseArgs(List("--binlog-binary", "/b", "--avro-json", "/a.json",
@@ -171,14 +179,9 @@ class MainSpec extends AnyFunSuite with SparkTestSession {
     intercept[IllegalArgumentException](Main.parseArgs(List("--nope")))
   }
 
-  test("--centroid-chunks: parsed, validated, and honored by the fold operators") {
-    val a = Main.parseArgs(List("--binlog-json", "/b.json", "--avro", "/a",
-      "--centroid-chunks", "64"))
-    assert(a.centroidChunks.contains(64))
-    intercept[IllegalArgumentException](
-      Main.parseArgs(List("--centroid-chunks", "0")))
-    // the session-conf route the flag sets: buildCentroids with the
-    // default chunks=0 resolves from spark.graft.centroid.chunks — prove
+  test("spark.graft.centroid.chunks: honored by the fold operators") {
+    // buildCentroids with the default chunks=0 resolves from
+    // spark.graft.centroid.chunks (settable with --conf) — prove
     // the dial actually reaches the FOLD'S CHUNK KEYING (the `% chunks`
     // level-1 grouping expression in the analyzed plan), not just that a
     // value was parsed somewhere: the fold mean is chunking-invariant on

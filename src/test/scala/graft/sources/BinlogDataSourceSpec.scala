@@ -198,16 +198,36 @@ class BinlogDataSourceSpec extends AnyFunSuite with SparkTestSession {
     assert(it.size == 99) // the rest still decodes to completion
   }
 
-  test("agrees with the RDD-route parser on the same files") {
+  test("agrees with the pure per-file decoder on every field") {
+    import graft.ingest.BinlogBinaryWriter._
     val dir = Files.createTempDirectory("dsv2bin3").toFile
     writeFile(dir, "mysql-bin.000009", 4, 1714564800L)
-    val viaDsv2 = spark.read.format("binlog").load(dir.getPath)
-      .select("binlog_file", "log_position", "event_type", "event_index")
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2), r.getLong(3)))
-      .toSet
-    val viaRdd = BinlogBinaryParser.parse(spark, dir.getPath)
-      .collect().map(e => (e.binlog_file, e.log_position.get, e.event_type, e.event_index))
-      .toSet
-    assert(viaDsv2 == viaRdd)
+    // a second file with GTID / TABLE_MAP / row-image state across events
+    val cols = Seq(ColDef.longlong, ColDef.varchar(64))
+    val f = new FileBuilder(checksums = true)
+    f.fde(1714564800L)
+    (0 until 3).foreach { tx =>
+      f.event(1714564800L + tx, 33, gtidBody((1 to 16).map(_.toByte).toArray, tx + 1L))
+      f.event(1714564800L + tx, 19, tableMapBody(7, "shop", "orders", cols))
+      f.event(1714564800L + tx, 30, rowsBody(7, cols.size, (0 until 2).map(r =>
+        Seq(Some(encLongLong(tx * 10L + r)), Some(encVarchar(s"v$tx-$r", 64))))))
+      f.event(1714564800L + tx, 16, xidBody(100L + tx))
+    }
+    Files.write(new java.io.File(dir, "mysql-bin.000010").toPath, f.bytes)
+
+    val spark2 = spark
+    import spark2.implicits._
+    val order = (e: graft.ingest.ParsedBinlogEvent) => (e.binlog_file, e.event_index)
+    val viaScan = spark.read.format("binlog").load(dir.getPath)
+      .as[graft.ingest.ParsedBinlogEvent].collect().toSeq.sortBy(order)
+    val viaDecoder = Seq("mysql-bin.000009", "mysql-bin.000010").flatMap { name =>
+      BinlogBinaryParser.decodeFile(
+        Files.readAllBytes(new java.io.File(dir, name).toPath), name)
+    }.sortBy(order)
+    assert(viaScan.exists(_.row_images.nonEmpty), "fixture decoded no row images")
+    assert(viaScan == viaDecoder)
+    // the parser's typed view is that same scan
+    assert(BinlogBinaryParser.parse(spark, dir.getPath).collect().toSeq.sortBy(order)
+      == viaDecoder)
   }
 }

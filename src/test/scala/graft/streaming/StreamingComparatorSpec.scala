@@ -81,8 +81,8 @@ class StreamingComparatorSpec extends AnyFunSuite with SparkTestSession {
       val avroStream = Comparator.prepareAvro(Comparator.flattenWrappedAvro(
         StreamingComparator.avroJsonStream(spark, streamDir.getPath)
           .drop("_corrupt_record")))
-      val q = StreamingComparator.compareStream(avroStream, binlogStatic,
-          Comparator.Config(toleranceMs = tol, bandJoinTolerance = true))
+      val q = StreamingComparator.compareStreamBandSweep(avroStream, binlogStatic,
+          Seq(tol))
         .select("position", "status")
         .writeStream.format("memory").queryName(name)
         .trigger(Trigger.AvailableNow()).start()
@@ -98,23 +98,6 @@ class StreamingComparatorSpec extends AnyFunSuite with SparkTestSession {
       1000L -> Status.Match,
       2000L -> Status.Match, // Δ=500ms inside the 1000ms band
       3000L -> Status.AvroOnly))
-  }
-
-  test("stream-stream band mode is rejected with a precise message") {
-    val dir = Files.createTempDirectory("cdcbandss").toFile
-    val bDir = new java.io.File(dir, "binlog"); bDir.mkdirs()
-    val aDir = new java.io.File(dir, "avro"); aDir.mkdirs()
-    val binlogStream = Comparator.normalizeBinlog(
-      spark.readStream.schema(Schemas.binlogReadSchema)
-        .json(bDir.getPath).drop("_corrupt_record"))
-    val avroStream = Comparator.prepareAvro(Comparator.flattenWrappedAvro(
-      spark.readStream.schema(Schemas.avroWrappedReadSchema)
-        .json(aDir.getPath).drop("_corrupt_record")))
-    val e = intercept[IllegalArgumentException] {
-      Comparator.compareJoined(binlogStream, avroStream,
-        Comparator.Config(bandJoinTolerance = true), "left_outer")
-    }
-    assert(e.getMessage.contains("stream-static only"))
   }
 
   test("stream-stream join pairs in-window events; AVRO_ONLY after watermark") {
