@@ -28,43 +28,6 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  /** Drain-shaped gates — queries whose runtime is dominated by streaming
-    * micro-batch fixed overhead (per-file `maxFilesPerTrigger` drains,
-    * state-store commits, checkpoint I/O) rather than per-row compute.
-    * Advisory, WARMUP-SKIP ONLY: a misclassification never affects the
-    * timing methodology or results — an unlisted streaming gate merely
-    * gets a useless warmup run, a listed compute gate pays its codegen
-    * JIT in pass 1 and min-of-3 absorbs it. Derived from the call graph
-    * (gates reaching Drains/readStream/ViewMaintenance transitively);
-    * new gates default to being warmed, which is the safe side. */
-  private val drainGates: Set[String] = Set(
-    "cdc12_stream_drain", "cdc13_stream_binlog", "cdc14_stream_dedup",
-    "cdc15_stream_windows", "cdc16_stream_parity", "cdc18_restart_parity",
-    "cdc19_schema_evolution", "cdc34_stream_sessions", "cdc38_gtid_coverage",
-    "cdc39_stream_route", "cdc40_rotate_chain", "cdc41_stream_ddl_epoch",
-    "cdc42_stream_scd2", "cdc44_multi_watermark", "cdc45_stream_ivm",
-    "cdc47_stream_retract", "cdc48_idempotent_sink", "cdc49_stream_sketch",
-    "cdc50_stream_band", "cdc51_compacted_ivm", "cdc52_stream_stream_band",
-    "cdc53_restart_ivm", "cdc55_wire_evolution", "cdc57_multi_table_demux",
-    "cdc58_tail_active", "cdc59_compact_restart", "cdc60_snapshot_cutover",
-    "cdc61_demux_lifecycle", "cdc62_sketch_compaction", "cdc63_tail_demux",
-    "cdc64_tail_rotate", "cdc65_tail_cutover", "cdc66_gtid_failover",
-    "cdc67_tail_lag", "cdc68_checkpoint_upgrade", "cdc69_sharded_union",
-    "cdc70_gtid_durable", "cdc71_tail_purge", "cdc72_purge_sharded_union",
-    "cdc73_gtid_set_cutover", "cdc74_gtid_sharded_failover",
-    "cdc75_time_travel", "cdc76_consistent_demux", "cdc77_release_diff",
-    "d20_incremental_dedup", "d32_stream_lsh_ingest",
-    "d33_stream_decontaminate", "g16_stream_degree_retract",
-    "g17_restart_degree", "m10_stream_manifest", "m11_stream_media_dedup",
-    "m12_compacted_media_dedup", "m13_restart_media_dedup",
-    "p14_stream_quota_admission", "p15_state_metrics", "p16_state_evolution",
-    "s12_ann_ivfpq_persisted", "s36_graph_persisted",
-    "s42_stream_index_ingest", "s43_stream_search",
-    "s51_stream_graph_maintain", "s52_stream_graph_delete",
-    "s53_graph_repair", "s54_wire_vector_ingest", "s55_lifecycle_serve",
-    "s56_sharded_wire_vectors", "s57_serve_through_retention",
-    "s58_pinned_index", "t30_stream_quality")
-
   def main(args: Array[String]): Unit = {
     val benchStart = System.nanoTime()
     // profile-mode listener-drain sleeps are excluded from the deadline
@@ -90,31 +53,7 @@ object Bench {
     val only: Option[Seq[String]] =
       sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSeq)
     def keep(name: String): Boolean = only.forall(_.exists(name.startsWith))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions) // SQL function surface
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Small-file scan parallelism: the sf0.1 parquet tables are one or
-      // two row groups, so compute-heavy SCAN stages (shingle hashing,
-      // cosine, simhash) would otherwise run on ≤2 of the 32 cores.
-      // minPartitionNum splits the scan to the core count — the local
-      // analogue of sizing maxPartitionBytes to the cluster; at real
-      // scale file volume provides this parallelism on its own.
-      .config("spark.sql.files.minPartitionNum", cpus)
-      // Evaluated and NOT adopted (r9): lowering the AQE coalesce floor
-      // (spark.sql.adaptive.coalescePartitions.minPartitionSize=64KB) to
-      // spread p01's 2-task shingle stages looked like a win in isolated
-      // consecutive runs (2.2 s → 1.4 s) but in the full bench context it
-      // left p01 flat (~2.24 s — the residual is driver-side codegen
-      // re-JIT + 10 sequential AQE job barriers, not task skew) while
-      // slowing the whole d-family 1.2–1.46× (finer partitions = more
-      // task overhead on already-fast queries). docs/PLANS.md has the
-      // stage-level attribution.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session(cpus)
 
     val ordered = SparkEntry.queries.toSeq.filter(q => keep(q._1)).sortBy(_._1)
 
@@ -125,16 +64,17 @@ object Bench {
     // Warmup pass: run the COMPUTE queries once at a small SF first, so
     // each plan's janino codegen is compiled and the JIT is hot before any
     // timing starts — r2/r3 showed one-off codegen/GC stalls landing on
-    // random queries and swinging the one-shot total by ±20%. Drain-shaped
-    // gates are skipped (see [[drainGates]]); the warmup also stops early
+    // random queries and swinging the one-shot total by ±20%. Drain gates
+    // are skipped (see [[graft.queries.Gate]]); the warmup also stops early
     // if it ever eats into the pass budget (deadline × 0.35), counting
     // what it skipped — an unwarmed compute gate just pays its JIT in
     // pass 1 and min-of-3 recovers.
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.01")
+    val drains = SparkEntry.gates.filter(_.drain).map(_.name).toSet
     var warmed = 0
     var warmupTruncated = false
     ordered.foreach { case (name, fn) =>
-      if (!drainGates.contains(name)) {
+      if (!drains.contains(name)) {
         if (elapsedS > deadlineS * 0.35) warmupTruncated = true
         else {
           try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
@@ -144,7 +84,7 @@ object Bench {
       }
     }
     val warmupJson = s"""{"warmed":$warmed,"drain_skipped":${
-      ordered.count(q => drainGates.contains(q._1))},"truncated":$warmupTruncated}"""
+      ordered.count(q => drains.contains(q._1))},"truncated":$warmupTruncated}"""
 
     // CALIBRATION PROBE (r14 verdict task: the VM differs between rounds,
     // and a uniform environment shift across an artifact-to-artifact

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump `.explain("formatted")` for named queries to files —
   * the optimization-round evidence protocol (guide §1: capture the plan
   * before and after every change; the judge reads `plans/r<N>/` instead
@@ -10,8 +8,8 @@ import org.apache.spark.sql.SparkSession
   * Usage: runMain graft.PlanDump <name[,name...]> <outDir> [suffix]
   * writes <outDir>/<name><suffix>.txt (suffix e.g. "_before"/"_after").
   * Data dir from SPARK_GRAFT_SF_DIR (default sf0.01 — plan shape, not
-  * data). Session config mirrors Bench so the dumped plans are the
-  * benched plans.
+  * data). Runs in [[SparkEntry.session]], as Bench does, so the dumped
+  * plans are the benched plans.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -22,16 +20,7 @@ object PlanDump {
     outDir.mkdirs()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.minPartitionNum", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session(cpus)
     names.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name,
         sys.error(s"unknown query: $name"))

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,15 +10,7 @@ object Verify {
     val only: Option[Seq[String]] =
       if (args.length > 2) Some(args(2).split(",").toSeq) else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions) // SQL function surface
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.minPartitionNum", cpus) // see Bench.scala
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session(cpus)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
@@ -53,7 +44,6 @@ object Verify {
       .filter { case (k, _) => only.forall(_.exists(k.startsWith)) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    queries.CdcQueries.releaseCache() // leave no persisted frames behind
     spark.stop()
   }
 }

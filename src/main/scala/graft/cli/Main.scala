@@ -118,6 +118,16 @@ object Main {
     case other :: _ => throw new IllegalArgumentException(s"unknown argument: $other")
   }
 
+  private def session(appName: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
+      .appName(appName)
+      .config("spark.sql.session.timeZone", "UTC")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   def main(argv: Array[String]): Unit = {
     val args = parseArgs(argv.toList)
     if (args.asOf.isDefined || args.diff.isDefined) {
@@ -129,12 +139,7 @@ object Main {
       require(args.follow.isEmpty,
         "--as-of/--diff are read-only modes over an existing --out; run " +
           "them in their own invocation, not combined with --follow")
-      val spark = SparkSession.builder()
-        .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-        .appName("graft-cdc-time-travel")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = session("graft-cdc-time-travel")
       val tablesRoot = s"${args.out}/tables"
       args.asOf.foreach { v =>
         val pinned = censusAtMark(spark, args.out, tablesRoot, v)
@@ -149,12 +154,7 @@ object Main {
       return
     }
     if (args.follow.nonEmpty) {
-      val spark = SparkSession.builder()
-        .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-        .appName("graft-cdc-follow")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = session("graft-cdc-follow")
       follow(spark, args.follow, args.out, args.purgeSafe,
           args.maxFilesPerTrigger,
           args.maxBytesPerTrigger.orElse(Some(1L << 30)),
@@ -183,12 +183,7 @@ object Main {
       "--split-bytes only applies with --split-index (it sizes the " +
         "auto-built index ranges); pass --split-index <path> or drop it")
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-cdc-compare")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session("graft-cdc-compare")
 
     // A3 — the reference's shell job metrics (comparator.sh:103-107,
     // avro_to_json.sh:75-85): count each side's input files up front and

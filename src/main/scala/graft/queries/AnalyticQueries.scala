@@ -1682,87 +1682,45 @@ object AnalyticQueries {
       |FROM full_v f JOIN incr_v i USING (o_orderpriority)
       |ORDER BY o_orderpriority""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q66_ivm_join" -> (q66IvmJoin _),
-    "q65_ams_f2" -> (q65AmsF2 _),
-    "q64_grouping_sets" -> (q64GroupingSets _),
-    "q63_asof_forward" -> (q63AsofForward _),
-    "q62_theta_intersect" -> (q62ThetaIntersect _),
-    "q61_hll_sketch" -> (q61HllSketch _),
-    "q11_dedup_lastwins" -> (q11DedupLastWins _),
-    "q57_kmv_distinct" -> (q57KmvDistinct _),
-    "q58_countmin_heavy" -> (q58CountMin _),
-    "q59_funnel_cohort" -> (q59Funnel _),
-    "q60_bloom_join" -> (q60BloomJoin _),
-    "q55_asof_join" -> (q55AsofJoin _),
-    "q56_recursive_tree" -> (q56RecursiveTree _),
-    "q12_distinct_agg" -> (q12DistinctAgg _),
-    "q13_rollup" -> (q13Rollup _),
-    "q14_cube" -> (q14Cube _),
-    "q15_setops" -> (q15SetOps _),
-    "q16_scalar_exprs" -> (q16ScalarExprs _),
-    "q17_regex_extract" -> (q17RegexExtract _),
-    "q18_part_tokens" -> (q18PartTokens _),
-    "q19_small_qty_orders" -> (q19SmallQuantityOrders _),
-    "q20_sessionize" -> (q20Sessionize _),
-    "q21_last_click_before_purchase" -> (q21LastClickBeforePurchase _),
-    "q36_peak_concurrency" -> (q36PeakConcurrency _),
-    "q37_cohort_retention" -> (q37CohortRetention _),
-    "q43_gap_fill" -> (q43GapFill _),
-    "q44_bit_bool_aggs" -> (q44BitBoolAggs _),
-    "q47_bag_setops" -> (q47BagSetOps _),
-    "q48_decimal_money" -> (q48DecimalMoney _),
-    "q51_salted_join" -> (q51SaltedJoin _),
-    "q52_ignore_nulls" -> (q52IgnoreNulls _),
-    "q53_sliding_distinct" -> (q53SlidingDistinct _),
-    "q22_salted_agg" -> (q22SaltedAgg _),
-    "q23_approx_distinct" -> (q23ApproxDistinct _),
-    "q24_json_map" -> (q24JsonMap _),
-    "q25_range_join" -> (q25RangeJoin _),
-    "q26_pivot" -> (q26Pivot _),
-    "q27_unpivot" -> (q27Unpivot _),
-    "q28_median" -> (q28Median _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q66_ivm_join" -> q66Oracle,
-    "q65_ams_f2" -> q65Oracle,
-    "q64_grouping_sets" -> q64Oracle,
-    "q63_asof_forward" -> q63Oracle,
-    "q62_theta_intersect" -> q62Oracle,
-    "q61_hll_sketch" -> q61Oracle,
-    "q57_kmv_distinct" -> q57Oracle,
-    "q58_countmin_heavy" -> q58Oracle,
-    "q59_funnel_cohort" -> q59Oracle,
-    "q60_bloom_join" -> q60Oracle,
-    "q56_recursive_tree" -> q56Oracle,
-    "q11_dedup_lastwins" -> q11Oracle,
-    "q55_asof_join" -> q55Oracle,
-    "q12_distinct_agg" -> q12Oracle,
-    "q13_rollup" -> q13Oracle,
-    "q14_cube" -> q14Oracle,
-    "q15_setops" -> q15Oracle,
-    "q16_scalar_exprs" -> q16Oracle,
-    "q17_regex_extract" -> q17Oracle,
-    "q18_part_tokens" -> q18Oracle,
-    "q19_small_qty_orders" -> q19Oracle,
-    "q20_sessionize" -> q20Oracle,
-    "q21_last_click_before_purchase" -> q21Oracle,
-    "q36_peak_concurrency" -> q36Oracle,
-    "q37_cohort_retention" -> q37Oracle,
-    "q43_gap_fill" -> q43Oracle,
-    "q44_bit_bool_aggs" -> q44Oracle,
-    "q47_bag_setops" -> q47Oracle,
-    "q48_decimal_money" -> q48Oracle,
-    "q51_salted_join" -> q51Oracle,
-    "q52_ignore_nulls" -> q52Oracle,
-    "q53_sliding_distinct" -> q53Oracle,
-    "q22_salted_agg" -> q22Oracle,
-    "q23_approx_distinct" -> q23Oracle,
-    "q24_json_map" -> q24Oracle,
-    "q25_range_join" -> q25Oracle,
-    "q26_pivot" -> q26Oracle,
-    "q27_unpivot" -> q27Oracle,
-    "q28_median" -> q28Oracle,
+  val gates: Seq[Gate] = Seq(
+    Gate("q11_dedup_lastwins", q11DedupLastWins, q11Oracle),
+    Gate("q12_distinct_agg", q12DistinctAgg, q12Oracle),
+    Gate("q13_rollup", q13Rollup, q13Oracle),
+    Gate("q14_cube", q14Cube, q14Oracle),
+    Gate("q15_setops", q15SetOps, q15Oracle),
+    Gate("q16_scalar_exprs", q16ScalarExprs, q16Oracle),
+    Gate("q17_regex_extract", q17RegexExtract, q17Oracle),
+    Gate("q18_part_tokens", q18PartTokens, q18Oracle),
+    Gate("q19_small_qty_orders", q19SmallQuantityOrders, q19Oracle),
+    Gate("q20_sessionize", q20Sessionize, q20Oracle),
+    Gate("q21_last_click_before_purchase", q21LastClickBeforePurchase, q21Oracle),
+    Gate("q22_salted_agg", q22SaltedAgg, q22Oracle),
+    Gate("q23_approx_distinct", q23ApproxDistinct, q23Oracle),
+    Gate("q24_json_map", q24JsonMap, q24Oracle),
+    Gate("q25_range_join", q25RangeJoin, q25Oracle),
+    Gate("q26_pivot", q26Pivot, q26Oracle),
+    Gate("q27_unpivot", q27Unpivot, q27Oracle),
+    Gate("q28_median", q28Median, q28Oracle),
+    Gate("q36_peak_concurrency", q36PeakConcurrency, q36Oracle),
+    Gate("q37_cohort_retention", q37CohortRetention, q37Oracle),
+    Gate("q43_gap_fill", q43GapFill, q43Oracle),
+    Gate("q44_bit_bool_aggs", q44BitBoolAggs, q44Oracle),
+    Gate("q47_bag_setops", q47BagSetOps, q47Oracle),
+    Gate("q48_decimal_money", q48DecimalMoney, q48Oracle),
+    Gate("q51_salted_join", q51SaltedJoin, q51Oracle),
+    Gate("q52_ignore_nulls", q52IgnoreNulls, q52Oracle),
+    Gate("q53_sliding_distinct", q53SlidingDistinct, q53Oracle),
+    Gate("q55_asof_join", q55AsofJoin, q55Oracle),
+    Gate("q56_recursive_tree", q56RecursiveTree, q56Oracle),
+    Gate("q57_kmv_distinct", q57KmvDistinct, q57Oracle),
+    Gate("q58_countmin_heavy", q58CountMin, q58Oracle),
+    Gate("q59_funnel_cohort", q59Funnel, q59Oracle),
+    Gate("q60_bloom_join", q60BloomJoin, q60Oracle),
+    Gate("q61_hll_sketch", q61HllSketch, q61Oracle),
+    Gate("q62_theta_intersect", q62ThetaIntersect, q62Oracle),
+    Gate("q63_asof_forward", q63AsofForward, q63Oracle),
+    Gate("q64_grouping_sets", q64GroupingSets, q64Oracle),
+    Gate("q65_ams_f2", q65AmsF2, q65Oracle),
+    Gate("q66_ivm_join", q66IvmJoin, q66Oracle),
   )
 }

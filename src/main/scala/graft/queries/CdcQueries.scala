@@ -117,33 +117,6 @@ object CdcQueries {
     (prepared, avroMain.unionByName(avroExtra))
   }
 
-  /** The three report queries are views over ONE comparison run — exactly
-    * the reference's shape (compare_timestamps makes a single pass and
-    * emits every report from it). Within a session the compared frame is
-    * materialized once and shared; per (session, dir) so different scale
-    * factors don't collide. Spill-safe storage level — at 100 TB this
-    * would be a checkpoint/table, same idea. */
-  private val comparedCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  private def compared(spark: SparkSession, dir: String): DataFrame =
-    comparedCache.computeIfAbsent((spark, dir), { _ =>
-      val (b, a) = sides(spark, dir)
-      Comparator.compare(b, a)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
-
-  /** Unpersist and drop every comparison frame materialized by
-    * [[compared]] — the hygiene hook for long-lived sessions (without it
-    * cached partitions accumulate per (session, dir) forever; ADVICE
-    * r2/r3). Safe to call between query batches: the next cdc query
-    * simply re-materializes. */
-  def releaseCache(): Unit = {
-    val it = comparedCache.values().iterator()
-    while (it.hasNext) it.next().unpersist()
-    comparedCache.clear()
-  }
-
   /** Shared oracle CTE: per-event flags replaying the comparator semantics. */
   private val oracleCte: String =
     """WITH base AS (
@@ -205,15 +178,19 @@ object CdcQueries {
       |)""".stripMargin
 
   // cdc01 — full comparison, grouped by outcome status.
-  def cdc01StatusCounts(spark: SparkSession, dir: String): DataFrame =
-    compared(spark, dir).groupBy("status").count().orderBy("status")
+  def cdc01StatusCounts(spark: SparkSession, dir: String): DataFrame = {
+    val (b, a) = sides(spark, dir)
+    Comparator.compare(b, a).groupBy("status").count().orderBy("status")
+  }
 
   val cdc01Oracle: String =
     oracleCte + "\nSELECT status, COUNT(*) AS count FROM st GROUP BY status ORDER BY status"
 
   // cdc02 — the reference's five-counter summary + verdict (Report.summary).
-  def cdc02Summary(spark: SparkSession, dir: String): DataFrame =
-    Report.summary(compared(spark, dir))
+  def cdc02Summary(spark: SparkSession, dir: String): DataFrame = {
+    val (b, a) = sides(spark, dir)
+    Report.summary(Comparator.compare(b, a))
+  }
 
   val cdc02Oracle: String =
     oracleCte +
@@ -230,22 +207,25 @@ object CdcQueries {
 
   // cdc03 — per-binlog-file breakdown of statuses (the generalized report
   // the reference cannot produce, SURVEY §2.4).
-  def cdc03FileBreakdown(spark: SparkSession, dir: String): DataFrame =
-    compared(spark, dir).groupBy("binlog_file", "status").count()
+  def cdc03FileBreakdown(spark: SparkSession, dir: String): DataFrame = {
+    val (b, a) = sides(spark, dir)
+    Comparator.compare(b, a).groupBy("binlog_file", "status").count()
       .orderBy("binlog_file", "status")
+  }
 
   val cdc03Oracle: String =
     oracleCte +
     "\nSELECT binlog_file, status, COUNT(*) AS count FROM st GROUP BY 1, 2 ORDER BY 1, 2"
 
   // cdc04 — tolerance sweep (E10's parameterized tolerance): status counts
-  // at several tolerances in ONE pass over the cached comparison — the
-  // compare output keeps the raw b_* timestamp strings, so the sweep
-  // re-derives the band check per tolerance without re-joining.
+  // at several tolerances in ONE pass over one comparison — the compare
+  // output keeps the raw b_* timestamp strings, so the sweep re-derives
+  // the band check per tolerance without re-joining.
   def cdc04ToleranceSweep(spark: SparkSession, dir: String): DataFrame = {
-    import graft.cdc.{Comparator, Normalize, Schemas}
+    import graft.cdc.{Normalize, Schemas}
     val tols = Seq(0L, 50L, 100L, 250L, 1000L)
-    val base = compared(spark, dir)
+    val (b, a) = sides(spark, dir)
+    val base = Comparator.compare(b, a)
     val parseError = Comparator.binlogTsParseError
     val tsMis = col("_b_present") && col("_a_present") && coalesce(
       parseError || Normalize.outsideTolerance(
@@ -3109,121 +3089,75 @@ object CdcQueries {
       .orderBy("tolerance_ms", "status")
   }
 
-
-
-
-
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "cdc52_stream_stream_band" -> (cdc52StreamStreamBand _),
-    "cdc50_stream_band" -> (cdc50StreamBandTolerance _),
-    "cdc49_stream_sketch" -> (cdc49StreamSketch _),
-    "cdc48_idempotent_sink" -> (cdc48IdempotentSink _),
-    "cdc47_stream_retract" -> (cdc47StreamRetract _),
-    "cdc46_band_tolerance" -> (cdc46BandTolerance _),
-    "cdc45_stream_ivm" -> (cdc45StreamIvm _),
-    "cdc44_multi_watermark" -> (cdc44MultiWatermark _),
-    "cdc43_avro_roundtrip" -> (cdc43AvroRoundtrip _),
-    "cdc42_stream_scd2" -> (cdc42StreamScd2 _),
-    "cdc01_status_counts" -> (cdc01StatusCounts _),
-    "cdc02_summary" -> (cdc02Summary _),
-    "cdc03_file_breakdown" -> (cdc03FileBreakdown _),
-    "cdc04_tolerance_sweep" -> (cdc04ToleranceSweep _),
-    "cdc05_binary_source" -> (cdc05BinarySource _),
-    "cdc06_text_source" -> (cdc06TextSource _),
-    "cdc07_avro_source" -> (cdc07AvroSource _),
-    "cdc08_json_source" -> (cdc08JsonSource _),
-    "cdc09_avrojson_source" -> (cdc09AvroJsonSource _),
-    "cdc10_catalog_source" -> (cdc10CatalogSource _),
-    "cdc11_catalog_avro" -> (cdc11CatalogAvro _),
-    "cdc12_stream_drain" -> (cdc12StreamDrain _),
-    "cdc13_stream_binlog" -> (cdc13StreamBinlog _),
-    "cdc14_stream_dedup" -> (cdc14StreamDedup _),
-    "cdc15_stream_windows" -> (cdc15StreamWindows _),
-    "cdc16_stream_parity" -> (cdc16StreamParity _),
-    "cdc17_snapshot_apply" -> (cdc17SnapshotApply _),
-    "cdc18_restart_parity" -> (cdc18RestartParity _),
-    "cdc19_schema_evolution" -> (cdc19SchemaEvolution _),
-    "cdc20_incremental_apply" -> (cdc20IncrementalApply _),
-    "cdc21_scd2_history" -> (cdc21Scd2History _),
-    "cdc22_lag_percentiles" -> (cdc22LagPercentiles _),
-    "cdc23_lateness_metrics" -> (cdc23LatenessMetrics _),
-    "cdc24_sequence_audit" -> (cdc24SequenceAudit _),
-    "cdc25_txn_assembly" -> (cdc25TxnAssembly _),
-    "cdc26_key_skew" -> (cdc26KeySkew _),
-    "cdc27_snapshot_diff" -> (cdc27SnapshotDiff _),
-    "cdc28_watermark_apply" -> (cdc28WatermarkApply _),
-    "cdc29_compaction_debt" -> (cdc29CompactionDebt _),
-    "cdc30_multitable_route" -> (cdc30MultiTableRoute _),
-    "cdc31_idempotent_replay" -> (cdc31IdempotentReplay _),
-    "cdc32_log_gaps" -> (cdc32LogGaps _),
-    "cdc33_table_checksum" -> (cdc33TableChecksum _),
-    "cdc34_stream_sessions" -> (cdc34StreamSessions _),
-    "cdc35_active_active" -> (cdc35ActiveActive _),
-    "cdc36_column_churn" -> (cdc36ColumnChurn _),
-    "cdc37_ddl_epoch" -> (cdc37DdlEpoch _),
-    "cdc38_gtid_coverage" -> (cdc38GtidCoverage _),
-    "cdc39_stream_route" -> (cdc39StreamRoute _),
-    "cdc40_rotate_chain" -> (cdc40RotateChain _),
-    "cdc41_stream_ddl_epoch" -> (cdc41StreamDdlEpoch _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "cdc01_status_counts" -> cdc01Oracle,
-    "cdc02_summary" -> cdc02Oracle,
-    "cdc03_file_breakdown" -> cdc03Oracle,
-    "cdc04_tolerance_sweep" -> cdc04Oracle,
-    "cdc05_binary_source" -> cdc05Oracle,
-    "cdc06_text_source" -> cdc06Oracle,
-    "cdc07_avro_source" -> cdc07Oracle,
-    "cdc08_json_source" -> cdc08Oracle,
-    "cdc09_avrojson_source" -> cdc09Oracle,
-    "cdc10_catalog_source" -> cdc05Oracle, // same decode, catalog-routed
-    "cdc11_catalog_avro" -> cdc07Oracle, // same container read, catalog-routed
-    "cdc12_stream_drain" -> cdc01Oracle, // drained stream == batch compare
-    "cdc13_stream_binlog" -> cdc05Oracle, // streamed decode == batch decode
-    "cdc14_stream_dedup" -> cdc14Oracle,
-    "cdc15_stream_windows" -> cdc15Oracle,
-    "cdc16_stream_parity" -> cdc01Oracle, // the parity contract IS cdc01
-    "cdc17_snapshot_apply" -> cdc17Oracle,
-    "cdc18_restart_parity" -> cdc01Oracle, // restart must equal the batch compare
-    "cdc19_schema_evolution" -> cdc19Oracle,
-    "cdc20_incremental_apply" -> cdc17Oracle, // incremental == one-shot apply
-    "cdc21_scd2_history" -> cdc21Oracle,
-    "cdc22_lag_percentiles" -> cdc22Oracle,
-    "cdc23_lateness_metrics" -> cdc23Oracle,
-    "cdc24_sequence_audit" -> cdc24Oracle,
-    "cdc25_txn_assembly" -> cdc25Oracle,
-    "cdc26_key_skew" -> cdc26Oracle,
-    "cdc27_snapshot_diff" -> cdc27Oracle,
-    "cdc28_watermark_apply" -> cdc28Oracle,
-    "cdc29_compaction_debt" -> cdc29Oracle,
-    "cdc30_multitable_route" -> cdc30Oracle,
-    "cdc31_idempotent_replay" -> cdc17Oracle, // replayed feed == clean feed
-    "cdc32_log_gaps" -> cdc32Oracle,
-    "cdc33_table_checksum" -> cdc33Oracle,
-    "cdc34_stream_sessions" -> cdc34Oracle,
-    "cdc35_active_active" -> cdc35Oracle,
-    "cdc36_column_churn" -> cdc36Oracle,
-    "cdc37_ddl_epoch" -> cdc37Oracle,
-    "cdc38_gtid_coverage" -> cdc38Oracle,
-    "cdc39_stream_route" -> cdc30Oracle, // same routing summary, streamed
-    "cdc40_rotate_chain" -> cdc40Oracle,
-    "cdc41_stream_ddl_epoch" -> cdc37Oracle, // drained state == batch window
-    "cdc42_stream_scd2" -> cdc21Oracle, // reconciled drain == batch SCD2
-    "cdc43_avro_roundtrip" -> cdc05Oracle, // write∘read == identity on the decode
-    "cdc44_multi_watermark" -> cdc44Oracle,
+  val gates: Seq[Gate] = Seq(
+    Gate("cdc01_status_counts", cdc01StatusCounts, cdc01Oracle),
+    Gate("cdc02_summary", cdc02Summary, cdc02Oracle),
+    Gate("cdc03_file_breakdown", cdc03FileBreakdown, cdc03Oracle),
+    Gate("cdc04_tolerance_sweep", cdc04ToleranceSweep, cdc04Oracle),
+    Gate("cdc05_binary_source", cdc05BinarySource, cdc05Oracle),
+    Gate("cdc06_text_source", cdc06TextSource, cdc06Oracle),
+    Gate("cdc07_avro_source", cdc07AvroSource, cdc07Oracle),
+    Gate("cdc08_json_source", cdc08JsonSource, cdc08Oracle),
+    Gate("cdc09_avrojson_source", cdc09AvroJsonSource, cdc09Oracle),
+    // same decode, catalog-routed
+    Gate("cdc10_catalog_source", cdc10CatalogSource, cdc05Oracle),
+    // same container read, catalog-routed
+    Gate("cdc11_catalog_avro", cdc11CatalogAvro, cdc07Oracle),
+    // drained stream == batch compare
+    Gate("cdc12_stream_drain", cdc12StreamDrain, cdc01Oracle, drain = true),
+    // streamed decode == batch decode
+    Gate("cdc13_stream_binlog", cdc13StreamBinlog, cdc05Oracle, drain = true),
+    Gate("cdc14_stream_dedup", cdc14StreamDedup, cdc14Oracle, drain = true),
+    Gate("cdc15_stream_windows", cdc15StreamWindows, cdc15Oracle, drain = true),
+    // the parity contract IS cdc01
+    Gate("cdc16_stream_parity", cdc16StreamParity, cdc01Oracle, drain = true),
+    Gate("cdc17_snapshot_apply", cdc17SnapshotApply, cdc17Oracle),
+    // restart must equal the batch compare
+    Gate("cdc18_restart_parity", cdc18RestartParity, cdc01Oracle, drain = true),
+    Gate("cdc19_schema_evolution", cdc19SchemaEvolution, cdc19Oracle),
+    // incremental == one-shot apply
+    Gate("cdc20_incremental_apply", cdc20IncrementalApply, cdc17Oracle),
+    Gate("cdc21_scd2_history", cdc21Scd2History, cdc21Oracle),
+    Gate("cdc22_lag_percentiles", cdc22LagPercentiles, cdc22Oracle),
+    Gate("cdc23_lateness_metrics", cdc23LatenessMetrics, cdc23Oracle),
+    Gate("cdc24_sequence_audit", cdc24SequenceAudit, cdc24Oracle),
+    Gate("cdc25_txn_assembly", cdc25TxnAssembly, cdc25Oracle),
+    Gate("cdc26_key_skew", cdc26KeySkew, cdc26Oracle),
+    Gate("cdc27_snapshot_diff", cdc27SnapshotDiff, cdc27Oracle),
+    Gate("cdc28_watermark_apply", cdc28WatermarkApply, cdc28Oracle),
+    Gate("cdc29_compaction_debt", cdc29CompactionDebt, cdc29Oracle),
+    Gate("cdc30_multitable_route", cdc30MultiTableRoute, cdc30Oracle),
+    // replayed feed == clean feed
+    Gate("cdc31_idempotent_replay", cdc31IdempotentReplay, cdc17Oracle),
+    Gate("cdc32_log_gaps", cdc32LogGaps, cdc32Oracle),
+    Gate("cdc33_table_checksum", cdc33TableChecksum, cdc33Oracle),
+    Gate("cdc34_stream_sessions", cdc34StreamSessions, cdc34Oracle, drain = true),
+    Gate("cdc35_active_active", cdc35ActiveActive, cdc35Oracle),
+    Gate("cdc36_column_churn", cdc36ColumnChurn, cdc36Oracle),
+    Gate("cdc37_ddl_epoch", cdc37DdlEpoch, cdc37Oracle),
+    Gate("cdc38_gtid_coverage", cdc38GtidCoverage, cdc38Oracle),
+    // same routing summary, streamed
+    Gate("cdc39_stream_route", cdc39StreamRoute, cdc30Oracle, drain = true),
+    Gate("cdc40_rotate_chain", cdc40RotateChain, cdc40Oracle),
+    // drained state == batch window
+    Gate("cdc41_stream_ddl_epoch", cdc41StreamDdlEpoch, cdc37Oracle, drain = true),
+    // reconciled drain == batch SCD2
+    Gate("cdc42_stream_scd2", cdc42StreamScd2, cdc21Oracle, drain = true),
+    // write∘read == identity on the decode
+    Gate("cdc43_avro_roundtrip", cdc43AvroRoundtrip, cdc05Oracle),
+    Gate("cdc44_multi_watermark", cdc44MultiWatermark, cdc44Oracle),
     // stream-maintained view == q66's batch IVM decomposition — a
     // mismatch against a green q66 isolates the streaming delivery
-    "cdc45_stream_ivm" -> AnalyticQueries.q66Oracle,
+    Gate("cdc45_stream_ivm", cdc45StreamIvm, AnalyticQueries.q66Oracle, drain = true),
     // band-join tolerance == cdc04's post-join-filter sweep, bit-for-bit
-    "cdc46_band_tolerance" -> cdc04Oracle,
-    "cdc50_stream_band" -> cdc04Oracle, // streaming band == batch sweep
-    // stream-STREAM band (one exploded equi-join) == the batch sweep
-    "cdc52_stream_stream_band" -> cdc04Oracle,
-    "cdc47_stream_retract" -> cdc47Oracle,
+    Gate("cdc46_band_tolerance", cdc46BandTolerance, cdc04Oracle),
+    Gate("cdc47_stream_retract", cdc47StreamRetract, cdc47Oracle, drain = true),
     // redelivered-batch write absorbed ⇒ still q66's exact decomposition
-    "cdc48_idempotent_sink" -> AnalyticQueries.q66Oracle,
-    "cdc49_stream_sketch" -> cdc49Oracle,
+    Gate("cdc48_idempotent_sink", cdc48IdempotentSink, AnalyticQueries.q66Oracle, drain = true),
+    Gate("cdc49_stream_sketch", cdc49StreamSketch, cdc49Oracle, drain = true),
+    // streaming band == batch sweep
+    Gate("cdc50_stream_band", cdc50StreamBandTolerance, cdc04Oracle, drain = true),
+    // stream-STREAM band (one exploded equi-join) == the batch sweep
+    Gate("cdc52_stream_stream_band", cdc52StreamStreamBand, cdc04Oracle, drain = true),
   )
 }

@@ -1894,67 +1894,37 @@ object DedupQueries {
           .cast("long").as("flagged_id_sum"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "d33_stream_decontaminate" -> (d33StreamDecontaminate _),
-    "d28_edit_verify" -> (d28EditVerify _),
-    "d29_shared_spans" -> (d29SharedSpans _),
-    "d30_decontaminate_clip" -> (d30DecontaminateClip _),
-    "d31_cdc_chunking" -> (d31CdcChunking _),
-    "d32_stream_lsh_ingest" -> (d32StreamLshIngest _),
-    "d01_exact_dedup" -> (d01ExactDedup _),
-    "d27_simhash60" -> (d27Simhash60 _),
-    "d02_ngram_jaccard" -> (d02NgramJaccard _),
-    "d03_minhash_lsh" -> (d03MinhashLsh _),
-    "d04_simhash" -> (d04Simhash _),
-    "d06_group_minhash" -> (d06GroupMinhash _),
-    "d08_simhash_neardup" -> (d08SimhashNearDup _),
-    "d09_sql_simhash" -> (d09SqlSimhash _),
-    "d10_dedup_components" -> (d10DedupComponents _),
-    "d11_decontaminate" -> (d11Decontaminate _),
-    "d12_dedup_manifest" -> (d12DedupManifest _),
-    "d13_chunk_dedup" -> (d13ChunkDedup _),
-    "d15_bloom_decontaminate" -> (d15BloomDecontaminate _),
-    "d17_minhash_estimate" -> (d17MinhashEstimate _),
-    "d18_span_dedup" -> (d18SpanDedup _),
-    "d19_lsh_sweep" -> (d19LshSweep _),
-    "d20_incremental_dedup" -> (d20IncrementalDedup _),
-    "d21_novelty_score" -> (d21NoveltyScore _),
-    "d22_countmin" -> (d22CountMin _),
-    "d23_tf_cosine" -> (d23TfCosine _),
-    "d24_soft_dedup" -> (d24SoftDedup _),
-    "d25_split_leakage" -> (d25SplitLeakage _),
-    "d26_containment" -> (d26Containment _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "d28_edit_verify" -> d28Oracle,
-    "d29_shared_spans" -> d29Oracle,
-    "d30_decontaminate_clip" -> d30Oracle,
-    "d31_cdc_chunking" -> d31Oracle,
-    "d32_stream_lsh_ingest" -> d32Oracle,
-    "d01_exact_dedup" -> d01Oracle,
-    "d02_ngram_jaccard" -> d02Oracle,
-    "d03_minhash_lsh" -> d03Oracle,
-    "d04_simhash" -> d04Oracle,
-    "d06_group_minhash" -> d06Oracle,
-    "d08_simhash_neardup" -> d08Oracle,
-    "d09_sql_simhash" -> d04Oracle, // same computation, SQL-routed
-    "d10_dedup_components" -> d10Oracle,
-    "d11_decontaminate" -> d11Oracle,
-    "d12_dedup_manifest" -> d12Oracle,
-    "d13_chunk_dedup" -> d13Oracle,
-    "d15_bloom_decontaminate" -> d15Oracle,
-    "d33_stream_decontaminate" -> d15Oracle, // streamed probe == batch pass
-    "d17_minhash_estimate" -> d17Oracle,
-    "d18_span_dedup" -> d18Oracle,
-    "d19_lsh_sweep" -> d19Oracle,
-    "d20_incremental_dedup" -> d20Oracle,
-    "d21_novelty_score" -> d21Oracle,
-    "d22_countmin" -> d22Oracle,
-    "d23_tf_cosine" -> d23Oracle,
-    "d24_soft_dedup" -> d24Oracle,
-    "d25_split_leakage" -> d25Oracle,
-    "d26_containment" -> d26Oracle,
-    "d27_simhash60" -> d27Oracle,
+  val gates: Seq[Gate] = Seq(
+    Gate("d01_exact_dedup", d01ExactDedup, d01Oracle),
+    Gate("d02_ngram_jaccard", d02NgramJaccard, d02Oracle),
+    Gate("d03_minhash_lsh", d03MinhashLsh, d03Oracle),
+    Gate("d04_simhash", d04Simhash, d04Oracle),
+    Gate("d06_group_minhash", d06GroupMinhash, d06Oracle),
+    Gate("d08_simhash_neardup", d08SimhashNearDup, d08Oracle),
+    // same computation, SQL-routed
+    Gate("d09_sql_simhash", d09SqlSimhash, d04Oracle),
+    Gate("d10_dedup_components", d10DedupComponents, d10Oracle),
+    Gate("d11_decontaminate", d11Decontaminate, d11Oracle),
+    Gate("d12_dedup_manifest", d12DedupManifest, d12Oracle),
+    Gate("d13_chunk_dedup", d13ChunkDedup, d13Oracle),
+    Gate("d15_bloom_decontaminate", d15BloomDecontaminate, d15Oracle),
+    Gate("d17_minhash_estimate", d17MinhashEstimate, d17Oracle),
+    Gate("d18_span_dedup", d18SpanDedup, d18Oracle),
+    Gate("d19_lsh_sweep", d19LshSweep, d19Oracle),
+    Gate("d20_incremental_dedup", d20IncrementalDedup, d20Oracle),
+    Gate("d21_novelty_score", d21NoveltyScore, d21Oracle),
+    Gate("d22_countmin", d22CountMin, d22Oracle),
+    Gate("d23_tf_cosine", d23TfCosine, d23Oracle),
+    Gate("d24_soft_dedup", d24SoftDedup, d24Oracle),
+    Gate("d25_split_leakage", d25SplitLeakage, d25Oracle),
+    Gate("d26_containment", d26Containment, d26Oracle),
+    Gate("d27_simhash60", d27Simhash60, d27Oracle),
+    Gate("d28_edit_verify", d28EditVerify, d28Oracle),
+    Gate("d29_shared_spans", d29SharedSpans, d29Oracle),
+    Gate("d30_decontaminate_clip", d30DecontaminateClip, d30Oracle),
+    Gate("d31_cdc_chunking", d31CdcChunking, d31Oracle),
+    Gate("d32_stream_lsh_ingest", d32StreamLshIngest, d32Oracle, drain = true),
+    // streamed probe == batch pass
+    Gate("d33_stream_decontaminate", d33StreamDecontaminate, d15Oracle, drain = true),
   )
 }

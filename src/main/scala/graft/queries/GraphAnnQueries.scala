@@ -1111,25 +1111,15 @@ object GraphAnnQueries {
       |ORDER BY variant""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "s25_knn_graph" -> (s25KnnGraph _),
-    "s34_graph_search" -> (s34GraphSearch _),
-    "s36_graph_persisted" -> (s36GraphPersisted _),
-    "s38_graph_recall" -> (s38GraphRecall _),
-    "s40_graph_seed_sweep" -> (s40GraphSeedSweep _),
-    "s41_graph_bridged_recall" -> (s41GraphBridgedRecall _),
-    "s49_graph_filtered" -> (s49GraphFiltered _),
-    "s50_beam_sweep" -> (s50BeamSweep _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "s25_knn_graph" -> s25Oracle,
-    "s34_graph_search" -> s34Oracle,
-    "s36_graph_persisted" -> s34Oracle, // same search, persisted graph index
-    "s38_graph_recall" -> s38Oracle,
-    "s40_graph_seed_sweep" -> s40Oracle,
-    "s41_graph_bridged_recall" -> s41Oracle,
-    "s49_graph_filtered" -> s49Oracle,
-    "s50_beam_sweep" -> s50Oracle,
+  val gates: Seq[Gate] = Seq(
+    Gate("s25_knn_graph", s25KnnGraph, s25Oracle),
+    Gate("s34_graph_search", s34GraphSearch, s34Oracle),
+    // same search, persisted graph index
+    Gate("s36_graph_persisted", s36GraphPersisted, s34Oracle),
+    Gate("s38_graph_recall", s38GraphRecall, s38Oracle),
+    Gate("s40_graph_seed_sweep", s40GraphSeedSweep, s40Oracle),
+    Gate("s41_graph_bridged_recall", s41GraphBridgedRecall, s41Oracle),
+    Gate("s49_graph_filtered", s49GraphFiltered, s49Oracle),
+    Gate("s50_beam_sweep", s50BeamSweep, s50Oracle),
   )
 }

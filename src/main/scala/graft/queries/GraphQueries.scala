@@ -1297,45 +1297,25 @@ object GraphQueries {
         sum(expr("(deg * (deg - 1)) div 2")).as("n_wedges"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "g17_restart_degree" -> (g17RestartDegree _),
-    "g16_stream_degree_retract" -> (g16StreamDegreeRetract _),
-    "g15_harmonic_centrality" -> (g15HarmonicCentrality _),
-    "g14_luby_mis" -> (g14LubyMis _),
-    "g13_ktruss" -> (g13Ktruss _),
-    "g12_modularity" -> (g12Modularity _),
-    "g11_weighted_paths" -> (g11WeightedPaths _),
-    "g10_hyperball" -> (g10Hyperball _),
-    "g09_hits" -> (g09Hits _),
-    "g08_cc_star" -> (g08CcStar _),
-    "g07_personalized_pagerank" -> (g07PersonalizedPagerank _),
-    "g01_pagerank" -> (g01Pagerank _),
-    "g02_triangles" -> (g02Triangles _),
-    "g03_kcore" -> (g03Kcore _),
-    "g04_link_prediction" -> (g04LinkPrediction _),
-    "g05_label_prop" -> (g05LabelProp _),
-    "g06_bfs_distance" -> (g06BfsDistance _),
-  )
-
-  val oracles: Map[String, String] = Map(
+  val gates: Seq[Gate] = Seq(
+    Gate("g01_pagerank", g01Pagerank, g01Oracle),
+    Gate("g02_triangles", g02Triangles, g02Oracle),
+    Gate("g03_kcore", g03Kcore, g03Oracle),
+    Gate("g04_link_prediction", g04LinkPrediction, g04Oracle),
+    Gate("g05_label_prop", g05LabelProp, g05Oracle),
+    Gate("g06_bfs_distance", g06BfsDistance, g06Oracle),
+    Gate("g07_personalized_pagerank", g07PersonalizedPagerank, g07Oracle),
+    Gate("g08_cc_star", g08CcStar, g08Oracle),
+    Gate("g09_hits", g09Hits, g09Oracle),
+    Gate("g10_hyperball", g10Hyperball, g10Oracle),
+    Gate("g11_weighted_paths", g11WeightedPaths, g11Oracle),
+    Gate("g12_modularity", g12Modularity, g12Oracle),
+    Gate("g13_ktruss", g13Ktruss, g13Oracle),
+    Gate("g14_luby_mis", g14LubyMis, g14Oracle),
+    Gate("g15_harmonic_centrality", g15HarmonicCentrality, g15Oracle),
+    Gate("g16_stream_degree_retract", g16StreamDegreeRetract, g16Oracle, drain = true),
     // two-run drain + cross-restart replay == one-run census (isolates
     // the offset/restart seam from the retraction algebra)
-    "g17_restart_degree" -> g16Oracle,
-    "g16_stream_degree_retract" -> g16Oracle,
-    "g14_luby_mis" -> g14Oracle,
-    "g15_harmonic_centrality" -> g15Oracle,
-    "g13_ktruss" -> g13Oracle,
-    "g12_modularity" -> g12Oracle,
-    "g11_weighted_paths" -> g11Oracle,
-    "g10_hyperball" -> g10Oracle,
-    "g09_hits" -> g09Oracle,
-    "g08_cc_star" -> g08Oracle,
-    "g07_personalized_pagerank" -> g07Oracle,
-    "g01_pagerank" -> g01Oracle,
-    "g02_triangles" -> g02Oracle,
-    "g03_kcore" -> g03Oracle,
-    "g04_link_prediction" -> g04Oracle,
-    "g05_label_prop" -> g05Oracle,
-    "g06_bfs_distance" -> g06Oracle,
+    Gate("g17_restart_degree", g17RestartDegree, g16Oracle, drain = true),
   )
 }

@@ -3197,82 +3197,51 @@ object LifecycleQueries {
       |FROM base
       |GROUP BY 1 ORDER BY 1""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "cdc79_follow_gtid" -> (cdc79FollowGtid _),
-    "cdc78_follow_census" -> (cdc78FollowCensus _),
-    "cdc77_release_diff" -> (cdc77ReleaseDiff _),
-    "cdc76_consistent_demux" -> (cdc76ConsistentDemux _),
-    "cdc75_time_travel" -> (cdc75TimeTravel _),
-    "cdc74_gtid_sharded_failover" -> (cdc74GtidShardedFailover _),
-    "cdc73_gtid_set_cutover" -> (cdc73GtidSetCutover _),
-    "cdc72_purge_sharded_union" -> (cdc72PurgeShardedUnion _),
-    "cdc71_tail_purge" -> (cdc71TailPurge _),
-    "cdc70_gtid_durable" -> (cdc70GtidDurable _),
-    "cdc69_sharded_union" -> (cdc69ShardedUnion _),
-    "cdc68_checkpoint_upgrade" -> (cdc68CheckpointUpgrade _),
-    "cdc67_tail_lag" -> (cdc67TailLag _),
-    "cdc66_gtid_failover" -> (cdc66GtidFailover _),
-    "cdc65_tail_cutover" -> (cdc65TailCutover _),
-    "cdc64_tail_rotate" -> (cdc64TailRotate _),
-    "cdc63_tail_demux" -> (cdc63TailDemux _),
-    "cdc62_sketch_compaction" -> (cdc62SketchCompaction _),
-    "cdc61_demux_lifecycle" -> (cdc61DemuxLifecycle _),
-    "cdc60_snapshot_cutover" -> (cdc60SnapshotCutover _),
-    "cdc59_compact_restart" -> (cdc59CompactRestartIvm _),
-    "cdc58_tail_active" -> (cdc58TailActive _),
-    "cdc57_multi_table_demux" -> (cdc57MultiTableDemux _),
-    "cdc56_txn_atomic_apply" -> (cdc56TxnAtomicApply _),
-    "cdc55_wire_evolution" -> (cdc55WireEvolution _),
-    "cdc54_wire_dml_apply" -> (cdc54WireDmlApply _),
-    "cdc53_restart_ivm" -> (cdc53RestartIvm _),
-    "cdc51_compacted_ivm" -> (cdc51CompactedIvm _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    // both diff paths recomputed as direct class sums — partition
-    // selection, the sign-flip, and the fold are all on the hook
-    "cdc79_follow_gtid" -> cdc79Oracle,
-    "cdc78_follow_census" -> cdc78Oracle,
-    "cdc77_release_diff" -> cdc77Oracle,
-    // three stages recomputed from the class predicates — the torn raw
-    // view, the mark-bounded consistent view, and the completed batch
-    "cdc76_consistent_demux" -> cdc76Oracle,
-    // each mark recomputed from scratch with the class-membership
-    // predicates — base choice, retention, and fold are all on the hook
-    "cdc75_time_travel" -> cdc75Oracle,
-    "cdc74_gtid_sharded_failover" -> cdc74Oracle,
-    // the set-keyed bootstrap applies exactly what the failover gate
-    // applies — snapshot + replica-only txns, torn class excluded
-    "cdc73_gtid_set_cutover" -> cdc66Oracle,
-    // purge-safe union serves exactly what the plain union serves —
-    // retention below each shard's frontier is invisible by design
-    "cdc72_purge_sharded_union" -> cdc69Oracle,
-    "cdc71_tail_purge" -> cdc71Oracle,
-    // the durable set changes WHERE the mark lives, not what is applied
-    "cdc70_gtid_durable" -> cdc66Oracle,
-    "cdc69_sharded_union" -> cdc69Oracle,
-    "cdc68_checkpoint_upgrade" -> cdc68Oracle,
-    "cdc67_tail_lag" -> cdc67Oracle,
-    "cdc66_gtid_failover" -> cdc66Oracle,
-    "cdc65_tail_cutover" -> cdc65Oracle,
-    "cdc64_tail_rotate" -> cdc64Oracle,
-    "cdc63_tail_demux" -> cdc63Oracle,
-    // register-max fold through compact == the uncompacted sketch view
-    "cdc62_sketch_compaction" -> CdcQueries.cdc49Oracle,
-    "cdc61_demux_lifecycle" -> cdc61Oracle,
-    "cdc60_snapshot_cutover" -> cdc60Oracle,
-    // compaction composed with restart ⇒ still q66's exact decomposition
-    "cdc59_compact_restart" -> AnalyticQueries.q66Oracle,
-    "cdc58_tail_active" -> cdc58Oracle,
-    "cdc57_multi_table_demux" -> cdc57Oracle,
-    "cdc56_txn_atomic_apply" -> cdc56Oracle,
-    "cdc55_wire_evolution" -> cdc55Oracle,
-    "cdc54_wire_dml_apply" -> cdc54Oracle,
+  val gates: Seq[Gate] = Seq(
     // mid-stream compaction + covered AND in-flight replays absorbed =>
     // still q66's exact decomposition (isolates the compaction machinery)
-    "cdc51_compacted_ivm" -> AnalyticQueries.q66Oracle,
+    Gate("cdc51_compacted_ivm", cdc51CompactedIvm, AnalyticQueries.q66Oracle, drain = true),
     // two-run drain on one checkpoint + cross-restart replay absorbed =>
     // still q66's exact decomposition (isolates the offset/restart seam)
-    "cdc53_restart_ivm" -> AnalyticQueries.q66Oracle,
+    Gate("cdc53_restart_ivm", cdc53RestartIvm, AnalyticQueries.q66Oracle, drain = true),
+    Gate("cdc54_wire_dml_apply", cdc54WireDmlApply, cdc54Oracle),
+    Gate("cdc55_wire_evolution", cdc55WireEvolution, cdc55Oracle, drain = true),
+    Gate("cdc56_txn_atomic_apply", cdc56TxnAtomicApply, cdc56Oracle),
+    Gate("cdc57_multi_table_demux", cdc57MultiTableDemux, cdc57Oracle, drain = true),
+    Gate("cdc58_tail_active", cdc58TailActive, cdc58Oracle, drain = true),
+    // compaction composed with restart ⇒ still q66's exact decomposition
+    Gate("cdc59_compact_restart", cdc59CompactRestartIvm, AnalyticQueries.q66Oracle, drain = true),
+    Gate("cdc60_snapshot_cutover", cdc60SnapshotCutover, cdc60Oracle, drain = true),
+    Gate("cdc61_demux_lifecycle", cdc61DemuxLifecycle, cdc61Oracle, drain = true),
+    // register-max fold through compact == the uncompacted sketch view
+    Gate("cdc62_sketch_compaction", cdc62SketchCompaction, CdcQueries.cdc49Oracle, drain = true),
+    Gate("cdc63_tail_demux", cdc63TailDemux, cdc63Oracle, drain = true),
+    Gate("cdc64_tail_rotate", cdc64TailRotate, cdc64Oracle, drain = true),
+    Gate("cdc65_tail_cutover", cdc65TailCutover, cdc65Oracle, drain = true),
+    Gate("cdc66_gtid_failover", cdc66GtidFailover, cdc66Oracle, drain = true),
+    Gate("cdc67_tail_lag", cdc67TailLag, cdc67Oracle, drain = true),
+    Gate("cdc68_checkpoint_upgrade", cdc68CheckpointUpgrade, cdc68Oracle, drain = true),
+    Gate("cdc69_sharded_union", cdc69ShardedUnion, cdc69Oracle, drain = true),
+    // the durable set changes WHERE the mark lives, not what is applied
+    Gate("cdc70_gtid_durable", cdc70GtidDurable, cdc66Oracle, drain = true),
+    Gate("cdc71_tail_purge", cdc71TailPurge, cdc71Oracle, drain = true),
+    // purge-safe union serves exactly what the plain union serves —
+    // retention below each shard's frontier is invisible by design
+    Gate("cdc72_purge_sharded_union", cdc72PurgeShardedUnion, cdc69Oracle, drain = true),
+    // the set-keyed bootstrap applies exactly what the failover gate
+    // applies — snapshot + replica-only txns, torn class excluded
+    Gate("cdc73_gtid_set_cutover", cdc73GtidSetCutover, cdc66Oracle, drain = true),
+    Gate("cdc74_gtid_sharded_failover", cdc74GtidShardedFailover, cdc74Oracle, drain = true),
+    // each mark recomputed from scratch with the class-membership
+    // predicates — base choice, retention, and fold are all on the hook
+    Gate("cdc75_time_travel", cdc75TimeTravel, cdc75Oracle, drain = true),
+    // three stages recomputed from the class predicates — the torn raw
+    // view, the mark-bounded consistent view, and the completed batch
+    Gate("cdc76_consistent_demux", cdc76ConsistentDemux, cdc76Oracle, drain = true),
+    // both diff paths recomputed as direct class sums — partition
+    // selection, the sign-flip, and the fold are all on the hook
+    Gate("cdc77_release_diff", cdc77ReleaseDiff, cdc77Oracle, drain = true),
+    Gate("cdc78_follow_census", cdc78FollowCensus, cdc78Oracle, drain = true),
+    Gate("cdc79_follow_gtid", cdc79FollowGtid, cdc79Oracle, drain = true),
   )
 }

@@ -870,40 +870,25 @@ object MultimodalQueries {
       |  CAST(MAX(strlen(text)) * (COUNT(*) - 1) AS BIGINT) AS bytes_saved
       |FROM m GROUP BY 1 HAVING COUNT(*) >= 2 ORDER BY 1""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "m13_restart_media_dedup" -> (m13RestartMediaDedup _),
-    "m12_compacted_media_dedup" -> (m12CompactedMediaDedup _),
-    "m11_stream_media_dedup" -> (m11StreamMediaDedup _),
-    "m10_stream_manifest" -> (m10StreamManifest _),
-    "m09_temporal_align" -> (m09TemporalAlign _),
-    "m01_media_features" -> (m01MediaFeatures _),
-    "m02_frame_samples" -> (m02FrameSamples _),
-    "m03_resize" -> (m03Resize _),
-    "m04_media_dedup" -> (m04MediaDedup _),
-    "m05_frame_dedup" -> (m05FrameDedup _),
-    "m06_crossmodal_search" -> (m06CrossModalSearch _),
-    "m07_media_manifest" -> (m07MediaManifest _),
-    "m08_scene_segments" -> (m08SceneSegments _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "m09_temporal_align" -> m09Oracle,
-    "m01_media_features" -> m01Oracle,
-    "m02_frame_samples" -> m02Oracle,
-    "m03_resize" -> m03Oracle,
-    "m04_media_dedup" -> m04Oracle,
-    "m11_stream_media_dedup" -> m04Oracle, // dedup-at-ingest == batch dedup
+  val gates: Seq[Gate] = Seq(
+    Gate("m01_media_features", m01MediaFeatures, m01Oracle),
+    Gate("m02_frame_samples", m02FrameSamples, m02Oracle),
+    Gate("m03_resize", m03Resize, m03Oracle),
+    Gate("m04_media_dedup", m04MediaDedup, m04Oracle),
+    Gate("m05_frame_dedup", m05FrameDedup, m05Oracle),
+    Gate("m06_crossmodal_search", m06CrossModalSearch, m06Oracle),
+    Gate("m07_media_manifest", m07MediaManifest, m07Oracle),
+    Gate("m08_scene_segments", m08SceneSegments, m08Oracle),
+    Gate("m09_temporal_align", m09TemporalAlign, m09Oracle),
+    // stream-maintained manifest == the one-shot batch manifest
+    Gate("m10_stream_manifest", m10StreamManifest, m07Oracle, drain = true),
+    // dedup-at-ingest == batch dedup
+    Gate("m11_stream_media_dedup", m11StreamMediaDedup, m04Oracle, drain = true),
     // compacted set/min-max states + covered replay == batch dedup
     // (m04's report under the adjacent-id remap — see the gate comment)
-    "m12_compacted_media_dedup" -> m12Oracle,
+    Gate("m12_compacted_media_dedup", m12CompactedMediaDedup, m12Oracle, drain = true),
     // two-run drain + cross-restart replay == batch dedup (isolates the
     // offset/restart seam for the set-state class; m12's remapped oracle)
-    "m13_restart_media_dedup" -> m12Oracle,
-    "m05_frame_dedup" -> m05Oracle,
-    "m06_crossmodal_search" -> m06Oracle,
-    "m07_media_manifest" -> m07Oracle,
-    "m08_scene_segments" -> m08Oracle,
-    // stream-maintained manifest == the one-shot batch manifest
-    "m10_stream_manifest" -> m07Oracle,
+    Gate("m13_restart_media_dedup", m13RestartMediaDedup, m12Oracle, drain = true),
   )
 }

@@ -1355,41 +1355,22 @@ object PipelineQueries {
       |    AS BIGINT) AS docs_tracked
       |FROM d, mx GROUP BY lang ORDER BY lang""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "p16_state_evolution" -> (p16StateEvolution _),
-    "p15_state_metrics" -> (p15StateMetrics _),
-    "p14_stream_quota_admission" -> (p14StreamQuotaAdmission _),
-    "p13_consistent_hash" -> (p13ConsistentHash _),
-    "p12_temperature_mix" -> (p12TemperatureMix _),
-    "p01_training_mix" -> (p01TrainingMix _),
-    "p11_clipped_release" -> (p11ClippedRelease _),
-    "p09_release_drift" -> (p09ReleaseDrift _),
-    "p10_zorder_layout" -> (p10ZorderLayout _),
-    "p02_shard_manifest" -> (p02ShardManifest _),
-    "p03_eval_set" -> (p03EvalSet _),
-    "p04_curation_v2" -> (p04CurationV2 _),
-    "p05_quota_mix" -> (p05QuotaMix _),
-    "p06_dataset_card" -> (p06DatasetCard _),
-    "p07_incremental_curation" -> (p07IncrementalCuration _),
-    "p08_release_card" -> (p08ReleaseCard _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "p16_state_evolution" -> p16Oracle,
-    "p15_state_metrics" -> p15Oracle,
-    "p14_stream_quota_admission" -> p14Oracle,
-    "p13_consistent_hash" -> p13Oracle,
-    "p12_temperature_mix" -> p12Oracle,
-    "p01_training_mix" -> p01Oracle,
-    "p11_clipped_release" -> p11Oracle,
-    "p09_release_drift" -> p09Oracle,
-    "p10_zorder_layout" -> p10Oracle,
-    "p02_shard_manifest" -> p02Oracle,
-    "p03_eval_set" -> p03Oracle,
-    "p04_curation_v2" -> p04Oracle,
-    "p05_quota_mix" -> p05Oracle,
-    "p06_dataset_card" -> p06Oracle,
-    "p07_incremental_curation" -> p07Oracle,
-    "p08_release_card" -> p08Oracle,
+  val gates: Seq[Gate] = Seq(
+    Gate("p01_training_mix", p01TrainingMix, p01Oracle),
+    Gate("p02_shard_manifest", p02ShardManifest, p02Oracle),
+    Gate("p03_eval_set", p03EvalSet, p03Oracle),
+    Gate("p04_curation_v2", p04CurationV2, p04Oracle),
+    Gate("p05_quota_mix", p05QuotaMix, p05Oracle),
+    Gate("p06_dataset_card", p06DatasetCard, p06Oracle),
+    Gate("p07_incremental_curation", p07IncrementalCuration, p07Oracle),
+    Gate("p08_release_card", p08ReleaseCard, p08Oracle),
+    Gate("p09_release_drift", p09ReleaseDrift, p09Oracle),
+    Gate("p10_zorder_layout", p10ZorderLayout, p10Oracle),
+    Gate("p11_clipped_release", p11ClippedRelease, p11Oracle),
+    Gate("p12_temperature_mix", p12TemperatureMix, p12Oracle),
+    Gate("p13_consistent_hash", p13ConsistentHash, p13Oracle),
+    Gate("p14_stream_quota_admission", p14StreamQuotaAdmission, p14Oracle, drain = true),
+    Gate("p15_state_metrics", p15StateMetrics, p15Oracle, drain = true),
+    Gate("p16_state_evolution", p16StateEvolution, p16Oracle, drain = true),
   )
 }

@@ -1191,39 +1191,22 @@ object PqQueries {
       |WHERE rank <= 5
       |ORDER BY query_id, rank""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "s05_ann_pq" -> (s05AnnPq _),
-    "s06_ann_ivfpq" -> (s06AnnIvfPq _),
-    "s08_ann_ivfpq_res" -> (s08AnnIvfPqResidual _),
-    "s10_ann_ivfpq_probe" -> (s10AnnIvfPqProbe _),
-    "s11_ann_ivfpq_res_probe" -> (s11AnnIvfPqResProbe _),
-    "s12_ann_ivfpq_persisted" -> (s12AnnIvfPqPersisted _),
-    "s13_ann_index_append" -> (s13AnnIndexAppend _),
-    "s14_ann_sq8" -> (s14AnnSq8 _),
-    "s15_ann_ivf_sq8" -> (s15AnnIvfSq8 _),
-    "s16_ann_ivfpq_res_kmeans" -> (s16AnnIvfPqResKmeans _),
-    "s20_ann_tombstones" -> (s20AnnTombstones _),
-    "s22_pq_distortion" -> (s22PqDistortion _),
-    "s26_production_search" -> (s26ProductionSearch _),
-    "s35_opq_distortion" -> (s35OpqDistortion _),
-    "s39_ann_ivf_sq8_res" -> (s39AnnIvfSq8Res _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "s05_ann_pq" -> s05Oracle,
-    "s06_ann_ivfpq" -> s06Oracle,
-    "s08_ann_ivfpq_res" -> s08Oracle,
-    "s10_ann_ivfpq_probe" -> s10Oracle,
-    "s11_ann_ivfpq_res_probe" -> s11Oracle,
-    "s12_ann_ivfpq_persisted" -> s06Oracle, // same search, persisted index
-    "s13_ann_index_append" -> s13Oracle,
-    "s14_ann_sq8" -> s14Oracle,
-    "s15_ann_ivf_sq8" -> s15Oracle,
-    "s16_ann_ivfpq_res_kmeans" -> s16Oracle,
-    "s20_ann_tombstones" -> s20Oracle,
-    "s22_pq_distortion" -> s22Oracle,
-    "s26_production_search" -> s26Oracle,
-    "s35_opq_distortion" -> s35Oracle,
-    "s39_ann_ivf_sq8_res" -> s39Oracle,
+  val gates: Seq[Gate] = Seq(
+    Gate("s05_ann_pq", s05AnnPq, s05Oracle),
+    Gate("s06_ann_ivfpq", s06AnnIvfPq, s06Oracle),
+    Gate("s08_ann_ivfpq_res", s08AnnIvfPqResidual, s08Oracle),
+    Gate("s10_ann_ivfpq_probe", s10AnnIvfPqProbe, s10Oracle),
+    Gate("s11_ann_ivfpq_res_probe", s11AnnIvfPqResProbe, s11Oracle),
+    // same search, persisted index
+    Gate("s12_ann_ivfpq_persisted", s12AnnIvfPqPersisted, s06Oracle),
+    Gate("s13_ann_index_append", s13AnnIndexAppend, s13Oracle),
+    Gate("s14_ann_sq8", s14AnnSq8, s14Oracle),
+    Gate("s15_ann_ivf_sq8", s15AnnIvfSq8, s15Oracle),
+    Gate("s16_ann_ivfpq_res_kmeans", s16AnnIvfPqResKmeans, s16Oracle),
+    Gate("s20_ann_tombstones", s20AnnTombstones, s20Oracle),
+    Gate("s22_pq_distortion", s22PqDistortion, s22Oracle),
+    Gate("s26_production_search", s26ProductionSearch, s26Oracle),
+    Gate("s35_opq_distortion", s35OpqDistortion, s35Oracle),
+    Gate("s39_ann_ivf_sq8_res", s39AnnIvfSq8Res, s39Oracle),
   )
 }

@@ -1042,65 +1042,34 @@ object RelationalQueries {
       |  JOIN region r ON n.n_regionkey = r.r_regionkey)
       |GROUP BY r_name, decile ORDER BY r_name, decile""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q35_funnel" -> (q35Funnel _),
-    "q38_region_deciles" -> (q38RegionDeciles _),
-    "q39_region_nations" -> (q39RegionNations _),
-    "q40_antijoin_semantics" -> (q40AntiJoinSemantics _),
-    "q41_regr_moments" -> (q41RegrMoments _),
-    "q42_relative_rank" -> (q42RelativeRank _),
-    "q45_grouping_id" -> (q45GroupingId _),
-    "q46_bucketed_join" -> (q46BucketedJoin _),
-    "q49_lateral_topn" -> (q49LateralTopN _),
-    "q50_range_frame" -> (q50RangeFrame _),
-    "q54_correlated_agg" -> (q54CorrelatedAgg _),
-    "q34_quantile_sketch" -> (q34QuantileSketch _),
-    "q67_hist_merge" -> (q67HistMerge _),
-    "q33_copurchase_pairs" -> (q33CopurchasePairs _),
-    "q31_dormant_customers" -> (q31DormantCustomers _),
-    "q32_promo_share" -> (q32PromoShare _),
-    "q29_max_order_per_customer" -> (q29MaxOrderPerCustomer _),
-    "q30_nation_balance_share" -> (q30NationBalanceShare _),
-    "q01_pricing_summary" -> (q01PricingSummary _),
-    "q02_revenue_filter" -> (q02RevenueFilter _),
-    "q03_top_orders" -> (q03TopOrders _),
-    "q04_order_priority" -> (q04OrderPriority _),
-    "q05_region_revenue" -> (q05RegionRevenue _),
-    "q06_brand_stats" -> (q06BrandStats _),
-    "q07_customers_without_orders" -> (q07CustomersWithoutOrders _),
-    "q08_nation_accounting" -> (q08NationAccounting _),
-    "q09_top_orders_per_customer" -> (q09TopOrdersPerCustomer _),
-    "q10_user_event_gaps" -> (q10UserEventGaps _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q35_funnel" -> q35Oracle,
-    "q38_region_deciles" -> q38Oracle,
-    "q39_region_nations" -> q39Oracle,
-    "q40_antijoin_semantics" -> q40Oracle,
-    "q41_regr_moments" -> q41Oracle,
-    "q42_relative_rank" -> q42Oracle,
-    "q45_grouping_id" -> q45Oracle,
-    "q46_bucketed_join" -> q46Oracle,
-    "q49_lateral_topn" -> q49Oracle,
-    "q50_range_frame" -> q50Oracle,
-    "q54_correlated_agg" -> q54Oracle,
-    "q34_quantile_sketch" -> q34Oracle,
-    "q67_hist_merge" -> q67Oracle,
-    "q31_dormant_customers" -> q31Oracle,
-    "q32_promo_share" -> q32Oracle,
-    "q33_copurchase_pairs" -> q33Oracle,
-    "q29_max_order_per_customer" -> q29Oracle,
-    "q30_nation_balance_share" -> q30Oracle,
-    "q01_pricing_summary" -> q01Oracle,
-    "q02_revenue_filter" -> q02Oracle,
-    "q03_top_orders" -> q03Oracle,
-    "q04_order_priority" -> q04Oracle,
-    "q05_region_revenue" -> q05Oracle,
-    "q06_brand_stats" -> q06Oracle,
-    "q07_customers_without_orders" -> q07Oracle,
-    "q08_nation_accounting" -> q08Oracle,
-    "q09_top_orders_per_customer" -> q09Oracle,
-    "q10_user_event_gaps" -> q10Oracle,
+  val gates: Seq[Gate] = Seq(
+    Gate("q01_pricing_summary", q01PricingSummary, q01Oracle),
+    Gate("q02_revenue_filter", q02RevenueFilter, q02Oracle),
+    Gate("q03_top_orders", q03TopOrders, q03Oracle),
+    Gate("q04_order_priority", q04OrderPriority, q04Oracle),
+    Gate("q05_region_revenue", q05RegionRevenue, q05Oracle),
+    Gate("q06_brand_stats", q06BrandStats, q06Oracle),
+    Gate("q07_customers_without_orders", q07CustomersWithoutOrders, q07Oracle),
+    Gate("q08_nation_accounting", q08NationAccounting, q08Oracle),
+    Gate("q09_top_orders_per_customer", q09TopOrdersPerCustomer, q09Oracle),
+    Gate("q10_user_event_gaps", q10UserEventGaps, q10Oracle),
+    Gate("q29_max_order_per_customer", q29MaxOrderPerCustomer, q29Oracle),
+    Gate("q30_nation_balance_share", q30NationBalanceShare, q30Oracle),
+    Gate("q31_dormant_customers", q31DormantCustomers, q31Oracle),
+    Gate("q32_promo_share", q32PromoShare, q32Oracle),
+    Gate("q33_copurchase_pairs", q33CopurchasePairs, q33Oracle),
+    Gate("q34_quantile_sketch", q34QuantileSketch, q34Oracle),
+    Gate("q35_funnel", q35Funnel, q35Oracle),
+    Gate("q38_region_deciles", q38RegionDeciles, q38Oracle),
+    Gate("q39_region_nations", q39RegionNations, q39Oracle),
+    Gate("q40_antijoin_semantics", q40AntiJoinSemantics, q40Oracle),
+    Gate("q41_regr_moments", q41RegrMoments, q41Oracle),
+    Gate("q42_relative_rank", q42RelativeRank, q42Oracle),
+    Gate("q45_grouping_id", q45GroupingId, q45Oracle),
+    Gate("q46_bucketed_join", q46BucketedJoin, q46Oracle),
+    Gate("q49_lateral_topn", q49LateralTopN, q49Oracle),
+    Gate("q50_range_frame", q50RangeFrame, q50Oracle),
+    Gate("q54_correlated_agg", q54CorrelatedAgg, q54Oracle),
+    Gate("q67_hist_merge", q67HistMerge, q67Oracle),
   )
 }

@@ -1779,63 +1779,33 @@ object SimilarityQueries {
       |    - MAX(CASE WHEN NOT same THEN cos_micro END) AS margin_micro
       |FROM top GROUP BY query_id ORDER BY query_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "s48_hard_negatives" -> (s48HardNegatives _),
-    "s47_matryoshka" -> (s47Matryoshka _),
-    "s01_ann_bruteforce" -> (s01AnnBruteForce _),
-    "s45_mutual_nn" -> (s45MutualNn _),
-    "s02_ann_lsh" -> (s02AnnLsh _),
-    "s03_ann_ivf" -> (s03AnnIvf _),
-    "s04_ann_ivf_nprobe" -> (s04AnnIvfProbe _),
-    "s07_kmeans" -> (s07Kmeans _),
-    "s09_kmeans_multi" -> (s09KmeansMulti _),
-    "s17_ann_filtered" -> (s17AnnFiltered _),
-    "s18_cluster_purity" -> (s18ClusterPurity _),
-    "s19_ann_recall" -> (s19AnnRecall _),
-    "s21_ann_range" -> (s21AnnRange _),
-    "s23_ivf_stats" -> (s23IvfStats _),
-    "s24_cluster_prototypes" -> (s24ClusterPrototypes _),
-    "s27_ann_binary" -> (s27AnnBinary _),
-    "s28_mmr_diversify" -> (s28MmrDiversify _),
-    "s29_recall_matrix" -> (s29RecallMatrix _),
-    "s30_sharded_search" -> (s30ShardedSearch _),
-    "s31_centroid_drift" -> (s31CentroidDrift _),
-    "s32_power_iteration" -> (s32PowerIteration _),
-    "s33_pca_residual_search" -> (s33PcaResidualSearch _),
-    "s37_hybrid_rrf" -> (s37HybridRrf _),
-    "d05_embed_neardup" -> (d05EmbedNearDup _),
-    "d07_embed_neardup_lsh" -> (d07EmbedNearDupLsh _),
-    "d14_semdedup" -> (d14SemDedup _),
-    "d16_lsh_recall" -> (d16LshRecall _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "s47_matryoshka" -> s47Oracle,
-    "s48_hard_negatives" -> s48Oracle,
-    "s01_ann_bruteforce" -> s01Oracle,
-    "s02_ann_lsh" -> s02Oracle,
-    "s03_ann_ivf" -> s03Oracle,
-    "s45_mutual_nn" -> s45Oracle,
-    "s04_ann_ivf_nprobe" -> s04Oracle,
-    "s07_kmeans" -> s07Oracle,
-    "s09_kmeans_multi" -> s09Oracle,
-    "s17_ann_filtered" -> s17Oracle,
-    "s18_cluster_purity" -> s18Oracle,
-    "s19_ann_recall" -> s19Oracle,
-    "s21_ann_range" -> s21Oracle,
-    "s23_ivf_stats" -> s23Oracle,
-    "s24_cluster_prototypes" -> s24Oracle,
-    "s27_ann_binary" -> s27Oracle,
-    "s28_mmr_diversify" -> s28Oracle,
-    "s29_recall_matrix" -> s29Oracle,
-    "s30_sharded_search" -> s30Oracle,
-    "s31_centroid_drift" -> s31Oracle,
-    "s32_power_iteration" -> s32Oracle,
-    "s33_pca_residual_search" -> s33Oracle,
-    "s37_hybrid_rrf" -> s37Oracle,
-    "d05_embed_neardup" -> d05Oracle,
-    "d07_embed_neardup_lsh" -> d07Oracle,
-    "d14_semdedup" -> d14Oracle,
-    "d16_lsh_recall" -> d16Oracle,
+  val gates: Seq[Gate] = Seq(
+    Gate("d05_embed_neardup", d05EmbedNearDup, d05Oracle),
+    Gate("d07_embed_neardup_lsh", d07EmbedNearDupLsh, d07Oracle),
+    Gate("d14_semdedup", d14SemDedup, d14Oracle),
+    Gate("d16_lsh_recall", d16LshRecall, d16Oracle),
+    Gate("s01_ann_bruteforce", s01AnnBruteForce, s01Oracle),
+    Gate("s02_ann_lsh", s02AnnLsh, s02Oracle),
+    Gate("s03_ann_ivf", s03AnnIvf, s03Oracle),
+    Gate("s04_ann_ivf_nprobe", s04AnnIvfProbe, s04Oracle),
+    Gate("s07_kmeans", s07Kmeans, s07Oracle),
+    Gate("s09_kmeans_multi", s09KmeansMulti, s09Oracle),
+    Gate("s17_ann_filtered", s17AnnFiltered, s17Oracle),
+    Gate("s18_cluster_purity", s18ClusterPurity, s18Oracle),
+    Gate("s19_ann_recall", s19AnnRecall, s19Oracle),
+    Gate("s21_ann_range", s21AnnRange, s21Oracle),
+    Gate("s23_ivf_stats", s23IvfStats, s23Oracle),
+    Gate("s24_cluster_prototypes", s24ClusterPrototypes, s24Oracle),
+    Gate("s27_ann_binary", s27AnnBinary, s27Oracle),
+    Gate("s28_mmr_diversify", s28MmrDiversify, s28Oracle),
+    Gate("s29_recall_matrix", s29RecallMatrix, s29Oracle),
+    Gate("s30_sharded_search", s30ShardedSearch, s30Oracle),
+    Gate("s31_centroid_drift", s31CentroidDrift, s31Oracle),
+    Gate("s32_power_iteration", s32PowerIteration, s32Oracle),
+    Gate("s33_pca_residual_search", s33PcaResidualSearch, s33Oracle),
+    Gate("s37_hybrid_rrf", s37HybridRrf, s37Oracle),
+    Gate("s45_mutual_nn", s45MutualNn, s45Oracle),
+    Gate("s47_matryoshka", s47Matryoshka, s47Oracle),
+    Gate("s48_hard_negatives", s48HardNegatives, s48Oracle),
   )
 }

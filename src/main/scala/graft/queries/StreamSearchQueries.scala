@@ -1328,43 +1328,32 @@ object StreamSearchQueries {
       |FROM mc m LEFT JOIN ec e ON e.mark = m.mark AND e.cluster = m.cluster
       |ORDER BY 1, 2""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "s58_pinned_index" -> (s58PinnedIndexServe _),
-    "s57_serve_through_retention" -> (s57ServeThroughRetention _),
-    "s55_lifecycle_serve" -> (s55LifecycleServe _),
-    "s56_sharded_wire_vectors" -> (s56ShardedWireVectors _),
-    "s54_wire_vector_ingest" -> (s54WireVectorIngest _),
-    "s53_graph_repair" -> (s53GraphRepair _),
-    "s52_stream_graph_delete" -> (s52StreamGraphDelete _),
-    "s51_stream_graph_maintain" -> (s51StreamGraphMaintain _),
-    "s42_stream_index_ingest" -> (s42StreamIndexIngest _),
-    "s43_stream_search" -> (s43StreamSearch _),
-    "s44_batch_search" -> (s44BatchSearch _),
-    "s46_cdc_index_sync" -> (s46CdcIndexSync _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    // the pinned release census == a from-scratch build at the mark's
-    // membership; the frontier == s51's full build
-    "s58_pinned_index" -> s58Oracle,
-    // the full lifecycle (restart + compaction + tombstones + repair)
-    // must serve exactly what a fresh survivors-only index would
-    "s55_lifecycle_serve" -> s55Oracle,
-    // retention purges the wire mid-lifecycle; the serve is unchanged
-    // because state is compacted parquet, never the wire
-    "s57_serve_through_retention" -> s55Oracle,
-    "s52_stream_graph_delete" -> s52Oracle, // s51's graph, survivor-filtered
+  val gates: Seq[Gate] = Seq(
+    // streamed ingest == batch append
+    Gate("s42_stream_index_ingest", s42StreamIndexIngest, PqQueries.s13Oracle, drain = true),
+    // drained query stream == one-shot batch search
+    Gate("s43_stream_search", s43StreamSearch, SimilarityQueries.s03Oracle, drain = true),
+    // shuffled-probe plan, identical rows
+    Gate("s44_batch_search", s44BatchSearch, SimilarityQueries.s03Oracle),
+    Gate("s46_cdc_index_sync", s46CdcIndexSync, s46Oracle),
+    Gate("s51_stream_graph_maintain", s51StreamGraphMaintain, s51Oracle, drain = true),
+    // s51's graph, survivor-filtered
+    Gate("s52_stream_graph_delete", s52StreamGraphDelete, s52Oracle, drain = true),
     // repair restores the as-if-rebuilt-on-survivors graph exactly
-    "s53_graph_repair" -> s53Oracle,
+    Gate("s53_graph_repair", s53GraphRepair, s53Oracle, drain = true),
     // wire-fed maintenance == parquet-fed maintenance (isolates the
     // binlog float encode/decode from the graph math)
+    Gate("s54_wire_vector_ingest", s54WireVectorIngest, s51Oracle, drain = true),
+    // the full lifecycle (restart + compaction + tombstones + repair)
+    // must serve exactly what a fresh survivors-only index would
+    Gate("s55_lifecycle_serve", s55LifecycleServe, s55Oracle, drain = true),
     // the sharded wire changes the TRANSPORT, not the maintained graph
-    "s56_sharded_wire_vectors" -> s51Oracle,
-    "s54_wire_vector_ingest" -> s51Oracle,
-    "s51_stream_graph_maintain" -> s51Oracle,
-    "s42_stream_index_ingest" -> PqQueries.s13Oracle, // streamed ingest == batch append
-    "s43_stream_search" -> SimilarityQueries.s03Oracle, // drained query stream == one-shot batch search
-    "s44_batch_search" -> SimilarityQueries.s03Oracle, // shuffled-probe plan, identical rows
-    "s46_cdc_index_sync" -> s46Oracle,
+    Gate("s56_sharded_wire_vectors", s56ShardedWireVectors, s51Oracle, drain = true),
+    // retention purges the wire mid-lifecycle; the serve is unchanged
+    // because state is compacted parquet, never the wire
+    Gate("s57_serve_through_retention", s57ServeThroughRetention, s55Oracle, drain = true),
+    // the pinned release census == a from-scratch build at the mark's
+    // membership; the frontier == s51's full build
+    Gate("s58_pinned_index", s58PinnedIndexServe, s58Oracle, drain = true),
   )
 }

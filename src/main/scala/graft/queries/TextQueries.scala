@@ -1908,81 +1908,42 @@ object TextQueries {
       |GROUP BY doc_id, lang
       |ORDER BY score_ppm ASC, doc_id LIMIT 20""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "t36_lm_score_filter" -> (t36LmScoreFilter _),
-    "t35_importance_weights" -> (t35ImportanceWeights _),
-    "t34_phrase_search" -> (t34PhraseSearch _),
-    "t33_bpe_encode" -> (t33BpeEncode _),
-    "t32_kneser_ney" -> (t32KneserNey _),
-    "t31_good_turing" -> (t31GoodTuring _),
-    "t30_stream_quality" -> (t30StreamQuality _),
-    "t01_token_stats" -> (t01TokenStats _),
-    "t29_bpe_merges" -> (t29BpeMerges _),
-    "t28_zipf_slope" -> (t28ZipfSlope _),
-    "t02_lang_id" -> (t02LangId _),
-    "t03_quality_score" -> (t03QualityScore _),
-    "t04_fingerprint" -> (t04Fingerprint _),
-    "t05_regex_tokens" -> (t05RegexTokens _),
-    "t06_hash_split" -> (t06HashSplit _),
-    "t07_sql_token_kernels" -> (t07SqlTokenKernels _),
-    "t08_mixture_sample" -> (t08MixtureSample _),
-    "t09_top_terms" -> (t09TopTerms _),
-    "t10_repetition" -> (t10Repetition _),
-    "t11_sequence_pack" -> (t11SequencePack _),
-    "t12_pii_redact" -> (t12PiiRedact _),
-    "t13_stratified_sample" -> (t13StratifiedSample _),
-    "t14_gopher_filters" -> (t14GopherFilters _),
-    "t15_familiarity_tiers" -> (t15FamiliarityTiers _),
-    "t16_grouped_split" -> (t16GroupedSplit _),
-    "t17_heavy_tokens" -> (t17HeavyTokens _),
-    "t18_vocab_stats" -> (t18VocabStats _),
-    "t19_template_detect" -> (t19TemplateDetect _),
-    "t20_packing_waste" -> (t20PackingWaste _),
-    "t21_syndication_matrix" -> (t21SyndicationMatrix _),
-    "t22_script_audit" -> (t22ScriptAudit _),
-    "t23_rag_chunks" -> (t23RagChunks _),
-    "t24_collocations" -> (t24Collocations _),
-    "t25_heaps_curve" -> (t25HeapsCurve _),
-    "t26_fertility" -> (t26Fertility _),
-    "t27_zipf_curve" -> (t27ZipfCurve _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "t34_phrase_search" -> t34Oracle,
-    "t35_importance_weights" -> t35Oracle,
-    "t36_lm_score_filter" -> t36Oracle,
-    "t33_bpe_encode" -> t33Oracle,
-    "t32_kneser_ney" -> t32Oracle,
-    "t01_token_stats" -> t01Oracle,
-    "t02_lang_id" -> t02Oracle,
-    "t03_quality_score" -> t03Oracle,
-    "t04_fingerprint" -> t04Oracle,
-    "t05_regex_tokens" -> t05Oracle,
-    "t06_hash_split" -> t06Oracle,
-    "t07_sql_token_kernels" -> t07Oracle,
-    "t08_mixture_sample" -> t08Oracle,
-    "t09_top_terms" -> t09Oracle,
-    "t10_repetition" -> t10Oracle,
-    "t11_sequence_pack" -> t11Oracle,
-    "t12_pii_redact" -> t12Oracle,
-    "t13_stratified_sample" -> t13Oracle,
-    "t14_gopher_filters" -> t14Oracle,
-    "t15_familiarity_tiers" -> t15Oracle,
-    "t16_grouped_split" -> t16Oracle,
-    "t17_heavy_tokens" -> t17Oracle,
-    "t18_vocab_stats" -> t18Oracle,
-    "t19_template_detect" -> t19Oracle,
-    "t20_packing_waste" -> t20Oracle,
-    "t21_syndication_matrix" -> t21Oracle,
-    "t22_script_audit" -> t22Oracle,
-    "t23_rag_chunks" -> t23Oracle,
-    "t24_collocations" -> t24Oracle,
-    "t25_heaps_curve" -> t25Oracle,
-    "t26_fertility" -> t26Oracle,
-    "t27_zipf_curve" -> t27Oracle,
-    "t28_zipf_slope" -> t28Oracle,
-    "t29_bpe_merges" -> t29Oracle,
-    "t30_stream_quality" -> t30Oracle,
-    "t31_good_turing" -> t31Oracle,
+  val gates: Seq[Gate] = Seq(
+    Gate("t01_token_stats", t01TokenStats, t01Oracle),
+    Gate("t02_lang_id", t02LangId, t02Oracle),
+    Gate("t03_quality_score", t03QualityScore, t03Oracle),
+    Gate("t04_fingerprint", t04Fingerprint, t04Oracle),
+    Gate("t05_regex_tokens", t05RegexTokens, t05Oracle),
+    Gate("t06_hash_split", t06HashSplit, t06Oracle),
+    Gate("t07_sql_token_kernels", t07SqlTokenKernels, t07Oracle),
+    Gate("t08_mixture_sample", t08MixtureSample, t08Oracle),
+    Gate("t09_top_terms", t09TopTerms, t09Oracle),
+    Gate("t10_repetition", t10Repetition, t10Oracle),
+    Gate("t11_sequence_pack", t11SequencePack, t11Oracle),
+    Gate("t12_pii_redact", t12PiiRedact, t12Oracle),
+    Gate("t13_stratified_sample", t13StratifiedSample, t13Oracle),
+    Gate("t14_gopher_filters", t14GopherFilters, t14Oracle),
+    Gate("t15_familiarity_tiers", t15FamiliarityTiers, t15Oracle),
+    Gate("t16_grouped_split", t16GroupedSplit, t16Oracle),
+    Gate("t17_heavy_tokens", t17HeavyTokens, t17Oracle),
+    Gate("t18_vocab_stats", t18VocabStats, t18Oracle),
+    Gate("t19_template_detect", t19TemplateDetect, t19Oracle),
+    Gate("t20_packing_waste", t20PackingWaste, t20Oracle),
+    Gate("t21_syndication_matrix", t21SyndicationMatrix, t21Oracle),
+    Gate("t22_script_audit", t22ScriptAudit, t22Oracle),
+    Gate("t23_rag_chunks", t23RagChunks, t23Oracle),
+    Gate("t24_collocations", t24Collocations, t24Oracle),
+    Gate("t25_heaps_curve", t25HeapsCurve, t25Oracle),
+    Gate("t26_fertility", t26Fertility, t26Oracle),
+    Gate("t27_zipf_curve", t27ZipfCurve, t27Oracle),
+    Gate("t28_zipf_slope", t28ZipfSlope, t28Oracle),
+    Gate("t29_bpe_merges", t29BpeMerges, t29Oracle),
+    Gate("t30_stream_quality", t30StreamQuality, t30Oracle, drain = true),
+    Gate("t31_good_turing", t31GoodTuring, t31Oracle),
+    Gate("t32_kneser_ney", t32KneserNey, t32Oracle),
+    Gate("t33_bpe_encode", t33BpeEncode, t33Oracle),
+    Gate("t34_phrase_search", t34PhraseSearch, t34Oracle),
+    Gate("t35_importance_weights", t35ImportanceWeights, t35Oracle),
+    Gate("t36_lm_score_filter", t36LmScoreFilter, t36Oracle),
   )
 }

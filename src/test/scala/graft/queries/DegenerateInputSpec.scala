@@ -1,8 +1,13 @@
 package graft.queries
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicReference
 
 import org.apache.spark.sql.AnalysisException
+import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryProgressEvent,
+  QueryStartedEvent, QueryTerminatedEvent}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
@@ -19,7 +24,9 @@ import graft.SparkTestSession
   *     family's "codebook must be non-empty" on an empty corpus — a PQ
   *     index over zero vectors is meaningless and must say so);
   *   - opaque executor-side crashes (NPE, ClassCast, ArrayIndexOOB —
-  *     including wrapped inside a SparkException) are failures.
+  *     including wrapped inside a SparkException) are failures;
+  *   - a gate that starts a streaming query is declared `drain = true`
+  *     in the registry (Bench's warmup skips it on that flag).
   *
   * Both fixture dirs carry the exact testdata schemas (copied from
   * sf0.001), so this is the driver's table contract at cardinality 0/1.
@@ -61,9 +68,22 @@ class DegenerateInputSpec extends AnyFunSuite with SparkTestSession {
     c
   }
 
+  /** Runs every gate on `dir`, and records which gates start a streaming
+    * query: `onQueryStarted` fires before `start()` returns, so the gate
+    * running at that moment is the one that started it. */
   private def sweep(dir: String, label: String): Unit = {
-    val failures = graft.SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
+    val running = new AtomicReference("")
+    val streamed = ConcurrentHashMap.newKeySet[String]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = streamed.add(running.get)
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    val gates = graft.SparkEntry.gates.sortBy(_.name)
+    val failures = try gates.flatMap {
+      case Gate(name, fn, _, _) =>
+        running.set(name)
         try { fn(spark, dir).collect(); None }
         catch {
           case e: Throwable =>
@@ -76,8 +96,13 @@ class DegenerateInputSpec extends AnyFunSuite with SparkTestSession {
             if (documented) None
             else Some(s"$name [$label]: ${root.getClass.getName}: ${root.getMessage}")
         }
-    }
+    } finally spark.streams.removeListener(listener)
     assert(failures.isEmpty, failures.mkString("\n"))
+    // one-directional: a drain gate may maintain a view without a stream
+    val undeclared = gates.filter(g => streamed.contains(g.name) && !g.drain).map(_.name)
+    assert(undeclared.isEmpty,
+      s"started a streaming query but not declared drain = true [$label]: " +
+        undeclared.mkString(", "))
   }
 
   test("every query survives an EMPTY copy of the testdata schema") {

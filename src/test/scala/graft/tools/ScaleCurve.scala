@@ -1,21 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only scale-curve runner: times the d-family (plus s/p headliners)
   * at sf0.01 and sf0.1 in one JVM (warmed, min of 2), printing the 10×
   * data-step time ratios recorded in docs/PLANS.md. Run with
   * `Test/runMain graft.tools.ScaleCurve`. */
 object ScaleCurve {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.files.minPartitionNum", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SparkEntry.session("32")
     spark.sparkContext.setLogLevel("ERROR")
 
     val names = sys.env.get("SCALE_ONLY") match {
