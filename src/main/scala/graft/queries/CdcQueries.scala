@@ -9,8 +9,8 @@ import graft.Tables
 import graft.cdc.{Comparator, Report}
 import graft.queries.CdcFixtures.{fixtureBase, ivmFixture, decodeIvmDelta,
   ivmReport}
-import graft.streaming.Drains.{drainBinlogFeed, drainIdempotentWithRedelivery,
-  drainWithRedelivery, streamDirs, tmpFixtureDir, withDrainPartitions}
+import graft.streaming.Drains.{drain, drainBinlog, drainIdempotentWithRedelivery,
+  drainToParquet, drainWithRedelivery, streamDirs, tmpFixtureDir}
 
 /** The CDC comparison engine (graft.cdc, SURVEY §2.5/§3.3) exercised through
   * the driver's oracle gate: both comparator inputs are synthesized
@@ -389,11 +389,10 @@ object CdcQueries {
       |      FROM orders ORDER BY o_orderkey LIMIT 200)
       |ORDER BY o_orderkey""".stripMargin
 
-  // The fixture/drain scaffolds (tmpFixtureDir, withDrainPartitions, the
-  // drain/redelivery family) live in graft.streaming.Drains since r13 —
-  // they serve six query families, so they belong to the streaming
-  // package, not to this (sibling) queries file. The imports at the top
-  // keep every historical call site below textually unchanged.
+  // The fixture/drain scaffolds (tmpFixtureDir, the drain core and its
+  // redelivery recorder) live in graft.streaming.Drains since r13 — they
+  // serve seven query families, so they belong to the streaming package,
+  // not to this (sibling) queries file.
 
   // cdc06 — S2 end-to-end under the oracle gate: the first 300 `events`
   // rows are rendered into the reference decoder's TEXT block format
@@ -873,7 +872,6 @@ object CdcQueries {
   // driver collect) and the returned frame is a lazy scan over it plus
   // the reconciliation join.
   def cdc12StreamDrain(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val root = tmpFixtureDir("graft_cdc12_", dir)
     val feed = new java.io.File(root, "feed").getPath
     val sink = new java.io.File(root, "sink").getPath
@@ -883,24 +881,13 @@ object CdcQueries {
     // measured lesson: −30% on its drain) — prepare the snapshot once
     val binlogStatic = binlogStaticLazy.localCheckpoint(true)
     avroRaw.write.mode("overwrite").json(feed)
-    withDrainPartitions(spark) {
-      val avroStream = Comparator.prepareAvro(
-        spark.readStream.schema(avroRaw.schema).json(feed))
-      val q = graft.streaming.StreamingComparator
-        .compareStream(avroStream, binlogStatic)
-        .select("binlog_file", "position", "status")
-        .writeStream.format("parquet")
-        .option("path", sink).option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    // explicit schema + pre-created dir: an EMPTY feed (a legal quiet
-    // period) runs zero micro-batches, so the sink may contain no parquet
-    // files — schema inference would throw where an empty relation (and
-    // BINLOG_ONLY-only counts from the reconciliation) is the right answer
-    new java.io.File(sink).mkdirs()
-    val drained = spark.read.schema(
-        "binlog_file STRING, position BIGINT, status STRING").parquet(sink)
+    val avroStream = Comparator.prepareAvro(
+      spark.readStream.schema(avroRaw.schema).json(feed))
+    // an empty feed drains to an empty relation, and the reconciliation
+    // then yields BINLOG_ONLY-only counts
+    val drained = drainToParquet(graft.streaming.StreamingComparator
+      .compareStream(avroStream, binlogStatic)
+      .select("binlog_file", "position", "status"), sink, ckpt)
     val binlogOnly = graft.streaming.StreamingComparator.reconcileBinlogOnly(
         binlogStatic,
         drained.select(col("binlog_file"), col("position").as("binlog_position")))
@@ -920,22 +907,13 @@ object CdcQueries {
   // partial-file splits, row_images decode) was previously visible only
   // to NativeStreamEndToEndSpec's synthetic vectors.
   def cdc13StreamBinlog(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val fixtureDir = writeCdc05Fixture(spark, dir)
     val root = tmpFixtureDir("graft_cdc13_", dir) // wipes stale ckpt too —
     root.mkdirs() //  a reused checkpoint would silently skip the re-decode
     val sink = new java.io.File(root, "sink").getPath
     val ckpt = new java.io.File(root, "ckpt").getPath
-    val q = cdc05Projection(spark.readStream.format("binlog").load(fixtureDir))
-      .writeStream.format("parquet")
-      .option("path", sink).option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    new java.io.File(sink).mkdirs() // empty feed → empty relation (cdc12 note)
-    spark.read.schema("o_orderkey BIGINT, flags_bit BIGINT, status_idx BIGINT, " +
-        "meta_json STRING, o_custkey BIGINT, total_dec STRING, o_date STRING, " +
-        "priority STRING")
-      .parquet(sink)
+    drainToParquet(cdc05Projection(
+        spark.readStream.format("binlog").load(fixtureDir)), sink, ckpt)
       .orderBy("o_orderkey")
   }
 
@@ -949,7 +927,6 @@ object CdcQueries {
   // arrival interleaving. The oracle is the distinct key set from the
   // shared `a` CTE. Drains to a parquet sink (no driver collect).
   def cdc14StreamDedup(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val root = tmpFixtureDir("graft_cdc14_", dir)
     root.mkdirs()
     val feed = new java.io.File(root, "feed"); feed.mkdirs()
@@ -972,23 +949,11 @@ object CdcQueries {
     keyed.coalesce(1).write.mode("overwrite").json(new java.io.File(feed, "copy2").getPath)
     val spark2 = spark
     import spark2.implicits._
-    withDrainPartitions(spark) {
-      val stream = spark.readStream.schema(keyed.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true").json(feed.getPath)
-        .as[graft.streaming.StreamingDedup.KeyedRecord]
-      val q = graft.streaming.StreamingDedup.firstOccurrence(stream)
-        .toDF()
-        .writeStream.format("parquet")
-        .option("path", sink).option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    new java.io.File(sink).mkdirs() // empty feed → empty relation (cdc12 note)
-    spark.read.schema(
-        "binlog_file STRING, binlog_position BIGINT, source_timestamp BIGINT")
-      .parquet(sink)
+    val stream = spark.readStream.schema(keyed.schema)
+      .option("maxFilesPerTrigger", 1)
+      .option("recursiveFileLookup", "true").json(feed.getPath)
+      .as[graft.streaming.StreamingDedup.KeyedRecord]
+    drainToParquet(graft.streaming.StreamingDedup.firstOccurrence(stream).toDF(), sink, ckpt)
       .orderBy("binlog_file", "binlog_position")
   }
 
@@ -1014,7 +979,6 @@ object CdcQueries {
   // Outputs are epoch-µs longs (integer gate discipline; timestamp
   // parquet annotations differ cross-engine).
   def cdc15StreamWindows(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val root = tmpFixtureDir("graft_cdc15_", dir)
     root.mkdirs()
     val feed = new java.io.File(root, "feed"); feed.mkdirs()
@@ -1040,27 +1004,16 @@ object CdcQueries {
     val aMax = if (aFiles.isEmpty) System.currentTimeMillis()
                else aFiles.map(_.lastModified()).max
     bDir.listFiles().foreach(f => f.setLastModified(aMax + 2000))
-    withDrainPartitions(spark) {
-      val stream = spark.readStream
-        .schema("event_id LONG, t_us LONG, event_type STRING")
-        .option("maxFilesPerTrigger", 1).option("recursiveFileLookup", "true")
-        .json(feed.getPath)
-        .withColumn("ts", timestamp_micros(col("t_us")))
-      val q = graft.streaming.EventWindows
+    val stream = spark.readStream
+      .schema("event_id LONG, t_us LONG, event_type STRING")
+      .option("maxFilesPerTrigger", 1).option("recursiveFileLookup", "true")
+      .json(feed.getPath)
+      .withColumn("ts", timestamp_micros(col("t_us")))
+    drainToParquet(graft.streaming.EventWindows
         .windowedCounts(stream, "ts", "event_type", "1 hour", "1 hour")
         .select(unix_micros(col("window_start")).as("window_start_us"),
           unix_micros(col("window_end")).as("window_end_us"),
-          col("event_type"), col("count").as("n_events"))
-        .writeStream.format("parquet")
-        .option("path", sink).option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    new java.io.File(sink).mkdirs() // empty feed → empty relation (cdc12 note)
-    spark.read.schema(
-        "window_start_us LONG, window_end_us LONG, event_type STRING, n_events LONG")
-      .parquet(sink)
+          col("event_type"), col("count").as("n_events")), sink, ckpt)
       .filter(col("event_type") =!= "__sentinel")
       .orderBy("window_start_us", "event_type")
   }
@@ -1144,7 +1097,6 @@ object CdcQueries {
   }
 
   def cdc16StreamParity(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val root = tmpFixtureDir("graft_cdc16_", dir)
     root.mkdirs()
     val sink = new java.io.File(root, "sink").getPath
@@ -1154,26 +1106,17 @@ object CdcQueries {
     val (binlogStatic, avroRaw) = sidesRaw(spark, dir)
     val (bFeed, aFeed) = parityFeeds(spark, dir, root, binlogRaw, avroRaw)
 
-    withDrainPartitions(spark) {
-      val binlogStream = Comparator.normalizeBinlog(
-        spark.readStream.schema(binlogRaw.schema)
-          .option("maxFilesPerTrigger", 1)
-          .option("recursiveFileLookup", "true").json(bFeed.getPath))
-      val avroStream = Comparator.prepareAvro(
-        spark.readStream.schema(avroRaw.schema)
-          .option("maxFilesPerTrigger", 1)
-          .option("recursiveFileLookup", "true").json(aFeed.getPath))
-      val (main, _) = graft.streaming.StreamingComparator.compareStreamsWithParity(
-        avroStream, binlogStream, maxSkew = "10 minutes", watermarkDelay = "1 second")
-      val q = main.select("binlog_file", "position", "status")
-        .writeStream.format("parquet")
-        .option("path", sink).option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    new java.io.File(sink).mkdirs() // empty feed → empty relation (cdc12 note)
-    val drained = spark.read.schema(
-        "binlog_file STRING, position BIGINT, status STRING").parquet(sink)
+    val binlogStream = Comparator.normalizeBinlog(
+      spark.readStream.schema(binlogRaw.schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("recursiveFileLookup", "true").json(bFeed.getPath))
+    val avroStream = Comparator.prepareAvro(
+      spark.readStream.schema(avroRaw.schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("recursiveFileLookup", "true").json(aFeed.getPath))
+    val (main, _) = graft.streaming.StreamingComparator.compareStreamsWithParity(
+      avroStream, binlogStream, maxSkew = "10 minutes", watermarkDelay = "1 second")
+    val drained = drainToParquet(main.select("binlog_file", "position", "status"), sink, ckpt)
       .filter(col("position") < 700000000L)
 
     // terminal batch steps over the same snapshot (the documented contract)
@@ -1203,7 +1146,6 @@ object CdcQueries {
   // crash/redeploy cycle every production streaming job lives through —
   // cdc12 gates one uninterrupted drain, cdc18 gates the restart seam.
   def cdc18RestartParity(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val root = tmpFixtureDir("graft_cdc18_", dir)
     val stage = new java.io.File(root, "stage")
     val feed = new java.io.File(root, "feed")
@@ -1221,23 +1163,14 @@ object CdcQueries {
       java.nio.file.Files.copy(f.toPath,
         new java.io.File(feed, s"${tag}_${f.getName}").toPath)
     }
-    def drain(): Unit = withDrainPartitions(spark) {
-      val avroStream = Comparator.prepareAvro(
-        spark.readStream.schema(avroRaw.schema).json(feed.getPath))
-      val q = graft.streaming.StreamingComparator
-        .compareStream(avroStream, binlogStatic)
-        .select("binlog_file", "position", "status")
-        .writeStream.format("parquet")
-        .option("path", sink).option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
+    def drain(): DataFrame = drainToParquet(graft.streaming.StreamingComparator
+      .compareStream(Comparator.prepareAvro(
+        spark.readStream.schema(avroRaw.schema).json(feed.getPath)), binlogStatic)
+      .select("binlog_file", "position", "status"), sink, ckpt)
     val (first, second) = parts.splitAt(parts.length / 2)
     deliver(first, "h1"); drain() // installment one, then the query stops
-    deliver(second, "h2"); drain() // restart from the same checkpoint
-    new java.io.File(sink).mkdirs() // empty feed → empty relation (cdc12 note)
-    val drained = spark.read.schema(
-        "binlog_file STRING, position BIGINT, status STRING").parquet(sink)
+    deliver(second, "h2") // restart from the same checkpoint
+    val drained = drain()
     val binlogOnly = graft.streaming.StreamingComparator.reconcileBinlogOnly(
         binlogStatic,
         drained.select(col("binlog_file"), col("position").as("binlog_position")))
@@ -1938,7 +1871,6 @@ object CdcQueries {
   // as (users × open sessions); the watermark is what bounds it — the
   // property this drain exists to pin.
   def cdc34StreamSessions(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val root = tmpFixtureDir("graft_cdc34_", dir)
     root.mkdirs()
     val feed = new java.io.File(root, "feed"); feed.mkdirs()
@@ -1958,30 +1890,19 @@ object CdcQueries {
     val aMax = if (aFiles.isEmpty) System.currentTimeMillis()
                else aFiles.map(_.lastModified()).max
     bDir.listFiles().foreach(f => f.setLastModified(aMax + 2000))
-    withDrainPartitions(spark) {
-      val stream = spark.readStream
-        .schema("user_id LONG, t_us LONG")
-        .option("maxFilesPerTrigger", 1).option("recursiveFileLookup", "true")
-        .json(feed.getPath)
-        .withColumn("ts", timestamp_micros(col("t_us")))
-        .withWatermark("ts", "1 minute")
-      val q = stream
+    val stream = spark.readStream
+      .schema("user_id LONG, t_us LONG")
+      .option("maxFilesPerTrigger", 1).option("recursiveFileLookup", "true")
+      .json(feed.getPath)
+      .withColumn("ts", timestamp_micros(col("t_us")))
+      .withWatermark("ts", "1 minute")
+    drainToParquet(stream
         .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
         .agg(count(lit(1)).as("n_events"))
         .select(col("user_id"),
           unix_micros(col("session_window.start")).as("session_start_us"),
           unix_micros(col("session_window.end")).as("session_end_us"),
-          col("n_events"))
-        .writeStream.format("parquet")
-        .option("path", sink).option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    new java.io.File(sink).mkdirs() // empty feed → empty relation (cdc12 note)
-    spark.read.schema(
-        "user_id LONG, session_start_us LONG, session_end_us LONG, n_events LONG")
-      .parquet(sink)
+          col("n_events")), sink, ckpt)
       .filter(col("user_id") =!= -1L)
       .orderBy("user_id", "session_start_us")
   }
@@ -2369,26 +2290,20 @@ object CdcQueries {
   // batch planning, the partitioned sink commit protocol, or partition-
   // column round-tripping (tbl leaves the data files and returns via
   // directory discovery). Empty-feed guard: pre-created dir + explicit
-  // schema (the cdc12 lesson — zero micro-batches leave no files, and
-  // inference would throw where an empty snapshot is correct).
+  // schema, as in Drains.drainToParquet (zero micro-batches leave no
+  // files, and inference would throw where an empty snapshot is correct).
   def cdc39StreamRoute(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val root = tmpFixtureDir("graft_cdc39_", dir)
     val feedDir = new java.io.File(root, "feed").getPath
     val sink = new java.io.File(root, "sink").getPath
     val ckpt = new java.io.File(root, "ckpt").getPath
     val feed = cdc17Feed(spark, dir)
     feed.write.mode("overwrite").json(feedDir)
-    withDrainPartitions(spark) {
-      val s = spark.readStream.schema(feed.schema).json(feedDir)
-        .withColumn("tbl", when(col("user_id") % 2 === 0, "users_even")
-          .otherwise("users_odd"))
-      val q = s.writeStream.format("parquet")
-        .partitionBy("tbl")
-        .option("path", sink).option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
+    val s = spark.readStream.schema(feed.schema).json(feedDir)
+      .withColumn("tbl", when(col("user_id") % 2 === 0, "users_even")
+        .otherwise("users_odd"))
+    drain(spark, s.writeStream.format("parquet").partitionBy("tbl")
+      .option("path", sink), ckpt)
     new java.io.File(sink).mkdirs()
     val drained = spark.read
       .schema("user_id BIGINT, src_ms BIGINT, ct STRING, pos BIGINT, tbl STRING")
@@ -2507,41 +2422,31 @@ object CdcQueries {
   // assignment's table — state ≡ window, the same equivalence cdc20
   // gates for the apply fold.
   def cdc41StreamDdlEpoch(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val fixtureDir = writeCdc37Fixture(spark, dir)
     val root = tmpFixtureDir("graft_cdc41_", dir)
     root.mkdirs()
     val sink = new java.io.File(root, "sink").getPath
     val ckpt = new java.io.File(root, "ckpt").getPath
     import spark.implicits._
-    withDrainPartitions(spark) {
-      val ev = spark.readStream.format("binlog").load(fixtureDir)
-        .filter(col("event_type") === "WriteRowsEventV2" ||
-          (col("event_type") === "Query" &&
-            col("query").startsWith("ALTER TABLE ")))
-        .select(
-          // row events carry the TableMap name; ALTERs name their target
-          // in the statement (their `table` field is the decoder's
-          // placeholder, not the DDL target) — one key space for both
-          when(col("event_type") === "Query",
-            regexp_extract(col("query"), "^ALTER TABLE (\\w+)", 1))
-            .otherwise(col("table")).as("tbl"),
-          col("file_seq"), col("event_index"),
-          (col("event_type") === "Query").as("is_alter"),
-          coalesce(size(col("row_images")).cast("long"), lit(0L)).as("n_rows"),
-          coalesce(expr("""aggregate(transform(row_images,
-            |  im -> cast(element_at(im, 1) as bigint)), 0L, (a, x) -> a + x)""".stripMargin),
-            lit(0L)).as("key_sum"))
-        .as[graft.streaming.SchemaEpochs.TableEvent]
-      val q = graft.streaming.SchemaEpochs.assign(ev)
-        .writeStream.format("parquet")
-        .option("path", sink).option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    new java.io.File(sink).mkdirs() // empty feed → empty relation (cdc12 note)
-    spark.read.schema("tbl STRING, epoch BIGINT, n_rows BIGINT, key_sum BIGINT")
-      .parquet(sink)
+    val ev = spark.readStream.format("binlog").load(fixtureDir)
+      .filter(col("event_type") === "WriteRowsEventV2" ||
+        (col("event_type") === "Query" &&
+          col("query").startsWith("ALTER TABLE ")))
+      .select(
+        // row events carry the TableMap name; ALTERs name their target
+        // in the statement (their `table` field is the decoder's
+        // placeholder, not the DDL target) — one key space for both
+        when(col("event_type") === "Query",
+          regexp_extract(col("query"), "^ALTER TABLE (\\w+)", 1))
+          .otherwise(col("table")).as("tbl"),
+        col("file_seq"), col("event_index"),
+        (col("event_type") === "Query").as("is_alter"),
+        coalesce(size(col("row_images")).cast("long"), lit(0L)).as("n_rows"),
+        coalesce(expr("""aggregate(transform(row_images,
+          |  im -> cast(element_at(im, 1) as bigint)), 0L, (a, x) -> a + x)""".stripMargin),
+          lit(0L)).as("key_sum"))
+      .as[graft.streaming.SchemaEpochs.TableEvent]
+    drainToParquet(graft.streaming.SchemaEpochs.assign(ev).toDF(), sink, ckpt)
       .filter(col("tbl") === "orders")
       .groupBy("epoch")
       .agg(count(lit(1)).as("n_events"), sum(col("n_rows")).as("n_rows"),
@@ -2562,7 +2467,6 @@ object CdcQueries {
   // same equivalence cdc41 gates for schema epochs and cdc20 for the
   // apply fold.
   def cdc42StreamScd2(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     import spark.implicits._
     val root = tmpFixtureDir("graft_cdc42_", dir)
     root.mkdirs()
@@ -2588,23 +2492,12 @@ object CdcQueries {
     feed.filter(col("src_ms") > cut).coalesce(1)
       .write.mode("append").parquet(feedDir.getPath)
     pinMtimes(1000000060000L, first)
-    withDrainPartitions(spark) {
-      val changes = spark.readStream
-        .schema("user_id BIGINT, src_ms BIGINT, ct STRING, pos BIGINT")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feedDir.getPath)
-        .as[graft.streaming.StreamingScd2.Change]
-      val q = graft.streaming.StreamingScd2.build(changes)
-        .writeStream.format("parquet")
-        .option("path", sink).option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    new java.io.File(sink).mkdirs() // empty feed → empty relation (cdc12 note)
-    spark.read
-      .schema("user_id BIGINT, version_pos BIGINT, change_type STRING," +
-        " valid_from_ms BIGINT, valid_to_ms BIGINT")
-      .parquet(sink)
+    val changes = spark.readStream
+      .schema("user_id BIGINT, src_ms BIGINT, ct STRING, pos BIGINT")
+      .option("maxFilesPerTrigger", 1)
+      .parquet(feedDir.getPath)
+      .as[graft.streaming.StreamingScd2.Change]
+    drainToParquet(graft.streaming.StreamingScd2.build(changes).toDF(), sink, ckpt)
       .groupBy("user_id", "version_pos")
       .agg(max_by(
         struct(col("change_type"), col("valid_from_ms"), col("valid_to_ms")),
@@ -2732,7 +2625,7 @@ object CdcQueries {
       .write.mode("overwrite").parquet(state)
     val bPrime = fx.bBase.unionByName(fx.bDelta)
       .localCheckpoint(true) // B′ = B ∪ ΔB: built once, probed per batch
-    drainBinlogFeed(spark, feed, ckpt) { (batch, _) =>
+    drainBinlog(spark, Seq(feed), ckpt) { (batch, _) =>
       graft.streaming.ViewMaintenance.appendBatch(
         fx.partials(decodeIvmDelta(batch), bPrime), state)
     }
@@ -2892,7 +2785,7 @@ object CdcQueries {
     graft.ingest.BinlogSink.writeKeyedStrings(
       base.select(col("user_id"), col("event_type"))
         .repartition(4, col("user_id")), feed)
-    drainBinlogFeed(spark, feed, ckpt) { (batch, _) =>
+    drainBinlog(spark, Seq(feed), ckpt) { (batch, _) =>
       graft.streaming.ViewMaintenance.appendBatch(
         graft.ops.Hll.withRegRho(
             batch.filter(col("event_type") === "WriteRowsEventV2")
@@ -2962,7 +2855,6 @@ object CdcQueries {
   // (micro-batch planning, the chained-join plan, the drain) from the
   // band machinery (cdc46) and the tolerance semantics (cdc04).
   def cdc50StreamBandTolerance(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val tols = Seq(0L, 50L, 100L, 250L, 1000L)
     val root = tmpFixtureDir("graft_cdc50_", dir)
     val feed = new java.io.File(root, "feed").getPath
@@ -2974,25 +2866,15 @@ object CdcQueries {
     // (a static subtree is re-run per micro-batch unless materialized)
     val binlogStatic = binlogStaticLazy.localCheckpoint(true)
     avroRaw.write.mode("overwrite").json(feed)
-    withDrainPartitions(spark) {
-      val avroStream = Comparator.prepareAvro(
-        spark.readStream.schema(avroRaw.schema).json(feed))
-      // the whole sweep in ONE stream-static plan: one main join + one
-      // coarsest-band leg + a stateless per-tolerance explode (the
-      // nesting argument on Comparator.ToleranceBand)
-      val q = graft.streaming.StreamingComparator
-        .compareStreamBandSweep(avroStream, binlogStatic, tols)
-        .select(col("tolerance_ms"), col("binlog_file"),
-          col("position"), col("status"))
-        .writeStream.format("parquet")
-        .option("path", sink).option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    new java.io.File(sink).mkdirs() // empty feed → empty relation (cdc12 note)
-    val drained = spark.read.schema("tolerance_ms BIGINT, " +
-        "binlog_file STRING, position BIGINT, status STRING")
-      .parquet(sink)
+    val avroStream = Comparator.prepareAvro(
+      spark.readStream.schema(avroRaw.schema).json(feed))
+    // the whole sweep in ONE stream-static plan: one main join + one
+    // coarsest-band leg + a stateless per-tolerance explode (the
+    // nesting argument on Comparator.ToleranceBand)
+    val drained = drainToParquet(graft.streaming.StreamingComparator
+      .compareStreamBandSweep(avroStream, binlogStatic, tols)
+      .select(col("tolerance_ms"), col("binlog_file"),
+        col("position"), col("status")), sink, ckpt)
     val binlogOnly = graft.streaming.StreamingComparator.reconcileBinlogOnly(
         binlogStatic,
         drained.filter(col("tolerance_ms") === 0L)
@@ -3026,7 +2908,6 @@ object CdcQueries {
   // delivery from the band machinery (cdc46), the streaming band
   // serving (cdc50), and the tolerance semantics (cdc04).
   def cdc52StreamStreamBand(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     import graft.cdc.Schemas
     val tols = Seq(0L, 50L, 100L, 250L, 1000L)
     val root = tmpFixtureDir("graft_cdc52_", dir)
@@ -3037,32 +2918,22 @@ object CdcQueries {
     val (binlogStaticLazy, avroRaw) = sidesRaw(spark, dir)
     val binlogStatic = binlogStaticLazy.localCheckpoint(true) // cdc12 note
     val (bFeed, aFeed) = parityFeeds(spark, dir, root, binlogRaw, avroRaw)
-    withDrainPartitions(spark) {
-      val binlogStream = Comparator.normalizeBinlog(
-        spark.readStream.schema(binlogRaw.schema)
-          .option("maxFilesPerTrigger", 1)
-          .option("recursiveFileLookup", "true").json(bFeed.getPath))
-      val avroStream = Comparator.prepareAvro(
-        spark.readStream.schema(avroRaw.schema)
-          .option("maxFilesPerTrigger", 1)
-          .option("recursiveFileLookup", "true").json(aFeed.getPath))
-      // the E8 parse-error class carries no event time — split off
-      // pre-join; its pairs resolve at the terminal presence check
-      val (timed, _) = graft.streaming.StreamingComparator
-        .partitionUnparseableBinlog(binlogStream)
-      val q = graft.streaming.StreamingComparator
+    val binlogStream = Comparator.normalizeBinlog(
+      spark.readStream.schema(binlogRaw.schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("recursiveFileLookup", "true").json(bFeed.getPath))
+    val avroStream = Comparator.prepareAvro(
+      spark.readStream.schema(avroRaw.schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("recursiveFileLookup", "true").json(aFeed.getPath))
+    // the E8 parse-error class carries no event time — split off
+    // pre-join; its pairs resolve at the terminal presence check
+    val (timed, _) = graft.streaming.StreamingComparator
+      .partitionUnparseableBinlog(binlogStream)
+    val drained = drainToParquet(graft.streaming.StreamingComparator
         .compareStreamsBandSweep(avroStream, timed, tols,
           maxSkew = "10 minutes", watermarkDelay = "1 second")
-        .select("tolerance_ms", "binlog_file", "position", "status")
-        .writeStream.format("parquet")
-        .option("path", sink).option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    new java.io.File(sink).mkdirs() // empty feed → empty relation (cdc12 note)
-    val drained = spark.read.schema(
-        "tolerance_ms BIGINT, binlog_file STRING, position BIGINT, status STRING")
-      .parquet(sink)
+        .select("tolerance_ms", "binlog_file", "position", "status"), sink, ckpt)
       .filter(col("position") < 700000000L)
     // terminal (a): no in-band partner BUT the key exists in the binlog
     // snapshot ⇒ MISMATCH_TS (out-of-band / parse-error / Go-zero, one

@@ -1732,36 +1732,29 @@ object DedupQueries {
     // id-RANGE partitions → the sink's file numbering IS ingestion order
     graft.ingest.BinlogSink.writeKeyedStrings(
       docs.repartitionByRange(4, col("doc_id")), feed) // VARCHAR bound derived from the data (r12 advice)
-    val q = spark.readStream.format("binlog")
-      .option("maxFilesPerTrigger", 1)
-      .load(feed)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val d = batch.filter(col("event_type") === "WriteRowsEventV2")
-          .select(explode(col("row_images")).as("img"))
-          .select(element_at(col("img"), 1).cast("long").as("doc_id"),
-            element_at(col("img"), 2).as("text"))
-          .withColumn("toks", split(col("text"), " "))
-        val banded = graft.ops.Dedup.minHashBands(
-            graft.ops.Dedup.withShingles(d, "toks"), "doc_id")
-          .localCheckpoint(true) // probed twice + appended
-        val idx = ViewMaintenance.readState(spark, state, "band STRING")
-        val hitIdx = banded.join(idx, Seq("band"), "left_semi")
-          .select("doc_id")
-        val intraMin = banded.groupBy("band").agg(min(col("doc_id")).as("mn"))
-        val hitIntra = banded.join(intraMin, Seq("band"))
-          .filter(col("doc_id") > col("mn")).select("doc_id")
-        // disjoint state dirs; the flags plan's index read froze its
-        // listing at readState and appends never delete — overlap (§2.6)
-        graft.streaming.Drains.inParallel(
-          () => ViewMaintenance.appendBatch(
-            hitIdx.unionByName(hitIntra).distinct(), flags),
-          () => ViewMaintenance.appendBatch(
-            banded.select("band").distinct(), state))
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    graft.streaming.Drains.drainBinlog(spark, Seq(feed), ckpt) { (batch, _) =>
+      val d = batch.filter(col("event_type") === "WriteRowsEventV2")
+        .select(explode(col("row_images")).as("img"))
+        .select(element_at(col("img"), 1).cast("long").as("doc_id"),
+          element_at(col("img"), 2).as("text"))
+        .withColumn("toks", split(col("text"), " "))
+      val banded = graft.ops.Dedup.minHashBands(
+          graft.ops.Dedup.withShingles(d, "toks"), "doc_id")
+        .localCheckpoint(true) // probed twice + appended
+      val idx = ViewMaintenance.readState(spark, state, "band STRING")
+      val hitIdx = banded.join(idx, Seq("band"), "left_semi")
+        .select("doc_id")
+      val intraMin = banded.groupBy("band").agg(min(col("doc_id")).as("mn"))
+      val hitIntra = banded.join(intraMin, Seq("band"))
+        .filter(col("doc_id") > col("mn")).select("doc_id")
+      // disjoint state dirs; the flags plan's index read froze its
+      // listing at readState and appends never delete — overlap (§2.6)
+      graft.streaming.Drains.inParallel(
+        () => ViewMaintenance.appendBatch(
+          hitIdx.unionByName(hitIntra).distinct(), flags),
+        () => ViewMaintenance.appendBatch(
+          banded.select("band").distinct(), state))
+    }
     // distinct at read: the flags table is a SET — under a redelivered
     // batch the same doc_id would be appended twice, and a raw read would
     // duplicate rows through the report join below (the set-union
@@ -1846,30 +1839,23 @@ object DedupQueries {
       state)
     graft.ingest.BinlogSink.writeKeyedStrings(
       docs.repartitionByRange(4, col("doc_id")), feed) // VARCHAR bound derived from the data (r12 advice)
-    val q = spark.readStream.format("binlog")
-      .option("maxFilesPerTrigger", 1)
-      .load(feed)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val bits = ViewMaintenance.readState(spark, state, "bit BIGINT")
-          .distinct()
-        val d = batch.filter(col("event_type") === "WriteRowsEventV2")
-          .select(explode(col("row_images")).as("img"))
-          .select(element_at(col("img"), 1).cast("long").as("doc_id"),
-            md5(element_at(col("img"), 2)).as("key"))
-          .withColumn("b0", bit(0, col("key")))
-          .withColumn("b1", bit(1, col("key")))
-        ViewMaintenance.appendBatch(
-          d.join(broadcast(bits.select(col("bit").as("b0"))),
-              Seq("b0"), "left_semi")
-            .join(broadcast(bits.select(col("bit").as("b1"))),
-              Seq("b1"), "left_semi")
-            .select("doc_id"),
-          flags)
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    graft.streaming.Drains.drainBinlog(spark, Seq(feed), ckpt) { (batch, _) =>
+      val bits = ViewMaintenance.readState(spark, state, "bit BIGINT")
+        .distinct()
+      val d = batch.filter(col("event_type") === "WriteRowsEventV2")
+        .select(explode(col("row_images")).as("img"))
+        .select(element_at(col("img"), 1).cast("long").as("doc_id"),
+          md5(element_at(col("img"), 2)).as("key"))
+        .withColumn("b0", bit(0, col("key")))
+        .withColumn("b1", bit(1, col("key")))
+      ViewMaintenance.appendBatch(
+        d.join(broadcast(bits.select(col("bit").as("b0"))),
+            Seq("b0"), "left_semi")
+          .join(broadcast(bits.select(col("bit").as("b1"))),
+            Seq("b1"), "left_semi")
+          .select("doc_id"),
+        flags)
+    }
     // d15's report columns over the DRAINED flag set (in_set = gate truth)
     val keyed = docs.select(col("doc_id"), md5(col("text")).as("key"))
     val benchKeys = keyed.filter(col("doc_id") % 37 === 0)

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.queries.CdcFixtures.{boundedClass, boundedClasses, fixtureBase, ivmFixture,
   decodeIvmDelta, ivmReport, TailFeedWriter}
-import graft.streaming.Drains.{drainBinlogFeed, drainBinlogTail,
-  drainWithRedelivery, streamDirs, tmpFixtureDir}
+import graft.streaming.Drains.{drain, drainBinlog, drainWithRedelivery, streamDirs,
+  tmpFixtureDir, Redelivery}
 
 /** The maintained-state LIFECYCLE family (split out of CdcQueries in r14
   * — the r13 verdict's mechanics task): the gates a long-running CDC
@@ -629,18 +629,16 @@ object LifecycleQueries {
       }
     // two AvailableNow runs on ONE checkpoint, the append in between;
     // batch 0's file(s) recorded for the injected redelivery
-    val batch0Files = scala.collection.mutable.ArrayBuffer.empty[String]
+    val batch0 = new Redelivery(spark, Seq(feed.getPath))
     def applyBatch(batch: DataFrame, id: Long): Unit = {
-      if (id == 0L && batch0Files.isEmpty)
-        batch0Files ++= batch.select(col("binlog_file")).distinct()
-          .collect().map(_.getString(0))
+      batch0.record(batch, id)
       ViewMaintenance.applyIdempotent(
         batch.filter(col("event_type") === "WriteRowsEventV2")
           .select(explode(col("row_images")).as("img"))
           .select(element_at(col("img"), 1).cast("long").as("k")),
         state, id)
     }
-    def drainTail(): Unit = drainBinlogTail(spark, feed.getPath, ckpt)(applyBatch)
+    def drainTail(): Unit = drainBinlog(spark, Seq(feed.getPath), ckpt, tail = true)(applyBatch)
     drainTail()
     appendTail.foreach { tail =>
       java.nio.file.Files.write(activeFile.toPath, tail,
@@ -649,9 +647,7 @@ object LifecycleQueries {
     drainTail()
     // injected crash-after-commit redelivery of batch 0 (a whole closed
     // file — byte-range batches replay through the checkpoint instead)
-    if (batch0Files.nonEmpty)
-      applyBatch(spark.read.format("binlog")
-        .load(batch0Files.toSeq.map(f => s"${feed.getPath}/$f"): _*), 0L)
+    batch0.replay()(applyBatch)
     ViewMaintenance.readState(spark, state, "k BIGINT, batch_id BIGINT")
       .withColumn("src", when(col("k") % 131 === 0, "txn_a")
         .when(col("k") % 131 === 1, "txn_b")
@@ -735,12 +731,10 @@ object LifecycleQueries {
         if (te.nonEmpty) w.txn(f6, 805L, 8005L, te, commit = false)
         Some((all5.slice(cut, all5.length), f6.bytes))
       }
-    val batch0Files = scala.collection.mutable.ArrayBuffer.empty[String]
+    val batch0 = new Redelivery(spark, Seq(feed.getPath))
     var applied = 0L
     def applyBatch(batch: DataFrame, id: Long): Unit = {
-      if (id == 0L && batch0Files.isEmpty)
-        batch0Files ++= batch.select(col("binlog_file")).distinct()
-          .collect().map(_.getString(0))
+      batch0.record(batch, id)
       applied += 1
       ViewMaintenance.applyIdempotent(
         batch.filter(col("event_type") === "WriteRowsEventV2")
@@ -748,7 +742,7 @@ object LifecycleQueries {
           .select(element_at(col("img"), 1).cast("long").as("k")),
         state, id)
     }
-    def drainTail(): Unit = drainBinlogTail(spark, feed.getPath, ckpt)(applyBatch)
+    def drainTail(): Unit = drainBinlog(spark, Seq(feed.getPath), ckpt, tail = true)(applyBatch)
     drainTail()
     rotation.foreach { case (rest500, bytes501) =>
       java.nio.file.Files.write(file500.toPath, rest500,
@@ -764,9 +758,7 @@ object LifecycleQueries {
     require(applied == beforeIdle,
       s"idle tail drain must run no batches, ran ${applied - beforeIdle}")
     // injected crash-after-commit redelivery of batch 0
-    if (batch0Files.nonEmpty)
-      applyBatch(spark.read.format("binlog")
-        .load(batch0Files.toSeq.map(f => s"${feed.getPath}/$f"): _*), 0L)
+    batch0.replay()(applyBatch)
     ViewMaintenance.readState(spark, state, "k BIGINT, batch_id BIGINT")
       .withColumn("src", when(col("k") % 131 === 0, "txn_a")
         .when(col("k") % 131 === 1, "txn_b")
@@ -876,8 +868,8 @@ object LifecycleQueries {
     // the recovered fleet-wide marks: None before the failover restart,
     // then a FROZEN broadcast (sid, exec_gno) table read from the state
     var marks: Option[DataFrame] = None
-    val batch0 = new graft.streaming.Drains.UnionBatch0(
-      Seq(feedA.getPath, feedB.getPath))
+    val feeds = Seq(feedA.getPath, feedB.getPath)
+    val batch0 = new Redelivery(spark, feeds)
     def applyBatch(batch: DataFrame, id: Long): Unit = {
       batch0.record(batch, id)
       val rows = batch.filter(col("event_type") === "WriteRowsEventV2")
@@ -906,8 +898,7 @@ object LifecycleQueries {
             .groupBy("sid").agg(max(col("gno")).as("gno")),
           gtidState, id))
     }
-    def drain(): Unit = graft.streaming.Drains.drainBinlogTailUnion(
-      spark, Seq(feedA.getPath, feedB.getPath), ckpt)(applyBatch)
+    def drain(): Unit = drainBinlog(spark, feeds, ckpt, tail = true)(applyBatch)
     // run 1: both servers healthy; the process then STOPS (marks still
     // live only in the state)
     drain()
@@ -926,8 +917,7 @@ object LifecycleQueries {
     drain()
     // injected batch-0 redelivery (bulk, pre-failover): the file_seq
     // guard keeps the recovered marks away from it — bit-identical
-    if (batch0.nonEmpty)
-      applyBatch(spark.read.format("binlog").load(batch0.paths: _*), 0L)
+    batch0.replay()(applyBatch)
     ViewMaintenance.readState(spark, state, "k BIGINT, batch_id BIGINT")
       .withColumn("shard", (col("k") % 2).cast("long"))
       .withColumn("src", when(col("k") % 131 === 0, "txn_p")
@@ -1070,14 +1060,12 @@ object LifecycleQueries {
       .withColumn("__sid", substring_index(col("gtid_next"), ":", 1))
       .join(broadcast(executed), col("__sid") === col("sid"), "left")
       .filter(col("exec_gno").isNull || gno > col("exec_gno"))
-    val batch0Files = scala.collection.mutable.ArrayBuffer.empty[String]
-    val failoverFiles = scala.collection.mutable.ArrayBuffer.empty[String]
+    val redelivery = new Redelivery(spark, Seq(feed.getPath))
+    var failoverFiles = Seq.empty[String]
     var failoverId = -1L
     var failoverEnd = (0L, 0L) // the batch's recorded end position
     def applyBatch(batch: DataFrame, id: Long): Unit = {
-      if (id == 0L && batch0Files.isEmpty)
-        batch0Files ++= batch.select(col("binlog_file")).distinct()
-          .collect().map(_.getString(0))
+      redelivery.record(batch, id)
       if (failoverFiles.isEmpty) {
         // one bounded aggregate: does this batch carry replica rows,
         // and where does it END? (the replay below reconstructs the
@@ -1088,8 +1076,7 @@ object LifecycleQueries {
           max(when(col("file_seq") >= failoverSeq, 1).otherwise(0)),
           max(struct(col("file_seq"), col("event_index")))).head()
         if (!f.isNullAt(0) && f.getInt(0) == 1) {
-          failoverFiles ++= batch.select(col("binlog_file")).distinct()
-            .collect().map(_.getString(0))
+          failoverFiles = redelivery.files(batch)
           failoverId = id
           val e = f.getStruct(1)
           failoverEnd = (e.getLong(0), e.getLong(1))
@@ -1101,7 +1088,7 @@ object LifecycleQueries {
           .select(element_at(col("img"), 1).cast("long").as("k")),
         state, id)
     }
-    def drainTail(): Unit = drainBinlogTail(spark, feed.getPath, ckpt)(applyBatch)
+    def drainTail(): Unit = drainBinlog(spark, Seq(feed.getPath), ckpt, tail = true)(applyBatch)
     drainTail()
     // the NEGATIVE proof: replica rows the GTID set discards but the
     // snapshot-time positional mark would ADMIT — the double-count a
@@ -1126,16 +1113,12 @@ object LifecycleQueries {
     }
     // injected replays: batch 0 (entirely covered by the set — an empty
     // overwrite) and the failover batch (partially discarded)
-    if (batch0Files.nonEmpty)
-      applyBatch(spark.read.format("binlog")
-        .load(batch0Files.toSeq.map(f => s"${feed.getPath}/$f"): _*), 0L)
-    if (failoverFiles.nonEmpty)
-      applyBatch(spark.read.format("binlog")
-        .load(failoverFiles.toSeq.map(f => s"${feed.getPath}/$f"): _*)
-        .filter(col("file_seq") < failoverEnd._1 ||
-          (col("file_seq") === failoverEnd._1 &&
-            col("event_index") <= failoverEnd._2)),
-        failoverId)
+    redelivery.replay()(applyBatch)
+    redelivery.replay(failoverFiles, failoverId) { (batch, id) =>
+      applyBatch(batch.filter(col("file_seq") < failoverEnd._1 ||
+        (col("file_seq") === failoverEnd._1 &&
+          col("event_index") <= failoverEnd._2)), id)
+    }
     ViewMaintenance.readState(spark, state, "k BIGINT, batch_id BIGINT")
       .withColumn("src", when(col("k") % 131 === 0, "txn_p")
         .when(col("k") % 131 === 1, "txn_q")
@@ -1221,8 +1204,8 @@ object LifecycleQueries {
       java.nio.file.Files.write(activeA.toPath, i1) }
     craftedB.foreach { case (i1, _, _) =>
       java.nio.file.Files.write(activeB.toPath, i1) }
-    val batch0 = new graft.streaming.Drains.UnionBatch0(
-      Seq(feedA.getPath, feedB.getPath))
+    val feeds = Seq(feedA.getPath, feedB.getPath)
+    val batch0 = new Redelivery(spark, feeds)
     def applyBatch(batch: DataFrame, id: Long): Unit = {
       batch0.record(batch, id)
       ViewMaintenance.applyIdempotent(
@@ -1231,13 +1214,12 @@ object LifecycleQueries {
           .select(element_at(col("img"), 1).cast("long").as("k")),
         state, id)
     }
-    def drain(): Unit = graft.streaming.Drains.drainBinlogPurgeTailUnion(
-      spark, Seq(feedA.getPath, feedB.getPath), ckpt)(applyBatch)
+    def drain(): Unit =
+      drainBinlog(spark, feeds, ckpt, tail = true, purgeSafe = true)(applyBatch)
     drain()
     // crash-after-commit redelivery happens BEFORE retention purges;
     // recorded names route back to their shard (disjoint numbering)
-    if (batch0.nonEmpty)
-      applyBatch(spark.read.format("binlog").load(batch0.paths: _*), 0L)
+    batch0.replay()(applyBatch)
     // retention on BOTH shards: every consumed closed file vanishes —
     // each listing shrinks to just its active file, which shifts every
     // index under any index-keyed offset on either source
@@ -1308,7 +1290,6 @@ object LifecycleQueries {
   // stream-breaking event.
   def cdc71TailPurge(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.ViewMaintenance
-    import graft.streaming.Drains.drainBinlogPurgeTail
     val root = tmpFixtureDir("graft_cdc71_", dir)
     root.mkdirs()
     val feed = new java.io.File(root, "feed")
@@ -1343,22 +1324,18 @@ object LifecycleQueries {
         java.nio.file.Files.write(activeFile.toPath, all.slice(0, cut))
         Some(all.slice(cut, all.length))
       }
-    val batch0Files = scala.collection.mutable.ArrayBuffer.empty[String]
+    val batch0 = new Redelivery(spark, Seq(feed.getPath))
     def applyBatch(batch: DataFrame, id: Long): Unit = {
-      if (id == 0L && batch0Files.isEmpty)
-        batch0Files ++= batch.select(col("binlog_file")).distinct()
-          .collect().map(_.getString(0))
+      batch0.record(batch, id)
       ViewMaintenance.applyIdempotent(
         batch.filter(col("event_type") === "WriteRowsEventV2")
           .select(explode(col("row_images")).as("img"))
           .select(element_at(col("img"), 1).cast("long").as("k")),
         state, id)
     }
-    drainBinlogPurgeTail(spark, feed.getPath, ckpt)(applyBatch)
+    drainBinlog(spark, Seq(feed.getPath), ckpt, tail = true, purgeSafe = true)(applyBatch)
     // crash-after-commit redelivery happens BEFORE retention purges
-    if (batch0Files.nonEmpty)
-      applyBatch(spark.read.format("binlog")
-        .load(batch0Files.toSeq.map(f => s"${feed.getPath}/$f"): _*), 0L)
+    batch0.replay()(applyBatch)
     // retention: every consumed closed file vanishes; only the active
     // file survives — every index-based offset just shifted
     Option(feed.listFiles()).getOrElse(Array.empty[java.io.File])
@@ -1374,7 +1351,7 @@ object LifecycleQueries {
       java.nio.file.Files.write(activeFile.toPath, tail,
         java.nio.file.StandardOpenOption.APPEND)
     }
-    drainBinlogPurgeTail(spark, feed.getPath, ckpt)(applyBatch)
+    drainBinlog(spark, Seq(feed.getPath), ckpt, tail = true, purgeSafe = true)(applyBatch)
     ViewMaintenance.readState(spark, state, "k BIGINT, batch_id BIGINT")
       .withColumn("src", when(col("k") % 131 === 0, "txn_a")
         .when(col("k") % 131 === 1, "txn_b")
@@ -1476,19 +1453,17 @@ object LifecycleQueries {
       java.nio.file.Files.write(activeA.toPath, i1) }
     craftedB.foreach { case (i1, _) =>
       java.nio.file.Files.write(activeB.toPath, i1) }
-    val batch0Files = scala.collection.mutable.ArrayBuffer.empty[String]
+    val feeds = Seq(feedA.getPath, feedB.getPath)
+    val batch0 = new Redelivery(spark, feeds)
     def applyBatch(batch: DataFrame, id: Long): Unit = {
-      if (id == 0L && batch0Files.isEmpty)
-        batch0Files ++= batch.select(col("binlog_file")).distinct()
-          .collect().map(_.getString(0))
+      batch0.record(batch, id)
       ViewMaintenance.applyIdempotent(
         batch.filter(col("event_type") === "WriteRowsEventV2")
           .select(explode(col("row_images")).as("img"))
           .select(element_at(col("img"), 1).cast("long").as("k")),
         state, id)
     }
-    def drain(): Unit = graft.streaming.Drains.drainBinlogTailUnion(
-      spark, Seq(feedA.getPath, feedB.getPath), ckpt)(applyBatch)
+    def drain(): Unit = drainBinlog(spark, feeds, ckpt, tail = true)(applyBatch)
     drain()
     // BOTH shards grow between the runs
     craftedA.foreach { case (_, i2) =>
@@ -1500,13 +1475,7 @@ object LifecycleQueries {
     drain()
     // injected batch-0 redelivery: recorded names route back to their
     // shard's directory (disjoint numbering makes this unambiguous)
-    if (batch0Files.nonEmpty) {
-      val paths = batch0Files.toSeq.map { f =>
-        val inA = new java.io.File(feedA, f)
-        if (inA.isFile) inA.getPath else new java.io.File(feedB, f).getPath
-      }
-      applyBatch(spark.read.format("binlog").load(paths: _*), 0L)
-    }
+    batch0.replay()(applyBatch)
     ViewMaintenance.readState(spark, state, "k BIGINT, batch_id BIGINT")
       .withColumn("shard", (col("k") % 2).cast("long"))
       .withColumn("src", when(col("k") % 131 === 0, "live_committed")
@@ -1585,11 +1554,9 @@ object LifecycleQueries {
           else cleanCut).toInt
         Some((all.slice(0, cut), all.slice(cut, all.length)))
       }
-    val batch0Files = scala.collection.mutable.ArrayBuffer.empty[String]
+    val batch0 = new Redelivery(spark, Seq(feed.getPath))
     def applyBatch(batch: DataFrame, id: Long): Unit = {
-      if (id == 0L && batch0Files.isEmpty)
-        batch0Files ++= batch.select(col("binlog_file")).distinct()
-          .collect().map(_.getString(0))
+      batch0.record(batch, id)
       ViewMaintenance.applyIdempotent(
         batch.filter(col("event_type") === "WriteRowsEventV2")
           .select(explode(col("row_images")).as("img"))
@@ -1597,12 +1564,12 @@ object LifecycleQueries {
         state, id)
     }
     // run 1: the EXISTING deployment — count-based source, closed bulk
-    drainBinlogFeed(spark, feed.getPath, ckpt)(applyBatch)
+    drainBinlog(spark, Seq(feed.getPath), ckpt)(applyBatch)
     // the active file appears; the deployment upgrades IN PLACE
     crafted.foreach { case (inst1, _) =>
       java.nio.file.Files.write(activeFile.toPath, inst1)
     }
-    def drainTail(): Unit = drainBinlogTail(spark, feed.getPath, ckpt)(applyBatch)
+    def drainTail(): Unit = drainBinlog(spark, Seq(feed.getPath), ckpt, tail = true)(applyBatch)
     drainTail()
     crafted.foreach { case (_, inst2) =>
       java.nio.file.Files.write(activeFile.toPath, inst2,
@@ -1612,9 +1579,7 @@ object LifecycleQueries {
     // injected crash-after-commit redelivery of batch 0 (a bulk file
     // consumed under the OLD source — the upgrade must not disturb its
     // partition's absorbability)
-    if (batch0Files.nonEmpty)
-      applyBatch(spark.read.format("binlog")
-        .load(batch0Files.toSeq.map(f => s"${feed.getPath}/$f"): _*), 0L)
+    batch0.replay()(applyBatch)
     ViewMaintenance.readState(spark, state, "k BIGINT, batch_id BIGINT")
       .withColumn("src", when(col("k") % 131 === 0, "txn_a")
         .when(col("k") % 131 === 1, "txn_b").otherwise("bulk"))
@@ -1698,7 +1663,7 @@ object LifecycleQueries {
           .select(explode(col("row_images")).as("img"))
           .select(element_at(col("img"), 1).cast("long").as("k")),
         state, id)
-    def drainTail(): Unit = drainBinlogTail(spark, feed.getPath, ckpt)(applyBatch)
+    def drainTail(): Unit = drainBinlog(spark, Seq(feed.getPath), ckpt, tail = true)(applyBatch)
     drainTail()
     appendTail.foreach { tail =>
       java.nio.file.Files.write(activeFile.toPath, tail,
@@ -1817,11 +1782,9 @@ object LifecycleQueries {
     // the recovered failover mark: read at run-2 start from the SET
     // STATE, not from any in-memory variable (None before failover)
     var recoveredMark: Option[Long] = None
-    val batch0Files = scala.collection.mutable.ArrayBuffer.empty[String]
+    val batch0 = new Redelivery(spark, Seq(feed.getPath))
     def applyBatch(batch: DataFrame, id: Long): Unit = {
-      if (id == 0L && batch0Files.isEmpty)
-        batch0Files ++= batch.select(col("binlog_file")).distinct()
-          .collect().map(_.getString(0))
+      batch0.record(batch, id)
       val rows = batch.filter(col("event_type") === "WriteRowsEventV2")
         .localCheckpoint(true)
       val reServed = recoveredMark match {
@@ -1843,7 +1806,7 @@ object LifecycleQueries {
           .groupBy("sid").agg(max(col("gno")).as("gno")),
         gtidState, id)
     }
-    def drainTail(): Unit = drainBinlogTail(spark, feed.getPath, ckpt)(applyBatch)
+    def drainTail(): Unit = drainBinlog(spark, Seq(feed.getPath), ckpt, tail = true)(applyBatch)
     // run 1: server A; the process then STOPS (nothing survives in
     // memory — recoveredMark is still None)
     drainTail()
@@ -1860,9 +1823,7 @@ object LifecycleQueries {
     recoveredMark = if (markRow.isNullAt(0)) None else Some(markRow.getLong(0))
     drainTail()
     // injected batch-0 redelivery: both states must absorb it
-    if (batch0Files.nonEmpty)
-      applyBatch(spark.read.format("binlog")
-        .load(batch0Files.toSeq.map(f => s"${feed.getPath}/$f"): _*), 0L)
+    batch0.replay()(applyBatch)
     ViewMaintenance.readState(spark, state, "k BIGINT, batch_id BIGINT")
       .withColumn("src", when(col("k") % 131 === 0, "txn_p")
         .when(col("k") % 131 === 1, "txn_q")
@@ -1956,11 +1917,9 @@ object LifecycleQueries {
     var executedG = -1L
     var frozen = false
     val gno = substring_index(col("gtid_next"), ":", -1).cast("long")
-    val batch0Files = scala.collection.mutable.ArrayBuffer.empty[String]
+    val batch0 = new Redelivery(spark, Seq(feed.getPath))
     def applyBatch(batch: DataFrame, id: Long): Unit = {
-      if (id == 0L && batch0Files.isEmpty)
-        batch0Files ++= batch.select(col("binlog_file")).distinct()
-          .collect().map(_.getString(0))
+      batch0.record(batch, id)
       val rows = batch.filter(col("event_type") === "WriteRowsEventV2")
         .localCheckpoint(true) // one decode: the set agg + the apply
       if (!frozen) {
@@ -1977,7 +1936,7 @@ object LifecycleQueries {
           .select(element_at(col("img"), 1).cast("long").as("k")),
         state, id)
     }
-    def drainTail(): Unit = drainBinlogTail(spark, feed.getPath, ckpt)(applyBatch)
+    def drainTail(): Unit = drainBinlog(spark, Seq(feed.getPath), ckpt, tail = true)(applyBatch)
     drainTail()
     frozen = true // failover: record the executed set ONCE
     crafted.foreach { case (_, bytesB) =>
@@ -1987,9 +1946,7 @@ object LifecycleQueries {
     drainTail()
     // injected crash-after-commit redelivery of batch 0 (pre-failover —
     // the discard filter must leave it untouched, bit-for-bit)
-    if (batch0Files.nonEmpty)
-      applyBatch(spark.read.format("binlog")
-        .load(batch0Files.toSeq.map(f => s"${feed.getPath}/$f"): _*), 0L)
+    batch0.replay()(applyBatch)
     ViewMaintenance.readState(spark, state, "k BIGINT, batch_id BIGINT")
       .withColumn("src", when(col("k") % 131 === 0, "txn_p")
         .when(col("k") % 131 === 1, "txn_q")
@@ -2128,7 +2085,8 @@ object LifecycleQueries {
     // the cutover drain: subscribe from the BEGINNING, discard at-or-
     // before-mark POSITIONALLY, land the rest exactly-once; record the
     // straddling batch for the second injected replay
-    val straddleFiles = scala.collection.mutable.ArrayBuffer.empty[String]
+    val straddle = new Redelivery(spark, Seq(feed))
+    var straddleFiles = Seq.empty[String]
     var straddleId = -1L
     def applyBatch(batch: DataFrame, id: Long): Unit = {
       val r = rows(batch).localCheckpoint(true) // one decode, two probes
@@ -2138,8 +2096,7 @@ object LifecycleQueries {
           max(when(atOrBeforeMark, 1).otherwise(0)).as("pre"),
           max(when(atOrBeforeMark, 0).otherwise(1)).as("post")).head()
         if (!flags.isNullAt(0) && flags.getInt(0) == 1 && flags.getInt(1) == 1) {
-          straddleFiles ++= batch.select(col("binlog_file")).distinct()
-            .collect().map(_.getString(0))
+          straddleFiles = straddle.files(batch)
           straddleId = id
         }
       }
@@ -2149,9 +2106,7 @@ object LifecycleQueries {
     drainWithRedelivery(spark, feed, ckpt)(applyBatch)
     // injected replay (b): the straddling cutover batch (replay (a),
     // batch 0 — entirely pre-mark — is the scaffold's)
-    if (straddleFiles.nonEmpty)
-      applyBatch(spark.read.format("binlog")
-        .load(straddleFiles.toSeq.map(f => s"$feed/$f"): _*), straddleId)
+    straddle.replay(straddleFiles, straddleId)(applyBatch)
     ViewMaintenance.readState(spark, state, "k BIGINT, v STRING, batch_id BIGINT")
       .groupBy((col("k") % 10).as("grp"))
       .agg(count(lit(1)).as("n_rows"), sum(col("k")).as("k_sum"),
@@ -2253,28 +2208,25 @@ object LifecycleQueries {
       }
     // the cutover drain: subscribe from the beginning, discard pre-mark
     // positionally; record batch 0 and the straddling batch for replays
-    val batch0Files = scala.collection.mutable.ArrayBuffer.empty[String]
-    val straddleFiles = scala.collection.mutable.ArrayBuffer.empty[String]
+    val redelivery = new Redelivery(spark, Seq(feed.getPath))
+    var straddleFiles = Seq.empty[String]
     var straddleId = -1L
     def applyBatch(batch: DataFrame, id: Long): Unit = {
-      if (id == 0L && batch0Files.isEmpty)
-        batch0Files ++= batch.select(col("binlog_file")).distinct()
-          .collect().map(_.getString(0))
+      redelivery.record(batch, id)
       val r = rows(batch).localCheckpoint(true) // one decode, two probes
       if (straddleFiles.isEmpty) {
         val flags = r.agg(
           max(when(atOrBeforeMark, 1).otherwise(0)).as("pre"),
           max(when(atOrBeforeMark, 0).otherwise(1)).as("post")).head()
         if (!flags.isNullAt(0) && flags.getInt(0) == 1 && flags.getInt(1) == 1) {
-          straddleFiles ++= batch.select(col("binlog_file")).distinct()
-            .collect().map(_.getString(0))
+          straddleFiles = redelivery.files(batch)
           straddleId = id
         }
       }
       ViewMaintenance.applyIdempotent(
         r.filter(!atOrBeforeMark).select("k", "v"), state, id)
     }
-    def drainTail(): Unit = drainBinlogTail(spark, feed.getPath, ckpt)(applyBatch)
+    def drainTail(): Unit = drainBinlog(spark, Seq(feed.getPath), ckpt, tail = true)(applyBatch)
     drainTail()
     appendTail.foreach { tail =>
       java.nio.file.Files.write(activeFile.toPath, tail,
@@ -2285,13 +2237,8 @@ object LifecycleQueries {
     // and the straddling cutover batch (both whole closed files — the
     // tail source completes closed files whole, so the file-name replay
     // reproduces the batch exactly)
-    if (batch0Files.nonEmpty)
-      applyBatch(spark.read.format("binlog")
-        .load(batch0Files.toSeq.map(f => s"${feed.getPath}/$f"): _*), 0L)
-    if (straddleFiles.nonEmpty)
-      applyBatch(spark.read.format("binlog")
-        .load(straddleFiles.toSeq.map(f => s"${feed.getPath}/$f"): _*),
-        straddleId)
+    redelivery.replay()(applyBatch)
+    redelivery.replay(straddleFiles, straddleId)(applyBatch)
     ViewMaintenance.readState(spark, state, "k BIGINT, v STRING, batch_id BIGINT")
       .groupBy((col("k") % 10).as("grp"))
       .agg(count(lit(1)).as("n_rows"), sum(col("k")).as("k_sum"),
@@ -2582,11 +2529,9 @@ object LifecycleQueries {
       }
     val schemaA = "k BIGINT, v STRING, batch_id BIGINT"
     val schemaB = "k BIGINT, x BIGINT, batch_id BIGINT"
-    val batch0Files = scala.collection.mutable.ArrayBuffer.empty[String]
+    val batch0 = new Redelivery(spark, Seq(feed.getPath))
     def applyBatch(batch: DataFrame, id: Long): Unit = {
-      if (id == 0L && batch0Files.isEmpty)
-        batch0Files ++= batch.select(col("binlog_file")).distinct()
-          .collect().map(_.getString(0))
+      batch0.record(batch, id)
       // ONE pass over the batch, N routed exactly-once writes, then the
       // per-state maintenance loop (cdc61's discipline)
       val b = batch.filter(col("event_type") === "WriteRowsEventV2")
@@ -2607,7 +2552,7 @@ object LifecycleQueries {
       ViewMaintenance.maybeCompact(spark, stateB, schemaB,
         maxLive = 1, keepLast = 0)(df => df)
     }
-    def drainTail(): Unit = drainBinlogTail(spark, feed.getPath, ckpt)(applyBatch)
+    def drainTail(): Unit = drainBinlog(spark, Seq(feed.getPath), ckpt, tail = true)(applyBatch)
     drainTail()
     appendTail.foreach { tail =>
       java.nio.file.Files.write(activeFile.toPath, tail,
@@ -2616,9 +2561,7 @@ object LifecycleQueries {
     drainTail()
     // injected crash-after-commit redelivery of batch 0 (ta's closed
     // file): ta absorbs it as a covered ghost, tb as an empty no-op
-    if (batch0Files.nonEmpty)
-      applyBatch(spark.read.format("binlog")
-        .load(batch0Files.toSeq.map(f => s"${feed.getPath}/$f"): _*), 0L)
+    batch0.replay()(applyBatch)
     val servedA = ViewMaintenance.readState(spark, stateA, schemaA)
       .withColumn("tbl", lit("ta"))
       .groupBy("tbl")
@@ -2774,7 +2717,7 @@ object LifecycleQueries {
     }: _*)
     ViewMaintenance.applyIdempotent(fx.partials(fx.aBase, fx.bBase), state, -1L)
     ViewMaintenance.applyIdempotent(fx.partials(fx.aBase, fx.bDelta), state, -2L)
-    drainBinlogFeed(spark, feed.getPath, ckpt) { (batch, id) =>
+    drainBinlog(spark, Seq(feed.getPath), ckpt) { (batch, id) =>
       ViewMaintenance.applyIdempotent(
         fx.partials(decodeIvmDelta(batch), bPrime), state, id)
       if (id == 1L) // first base: seeds + batch 0 folded, coverage 0
@@ -2861,7 +2804,8 @@ object LifecycleQueries {
         }
       }: _*)
     val sch = "k BIGINT, v STRING, batch_id BIGINT"
-    val lastFiles = scala.collection.mutable.ArrayBuffer.empty[String]
+    val redelivery = new Redelivery(spark, Seq(feed.getPath))
+    var lastFiles = Seq.empty[String]
     var maxBatchId = -1L
     def applyBatch(batch: DataFrame, id: Long, publish: Boolean): Unit = {
       maxBatchId = math.max(maxBatchId, id)
@@ -2875,25 +2819,15 @@ object LifecycleQueries {
           b.filter(col("tbl") === t).drop("tbl"), s"$group/tables/$t", id)
       }
       if (publish) ViewMaintenance.publishMark(spark, group, id)
-      if (id == 1L) {
-        lastFiles.clear()
-        lastFiles ++= batch.select(col("binlog_file")).distinct()
-          .collect().map(_.getString(0))
-      }
+      if (id == 1L) lastFiles = redelivery.files(batch)
     }
-    graft.streaming.Drains.withDrainPartitions(spark) {
-      val q = spark.readStream.format("binlog")
-        .option("maxFilesPerTrigger", 2)
-        .load(feed.getPath)
-        .writeStream
-        // the crash window: batch 1's states land, its publish does NOT
-        .foreachBatch((b: DataFrame, id: Long) =>
-          applyBatch(b, id, publish = id < 1L))
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    drain(spark, spark.readStream.format("binlog")
+      .option("maxFilesPerTrigger", 2)
+      .load(feed.getPath)
+      .writeStream
+      // the crash window: batch 1's states land, its publish does NOT
+      .foreachBatch((b: DataFrame, id: Long) =>
+        applyBatch(b, id, publish = id < 1L)), ckpt)
     def readGroup(stage: String, consistent: Boolean): DataFrame = {
       // ONE mark resolution per group read — resolving inside the
       // per-table loop would re-open the torn window under a concurrent
@@ -2934,9 +2868,7 @@ object LifecycleQueries {
         s"2 files each, saw max batch id $maxBatchId with " +
         s"${lastFiles.length} file(s) in batch 1 — the per-trigger " +
         "pairing this gate is built on no longer holds")
-    applyBatch(spark.read.format("binlog")
-      .load(lastFiles.toSeq.map(f => s"${feed.getPath}/$f"): _*), 1L,
-      publish = true)
+    redelivery.replay(lastFiles, 1L)(applyBatch(_, _, publish = true))
     before.unionByName(readGroup("consistent_after", consistent = true))
       .orderBy("stage", "tbl")
   }

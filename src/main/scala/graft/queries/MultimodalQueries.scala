@@ -504,7 +504,6 @@ object MultimodalQueries {
   // mismatch isolates the streaming delivery and the per-batch decode
   // boundaries, not the manifest arithmetic.
   def m10StreamManifest(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     import graft.streaming.ViewMaintenance
     val root = graft.streaming.Drains.tmpFixtureDir("graft_m10_", dir)
     root.mkdirs()
@@ -516,46 +515,39 @@ object MultimodalQueries {
     graft.ingest.BinlogSink.writeKeyedStrings(
       Tables.documents(spark, dir).select(col("doc_id"), col("text"))
         .repartitionByRange(4, col("doc_id")), feed) // VARCHAR bound derived from the data (r12 advice)
-    val q = spark.readStream.format("binlog")
-      .option("maxFilesPerTrigger", 1)
-      .load(feed)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val docs = batch.filter(col("event_type") === "WriteRowsEventV2")
-          .select(explode(col("row_images")).as("img"))
-          .select(element_at(col("img"), 1).cast("long").as("doc_id"),
-            element_at(col("img"), 2).as("text"),
-            lit("video").as("kind"), lit("video/fake").as("mime"))
-        val media = MediaPipeline.fromBinary(
-          docs.withColumn("payload", encode(col("text"), "UTF-8")),
-          "doc_id", "payload", "kind", "mime")
-        // the two decode materializations are independent, and the three
-        // state appends land in disjoint dirs — two parallel rounds
-        // instead of five sequential driver actions per batch (§2.6)
-        var feats: DataFrame = null
-        var frames: DataFrame = null
-        graft.streaming.Drains.inParallel(
-          () => feats = MediaPipeline.decodeFeatures(media, batchSize = 64)
-            .toDF()
-            .localCheckpoint(true), // counts + hash set share one decode
-          () => frames = MediaPipeline.sampleFrames(media, n = 4).toDF()
-            .select(expr(
-              "CAST(conv(substr(md5(frame), 1, 8), 16, 10) AS BIGINT)").as("h"))
-            .localCheckpoint(true))
-        graft.streaming.Drains.inParallel(
-          () => ViewMaintenance.appendBatch(feats.agg(
-            count(lit(1)).as("n_media"),
-            coalesce(sum(col("byte_len")), lit(0L)).as("total_bytes"),
-            lit(0L).as("n_frames"))
-            .unionByName(frames.agg(lit(0L).as("n_media"),
-              lit(0L).as("total_bytes"), count(lit(1)).as("n_frames"))), counts),
-          () => ViewMaintenance.appendBatch(
-            feats.select(col("content_hash")).distinct(), ph),
-          () => ViewMaintenance.appendBatch(frames.select(col("h")).distinct(), fh))
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    graft.streaming.Drains.drainBinlog(spark, Seq(feed), ckpt) { (batch, _) =>
+      val docs = batch.filter(col("event_type") === "WriteRowsEventV2")
+        .select(explode(col("row_images")).as("img"))
+        .select(element_at(col("img"), 1).cast("long").as("doc_id"),
+          element_at(col("img"), 2).as("text"),
+          lit("video").as("kind"), lit("video/fake").as("mime"))
+      val media = MediaPipeline.fromBinary(
+        docs.withColumn("payload", encode(col("text"), "UTF-8")),
+        "doc_id", "payload", "kind", "mime")
+      // the two decode materializations are independent, and the three
+      // state appends land in disjoint dirs — two parallel rounds
+      // instead of five sequential driver actions per batch (§2.6)
+      var feats: DataFrame = null
+      var frames: DataFrame = null
+      graft.streaming.Drains.inParallel(
+        () => feats = MediaPipeline.decodeFeatures(media, batchSize = 64)
+          .toDF()
+          .localCheckpoint(true), // counts + hash set share one decode
+        () => frames = MediaPipeline.sampleFrames(media, n = 4).toDF()
+          .select(expr(
+            "CAST(conv(substr(md5(frame), 1, 8), 16, 10) AS BIGINT)").as("h"))
+          .localCheckpoint(true))
+      graft.streaming.Drains.inParallel(
+        () => ViewMaintenance.appendBatch(feats.agg(
+          count(lit(1)).as("n_media"),
+          coalesce(sum(col("byte_len")), lit(0L)).as("total_bytes"),
+          lit(0L).as("n_frames"))
+          .unionByName(frames.agg(lit(0L).as("n_media"),
+            lit(0L).as("total_bytes"), count(lit(1)).as("n_frames"))), counts),
+        () => ViewMaintenance.appendBatch(
+          feats.select(col("content_hash")).distinct(), ph),
+        () => ViewMaintenance.appendBatch(frames.select(col("h")).distinct(), fh))
+    }
     val sums = ViewMaintenance.readState(spark, counts,
         "n_media BIGINT, total_bytes BIGINT, n_frames BIGINT")
       .agg(sum(col("n_media")).as("n_media"),

@@ -137,7 +137,6 @@ object StreamSearchQueries {
   // frozen); the search plan is s13's, untouched by how the index rows
   // arrived.
   def s42StreamIndexIngest(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     import graft.functions.PqFunctions
     val m = 8
     val root = graft.streaming.Drains.tmpFixtureDir("graft_s42_", dir)
@@ -162,18 +161,15 @@ object StreamSearchQueries {
       .write.mode("append").parquet(feed)
     delta.filter(col("vec_id") % 20 =!= 0).coalesce(1)
       .write.mode("append").parquet(feed)
-    val sq = spark.readStream
+    graft.streaming.Drains.drain(spark, spark.readStream
       .schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
       .option("maxFilesPerTrigger", 1)
       .parquet(feed)
       .writeStream
       .foreachBatch { (b: DataFrame, _: Long) =>
         encode(b).write.mode("append").parquet(sink)
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    sq.awaitTermination()
-    new java.io.File(sink).mkdirs() // empty feed → empty delta (cdc12 note)
+      }, ckpt)
+    new java.io.File(sink).mkdirs() // empty feed → empty delta (see Drains.drainToParquet)
     val deltaCodes = spark.read
       .schema("vec_id BIGINT, cluster BIGINT, codes ARRAY<BIGINT>")
       .parquet(sink)
@@ -203,7 +199,6 @@ object StreamSearchQueries {
   // keyed equi-join against the parquet index scan, per-query top-5
   // window over ≤ cluster-sized candidates.
   def s43StreamSearch(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val root = graft.streaming.Drains.tmpFixtureDir("graft_s43_", dir)
     root.mkdirs()
     val feed = new java.io.File(root, "feed").getPath
@@ -225,7 +220,7 @@ object StreamSearchQueries {
       .write.mode("append").parquet(feed)
     q0.filter(col("vec_id") % 100 =!= 0).coalesce(1)
       .write.mode("append").parquet(feed)
-    val sq = spark.readStream
+    graft.streaming.Drains.drain(spark, spark.readStream
       .schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
       .option("maxFilesPerTrigger", 1)
       .parquet(feed)
@@ -243,11 +238,8 @@ object StreamSearchQueries {
           .select(col("query_id"), col("qc").as("cluster"),
             col("rank"), col("vec_id").as("neighbor_id"))
           .write.mode("append").parquet(sink)
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    sq.awaitTermination()
-    new java.io.File(sink).mkdirs() // empty feed → empty result (cdc12 note)
+      }, ckpt)
+    new java.io.File(sink).mkdirs() // empty feed → empty result (see Drains.drainToParquet)
     spark.read
       .schema("query_id BIGINT, cluster INT, rank INT, neighbor_id BIGINT")
       .parquet(sink)
@@ -372,7 +364,6 @@ object StreamSearchQueries {
     * bit-for-bit). Returns the (vectors state, edges state) dirs. */
   private def drainInsertSlices(spark: SparkSession, dir: String,
       prefix: String): (String, String) = {
-    import org.apache.spark.sql.streaming.Trigger
     val root = graft.streaming.Drains.tmpFixtureDir(prefix, dir)
     root.mkdirs()
     val feed = new java.io.File(root, "feed"); feed.mkdirs()
@@ -403,9 +394,10 @@ object StreamSearchQueries {
           }
         }.toSeq: _*)
     }
-    // batch-0 file recording for the injected redelivery (the parquet
-    // analogue of graft.streaming.Drains.drainWithRedelivery's
-    // binlog_file capture — bounded: maxFilesPerTrigger=1)
+    // batch-0 file recording for the injected redelivery, keyed on
+    // input_file_name() — a parquet feed has no binlog_file column, so
+    // Drains.Redelivery (binlog names resolved to feeds) does not fit;
+    // bounded: maxFilesPerTrigger=1
     val batch0Files = scala.collection.mutable.ArrayBuffer.empty[String]
     def applyBatch(batch: DataFrame, id: Long): Unit = {
         if (id == 0L && batch0Files.isEmpty)
@@ -416,16 +408,13 @@ object StreamSearchQueries {
     // the drain dial (partitions + AQE-off) covers the whole drain AND
     // the injected replay — the same micro-batch-sized queries either way
     graft.streaming.Drains.withDrainPartitions(spark) {
-      val q = spark.readStream
+      graft.streaming.Drains.drain(spark, spark.readStream
         .schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
         .option("maxFilesPerTrigger", 1)
         .option("recursiveFileLookup", "true")
         .parquet(feed.getPath)
         .writeStream
-        .foreachBatch(applyBatch _)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+        .foreachBatch(applyBatch _), ckpt)
       if (batch0Files.nonEmpty) {
         applyBatch(spark.read
           .schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
@@ -555,11 +544,10 @@ object StreamSearchQueries {
             }
         }): _*)
     }
-    val batch0Files = scala.collection.mutable.ArrayBuffer.empty[String]
+    val feeds = Seq(feedA.getPath, feedB.getPath)
+    val batch0 = new graft.streaming.Drains.Redelivery(spark, feeds)
     def applyBatch(batch: DataFrame, id: Long): Unit = {
-      if (id == 0L && batch0Files.isEmpty)
-        batch0Files ++= batch.select(col("binlog_file")).distinct()
-          .collect().map(_.getString(0))
+      batch0.record(batch, id)
       val ins = batch.filter(col("event_type") === "WriteRowsEventV2")
         .select(explode(col("row_images")).as("img"))
         .select(element_at(col("img"), 1).cast("long").as("vec_id"),
@@ -567,19 +555,9 @@ object StreamSearchQueries {
             element_at(col("img"), i).cast("float")): _*).as("embedding"))
       maintainGraphInsert(spark, cent, state, edgesOut)(ins, id)
     }
-    graft.streaming.Drains.drainBinlogTailUnion(
-      spark, Seq(feedA.getPath, feedB.getPath), ckpt)(applyBatch)
+    graft.streaming.Drains.drainBinlog(spark, feeds, ckpt, tail = true)(applyBatch)
     // injected batch-0 redelivery, routed back to the owning shard
-    // (under the drain dial, like the drain it replays)
-    if (batch0Files.nonEmpty) {
-      val paths = batch0Files.toSeq.map { f =>
-        val inA = new java.io.File(feedA, f)
-        if (inA.isFile) inA.getPath else new java.io.File(feedB, f).getPath
-      }
-      graft.streaming.Drains.withDrainPartitions(spark) {
-        applyBatch(spark.read.format("binlog").load(paths: _*), 0L)
-      }
-    }
+    batch0.replay()(applyBatch)
     graphEdgeCensus(spark, edgesOut)
   }
 
@@ -646,7 +624,6 @@ object StreamSearchQueries {
   private def graphDeleteDrain(spark: SparkSession, dir: String,
       prefix: String, restart: Boolean = false,
       compactInDrain: Boolean = false): (DataFrame, String, String, String) = {
-    import org.apache.spark.sql.streaming.Trigger
     import graft.streaming.ViewMaintenance
     val root = graft.streaming.Drains.tmpFixtureDir(prefix, dir)
     root.mkdirs()
@@ -739,18 +716,13 @@ object StreamSearchQueries {
           }
         } finally b.unpersist(false)
     }
-    def runDrain(): Unit = {
-      val q = spark.readStream
-        .schema("op INT, vec_id BIGINT, embedding ARRAY<FLOAT>")
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(feed.getPath)
-        .writeStream
-        .foreachBatch(applyBatch _)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
+    def runDrain(): Unit = graft.streaming.Drains.drain(spark, spark.readStream
+      .schema("op INT, vec_id BIGINT, embedding ARRAY<FLOAT>")
+      .option("maxFilesPerTrigger", 1)
+      .option("recursiveFileLookup", "true")
+      .parquet(feed.getPath)
+      .writeStream
+      .foreachBatch(applyBatch _), ckpt)
     // the drain dial (partitions + AQE-off) covers the drains AND the
     // injected replays — the same micro-batch-sized queries either way
     graft.streaming.Drains.withDrainPartitions(spark) {
@@ -1135,8 +1107,8 @@ object StreamSearchQueries {
           }
         }.toSeq: _*)
     }
-    val batch0Files = scala.collection.mutable.ArrayBuffer.empty[String]
-    val lastFiles = scala.collection.mutable.ArrayBuffer.empty[String]
+    val batches = new graft.streaming.Drains.Redelivery(spark, Seq(feed.getPath))
+    var lastFiles = Seq.empty[String]
     var lastId = -1L
     def applyBatch(batch: DataFrame, id: Long): Unit = {
       // split once: inserts + deletes — LAZY persist instead of an eager
@@ -1146,11 +1118,10 @@ object StreamSearchQueries {
       // column, so collecting it from the cached scan is sound — unlike
       // input_file_name(), which loses its context under caching)
       val b = batch.persist()
-      val files = b.select(col("binlog_file")).distinct()
-        .collect().map(_.getString(0)) // bounded: maxFilesPerTrigger=1
-      if (id == 0L && batch0Files.isEmpty) batch0Files ++= files
+      val files = batches.files(b)
+      batches.record(b, id)
       if (files.nonEmpty) { // rotation-remainder batches carry no events
-        lastFiles.clear(); lastFiles ++= files; lastId = id
+        lastFiles = files; lastId = id
       }
       try {
         // tombstones ∥ insert maintenance: disjoint states, overlapped
@@ -1182,16 +1153,11 @@ object StreamSearchQueries {
             maxLive = 2, keepLast = 1)(df => df))
       } finally b.unpersist(false)
     }
-    def drain(): Unit = graft.streaming.Drains.drainBinlogPurgeTail(
-      spark, feed.getPath, ckpt)(applyBatch)
+    def drain(): Unit = graft.streaming.Drains.drainBinlog(
+      spark, Seq(feed.getPath), ckpt, tail = true, purgeSafe = true)(applyBatch)
     drain() // run 1: the insert wire
     // the batch-0 redelivery: crash-after-commit happens BEFORE retention
-    // (under the drain dial, like the drain it replays)
-    if (batch0Files.nonEmpty)
-      graft.streaming.Drains.withDrainPartitions(spark) {
-        applyBatch(spark.read.format("binlog")
-          .load(batch0Files.toSeq.map(f => s"${feed.getPath}/$f"): _*), 0L)
-      }
+    batches.replay()(applyBatch)
     // RETENTION: every consumed wire file below the frontier vanishes
     // (the frontier file itself must stay — the purge-safe contract);
     // the structural require pins that the listing really shrank
@@ -1224,12 +1190,8 @@ object StreamSearchQueries {
     // on a fixture with no delete class the last recorded batch may be
     // a purged insert file, which is exactly the replay retention has
     // already foreclosed)
-    val lastPaths = lastFiles.toSeq.map(f => new java.io.File(feed, f))
-    if (lastId > 0L && lastPaths.nonEmpty && lastPaths.forall(_.isFile))
-      graft.streaming.Drains.withDrainPartitions(spark) {
-        applyBatch(spark.read.format("binlog")
-          .load(lastPaths.map(_.getPath): _*), lastId)
-      }
+    if (lastId > 0L && lastFiles.forall(f => new java.io.File(feed, f).isFile))
+      batches.replay(lastFiles, lastId)(applyBatch)
     repairAndServe(spark, dir, cent, state, edgesOut, tomb)
   }
 

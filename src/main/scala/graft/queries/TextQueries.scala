@@ -1421,7 +1421,6 @@ object TextQueries {
   // the crawl as it lands": no global state, restart-safe checkpointing,
   // per-batch cost proportional to batch size.
   def t30StreamQuality(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val root = graft.streaming.Drains.tmpFixtureDir("graft_t30_", dir)
     root.mkdirs()
     val feed = new java.io.File(root, "feed").getPath
@@ -1432,7 +1431,7 @@ object TextQueries {
       .write.mode("append").parquet(feed)
     docs.filter(col("doc_id") % 7 =!= 0).coalesce(1)
       .write.mode("append").parquet(feed)
-    val sq = spark.readStream
+    graft.streaming.Drains.drain(spark, spark.readStream
       .schema("doc_id BIGINT, lang STRING, text STRING")
       .option("maxFilesPerTrigger", 1)
       .parquet(feed)
@@ -1448,11 +1447,8 @@ object TextQueries {
             col("tok_chars").cast("double") / col("n_tokens")))
           .select("doc_id", "lang", "n_tokens", "quality")
           .write.mode("append").parquet(sink)
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    sq.awaitTermination()
-    new java.io.File(sink).mkdirs() // empty feed → empty result (cdc12 note)
+      }, ckpt)
+    new java.io.File(sink).mkdirs() // empty feed → empty result (see Drains.drainToParquet)
     spark.read
       .schema("doc_id BIGINT, lang STRING, n_tokens INT, quality STRING")
       .parquet(sink)

@@ -253,9 +253,8 @@ private class BinlogScan(paths: Seq[String], required: StructType,
     // files); a stream's offsets index ONE naturally-ordered listing. To
     // consume several feeds in one query, union N single-path streams —
     // each gets its own offsets in the checkpoint (cdc69/cdc72's
-    // posture; graft.streaming.Drains.drainBinlogTailUnion /
-    // drainBinlogPurgeTailUnion are the canonical drains, and
-    // BinlogTailOps.lagMetricsUnion reads the per-source lag).
+    // posture; graft.streaming.Drains.drainBinlog is the canonical
+    // drain, and BinlogTailOps.lagMetricsUnion reads the per-source lag).
     // DECIDED (r15): this stays the supported shape rather than a
     // native multi-dir stream. A composite in-source offset would
     // re-encode what Spark's offset log already does natively (one

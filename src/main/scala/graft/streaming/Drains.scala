@@ -1,24 +1,30 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
-/** The streaming-gate drain scaffolds — the fixture/drain machinery every
-  * streaming-maintenance gate shares (promoted from CdcQueries in r13 so
-  * query families depend on the streaming package, not on a sibling
-  * queries file). Three layers:
+/** The drain core every streaming gate shares (promoted from CdcQueries
+  * in r13 so query families depend on the streaming package, not on a
+  * sibling queries file). Every stream a gate starts goes through it:
   *
-  *   - [[tmpFixtureDir]]/[[streamDirs]]/[[withDrainPartitions]] — fixture
-  *     roots and the micro-batch shuffle-partition dial;
-  *   - [[drainBinlogFeed]] — the binlog source file-by-file
-  *     (`maxFilesPerTrigger=1`), `foreachBatch`, AvailableNow to
-  *     completion;
-  *   - [[drainWithRedelivery]]/[[drainIdempotentWithRedelivery]] — the
-  *     exactly-once proof scaffold: record which file(s) batch 0 ACTUALLY
-  *     processed, then re-apply batch 0 from them after the drain — the
-  *     injected crash-after-commit redelivery a replay-safe sink must
-  *     absorb bit-for-bit (foreachBatch's documented at-least-once
-  *     hazard, made concrete).
+  *   - [[drain]]/[[drainToParquet]] — the drain policy: AvailableNow to
+  *     completion on a checkpoint, started under [[withDrainPartitions]]'
+  *     dial; [[drainToParquet]] adds the parquet sink and its read-back;
+  *   - [[drainBinlog]] — the one binlog feed: N feeds unioned into one
+  *     query, file by file (`maxFilesPerTrigger=1`), optionally in the
+  *     `tailActive` and `purgeSafe` postures, `foreachBatch`;
+  *   - [[Redelivery]] — the exactly-once proof's recorder: remember which
+  *     file(s) batch 0 ACTUALLY processed, then re-apply that batch from
+  *     them after the drain, under the same dial — the injected
+  *     crash-after-commit redelivery a replay-safe sink must absorb
+  *     bit-for-bit (foreachBatch's documented at-least-once hazard, made
+  *     concrete). [[drainWithRedelivery]],
+  *     [[drainIdempotentWithRedelivery]] and
+  *     [[drainBinlogRestartWithRedelivery]] are built on it.
+  *
+  * [[tmpFixtureDir]]/[[streamDirs]] are the fixture roots, and
+  * [[inParallel]] overlaps independent per-batch maintenance actions.
   */
 object Drains {
 
@@ -147,134 +153,115 @@ object Drains {
       new java.io.File(root, "ckpt").getPath)
   }
 
-  /** The shared streaming drain: the binlog source file-by-file
-    * (maxFilesPerTrigger=1 — the delta arrives across MULTIPLE
-    * micro-batches), `apply` per batch, AvailableNow to completion,
-    * under the drain partition dial. */
-  def drainBinlogFeed(spark: SparkSession, feed: String,
-      ckpt: String)(apply: (DataFrame, Long) => Unit): Unit =
+  /** The drain policy: run `w`'s query AvailableNow to completion on the
+    * checkpoint `ckpt`, started under the drain dial (streaming pins the
+    * dial into the checkpoint at start, and every micro-batch plans under
+    * it). */
+  def drain(spark: SparkSession, w: DataStreamWriter[Row], ckpt: String): Unit =
     withDrainPartitions(spark) {
-      val q = spark.readStream.format("binlog")
-        .option("maxFilesPerTrigger", 1)
-        .load(feed)
-        .writeStream
-        .foreachBatch(apply)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      w.option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
         .start()
-      q.awaitTermination()
+        .awaitTermination()
     }
 
-  /** The ACTIVE-file drain (cdc58/cdc63): the `tailActive` binlog source
-    * — (file, byte-frontier) offsets, torn tail held back in-source —
-    * file-completion-per-trigger, AvailableNow to completion. Gates call
-    * it once per installment against ONE checkpoint, appending bytes to
-    * the growing last file between runs. */
-  def drainBinlogTail(spark: SparkSession, feed: String,
-      ckpt: String)(apply: (DataFrame, Long) => Unit): Unit =
-    drainBinlogTailUnion(spark, Seq(feed), ckpt)(apply)
+  /** [[drain]] `df` into a parquet sink at `sink`, and read it back. An
+    * EMPTY feed (a legal quiet period) runs zero micro-batches, so the
+    * sink may hold no parquet files: the sink dir is created and read
+    * back with `df`'s own schema, giving the empty relation where schema
+    * inference would throw. The read-back is a lazy, distributed scan —
+    * never a driver collect. */
+  def drainToParquet(df: DataFrame, sink: String, ckpt: String): DataFrame = {
+    val spark = df.sparkSession
+    drain(spark, df.writeStream.format("parquet").option("path", sink), ckpt)
+    new java.io.File(sink).mkdirs()
+    spark.read.schema(df.schema).parquet(sink)
+  }
 
-  /** The PURGE-SAFE tail drain (cdc71): suffix-keyed offsets, so files
-    * below the committed frontier may be DELETED between runs — the
-    * binlog-retention posture neither index-keyed stream survives. */
-  def drainBinlogPurgeTail(spark: SparkSession, feed: String,
-      ckpt: String)(apply: (DataFrame, Long) => Unit): Unit =
-    withDrainPartitions(spark) {
-      val q = spark.readStream.format("binlog")
-        .option("tailActive", "true")
-        .option("purgeSafe", "true")
-        .option("maxFilesPerTrigger", 1)
-        .load(feed)
-        .writeStream
-        .foreachBatch(apply)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+  /** The one binlog feed drain: one streaming query over the UNION of
+    * `feeds`' binlog sources, file by file (`maxFilesPerTrigger=1` — a
+    * delta arrives across MULTIPLE micro-batches), `apply` per batch.
+    * Spark's offset log tracks each source independently (one offset line
+    * per source per batch), so every feed keeps its own progress while
+    * `apply` sees ONE batch stream — the scale-out shape of a fleet of
+    * database shards into one maintained state, one checkpoint.
+    *
+    *   - `tail`: the ACTIVE-file source — (file, byte-frontier) offsets,
+    *     torn tail held back in-source. Gates call it once per
+    *     installment against ONE checkpoint, appending bytes to the
+    *     growing last file between runs.
+    *   - `purgeSafe` (tail only): suffix-keyed offsets, so files below
+    *     the committed frontier may be DELETED between runs — the
+    *     binlog-retention posture an index-keyed stream cannot survive.
+    *     Under a union each shard's retention deletes its own consumed
+    *     files independently, and a restart resumes every shard from its
+    *     own suffix frontier. */
+  def drainBinlog(spark: SparkSession, feeds: Seq[String], ckpt: String,
+      tail: Boolean = false, purgeSafe: Boolean = false)
+      (apply: (DataFrame, Long) => Unit): Unit = {
+    require(feeds.nonEmpty, "a binlog drain needs at least one feed")
+    require(!purgeSafe || tail, "purgeSafe offsets need the tailActive source")
+    def src(feed: String): DataFrame = {
+      val r = spark.readStream.format("binlog").option("maxFilesPerTrigger", 1)
+      val t = if (tail) r.option("tailActive", "true") else r
+      (if (purgeSafe) t.option("purgeSafe", "true") else t).load(feed)
     }
+    drain(spark, feeds.map(src).reduce(_ unionByName _).writeStream
+      .foreachBatch(apply), ckpt)
+  }
 
-  /** The SHARDED tail drain (cdc69): one streaming query over the UNION
-    * of N shards' tailActive binlog sources — Spark's offset log tracks
-    * each source independently (one offset line per source per batch),
-    * so every shard gets its own (file, byte-frontier) progress and torn
-    * -tail holdback while the downstream apply sees ONE batch stream.
-    * This is the scale-out ingest shape: a fleet of database shards
-    * into one maintained state, one checkpoint. */
-  def drainBinlogTailUnion(spark: SparkSession, feeds: Seq[String],
-      ckpt: String)(apply: (DataFrame, Long) => Unit): Unit =
-    drainTailUnion(spark, feeds, ckpt, purgeSafe = false)(apply)
+  /** The redelivery recorder over binlog `feeds`: [[record]] remembers the
+    * file names batch 0 actually processed (bounded by
+    * maxFilesPerTrigger=1 per source) rather than inferring "the
+    * lexicographically smallest" — if natural-version order ever
+    * diverged from name order, an inferred redelivery would replace
+    * batch 0's partition with DIFFERENT partials and fail spuriously
+    * instead of isolating a sink bug. [[files]] serves the gates that
+    * also capture a later batch (failover, straddle, last-batch
+    * replays). [[replay]] re-applies a batch from its names under the
+    * drain dial, like the drain it replays; with nothing recorded (an
+    * empty feed wrote no files and ran no batches) nothing is replayed.
+    *
+    * Each name resolves to the ONE feed holding it — a name present in
+    * several feeds is REFUSED, because routing it to the first match
+    * would silently rebuild the batch from one shard's copy only and fail
+    * the gate with a misleading sink-not-replay-safe diagnosis. Keep
+    * per-shard file numbering disjoint. Fixture-side scaffold (local
+    * files by design — real redelivery is Spark's own offset-range
+    * replay). */
+  final class Redelivery(spark: SparkSession, feeds: Seq[String]) {
+    private var batch0 = Seq.empty[String]
 
-  /** The PURGE-SAFE sharded drain (cdc72): cdc69's N-feed union with
-    * every source in the `purgeSafe` posture — per-source SUFFIX-keyed
-    * offsets under the one checkpoint, so each shard's retention can
-    * delete its own consumed files independently of the others. This is
-    * the year-long N-shard deployment shape: the union keeps one offset
-    * line per source (each a `{"seq":…}` form), a restart resumes every
-    * shard from its own suffix frontier, and a listing that shrank on
-    * one shard shifts nothing anywhere. */
-  def drainBinlogPurgeTailUnion(spark: SparkSession, feeds: Seq[String],
-      ckpt: String)(apply: (DataFrame, Long) => Unit): Unit =
-    drainTailUnion(spark, feeds, ckpt, purgeSafe = true)(apply)
+    /** The binlog file names `batch` read. */
+    def files(batch: DataFrame): Seq[String] =
+      batch.select(col("binlog_file")).distinct()
+        .collect().map(_.getString(0)).toSeq
 
-  private def drainTailUnion(spark: SparkSession, feeds: Seq[String],
-      ckpt: String, purgeSafe: Boolean)
-      (apply: (DataFrame, Long) => Unit): Unit =
-    withDrainPartitions(spark) {
-      require(feeds.nonEmpty, "the tail union drain needs at least one feed")
-      def src(feed: String): DataFrame = {
-        val r = spark.readStream.format("binlog")
-          .option("tailActive", "true")
-          .option("maxFilesPerTrigger", 1)
-        (if (purgeSafe) r.option("purgeSafe", "true") else r).load(feed)
-      }
-      val q = feeds.map(src).reduce(_ unionByName _)
-        .writeStream
-        .foreachBatch(apply)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-
-  /** Batch-0 capture + unambiguous name→feed routing for UNION drains
-    * (cdc72/cdc74's injected crash-after-commit redelivery; cdc69/s56
-    * predate it and keep their settled inline copies): record the file
-    * names batch 0 actually processed (bounded by maxFilesPerTrigger=1
-    * per source), then resolve each name back to the ONE feed holding
-    * it — a name present in several feeds is REFUSED, because routing
-    * it to the first match would silently rebuild batch 0 from one
-    * shard's copy only and fail the gate with a misleading
-    * sink-not-replay-safe diagnosis. Keep per-shard file numbering
-    * disjoint. Fixture-side scaffold (local files by design — real
-    * redelivery is Spark's own offset-range replay). */
-  final class UnionBatch0(feeds: Seq[String]) {
-    private val names = scala.collection.mutable.ArrayBuffer.empty[String]
+    /** Batch 0 only, and only once: later batches and the replay itself
+      * never overwrite the record. */
     def record(batch: DataFrame, id: Long): Unit =
-      if (id == 0L && names.isEmpty)
-        names ++= batch.select(col("binlog_file")).distinct()
-          .collect().map(_.getString(0))
-    def nonEmpty: Boolean = names.nonEmpty
-    def paths: Seq[String] = names.toSeq.map { n =>
-      val hits = feeds.map(f => new java.io.File(f, n)).filter(_.isFile)
+      if (id == 0L && batch0.isEmpty) batch0 = files(batch)
+
+    def replay(names: Seq[String] = batch0, id: Long = 0L)
+        (apply: (DataFrame, Long) => Unit): Unit =
+      if (names.nonEmpty) withDrainPartitions(spark) {
+        apply(spark.read.format("binlog").load(names.map(path): _*), id)
+      }
+
+    private def path(name: String): String = {
+      val hits = feeds.map(f => new java.io.File(f, name)).filter(_.isFile)
       require(hits.length == 1,
-        s"batch-0 file '$n' resolves to ${hits.length} feeds — union " +
+        s"batch file '$name' resolves to ${hits.length} feeds — union " +
           "redelivery needs disjoint per-shard file numbering")
       hits.head.getPath
     }
   }
 
   /** The shared EXACTLY-ONCE drain: per batch, land `partials(batch)` in
-    * its own batch_id partition (ViewMaintenance.applyIdempotent),
-    * recording which feed file(s) batch 0 ACTUALLY processed (≤1 by
-    * maxFilesPerTrigger=1 — a bounded fixture-side collect) rather than
-    * inferring "the lexicographically smallest": if natural-version order
-    * ever diverged from name order, an inferred redelivery would replace
-    * batch 0's partition with DIFFERENT partials and fail spuriously
-    * instead of isolating a sink bug. After the drain, batch 0's write is
-    * re-applied from the recorded file(s) — the injected
-    * crash-after-commit redelivery the partition overwrite must absorb
-    * bit-for-bit. (An empty feed — a legal quiet period — wrote no files
-    * and ran no batches: nothing to redeliver.) */
+    * its own batch_id partition (ViewMaintenance.applyIdempotent); after
+    * the drain, batch 0's write is re-applied from its recorded file(s) —
+    * the injected redelivery the partition overwrite must absorb
+    * bit-for-bit. */
   def drainIdempotentWithRedelivery(spark: SparkSession,
       feed: String, ckpt: String, state: String)
       (partials: DataFrame => DataFrame): Unit =
@@ -309,25 +296,16 @@ object Drains {
       require(f.renameTo(new java.io.File(fd, f.getName)),
         s"fixture deliver failed: $f")
     }
-    val batch0Files = scala.collection.mutable.ArrayBuffer.empty[String]
-    def applyRec(batch: DataFrame, id: Long): Unit = {
-      if (id == 0L && batch0Files.isEmpty)
-        batch0Files ++= batch.select(col("binlog_file")).distinct()
-          .collect().map(_.getString(0))
+    val batch0 = new Redelivery(spark, Seq(feed))
+    def drainOnce(): Unit = drainBinlog(spark, Seq(feed), ckpt) { (batch, id) =>
+      batch0.record(batch, id)
       apply(batch, id)
     }
     deliver(h1)
-    drainBinlogFeed(spark, feed, ckpt)(applyRec)
+    drainOnce()
     deliver(h2)
-    drainBinlogFeed(spark, feed, ckpt)(applyRec)
-    if (batch0Files.nonEmpty) {
-      // the injected replay runs under the same drain dial as the batch
-      // it re-applies
-      withDrainPartitions(spark) {
-        applyRec(spark.read.format("binlog")
-          .load(batch0Files.toSeq.map(f => s"$feed/$f"): _*), 0L)
-      }
-    }
+    drainOnce()
+    batch0.replay()(apply)
   }
 
   /** The record-and-redeliver scaffold alone, for gates whose per-batch
@@ -339,21 +317,11 @@ object Drains {
   def drainWithRedelivery(spark: SparkSession,
       feed: String, ckpt: String)
       (apply: (DataFrame, Long) => Unit): Unit = {
-    val batch0Files = scala.collection.mutable.ArrayBuffer.empty[String]
-    def applyBatch(batch: DataFrame, id: Long): Unit = {
-      if (id == 0L && batch0Files.isEmpty)
-        batch0Files ++= batch.select(col("binlog_file")).distinct()
-          .collect().map(_.getString(0))
+    val batch0 = new Redelivery(spark, Seq(feed))
+    drainBinlog(spark, Seq(feed), ckpt) { (batch, id) =>
+      batch0.record(batch, id)
       apply(batch, id)
     }
-    drainBinlogFeed(spark, feed, ckpt)(applyBatch)
-    if (batch0Files.nonEmpty) {
-      // the injected replay runs under the same drain dial as the batch
-      // it re-applies (drainBinlogFeed's scope ended at awaitTermination)
-      withDrainPartitions(spark) {
-        applyBatch(spark.read.format("binlog")
-          .load(batch0Files.toSeq.map(f => s"$feed/$f"): _*), 0L)
-      }
-    }
+    batch0.replay()(apply)
   }
 }

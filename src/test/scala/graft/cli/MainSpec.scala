@@ -229,28 +229,6 @@ class MainSpec extends AnyFunSuite with SparkTestSession {
     assert(a.out == "/o")
   }
 
-  test("UnionBatch0: a batch-0 file name present in SEVERAL feeds is " +
-      "refused (ambiguous routing would rebuild the replay from one " +
-      "shard's copy only)") {
-    import spark.implicits._
-    val root = Files.createTempDirectory("union_b0").toFile
-    val fa = new java.io.File(root, "a"); fa.mkdirs()
-    val fb = new java.io.File(root, "b"); fb.mkdirs()
-    Files.write(new java.io.File(fa, "mysql-bin.000001").toPath, "x".getBytes)
-    val b0 = new graft.streaming.Drains.UnionBatch0(
-      Seq(fa.getPath, fb.getPath))
-    b0.record(Seq("mysql-bin.000001").toDF("binlog_file"), 0L)
-    assert(b0.nonEmpty)
-    assert(b0.paths == Seq(new java.io.File(fa, "mysql-bin.000001").getPath))
-    // the same name appears on the second shard too: refuse loudly
-    Files.write(new java.io.File(fb, "mysql-bin.000001").toPath, "y".getBytes)
-    val ex = intercept[IllegalArgumentException] { b0.paths }
-    assert(ex.getMessage.contains("disjoint"), s"got: $ex")
-    // later batches never overwrite the batch-0 record
-    b0.record(Seq("mysql-bin.000002").toDF("binlog_file"), 1L)
-    intercept[IllegalArgumentException] { b0.paths } // unchanged
-  }
-
   test("--follow: tails a live binlog dir into per-table exactly-once " +
       "states, holds torn tails, resumes across invocations and " +
       "retention (the operable cdc63 posture)") {

@@ -4,6 +4,8 @@ import java.nio.file.Files
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicReference
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryProgressEvent,
@@ -26,7 +28,8 @@ import graft.SparkTestSession
   *   - opaque executor-side crashes (NPE, ClassCast, ArrayIndexOOB —
   *     including wrapped inside a SparkException) are failures;
   *   - a gate that starts a streaming query is declared `drain = true`
-  *     in the registry (Bench's warmup skips it on that flag).
+  *     in the registry (Bench's warmup skips it on that flag), and starts
+  *     it under the drain dial (`Drains.withDrainPartitions`).
   *
   * Both fixture dirs carry the exact testdata schemas (copied from
   * sf0.001), so this is the driver's table contract at cardinality 0/1.
@@ -70,12 +73,20 @@ class DegenerateInputSpec extends AnyFunSuite with SparkTestSession {
 
   /** Runs every gate on `dir`, and records which gates start a streaming
     * query: `onQueryStarted` fires before `start()` returns, so the gate
-    * running at that moment is the one that started it. */
+    * running at that moment is the one that started it. The same moment
+    * shows whether the start ran under the drain dial: the test session
+    * leaves AQE at Spark's default, and `Drains.withDrainPartitions` pins
+    * it off. */
   private def sweep(dir: String, label: String): Unit = {
     val running = new AtomicReference("")
     val streamed = ConcurrentHashMap.newKeySet[String]()
+    val undialed = ConcurrentHashMap.newKeySet[String]()
     val listener = new StreamingQueryListener {
-      override def onQueryStarted(e: QueryStartedEvent): Unit = streamed.add(running.get)
+      override def onQueryStarted(e: QueryStartedEvent): Unit = {
+        streamed.add(running.get)
+        if (spark.conf.get("spark.sql.adaptive.enabled") != "false")
+          undialed.add(running.get)
+      }
       override def onQueryProgress(e: QueryProgressEvent): Unit = ()
       override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
     }
@@ -103,6 +114,9 @@ class DegenerateInputSpec extends AnyFunSuite with SparkTestSession {
     assert(undeclared.isEmpty,
       s"started a streaming query but not declared drain = true [$label]: " +
         undeclared.mkString(", "))
+    assert(undialed.isEmpty,
+      s"started a streaming query outside the drain dial [$label]: " +
+        undialed.asScala.toSeq.sorted.mkString(", "))
   }
 
   test("every query survives an EMPTY copy of the testdata schema") {

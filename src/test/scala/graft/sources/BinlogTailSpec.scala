@@ -638,8 +638,8 @@ class BinlogTailSpec extends AnyFunSuite with SparkTestSession {
 
     val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
     def drain(): Unit =
-      graft.streaming.Drains.drainBinlogPurgeTailUnion(spark,
-        Seq(feedA.getPath, feedB.getPath), ckpt) { (batch, _) =>
+      graft.streaming.Drains.drainBinlog(spark, Seq(feedA.getPath, feedB.getPath),
+        ckpt, tail = true, purgeSafe = true) { (batch, _) =>
         seen ++= batch
           .filter(col("event_type") === "WriteRowsEventV2")
           .select(explode(col("row_images")).as("img"))
