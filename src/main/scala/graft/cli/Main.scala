@@ -13,7 +13,7 @@ import graft.ingest.{AvroSource, BinlogBinaryParser, BinlogTextParser, Sources}
   *
   * Usage:
   *   graft.cli.Main --follow <dir-of-raw-binlogs> [--follow <dir2> …]
-  *     [--out <dir>] [--purge-safe]
+  *     [--out <dir>]
   *     [--max-bytes-per-trigger <n>] [--max-files-per-trigger <n>]
   *     [--gtid-state] [--gtid-discard-from <seq>]
   *       — the LIVE-consumer posture ([[follow]]): tail the
@@ -23,8 +23,10 @@ import graft.ingest.{AvroSource, BinlogBinaryParser, BinlogTextParser, Sources}
   *         committed changes into its own exactly-once compacted state
   *         under <out>/tables, hold torn tails back, print the census
   *         and per-feed lag; re-run (cron) to continue from
-  *         <out>/ckpt, with --purge-safe surviving binlog retention
-  *         between runs. --gtid-state maintains the fleet's durable
+  *         <out>/ckpt, surviving binlog retention between runs. Each
+  *         dir holds binlog data files only (`mysql-bin.NNNNNN`; a
+  *         suffix-less file such as `mysql-bin.index` is refused).
+  *         --gtid-state maintains the fleet's durable
   *         executed-gtid set under <out>/gtid; after a shard's
   *         failover, one run with --gtid-discard-from <seq> (the first
   *         post-failover file number) discards the replica's re-served
@@ -76,7 +78,6 @@ object Main {
       splitIndexAutoBuild: Boolean = true,
       splitBytes: Option[Long] = None,
       follow: Seq[String] = Nil,
-      purgeSafe: Boolean = false,
       maxFilesPerTrigger: Option[Int] = None,
       maxBytesPerTrigger: Option[Long] = None,
       asOf: Option[String] = None,
@@ -101,7 +102,6 @@ object Main {
       parseArgs(rest, acc.copy(splitBytes = Some(v.toLong)))
     case "--follow" :: v :: rest =>
       parseArgs(rest, acc.copy(follow = acc.follow :+ v))
-    case "--purge-safe" :: rest => parseArgs(rest, acc.copy(purgeSafe = true))
     case "--max-files-per-trigger" :: v :: rest =>
       parseArgs(rest, acc.copy(maxFilesPerTrigger = Some(v.toInt)))
     case "--max-bytes-per-trigger" :: v :: rest =>
@@ -155,8 +155,7 @@ object Main {
     }
     if (args.follow.nonEmpty) {
       val spark = session("graft-cdc-follow")
-      follow(spark, args.follow, args.out, args.purgeSafe,
-          args.maxFilesPerTrigger,
+      follow(spark, args.follow, args.out, args.maxFilesPerTrigger,
           args.maxBytesPerTrigger.orElse(Some(1L << 30)),
           args.gtidState, args.gtidDiscardFrom)
         .show(truncate = false)
@@ -235,10 +234,11 @@ object Main {
     * tails are held back in-source. Re-running resumes from
     * `<out>/ckpt`: the live pattern is this command under cron, which
     * is exactly how the reference's one-shot pipeline is deployed
-    * (comparator.sh), minus its FLUSH-BINARY-LOGS requirement. With
-    * `purgeSafe` the checkpoint survives binlog retention between
-    * invocations. Returns the per-table census (events/rows) the
-    * command prints.
+    * (comparator.sh), minus its FLUSH-BINARY-LOGS requirement. The
+    * checkpoint's offsets are keyed by each file's own suffix, so it
+    * survives binlog retention between invocations (purge only below
+    * the committed frontier). Returns the per-table census (events/rows)
+    * the command prints.
     *
     * Scale shape: the per-batch table routing collects only the
     * DISTINCT table names in that batch (bounded, loudly capped), the
@@ -257,7 +257,7 @@ object Main {
     * cdc68 upgrade discipline) — finish it with the old build or start
     * a new `--out`. */
   def follow(spark: SparkSession, feeds: Seq[String], out: String,
-      purgeSafe: Boolean, maxFilesPerTrigger: Option[Int] = None,
+      maxFilesPerTrigger: Option[Int] = None,
       maxBytesPerTrigger: Option[Long] = Some(1L << 30),
       gtidState: Boolean = false,
       gtidDiscardFrom: Option[Long] = None): DataFrame = {
@@ -294,8 +294,8 @@ object Main {
     }
     // Spark's offset log pairs sources POSITIONALLY — it records no
     // path identity — so a resume with the feeds reordered would
-    // silently hand each feed another feed's offsets (under purgeSafe
-    // that skips or re-serves whole files). Pin the exact ordered list
+    // silently hand each feed another feed's offsets (skipping or
+    // re-serving whole files). Pin the exact ordered list
     // on first run; refuse any later mismatch loudly.
     val manifest = new org.apache.hadoop.fs.Path(out, "feeds")
     val mfs = manifest.getFileSystem(conf)
@@ -425,7 +425,6 @@ object Main {
     def src(feed: String): DataFrame = {
       val rd0 = spark.readStream.format("binlog")
         .option("tailActive", "true")
-        .option("purgeSafe", purgeSafe.toString)
       val rd1 = maxFilesPerTrigger.fold(rd0)(n =>
         rd0.option("maxFilesPerTrigger", n))
       val rd = maxBytesPerTrigger.fold(rd1)(b =>

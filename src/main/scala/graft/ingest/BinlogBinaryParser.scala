@@ -106,7 +106,7 @@ object BinlogBinaryParser {
         s"$basename: not a binlog file (bad magic)")
       pos = 4L
     }
-    val fileSeq = "\\.(\\d+)$".r.findFirstMatchIn(basename).map(_.group(1).toLong)
+    val fileSeq = BinlogTextParser.fileSeq(basename)
 
     new Iterator[ParsedBinlogEvent] {
       private var index = startIndex

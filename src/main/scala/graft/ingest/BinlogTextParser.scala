@@ -66,15 +66,14 @@ object BinlogTextParser {
   def parseFile(binlogFileBasename: String, lines: Iterator[String]): Iterator[ParsedBinlogEvent] = {
     val headerRe = "^=== (.+?) ===$".r
     val kvRe = "^([^:]+): (.+)$".r
-    val fileSeq = "\\.(\\d+)$".r.findFirstMatchIn(binlogFileBasename)
-      .map(_.group(1).toLong)
+    val seq = fileSeq(binlogFileBasename)
 
     var current: collection.mutable.LinkedHashMap[String, String] = null
     var index = 0L
     val out = collection.mutable.ArrayBuffer.empty[ParsedBinlogEvent]
 
     def flush(): Unit = if (current != null) {
-      out += materialize(current, binlogFileBasename, fileSeq, index)
+      out += materialize(current, binlogFileBasename, seq, index)
       index += 1
     }
 
@@ -208,6 +207,14 @@ object BinlogTextParser {
       event_index = index,
       extra = m.filterNot { case (k, _) => typedKeys.contains(k) }.toMap)
   }
+
+  private val SeqSuffix = "\\.(\\d+)$".r
+
+  /** A binlog file's numeric suffix (`mysql-bin.000042` → 42; SURVEY
+    * E15), None when the name has none — the one parser every binlog
+    * reader, file-pruning rule and tail offset shares. */
+  def fileSeq(basename: String): Option[Long] =
+    SeqSuffix.findFirstMatchIn(basename).map(_.group(1).toLong)
 
   /** Input-order sequence for `Comparator.prepareBinlog`: binlog order is
     * (file sequence, block index) — SURVEY §7.6's explicit ordering, safe

@@ -1131,8 +1131,8 @@ object LifecycleQueries {
   // cdc72 — PURGE-SAFE × SHARDED UNION (the r14 verdict's top task: the
   // year-long N-shard deployment. cdc69 proved N growing feeds under ONE
   // checkpoint; cdc71 proved retention under suffix-keyed offsets —
-  // composed here: one streaming query unions BOTH shards' purge-safe
-  // tails, so the offset log carries one `{"seq":…}` line per source,
+  // composed here: one streaming query unions BOTH shards' tails, so
+  // the offset log carries one `{"seq":…}` line per source,
   // and each shard's retention deletes its own consumed files without
   // touching the other's frontier. The fixture is cdc69's shape (per-
   // shard closed bulk with disjoint numbering, one active file each with
@@ -1215,7 +1215,7 @@ object LifecycleQueries {
         state, id)
     }
     def drain(): Unit =
-      drainBinlog(spark, feeds, ckpt, tail = true, purgeSafe = true)(applyBatch)
+      drainBinlog(spark, feeds, ckpt, tail = true)(applyBatch)
     drain()
     // crash-after-commit redelivery happens BEFORE retention purges;
     // recorded names route back to their shard (disjoint numbering)
@@ -1267,14 +1267,14 @@ object LifecycleQueries {
       .orderBy("shard", "src")
   }
 
-  // cdc71 — BINLOG RETENTION: PURGE-SAFE TAIL (every other streaming
-  // posture — count-based AND plain tail — keys its offsets by INDEX
-  // into the directory listing, so the watched dir must stay
-  // append-only for the checkpoint's whole life. A real server runs
-  // `PURGE BINARY LOGS` / expire_logs_days: old consumed files VANISH.
-  // `purgeSafe=true` keys offsets by the file's own numeric suffix —
-  // MySQL's native (file, pos) coordinate — so retention below the
-  // committed frontier is invisible to the consumer). The gate: drain
+  // cdc71 — BINLOG RETENTION: THE TAIL SURVIVES PURGES (the count-based
+  // posture keys its offsets by INDEX into the directory listing, and so
+  // did the first tail, so the watched dir had to stay append-only for
+  // the checkpoint's whole life. A real server runs `PURGE BINARY LOGS`
+  // / expire_logs_days: old consumed files VANISH. The tail now keys
+  // every offset by the file's own numeric suffix — MySQL's native
+  // (file, pos) coordinate — so retention below the committed frontier
+  // is invisible to the consumer). The gate: drain
   // the feed (closed bulk + an active file whose txn B is torn 7 bytes
   // into its XID header); inject the batch-0 redelivery (crash-after-
   // commit happens BEFORE retention); then DELETE every bulk file —
@@ -1333,7 +1333,7 @@ object LifecycleQueries {
           .select(element_at(col("img"), 1).cast("long").as("k")),
         state, id)
     }
-    drainBinlog(spark, Seq(feed.getPath), ckpt, tail = true, purgeSafe = true)(applyBatch)
+    drainBinlog(spark, Seq(feed.getPath), ckpt, tail = true)(applyBatch)
     // crash-after-commit redelivery happens BEFORE retention purges
     batch0.replay()(applyBatch)
     // retention: every consumed closed file vanishes; only the active
@@ -1351,7 +1351,7 @@ object LifecycleQueries {
       java.nio.file.Files.write(activeFile.toPath, tail,
         java.nio.file.StandardOpenOption.APPEND)
     }
-    drainBinlog(spark, Seq(feed.getPath), ckpt, tail = true, purgeSafe = true)(applyBatch)
+    drainBinlog(spark, Seq(feed.getPath), ckpt, tail = true)(applyBatch)
     ViewMaintenance.readState(spark, state, "k BIGINT, batch_id BIGINT")
       .withColumn("src", when(col("k") % 131 === 0, "txn_a")
         .when(col("k") % 131 === 1, "txn_b")
@@ -1504,12 +1504,13 @@ object LifecycleQueries {
   // files consumed" — `{"n":N}`. Re-snapshotting a 100 TB table to
   // switch sources is exactly the cost the tail mode exists to avoid,
   // so TailOffset.fromJson accepts the count-based form directly,
-  // defaulting the missing byte-frontier fields to 0: N whole files,
-  // frontier at the start of file N — semantically exact, because the
+  // translating it against the listing: N whole files, frontier at the
+  // start of the N-th file's suffix — semantically exact, because the
   // count-based source consumes whole files only. The reverse
-  // (tail → count with a MID-FILE pos) is rejected loudly by the
-  // count-based parser — silently reading just `n` would re-serve the
-  // consumed prefix. The gate: run 1 drains the closed bulk with the
+  // (tail → count) is rejected loudly by the count-based parser — a
+  // suffix-keyed offset is no listing count once files are purged, and
+  // silently reading a mid-file frontier as whole files would re-serve
+  // the consumed prefix. The gate: run 1 drains the closed bulk with the
   // COUNT-BASED source (the existing deployment); the active file then
   // appears and run 2 flips tailActive=true on the SAME checkpoint —
   // batch ids continue, txn A lands, torn txn B is held; the append
@@ -2060,7 +2061,7 @@ object LifecycleQueries {
         val mi = spark.read.format("binlog").load(s"$feed/$markFile")
           .filter(col("event_type") === "WriteRowsEventV2")
           .agg(min(col("event_index")), max(col("event_index"))).head()
-        val seq = "\\.(\\d+)$".r.findFirstMatchIn(markFile).get.group(1).toLong
+        val seq = graft.ingest.BinlogTextParser.fileSeq(markFile).get
         if (mi.isNullAt(0)) (seq, -1L)
         else (seq, (mi.getLong(0) + mi.getLong(1)) / 2)
       }
@@ -2167,7 +2168,7 @@ object LifecycleQueries {
         val mi = spark.read.format("binlog").load(s"${feed.getPath}/$markFile")
           .filter(col("event_type") === "WriteRowsEventV2")
           .agg(min(col("event_index")), max(col("event_index"))).head()
-        val seq = "\\.(\\d+)$".r.findFirstMatchIn(markFile).get.group(1).toLong
+        val seq = graft.ingest.BinlogTextParser.fileSeq(markFile).get
         if (mi.isNullAt(0)) (seq, -1L)
         else (seq, (mi.getLong(0) + mi.getLong(1)) / 2)
       }
@@ -2995,7 +2996,7 @@ object LifecycleQueries {
       // census frame is discarded — the gate re-reads through the three
       // CLI read surfaces below
       graft.cli.Main.follow(spark, Seq(feed.getPath), out,
-        purgeSafe = false, maxFilesPerTrigger = Some(1),
+        maxFilesPerTrigger = Some(1),
         maxBytesPerTrigger = None)
     }
     // pacing precondition: 4 files at one per trigger == marks 0..3
@@ -3084,7 +3085,7 @@ object LifecycleQueries {
       new java.io.File(feed, "mysql-bin.000500").toPath, fServer.bytes)
     graft.streaming.Drains.withDrainPartitions(spark) {
       graft.cli.Main.follow(spark, Seq(feed.getPath), out,
-        purgeSafe = false, maxBytesPerTrigger = Some(1L << 30),
+        maxBytesPerTrigger = Some(1L << 30),
         gtidState = true)
     }
     // the failover: the replica re-serves Q (same gtid, 50-row framing)
@@ -3096,7 +3097,7 @@ object LifecycleQueries {
       new java.io.File(feed, "mysql-bin.000800").toPath, fReplica.bytes)
     graft.streaming.Drains.withDrainPartitions(spark) {
       graft.cli.Main.follow(spark, Seq(feed.getPath), out,
-        purgeSafe = false, maxBytesPerTrigger = Some(1L << 30),
+        maxBytesPerTrigger = Some(1L << 30),
         gtidState = true, gtidDiscardFrom = Some(800L))
     }
     // both wire shapes land in sf.delta (the sink and the crafted writer
@@ -3157,7 +3158,7 @@ object LifecycleQueries {
     // the durable set changes WHERE the mark lives, not what is applied
     Gate("cdc70_gtid_durable", cdc70GtidDurable, cdc66Oracle, drain = true),
     Gate("cdc71_tail_purge", cdc71TailPurge, cdc71Oracle, drain = true),
-    // purge-safe union serves exactly what the plain union serves —
+    // the purged union serves exactly what the unpurged union serves —
     // retention below each shard's frontier is invisible by design
     Gate("cdc72_purge_sharded_union", cdc72PurgeShardedUnion, cdc69Oracle, drain = true),
     // the set-keyed bootstrap applies exactly what the failover gate

@@ -1154,12 +1154,12 @@ object StreamSearchQueries {
       } finally b.unpersist(false)
     }
     def drain(): Unit = graft.streaming.Drains.drainBinlog(
-      spark, Seq(feed.getPath), ckpt, tail = true, purgeSafe = true)(applyBatch)
+      spark, Seq(feed.getPath), ckpt, tail = true)(applyBatch)
     drain() // run 1: the insert wire
     // the batch-0 redelivery: crash-after-commit happens BEFORE retention
     batches.replay()(applyBatch)
     // RETENTION: every consumed wire file below the frontier vanishes
-    // (the frontier file itself must stay — the purge-safe contract);
+    // (the frontier file itself must stay — the tail's retention contract);
     // the structural require pins that the listing really shrank
     val before = Option(feed.listFiles()).getOrElse(Array.empty[java.io.File])
       .filter(f => f.isFile && !f.getName.startsWith(".")).sortBy(_.getName)

@@ -248,8 +248,8 @@ private class AvroMicroBatchStream(path: String, schemaJson: String,
       },
       maxFilesPerTrigger) {
 
-  override protected def makePartitions(f: (String, Long)): Seq[InputPartition] =
-    Seq(AvroInputPartition(f._1, 0L, f._2))
+  override protected def planSlice(slice: Seq[(String, Long)]): Seq[InputPartition] =
+    slice.map(f => AvroInputPartition(f._1, 0L, f._2))
 
   // the lister already stats lengths — bytesBehind is free here
   override protected def byteLen(f: (String, Long)): Long = f._2

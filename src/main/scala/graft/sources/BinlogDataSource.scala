@@ -44,15 +44,21 @@ class BinlogDataSource extends TableProvider with DataSourceRegister {
   override def getTable(
       schema: StructType,
       partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
+      properties: util.Map[String, String]): Table = {
+    // a removed knob fails loudly: silently ignoring it would hand a user
+    // who asked to survive purges whatever stream the other options pick
+    require(!properties.keySet.asScala.exists(_.equalsIgnoreCase("purgeSafe")),
+      "the binlog source's purgeSafe option is gone: tail offsets are " +
+        "always keyed by the file's own suffix and survive retention — " +
+        "use tailActive=true")
     new BinlogTable(BinlogScan.resolvePaths(properties),
       Option(properties.get("maxFilesPerTrigger")).map(_.toInt),
       Option(properties.get("splitIndex")),
       Option(properties.get("splitIndexAutoBuild")).exists(_.toBoolean),
       Option(properties.get("splitBytes")).map(_.toLong),
       Option(properties.get("tailActive")).exists(_.toBoolean),
-      Option(properties.get("maxBytesPerTrigger")).map(_.toLong),
-      Option(properties.get("purgeSafe")).exists(_.toBoolean))
+      Option(properties.get("maxBytesPerTrigger")).map(_.toLong))
+  }
 
   override def supportsExternalMetadata(): Boolean = false
 }
@@ -81,7 +87,7 @@ object BinlogDataSource {
 private class BinlogTable(paths: Seq[String], maxFilesPerTrigger: Option[Int],
     splitIndex: Option[String] = None, autoBuild: Boolean = false,
     splitBytes: Option[Long] = None, tailActive: Boolean = false,
-    maxBytesPerTrigger: Option[Long] = None, purgeSafe: Boolean = false)
+    maxBytesPerTrigger: Option[Long] = None)
     extends Table with SupportsRead {
   require(paths.nonEmpty, "binlog source requires a path (use .load(path))")
 
@@ -92,13 +98,13 @@ private class BinlogTable(paths: Seq[String], maxFilesPerTrigger: Option[Int],
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new BinlogScanBuilder(paths, maxFilesPerTrigger, splitIndex, autoBuild,
-      splitBytes, tailActive, maxBytesPerTrigger, purgeSafe)
+      splitBytes, tailActive, maxBytesPerTrigger)
 }
 
 private class BinlogScanBuilder(paths: Seq[String], maxFilesPerTrigger: Option[Int] = None,
     splitIndex: Option[String] = None, autoBuild: Boolean = false,
     splitBytes: Option[Long] = None, tailActive: Boolean = false,
-    maxBytesPerTrigger: Option[Long] = None, purgeSafe: Boolean = false)
+    maxBytesPerTrigger: Option[Long] = None)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters {
 
@@ -123,7 +129,7 @@ private class BinlogScanBuilder(paths: Seq[String], maxFilesPerTrigger: Option[I
 
   override def build(): Scan =
     new BinlogScan(paths, required, pushed, maxFilesPerTrigger, splitIndex,
-      autoBuild, splitBytes, tailActive, maxBytesPerTrigger, purgeSafe)
+      autoBuild, splitBytes, tailActive, maxBytesPerTrigger)
 }
 
 private object BinlogFilePruning {
@@ -161,9 +167,6 @@ private object BinlogFilePruning {
     case n: Number => Some(n.longValue())
     case _ => None
   }
-
-  def fileSeq(name: String): Option[Long] =
-    "\\.(\\d+)$".r.findFirstMatchIn(name).map(_.group(1).toLong)
 }
 
 private class BinlogScan(paths: Seq[String], required: StructType,
@@ -173,64 +176,24 @@ private class BinlogScan(paths: Seq[String], required: StructType,
     autoBuild: Boolean = false,
     splitBytes: Option[Long] = None,
     tailActive: Boolean = false,
-    maxBytesPerTrigger: Option[Long] = None,
-    purgeSafe: Boolean = false) extends Scan with Batch {
+    maxBytesPerTrigger: Option[Long] = None) extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
 
-  /** One partition per file; with a `splitIndex` option (a shard directory
-    * built by [[graft.ingest.BinlogOffsetIndex.build]]) huge files fan out
-    * into one partition per transaction-aligned byte range — each file's
-    * ranges load lazily from ITS OWN shard, never the siblings'. With
-    * `splitIndexAutoBuild=true`, files with no (readable) shard are walked
-    * right here at planning (the distributed header-only walk runs as its
-    * own small job before this scan's tasks launch) — the "first pass
-    * records offsets" pattern with no separate orchestration step, and new
-    * files appearing after an earlier build get shards too. A file whose
-    * length no longer matches the index entry decodes whole-file — the
-    * index is an optimization, never a correctness dependency. */
+  /** The files the pushed filters keep, planned by [[BinlogScan.plan]]:
+    * one partition per file, or per transaction-aligned range with a
+    * `splitIndex`. With `splitIndexAutoBuild=true` the header-only walk
+    * runs as its own small job before this scan's tasks launch — the
+    * "first pass records offsets" pattern with no separate orchestration
+    * step. */
   override def planInputPartitions(): Array[InputPartition] = {
-    // the SESSION's Hadoop conf, not a bare new Configuration(): index
-    // paths on filesystems configured via spark.hadoop.* (credentials,
-    // fs impls) must resolve with the same conf build() wrote through
-    lazy val hadoopConf =
-      org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration
-    val kept = BinlogScan.listFiles(paths)
+    val kept = BinlogScan.listFiles(paths).toSeq
       .filter { p =>
         val name = p.split('/').last
-        val seq = BinlogFilePruning.fileSeq(name)
+        val seq = graft.ingest.BinlogTextParser.fileSeq(name)
         pushed.forall(BinlogFilePruning.keeps(_, name, seq))
       }
-    splitIndex match {
-      case None => kept.map(p => BinlogInputPartition(p): InputPartition)
-      case Some(ip) =>
-        // shard probes run in parallel (and skip entirely on a never-built
-        // index directory); a serial per-file loop here put one filesystem
-        // round trip per binlog file on the planning path (r7 ADVICE)
-        val idx = graft.ingest.BinlogOffsetIndex
-        var ranges = idx.loadFiles(hadoopConf, ip, kept.toSeq)
-        if (autoBuild) {
-          val missing = kept.filter(f => ranges(f).isEmpty)
-          if (missing.nonEmpty) {
-            idx.buildFiles(org.apache.spark.sql.SparkSession.active,
-              missing.toSeq, ip, splitBytes.getOrElse(128L << 20))
-            ranges = ranges ++ idx.loadFiles(hadoopConf, ip, missing.toSeq)
-          }
-        }
-        // lengths for the validity check fetched in one parallel sweep
-        // (only files that actually have ranges need a stat); a missing
-        // stat falls through to whole-file decode
-        val lens = idx.statLens(hadoopConf,
-          kept.filter(f => ranges(f).nonEmpty).toSeq)
-        kept.flatMap { p =>
-          ranges(p) match {
-            case rs if rs.nonEmpty && lens.get(p).contains(rs.head.fileLen) =>
-              rs.map(r => BinlogInputPartition(
-                p, r.start, r.end, r.startIndex, r.checksumLen): InputPartition)
-            case _ => Seq(BinlogInputPartition(p): InputPartition)
-          }
-        }
-    }
+    BinlogScan.plan(kept, splitIndex, autoBuild, splitBytes).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -239,14 +202,15 @@ private class BinlogScan(paths: Seq[String], required: StructType,
 
   /** Two streaming postures: the default count-based stream consumes
     * whole (closed, immutable) files; `tailActive=true` switches to
-    * (file, byte-frontier) offsets so the GROWING last file yields its
-    * newly-committed bytes each trigger ([[BinlogTailMicroBatchStream]]).
-    * Checkpoint compatibility is deliberately ONE-WAY: a count-based
-    * checkpoint (`{"n":N}`, whole files only) upgrades to the tail
-    * posture in place (TailOffset.fromJson defaults the missing
-    * frontier fields), but a tail checkpoint with a MID-FILE frontier
-    * cannot drive the count-based source — its parser rejects a
-    * nonzero `pos` loudly rather than re-serve the consumed prefix. */
+    * (file suffix, byte-frontier) offsets so the GROWING last file
+    * yields its newly-committed bytes each trigger and consumed files
+    * may be purged ([[BinlogTailMicroBatchStream]]). Checkpoint
+    * compatibility is deliberately ONE-WAY: a count-based checkpoint
+    * (`{"n":N}`, whole files only) upgrades to the tail posture in place
+    * (TailOffset.fromJson translates it against the listing), but no
+    * suffix-keyed tail checkpoint drives the count-based source — its
+    * parser rejects a `seq` offset loudly, since a suffix is not a
+    * listing count once files have been purged. */
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
     // multi-path is a BATCH convenience (replays, ad-hoc unions of named
@@ -268,16 +232,7 @@ private class BinlogScan(paths: Seq[String], required: StructType,
       s"a binlog STREAM watches exactly one directory, got ${paths.length} " +
         "paths — union one readStream per feed instead (each keeps its " +
         "own offsets in the shared checkpoint)")
-    // purgeSafe exists to survive retention; silently handing back the
-    // index-keyed count stream would break on the very purge the user
-    // opted into surviving
-    require(tailActive || !purgeSafe,
-      "purgeSafe=true requires tailActive=true — the count-based stream " +
-        "keys offsets by listing index and cannot survive a purge")
-    if (tailActive && purgeSafe)
-      new BinlogPurgeTailMicroBatchStream(paths.head, required,
-        maxFilesPerTrigger, maxBytesPerTrigger)
-    else if (tailActive)
+    if (tailActive)
       new BinlogTailMicroBatchStream(paths.head, required, maxFilesPerTrigger,
         maxBytesPerTrigger)
     else
@@ -316,13 +271,55 @@ private[graft] object BinlogScan {
     paths.flatMap(p => listFiles(p)).distinct.toArray
       .sortBy(p => (fileSeqKey(p.split('/').last), p.split('/').last))
 
-  // compiled once — the purge-tail planning paths call this O(listing)
-  // times per trigger
-  private val SeqSuffix = "\\.(\\d+)$".r
-
+  /** The natural-order sort key: suffix-less names sort last. */
   private[sources] def fileSeqKey(name: String): Long =
-    SeqSuffix.findFirstMatchIn(name).map(_.group(1).toLong)
-      .getOrElse(Long.MaxValue)
+    graft.ingest.BinlogTextParser.fileSeq(name).getOrElse(Long.MaxValue)
+
+  /** The partitions for `files`, shared by the batch scan and the
+    * count-based stream: one per file, or with a `splitIndex` (a shard
+    * directory built by [[graft.ingest.BinlogOffsetIndex.build]]) one per
+    * transaction-aligned byte range, so huge files fan out — each file's
+    * ranges load from ITS OWN shard, never the siblings'. With
+    * `autoBuild`, files with no (readable) shard are walked right here at
+    * planning, in ONE header-only job for all of them (the per-file form
+    * launched a single-task job plus a conf broadcast per file, r7
+    * ADVICE), so files appearing after an earlier build get shards too.
+    * The filesystem work is one parallel shard probe (skipped entirely on
+    * a never-built index directory; a serial per-file loop put one round
+    * trip per file on the planning path), at most one build job, and one
+    * parallel stat sweep of the files that have ranges. A file whose
+    * length no longer matches its index entry, or whose stat fails,
+    * decodes whole-file — the index is an optimization, never a
+    * correctness dependency. */
+  def plan(files: Seq[String], splitIndex: Option[String],
+      autoBuild: Boolean, splitBytes: Option[Long]): Seq[InputPartition] =
+    splitIndex match {
+      case None => files.map(BinlogInputPartition(_))
+      case Some(ip) =>
+        // the SESSION's Hadoop conf, not a bare new Configuration(): index
+        // paths on filesystems configured via spark.hadoop.* (credentials,
+        // fs impls) must resolve with the same conf build() wrote through
+        val spark = org.apache.spark.sql.SparkSession.active
+        val conf = spark.sparkContext.hadoopConfiguration
+        val idx = graft.ingest.BinlogOffsetIndex
+        var ranges = idx.loadFiles(conf, ip, files)
+        if (autoBuild) {
+          val missing = files.filter(f => ranges(f).isEmpty)
+          if (missing.nonEmpty) {
+            idx.buildFiles(spark, missing, ip, splitBytes.getOrElse(128L << 20))
+            ranges = ranges ++ idx.loadFiles(conf, ip, missing)
+          }
+        }
+        val lens = idx.statLens(conf, files.filter(f => ranges(f).nonEmpty))
+        files.flatMap { p =>
+          ranges(p) match {
+            case rs if rs.nonEmpty && lens.get(p).contains(rs.head.fileLen) =>
+              rs.map(r => BinlogInputPartition(
+                p, r.start, r.end, r.startIndex, r.checksumLen))
+            case _ => Seq(BinlogInputPartition(p))
+          }
+        }
+    }
 
   /** All binlog files under `path`, in natural (`ls -v`) order: numeric
     * suffix first, then name — the reference's processing order
@@ -385,46 +382,9 @@ private class BinlogMicroBatchStream(path: String, required: StructType,
     extends FileCountMicroBatchStream[String](
       () => BinlogScan.listFiles(path).toIndexedSeq, maxFilesPerTrigger) {
 
-  // ranges + file lengths for the current trigger's slice, loaded (and
-  // auto-built) once in prepareSlice — makePartitions itself stays
-  // side-effect-free and pays no per-file filesystem round trip
-  @volatile private var sliceRanges
-      : Map[String, Seq[graft.ingest.BinlogOffsetIndex.SplitRange]] = Map.empty
-  @volatile private var sliceLens: Map[String, Long] = Map.empty
-
-  /** One shard probe pass and (with `splitIndexAutoBuild`) ONE buildFiles
-    * job for all files new to this trigger — the per-file form launched a
-    * single-task Spark job plus a conf broadcast per new file per trigger
-    * (r7 ADVICE). */
-  override protected def prepareSlice(files: Seq[String]): Unit =
-    splitIndex match {
-      case None => ()
-      case Some(ip) =>
-        val spark = org.apache.spark.sql.SparkSession.active
-        val conf = spark.sparkContext.hadoopConfiguration
-        val idx = graft.ingest.BinlogOffsetIndex
-        var ranges = idx.loadFiles(conf, ip, files)
-        if (autoBuild) {
-          val missing = files.filter(f => ranges(f).isEmpty)
-          if (missing.nonEmpty) {
-            idx.buildFiles(spark, missing, ip, splitBytes.getOrElse(128L << 20))
-            ranges = ranges ++ idx.loadFiles(conf, ip, missing)
-          }
-        }
-        sliceRanges = ranges
-        sliceLens = idx.statLens(conf, files.filter(f => ranges(f).nonEmpty))
-    }
-
-  override protected def makePartitions(file: String): Seq[InputPartition] =
-    splitIndex match {
-      case None => Seq(BinlogInputPartition(file))
-      case Some(_) =>
-        val ranges = sliceRanges.getOrElse(file, Seq.empty)
-        if (ranges.nonEmpty && sliceLens.get(file).contains(ranges.head.fileLen))
-          ranges.map(r =>
-            BinlogInputPartition(file, r.start, r.end, r.startIndex, r.checksumLen))
-        else Seq(BinlogInputPartition(file))
-    }
+  // auto-build walks just the files new to this trigger
+  override protected def planSlice(files: Seq[String]): Seq[InputPartition] =
+    BinlogScan.plan(files, splitIndex, autoBuild, splitBytes)
 
   // bytesBehind for the in-band metrics: one best-effort stat per
   // not-yet-consumed file per progress event (0-on-error is fine for

@@ -4,7 +4,8 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
-/** Observability for the ACTIVE-file tail ([[BinlogTailMicroBatchStream]]):
+/** Observability for the binlog tail ([[BinlogTailMicroBatchStream]],
+  * `tailActive=true`, offsets keyed by each file's own suffix):
   * how far behind the feed a consumer's CHECKPOINT is, split into the two
   * quantities an operator actually alerts on —
   *
@@ -42,11 +43,11 @@ object BinlogTailOps {
     * @param filesListed     natural-order listing size now
     * @param filesConsumed   listing index of the frontier file in the
     *                        CURRENT listing — equal to "files fully
-    *                        consumed" for append-only feeds; for a
-    *                        purge-safe checkpoint after retention it
-    *                        counts only the SURVIVING files below the
-    *                        frontier (purged-then-consumed files are no
-    *                        longer observable from the listing)
+    *                        consumed" for append-only feeds; after
+    *                        retention it counts only the SURVIVING files
+    *                        below the frontier (purged-then-consumed
+    *                        files are no longer observable from the
+    *                        listing)
     * @param frontierFile    file the checkpointed offset points into
     *                        ("" when everything listed is consumed)
     * @param frontierPos     committed byte frontier inside it
@@ -104,11 +105,10 @@ object BinlogTailOps {
     }
 
   /** Lag metrics for a single-source tail consumer: checkpointed offset
-    * vs the feed's current state. Reads BOTH offset forms — the plain
-    * tail's listing-index form and the purge-safe suffix-keyed form
-    * (resolved against the current listing, where consumed prefixes may
-    * have been purged away). Driver-side; safe to call while the stream
-    * runs (the offset log is written atomically per batch). */
+    * vs the feed's current state, the suffix-keyed offset resolved
+    * against the current listing (where consumed prefixes may have been
+    * purged away). Driver-side; safe to call while the stream runs (the
+    * offset log is written atomically per batch). */
   def lagMetrics(spark: SparkSession, feed: String, ckpt: String): TailLag = {
     val conf = spark.sparkContext.hadoopConfiguration
     lagFor(feed, latestCommittedOffsetJson(ckpt, conf), conf)
@@ -136,35 +136,20 @@ object BinlogTailOps {
     feeds.lazyZip(jsons).map((f, j) => lagFor(f, j, conf))
   }
 
-  /** One feed's lag against one (optional) committed offset line. The
+  /** One feed's lag against one (optional) committed offset line,
+    * resolved against the feed's checked listing exactly as the stream
+    * resolves it (legacy `{"n"…}` lines translate on the way in). The
     * frontier is computed by the stream's own admission walk
     * ([[TailWalk.walk]] with no budgets) so metric and stream cannot
     * disagree about what is consumable. */
   private def lagFor(feed: String, json: Option[String],
       conf: Configuration): TailLag = {
-    val listing = BinlogScan.listFiles(feed).toIndexedSeq
-    def seqOf(f: String): Long = BinlogScan.fileSeqKey(f.split('/').last)
-    val (n0, pos0, idx0, ck0) =
-      json match {
-        case None => (0, 0L, 0L, 0)
-        case Some(j) if j.contains("\"seq\"") =>
-          val o = BinlogPurgeTailMicroBatchStream.SeqOffset
-            .fromJsonOrLegacy(j, () => listing, seqOf,
-              f => TailWalk.statLenOrUnknown(f, conf))
-          val i = listing.indexWhere(f => seqOf(f) >= o.seq)
-          if (i == -1) (listing.length, 0L, 0L, 0) // everything consumed
-          else {
-            require(seqOf(listing(i)) == o.seq || o.pos == 0L,
-              s"frontier file with suffix ${o.seq} has unconsumed bytes " +
-                s"past ${o.pos} but is missing — purged too aggressively")
-            if (seqOf(listing(i)) == o.seq) (i, o.pos, o.idx, o.ck)
-            else (i, 0L, 0L, 0)
-          }
-        case Some(j) =>
-          val o = TailOffset.fromJson(j)
-          (o.n, o.pos, o.idx, o.ck)
-      }
-    if (listing.isEmpty || n0 >= listing.length)
+    val listing = BinlogTailMicroBatchStream.list(feed)
+    val (n0, pos0, idx0, ck0) = json
+      .fold(TailOffset.Start)(TailOffset.fromJson(_, () => listing,
+        f => TailWalk.statLenOrUnknown(f, conf)))
+      .resolve(listing)
+    if (n0 >= listing.length)
       return TailLag(listing.length, n0, "", pos0, idx0, 0L, 0L)
     val maxN = listing.length - 1
     // the feed's committed frontier: the stream's own admission walk,

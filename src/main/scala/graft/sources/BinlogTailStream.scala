@@ -4,24 +4,30 @@ import org.apache.spark.sql.connector.read.InputPartition
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, ReportsSourceMetrics, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.types.StructType
 
-import graft.ingest.BinlogOffsetIndex
+import graft.ingest.{BinlogOffsetIndex, BinlogTextParser}
 
 /** Micro-batch tail of a binlog directory whose LAST file may still be
   * GROWING — the deployment posture the count-based
   * [[BinlogMicroBatchStream]] cannot serve (it consumes whole files only,
   * the reference's FLUSH-BINARY-LOGS workaround,
-  * /root/reference/README.md:68-73): a real CDC consumer tails
+  * reference README.md:68-73): a real CDC consumer tails
   * `mysql-bin.000042` WHILE the server appends to it. Enabled with
   * `.option("tailActive", "true")` on the binlog source.
   *
-  * The offset is `(n, pos, idx, ck)`:
-  *   - `n`   — how many files of the naturally-ordered listing are FULLY
-  *     consumed (the count-based offset, generalized);
-  *   - `pos` — the committed byte frontier inside file `n` (0 when that
-  *     file is untouched or absent);
+  * The offset is `(seq, pos, idx, ck)`, keyed by the binlog file's own
+  * numeric suffix — MySQL's native (file, pos) coordinate — never by an
+  * index into the directory listing:
+  *   - every file whose suffix is `< seq` is fully consumed;
+  *   - `pos` — the committed byte frontier inside the file with suffix
+  *     `== seq` (0 when that file is untouched or absent);
   *   - `idx`/`ck` — the decoder state (event index, checksum-tail length)
   *     at `pos`, seeding [[graft.ingest.BinlogBinaryParser.decodeStream]]
   *     exactly as the intra-file split index does.
+  * The caught-up canonical form is `(lastSeq + 1, 0, 0, 0)` — "waiting
+  * for a file that does not exist yet", which rotation then creates.
+  * Every listed file must carry a numeric suffix, unique within the feed
+  * ([[BinlogTailMicroBatchStream.list]]): a directory holding anything
+  * else (MySQL's own `mysql-bin.index`) is refused, never mis-framed.
   *
   * Each trigger advances the frontier of the ACTIVE (last-listed) file to
   * the last COMMITTED transaction boundary
@@ -36,10 +42,23 @@ import graft.ingest.BinlogOffsetIndex
   * any DDL between transactions, is emitted exactly once once its file
   * closes; on the active file, events between the last commit and EOF
   * (an open transaction's GTID/BEGIN/rows, a trailing autocommit DDL)
-  * wait for the next closing boundary or rotation. The watched directory
-  * must be APPEND-ONLY in natural-version order while the stream (or its
-  * checkpoint) lives — the count-based source's existing contract — and
-  * only its LAST file may grow.
+  * wait for the next closing boundary or rotation. Only the LAST file
+  * may grow.
+  *
+  * Retention: files OLDER than the committed frontier may be DELETED
+  * (binlog retention / `PURGE BINARY LOGS`) while the stream or its
+  * checkpoint lives. Delete only files with suffix strictly below the
+  * last COMMITTED offset's `seq` — the frontier file itself (loudly
+  * required present when `pos > 0`) and anything newer must stay; a
+  * file purged BELOW a committed batch that later gets replayed is the
+  * same data-retention tradeoff as expired Kafka offsets, so keep
+  * retention longer than your longest replay window.
+  *
+  * Checkpoint UPGRADE is in place from the older postures: a count-based
+  * `{"n":N}` or an index-keyed `{"n":N,"pos":..}` offset is translated
+  * against the current listing at deserialize time
+  * ([[BinlogTailMicroBatchStream.TailOffset.fromJson]]; upgrade FIRST,
+  * purge after).
   *
   * `maxFilesPerTrigger` caps file COMPLETIONS per trigger; an active-file
   * advance consumes no file budget (its batch is bounded by feed growth,
@@ -68,12 +87,12 @@ private class BinlogTailMicroBatchStream(path: String, required: StructType,
     with SupportsAdmissionControl with SupportsTriggerAvailableNow
     with ReportsSourceMetrics {
 
-  import BinlogTailMicroBatchStream.TailOffset
+  import BinlogTailMicroBatchStream.{TailOffset, list, seqOf}
 
   // snapshot the listing per planning cycle so latestOffset and
   // planInputPartitions agree within one trigger
   @volatile private var lastListing: IndexedSeq[String] = Vector.empty
-  @volatile private var lastTarget: TailOffset = TailOffset(0, 0L, 0L, 0)
+  @volatile private var lastTarget: TailOffset = TailOffset.Start
   // AvailableNow bound: the frontier when the trigger started — a file
   // growing DURING the drain is consumed up to here and no further
   @volatile private var availableNowCap: Option[TailOffset] = None
@@ -81,7 +100,7 @@ private class BinlogTailMicroBatchStream(path: String, required: StructType,
   private def hadoopConf =
     org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration
 
-  override def initialOffset(): Offset = TailOffset(0, 0L, 0L, 0)
+  override def initialOffset(): Offset = TailOffset.Start
 
   override def getDefaultReadLimit: ReadLimit =
     maxFilesPerTrigger.map(ReadLimit.maxFiles).getOrElse(ReadLimit.allAvailable())
@@ -100,21 +119,26 @@ private class BinlogTailMicroBatchStream(path: String, required: StructType,
 
   /** The current end-of-feed frontier: every file but the last fully
     * consumed, the last one walked to its committed boundary starting
-    * from `initialFrom` when it names the same file index. `budget` caps
+    * from `initialFrom` when it names that same file. `budget` caps
     * file completions (admission control); `maxBytesPerTrigger` (when
     * set) soft-caps the trigger's bytes on top. */
   private def frontierTarget(initialFrom: Option[TailOffset], budget: Int,
       byteBudget: Long = maxBytesPerTrigger.getOrElse(Long.MaxValue))
       : TailOffset = {
-    val listing = BinlogScan.listFiles(path).toIndexedSeq
+    val listing = list(path)
     lastListing = listing
-    val s = initialFrom.getOrElse(TailOffset(0, 0L, 0L, 0))
-    if (listing.isEmpty || s.n >= listing.length) return s
-    TailWalk.walk(listing, s.n, s.pos, (s.pos, s.idx, s.ck),
-        frontierInLast = s.n == listing.length - 1, budget, byteBudget,
+    val s = initialFrom.getOrElse(TailOffset.Start)
+    val (i, pos, idx, ck) = s.resolve(listing)
+    if (i >= listing.length) return s // everything listed is consumed
+    TailWalk.walk(listing, i, pos, (pos, idx, ck),
+        frontierInLast = i == listing.length - 1, budget, byteBudget,
         hadoopConf) match {
-      case Left(n) => TailOffset(n, 0L, 0L, 0)
-      case Right((np, ni, nc)) => TailOffset(listing.length - 1, np, ni, nc)
+      case Left(next) =>
+        // a budget ran out before (or exactly at) the active file: the
+        // next-to-consume file's own suffix is the offset
+        TailOffset(seqOf(listing(next)), 0L, 0L, 0)
+      case Right((np, ni, nc)) =>
+        TailOffset(seqOf(listing.last), np, ni, nc)
     }
   }
 
@@ -142,37 +166,46 @@ private class BinlogTailMicroBatchStream(path: String, required: StructType,
   override def reportLatestOffset(): Offset = lastTarget
 
   override def deserializeOffset(json: String): Offset =
-    TailOffset.fromJson(json)
+    TailOffset.fromJson(json, () => list(path),
+      f => TailWalk.statLenOrUnknown(f, hadoopConf))
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[TailOffset]
     val e = end.asInstanceOf[TailOffset]
-    // highest listing index this batch touches: the start-frontier file,
-    // and the end-frontier file only when we actually read into it
-    val needed = math.max(s.n, if (e.pos > 0L) e.n else e.n - 1)
+    if (!s.lt(e)) return Array.empty
+    // the listing must cover every file this batch touches; refresh if
+    // the snapshot is stale (restart replays re-list here). The requires
+    // below guard the batch's ENDPOINT files — an interior file purged
+    // in violation of the retention contract is indistinguishable from
+    // legal sparse numbering, so replay safety for interiors rests on
+    // the documented contract: retention stays behind COMMITTED batches,
+    // never just written offsets (the same tradeoff as expired Kafka
+    // offsets).
     val listing =
-      if (lastListing.length > needed) lastListing
-      else BinlogScan.listFiles(path).toIndexedSeq
+      if (lastListing.exists(f => seqOf(f) >= e.seq)) lastListing
+      else list(path)
     lastListing = listing // restart replays re-list here; metrics too
-    require(listing.length > needed || e.lt(s) || (s.n == e.n && s.pos == e.pos),
-      s"binlog tail: watched dir lost files (need listing index $needed, " +
-        s"have ${listing.length}) — the dir must stay append-only while " +
-        "the stream or its checkpoint is live")
+    require(s.pos == 0L || listing.exists(f => seqOf(f) == s.seq),
+      s"binlog tail: replay needs file with suffix ${s.seq} " +
+        s"(consumed to ${s.pos}) but it was purged — keep retention " +
+        "longer than the replay window")
+    require(e.pos == 0L || listing.exists(f => seqOf(f) == e.seq),
+      s"binlog tail: batch end inside file with suffix ${e.seq} " +
+        "but it is missing from the listing")
     val parts = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
-    if (s.n == e.n) {
-      if (e.pos > s.pos)
-        parts += BinlogInputPartition(listing(s.n), s.pos, e.pos, s.idx, s.ck)
-    } else {
-      // the start-frontier file's remainder: rotation closed it, so
-      // reading to EOF is deterministic on replay
-      if (s.n < listing.length)
-        parts += BinlogInputPartition(listing(s.n), s.pos, Long.MaxValue,
-          s.idx, s.ck)
-      ((s.n + 1) until e.n).foreach { i =>
-        parts += BinlogInputPartition(listing(i))
+    listing.foreach { f =>
+      val fs = seqOf(f)
+      if (fs == s.seq && fs == e.seq) {
+        if (e.pos > s.pos)
+          parts += BinlogInputPartition(f, s.pos, e.pos, s.idx, s.ck)
+      } else if (fs == s.seq) {
+        // closed by rotation: the remainder reads to EOF
+        parts += BinlogInputPartition(f, s.pos, Long.MaxValue, s.idx, s.ck)
+      } else if (fs > s.seq && fs < e.seq) {
+        parts += BinlogInputPartition(f)
+      } else if (fs == e.seq && e.pos > 0L) {
+        parts += BinlogInputPartition(f, 0L, e.pos, 0L, 0)
       }
-      if (e.pos > 0L)
-        parts += BinlogInputPartition(listing(e.n), 0L, e.pos, 0L, 0)
     }
     parts.toArray
   }
@@ -183,79 +216,68 @@ private class BinlogTailMicroBatchStream(path: String, required: StructType,
       org.apache.spark.graftshim.SerializableHadoopConf.session())
 
   /** In-band lag for `StreamingQueryProgress.sources[].metrics`
-    * ([[TailMetrics.behind]] against this trigger's listing snapshot):
+    * (DSv2 `ReportsSourceMetrics`), computed from the planning cycle's
+    * listing snapshot and the latest consumed (committed) offset, so
     * dashboards see how far the committed offset trails the feed
-    * without the out-of-band [[BinlogTailOps.lagMetrics]] walk. */
+    * without the out-of-band [[BinlogTailOps.lagMetrics]] walk:
+    *
+    *   - `filesBehind` — listed files wholly beyond the consumed
+    *     frontier file (no filesystem call);
+    *   - `bytesBehind` — bytes between the consumed offset and listed
+    *     EOF: the naive Kafka-style lag, equal to `committedLagBytes +
+    *     heldBackBytes` of [[BinlogTailOps.lagMetrics]]. The in-band
+    *     number deliberately skips the commit walk that splits those two
+    *     (that walk runs once per TRIGGER for admission; re-running it
+    *     per progress event would double the driver's header I/O) — a
+    *     caught-up consumer therefore shows `bytesBehind` equal to its
+    *     held-back torn tail, and the out-of-band metric is the tool
+    *     that says whether that residue is consumable.
+    *
+    * Consumed prefixes may already be purged from the snapshot — a
+    * shrunken listing reads as less, never more, behind. Cost: one
+    * `getFileStatus` per not-fully-consumed file — for a caught-up
+    * consumer exactly one (the active file) per progress event. */
   override def metrics(latestConsumedOffset: java.util.Optional[Offset])
       : java.util.Map[String, String] = {
+    val listing = lastListing
     // NOT a blind cast: when a restart re-executes a pending batch
     // (offsets/N written, commits/N missing), Spark hands the raw
     // offset-log entry — a SerializedOffset — straight to metrics()
     // (ProgressContext.finishTrigger); Kafka's source converts in this
     // exact method for the same reason
     val c: TailOffset =
-      if (!latestConsumedOffset.isPresent) TailOffset(0, 0L, 0L, 0)
+      if (!latestConsumedOffset.isPresent) TailOffset.Start
       else latestConsumedOffset.get match {
         case t: TailOffset => t
-        case o => TailOffset.fromJson(o.json())
+        case o => deserializeOffset(o.json()).asInstanceOf[TailOffset]
       }
-    TailMetrics.behind(lastListing, c.n, c.pos, hadoopConf)
+    val (ci, cpos, _, _) = c.resolve(listing)
+    var bytes = 0L
+    (ci until listing.length).foreach { i =>
+      bytes += math.max(0L, TailWalk.statLen(listing(i), hadoopConf) -
+        (if (i == ci) cpos else 0L))
+    }
+    val m = new java.util.HashMap[String, String]()
+    m.put("filesBehind", math.max(0, listing.length - 1 - ci).toString)
+    m.put("bytesBehind", bytes.toString)
+    m
   }
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }
 
-/** The in-band source metrics both tail streams report into
-  * `StreamingQueryProgress.sources[].metrics` (DSv2
-  * `ReportsSourceMetrics`), computed from the planning cycle's listing
-  * snapshot and the latest consumed (committed) offset resolved to a
-  * (listing index, byte pos):
-  *
-  *   - `filesBehind` — listed files wholly beyond the consumed
-  *     frontier file (no filesystem call);
-  *   - `bytesBehind` — bytes between the consumed offset and listed
-  *     EOF: the naive Kafka-style lag, equal to `committedLagBytes +
-  *     heldBackBytes` of [[BinlogTailOps.lagMetrics]]. The in-band
-  *     number deliberately skips the commit walk that splits those two
-  *     (that walk runs once per TRIGGER for admission; re-running it
-  *     per progress event would double the driver's header I/O) — a
-  *     caught-up consumer therefore shows `bytesBehind` equal to its
-  *     held-back torn tail, and the out-of-band metric is the tool
-  *     that says whether that residue is consumable.
-  *
-  * Cost: one `getFileStatus` per not-fully-consumed file — for a
-  * caught-up consumer exactly one (the active file) per progress
-  * event. */
-private[sources] object TailMetrics {
-  def behind(listing: IndexedSeq[String], ci: Int, cpos: Long,
-      conf: org.apache.hadoop.conf.Configuration)
-      : java.util.Map[String, String] = {
-    val m = new java.util.HashMap[String, String]()
-    var bytes = 0L
-    var i = math.max(0, ci)
-    while (i < listing.length) {
-      bytes += math.max(0L, TailWalk.statLen(listing(i), conf) -
-        (if (i == ci) cpos else 0L))
-      i += 1
-    }
-    m.put("filesBehind", math.max(0, listing.length - 1 - ci).toString)
-    m.put("bytesBehind", bytes.toString)
-    m
-  }
-}
-
-/** The ONE copy of the tail family's admission walk, shared by both
-  * tail streams (plain index-keyed and purge-safe suffix-keyed — they
-  * differ only in how the start offset resolves to a listing index).
-  * From `startIdx` (frontier `startPos` inside `listing(startIdx)`),
-  * complete closed files under `(budget, byteBudget)` — the first file
-  * always completes (the progress guarantee) and file lengths are only
-  * stat'ed when a byte budget is actually set — then walk the LAST
-  * file's committed frontier, seeded with `seed` when the frontier is
-  * already inside it. Left(i) = a budget stopped at listing index `i`
-  * (the next file to consume, untouched); Right((pos, idx, ck)) = the
-  * last file's new committed frontier. */
+/** The tail's admission walk, shared by the stream and the out-of-band
+  * [[BinlogTailOps.lagMetrics]] so the metric cannot drift from what the
+  * stream will consume. From `startIdx` (frontier `startPos` inside
+  * `listing(startIdx)`), complete closed files under `(budget,
+  * byteBudget)` — the first file always completes (the progress
+  * guarantee) and file lengths are only stat'ed when a byte budget is
+  * actually set — then walk the LAST file's committed frontier, seeded
+  * with `seed` when the frontier is already inside it. Left(i) = a
+  * budget stopped at listing index `i` (the next file to consume,
+  * untouched); Right((pos, idx, ck)) = the last file's new committed
+  * frontier. */
 private[sources] object TailWalk {
   def walk(listing: IndexedSeq[String], startIdx: Int, startPos: Long,
       seed: (Long, Long, Int), frontierInLast: Boolean, budget: Int,
@@ -301,335 +323,126 @@ private[sources] object TailWalk {
   }
 }
 
-/** The PURGE-SAFE tail (`tailActive=true, purgeSafe=true`): offsets are
-  * keyed by the binlog file's own numeric suffix — MySQL's native
-  * (file, pos) coordinate — instead of an index into the directory
-  * listing, so files OLDER than the committed frontier may be DELETED
-  * (binlog retention / `PURGE BINARY LOGS`) while the stream or its
-  * checkpoint lives. The count-based and plain-tail postures both
-  * require the watched directory to be append-only FOREVER (a listing
-  * shift breaks index-based offsets) — a contract no year-long
-  * deployment can honor.
-  *
-  * The offset is `(seq, pos, idx, ck)`: every file whose suffix is
-  * `< seq` is fully consumed; the file with suffix `== seq` (when
-  * present) is consumed to byte `pos` with decoder seed `(idx, ck)`.
-  * The caught-up canonical form is `(lastSeq + 1, 0, 0, 0)` — "waiting
-  * for a file that does not exist yet", which rotation then creates.
-  * Purge contract: delete only files with suffix strictly below the
-  * last COMMITTED offset's `seq` — the frontier file itself (loudly
-  * required present when `pos > 0`) and anything newer must stay; a
-  * file purged BELOW a committed batch that later gets replayed is the
-  * same data-retention tradeoff as expired Kafka offsets, so keep
-  * retention longer than your longest replay window.
-  *
-  * Checkpoint UPGRADE is in-place from BOTH older postures: a
-  * count-based `{"n":N}` or plain-tail `{"n":N,"pos":..}` offset is
-  * translated against the current listing at deserialize time (valid
-  * while nothing has been purged yet — upgrade FIRST, purge after; the
-  * translation validates what it can: the listing must still hold the
-  * counted files, and a mid-file frontier's file must be at least
-  * `pos` bytes long — but a purge exactly balanced by newer rotations
-  * is undetectable from a count, hence the upgrade-first contract).
-  */
-private class BinlogPurgeTailMicroBatchStream(path: String,
-    required: StructType, maxFilesPerTrigger: Option[Int],
-    maxBytesPerTrigger: Option[Long] = None)
-    extends MicroBatchStream
-    with SupportsAdmissionControl with SupportsTriggerAvailableNow
-    with ReportsSourceMetrics {
+private[sources] object BinlogTailMicroBatchStream {
 
-  import BinlogPurgeTailMicroBatchStream.SeqOffset
+  def seqOf(file: String): Long = BinlogScan.fileSeqKey(file.split('/').last)
 
-  @volatile private var lastListing: IndexedSeq[String] = Vector.empty
-  @volatile private var lastTarget: SeqOffset = SeqOffset(0L, 0L, 0L, 0)
-  @volatile private var availableNowCap: Option[SeqOffset] = None
-
-  private def hadoopConf =
-    org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration
-
-  private def seqOf(file: String): Long =
-    BinlogScan.fileSeqKey(file.split('/').last)
-
-  /** Suffix-keyed offsets need the suffix to be a REAL key: every listed
-    * file must carry a numeric suffix and suffixes must be unique —
-    * otherwise two files collapse onto one key (e.g. MySQL's own
-    * `mysql-bin.index`, or any stray non-binlog file, maps to the
-    * no-suffix sentinel) and the stream would plan duplicate partitions
-    * over the same byte range. The plain tail's positional offsets are
-    * immune; this posture checks the listing every planning cycle. */
-  private def checkedSeqs(listing: IndexedSeq[String]): IndexedSeq[String] = {
+  /** The watched directory's natural-order listing, checked: suffix-keyed
+    * offsets need the suffix to be a REAL key — every listed file must
+    * carry a numeric suffix and suffixes must be unique. Otherwise a
+    * suffix-less file (MySQL's own `mysql-bin.index`, any stray
+    * non-binlog file) would sort last and be framed as the active file,
+    * turning the real active file's torn tail into a "closed" remainder,
+    * and two files sharing a key would plan duplicate partitions over
+    * one byte range. Checked every planning cycle. */
+  def list(path: String): IndexedSeq[String] = {
+    val listing = BinlogScan.listFiles(path).toIndexedSeq
     listing.foreach { f =>
-      require(seqOf(f) != Long.MaxValue,
-        s"purgeSafe needs numeric binlog suffixes; '$f' has none — point " +
-          "the source at a directory of binlog data files only")
+      require(BinlogTextParser.fileSeq(f.split('/').last).isDefined,
+        s"the binlog tail needs numeric binlog suffixes; '$f' has none — " +
+          "point the source at a directory of binlog data files only")
     }
     val dup = listing.groupBy(seqOf).collectFirst {
-      case (s, fs) if fs.length > 1 => fs
+      case (_, fs) if fs.length > 1 => fs
     }
     require(dup.isEmpty,
-      s"purgeSafe needs unique binlog suffixes; duplicates: ${dup.get}")
+      s"the binlog tail needs unique binlog suffixes; duplicates: ${dup.get}")
     listing
   }
 
-  override def initialOffset(): Offset = SeqOffset(0L, 0L, 0L, 0)
-
-  override def getDefaultReadLimit: ReadLimit =
-    maxFilesPerTrigger.map(ReadLimit.maxFiles).getOrElse(ReadLimit.allAvailable())
-
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableNowCap = Some(frontierTarget(initialFrom = None,
-      budget = Int.MaxValue, byteBudget = Long.MaxValue))
-
-  /** Mirror of [[BinlogTailMicroBatchStream]]'s frontier walk, with the
-    * start resolved by SUFFIX against the current listing (consumed
-    * prefixes may have been purged away). */
-  private def frontierTarget(initialFrom: Option[SeqOffset], budget: Int,
-      byteBudget: Long = maxBytesPerTrigger.getOrElse(Long.MaxValue))
-      : SeqOffset = {
-    val listing = checkedSeqs(BinlogScan.listFiles(path).toIndexedSeq)
-    lastListing = listing
-    val s = initialFrom.getOrElse(SeqOffset(0L, 0L, 0L, 0))
-    if (listing.isEmpty) return s
-    // first listed file at or past the frontier suffix
-    val startIdx = listing.indexWhere(f => seqOf(f) >= s.seq)
-    if (startIdx == -1) return s // everything listed is already consumed
-    require(seqOf(listing(startIdx)) == s.seq || s.pos == 0L,
-      s"binlog purge-tail: frontier file with suffix ${s.seq} has " +
-        s"unconsumed bytes past ${s.pos} but is missing from the listing " +
-        "— purge only files with suffix BELOW the committed frontier")
-    // startPos is s.pos exactly when the frontier file is present at
-    // startIdx (required above whenever pos > 0)
-    TailWalk.walk(listing, startIdx, s.pos, (s.pos, s.idx, s.ck),
-        frontierInLast = seqOf(listing(listing.length - 1)) == s.seq,
-        budget, byteBudget, hadoopConf) match {
-      case Left(i) =>
-        // a budget ran out before (or exactly at) the active file: the
-        // next-to-consume file's own suffix is the offset
-        SeqOffset(seqOf(listing(i)), 0L, 0L, 0)
-      case Right((np, ni, nc)) =>
-        SeqOffset(seqOf(listing(listing.length - 1)), np, ni, nc)
-    }
-  }
-
-  override def latestOffset(): Offset =
-    throw new UnsupportedOperationException(
-      "latestOffset(Offset, ReadLimit) should be called with SupportsAdmissionControl")
-
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val s = start.asInstanceOf[SeqOffset]
-    val budget = limit match {
-      case m: ReadMaxFiles => m.maxFiles
-      case _ => Int.MaxValue
-    }
-    val target = frontierTarget(Some(s), budget)
-    val capped = availableNowCap match {
-      case Some(cap) if cap.lt(target) => cap
-      case _ => target
-    }
-    lastTarget = capped
-    if (capped.lt(s)) s else capped
-  }
-
-  override def reportLatestOffset(): Offset = lastTarget
-
-  /** Accepts this stream's own `{"seq":…}` form AND the two older
-    * postures' offsets, translated against the CURRENT listing (upgrade
-    * before purging — the translation requires the listing to still
-    * contain the files the index-based offset counts). */
-  override def deserializeOffset(json: String): Offset =
-    SeqOffset.fromJsonOrLegacy(json,
-      () => BinlogScan.listFiles(path).toIndexedSeq, seqOf,
-      f => TailWalk.statLenOrUnknown(f, hadoopConf))
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[SeqOffset]
-    val e = end.asInstanceOf[SeqOffset]
-    if (!s.lt(e)) return Array.empty
-    // the listing must cover every file this batch touches; refresh if
-    // the snapshot is stale (restart replays re-list here). The requires
-    // below guard the batch's ENDPOINT files — an interior file purged
-    // in violation of the retention contract is indistinguishable from
-    // legal sparse numbering, so replay safety for interiors rests on
-    // the documented contract: retention stays behind COMMITTED batches,
-    // never just written offsets (the same tradeoff as expired Kafka
-    // offsets).
-    val listing =
-      if (lastListing.exists(f => seqOf(f) >= e.seq)) lastListing
-      else checkedSeqs(BinlogScan.listFiles(path).toIndexedSeq)
-    lastListing = listing // restart replays re-list here; metrics too
-    require(s.pos == 0L || listing.exists(f => seqOf(f) == s.seq),
-      s"binlog purge-tail: replay needs file with suffix ${s.seq} " +
-        s"(consumed to ${s.pos}) but it was purged — keep retention " +
-        "longer than the replay window")
-    require(e.pos == 0L || listing.exists(f => seqOf(f) == e.seq),
-      s"binlog purge-tail: batch end inside file with suffix ${e.seq} " +
-        "but it is missing from the listing")
-    val parts = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
-    listing.foreach { f =>
-      val fs = seqOf(f)
-      if (fs == s.seq && fs == e.seq) {
-        if (e.pos > s.pos)
-          parts += BinlogInputPartition(f, s.pos, e.pos, s.idx, s.ck)
-      } else if (fs == s.seq) {
-        // closed by rotation: the remainder reads to EOF
-        parts += BinlogInputPartition(f, s.pos, Long.MaxValue, s.idx, s.ck)
-      } else if (fs > s.seq && fs < e.seq) {
-        parts += BinlogInputPartition(f)
-      } else if (fs == e.seq && e.pos > 0L) {
-        parts += BinlogInputPartition(f, 0L, e.pos, 0L, 0)
-      }
-    }
-    parts.toArray
-  }
-
-  override def createReaderFactory()
-      : org.apache.spark.sql.connector.read.PartitionReaderFactory =
-    new BinlogReaderFactory(required,
-      org.apache.spark.graftshim.SerializableHadoopConf.session())
-
-  /** In-band lag ([[TailMetrics.behind]]); the consumed SUFFIX resolves
-    * against the listing snapshot, where consumed prefixes may already
-    * be purged away — a shrunken listing reads as less, never more,
-    * behind. */
-  override def metrics(latestConsumedOffset: java.util.Optional[Offset])
-      : java.util.Map[String, String] = {
-    val listing = lastListing
-    // converts SerializedOffset like the plain tail's metrics() — the
-    // pending-batch re-execution path hands the raw offset-log entry
-    val c: SeqOffset =
-      if (!latestConsumedOffset.isPresent) SeqOffset(0L, 0L, 0L, 0)
-      else latestConsumedOffset.get match {
-        case s: SeqOffset => s
-        case o => SeqOffset.fromJsonOrLegacy(o.json(),
-          () => BinlogScan.listFiles(path).toIndexedSeq, seqOf,
-          f => TailWalk.statLenOrUnknown(f, hadoopConf))
-      }
-    val i = listing.indexWhere(f => seqOf(f) >= c.seq)
-    val ci = if (i == -1) listing.length else i
-    val cpos = if (ci < listing.length && seqOf(listing(ci)) == c.seq) c.pos
-      else 0L
-    TailMetrics.behind(listing, ci, cpos, hadoopConf)
-  }
-
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
-}
-
-private object BinlogPurgeTailMicroBatchStream {
-
-  /** See [[BinlogPurgeTailMicroBatchStream]]'s offset contract. */
-  case class SeqOffset(seq: Long, pos: Long, idx: Long, ck: Int)
+  /** See [[BinlogTailMicroBatchStream]]'s offset contract. */
+  case class TailOffset(seq: Long, pos: Long, idx: Long, ck: Int)
       extends Offset {
     override def json(): String =
       s"""{"seq":$seq,"pos":$pos,"idx":$idx,"ck":$ck}"""
 
     /** Strict feed-order comparison (file suffix, then byte frontier). */
-    def lt(other: SeqOffset): Boolean =
-      seq < other.seq || (seq == other.seq && pos < other.pos)
-  }
-
-  object SeqOffset {
-    private def field(json: String, name: String): Option[Long] =
-      ("\"" + name + "\"\\s*:\\s*(-?\\d+)").r.findFirstMatchIn(json)
-        .map(_.group(1).toLong)
-
-    /** Parse this stream's own form, or translate a count-based /
-      * plain-tail index-based offset against the current listing — the
-      * in-place upgrade path. The translation validates what it CAN:
-      * the listing must still hold at least the counted files, the
-      * mid-file frontier file must exist, and (`lenOf`) that file must
-      * be at least `pos` bytes long — a purge masked by at least as
-      * many newer rotations passes the count check with a SHIFTED
-      * listing, and the wrong file is usually shorter than the
-      * frontier. A purge-before-upgrade that is exactly balanced by
-      * newly rotated files of sufficient length remains UNDETECTABLE
-      * from a count — which is why the contract is upgrade FIRST (run
-      * one purgeSafe batch so a suffix-keyed offset commits), purge
-      * after. */
-    def fromJsonOrLegacy(json: String, list: () => IndexedSeq[String],
-        seqOf: String => Long,
-        lenOf: String => Long = _ => Long.MaxValue): SeqOffset =
-      field(json, "seq") match {
-        case Some(seq) =>
-          val pos = field(json, "pos").getOrElse(0L)
-          // a pos without its decoder seed is a corrupt offset, not an
-          // upgrade form — resuming with a zero seed mis-numbers every
-          // event and leaks checksum bytes into row decoding
-          def req(name: String): Long =
-            field(json, name).getOrElse(throw new IllegalArgumentException(
-              s"bad binlog purge-tail offset (pos without $name): $json"))
-          if (pos == 0L) SeqOffset(seq, 0L, 0L, 0)
-          else SeqOffset(seq, pos, req("idx"), req("ck").toInt)
-        case None =>
-          // legacy index-based form: {"n":N[,"pos":..,"idx":..,"ck":..]}
-          val legacy = BinlogTailMicroBatchStream.TailOffset.fromJson(json)
-          if (legacy.n == 0 && legacy.pos == 0L) return SeqOffset(0L, 0L, 0L, 0)
-          val listing = list()
-          require(listing.length >= legacy.n,
-            s"cannot upgrade index-based offset $json to purgeSafe: the " +
-              s"listing has only ${listing.length} files — upgrade the " +
-              "checkpoint BEFORE purging")
-          if (legacy.pos > 0L) {
-            require(listing.length > legacy.n,
-              s"cannot upgrade index-based offset $json to purgeSafe: " +
-                s"its frontier file (index ${legacy.n}) is missing")
-            require(lenOf(listing(legacy.n)) >= legacy.pos,
-              s"cannot upgrade index-based offset $json to purgeSafe: " +
-                s"${listing(legacy.n)} is shorter than the frontier pos " +
-                s"${legacy.pos} — the listing shifted under the index " +
-                "(purge before upgrade?); upgrade the checkpoint BEFORE " +
-                "purging")
-            SeqOffset(seqOf(listing(legacy.n)), legacy.pos, legacy.idx,
-              legacy.ck)
-          } else if (listing.length > legacy.n)
-            SeqOffset(seqOf(listing(legacy.n)), 0L, 0L, 0)
-          else // caught up: waiting for the next file to be created
-            SeqOffset(seqOf(listing(legacy.n - 1)) + 1L, 0L, 0L, 0)
-      }
-  }
-}
-
-private object BinlogTailMicroBatchStream {
-
-  /** See [[BinlogTailMicroBatchStream]]'s offset contract. `pos == 0`
-    * with `n == listing length` is the canonical "everything consumed,
-    * next file not yet created" form. */
-  case class TailOffset(n: Int, pos: Long, idx: Long, ck: Int) extends Offset {
-    override def json(): String =
-      s"""{"n":$n,"pos":$pos,"idx":$idx,"ck":$ck}"""
-
-    /** Strict feed-order comparison (file index, then byte frontier). */
     def lt(other: TailOffset): Boolean =
-      n < other.n || (n == other.n && pos < other.pos)
+      seq < other.seq || (seq == other.seq && pos < other.pos)
+
+    /** This offset against a [[list]]ing, as `(i, pos, idx, ck)`: `i` is
+      * the first listed file at or past `seq` (the listing length when
+      * everything listed is consumed); the byte frontier and decoder seed
+      * apply when that file IS the frontier file, and are zero otherwise
+      * (the frontier file is untouched, or was purged or not yet created
+      * with nothing consumed in it). A newer file listed in place of a
+      * frontier file with consumed bytes is refused — the frontier file
+      * was purged too aggressively, and resuming anywhere else would lose
+      * or re-serve. */
+    def resolve(listing: IndexedSeq[String]): (Int, Long, Long, Int) = {
+      val i = listing.indexWhere(f => seqOf(f) >= seq)
+      if (i == -1) (listing.length, 0L, 0L, 0)
+      else if (seqOf(listing(i)) == seq) (i, pos, idx, ck)
+      else {
+        require(pos == 0L,
+          s"binlog tail: frontier file with suffix $seq has unconsumed " +
+            s"bytes past $pos but is missing from the listing — purge " +
+            "only files with suffix BELOW the committed frontier")
+        (i, 0L, 0L, 0)
+      }
+    }
   }
 
   object TailOffset {
+    val Start: TailOffset = TailOffset(0L, 0L, 0L, 0)
+
     private def field(json: String, name: String): Option[Long] =
       ("\"" + name + "\"\\s*:\\s*(-?\\d+)").r.findFirstMatchIn(json)
         .map(_.group(1).toLong)
 
-    /** Accepts two forms: the tail source's own full offset, and the
-      * count-based source's `{"n":N}` (N whole files consumed — by
-      * construction no mid-file position), which parses as frontier 0:
-      * an existing deployment upgrades to `tailActive=true` IN PLACE,
-      * no re-snapshot. The defaults apply ONLY when `pos` is absent —
-      * a `pos` WITHOUT its decoder seed (`idx`/`ck`) is a corrupt tail
-      * offset, and resuming it with a zero seed would mis-number every
-      * event and leak checksum bytes into row decoding; it throws, as
-      * it always did. The reverse migration is rejected by the
-      * count-based parser (a nonzero `pos` has no whole-file
-      * representation). */
-    def fromJson(json: String): TailOffset = {
-      val n = field(json, "n").getOrElse(throw new IllegalArgumentException(
-        s"bad binlog tail offset (no n): $json")).toInt
-      field(json, "pos") match {
-        case None => TailOffset(n, 0L, 0L, 0) // count-based form
-        case Some(pos) =>
-          def req(name: String): Long =
-            field(json, name).getOrElse(throw new IllegalArgumentException(
-              s"bad binlog tail offset (pos without $name): $json"))
-          TailOffset(n, pos, req("idx"), req("ck").toInt)
+    /** Parse this stream's own `{"seq":…}` form, or translate an older
+      * posture's offset against the current listing `list()` — the
+      * in-place upgrade path:
+      *   - count-based `{"n":N}` — N whole files consumed, by
+      *     construction no mid-file position — so an existing deployment
+      *     upgrades to `tailActive=true` with no re-snapshot;
+      *   - index-keyed `{"n":N,"pos":..,"idx":..,"ck":..}` — the listing-
+      *     index tail this stream replaced.
+      * A nonzero `pos` WITHOUT its decoder seed (`idx`/`ck`) is a corrupt
+      * offset, not an upgrade form: resuming with a zero seed would
+      * mis-number every event and leak checksum bytes into row decoding,
+      * so it throws. The translation validates what it CAN: the listing
+      * must still hold at least the counted files, the mid-file frontier
+      * file must exist, and (`lenOf`) that file must be at least `pos`
+      * bytes long — a purge masked by at least as many newer rotations
+      * passes the count check with a SHIFTED listing, and the wrong file
+      * is usually shorter than the frontier. A purge-before-upgrade that
+      * is exactly balanced by newly rotated files of sufficient length
+      * remains UNDETECTABLE from a count — which is why the contract is
+      * upgrade FIRST (let one tail batch commit a suffix-keyed offset),
+      * purge after. The reverse migration is rejected by the count-based
+      * parser. */
+    def fromJson(json: String, list: () => IndexedSeq[String],
+        lenOf: String => Long = _ => Long.MaxValue): TailOffset = {
+      val pos = field(json, "pos").getOrElse(0L)
+      def req(name: String): Long =
+        field(json, name).getOrElse(throw new IllegalArgumentException(
+          s"bad binlog tail offset (pos without $name): $json"))
+      val (idx, ck) = if (pos == 0L) (0L, 0) else (req("idx"), req("ck").toInt)
+      field(json, "seq") match {
+        case Some(seq) => TailOffset(seq, pos, idx, ck)
+        case None =>
+          val n = field(json, "n").getOrElse(throw new IllegalArgumentException(
+            s"bad binlog tail offset (no seq or n): $json")).toInt
+          if (n == 0 && pos == 0L) return Start
+          val listing = list()
+          def refuse(why: String): String =
+            s"cannot upgrade index-based offset $json to a suffix-keyed " +
+              s"one: $why"
+          require(listing.length >= n, refuse(s"the listing has only " +
+            s"${listing.length} files — upgrade the checkpoint BEFORE purging"))
+          if (pos > 0L) {
+            require(listing.length > n,
+              refuse(s"its frontier file (index $n) is missing"))
+            require(lenOf(listing(n)) >= pos, refuse(s"${listing(n)} is " +
+              s"shorter than the frontier pos $pos — the listing shifted " +
+              "under the index (purge before upgrade?); upgrade the " +
+              "checkpoint BEFORE purging"))
+            TailOffset(seqOf(listing(n)), pos, idx, ck)
+          } else if (listing.length > n)
+            TailOffset(seqOf(listing(n)), 0L, 0L, 0)
+          else // caught up: waiting for the next file to be created
+            TailOffset(seqOf(listing(n - 1)) + 1L, 0L, 0L, 0)
       }
     }
   }

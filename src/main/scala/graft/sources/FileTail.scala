@@ -22,9 +22,12 @@ private[sources] abstract class FileCountMicroBatchStream[A](
     with SupportsAdmissionControl with SupportsTriggerAvailableNow
     with ReportsSourceMetrics {
 
-  /** The partitions for one consumed file — usually one, but a source
-    * with an intra-file split index fans a huge file into several. */
-  protected def makePartitions(a: A): Seq[InputPartition]
+  /** The partitions for one trigger's slice of consumed files — usually
+    * one per file, but a source with an intra-file split index fans a
+    * huge file into several, and may do a batch side effect for the
+    * whole slice (building the shards of every file new to this trigger
+    * in ONE job) instead of once per file. */
+  protected def planSlice(slice: Seq[A]): Seq[InputPartition]
 
   /** Byte length of one unconsumed listing element for the in-band
     * `bytesBehind` metric; a negative return means "unknown" and
@@ -33,12 +36,6 @@ private[sources] abstract class FileCountMicroBatchStream[A](
     * answer for free; the binlog subclass pays one stat per
     * not-yet-consumed file per progress event. */
   protected def byteLen(a: A): Long = -1L
-
-  /** Called once per [[planInputPartitions]] with the trigger's whole
-    * slice, before any [[makePartitions]] call — a source needing a batch
-    * side effect (e.g. building the split-index shards for every file new
-    * to this trigger in ONE job) does it here instead of once per file. */
-  protected def prepareSlice(files: Seq[A]): Unit = ()
 
   private case class FileCountOffset(n: Int) extends Offset {
     override def json(): String = s"""{"n":$n}"""
@@ -76,11 +73,18 @@ private[sources] abstract class FileCountMicroBatchStream[A](
   override def reportLatestOffset(): Offset = FileCountOffset(lastListing.length)
 
   override def deserializeOffset(json: String): Offset = {
-    // a tail-source checkpoint mid-file (nonzero pos) has no whole-file
-    // representation: silently reading just `n` would re-serve the
-    // consumed prefix of file n. Upgrading count→tail is supported
-    // (TailOffset.fromJson defaults the missing fields); downgrading
-    // tail→count is only safe at a file boundary — reject loudly.
+    // upgrading count→tail is supported (TailOffset.fromJson translates
+    // `{"n":N}`); the reverse is refused loudly. A tail offset is keyed
+    // by file SUFFIX, which is not a listing count once files have been
+    // purged, so no `seq` offset downgrades — not even at a file
+    // boundary. An older index-keyed tail offset mid-file (nonzero pos)
+    // has no whole-file representation: silently reading just `n` would
+    // re-serve the consumed prefix of file n.
+    if (json.contains("\"seq\""))
+      throw new IllegalArgumentException(
+        s"checkpoint offset $json was written by the tailActive source, " +
+          "whose offsets are keyed by file suffix; the count-based source " +
+          "cannot resume it — keep tailActive=true on this checkpoint")
     "\"pos\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(json)
       .filter(_.group(1).toLong != 0L)
       .foreach { m =>
@@ -102,13 +106,11 @@ private[sources] abstract class FileCountMicroBatchStream[A](
     // metrics for that batch must not see an empty listing)
     val listing = if (lastListing.length >= e) lastListing else list()
     lastListing = listing
-    val slice = listing.slice(s, e)
-    prepareSlice(slice)
-    slice.flatMap(makePartitions).toArray
+    planSlice(listing.slice(s, e)).toArray
   }
 
   /** In-band lag for `StreamingQueryProgress.sources[].metrics`, the
-    * count-based analogue of the tail streams' [[TailMetrics]]:
+    * count-based analogue of [[BinlogTailMicroBatchStream]]'s:
     * `filesBehind` vs the planning cycle's listing snapshot, plus
     * `bytesBehind` when [[byteLen]] answers. Raw serialized offsets
     * (the pending-batch re-execution path) convert via the json form,

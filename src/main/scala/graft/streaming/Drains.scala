@@ -13,7 +13,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
   *     dial; [[drainToParquet]] adds the parquet sink and its read-back;
   *   - [[drainBinlog]] — the one binlog feed: N feeds unioned into one
   *     query, file by file (`maxFilesPerTrigger=1`), optionally in the
-  *     `tailActive` and `purgeSafe` postures, `foreachBatch`;
+  *     `tailActive` posture, `foreachBatch`;
   *   - [[Redelivery]] — the exactly-once proof's recorder: remember which
   *     file(s) batch 0 ACTUALLY processed, then re-apply that batch from
   *     them after the drain, under the same dial — the injected
@@ -186,25 +186,19 @@ object Drains {
     * `apply` sees ONE batch stream — the scale-out shape of a fleet of
     * database shards into one maintained state, one checkpoint.
     *
-    *   - `tail`: the ACTIVE-file source — (file, byte-frontier) offsets,
-    *     torn tail held back in-source. Gates call it once per
-    *     installment against ONE checkpoint, appending bytes to the
-    *     growing last file between runs.
-    *   - `purgeSafe` (tail only): suffix-keyed offsets, so files below
-    *     the committed frontier may be DELETED between runs — the
-    *     binlog-retention posture an index-keyed stream cannot survive.
-    *     Under a union each shard's retention deletes its own consumed
-    *     files independently, and a restart resumes every shard from its
-    *     own suffix frontier. */
+    * `tail` selects the ACTIVE-file source — (file suffix,
+    * byte-frontier) offsets, torn tail held back in-source. Gates call it
+    * once per installment against ONE checkpoint, appending bytes to the
+    * growing last file between runs; files below the committed frontier
+    * may be DELETED between runs (binlog retention). Under a union each
+    * shard's retention deletes its own consumed files independently, and
+    * a restart resumes every shard from its own suffix frontier. */
   def drainBinlog(spark: SparkSession, feeds: Seq[String], ckpt: String,
-      tail: Boolean = false, purgeSafe: Boolean = false)
-      (apply: (DataFrame, Long) => Unit): Unit = {
+      tail: Boolean = false)(apply: (DataFrame, Long) => Unit): Unit = {
     require(feeds.nonEmpty, "a binlog drain needs at least one feed")
-    require(!purgeSafe || tail, "purgeSafe offsets need the tailActive source")
     def src(feed: String): DataFrame = {
       val r = spark.readStream.format("binlog").option("maxFilesPerTrigger", 1)
-      val t = if (tail) r.option("tailActive", "true") else r
-      (if (purgeSafe) t.option("purgeSafe", "true") else t).load(feed)
+      (if (tail) r.option("tailActive", "true") else r).load(feed)
     }
     drain(spark, feeds.map(src).reduce(_ unionByName _).writeStream
       .foreachBatch(apply), ckpt)

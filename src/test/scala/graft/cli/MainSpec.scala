@@ -220,13 +220,17 @@ class MainSpec extends AnyFunSuite with SparkTestSession {
   test("parseArgs: repeated --follow accumulates dirs IN ORDER (the " +
       "order is the checkpoint's offset pairing); pacing flags parse") {
     val a = Main.parseArgs(List("--follow", "/a", "--follow", "/b",
-      "--purge-safe", "--max-bytes-per-trigger", "1024",
+      "--max-bytes-per-trigger", "1024",
       "--max-files-per-trigger", "3", "--out", "/o"))
     assert(a.follow == Seq("/a", "/b"))
-    assert(a.purgeSafe)
     assert(a.maxBytesPerTrigger.contains(1024L))
     assert(a.maxFilesPerTrigger.contains(3))
     assert(a.out == "/o")
+    // the retired flag fails loudly: --follow always survives retention
+    val ex = intercept[IllegalArgumentException] {
+      Main.parseArgs(List("--follow", "/a", "--purge-safe"))
+    }
+    assert(ex.getMessage.contains("unknown argument: --purge-safe"))
   }
 
   test("--follow: tails a live binlog dir into per-table exactly-once " +
@@ -270,7 +274,7 @@ class MainSpec extends AnyFunSuite with SparkTestSession {
     Files.write(new java.io.File(feed, "mysql-bin.000009").toPath, f.bytes)
 
     def census(): Map[String, (Long, Long)] =
-      Main.follow(spark, Seq(feed.getPath), out, purgeSafe = true)
+      Main.follow(spark, Seq(feed.getPath), out)
         .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
         .toMap
     // pass 1: both tables served, the torn row held back — ta has 4
@@ -279,7 +283,7 @@ class MainSpec extends AnyFunSuite with SparkTestSession {
     assert(census() == Map("sf.ta" -> (2L, 4L), "sf.tb" -> (1L, 2L)))
     // an idle second pass changes nothing (exactly-once across runs)
     assert(census() == Map("sf.ta" -> (2L, 4L), "sf.tb" -> (1L, 2L)))
-    // retention purges the consumed closed files (purge-safe offsets);
+    // retention purges the consumed closed files (suffix-keyed offsets);
     // the torn txn completes on the wire; a new tb file arrives
     assert(new java.io.File(feed, "mysql-bin.000001").delete())
     assert(new java.io.File(feed, "mysql-bin.000002").delete())
@@ -320,7 +324,7 @@ class MainSpec extends AnyFunSuite with SparkTestSession {
       .foreach(f => assert(f.renameTo(new java.io.File(feedB, f.getName))))
     val out2 = new java.io.File(root, "out2").getPath
     val merged = Main.follow(spark,
-        Seq(feed.getPath, feedB.getPath), out2, purgeSafe = true)
+        Seq(feed.getPath, feedB.getPath), out2)
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
       .toMap
     assert(merged == Map("sf.ta" -> (2L, 2L), "sf.tb" -> (2L, 3L)),
@@ -334,14 +338,13 @@ class MainSpec extends AnyFunSuite with SparkTestSession {
     // the dirs reordered (or renamed) must refuse loudly instead of
     // silently handing each feed another feed's offsets
     val exOrder = intercept[IllegalArgumentException] {
-      Main.follow(spark, Seq(feedB.getPath, feed.getPath), out2,
-        purgeSafe = true)
+      Main.follow(spark, Seq(feedB.getPath, feed.getPath), out2)
     }
     assert(exOrder.getMessage.contains("SAME order"), s"got: $exOrder")
     // and the same dir twice is two streams double-ingesting one feed
     val exDup = intercept[IllegalArgumentException] {
       Main.follow(spark, Seq(feed.getPath, feed.getPath),
-        new java.io.File(root, "out3").getPath, purgeSafe = true)
+        new java.io.File(root, "out3").getPath)
     }
     assert(exDup.getMessage.contains("twice"), s"got: $exDup")
   }
@@ -373,7 +376,7 @@ class MainSpec extends AnyFunSuite with SparkTestSession {
     spark.sparkContext.addSparkListener(listener)
     val censusDf =
       try {
-        val df = Main.follow(spark, Seq(feed.getPath), out, purgeSafe = false)
+        val df = Main.follow(spark, Seq(feed.getPath), out)
         // follow's streaming work is done at return (AvailableNow drained);
         // give the async listener bus a moment to deliver the tail
         Thread.sleep(1500)
@@ -413,7 +416,7 @@ class MainSpec extends AnyFunSuite with SparkTestSession {
     txn(f1, 901L, 7001L, Seq(1L, 2L)); txn(f1, 902L, 7002L, Seq(3L))
     Files.write(new java.io.File(feed, "mysql-bin.000001").toPath, f1.bytes)
     def census(discardFrom: Option[Long]): Map[String, (Long, Long)] =
-      Main.follow(spark, Seq(feed.getPath), out, purgeSafe = false,
+      Main.follow(spark, Seq(feed.getPath), out,
           gtidState = true, gtidDiscardFrom = discardFrom)
         .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
         .toMap
@@ -460,7 +463,7 @@ class MainSpec extends AnyFunSuite with SparkTestSession {
     // two files -> drained file-per-trigger so marks 0 and 1 both exist
     stage(Seq((1, 1L, "a"), (1, 2L, "b")).toDF("op", "k", "v"), "ta", 21L, 1)
     stage(Seq((1, 10L, 7L)).toDF("op", "k", "x"), "tb", 22L, 2)
-    Main.follow(spark, Seq(feed.getPath), out, purgeSafe = false,
+    Main.follow(spark, Seq(feed.getPath), out,
       maxFilesPerTrigger = Some(1), maxBytesPerTrigger = None).collect()
     val tablesRoot = s"$out/tables"
     def m(df: org.apache.spark.sql.DataFrame): Map[String, (Long, Long)] =
@@ -507,7 +510,7 @@ class MainSpec extends AnyFunSuite with SparkTestSession {
     // simulate the r15 layout: a flat <db>.<tbl> state dir
     assert(new java.io.File(out, "tables/sf.ta/batch_id=0").mkdirs())
     val ex = intercept[IllegalArgumentException] {
-      Main.follow(spark, Seq(feed.getPath), out.getPath, purgeSafe = false)
+      Main.follow(spark, Seq(feed.getPath), out.getPath)
     }
     assert(ex.getMessage.contains("pre-r16"), s"got: $ex")
     // refused BEFORE the feeds manifest was pinned — a corrected re-run

@@ -101,22 +101,29 @@ class BinlogTailSpec extends AnyFunSuite with SparkTestSession {
 
   test("TailOffset: json round-trip and feed ordering") {
     import BinlogTailMicroBatchStream.TailOffset
-    val o = TailOffset(3, 12345L, 42L, 4)
-    assert(TailOffset.fromJson(o.json()) == o)
-    assert(TailOffset(2, 999L, 0L, 0).lt(o))
-    assert(TailOffset(3, 12344L, 0L, 0).lt(o))
+    val listing = Vector("/x/mysql-bin.000007", "/x/mysql-bin.000008")
+    def parse(json: String): TailOffset = TailOffset.fromJson(json, () => listing)
+    val o = TailOffset(3L, 12345L, 42L, 4)
+    assert(parse(o.json()) == o)
+    assert(TailOffset(2L, 999L, 0L, 0).lt(o))
+    assert(TailOffset(3L, 12344L, 0L, 0).lt(o))
     assert(!o.lt(o))
-    // the count-based source's offset form parses as "n whole files
-    // consumed, frontier 0" — the in-place upgrade path
-    assert(TailOffset.fromJson("{\"n\":1}") == TailOffset(1, 0L, 0L, 0))
-    intercept[IllegalArgumentException] { TailOffset.fromJson("{}") }
+    // the count-based source's offset form translates as "n whole files
+    // consumed, frontier 0" — the in-place upgrade path: the n-th listed
+    // file's own suffix, or one past the last when all n are consumed
+    assert(parse("{\"n\":1}") == TailOffset(8L, 0L, 0L, 0))
+    assert(parse("{\"n\":2}") == TailOffset(9L, 0L, 0L, 0))
+    intercept[IllegalArgumentException] { parse("{}") }
     // a pos WITHOUT its decoder seed is a corrupt tail offset, not an
     // upgrade — resuming with a zero seed would mis-number every event
     intercept[IllegalArgumentException] {
-      TailOffset.fromJson("{\"n\":2,\"pos\":81234}")
+      parse("{\"n\":2,\"pos\":81234}")
     }
     intercept[IllegalArgumentException] {
-      TailOffset.fromJson("{\"n\":2,\"pos\":81234,\"idx\":6}")
+      parse("{\"n\":2,\"pos\":81234,\"idx\":6}")
+    }
+    intercept[IllegalArgumentException] {
+      parse("{\"seq\":5,\"pos\":70000}")
     }
   }
 
@@ -135,14 +142,15 @@ class BinlogTailSpec extends AnyFunSuite with SparkTestSession {
     val s0 = stream.initialOffset().asInstanceOf[TailOffset]
     val s1 = stream.latestOffset(s0, ReadLimit.maxFiles(1))
       .asInstanceOf[TailOffset]
-    assert(s1 == TailOffset(1, 0L, 0L, 0)) // one closed file completed
+    // one closed file completed: the offset names the next file's suffix
+    assert(s1 == TailOffset(2L, 0L, 0L, 0))
     val s2 = stream.latestOffset(s1, ReadLimit.maxFiles(1))
       .asInstanceOf[TailOffset]
-    assert(s2 == TailOffset(2, 0L, 0L, 0))
+    assert(s2 == TailOffset(3L, 0L, 0L, 0))
     // budget now reaches the ACTIVE file: frontier is its last XID
     val s3 = stream.latestOffset(s2, ReadLimit.maxFiles(1))
       .asInstanceOf[TailOffset]
-    assert(s3.n == 2 && s3.pos > 0L && s3.ck == 4)
+    assert(s3.seq == 3L && s3.pos > 0L && s3.ck == 4)
     // steady state: no growth, no movement
     assert(stream.latestOffset(s3, ReadLimit.maxFiles(1)) == s3)
     // partitions for the closed-file batch span exactly that file
@@ -197,13 +205,13 @@ class BinlogTailSpec extends AnyFunSuite with SparkTestSession {
     val s0 = stream.initialOffset().asInstanceOf[TailOffset]
     val s1 = stream.latestOffset(s0, ReadLimit.allAvailable())
       .asInstanceOf[TailOffset]
-    assert(s1 == TailOffset(1, 0L, 0L, 0))
+    assert(s1 == TailOffset(2L, 0L, 0L, 0))
     val s2 = stream.latestOffset(s1, ReadLimit.allAvailable())
       .asInstanceOf[TailOffset]
-    assert(s2 == TailOffset(2, 0L, 0L, 0))
+    assert(s2 == TailOffset(3L, 0L, 0L, 0))
     val s3 = stream.latestOffset(s2, ReadLimit.allAvailable())
       .asInstanceOf[TailOffset]
-    assert(s3.n == 2 && s3.pos > 0L) // active file: one commit of progress
+    assert(s3.seq == 3L && s3.pos > 0L) // active file: one commit of progress
     assert(stream.latestOffset(s3, ReadLimit.allAvailable()) == s3)
   }
 
@@ -301,7 +309,6 @@ class BinlogTailSpec extends AnyFunSuite with SparkTestSession {
     def drain(): Unit = {
       val q = spark.readStream.format("binlog")
         .option("tailActive", "true")
-        .option("purgeSafe", "true")
         .load(feed.getPath)
         .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
@@ -357,11 +364,11 @@ class BinlogTailSpec extends AnyFunSuite with SparkTestSession {
     tornTxn(f5, 8L, Seq(80L))
     Files.write(new java.io.File(feed, "mysql-bin.000005").toPath, f5.bytes)
     drain() // frontier now mid-file-5 (torn txn 8 held)
-    // lagMetrics reads the suffix-keyed offset form too, and the purge
-    // (fewer files listed than consumed-by-index) doesn't confuse it
+    // lagMetrics resolves the suffix-keyed offset too, and the purge
+    // (fewer files listed than consumed) doesn't confuse it
     val lag = BinlogTailOps.lagMetrics(spark, feed.getPath, ckpt)
     assert(lag.committedLagBytes == 0L && lag.heldBackBytes > 0L,
-      s"drained purge-safe consumer: no consumable lag, torn tail held: $lag")
+      s"drained, purged consumer: no consumable lag, torn tail held: $lag")
     assert(lag.frontierFile == "mysql-bin.000005")
     assert(new java.io.File(feed, "mysql-bin.000005").delete())
     val f6 = new FileBuilder(checksums = true)
@@ -403,29 +410,31 @@ class BinlogTailSpec extends AnyFunSuite with SparkTestSession {
       q.awaitTermination()
     }
 
-    // purgeSafe without tailActive would hand back the index-keyed
-    // count stream — the very thing that breaks on a purge
-    val ex1 = intercept[Exception] { drain(Map("purgeSafe" -> "true")) }
-    assert(causes(ex1).exists(c => Option(c.getMessage)
-      .exists(_.contains("requires tailActive=true"))), s"got: $ex1")
+    // the removed purgeSafe option fails loudly, with or without
+    // tailActive: ignoring it would hand a user who asked to survive
+    // purges the count-based stream, which breaks on the first purge
+    Seq(Map("purgeSafe" -> "true"),
+        Map("tailActive" -> "true", "purgeSafe" -> "true")).foreach { opts =>
+      val ex = intercept[IllegalArgumentException] { drain(opts) }
+      assert(ex.getMessage.contains("purgeSafe option is gone") &&
+        ex.getMessage.contains("always keyed by the file's own suffix") &&
+        ex.getMessage.contains("use tailActive=true"), s"got: $ex")
+    }
 
     // a suffix-less file in the watched dir collapses onto the
     // no-suffix sentinel — the suffix is the offset KEY here
     Files.write(new java.io.File(feed, "mysql-bin.index").toPath,
       "mysql-bin.000001\n".getBytes("UTF-8"))
-    val ex2 = intercept[Exception] {
-      drain(Map("tailActive" -> "true", "purgeSafe" -> "true"))
-    }
+    val ex2 = intercept[Exception] { drain(Map("tailActive" -> "true")) }
     assert(causes(ex2).exists(c => Option(c.getMessage)
       .exists(_.contains("numeric binlog suffixes"))), s"got: $ex2")
 
     // a pos without its decoder seed is corruption, not an upgrade form
-    import BinlogPurgeTailMicroBatchStream.SeqOffset
-    assert(SeqOffset.fromJsonOrLegacy("{\"seq\":5}",
-      () => Vector.empty, _ => 0L) == SeqOffset(5L, 0L, 0L, 0))
+    import BinlogTailMicroBatchStream.TailOffset
+    assert(TailOffset.fromJson("{\"seq\":5}", () => Vector.empty) ==
+      TailOffset(5L, 0L, 0L, 0))
     intercept[IllegalArgumentException] {
-      SeqOffset.fromJsonOrLegacy("{\"seq\":5,\"pos\":70000}",
-        () => Vector.empty, _ => 0L)
+      TailOffset.fromJson("{\"seq\":5,\"pos\":70000}", () => Vector.empty)
     }
   }
 
@@ -441,10 +450,9 @@ class BinlogTailSpec extends AnyFunSuite with SparkTestSession {
       Files.write(new java.io.File(feed, f"mysql-bin.$i%06d").toPath, f.bytes)
     }
     val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
-    def drain(purge: Boolean): Unit = {
-      val r = spark.readStream.format("binlog")
-        .option("tailActive", purge.toString) // count-based when false
-      val q = (if (purge) r.option("purgeSafe", "true") else r)
+    def drain(tail: Boolean): Unit = {
+      val q = spark.readStream.format("binlog")
+        .option("tailActive", tail.toString) // count-based when false
         .load(feed.getPath)
         .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
@@ -460,9 +468,9 @@ class BinlogTailSpec extends AnyFunSuite with SparkTestSession {
         .start()
       q.awaitTermination()
     }
-    drain(purge = false) // the existing count-based deployment
+    drain(tail = false) // the existing count-based deployment
     assert(seen.sorted == List(10L, 20L))
-    // upgrade in place: the first purge-safe drain translates the
+    // upgrade in place: the first tail drain translates the
     // count-based offset against the intact listing and commits a
     // suffix-keyed one (upgrade FIRST — a batch must commit in the new
     // posture before retention may purge)
@@ -470,7 +478,7 @@ class BinlogTailSpec extends AnyFunSuite with SparkTestSession {
     f3.fde(t0)
     txn(f3, 3L, Seq(30L))
     Files.write(new java.io.File(feed, "mysql-bin.000003").toPath, f3.bytes)
-    drain(purge = true)
+    drain(tail = true)
     assert(seen.sorted == List(10L, 20L, 30L))
     // retention kicks in below the committed frontier; the stream
     // continues from its suffix
@@ -480,7 +488,7 @@ class BinlogTailSpec extends AnyFunSuite with SparkTestSession {
     f4.fde(t0)
     txn(f4, 4L, Seq(40L))
     Files.write(new java.io.File(feed, "mysql-bin.000004").toPath, f4.bytes)
-    drain(purge = true)
+    drain(tail = true)
     assert(seen.sorted == List(10L, 20L, 30L, 40L),
       s"the upgraded, purged consumer must continue exactly-once: $seen")
   }
@@ -543,6 +551,76 @@ class BinlogTailSpec extends AnyFunSuite with SparkTestSession {
     assert(causes(ex).exists(c =>
         Option(c.getMessage).exists(_.contains("keep tailActive=true"))),
       s"downgrade must be rejected with the guidance message, got: $ex")
+
+    // a FILE-BOUNDARY tail checkpoint is refused the same way: rotation
+    // closes file 3 (its held-back rows now read to EOF) and the new
+    // active file holds no commit yet, so the committed offset sits at
+    // the start of file 4 — a suffix, which stops being a listing count
+    // as soon as retention purges a file
+    val f4 = new FileBuilder(checksums = true)
+    f4.fde(t0)
+    tornTxn(f4, 5L, Seq(98L))
+    Files.write(new java.io.File(feed, "mysql-bin.000004").toPath, f4.bytes)
+    drain(tail = true)
+    assert(seen.sorted == List(10L, 20L, 30L, 99L), s"got: $seen")
+    assert(BinlogTailOps.latestCommittedOffsetJson(ckpt, conf).exists(j =>
+        j.contains("\"seq\":4") && j.contains("\"pos\":0")),
+      "the tail checkpoint must now sit at a file boundary")
+    val ex2 = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      drain(tail = false)
+    }
+    assert(causes(ex2).exists(c =>
+        Option(c.getMessage).exists(_.contains("keep tailActive=true"))),
+      s"a file-boundary downgrade must be rejected too, got: $ex2")
+  }
+
+  test("tail over a MySQL datadir: a mysql-bin.index beside the binlogs " +
+      "is refused loudly, never framed as the active file, and no torn " +
+      "row leaks") {
+    val root = Files.createTempDirectory("tail_datadir").toFile
+    val feed = new java.io.File(root, "feed"); feed.mkdirs()
+    (1 to 2).foreach { i =>
+      val f = new FileBuilder(checksums = true)
+      f.fde(t0)
+      txn(f, i.toLong, Seq(i.toLong * 10))
+      Files.write(new java.io.File(feed, f"mysql-bin.$i%06d").toPath, f.bytes)
+    }
+    val f3 = new FileBuilder(checksums = true)
+    f3.fde(t0)
+    txn(f3, 3L, Seq(30L))
+    tornTxn(f3, 4L, Seq(99L))
+    Files.write(new java.io.File(feed, "mysql-bin.000003").toPath, f3.bytes)
+    // the server's own list of its binlog files, as every datadir holds
+    // it: no numeric suffix, so it sorts after every binlog file
+    Files.write(new java.io.File(feed, "mysql-bin.index").toPath,
+      (1 to 3).map(i => f"./mysql-bin.$i%06d\n").mkString.getBytes("UTF-8"))
+
+    val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val outcome = scala.util.Try {
+      spark.readStream.format("binlog")
+        .option("tailActive", "true")
+        .load(feed.getPath)
+        .writeStream
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+          seen ++= batch
+            .filter(col("event_type") === "WriteRowsEventV2")
+            .select(explode(col("row_images")).as("img"))
+            .select(element_at(col("img"), 1).cast("long"))
+            .collect().map(_.getLong(0))
+          ()
+        }
+        .option("checkpointLocation", new java.io.File(root, "ckpt").getPath)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
+    }
+    assert(!seen.contains(99L),
+      s"the torn transaction's row must never reach foreachBatch: $seen")
+    def causes(t: Throwable): List[Throwable] =
+      if (t == null) Nil else t :: causes(t.getCause)
+    assert(outcome.failed.toOption.exists(ex => causes(ex).exists(c =>
+        Option(c.getMessage).exists(_.contains("numeric binlog suffixes")))),
+      s"a non-binlog file in the watched dir must fail the drain: $outcome")
   }
 
   test("lagMetrics: splits consumable lag from correctly-held torn " +
@@ -639,7 +717,7 @@ class BinlogTailSpec extends AnyFunSuite with SparkTestSession {
     val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
     def drain(): Unit =
       graft.streaming.Drains.drainBinlog(spark, Seq(feedA.getPath, feedB.getPath),
-        ckpt, tail = true, purgeSafe = true) { (batch, _) =>
+        ckpt, tail = true) { (batch, _) =>
         seen ++= batch
           .filter(col("event_type") === "WriteRowsEventV2")
           .select(explode(col("row_images")).as("img"))
@@ -728,19 +806,18 @@ class BinlogTailSpec extends AnyFunSuite with SparkTestSession {
   test("legacy→purgeSafe upgrade: a mid-file frontier whose translated " +
       "file is SHORTER than pos is rejected (a shifted listing), and a " +
       "long-enough file passes") {
-    import BinlogPurgeTailMicroBatchStream.SeqOffset
+    import BinlogTailMicroBatchStream.TailOffset
     val listing = Vector("/x/mysql-bin.000007", "/x/mysql-bin.000008")
-    def seqOf(f: String): Long = f.split('.').last.toLong
     // frontier file long enough: translates to its suffix
-    assert(SeqOffset.fromJsonOrLegacy(
+    assert(TailOffset.fromJson(
       "{\"n\":0,\"pos\":500,\"idx\":6,\"ck\":4}",
-      () => listing, seqOf, _ => 1000L) == SeqOffset(7L, 500L, 6L, 4))
+      () => listing, _ => 1000L) == TailOffset(7L, 500L, 6L, 4))
     // frontier file SHORTER than pos: the listing shifted under the
     // index (a purge masked by newer rotations) — refuse loudly
     val ex = intercept[IllegalArgumentException] {
-      SeqOffset.fromJsonOrLegacy(
+      TailOffset.fromJson(
         "{\"n\":0,\"pos\":500,\"idx\":6,\"ck\":4}",
-        () => listing, seqOf, _ => 200L)
+        () => listing, _ => 200L)
     }
     assert(ex.getMessage.contains("shorter than the frontier pos"))
   }
@@ -763,12 +840,10 @@ class BinlogTailSpec extends AnyFunSuite with SparkTestSession {
     tornTxn(f3, 4L, Seq(99L)) // torn forever
     Files.write(new java.io.File(feed, "mysql-bin.000003").toPath, f3.bytes)
 
-    def drain(purge: Boolean)
-        : Seq[org.apache.spark.sql.streaming.StreamingQueryProgress] = {
-      val r = spark.readStream.format("binlog")
+    def drain(): Seq[org.apache.spark.sql.streaming.StreamingQueryProgress] = {
+      val q = spark.readStream.format("binlog")
         .option("tailActive", "true")
         .option("maxFilesPerTrigger", 1)
-      val q = (if (purge) r.option("purgeSafe", "true") else r)
         .load(feed.getPath)
         .writeStream
         // the batch must EXECUTE for the trigger to report as a data
@@ -783,7 +858,7 @@ class BinlogTailSpec extends AnyFunSuite with SparkTestSession {
       q.recentProgress.toSeq
     }
 
-    val progress = drain(purge = false)
+    val progress = drain()
     val withBatch = progress.filter(_.numInputRows > 0)
     assert(withBatch.nonEmpty, "the drain must report batch progress")
     def metric(p: org.apache.spark.sql.streaming.StreamingQueryProgress,
@@ -805,28 +880,22 @@ class BinlogTailSpec extends AnyFunSuite with SparkTestSession {
       s"in-band bytesBehind must equal lagMetrics' committed+held: " +
         s"${withBatch.last.sources.head.metrics} vs $lag")
 
-    // the purge-safe stream reports the same surface: upgrade the
-    // checkpoint in place FIRST (a suffix-keyed offset must commit
-    // before retention may purge — the documented contract), then
-    // purge a consumed file, grow the feed, drain
+    // after retention the surface is the same: purge a consumed file,
+    // grow the feed, drain — the consumed suffix resolves against the
+    // shrunken listing
+    assert(new java.io.File(feed, "mysql-bin.000001").delete())
     val f4 = new FileBuilder(checksums = true)
     f4.fde(t0)
     txn(f4, 5L, Seq(50L))
     Files.write(new java.io.File(feed, "mysql-bin.000004").toPath, f4.bytes)
-    drain(purge = true) // the in-place upgrade drain
-    assert(new java.io.File(feed, "mysql-bin.000001").delete())
-    val f5 = new FileBuilder(checksums = true)
-    f5.fde(t0)
-    txn(f5, 6L, Seq(60L))
-    Files.write(new java.io.File(feed, "mysql-bin.000005").toPath, f5.bytes)
-    val progress2 = drain(purge = true)
+    val progress2 = drain()
     val withBatch2 = progress2.filter(_.numInputRows > 0)
     assert(withBatch2.nonEmpty)
     val lag2 = BinlogTailOps.lagMetrics(spark, feed.getPath, ckpt)
     assert(metric(withBatch2.last, "filesBehind") == 0L)
     assert(metric(withBatch2.last, "bytesBehind") ==
       lag2.committedLagBytes + lag2.heldBackBytes,
-      s"purge-safe in-band metrics must cross-check too: " +
+      s"in-band metrics after retention must cross-check too: " +
         s"${withBatch2.last.sources.head.metrics} vs $lag2")
   }
 
@@ -845,24 +914,20 @@ class BinlogTailSpec extends AnyFunSuite with SparkTestSession {
       new org.apache.spark.sql.connector.read.streaming.Offset {
         override def json(): String = j
       }
-    val plain = new BinlogTailMicroBatchStream(
+    val stream = new BinlogTailMicroBatchStream(
       dir.getPath, BinlogDataSource.schema, Some(1))
-    plain.latestOffset(plain.initialOffset(), ReadLimit.maxFiles(1))
-    val m = plain.metrics(java.util.Optional.of(
-      raw("{\"n\":1,\"pos\":0,\"idx\":0,\"ck\":0}")))
+    stream.latestOffset(stream.initialOffset(), ReadLimit.maxFiles(1))
+    val m = stream.metrics(java.util.Optional.of(
+      raw("{\"seq\":2,\"pos\":0,\"idx\":0,\"ck\":0}")))
     assert(m.get("filesBehind") == "0") // file 2 is the active file
     assert(m.get("bytesBehind").toLong > 0L) // its unconsumed bytes
-    val purge = new BinlogPurgeTailMicroBatchStream(
-      dir.getPath, BinlogDataSource.schema, Some(1))
-    purge.latestOffset(purge.initialOffset(), ReadLimit.maxFiles(1))
-    val m2 = purge.metrics(java.util.Optional.of(
-      raw("{\"seq\":2,\"pos\":0,\"idx\":0,\"ck\":0}")))
-    assert(m2.get("filesBehind") == "0")
-    assert(m2.get("bytesBehind").toLong > 0L)
-    // and the purge form accepts a LEGACY raw offset (the upgrade
-    // replay), translated against the live listing
-    val m3 = purge.metrics(java.util.Optional.of(raw("{\"n\":1}")))
-    assert(m3.get("bytesBehind") == m2.get("bytesBehind"))
+    // LEGACY raw offsets (the upgrade replay) — the index-keyed and the
+    // count-based form — translate against the live listing
+    val m2 = stream.metrics(java.util.Optional.of(
+      raw("{\"n\":1,\"pos\":0,\"idx\":0,\"ck\":0}")))
+    assert(m2 == m)
+    val m3 = stream.metrics(java.util.Optional.of(raw("{\"n\":1}")))
+    assert(m3.get("bytesBehind") == m.get("bytesBehind"))
   }
 
   test("in-band metrics across the source family: the count-based " +
