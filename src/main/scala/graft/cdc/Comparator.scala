@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   *   prepareBinlog  →  filter P3/P4 + last-wins dedup          (phase A)
   *   prepareAvro    →  filter P5                               (phase B scan)
   *   compare        →  full-outer equi-join + flag expressions (phases B+C)
-  *   Report.summary →  global conditional counts               (phase D)
+  *   Report.rollup  →  per-(schema, table, status) counts      (phase D)
   *
   * Scale notes (100 TB):
   *   - the reference's in-heap `map[BinlogKey]BinlogEvent` becomes the join —

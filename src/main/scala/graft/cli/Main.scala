@@ -57,11 +57,16 @@ import graft.ingest.{AvroSource, BinlogBinaryParser, BinlogTextParser, Sources}
   *     [--split-bytes <n>]      (target range size for the auto-built
   *                               index; default 128 MiB)
   *
-  * Outputs under --out (default /tmp/graft_out): `detail/` (every
-  * non-match row), `breakdown/` (per schema/table/status counts), a
-  * one-row `summary/` with the reference's five counters + verdict, and
-  * `quarantine/<side>/` with each source's rejected rows (K3); summary
-  * also prints to stdout.
+  * Outputs under --out (default /tmp/graft_out), written by
+  * [[writeReport]]:
+  *   - `detail/status=<status>/` — every non-match row, sorted by
+  *     (binlog_file, position) within each status;
+  *   - `breakdown/` — row counts per (schema, table, status), sorted by
+  *     (schema, table, status);
+  *   - `summary/` — one row with the reference's five counters + verdict,
+  *     also printed to stdout;
+  *   - `quarantine/<side>/` — each JSON source's rejected rows (K3);
+  *   - `metrics/` — one row with the input file counts per side (A3).
   */
 object Main {
 
@@ -183,6 +188,7 @@ object Main {
         "auto-built index ranges); pass --split-index <path> or drop it")
 
     val spark = session("graft-cdc-compare")
+    compareDefaults(spark.sparkContext.getConf).foreach { case (k, v) => spark.conf.set(k, v) }
 
     // A3 — the reference's shell job metrics (comparator.sh:103-107,
     // avro_to_json.sh:75-85): count each side's input files up front and
@@ -192,35 +198,72 @@ object Main {
       s"${metrics("avro_files")} avro file(s)")
 
     val prepared = prepare(spark, args)
-    val compared = prepared.compared
-    compared.cache()
-    // detail partitioned by status: per-status directories prune cleanly
-    // when a consumer reads only one discrepancy family at scale
-    Report.detail(compared).write.mode("overwrite")
-      .partitionBy("status").json(s"${args.out}/detail")
-    Report.breakdown(compared).write.mode("overwrite").json(s"${args.out}/breakdown")
-    val summary = Report.summary(compared)
-    summary.write.mode("overwrite").json(s"${args.out}/summary")
-    // K3 — rejected source rows to a quarantine path (the reference's
-    // debug_log stderr redirect, comparator.sh:32,95)
-    prepared.quarantines.foreach { case (side, bad) =>
-      bad.write.mode("overwrite").json(s"${args.out}/quarantine/$side")
-    }
-    summary.show(truncate = false)
-    // job metrics with the outputs (the reference's conversion summary)
-    spark.createDataFrame(
-        java.util.List.of(org.apache.spark.sql.Row(
-          metrics("binlog_files"), metrics("avro_files"))),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("binlog_files",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("avro_files",
-            org.apache.spark.sql.types.LongType))))
-      .write.mode("overwrite").json(s"${args.out}/metrics")
+    writeReport(spark, prepared, metrics, args.out)
     println(s"[graft] finished: ${metrics("binlog_files")} binlog file(s), " +
       s"${metrics("avro_files")} avro file(s) compared; outputs in ${args.out}")
     prepared.release()
     spark.stop()
+  }
+
+  /** The session settings compare mode applies over Spark's defaults,
+    * minus every key the deployment set itself in `deployed` (the
+    * SparkContext's conf: spark-defaults, `--conf`, `-Dspark.*`), which
+    * wins.
+    *
+    * `canChangeCachedPlanOutputPartitioning` lets AQE coalesce the cached
+    * compare frame's partitions (the full-outer join's shuffle reads) from
+    * the measured map-output sizes. Spark's default keeps the join's
+    * `spark.sql.shuffle.partitions` partitions in the cache, so every
+    * report job over it ran that many tasks (200) however small the input.
+    * Coalescing only merges partitions, so a large input keeps the join's
+    * own parallelism. */
+  def compareDefaults(deployed: org.apache.spark.SparkConf): Map[String, String] =
+    Map("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true")
+      .filter { case (k, _) => !deployed.contains(k) }
+
+  /** Writes the compare-mode report of `prepared` under `out` and prints
+    * the summary table (see the output list above). `compared` is cached
+    * while the outputs are written and unpersisted after; the session
+    * stays up. Each output's jobs carry the description
+    * `graft report: <output>`. */
+  def writeReport(spark: SparkSession, prepared: Prepared,
+      metrics: Map[String, Long], out: String): Unit = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    def described[T](output: String)(body: => T): T = {
+      spark.sparkContext.setJobDescription(s"graft report: $output")
+      try body finally spark.sparkContext.setJobDescription(null)
+    }
+    val compared = prepared.compared.cache()
+    try {
+      // detail partitioned by status: per-status directories prune cleanly
+      // when a consumer reads only one discrepancy family at scale
+      described("detail") {
+        Report.detail(compared).write.mode("overwrite")
+          .partitionBy("status").json(s"$out/detail")
+      }
+      // breakdown and summary both come from one collected rollup
+      val rollup = described("rollup")(Report.rollup(compared).collect().toSeq)
+      described("breakdown") {
+        Report.breakdown(spark, rollup).write.mode("overwrite").json(s"$out/breakdown")
+      }
+      val summary = Report.summary(spark, rollup)
+      described("summary")(summary.write.mode("overwrite").json(s"$out/summary"))
+      // K3 — rejected source rows to a quarantine path (the reference's
+      // debug_log stderr redirect, comparator.sh:32,95)
+      prepared.quarantines.foreach { case (side, bad) =>
+        described("quarantine")(bad.write.mode("overwrite").json(s"$out/quarantine/$side"))
+      }
+      // a local relation: printing it runs no job
+      summary.show(truncate = false)
+      // job metrics with the outputs (the reference's conversion summary)
+      described("metrics") {
+        spark.createDataFrame(
+            java.util.List.of(Row(metrics("binlog_files"), metrics("avro_files"))),
+            StructType(Seq("binlog_files", "avro_files").map(StructField(_, LongType))))
+          .write.mode("overwrite").json(s"$out/metrics")
+      }
+    } finally compared.unpersist()
   }
 
   /** The FOLLOW posture — the cdc63 composition (ACTIVE-file tail →

@@ -168,6 +168,170 @@ class MainSpec extends AnyFunSuite with SparkTestSession {
       && a.splitBytes.contains(8192L))
   }
 
+  /** A binary binlog + Avro corpus with every status: two binlog files of
+    * 100 one-row transactions each over two tables, and one Avro container
+    * whose records pair with those rows as MATCH, MISMATCH_TS (every other
+    * such key twice), MISMATCH_GTID, MISMATCH_CHANGE_TYPE or not at all
+    * (BINLOG_ONLY), plus AVRO_ONLY records in pairs on one key. The
+    * transactions' other events are the unmatched non-DML rows
+    * (BINLOG_ONLY_SUPPRESSED). */
+  private def reportCorpus(): Main.Args = {
+    import graft.ingest.BinlogBinaryWriter._
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val root = Files.createTempDirectory("clireport").toFile
+    val binDir = new java.io.File(root, "bins"); binDir.mkdirs()
+    val avroDir = new java.io.File(root, "avro"); avroDir.mkdirs()
+    val cols = Seq(ColDef.longlong, ColDef.varchar(16))
+    val sid = (1 to 16).map(_.toByte).toArray
+    val t0 = 1714564800L
+    // (source_timestamp, table, change_type, gtid, binlog_file, binlog_position)
+    val records = Seq.newBuilder[(Long, String, String, String, String, Long)]
+    for (seq <- 1 to 2) {
+      val file = f"mysql-bin.$seq%06d"
+      val f = new FileBuilder(checksums = true)
+      f.fde(t0)
+      (0 until 100).foreach { i =>
+        val sec = t0 + seq * 1000 + i
+        val (table, tableId) = if (i % 2 == 0) ("orders", 7L) else ("items", 8L)
+        f.event(sec, 33, gtidBody(sid, seq * 1000L + i))
+        f.event(sec, 2, queryBody("shop", "BEGIN"))
+        f.event(sec, 19, tableMapBody(tableId, "shop", table, cols))
+        val pos = f.event(sec, 30, rowsBody(tableId, cols.size,
+          Seq(Seq(Some(encLongLong(i.toLong)), Some(encVarchar(s"v$i", 16))))))
+        f.event(sec, 16, xidBody(seq * 1000L + i))
+        def avro(deltaMs: Long, changeType: String = "INSERT", gtid: String = ""): Unit =
+          records += ((sec * 1000 + deltaMs, table, changeType, gtid, file, pos))
+        i % 5 match {
+          case 0 => avro(50)
+          case 1 => avro(5000); if (i % 10 == 1) avro(7000)
+          case 2 => avro(50, gtid = "ffffffff-ffff-ffff-ffff-ffffffffffff:1")
+          case 3 => avro(50, changeType = "DELETE")
+          case _ =>
+        }
+      }
+      Files.write(new java.io.File(binDir, file).toPath, f.bytes)
+      (0 until 30).foreach { j =>
+        records += ((t0 * 1000 + j, "ghost", "INSERT", "", file, 1000000L + j / 2))
+      }
+    }
+    val tmp = new java.io.File(root, "avro_tmp").getPath
+    graft.ingest.AvroSink.write(records.result()
+      .toDF("source_timestamp", "table", "change_type", "gtid", "binlog_file",
+        "binlog_position")
+      .select(col("source_timestamp"), struct(lit("shop").as("database"),
+        col("table"), col("change_type"), col("gtid"), col("binlog_file"),
+        col("binlog_position"), lit(false).as("is_deleted"),
+        array(lit("id")).as("primary_keys")).as("source_metadata"))
+      .repartition(1), tmp)
+    new java.io.File(tmp).listFiles().filter(_.getName.endsWith(".avro")).foreach(c =>
+      Files.move(c.toPath, new java.io.File(avroDir, c.getName).toPath))
+    Main.Args(binlogBinary = Some(binDir.getPath), avro = Some(avroDir.getPath))
+  }
+
+  /** The lines of every output under `out`, per directory relative to
+    * `out`, each directory's part files read in part-name order. */
+  private def reportLines(out: String): Map[String, Seq[String]] = {
+    import scala.jdk.CollectionConverters._
+    val root = new java.io.File(out).toPath
+    val files = Files.walk(root).iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".json")).toSeq
+    files.groupBy(p => root.relativize(p.getParent).toString).map { case (dir, fs) =>
+      dir -> fs.sortBy(_.getFileName.toString)
+        .flatMap(p => Files.readAllLines(p).asScala.filter(_.nonEmpty))
+    }
+  }
+
+  /** Runs `body` with the given session confs set, then restores them. */
+  private def withConfs[T](confs: (String, String)*)(body: => T): T = {
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try { confs.foreach { case (k, v) => spark.conf.set(k, v) }; body }
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  private def runReport(args: Main.Args): String = {
+    val out = Files.createTempDirectory("clireport_out").toFile.getPath
+    val prepared = Main.prepare(spark, args)
+    try Main.writeReport(spark, prepared, Main.jobMetrics(spark, args), out)
+    finally prepared.release()
+    out
+  }
+
+  test("writeReport: every output is byte-identical across partition counts " +
+      "and AQE on/off; detail is sorted by (binlog_file, position) per status") {
+    val args = reportCorpus()
+    val runs = for (parts <- Seq(1, 4, 200); aqe <- Seq(true, false)) yield
+      (parts, aqe) -> withConfs("spark.sql.shuffle.partitions" -> parts.toString,
+        "spark.sql.adaptive.enabled" -> aqe.toString)(reportLines(runReport(args)))
+    val base = runs.head._2
+    assert(base.keySet == Set("breakdown", "summary", "metrics") ++
+      Seq(Status.MismatchTs, Status.MismatchGtid, Status.MismatchChangeType,
+        Status.AvroOnly, Status.BinlogOnly).map(s => s"detail/status=$s"))
+    assert(base("summary") == Seq("""{"matched":180,"mismatches":60,""" +
+      """"avro_only":60,"binlog_only":40,"consistent":false}"""))
+    assert(base("metrics") == Seq("""{"binlog_files":2,"avro_files":1}"""))
+    // breakdown: sorted by (schema, table, status), suppressed rows left out
+    val breakdown = base("breakdown")
+    assert(breakdown == Seq(
+      ("ghost", Status.AvroOnly, 60), ("items", Status.BinlogOnly, 20),
+      ("items", Status.Match, 20), ("items", Status.MismatchChangeType, 20),
+      ("items", Status.MismatchGtid, 20), ("items", Status.MismatchTs, 40),
+      ("orders", Status.BinlogOnly, 20), ("orders", Status.Match, 20),
+      ("orders", Status.MismatchChangeType, 20), ("orders", Status.MismatchGtid, 20),
+      ("orders", Status.MismatchTs, 20)).map { case (t, s, n) =>
+        s"""{"schema":"shop","table":"$t","status":"$s","count":$n}""" })
+    assert(base("detail/status=" + Status.AvroOnly).size == 60)
+    val key = """"binlog_file":"([^"]*)".*"position":(\d+)""".r.unanchored
+    runs.foreach { case (cfg, lines) =>
+      lines.filter(_._1.startsWith("detail/")).foreach { case (dir, rows) =>
+        val keys = rows.map { case key(f, p) => (f, p.toLong) }
+        assert(keys == keys.sorted,
+          s"$dir at (shuffle.partitions, AQE) = $cfg is not sorted by (binlog_file, position)")
+      }
+      assert(lines == base, s"outputs at (shuffle.partitions, AQE) = $cfg differ")
+    }
+  }
+
+  test("writeReport at 200 shuffle partitions: with the compare-mode " +
+      "defaults no stage that reads the cached compare frame runs more " +
+      "tasks than the cores") {
+    val args = reportCorpus()
+    val stages = collection.mutable.ArrayBuffer.empty[(String, Int)]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(
+          e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit = {
+        val si = e.stageInfo
+        if (si.rddInfos.exists(_.storageLevel.useMemory))
+          stages.synchronized { stages += si.name -> si.numTasks }
+      }
+    }
+    val defaults = Main.compareDefaults(spark.sparkContext.getConf).toSeq
+    assert(defaults.nonEmpty)
+    withConfs(Seq("spark.sql.shuffle.partitions" -> "200",
+        "spark.sql.adaptive.enabled" -> "true") ++ defaults: _*) {
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        runReport(args)
+        org.apache.spark.graftshim.ListenerBusShim.waitUntilEmpty(spark.sparkContext)
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(stages.nonEmpty, "no stage read the cached compare frame")
+    val cores = spark.sparkContext.defaultParallelism
+    assert(stages.forall(_._2 <= cores),
+      s"stages over the cache ran more than $cores tasks: $stages")
+  }
+
+  test("compareDefaults: a deployment's explicit setting wins") {
+    val key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    assert(Main.compareDefaults(new org.apache.spark.SparkConf(false)) ==
+      Map(key -> "true"))
+    assert(Main.compareDefaults(
+      new org.apache.spark.SparkConf(false).set(key, "false")).isEmpty)
+  }
+
   test("argument parsing") {
     val a = Main.parseArgs(List("--binlog-json", "/b.json", "--avro", "/a",
       "--tolerance-ms", "250", "--strict-change-type", "--out", "/tmp/x"))

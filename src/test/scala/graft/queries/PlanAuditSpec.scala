@@ -240,6 +240,49 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestSession {
     assert(exchanges <= 6, s"unexpected exchange count $exchanges:\n$p")
   }
 
+  test("cli detail write: the global sort leads with status, so the " +
+      "partitionBy(status) write keeps it") {
+    // the write needs its rows ordered by the partition column; a detail
+    // sort not led by `status` gets a local sort on `status` above it, and
+    // the optimizer then cuts the global sort down to a range repartition,
+    // so each file holds one sorted run per input partition
+    import spark.implicits._
+    val b = Seq(("mysql-bin.000001", 5L, "WriteRowsEventV2",
+        "2024-01-01T00:00:00Z", "", "", "t", "s"),
+      ("mysql-bin.000001", 9L, "WriteRowsEventV2",
+        "2024-01-01T00:00:00Z", "", "", "t", "s"))
+      .toDF("binlog_file", "log_position", "event_type", "timestamp",
+        "immediate_commmit_timestamp", "gtid_next", "table", "schema")
+    val a = Seq(("mysql-bin.000001", 5L, 1704067209000L, "", "INSERT", "s", "t"),
+      ("mysql-bin.000001", 7L, 1704067200000L, "", "INSERT", "s", "t"))
+      .toDF("binlog_file", "binlog_position", "source_timestamp", "gtid",
+        "change_type", "database", "table")
+    val compared = graft.cdc.Comparator.compare(b, a)
+    val plans = collection.mutable.ArrayBuffer.empty[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        plans.synchronized { plans += qe.executedPlan.toString }
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    val out = java.nio.file.Files.createTempDirectory("detailplan").toString
+    spark.listenerManager.register(listener)
+    try {
+      graft.cdc.Report.detail(compared).write.mode("overwrite")
+        .partitionBy("status").json(out)
+      org.apache.spark.graftshim.ListenerBusShim.waitUntilEmpty(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    val p = plans.find(_.contains("InsertIntoHadoopFsRelationCommand"))
+      .getOrElse(fail(s"no write plan captured: $plans"))
+    val shape = p.linesIterator.filter(l => l.contains("Sort") || l.contains("Exchange"))
+      .map(_.take(160)).mkString("\n")
+    assert(("Sort \\[status#\\d+ ASC NULLS FIRST, binlog_file#\\d+ ASC NULLS FIRST, " +
+      "position#\\d+L ASC NULLS FIRST[^\\]]*\\], true").r.findFirstIn(p).isDefined,
+      s"no global sort led by (status, binlog_file, position):\n$shape")
+    assert(!p.contains("REPARTITION_BY_COL"), s"a range repartition replaced the sort:\n$shape")
+  }
+
   test("cdc25: no unbounded-FOLLOWING window frame (O(n²) recompute-per-row)") {
     // the as-of commit association must stay the reversed-sort RUNNING
     // min: Spark evaluates [current row, unbounded following] frames by
