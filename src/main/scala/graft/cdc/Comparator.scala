@@ -299,10 +299,12 @@ object Comparator {
     val gtidMismatch = !parseError &&
       col("a_gtid") =!= "" && col("b_gtid_next") =!= "" &&
       col("a_gtid") =!= col("b_gtid_next")
+    // the inferred type is already upper case ("INSERT"/"UPDATE"/"DELETE"/"");
+    // an `upper` over it would only be constant-folded at planning
     val inferredCt = inferredChangeType(col("b_event_type"), cfg.strictChangeType)
     val ctMismatch = !parseError &&
       col("a_change_type") =!= "" && inferredCt =!= "" &&
-      upper(col("a_change_type")) =!= upper(inferredCt)
+      upper(col("a_change_type")) =!= inferredCt
 
     joined
       .withColumn("_b_present", coalesce(col("_b_present"), lit(false)))

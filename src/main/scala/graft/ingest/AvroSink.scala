@@ -12,8 +12,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
 /** Native Avro container-file SINK — the write-side complement of
-  * [[AvroSource]] (no spark-avro connector in this environment, so the
-  * same avro-mapred route: `AvroKeyOutputFormat` via
+  * [[AvroSource]] (no spark-avro connector in this environment, so it
+  * writes through avro-mapred: `AvroKeyOutputFormat` via
   * `saveAsNewAPIHadoopFile`). One container file per partition, written
   * in parallel — where the reference forks one JVM per file to CONVERT
   * avro (avro_to_json.sh:52-70), the engine both reads and writes the

@@ -13,13 +13,18 @@ import org.apache.spark.sql.types._
 /** S3 — native Avro container-file source (SURVEY §7.4).
   *
   * The reference shells out to `avro-tools tojson` once per file
-  * (avro_to_json.sh:52-70); here the container files are read in place with
-  * `AvroKeyInputFormat` (splittable by Avro block, so large files fan out
-  * across tasks) and `["null", T]` unions resolve directly to nullable `T` —
-  * no union-wrapper structs, no per-file JVM forks, no JSON intermediate.
+  * (avro_to_json.sh:52-70); here the container files are read in place by
+  * graft's own DSv2 connector, [[graft.sources.AvroDataSource]]
+  * (`spark.read.format("avrofile")`: byte ranges split at sync markers, so
+  * large files fan out across tasks), and `["null", T]` unions resolve
+  * directly to nullable `T` — no union-wrapper structs, no per-file JVM
+  * forks, no JSON intermediate. This object holds the driver-side schema
+  * pieces the connector uses: the writer schema from the first file's
+  * header ([[readSchema]], avro's `DataFileReader` over `FsInput`) and its
+  * Spark mapping ([[toStructType]]).
   *
   * The environment has `avro-1.12.1` + `avro-mapred-1.12.1` but no
-  * `spark-avro` connector, hence the hadoop-input-format route.
+  * `spark-avro` connector, hence a connector of its own.
   */
 object AvroSource {
 

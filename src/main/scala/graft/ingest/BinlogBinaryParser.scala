@@ -1,10 +1,12 @@
 package graft.ingest
 
-import java.nio.{ByteBuffer, ByteOrder}
+import java.nio.ByteBuffer
 import java.time.format.DateTimeFormatter
 import java.time.{Instant, ZoneOffset}
 
 import org.apache.spark.sql.{Dataset, SparkSession}
+
+import graft.ingest.BinlogFraming.readPackedLong
 
 /** S1 — native decoder for raw MySQL binlog *binary* files (binlog format
   * v4, the public format documented in the MySQL internals manual), the one
@@ -12,15 +14,13 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * -offset 4`, comparator.sh:91-93; README.md:35-52) and SURVEY §7.6 lists
   * as the deferred hard part of the domain.
   *
-  * Layout decoded here:
-  *   - 4-byte magic `0xFE 'b' 'i' 'n'` (the `-offset 4` skip);
-  *   - per event, the v4 common header (19 bytes, little-endian):
-  *     timestamp u32, type_code u8, server_id u32, event_size u32,
-  *     end_log_pos u32, flags u16;
-  *   - event-specific post-headers/bodies for the types the comparison
-  *     consumes: FORMAT_DESCRIPTION(15), QUERY(2), XID(16), TABLE_MAP(19),
-  *     GTID(33), ROTATE(4), WRITE/UPDATE/DELETE_ROWS v1(23/24/25) and
-  *     v2(30/31/32). Every other type decodes header-only.
+  * [[BinlogFraming]] cuts the byte stream into events (magic, common
+  * header, checksum tails, TRANSACTION_PAYLOAD containers); this decoder
+  * reads the event-specific post-headers/bodies for the types the
+  * comparison consumes: FORMAT_DESCRIPTION(15), QUERY(2), XID(16),
+  * TABLE_MAP(19), GTID(33), ROTATE(4), WRITE/UPDATE/DELETE_ROWS v1(23/24/25)
+  * and v2(30/31/32), ROWS_QUERY(29), INTVAR(5), TRANSACTION_PAYLOAD(40).
+  * Every other type decodes header-only.
   *
   * The decode is inherently *stateful within a file* (a TABLE_MAP names the
   * schema/table for the row events that follow; a GTID event scopes the
@@ -40,10 +40,6 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 object BinlogBinaryParser {
 
   val Magic: Array[Byte] = Array(0xFE.toByte, 'b'.toByte, 'i'.toByte, 'n'.toByte)
-
-  /** TRANSACTION_PAYLOAD nesting bound shared with the offset-index walk
-    * (the two must count identically). MySQL nests exactly one level. */
-  private[ingest] val MaxPayloadNesting = 16
 
   /** type_code → canonical event-type name (after E4's Event-suffix strip). */
   val eventTypeNames: Map[Int, String] = Map(
@@ -75,10 +71,11 @@ object BinlogBinaryParser {
     decodeStream(new java.io.ByteArrayInputStream(bytes), basename)
 
   /** Incrementally decode a binlog byte stream: one 19-byte common header
-    * + one event body in memory at a time, yielded lazily. Malformed or
-    * truncated trailing bytes end the scan (warn-and-stop, the binary
-    * analogue of the reference's skip-malformed semantics); a bad magic
-    * fails loudly. The stream is closed when the iterator is exhausted.
+    * + one event body in memory at a time, yielded lazily. A malformed
+    * header or truncated bytes end the scan silently, wherever
+    * [[BinlogFraming]] stops: the rest of the file is dropped and nothing
+    * reports it yet (ROADMAP.md item 3). A bad magic fails loudly. The
+    * stream is closed when the iterator is exhausted.
     *
     * `withRowImages = false` skips row-image VALUE decoding entirely
     * (TABLE_MAP state is still tracked for schema/table attribution) —
@@ -99,36 +96,27 @@ object BinlogBinaryParser {
       withRowImages: Boolean = true,
       startOffset: Long = 0L, endOffset: Long = Long.MaxValue,
       startIndex: Long = 0L, initialChecksumLen: Int = 0): Iterator[ParsedBinlogEvent] = {
-    var pos = startOffset
-    if (startOffset == 0L) {
-      val magic = readN(in, 4)
-      require(magic.exists(java.util.Arrays.equals(_, Magic)),
-        s"$basename: not a binlog file (bad magic)")
-      pos = 4L
-    }
+    val frames = new BinlogFraming.Reader(in, startOffset, startIndex,
+      initialChecksumLen, withBodies = true)
+    if (startOffset == 0L)
+      require(frames.readMagic(), s"$basename: not a binlog file (bad magic)")
     val fileSeq = BinlogTextParser.fileSeq(basename)
 
     new Iterator[ParsedBinlogEvent] {
-      private var index = startIndex
       // file-scoped decoder state
       private var curSchema = ""
       private var curTable = ""
       private var curGtid = ""
-      // CRC32 tail length on every event once the FDE declares checksums
-      private var checksumLen = initialChecksumLen
       // TABLE_MAP registry: table_id → (schema, table, col types, metadata)
       private val tableDefs =
         collection.mutable.Map.empty[Long, (String, String, Array[Int], Array[Int])]
 
       private var nextEv: ParsedBinlogEvent = _
       private var finished = false
-      // events unpacked from a TransactionPayload container, served FIFO
-      private val pending = collection.mutable.Queue.empty[ParsedBinlogEvent]
-      // payload stashed by the type-40 body decode for expansion
-      private var payloadToExpand: Array[Byte] = _
+      // the inner events of the last TransactionPayload container, in order
+      private var inner: Iterator[BinlogFraming.Frame] = Iterator.empty
 
       override def hasNext: Boolean = {
-        if (nextEv == null && pending.nonEmpty) nextEv = pending.dequeue()
         if (nextEv == null && !finished) advance()
         nextEv != null
       }
@@ -144,76 +132,22 @@ object BinlogBinaryParser {
       }
 
       private def advance(): Unit =
-        if (pos >= endOffset) stop() // range exhausted (intra-file split)
-        else readN(in, 19) match {
-          case None => stop() // clean EOF (or truncated header: stop)
-          case Some(header) => decodeOne(header)
+        if (inner.hasNext) nextEv = buildEvent(inner.next())
+        else if (frames.position >= endOffset) stop() // range exhausted (intra-file split)
+        else frames.next() match {
+          case f if f == null || f.torn => stop() // torn tail: drop the event
+          case f =>
+            nextEv = buildEvent(f)
+            inner = f.innerEvents.iterator
         }
 
-      private def decodeOne(header: Array[Byte]): Unit = {
-        val buf = ByteBuffer.wrap(header).order(ByteOrder.LITTLE_ENDIAN)
-        val tsSec = buf.getInt & 0xFFFFFFFFL
-        val typeCode = buf.get & 0xFF
-        val serverId = buf.getInt & 0xFFFFFFFFL
-        val eventSize = buf.getInt & 0xFFFFFFFFL
-        val endLogPos = buf.getInt & 0xFFFFFFFFL
-        val flags = buf.getShort & 0xFFFF
-        if (eventSize < 19 || eventSize > Int.MaxValue) { stop(); return }
-        val bodyBytes = readN(in, eventSize.toInt - 19) match {
-          case None => stop(); return // truncated tail: drop the event
-          case Some(b) => b
-        }
-        pos += eventSize
-        nextEv = buildEvent(tsSec, typeCode, serverId, endLogPos, flags,
-          bodyBytes, checksumLen)
-        if (payloadToExpand != null) {
-          val payload = payloadToExpand
-          payloadToExpand = null    // clear BEFORE expanding — the in-loop
-          expandPayload(payload, 1) // nested check must not see this payload
-        }
-      }
-
-      /** Decode the uncompressed inner-event stream of a
-        * TransactionPayload container into `pending`. Inner events carry
-        * NO per-event checksum (the container's CRC covers them) and
-        * share the file's decoder state (TABLE_MAP registry, GTID
-        * scope). A malformed inner stream stops the expansion — the
-        * container event itself was already emitted. Nesting is bounded
-        * ([[BinlogBinaryParser.MaxPayloadNesting]]): MySQL produces depth
-        * 1; a crafted file of containers-in-containers must degrade
-        * (deeper levels unexpanded), not recurse StackOverflowError-deep
-        * — an Error no catch in this decoder contains. */
-      private def expandPayload(inner: Array[Byte], depth: Int): Unit = {
-        if (depth > MaxPayloadNesting) return
-        var p = 0
-        var ok = true
-        while (ok && p + 19 <= inner.length) {
-          val h = ByteBuffer.wrap(inner, p, 19).order(ByteOrder.LITTLE_ENDIAN)
-          val its = h.getInt & 0xFFFFFFFFL
-          val itc = h.get & 0xFF
-          val isid = h.getInt & 0xFFFFFFFFL
-          val isz = (h.getInt & 0xFFFFFFFFL).toInt
-          val ipos = h.getInt & 0xFFFFFFFFL
-          val ifl = h.getShort & 0xFFFF
-          if (isz < 19 || p + isz > inner.length) ok = false
-          else {
-            val ibody = java.util.Arrays.copyOfRange(inner, p + 19, p + isz)
-            val ev = buildEvent(its, itc, isid, ipos, ifl, ibody, ckLen = 0)
-            pending += ev.copy(extra = ev.extra + ("in_payload" -> "1"))
-            if (payloadToExpand != null) { // nested container (not produced
-              val nested = payloadToExpand // by MySQL, but don't leak the
-              payloadToExpand = null       // stash into the next outer event)
-              expandPayload(nested, depth + 1)
-            }
-            p += isz
-          }
-        }
-      }
-
-      private def buildEvent(tsSec: Long, typeCode: Int, serverId: Long,
-          endLogPos: Long, flags: Int, bodyBytes: Array[Byte],
-          ckLen: Int): ParsedBinlogEvent = {
-        val body = ByteBuffer.wrap(bodyBytes).order(ByteOrder.LITTLE_ENDIAN)
+      /** One event's row. Inner events of a container carry no checksum
+        * tail and share the file's decoder state (TABLE_MAP registry, GTID
+        * scope). */
+      private def buildEvent(f: BinlogFraming.Frame): ParsedBinlogEvent = {
+        val typeCode = f.typeCode
+        val ckLen = f.checksumLen
+        val body = f.body
         val name = eventTypeNames.getOrElse(typeCode, s"Type$typeCode")
         var query = ""
         var xid: Option[Long] = None
@@ -222,21 +156,16 @@ object BinlogBinaryParser {
         var evTable = ""
         var rowImages: Seq[Seq[String]] = Nil
         val extra = collection.mutable.LinkedHashMap.empty[String, String]
-        extra("server_id") = serverId.toString
-        extra("flags") = flags.toString
+        extra("server_id") = f.serverId.toString
+        extra("flags") = f.flags.toString
 
         // A malformed BODY degrades to a header-only event (the binary
         // analogue of the reference's warn-and-skip, P6) — the common
         // header already carried type/position/time, which is what the
         // comparison consumes.
         try typeCode match {
-          case 15 => // FORMAT_DESCRIPTION: ends with [checksum_alg, crc32]
-            // on servers that support binlog checksums (≥5.6.1)
-            if (bodyBytes.length >= 62) {
-              val alg = bodyBytes(bodyBytes.length - 5) & 0xFF
-              if (alg == 1) checksumLen = 4 else if (alg == 0) checksumLen = 0
-              extra("checksum_alg") = alg.toString
-            }
+          case 15 => // FORMAT_DESCRIPTION: the framer tracks its checksum_alg
+            if (f.checksumAlg >= 0) extra("checksum_alg") = f.checksumAlg.toString
           case 2 => // QUERY: proxy_id u32, exec_time u32, schema_len u8,
             // error_code u16, status_len u16, status, schema, \0, query
             val proxyId = body.getInt & 0xFFFFFFFFL
@@ -260,7 +189,7 @@ object BinlogBinaryParser {
           case 19 => // TABLE_MAP: table_id u48, flags u16, schema_len u8,
             // schema, \0, table_len u8, table, \0, col_count (packed),
             // col_types, metadata_len (packed), metadata, null_bitmap
-            val tableId = readUInt48(body)
+            val tableId = readLittleEndian(body, 6)
             body.getShort // flags
             val sl = body.get & 0xFF
             val sb = new Array[Byte](sl); body.get(sb); body.get()
@@ -271,11 +200,11 @@ object BinlogBinaryParser {
             evSchema = curSchema
             evTable = curTable
             extra("tableid") = tableId.toString
-            val colCount = readPackedInt(body)
+            val colCount = readPackedLong(body).toInt
             val types = new Array[Int](colCount)
             var c = 0
             while (c < colCount) { types(c) = body.get & 0xFF; c += 1 }
-            val metaLen = readPackedInt(body)
+            val metaLen = readPackedLong(body).toInt
             val metaEnd = body.position() + metaLen
             // validate every type code BEFORE consuming metadata — an
             // unknown code means the meta layout is uninterpretable, and
@@ -309,7 +238,7 @@ object BinlogBinaryParser {
             extra("next_file") = new String(nb, "UTF-8")
             extra("rotate_position") = rpos.toString
           case 23 | 24 | 25 | 30 | 31 | 32 => // ROWS v1/v2: table_id u48, flags u16
-            val tableId = readUInt48(body)
+            val tableId = readLittleEndian(body, 6)
             body.getShort
             evSchema = curSchema
             evTable = curTable
@@ -337,63 +266,30 @@ object BinlogBinaryParser {
             val vtype = body.get & 0xFF
             extra("intvar_type") = vtype.toString
             extra("intvar_value") = body.getLong.toString
-          case 40 => // TRANSACTION_PAYLOAD (MySQL 8.0.20+, the public
-            // WL#3549 wire format): TLV header fields — 1 = payload size,
-            // 2 = compression type (0 ZSTD, 255 NONE), 3 = uncompressed
-            // size — terminated by mark 0, then the (possibly compressed)
-            // byte stream of complete inner events
-            var compression = 255L
-            var uncompressedSize = -1L
-            var payloadSize = -1L
-            var done = false
-            while (!done) {
-              readPackedLong(body) match {
-                case 0 => done = true
-                case t =>
-                  val len = readPackedLong(body).toInt
-                  val start = body.position()
-                  val v = readPackedLong(body)
-                  body.position(start + len)
-                  t match {
-                    case 1 => payloadSize = v
-                    case 2 => compression = v
-                    case 3 => uncompressedSize = v
-                    case _ => () // unknown optional field: skipped via len
-                  }
-              }
+          case 40 => // TRANSACTION_PAYLOAD: the framer unpacked it
+            if (f.payloadError != null)
+              extra("body_decode_error") = f.payloadError.getClass.getSimpleName
+            else {
+              extra("compression_type") = f.payload.compression.toString
+              extra("payload_bytes") = f.payload.payloadBytes.toString
+              if (f.payload.uncompressedSize >= 0)
+                extra("uncompressed_size") = f.payload.uncompressedSize.toString
             }
-            val rawLen = body.remaining() - ckLen
-            require(rawLen >= 0 && (payloadSize < 0 || payloadSize <= rawLen),
-              s"payload size $payloadSize exceeds body $rawLen")
-            val raw = new Array[Byte](if (payloadSize >= 0) payloadSize.toInt else rawLen)
-            body.get(raw)
-            payloadToExpand = compression match {
-              case 0 => // ZSTD
-                require(uncompressedSize >= 0 && uncompressedSize <= Int.MaxValue,
-                  s"bad uncompressed size $uncompressedSize")
-                com.github.luben.zstd.Zstd.decompress(raw, uncompressedSize.toInt)
-              case 255 => raw // NONE
-              case other =>
-                throw new IllegalArgumentException(s"unknown payload compression $other")
-            }
-            extra("compression_type") = compression.toString
-            extra("payload_bytes") = raw.length.toString
-            if (uncompressedSize >= 0)
-              extra("uncompressed_size") = uncompressedSize.toString
           case _ => () // header-only decode for everything else
         } catch {
           case e: RuntimeException =>
             extra("body_decode_error") = e.getClass.getSimpleName
         }
+        if (f.inPayload) extra("in_payload") = "1"
 
-        val rfc = Instant.ofEpochSecond(tsSec).atOffset(ZoneOffset.UTC)
+        val rfc = Instant.ofEpochSecond(f.timestamp).atOffset(ZoneOffset.UTC)
           .format(DateTimeFormatter.ISO_OFFSET_DATE_TIME)
         val ev = ParsedBinlogEvent(
           event_type = name,
           timestamp = rfc,
           immediate_commmit_timestamp = "",
           orignal_commmit_timestamp = "",
-          log_position = Some(endLogPos),
+          log_position = Some(f.endLogPos),
           table = evTable,
           schema = evSchema,
           query = query,
@@ -401,54 +297,12 @@ object BinlogBinaryParser {
           xid = xid,
           binlog_file = basename,
           file_seq = fileSeq,
-          event_index = index,
+          event_index = f.index,
           extra = extra.toMap,
           row_images = rowImages)
-        index += 1
         if (typeCode == 16) curGtid = "" // XID closes the transaction
         ev
       }
-    }
-  }
-
-  /** Read exactly `n` bytes, or None if the stream ends first. */
-  private def readN(in: java.io.InputStream, n: Int): Option[Array[Byte]] = {
-    val buf = new Array[Byte](n)
-    var off = 0
-    while (off < n) {
-      val r = in.read(buf, off, n - off)
-      if (r < 0) return None
-      off += r
-    }
-    Some(buf)
-  }
-
-  private def readUInt48(b: ByteBuffer): Long = {
-    var v = 0L
-    var i = 0
-    while (i < 6) { v |= (b.get & 0xFFL) << (8 * i); i += 1 }
-    v
-  }
-
-  /** MySQL length-encoded ("packed") integer, full long range. */
-  private[ingest] def readPackedLong(b: ByteBuffer): Long = {
-    val first = b.get & 0xFF
-    first match {
-      case 252 => b.getShort & 0xFFFF
-      case 253 => (b.get & 0xFFL) | ((b.get & 0xFFL) << 8) | ((b.get & 0xFFL) << 16)
-      case 254 => b.getLong
-      case v => v.toLong
-    }
-  }
-
-  /** MySQL length-encoded ("packed") integer. */
-  private def readPackedInt(b: ByteBuffer): Int = {
-    val first = b.get & 0xFF
-    first match {
-      case 252 => b.getShort & 0xFFFF
-      case 253 => (b.get & 0xFF) | ((b.get & 0xFF) << 8) | ((b.get & 0xFF) << 16)
-      case 254 => b.getLong.toInt
-      case v => v
     }
   }
 
@@ -549,7 +403,7 @@ object BinlogBinaryParser {
   private def decodeRowImages(
       body: ByteBuffer, types: Array[Int], meta: Array[Int],
       isUpdate: Boolean, checksumLen: Int): Seq[Seq[String]] = {
-    val width = readPackedInt(body)
+    val width = readPackedLong(body).toInt
     val bmLen = (width + 7) / 8
     val present1 = new Array[Byte](bmLen); body.get(present1)
     val present2 =

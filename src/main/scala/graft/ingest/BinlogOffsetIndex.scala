@@ -1,7 +1,5 @@
 package graft.ingest
 
-import java.nio.{ByteBuffer, ByteOrder}
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
@@ -18,12 +16,14 @@ import org.apache.spark.sql.SparkSession
   * decoder state (event index, CRC32 tail length) from the index.
   *
   * The index pass is itself distributed (one task per file) and reads
-  * headers only: bodies are skipped except FORMAT_DESCRIPTION (checksum
-  * algorithm) and TRANSACTION_PAYLOAD (inner-event count, needed so
-  * event_index stays globally consistent across ranges), so it runs at
-  * sequential-IO speed, not decode speed. Reference analogue: the
-  * sequential per-file loop `/root/reference/comparator.sh:85-101` — the
-  * engine splits what the reference serializes.
+  * headers only: it frames the file with the decoder's own
+  * [[BinlogFraming]], which skips every body except FORMAT_DESCRIPTION
+  * (checksum algorithm) and TRANSACTION_PAYLOAD (inner events, which take
+  * event_index values), so it runs at sequential-IO speed, not decode
+  * speed, and seeds exactly the state the decoder reaches. Reference
+  * analogue: the sequential per-file loop
+  * `/root/reference/comparator.sh:85-101` — the engine splits what the
+  * reference serializes.
   *
   * Binlog files are immutable once rotated; the index stores the file
   * length it walked and the scan falls back to whole-file decode when the
@@ -251,54 +251,20 @@ object BinlogOffsetIndex {
     val p = new Path(file)
     val fs = p.getFileSystem(conf)
     val fileLen = fs.getFileStatus(p).getLen
-    val base = p.getName
     val in = new java.io.BufferedInputStream(fs.open(p), 1 << 16)
     try {
-      val magic = new Array[Byte](4)
-      require(readFully(in, magic) && java.util.Arrays.equals(magic, BinlogBinaryParser.Magic),
-        s"$base: not a binlog file (bad magic)")
-      var pos = 4L
-      var index = 0L
-      var ckLen = 0
+      val frames = new BinlogFraming.Reader(in, 0L, 0L, 0, withBodies = false)
+      require(frames.readMagic(), s"${p.getName}: not a binlog file (bad magic)")
       var nextTarget = splitBytes
       // (boundary offset, event index there, checksum length there)
       val bounds = collection.mutable.ArrayBuffer.empty[(Long, Long, Int)]
-      val hdr = new Array[Byte](19)
-      var done = false
-      while (!done) {
-        if (!readFully(in, hdr)) done = true
-        else {
-          val buf = ByteBuffer.wrap(hdr).order(ByteOrder.LITTLE_ENDIAN)
-          buf.getInt // timestamp
-          val typeCode = buf.get & 0xFF
-          buf.getInt // server id
-          val eventSize = buf.getInt & 0xFFFFFFFFL
-          if (eventSize < 19 || eventSize > Int.MaxValue) done = true
-          else {
-            if ((typeCode == 33 || typeCode == 34) && pos >= nextTarget) {
-              bounds += ((pos, index, ckLen))
-              nextTarget = pos + splitBytes
-            }
-            val bodyLen = eventSize.toInt - 19
-            typeCode match {
-              case 15 => // FORMAT_DESCRIPTION: checksum algorithm tail
-                val body = new Array[Byte](bodyLen)
-                if (!readFully(in, body)) done = true
-                else if (bodyLen >= 62) {
-                  val alg = body(bodyLen - 5) & 0xFF
-                  if (alg == 1) ckLen = 4 else if (alg == 0) ckLen = 0
-                }
-              case 40 => // TRANSACTION_PAYLOAD: inner events share the
-                // file's event_index sequence, so count them
-                val body = new Array[Byte](bodyLen)
-                if (!readFully(in, body)) done = true
-                else index += countPayloadEvents(body, ckLen, 1)
-              case _ =>
-                if (!skipFully(in, bodyLen)) done = true
-            }
-            if (!done) { index += 1; pos += eventSize }
-          }
+      var f = frames.next()
+      while (f != null) {
+        if ((f.typeCode == 33 || f.typeCode == 34) && f.offset >= nextTarget) {
+          bounds += ((f.offset, f.index, f.checksumLen))
+          nextTarget = f.offset + splitBytes
         }
+        f = frames.next()
       }
       if (bounds.isEmpty) Seq(SplitRange(file, 0L, fileLen, 0L, 0, fileLen))
       else {
@@ -318,15 +284,14 @@ object BinlogOffsetIndex {
     * micro-batch tail of a GROWING binlog file (the torn tail past it —
     * rows flushed, commit record not yet written — is held back, cdc56's
     * class, resumed from the returned state next trigger). Closing
-    * events: XID (type 16) and a fully-readable TRANSACTION_PAYLOAD
-    * (type 40 — compressed transactions carry their XID INSIDE the
-    * container, so the container's own end is the boundary). A torn
-    * trailing event (partial header or body at EOF) or garbage sizes end
-    * the walk without advancing the frontier; a file torn inside the
-    * 4-byte magic returns the input state unchanged. Same walk state
-    * discipline as [[walkFile]] (FDE checksum algorithm, payload inner-
-    * event counting), so the returned (index, checksumLen) seed
-    * [[BinlogBinaryParser.decodeStream]] exactly.
+    * events: XID (type 16) and a whole TRANSACTION_PAYLOAD (type 40 —
+    * compressed transactions carry their XID INSIDE the container, so the
+    * container's own end is the boundary). Wherever [[BinlogFraming]]
+    * stops (a torn trailing event, garbage sizes) the walk stops without
+    * advancing the frontier; a file torn inside the 4-byte magic returns
+    * the input state unchanged. The returned (index, checksumLen) are the
+    * framer's own, so they seed [[BinlogBinaryParser.decodeStream]]
+    * exactly.
     *
     * Runs wherever the caller is (the tail source calls it driver-side
     * at offset planning); per trigger it reads only the bytes past the
@@ -346,147 +311,23 @@ object BinlogOffsetIndex {
       conf: org.apache.hadoop.conf.Configuration,
       byteBudget: Long = Long.MaxValue): (Long, Long, Int) = {
     val p = new Path(file)
-    val fs = p.getFileSystem(conf)
-    val raw = fs.open(p)
+    val raw = p.getFileSystem(conf).open(p)
     try {
-      var pos = fromPos
-      var index = fromIndex
-      var ckLen = fromCk
-      if (fromPos == 0L) {
-        val magic = new Array[Byte](4)
-        if (!readFully(raw, magic) ||
-            !java.util.Arrays.equals(magic, BinlogBinaryParser.Magic))
-          return (fromPos, fromIndex, fromCk)
-        pos = 4L
-      } else raw.seek(fromPos)
-      val in = new java.io.BufferedInputStream(raw, 1 << 16)
-      var fPos = fromPos
-      var fIdx = fromIndex
-      var fCk = fromCk
-      val hdr = new Array[Byte](19)
-      var done = false
-      while (!done) {
-        // soft byte budget: stop at the last commit boundary once the
-        // budget is consumed AND the frontier has advanced (see scaladoc)
-        if (fPos > fromPos && pos - fromPos >= byteBudget) done = true
-        else if (!readFully(in, hdr)) done = true
-        else {
-          val buf = ByteBuffer.wrap(hdr).order(ByteOrder.LITTLE_ENDIAN)
-          buf.getInt // timestamp
-          val typeCode = buf.get & 0xFF
-          buf.getInt // server id
-          val eventSize = buf.getInt & 0xFFFFFFFFL
-          if (eventSize < 19 || eventSize > Int.MaxValue) done = true
-          else {
-            val bodyLen = eventSize.toInt - 19
-            typeCode match {
-              case 15 =>
-                val body = new Array[Byte](bodyLen)
-                if (!readFully(in, body)) done = true
-                else if (bodyLen >= 62) {
-                  val alg = body(bodyLen - 5) & 0xFF
-                  if (alg == 1) ckLen = 4 else if (alg == 0) ckLen = 0
-                }
-              case 40 =>
-                val body = new Array[Byte](bodyLen)
-                if (!readFully(in, body)) done = true
-                else index += countPayloadEvents(body, ckLen, 1)
-              case _ =>
-                if (!skipFully(in, bodyLen)) done = true
-            }
-            if (!done) {
-              index += 1
-              pos += eventSize
-              if (typeCode == 16 || typeCode == 40) {
-                fPos = pos; fIdx = index; fCk = ckLen
-              }
-            }
-          }
-        }
+      if (fromPos > 0L) raw.seek(fromPos)
+      val frames = new BinlogFraming.Reader(new java.io.BufferedInputStream(raw, 1 << 16),
+        fromPos, fromIndex, fromCk, withBodies = false)
+      if (fromPos == 0L && !frames.readMagic()) return (fromPos, fromIndex, fromCk)
+      var frontier = (fromPos, fromIndex, fromCk)
+      // soft byte budget: stop at the last commit boundary once the
+      // budget is consumed AND the frontier has advanced (see scaladoc)
+      def more = !(frontier._1 > fromPos && frames.position - fromPos >= byteBudget)
+      var f = if (more) frames.next() else null
+      while (f != null) {
+        if (!f.torn && (f.typeCode == 16 || f.typeCode == 40))
+          frontier = (frames.position, frames.nextIndex, frames.checksumLen)
+        f = if (more) frames.next() else null
       }
-      (fPos, fIdx, fCk)
+      frontier
     } finally raw.close()
-  }
-
-  /** How many events [[BinlogBinaryParser]]'s payload expansion will emit
-    * for this TRANSACTION_PAYLOAD body — 0 on any malformation, exactly
-    * mirroring the decoder's throw→`body_decode_error`→no-expansion path.
-    * Recurses into (pathological) nested containers like the decoder,
-    * with the decoder's shared nesting bound so counts stay identical. */
-  private def countPayloadEvents(bodyBytes: Array[Byte], ckLen: Int,
-      depth: Int): Long = {
-    if (depth > BinlogBinaryParser.MaxPayloadNesting) return 0L
-    try {
-      val body = ByteBuffer.wrap(bodyBytes).order(ByteOrder.LITTLE_ENDIAN)
-      var compression = 255L
-      var uncompressedSize = -1L
-      var payloadSize = -1L
-      var done = false
-      while (!done) {
-        BinlogBinaryParser.readPackedLong(body) match {
-          case 0 => done = true
-          case t =>
-            val len = BinlogBinaryParser.readPackedLong(body).toInt
-            val start = body.position()
-            val v = BinlogBinaryParser.readPackedLong(body)
-            body.position(start + len)
-            t match {
-              case 1 => payloadSize = v
-              case 2 => compression = v
-              case 3 => uncompressedSize = v
-              case _ => ()
-            }
-        }
-      }
-      val rawLen = body.remaining() - ckLen
-      if (rawLen < 0 || payloadSize > rawLen) return 0L
-      val raw = new Array[Byte](if (payloadSize >= 0) payloadSize.toInt else rawLen)
-      body.get(raw)
-      val inner = compression match {
-        case 0 =>
-          if (uncompressedSize < 0 || uncompressedSize > Int.MaxValue) return 0L
-          com.github.luben.zstd.Zstd.decompress(raw, uncompressedSize.toInt)
-        case 255 => raw
-        case _ => return 0L
-      }
-      var p = 0
-      var n = 0L
-      var ok = true
-      while (ok && p + 19 <= inner.length) {
-        val itc = inner(p + 4) & 0xFF
-        val isz = (ByteBuffer.wrap(inner, p + 9, 4)
-          .order(ByteOrder.LITTLE_ENDIAN).getInt & 0xFFFFFFFFL).toInt
-        if (isz < 19 || p + isz > inner.length) ok = false
-        else {
-          n += 1
-          if (itc == 40) // nested container: decoder expands recursively
-            n += countPayloadEvents(
-              java.util.Arrays.copyOfRange(inner, p + 19, p + isz), 0, depth + 1)
-          p += isz
-        }
-      }
-      n
-    } catch { case _: RuntimeException => 0L }
-  }
-
-  private def readFully(in: java.io.InputStream, buf: Array[Byte]): Boolean = {
-    var off = 0
-    while (off < buf.length) {
-      val r = in.read(buf, off, buf.length - off)
-      if (r < 0) return false
-      off += r
-    }
-    true
-  }
-
-  private def skipFully(in: java.io.InputStream, n: Long): Boolean = {
-    var left = n
-    while (left > 0) {
-      val s = in.skip(left)
-      if (s > 0) left -= s
-      else if (in.read() < 0) return false // skip() stalled: probe a byte
-      else left -= 1
-    }
-    true
   }
 }

@@ -25,8 +25,7 @@ import graft.ingest.AvroSource
   *
   *   spark.read.format("avrofile").load("/path/to/files")
   *
-  * Improvements over the avro-mapred RDD route in [[AvroSource.read]]
-  * (which this now backs):
+  * [[AvroSource.read]] is this connector. What it does:
   *   - **Splittable files**: Avro's sync markers make any byte range
   *     readable (`DataFileReader.sync(start)` seeks to the next block
   *     boundary; read while `!pastSync(end)`). Files larger than
@@ -38,7 +37,7 @@ import graft.ingest.AvroSource
   *   - **Column pruning**: unprojected top-level fields are never
   *     converted.
   *
-  * Schema semantics match [[AvroSource.read]]: the reader schema comes
+  * Schema semantics: the reader schema comes
   * from the first file's header, each file resolves writer→reader by
   * Avro rules (field defaults apply; an incompatible writer schema fails
   * the task loudly), and `["null", T]` unions become nullable `T`.

@@ -127,6 +127,24 @@ class ComparatorSpec extends AnyFunSuite with SparkTestSession {
   test("change-type mismatch flagged (UPDATE vs INSERT)") {
     assert(statusOf(7000) == Seq(Status.MismatchChangeType))
   }
+  test("change type compares case-insensitively (lowercase Avro change_type)") {
+    val dir = Files.createTempDirectory("cdc_ct").toFile
+    val bf = new java.io.File(dir, "binlog_metadata.json")
+    val af = new java.io.File(dir, "avro_rows.json")
+    def write(pos: Long) =
+      s"""{"event_type":"WriteRowsEventV2","immediate_commmit_timestamp":"2024-05-01T12:00:00Z","log_position":$pos,"binlog_file":"mysql-bin.000001"}"""
+    Files.write(bf.toPath, Seq(write(100), write(200)).mkString("\n").getBytes)
+    Files.write(af.toPath, Seq(avroLine(100, T0, changeType = "insert"),
+      avroLine(200, T0, changeType = "update")).mkString("\n").getBytes)
+    val binlog = Comparator.prepareBinlog(
+      Sources.quarantine(Sources.binlogJson(spark, bf.getPath)).clean,
+      monotonically_increasing_id())
+    val avro = Comparator.prepareAvro(Comparator.flattenWrappedAvro(
+      Sources.quarantine(Sources.avroJson(spark, af.getPath)).clean))
+    val status = Comparator.compare(binlog, avro).select("position", "status")
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(status == Map(100L -> Status.Match, 200L -> Status.MismatchChangeType))
+  }
   test("V2 delete dead branch never flags change type") {
     assert(statusOf(8000) == Seq(Status.Match))
   }

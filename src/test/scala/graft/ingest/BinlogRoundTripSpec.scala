@@ -249,6 +249,40 @@ class BinlogRoundTripSpec extends AnyFunSuite {
     assert(evs.map(_.event_index) == evs.indices.map(_.toLong))
   }
 
+  test("FORMAT_DESCRIPTION inside a TransactionPayload: walk seeds follow the decoder") {
+    // MySQL writes no FDE inside a container; when one declares CRC32 the
+    // decoder trims 4-byte tails from the top-level events after the
+    // container, so the split-index and commit-frontier walks seed the same
+    val sid = (1 to 16).map(_.toByte).toArray
+    val crcFde = new Array[Byte](84)
+    crcFde(79) = 1 // checksum_alg = CRC32
+    val tail = new Array[Byte](4)
+    val f = new FileBuilder(checksums = false)
+    f.fde(T0)
+    f.event(T0, 33, gtidBody(sid, 1))
+    f.event(T0, 40, transactionPayloadBody(innerEventStream(Seq(
+      (T0, 15, crcFde), (T0, 16, xidBody(1)))), compress = false))
+    f.event(T0, 33, gtidBody(sid, 2) ++ tail)
+    f.event(T0, 2, queryBody("s", "BEGIN") ++ tail)
+    f.event(T0, 16, xidBody(2) ++ tail)
+    val file = new java.io.File(
+      java.nio.file.Files.createTempDirectory("binlog_inner_fde").toFile, "mysql-bin.000042")
+    java.nio.file.Files.write(file.toPath, f.bytes)
+    val whole = BinlogBinaryParser.decodeFile(f.bytes, file.getName).toSeq
+    assert(whole.filter(_.event_type == "Query").map(_.query) == Seq("BEGIN"))
+
+    val conf = new org.apache.hadoop.conf.Configuration()
+    val last = BinlogOffsetIndex.walkFile(file.getPath, 1L, conf).last
+    assert(last.checksumLen == 4)
+    val in = new java.io.ByteArrayInputStream(f.bytes)
+    in.skip(last.start)
+    assert(BinlogBinaryParser.decodeStream(in, file.getName, startOffset = last.start,
+      startIndex = last.startIndex, initialChecksumLen = last.checksumLen).toSeq ==
+      whole.drop(last.startIndex.toInt))
+    assert(BinlogOffsetIndex.commitFrontier(file.getPath, 0L, 0L, 0, conf) ==
+      ((f.bytes.length.toLong, whole.size.toLong, 4)))
+  }
+
   test("fuzz: corrupted files never throw — they stop or degrade loudly") {
     val rnd = new scala.util.Random(99)
     // a realistic base file exercising every decode path

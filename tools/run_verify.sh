@@ -5,7 +5,8 @@ set -e
 SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/verify_out}
 shift $(( $# > 2 ? 2 : $# ))
-CLASSES=/root/repo/target/scala-2.13/classes
+# the classes of the checkout this script lives in, wherever it was copied
+CLASSES="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)/target/scala-2.13/classes"
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic; do
