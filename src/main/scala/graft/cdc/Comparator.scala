@@ -15,8 +15,13 @@ import org.apache.spark.sql.functions._
   *   - the reference's in-heap `map[BinlogKey]BinlogEvent` becomes the join —
   *     Catalyst/AQE pick broadcast vs shuffled-hash vs sort-merge from stats,
   *     and every choice is spillable and partition-parallel;
-  *   - last-wins dedup is `max_by` in a hash aggregate (map-side partial agg,
-  *     one shuffle on the join key) instead of a window sort;
+  *   - last-wins dedup is `max_by` in a sort aggregate (its buffer holds a
+  *     struct, which a hash aggregate's fixed-width buffer cannot): a
+  *     map-side partial agg after a local sort, one shuffle on the join key,
+  *     instead of a window sort;
+  *   - the binlog side carries only [[BinlogCompareColumns]] through the
+  *     dedup, so a scan decodes only the columns the compare reads (the
+  *     binary `binlog` scan then skips row images and event extras);
   *   - all comparison logic is `Column` expressions — whole-stage codegen,
   *     no per-row (de)serialization, no driver collects.
   */
@@ -36,6 +41,17 @@ object Comparator {
     * always mismatches (reference compare_timestamps.go:197-216). */
   val GoZeroTimeMicros: Long = -62135596800000000L
 
+  /** The binlog value columns the compare reads, each with its renamed
+    * `b_*` name: [[renameBinlogSide]] projects them and [[prepareBinlog]]
+    * carries exactly these (besides the key and `_seq`) through its dedup. */
+  private[graft] val BinlogCompareColumns: Seq[(String, String)] = Seq(
+    "event_type" -> "b_event_type",
+    "timestamp" -> "b_ts_str",
+    "immediate_commmit_timestamp" -> "b_icts_str",
+    "gtid_next" -> "b_gtid_next",
+    "table" -> "b_table",
+    "schema" -> "b_schema")
+
   /** P3/P4 + Go-zero-value normalization WITHOUT the dedup aggregate — the
     * streaming-safe prepare (a streaming aggregation cannot precede a
     * stream-stream join; live CDC feeds carry unique (file, position) keys,
@@ -51,8 +67,12 @@ object Comparator {
   /** Phase A (reference loadBinlogData, compare_timestamps.go:101-151):
     * relevance filter, zero-value key filter, last-wins dedup.
     *
-    * @param raw    binlog events with at least the columns of
-    *               `Schemas.binlogReadSchema`
+    * Output: the key (`binlog_file`, `log_position`), the winning row's
+    * [[BinlogCompareColumns]] and its `_seq`. Every other input column is
+    * dropped before the dedup, so a pruning scan never reads it.
+    *
+    * @param raw    binlog events with at least the key and
+    *               [[BinlogCompareColumns]]
     * @param seq    strictly increasing input-order column — the distributed
     *               stand-in for the reference's map-insert order (:147).
     *               Callers reading files should derive it from
@@ -64,16 +84,18 @@ object Comparator {
     // zero value *before* the filters (reference :137-140 drops those rows).
     val normalized = normalizeBinlog(raw.withColumn("_seq", seq))
 
-    // Last-wins dedup (map insert, reference :147). max_by over the seq keeps
-    // it a hash aggregate with map-side combine — no window sort, one shuffle
-    // that the full-outer join below reuses (same key).
-    val valueCols =
-      normalized.columns.filterNot(Seq("binlog_file", "log_position").contains)
+    // Last-wins dedup (map insert, reference :147) as max_by over the seq —
+    // no window sort, one shuffle that the full-outer join below reuses
+    // (same key). The max_by buffer holds a struct, which a hash
+    // aggregate's fixed-width buffer cannot, so Spark plans a sort
+    // aggregate: partial max_by per input partition after a local sort on
+    // the key, the shuffle, a sort, then the final max_by.
+    val valueCols = BinlogCompareColumns.map(_._1) :+ "_seq"
     normalized
       .groupBy(col("binlog_file"), col("log_position"))
-      .agg(max_by(struct(valueCols.toIndexedSeq.map(col): _*), col("_seq")).as("_v"))
+      .agg(max_by(struct(valueCols.map(col): _*), col("_seq")).as("_v"))
       .select(col("binlog_file") +: col("log_position") +:
-        valueCols.toIndexedSeq.map(c => col("_v." + c).as(c)): _*)
+        valueCols.map(c => col("_v." + c).as(c)): _*)
   }
 
   /** Unwrap the Avro-JSON union wrappers and flatten `source_metadata` to the
@@ -137,16 +159,9 @@ object Comparator {
     * by [[statusColumns]]. `keep` passes extra columns through unrenamed
     * (e.g. a streaming event-time/watermark column). */
   private[graft] def renameBinlogSide(binlog: DataFrame, keep: Seq[String] = Nil): DataFrame =
-    binlog.select(Seq(
-      col("binlog_file").as("b_file"),
-      col("log_position").as("b_pos"),
-      coalesce(col("event_type"), lit("")).as("b_event_type"),
-      coalesce(col("timestamp"), lit("")).as("b_ts_str"),
-      coalesce(col("immediate_commmit_timestamp"), lit("")).as("b_icts_str"),
-      coalesce(col("gtid_next"), lit("")).as("b_gtid_next"),
-      coalesce(col("table"), lit("")).as("b_table"),
-      coalesce(col("schema"), lit("")).as("b_schema"),
-      lit(true).as("_b_present")) ++ keep.map(col): _*)
+    binlog.select(Seq(col("binlog_file").as("b_file"), col("log_position").as("b_pos")) ++
+      BinlogCompareColumns.map { case (c, b) => coalesce(col(c), lit("")).as(b) } ++
+      Seq(lit(true).as("_b_present")) ++ keep.map(col): _*)
 
   /** The canonical renamed Avro-side projection (`a_*` columns). */
   private[graft] def renameAvroSide(avro: DataFrame, keep: Seq[String] = Nil): DataFrame =
@@ -304,7 +319,7 @@ object Comparator {
     val inferredCt = inferredChangeType(col("b_event_type"), cfg.strictChangeType)
     val ctMismatch = !parseError &&
       col("a_change_type") =!= "" && inferredCt =!= "" &&
-      upper(col("a_change_type")) =!= inferredCt
+      upperCase(col("a_change_type")) =!= inferredCt
 
     joined
       .withColumn("_b_present", coalesce(col("_b_present"), lit(false)))
@@ -329,6 +344,19 @@ object Comparator {
           .otherwise(Status.Match))
       .drop("b_file", "b_pos", "a_file", "a_pos")
   }
+
+  /** `upper(c)` without ICU for ASCII input. Spark's `upper` builds ICU's
+    * case-mapping tables on its first evaluation in a JVM, a one-off build
+    * that dominates a cold compare's peak memory; change types are ASCII in
+    * practice, so ASCII rows (as many characters as bytes) fold a–z to A–Z
+    * with `translate`. Other rows keep `upper` — dotless ı and long ſ fold
+    * to I and S there — so the result equals `upper(c)` for every valid
+    * UTF-8 input, and ICU's tables are built only if such a row is
+    * evaluated. */
+  private[graft] def upperCase(c: Column): Column =
+    when(length(c) === octet_length(c),
+      translate(c, "abcdefghijklmnopqrstuvwxyz", "ABCDEFGHIJKLMNOPQRSTUVWXYZ"))
+      .otherwise(upper(c))
 
   /** E8's parse-error predicate over the canonical `b_icts_str`/`b_ts_str`
     * columns — also derivable post-hoc from a `compare` output, which

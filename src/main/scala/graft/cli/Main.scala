@@ -57,6 +57,10 @@ import graft.ingest.{AvroSource, BinlogBinaryParser, BinlogTextParser, Sources}
   *     [--split-bytes <n>]      (target range size for the auto-built
   *                               index; default 128 MiB)
   *
+  * The compare decodes only the columns it reads: the binlog side carries
+  * `Comparator.BinlogCompareColumns` through its dedup, so the binary
+  * `binlog` scan skips row images, event extras and query text.
+  *
   * Outputs under --out (default /tmp/graft_out), written by
   * [[writeReport]]:
   *   - `detail/status=<status>/` — every non-match row, sorted by
@@ -655,9 +659,8 @@ object Main {
         val clean = ordered
           .filter(col("_corrupt_record").isNull).drop("_corrupt_record")
         Comparator.prepareBinlog(clean,
-            struct(coalesce(col("file_seq"), lit(0L)),
-              col("binlog_file_from_path"), col("line_no")))
-          .drop("binlog_file_from_path", "file_seq", "line_no")
+          struct(coalesce(col("file_seq"), lit(0L)),
+            col("binlog_file_from_path"), col("line_no")))
     }
     val avro = args.avro match {
       case Some(path) =>

@@ -81,7 +81,9 @@ object BinlogBinaryParser {
     * (TABLE_MAP state is still tracked for schema/table attribution) —
     * the CDC comparison consumes only headers/positions/timestamps, and
     * image decoding (strings, decimals, JSON documents) dominates decode
-    * cost, so the DSv2 reader sets this from column pruning.
+    * cost, so the DSv2 reader sets this from column pruning. Likewise
+    * `withExtra = false` leaves `extra` empty instead of collecting each
+    * event's header fields and body details into it.
     *
     * Range decode (intra-file splitting, [[BinlogOffsetIndex]]): with
     * `startOffset > 0` the caller has already positioned the stream at an
@@ -93,7 +95,7 @@ object BinlogBinaryParser {
     * ranges tile the file exactly (every event belongs to the one range
     * containing its first byte). */
   def decodeStream(in: java.io.InputStream, basename: String,
-      withRowImages: Boolean = true,
+      withRowImages: Boolean = true, withExtra: Boolean = true,
       startOffset: Long = 0L, endOffset: Long = Long.MaxValue,
       startIndex: Long = 0L, initialChecksumLen: Int = 0): Iterator[ParsedBinlogEvent] = {
     val frames = new BinlogFraming.Reader(in, startOffset, startIndex,
@@ -155,9 +157,11 @@ object BinlogBinaryParser {
         var evSchema = ""
         var evTable = ""
         var rowImages: Seq[Seq[String]] = Nil
-        val extra = collection.mutable.LinkedHashMap.empty[String, String]
-        extra("server_id") = f.serverId.toString
-        extra("flags") = f.flags.toString
+        val extra =
+          if (withExtra) collection.mutable.LinkedHashMap.empty[String, String] else null
+        def put(key: String, value: => String): Unit = if (extra != null) extra(key) = value
+        put("server_id", f.serverId.toString)
+        put("flags", f.flags.toString)
 
         // A malformed BODY degrades to a header-only event (the binary
         // analogue of the reference's warn-and-skip, P6) — the common
@@ -165,7 +169,7 @@ object BinlogBinaryParser {
         // comparison consumes.
         try typeCode match {
           case 15 => // FORMAT_DESCRIPTION: the framer tracks its checksum_alg
-            if (f.checksumAlg >= 0) extra("checksum_alg") = f.checksumAlg.toString
+            if (f.checksumAlg >= 0) put("checksum_alg", f.checksumAlg.toString)
           case 2 => // QUERY: proxy_id u32, exec_time u32, schema_len u8,
             // error_code u16, status_len u16, status, schema, \0, query
             val proxyId = body.getInt & 0xFFFFFFFFL
@@ -181,9 +185,9 @@ object BinlogBinaryParser {
             body.get(queryBytes)
             evSchema = new String(schemaBytes, "UTF-8")
             query = new String(queryBytes, "UTF-8")
-            extra("slave_proxy_id") = proxyId.toString
-            extra("execution_time") = execTime.toString
-            extra("error_code") = errorCode.toString
+            put("slave_proxy_id", proxyId.toString)
+            put("execution_time", execTime.toString)
+            put("error_code", errorCode.toString)
           case 16 => // XID: u64 transaction id; ends the transaction scope
             xid = Some(body.getLong)
           case 19 => // TABLE_MAP: table_id u48, flags u16, schema_len u8,
@@ -199,7 +203,7 @@ object BinlogBinaryParser {
             curTable = new String(tb, "UTF-8")
             evSchema = curSchema
             evTable = curTable
-            extra("tableid") = tableId.toString
+            put("tableid", tableId.toString)
             val colCount = readPackedLong(body).toInt
             val types = new Array[Int](colCount)
             var c = 0
@@ -225,7 +229,7 @@ object BinlogBinaryParser {
             }
             body.position(metaEnd)
             tableDefs(tableId) = (curSchema, curTable, types, meta)
-            extra("column_count") = colCount.toString
+            put("column_count", colCount.toString)
           case 33 | 34 => // GTID / ANONYMOUS_GTID: flags u8, sid 16B, gno u64
             body.get() // commit flag
             val sid = new Array[Byte](16); body.get(sid)
@@ -235,15 +239,15 @@ object BinlogBinaryParser {
           case 4 => // ROTATE: position u64, next file name
             val rpos = body.getLong
             val nb = new Array[Byte](body.remaining() - ckLen); body.get(nb)
-            extra("next_file") = new String(nb, "UTF-8")
-            extra("rotate_position") = rpos.toString
+            put("next_file", new String(nb, "UTF-8"))
+            put("rotate_position", rpos.toString)
           case 23 | 24 | 25 | 30 | 31 | 32 => // ROWS v1/v2: table_id u48, flags u16
             val tableId = readLittleEndian(body, 6)
             body.getShort
             evSchema = curSchema
             evTable = curTable
             gtidNext = curGtid
-            extra("tableid") = tableId.toString
+            put("tableid", tableId.toString)
             // v2 adds a self-inclusive u16 extra-data length
             if (typeCode >= 30) {
               val extraLen = body.getShort & 0xFFFF
@@ -253,7 +257,7 @@ object BinlogBinaryParser {
               tableDefs.get(tableId).foreach { case (_, _, types, meta) =>
                 val isUpdate = typeCode == 24 || typeCode == 31
                 rowImages = decodeRowImages(body, types, meta, isUpdate, ckLen)
-                extra("n_row_images") = rowImages.size.toString
+                put("n_row_images", rowImages.size.toString)
               }
             }
           case 29 => // ROWS_QUERY: 1-byte stored length (capped; readers
@@ -264,23 +268,24 @@ object BinlogBinaryParser {
           case 5 => // INTVAR: type u8 (1 = LAST_INSERT_ID, 2 = INSERT_ID),
             // value u64 — session-variable context for the next statement
             val vtype = body.get & 0xFF
-            extra("intvar_type") = vtype.toString
-            extra("intvar_value") = body.getLong.toString
+            val value = body.getLong
+            put("intvar_type", vtype.toString)
+            put("intvar_value", value.toString)
           case 40 => // TRANSACTION_PAYLOAD: the framer unpacked it
             if (f.payloadError != null)
-              extra("body_decode_error") = f.payloadError.getClass.getSimpleName
+              put("body_decode_error", f.payloadError.getClass.getSimpleName)
             else {
-              extra("compression_type") = f.payload.compression.toString
-              extra("payload_bytes") = f.payload.payloadBytes.toString
+              put("compression_type", f.payload.compression.toString)
+              put("payload_bytes", f.payload.payloadBytes.toString)
               if (f.payload.uncompressedSize >= 0)
-                extra("uncompressed_size") = f.payload.uncompressedSize.toString
+                put("uncompressed_size", f.payload.uncompressedSize.toString)
             }
           case _ => () // header-only decode for everything else
         } catch {
           case e: RuntimeException =>
-            extra("body_decode_error") = e.getClass.getSimpleName
+            put("body_decode_error", e.getClass.getSimpleName)
         }
-        if (f.inPayload) extra("in_payload") = "1"
+        if (f.inPayload) put("in_payload", "1")
 
         val rfc = Instant.ofEpochSecond(f.timestamp).atOffset(ZoneOffset.UTC)
           .format(DateTimeFormatter.ISO_OFFSET_DATE_TIME)
@@ -298,7 +303,7 @@ object BinlogBinaryParser {
           binlog_file = basename,
           file_seq = fileSeq,
           event_index = f.index,
-          extra = extra.toMap,
+          extra = if (extra == null) Map.empty else extra.toMap,
           row_images = rowImages)
         if (typeCode == 16) curGtid = "" // XID closes the transaction
         ev

@@ -74,9 +74,10 @@ object Dedup {
 
   /** Last-wins key dedup — the reference comparator's build-side semantics
     * (map insert, compare_timestamps.go:147) generalized to any key: keep,
-    * per key, the row with the greatest `seq`. One hash aggregate
-    * (max_by), map-side combinable; the output partitioning is the key,
-    * reusable by a following join on the same key. */
+    * per key, the row with the greatest `seq`. One `max_by` aggregate,
+    * map-side combinable (a sort aggregate: its buffer holds a struct); the
+    * output partitioning is the key, reusable by a following join on the
+    * same key. */
   def lastWins(df: DataFrame, keyCols: Seq[String], seq: Column): DataFrame = {
     val withSeq = df.withColumn("_seq", seq)
     val valueCols = withSeq.columns.filterNot(keyCols.contains)

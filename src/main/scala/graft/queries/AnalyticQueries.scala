@@ -20,9 +20,9 @@ object AnalyticQueries {
 
   private val tsUs: Column = expr("ts div 1000")
 
-  // q11 — last-wins dedup as a hash aggregate (max_by), the scale-friendly
-  // form of the CDC build-side dedup (SURVEY §2.5): one shuffle, map-side
-  // partial agg, no window sort.
+  // q11 — last-wins dedup as a max_by aggregate, the scale-friendly form of
+  // the CDC build-side dedup (SURVEY §2.5): one shuffle, map-side partial
+  // agg, no window sort. Its struct buffer makes it a sort aggregate.
   def q11DedupLastWins(spark: SparkSession, dir: String): DataFrame =
     Tables.events(spark, dir)
       .groupBy("user_id", "event_type")

@@ -421,10 +421,12 @@ private class BinlogReaderFactory(required: StructType,
 /** Streams one file-range's events through the incremental decoder — heap
   * holds one event body at a time (not the file), so arbitrarily large
   * binlogs (≥2 GiB included) decode correctly. Projects only the required
-  * columns. */
+  * columns, each through a converter resolved once per reader. */
 private class BinlogPartitionReader(part: BinlogInputPartition, required: StructType,
     sconf: org.apache.spark.graftshim.SerializableHadoopConf)
     extends PartitionReader[InternalRow] {
+
+  private val converters = required.fieldNames.map(BinlogPartitionReader.converter)
 
   private var stream: java.io.InputStream = _
 
@@ -437,9 +439,11 @@ private class BinlogPartitionReader(part: BinlogInputPartition, required: Struct
     stream = in
     // column pruning reaches the DECODER: when row_images is not
     // projected, the reader skips image value decoding (the dominant
-    // decode cost) — header-only CDC scans don't pay for payloads
+    // decode cost) — header-only CDC scans don't pay for payloads — and
+    // an unprojected `extra` is never collected
     BinlogBinaryParser.decodeStream(in, p.getName,
       withRowImages = required.fieldNames.contains("row_images"),
+      withExtra = required.fieldNames.contains("extra"),
       startOffset = part.start, endOffset = part.end,
       startIndex = part.startIndex, initialChecksumLen = part.checksumLen)
   }
@@ -450,42 +454,47 @@ private class BinlogPartitionReader(part: BinlogInputPartition, required: Struct
     if (events.hasNext) { current = events.next(); true } else false
 
   override def get(): InternalRow = {
-    val values = required.fields.map { f =>
-      f.name match {
-        case "event_type" => UTF8String.fromString(current.event_type)
-        case "timestamp" => UTF8String.fromString(current.timestamp)
-        case "immediate_commmit_timestamp" =>
-          UTF8String.fromString(current.immediate_commmit_timestamp)
-        case "orignal_commmit_timestamp" =>
-          UTF8String.fromString(current.orignal_commmit_timestamp)
-        case "log_position" => current.log_position.map(Long.box).orNull
-        case "table" => UTF8String.fromString(current.table)
-        case "schema" => UTF8String.fromString(current.schema)
-        case "query" => UTF8String.fromString(current.query)
-        case "gtid_next" => UTF8String.fromString(current.gtid_next)
-        case "xid" => current.xid.map(Long.box).orNull
-        case "binlog_file" => UTF8String.fromString(current.binlog_file)
-        case "file_seq" => current.file_seq.map(Long.box).orNull
-        case "event_index" => Long.box(current.event_index)
-        case "extra" =>
-          ArrayBasedMapData(
-            current.extra.keys.map(k => UTF8String.fromString(k)).toArray,
-            current.extra.values.map(v => UTF8String.fromString(v)).toArray)
-        case "row_images" =>
-          new org.apache.spark.sql.catalyst.util.GenericArrayData(
-            current.row_images.map { img =>
-              new org.apache.spark.sql.catalyst.util.GenericArrayData(
-                img.map(v =>
-                  if (v == null) null else UTF8String.fromString(v)).toArray[Any])
-            }.toArray[Any])
-        case other => throw new IllegalArgumentException(s"unknown column $other")
-      }
-    }
-    new GenericInternalRow(values.asInstanceOf[Array[Any]])
+    val values = new Array[Any](converters.length)
+    var i = 0
+    while (i < values.length) { values(i) = converters(i)(current); i += 1 }
+    new GenericInternalRow(values)
   }
 
   override def close(): Unit =
     if (stream != null) {
       try stream.close() catch { case _: java.io.IOException => () }
     }
+}
+
+private object BinlogPartitionReader {
+  /** The Catalyst value of one column of a decoded event. */
+  def converter(name: String): ParsedBinlogEvent => Any = name match {
+    case "event_type" => e => UTF8String.fromString(e.event_type)
+    case "timestamp" => e => UTF8String.fromString(e.timestamp)
+    case "immediate_commmit_timestamp" =>
+      e => UTF8String.fromString(e.immediate_commmit_timestamp)
+    case "orignal_commmit_timestamp" =>
+      e => UTF8String.fromString(e.orignal_commmit_timestamp)
+    case "log_position" => e => e.log_position.map(Long.box).orNull
+    case "table" => e => UTF8String.fromString(e.table)
+    case "schema" => e => UTF8String.fromString(e.schema)
+    case "query" => e => UTF8String.fromString(e.query)
+    case "gtid_next" => e => UTF8String.fromString(e.gtid_next)
+    case "xid" => e => e.xid.map(Long.box).orNull
+    case "binlog_file" => e => UTF8String.fromString(e.binlog_file)
+    case "file_seq" => e => e.file_seq.map(Long.box).orNull
+    case "event_index" => e => Long.box(e.event_index)
+    case "extra" => e =>
+      ArrayBasedMapData(
+        e.extra.keys.map(k => UTF8String.fromString(k)).toArray,
+        e.extra.values.map(v => UTF8String.fromString(v)).toArray)
+    case "row_images" => e =>
+      new org.apache.spark.sql.catalyst.util.GenericArrayData(
+        e.row_images.map { img =>
+          new org.apache.spark.sql.catalyst.util.GenericArrayData(
+            img.map(v =>
+              if (v == null) null else UTF8String.fromString(v)).toArray[Any])
+        }.toArray[Any])
+    case other => throw new IllegalArgumentException(s"unknown column $other")
+  }
 }

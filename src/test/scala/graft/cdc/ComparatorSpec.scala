@@ -1,5 +1,6 @@
 package graft.cdc
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
@@ -131,11 +132,16 @@ class ComparatorSpec extends AnyFunSuite with SparkTestSession {
     val dir = Files.createTempDirectory("cdc_ct").toFile
     val bf = new java.io.File(dir, "binlog_metadata.json")
     val af = new java.io.File(dir, "avro_rows.json")
-    def write(pos: Long) =
-      s"""{"event_type":"WriteRowsEventV2","immediate_commmit_timestamp":"2024-05-01T12:00:00Z","log_position":$pos,"binlog_file":"mysql-bin.000001"}"""
-    Files.write(bf.toPath, Seq(write(100), write(200)).mkString("\n").getBytes)
-    Files.write(af.toPath, Seq(avroLine(100, T0, changeType = "insert"),
-      avroLine(200, T0, changeType = "update")).mkString("\n").getBytes)
+    def event(pos: Long, eventType: String = "WriteRowsEventV2") =
+      s"""{"event_type":"$eventType","immediate_commmit_timestamp":"2024-05-01T12:00:00Z","log_position":$pos,"binlog_file":"mysql-bin.000001"}"""
+    // beyond ASCII the fold is `upper`'s: dotless ı and long ſ fold to I
+    // and S, so both spell INSERT; Ü stays Ü, so ÜPDATE is not UPDATE
+    val changeTypes = Seq(100L -> "insert", 200L -> "update", 300L -> "\u0131nsert",
+      400L -> "in\u017fert", 500L -> "\u00dcPDATE")
+    Files.write(bf.toPath, (changeTypes.map(ct => event(ct._1)).dropRight(1) :+
+      event(500, "UpdateRowsEventV2")).mkString("\n").getBytes(UTF_8))
+    Files.write(af.toPath, changeTypes.map { case (pos, ct) =>
+      avroLine(pos, T0, changeType = ct) }.mkString("\n").getBytes(UTF_8))
     val binlog = Comparator.prepareBinlog(
       Sources.quarantine(Sources.binlogJson(spark, bf.getPath)).clean,
       monotonically_increasing_id())
@@ -143,7 +149,14 @@ class ComparatorSpec extends AnyFunSuite with SparkTestSession {
       Sources.quarantine(Sources.avroJson(spark, af.getPath)).clean))
     val status = Comparator.compare(binlog, avro).select("position", "status")
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(status == Map(100L -> Status.Match, 200L -> Status.MismatchChangeType))
+    assert(status == Map(100L -> Status.Match, 200L -> Status.MismatchChangeType,
+      300L -> Status.Match, 400L -> Status.Match, 500L -> Status.MismatchChangeType))
+    // the fold is `upper` on every one of these, and on ASCII punctuation
+    import spark.implicits._
+    val inputs = changeTypes.map(_._2) ++ Seq("", "Delete", "a-z_A-Z 0-9", "stra\u00dfe")
+    val folded = inputs.toDF("c")
+      .select(Comparator.upperCase(col("c")), upper(col("c"))).collect()
+    folded.foreach(r => assert(r.getString(0) == r.getString(1), s"fold of $r"))
   }
   test("V2 delete dead branch never flags change type") {
     assert(statusOf(8000) == Seq(Status.Match))

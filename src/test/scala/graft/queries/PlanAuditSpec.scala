@@ -283,6 +283,66 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestSession {
     assert(!p.contains("REPARTITION_BY_COL"), s"a range repartition replaced the sort:\n$shape")
   }
 
+  /** The CLI's compare plan over a binary binlog (one transaction with a
+    * row image) and one Avro-JSON record on its rows event. */
+  private lazy val cliBinaryPlan = {
+    import graft.ingest.BinlogBinaryWriter._
+    val root = java.nio.file.Files.createTempDirectory("cliprune").toFile
+    val binDir = new java.io.File(root, "bins"); binDir.mkdirs()
+    val cols = Seq(ColDef.longlong, ColDef.varchar(16))
+    val t0 = 1714564800L
+    val f = new FileBuilder(checksums = true)
+    f.fde(t0)
+    f.event(t0, 2, queryBody("shop", "BEGIN"))
+    f.event(t0, 19, tableMapBody(7, "shop", "orders", cols))
+    val pos = f.event(t0, 30, rowsBody(7, cols.size,
+      Seq(Seq(Some(encLongLong(1L)), Some(encVarchar("v", 16))))))
+    f.event(t0, 16, xidBody(1L))
+    java.nio.file.Files.write(new java.io.File(binDir, "mysql-bin.000001").toPath, f.bytes)
+    val avroJson = new java.io.File(root, "avro_rows.json")
+    java.nio.file.Files.write(avroJson.toPath,
+      (s"""{"source_timestamp":${t0 * 1000},"source_metadata":{"database":"shop",""" +
+        """"table":"orders","change_type":{"string":"insert"},"binlog_file":""" +
+        s"""{"string":"mysql-bin.000001"},"binlog_position":{"long":$pos},""" +
+        """"primary_keys":["id"]},"payload":{}}""").getBytes)
+    val prepared = graft.cli.Main.prepare(spark, graft.cli.Main.Args(
+      binlogBinary = Some(binDir.getPath), avroJson = Some(avroJson.getPath)))
+    try {
+      val status = prepared.compared.filter(org.apache.spark.sql.functions.col("position") === pos)
+        .select("status").collect().map(_.getString(0)).toSeq
+      assert(status == Seq(graft.cdc.Schemas.Status.Match))
+      prepared.compared.queryExecution.sparkPlan
+    } finally prepared.release()
+  }
+
+  test("cli binary compare: the binlog scan reads no row images, extras or query text") {
+    // the dedup carries only the columns the compare reads, so pruning
+    // reaches the decoder, which then skips row-image and extra decoding
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val read = cliBinaryPlan.collect {
+      case s: BatchScanExec if s.output.exists(_.name == "log_position") =>
+        s.scan.readSchema().fieldNames.toSeq
+    }
+    assert(read.size == 1, s"expected one binlog scan:\n$cliBinaryPlan")
+    assert(Seq("row_images", "extra", "query").forall(c => !read.head.contains(c)),
+      s"binlog ReadSchema: ${read.head.mkString(", ")}")
+  }
+
+  test("cli binary compare: every `upper` is the non-ASCII branch of the change-type fold") {
+    // ASCII change types fold with `translate`; `upper`, whose first
+    // evaluation builds ICU's case tables, runs only on other input
+    import org.apache.spark.sql.catalyst.expressions.{CaseWhen, EqualTo, Length,
+      OctetLength, Upper}
+    val exprs = cliBinaryPlan.collect { case n => n.expressions }.flatten
+    val uppers = exprs.flatMap(_.collect { case u: Upper => u })
+    val folded = exprs.flatMap(_.collect {
+      case CaseWhen(Seq((EqualTo(Length(a), OctetLength(b)), _)), Some(u: Upper))
+          if a.semanticEquals(b) && u.child.semanticEquals(a) => u
+    })
+    assert(folded.nonEmpty && uppers.size == folded.size,
+      s"${uppers.size} upper, ${folded.size} in the fold:\n$cliBinaryPlan")
+  }
+
   test("cdc25: no unbounded-FOLLOWING window frame (O(n²) recompute-per-row)") {
     // the as-of commit association must stay the reversed-sort RUNNING
     // min: Spark evaluates [current row, unbounded following] frames by

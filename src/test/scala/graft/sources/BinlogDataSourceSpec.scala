@@ -160,6 +160,33 @@ class BinlogDataSourceSpec extends AnyFunSuite with SparkTestSession {
     assert(imgs == Seq(Seq("42")))
   }
 
+  test("pruning extra and row_images leaves every other column unchanged") {
+    import graft.ingest.BinlogBinaryWriter._
+    val dir = Files.createTempDirectory("dsv2noextra").toFile
+    val cols = Seq(ColDef.longlong, ColDef.varchar(16))
+    val sid = (1 to 16).map(_.toByte).toArray
+    val f = new FileBuilder(checksums = true)
+    val t0 = 1714564800L
+    f.fde(t0)
+    (0 until 3).foreach { tx =>
+      f.event(t0 + tx, 33, gtidBody(sid, tx + 1L))
+      f.event(t0 + tx, 2, queryBody("shop", "BEGIN"))
+      f.event(t0 + tx, 19, tableMapBody(7, "shop", "orders", cols))
+      f.event(t0 + tx, 30, rowsBody(7, cols.size,
+        Seq(Seq(Some(encLongLong(tx.toLong)), Some(encVarchar(s"v$tx", 16))))))
+      f.event(t0 + tx, 16, xidBody(100L + tx))
+    }
+    f.event(t0 + 3, 4, rotateBody("mysql-bin.000002"))
+    Files.write(new java.io.File(dir, "mysql-bin.000001").toPath, f.bytes)
+
+    val df = spark.read.format("binlog").load(dir.getPath)
+    val kept = df.columns.filterNot(Set("extra", "row_images")).toSeq
+    val pruned = df.select(kept.map(col): _*).collect().map(_.toSeq).toSeq
+    val full = df.collect()
+    assert(full.forall(r => r.getMap[String, String](r.fieldIndex("extra")).nonEmpty))
+    assert(pruned == full.map(r => kept.map(c => r.get(r.fieldIndex(c)))).toSeq)
+  }
+
   test("null / non-numeric values in pushed filters keep the file (no throw)") {
     import org.apache.spark.sql.sources.{EqualTo, GreaterThan, In}
     // pruning is an optimization; undecidable values must be conservative
