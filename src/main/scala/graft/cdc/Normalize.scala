@@ -10,15 +10,6 @@ import org.apache.spark.sql.types._
   */
 object Normalize {
 
-  /** E4 — event-type classification from a header or `Event type:` value
-    * (reference json_parser.go:55-66,124-131): canonical V2 DML names win,
-    * otherwise strip one trailing "Event". */
-  def classifyEventType(h: Column): Column =
-    when(h.contains("WriteRowsEventV2"), "WriteRowsEventV2")
-      .when(h.contains("UpdateRowsEventV2"), "UpdateRowsEventV2")
-      .when(h.contains("DeleteRowsEventV2"), "DeleteRowsEventV2")
-      .otherwise(regexp_replace(h, "Event$", ""))
-
   // ------------------------------------------------------------ timestamps
 
   /** RFC3339 shape guard: Go's `time.Parse(time.RFC3339, _)` requires the `T`

@@ -81,32 +81,6 @@ object Schemas {
     StructField("_corrupt_record", StringType)
   ))
 
-  /** Resolved (union-free) change-record schema — what a native `.avro` read
-    * produces once `["null", T]` unions resolve to nullable `T` (SURVEY §7.4).
-    */
-  val avroResolvedSchema: StructType = StructType(Seq(
-    StructField("source_timestamp", LongType),
-    StructField("source_metadata", StructType(Seq(
-      StructField("database", StringType),
-      StructField("table", StringType),
-      StructField("change_type", StringType),
-      StructField("gtid", StringType),
-      StructField("datastream_master_server_uuid", StringType),
-      StructField("datastream_master_server_id", LongType),
-      StructField("binlog_file", StringType),
-      StructField("binlog_position", LongType),
-      StructField("is_deleted", BooleanType),
-      StructField("primary_keys", ArrayType(StringType))
-    ))),
-    StructField("payload", StructType(Seq(
-      StructField("order_id", IntegerType),
-      StructField("customer_name", StringType),
-      StructField("product_name", StringType),
-      StructField("quantity", IntegerType),
-      StructField("order_timestamp", LongType)
-    )))
-  ))
-
   /** Typed view of one `Comparator.compare` output row (SURVEY §1.4's
     * `Dataset[ComparisonResult]`): the full-outer pair key, presence flags,
     * the independent mismatch flags, and the prioritized status. */

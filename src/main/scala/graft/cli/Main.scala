@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.cdc.{Comparator, Report}
 import graft.ingest.{AvroSource, BinlogBinaryParser, BinlogTextParser, Sources}
+import graft.sources.{AvroScanHelper, BinlogScan}
 
 /** End-to-end CDC comparison driver — the engine's equivalent of the
   * reference's `comparator.sh` + `avro_to_json.sh` + `compare_timestamps`
@@ -592,7 +593,9 @@ object Main {
     * abort (`comparator.sh:103-107` exits 1 when no `mysql-bin.*` file is
     * found; `avro_to_json.sh:75-85` reports none-found for `*.avro`):
     * a side with zero input files fails here with IllegalArgumentException
-    * before any executor work is scheduled. */
+    * before any executor work is scheduled. The binary binlog and Avro
+    * sides count the listing their scans read — a directory, a file or a
+    * glob, whatever the files are named. */
   def jobMetrics(spark: SparkSession, args: Args): Map[String, Long] = {
     def count(path: String, pred: String => Boolean): Long = {
       val p = new org.apache.hadoop.fs.Path(path)
@@ -601,14 +604,18 @@ object Main {
       else if (fs.getFileStatus(p).isFile) 1L
       else fs.listStatus(p).count(st => st.isFile && pred(st.getPath.getName)).toLong
     }
+    // the scans' listings throw on a missing path: that reads nothing
+    def scanned(files: => Seq[_]): Long =
+      try files.size.toLong catch { case _: java.io.FileNotFoundException => 0L }
     val binlogFiles = (args.binlogText, args.binlogBinary, args.binlogJson) match {
       case (Some(dir), _, _) => count(dir, _.startsWith("mysql-bin."))
-      case (_, Some(dir), _) => count(dir, _.startsWith("mysql-bin."))
+      case (_, Some(path), _) => scanned(BinlogScan.listFiles(path).toSeq)
       case (_, _, Some(path)) => count(path, _.endsWith(".json"))
       case _ => 0L
     }
     val avroFiles = (args.avro, args.avroJson) match {
-      case (Some(dir), _) => count(dir, _.endsWith(".avro"))
+      case (Some(path), _) =>
+        scanned(AvroScanHelper.listAvroFiles(spark, path, allowEmpty = true))
       case (_, Some(path)) => count(path, _.endsWith(".json"))
       case _ => 0L
     }

@@ -6,7 +6,6 @@ import org.apache.avro.Schema
 import org.apache.avro.file.DataFileReader
 import org.apache.avro.generic.GenericRecord
 import org.apache.avro.mapred.FsInput
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -41,22 +40,11 @@ object AvroSource {
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.format("avrofile").load(path)
 
-  /** Resolve the writer schema from the first matching file's header. */
+  /** Resolve the writer schema from the header of the first file the
+    * `avrofile` scan would read. */
   def readSchema(spark: SparkSession, path: String): Schema = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val first =
-      if (fs.exists(p) && fs.getFileStatus(p).isFile) p
-      else {
-        // globStatus returns null (not empty) for a non-glob missing path
-        val files = Option(fs.globStatus(new Path(
-            if (path.endsWith(".avro")) path else path.stripSuffix("/") + "/*.avro")))
-          .getOrElse(Array.empty)
-          .filter(_.isFile).map(_.getPath)
-        require(files.nonEmpty, s"no .avro files under $path")
-        files.minBy(_.getName)
-      }
+    val first = graft.sources.AvroScanHelper.listAvroFiles(spark, path).head.getPath
     val reader = new DataFileReader[GenericRecord](
       new FsInput(first, conf),
       new org.apache.avro.generic.GenericDatumReader[GenericRecord]())

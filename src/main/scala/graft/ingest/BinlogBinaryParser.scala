@@ -513,7 +513,7 @@ object BinlogBinaryParser {
       case 255 =>                                               // GEOMETRY
         // m = length-prefix width; payload is WKB (SRID + geometry),
         // surfaced as lowercase hex — the comparison treats it opaquely
-        readSized(readLittleEndian(body, m)).map(b => f"${b & 0xFF}%02x").mkString
+        hex(readSized(readLittleEndian(body, m)))
       case 16 =>                                                // BIT
         // m = [bits % 8, whole bytes]; value is ceil(bits/8) bytes
         // BIG-endian, surfaced as an unsigned integer
@@ -673,10 +673,25 @@ object BinlogBinaryParser {
     }
   }
 
-  private def formatUuid(sid: Array[Byte]): String = {
-    val hex = sid.map(b => f"${b & 0xFF}%02x").mkString
-    s"${hex.substring(0, 8)}-${hex.substring(8, 12)}-${hex.substring(12, 16)}-" +
-      s"${hex.substring(16, 20)}-${hex.substring(20)}"
+  private val HexDigits = "0123456789abcdef".toCharArray
+
+  /** Lowercase hex of `bytes`, two digits per byte. */
+  private[graft] def hex(bytes: Array[Byte]): String = {
+    val out = new Array[Char](bytes.length * 2)
+    var i = 0
+    while (i < bytes.length) {
+      out(2 * i) = HexDigits((bytes(i) >> 4) & 0xF)
+      out(2 * i + 1) = HexDigits(bytes(i) & 0xF)
+      i += 1
+    }
+    new String(out)
+  }
+
+  /** A GTID's 16 server-id bytes as the server uuid, 8-4-4-4-12. */
+  private[graft] def formatUuid(sid: Array[Byte]): String = {
+    val h = hex(sid)
+    s"${h.substring(0, 8)}-${h.substring(8, 12)}-${h.substring(12, 16)}-" +
+      s"${h.substring(16, 20)}-${h.substring(20)}"
   }
 
   /** Input-order sequence column — same contract as the text parser's. */

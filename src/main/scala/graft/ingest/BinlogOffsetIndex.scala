@@ -51,9 +51,8 @@ object BinlogOffsetIndex {
     * authority), so `/data/x` and `file:/data/x` agree. */
   def shardName(conf: org.apache.hadoop.conf.Configuration, file: String): String = {
     val q = qualify(conf, file)
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(q.getBytes("UTF-8"))
-      .take(8).map(b => f"$b%02x").mkString
+    val hex = BinlogBinaryParser.hex(java.security.MessageDigest
+      .getInstance("MD5").digest(q.getBytes("UTF-8")).take(8))
     s"${q.split('/').last}.$hex.idx"
   }
 

@@ -72,22 +72,6 @@ object Dedup {
     chunks.withColumn("keep", row_number().over(w) === 1)
   }
 
-  /** Last-wins key dedup — the reference comparator's build-side semantics
-    * (map insert, compare_timestamps.go:147) generalized to any key: keep,
-    * per key, the row with the greatest `seq`. One `max_by` aggregate,
-    * map-side combinable (a sort aggregate: its buffer holds a struct); the
-    * output partitioning is the key, reusable by a following join on the
-    * same key. */
-  def lastWins(df: DataFrame, keyCols: Seq[String], seq: Column): DataFrame = {
-    val withSeq = df.withColumn("_seq", seq)
-    val valueCols = withSeq.columns.filterNot(keyCols.contains)
-    withSeq
-      .groupBy(keyCols.map(col): _*)
-      .agg(max_by(struct(valueCols.toIndexedSeq.map(col): _*), col("_seq")).as("_v"))
-      .select(keyCols.toIndexedSeq.map(col) ++
-        valueCols.filterNot(_ == "_seq").map(c => col("_v." + c).as(c)): _*)
-  }
-
   /** Add `shingles` (distinct 60-bit-hashed n-gram shingles of `toksCol`)
     * and `n_sh`; rows with fewer than `n` tokens are dropped (no shingle
     * exists). */

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -16,7 +16,20 @@ import graft.Tables
   *     q66's incremental-view splits, shared by every consumer of q66's
   *     oracle (q66 itself, cdc45/48 in CdcQueries, cdc51/53/58/59 in
   *     LifecycleQueries) so none can drift from the decomposition the
-  *     oracle gates.
+  *     oracle gates;
+  *   - the tail-feed kit the binlog-tail gates (cdc56, cdc58, cdc63–cdc74,
+  *     cdc79) build their feeds and reports from:
+  *     - [[tailBase]] — the `(k, v)` rows; [[writeBulk]] — the closed,
+  *       sink-written history; [[boundedClasses]] — the driver-side
+  *       fixture classes `k % 131`;
+  *     - [[TailFeedWriter]] with [[Txn]]/[[txns]] — crafted files:
+  *       [[TailFeedWriter.file]], the torn active file
+  *       ([[TailFeedWriter.tornFile]], [[TailFeedWriter.activeFile]] as
+  *       [[Installments]]) and the failover pair
+  *       ([[TailFeedWriter.failoverPair]]) under a [[serverSid]];
+  *       [[writeFeedFile]] delivers a crafted file;
+  *     - [[writtenKeys]]/[[imageKeys]] — the applied `k` of a decoded
+  *       batch; [[classLabel]], [[census]], [[stateCensus]] — the report.
   */
 object CdcFixtures {
 
@@ -57,35 +70,17 @@ object CdcFixtures {
     .select(element_at(col("img"), 1).cast("long").as("o_orderkey"),
       element_at(col("img"), 2).as("o_orderpriority"))
 
-  /** Bounded fixture-class collect every byte-crafted tail gate shares:
-    * the rows of `base` (shape `(k BIGINT, v STRING)`) with
-    * `k % modulus == m`, ordered, capped — mid-event tears are exactly
-    * what the distributed sink refuses to produce, so these classes are
-    * built driver-side and must stay bounded test vectors (cdc56's
-    * discipline). */
-  def boundedClass(base: DataFrame, gate: String, m: Long,
-      modulus: Long = 131L, cap: Int = 200000)
-      : Array[org.apache.spark.sql.Row] = {
-    val rs = base.filter(col("k") % modulus === m).orderBy("k")
-      .limit(cap + 1).collect()
-    require(rs.length <= cap,
-      s"$gate fixture class $m must stay a bounded test vector, got " +
-        s"${rs.length} rows (cap $cap)")
-    rs
-  }
-
-  /** All of a gate's fixture classes in ONE collect job (r17, guide §1.2
-    * — the tail gates ran 3–8 sequential [[boundedClass]] jobs whose
-    * cost was almost entirely driver/scheduling latency): one ordered
-    * scan of `k % modulus ∈ ms`, split per class driver-side. Row
-    * content, per-class `k` order, and the per-class cap check are
-    * identical to per-class [[boundedClass]] calls — the global
-    * `orderBy(k)` makes each class's slice k-ascending, and the combined
-    * limit keeps the collect bounded (if it truncates, some class must
-    * have blown its cap, and the per-class require reports it). */
+  /** A gate's fixture classes in `ms` order, from ONE collect: the rows
+    * of `base` (shape `(k BIGINT, v)`) with `k % modulus == m`,
+    * k-ascending, each capped — mid-event tears are exactly what the
+    * distributed sink refuses to produce, so these classes are built
+    * driver-side and must stay bounded test vectors. One ordered scan of
+    * `k % modulus ∈ ms` is split per class driver-side; the combined
+    * limit keeps the collect bounded (if it truncates, some class blew
+    * its cap, and the per-class require reports it). */
   def boundedClasses(base: DataFrame, gate: String, ms: Seq[Long],
       modulus: Long = 131L, cap: Int = 200000)
-      : Map[Long, Array[org.apache.spark.sql.Row]] = {
+      : Seq[Array[Row]] = {
     val rs = base.filter((col("k") % modulus).isin(ms.map(Long.box): _*))
       .orderBy("k")
       .limit(ms.size * cap + 1).collect()
@@ -93,59 +88,198 @@ object CdcFixtures {
     // split classifies exactly the rows the filter admitted
     val byClass = rs.groupBy(_.getLong(0) % modulus)
     ms.map { m =>
-      val cls = byClass.getOrElse(m, Array.empty[org.apache.spark.sql.Row])
+      val cls = byClass.getOrElse(m, Array.empty[Row])
       require(cls.length <= cap,
         s"$gate fixture class $m must stay a bounded test vector, got " +
           s"${cls.length} rows (cap $cap)")
-      m -> cls
-    }.toMap
+      cls
+    }
   }
 
-  /** Byte-level feed writer for the `(k BIGINT, v STRING)` wire shape
-    * every tail gate crafts (cdc58, cdc64–cdc70): VARCHAR bound derived
-    * from ALL classes up front (so every file in the gate shares one
-    * column definition), transactions as GTID/BEGIN/(TABLE_MAP+ROWS)…/
-    * XID with the row grouping and the commit record both controllable —
-    * the torn shapes are made by omitting the XID (`commit = false`) or
-    * slicing the returned offsets. One writer per gate replaces the
-    * per-gate copies of this block that round 14's own notes caught
-    * drifting (cdc69's bulk-filter overlap). */
-  final class TailFeedWriter(classes: Seq[Array[org.apache.spark.sql.Row]],
-      sid: Array[Byte] = (1 to 16).map(_.toByte).toArray) {
+  /** The `(k BIGINT, v STRING)` rows most binlog-tail gates write: the
+    * fixture base's DML events keyed by `event_id`, payload `u<user_id>`. */
+  def tailBase(spark: SparkSession, dir: String): DataFrame =
+    fixtureBase(spark, dir)
+      .filter(col("event_type").isin("purchase", "click", "view"))
+      .select(col("event_id").as("k"), concat(lit("u"), col("user_id")).as("v"))
+
+  /** The closed history a tail gate delivers up front: the rows of `rows`
+    * outside the first `live` fixture classes (`k % 131 >= live`),
+    * range-split by `k` into `files` sink-written files of 50-row
+    * transactions, numbered from `fileSeqStart`. */
+  def writeBulk(rows: DataFrame, live: Int, files: Int, feed: String,
+      fileSeqStart: Int = 1): Unit =
+    graft.ingest.BinlogSink.writeChanges(
+      rows.filter(col("k") % 131 >= live)
+        .select(lit(1).as("op"), col("k"), col("v"))
+        .repartitionByRange(files, col("k")),
+      feed, rowsPerTxn = 50, fileSeqStart = fileSeqStart)
+
+  /** Writes a crafted file `name` into `feed`. */
+  def writeFeedFile(feed: String, name: String, bytes: Array[Byte]): Unit =
+    java.nio.file.Files.write(new java.io.File(feed, name).toPath, bytes)
+
+  /** The first column of every row image of `rows` (decoded row events)
+    * as `k`. */
+  def imageKeys(rows: DataFrame): DataFrame =
+    rows.select(explode(col("row_images")).as("img"))
+      .select(element_at(col("img"), 1).cast("long").as("k"))
+
+  /** [[imageKeys]] of the WRITE_ROWS events of a decoded binlog batch. */
+  def writtenKeys(events: DataFrame): DataFrame =
+    imageKeys(events.filter(col("event_type") === "WriteRowsEventV2"))
+
+  /** The fixture-class label of `k`: `labels(m)` for `k % 131 == m`,
+    * "bulk" for every other row. */
+  def classLabel(labels: Seq[String]): Column =
+    labels.zipWithIndex.tail
+      .foldLeft(when(col("k") % 131 === 0, labels.head)) {
+        case (c, (label, m)) => c.when(col("k") % 131 === m, label)
+      }
+      .otherwise("bulk")
+
+  /** Rows and key sum per `src` of `labeled` (columns `k`, `src`), split
+    * first by shard `k % shards` when there is more than one. */
+  def census(labeled: DataFrame, shards: Int = 1): DataFrame = {
+    val by = (if (shards > 1) Seq("shard") else Nil) :+ "src"
+    (if (shards > 1) labeled.withColumn("shard", (col("k") % shards).cast("long"))
+      else labeled)
+      .groupBy(by.map(col): _*)
+      .agg(count(lit(1)).as("n_rows"), sum(col("k")).as("k_sum"))
+      .orderBy(by.map(col): _*)
+  }
+
+  /** [[census]] of a `(k)` key state, labelled by [[classLabel]]. */
+  def stateCensus(spark: SparkSession, state: String, labels: Seq[String],
+      shards: Int = 1): DataFrame =
+    census(graft.streaming.ViewMaintenance
+      .readState(spark, state, "k BIGINT, batch_id BIGINT")
+      .withColumn("src", classLabel(labels)), shards)
+
+  /** Server id bytes `1 + offset … 16 + offset`: offset 0 is the sink's
+    * own server, any other offset a second server or shard. */
+  def serverSid(offset: Int): Array[Byte] =
+    (1 to 16).map(b => (b + offset).toByte).toArray
+
+  /** One crafted transaction: GTID `gno`, `rows` of table `sf.<table>`
+    * grouped `perEvent` to a rows event, then XID `xid` — none when
+    * `commit = false`, which leaves it torn. */
+  final case class Txn(gno: Long, xid: Long, rows: Array[Row],
+      perEvent: Int = 100, commit: Boolean = true,
+      table: String = "delta", tableId: Long = 11L)
+
+  /** A crafted file that appears in two installments: the first `cut`
+    * bytes, then the rest appended — the server's growth between two
+    * drains. */
+  final case class Installments(file: java.io.File, bytes: Array[Byte], cut: Int) {
+    def writeFirst(): Unit =
+      java.nio.file.Files.write(file.toPath, bytes.slice(0, cut))
+    def append(): Unit =
+      java.nio.file.Files.write(file.toPath, bytes.slice(cut, bytes.length),
+        java.nio.file.StandardOpenOption.APPEND)
+  }
+
+  /** One committed [[Txn]] per class, at gnos `gno, gno + step, …` and
+    * xids `xid, xid + step, …`. */
+  def txns(classes: Seq[Array[Row]], gno: Long, xid: Long,
+      step: Long = 1L): Seq[Txn] =
+    classes.zipWithIndex.map { case (rs, i) =>
+      Txn(gno + i * step, xid + i * step, rs)
+    }
+
+  /** Byte-level feed writer for the `(k BIGINT, v)` rows of the tail
+    * gates, `v` a VARCHAR or a BIGINT: the VARCHAR bound is derived from
+    * ALL `classes` up front, so every file a gate writes shares one column
+    * definition; transactions are GTID/BEGIN/(TABLE_MAP+ROWS)…/XID. In
+    * [[file]], [[tornFile]] and their wrappers an empty class skips its
+    * transaction, and a writer whose classes are all empty writes no file
+    * at all. */
+  final class TailFeedWriter(classes: Seq[Array[Row]],
+      sid: Array[Byte] = serverSid(0)) {
     import graft.ingest.BinlogBinaryWriter._
 
-    val t0 = 1714564800L
+    private val t0 = 1714564800L
     private val bound = math.max(20,
-      classes.flatten.map(_.getString(1).getBytes("UTF-8").length)
+      classes.flatten.collect { case Row(_, v: String) => v.getBytes("UTF-8").length }
         .foldLeft(0)(math.max) + 16)
-    private val cols = Seq(ColDef.longlong, ColDef.varchar(bound))
-    private def img(r: org.apache.spark.sql.Row): Seq[Option[Array[Byte]]] =
-      Seq(Some(encLongLong(r.getLong(0))),
-        Some(encVarchar(r.getString(1), bound)))
+    private def cols(r: Row): Seq[ColDef] = Seq(ColDef.longlong,
+      if (r.get(1).isInstanceOf[String]) ColDef.varchar(bound) else ColDef.longlong)
+    private def img(r: Row): Seq[Option[Array[Byte]]] =
+      Seq(Some(encLongLong(r.getLong(0))), Some(r.get(1) match {
+        case v: String => encVarchar(v, bound)
+        case _ => encLongLong(r.getLong(1))
+      }))
+
+    /** The server uuid the decoder reports in `gtid_next` for `sid`. */
+    def uuid: String = graft.ingest.BinlogBinaryParser.formatUuid(sid)
+
+    def isEmpty: Boolean = classes.forall(_.isEmpty)
 
     /** A fresh file with its FDE written; returns (builder, offset after
-      * the FDE — the clean-cut fallback when no transaction precedes). */
+      * the FDE). */
     def newFile(): (FileBuilder, Long) = {
       val f = new FileBuilder(checksums = true)
       val off = f.fde(t0)
       (f, off)
     }
 
-    /** One transaction appending `rs`; returns (offset after the LAST
-      * rows event — the mid-XID tear point is this + 7 — and the offset
-      * after the XID, or -1 when `commit = false` leaves it torn). */
-    def txn(f: FileBuilder, gno: Long, xid: Long,
-        rs: Array[org.apache.spark.sql.Row], perEvent: Int = 100,
-        commit: Boolean = true): (Long, Long) = {
-      f.event(t0, 33, gtidBody(sid, gno))
+    /** Appends `t` — even with no rows; returns (offset after its LAST
+      * rows event, offset after its XID or -1 when torn). */
+    def txn(f: FileBuilder, t: Txn): (Long, Long) = {
+      f.event(t0, 33, gtidBody(sid, t.gno))
       f.event(t0, 2, queryBody("sf", "BEGIN"))
       var lastRows = 0L
-      rs.grouped(perEvent).foreach { b =>
-        f.event(t0, 19, tableMapBody(11, "sf", "delta", cols))
-        lastRows = f.event(t0, 30, rowsBody(11, cols.size, b.toSeq.map(img)))
+      t.rows.grouped(t.perEvent).foreach { b =>
+        val c = cols(b.head)
+        f.event(t0, 19, tableMapBody(t.tableId, "sf", t.table, c))
+        lastRows = f.event(t0, 30, rowsBody(t.tableId, c.size, b.toSeq.map(img)))
       }
-      (lastRows, if (commit) f.event(t0, 16, xidBody(xid)) else -1L)
+      (lastRows, if (t.commit) f.event(t0, 16, xidBody(t.xid)) else -1L)
     }
+
+    private def put(f: FileBuilder, t: Txn): Option[(Long, Long)] =
+      Option.when(t.rows.nonEmpty)(txn(f, t))
+
+    /** A fresh file holding `txns`. */
+    def file(txns: Txn*): Array[Byte] = {
+      val (f, _) = newFile()
+      txns.foreach(put(f, _))
+      f.bytes
+    }
+
+    /** The torn active file: `committed`, then `tearing`, then `later`.
+      * Its first installment ends 7 bytes into `tearing`'s XID header —
+      * mid-event, so only the append commits it — or, with no `tearing`
+      * rows, cleanly after the last committed transaction (after the FDE
+      * when there is none). Returns the builder, still open for events
+      * after `later`, and the first installment's length. */
+    def tornFile(committed: Seq[Txn], tearing: Option[Txn],
+        later: Seq[Txn]): (FileBuilder, Int) = {
+      val (f, fdeOff) = newFile()
+      val clean = committed.flatMap(put(f, _)).lastOption.fold(fdeOff)(_._2)
+      val cut = tearing.flatMap(put(f, _)).fold(clean)(_._1 + 7)
+      later.foreach(put(f, _))
+      (f, cut.toInt)
+    }
+
+    /** [[tornFile]] as the installments of `file`. */
+    def activeFile(file: java.io.File, committed: Seq[Txn],
+        tearing: Option[Txn], later: Seq[Txn]): Option[Installments] =
+      Option.when(!isEmpty) {
+        val (f, cut) = tornFile(committed, tearing, later)
+        Installments(file, f.bytes, cut)
+      }
+
+    /** The failover file pair for the writer's four classes P, Q, R, S
+      * at gnos `gno`… and xids `xid`…: the server's last file (P, Q) and
+      * the replica's first, which re-serves Q under the same gtid
+      * re-framed at 50 rows per event, then commits R and leaves S torn
+      * forever. */
+    def failoverPair(gno: Long, xid: Long): Option[(Array[Byte], Array[Byte])] =
+      Option.when(!isEmpty) {
+        val Seq(p, q, r, s) = txns(classes, gno, xid)
+        (file(p, q), file(q.copy(perEvent = 50), r, s.copy(commit = false)))
+      }
 
     /** The server's rotation record at the end of a closed file. */
     def rotate(f: FileBuilder, next: String): Long =

@@ -2611,7 +2611,7 @@ object CdcQueries {
   // the view is never rescanned, which is the entire point of IVM.
 
   def cdc45StreamIvm(spark: SparkSession, dir: String): DataFrame = {
-    val (feed, state, ckpt) = streamDirs("graft_cdc45_", dir)
+    val (_, feed, state, ckpt) = streamDirs("graft_cdc45_", dir)
     val fx = ivmFixture(spark, dir)
     // ΔA → four real binlog files (keyed repartition: deterministic
     // membership, any partitioning sums to the same view)
@@ -2678,7 +2678,7 @@ object CdcQueries {
   // map + a ≤|groups|-row write; deletes cost the same as inserts (the
   // point of signed partials — no base-view lookup, no rescan).
   def cdc47StreamRetract(spark: SparkSession, dir: String): DataFrame = {
-    val (feed, state, ckpt) = streamDirs("graft_cdc47_", dir)
+    val (_, feed, state, ckpt) = streamDirs("graft_cdc47_", dir)
     val base = fixtureBase(spark, dir)
       .filter(col("event_type").isin("purchase", "click", "view"))
     // signed changelog: every DML row inserts; every %3 row is later
@@ -2744,7 +2744,7 @@ object CdcQueries {
   // together the two halves of streaming exactly-once.
   def cdc48IdempotentSink(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.ViewMaintenance
-    val (feed, state, ckpt) = streamDirs("graft_cdc48_", dir)
+    val (_, feed, state, ckpt) = streamDirs("graft_cdc48_", dir)
     val fx = ivmFixture(spark, dir)
     graft.ingest.BinlogSink.writeKeyedStrings(
       fx.aDelta.repartition(4, col("o_orderkey")), feed)
@@ -2779,7 +2779,7 @@ object CdcQueries {
   // retract (sketch views are insert-only monotone — documented
   // contract, cdc47 is the retraction story).
   def cdc49StreamSketch(spark: SparkSession, dir: String): DataFrame = {
-    val (feed, state, ckpt) = streamDirs("graft_cdc49_", dir)
+    val (_, feed, state, ckpt) = streamDirs("graft_cdc49_", dir)
     val base = fixtureBase(spark, dir)
       .filter(col("event_type").isin("purchase", "click", "view"))
     graft.ingest.BinlogSink.writeKeyedStrings(

@@ -3,10 +3,11 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.queries.CdcFixtures.{boundedClass, boundedClasses, fixtureBase, ivmFixture,
-  decodeIvmDelta, ivmReport, TailFeedWriter}
+import graft.queries.CdcFixtures.{boundedClasses, census, classLabel, decodeIvmDelta,
+  fixtureBase, imageKeys, Installments, ivmFixture, ivmReport, stateCensus, serverSid,
+  tailBase, TailFeedWriter, Txn, txns, writeBulk, writeFeedFile, writtenKeys}
 import graft.streaming.Drains.{drain, drainBinlog, drainWithRedelivery, streamDirs,
-  tmpFixtureDir, Redelivery}
+  Redelivery}
 
 /** The maintained-state LIFECYCLE family (split out of CdcQueries in r14
   * — the r13 verdict's mechanics task): the gates a long-running CDC
@@ -50,7 +51,7 @@ object LifecycleQueries {
   // at the caller's cadence.
   def cdc51CompactedIvm(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.ViewMaintenance
-    val (feed, state, ckpt) = streamDirs("graft_cdc51_", dir)
+    val (_, feed, state, ckpt) = streamDirs("graft_cdc51_", dir)
     val fx = ivmFixture(spark, dir)
     graft.ingest.BinlogSink.writeKeyedStrings(
       fx.aDelta.repartition(4, col("o_orderkey")), feed)
@@ -106,12 +107,8 @@ object LifecycleQueries {
   // counters, and unabsorbed replays are all hash mismatches.
   def cdc53RestartIvm(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.ViewMaintenance
-    val root = tmpFixtureDir("graft_cdc53_", dir)
-    root.mkdirs()
+    val (root, feed, state, ckpt) = streamDirs("graft_cdc53_", dir)
     val staging = new java.io.File(root, "staging").getPath
-    val feed = new java.io.File(root, "feed").getPath
-    val state = new java.io.File(root, "state").getPath
-    val ckpt = new java.io.File(root, "ckpt").getPath
     val fx = ivmFixture(spark, dir)
     graft.ingest.BinlogSink.writeKeyedStrings(
       fx.aDelta.repartition(4, col("o_orderkey")), staging)
@@ -154,9 +151,7 @@ object LifecycleQueries {
   // upsert because the after image's position wins the per-key order.
   // At 100 TB: one shuffle on the key (max_by hash agg), the cdc17 plan.
   def cdc54WireDmlApply(spark: SparkSession, dir: String): DataFrame = {
-    val root = tmpFixtureDir("graft_cdc54_", dir)
-    root.mkdirs()
-    val feed = new java.io.File(root, "feed").getPath
+    val (_, feed, _, _) = streamDirs("graft_cdc54_", dir)
     val base = fixtureBase(spark, dir)
       .filter(col("event_type").isin("purchase", "click", "view"))
       .select(col("event_id").as("k"), col("user_id"))
@@ -246,13 +241,10 @@ object LifecycleQueries {
   // window, old rows age into the base with the column NULL.
   def cdc55WireEvolution(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.ViewMaintenance
-    val root = tmpFixtureDir("graft_cdc55_", dir)
-    root.mkdirs()
+    val (root, feed, state, ckpt) = streamDirs("graft_cdc55_", dir)
     val stageN = new java.io.File(root, "stage_narrow").getPath
     val stageW = new java.io.File(root, "stage_wide").getPath
-    val feed = new java.io.File(root, "feed"); feed.mkdirs()
-    val state = new java.io.File(root, "state").getPath
-    val ckpt = new java.io.File(root, "ckpt").getPath
+    new java.io.File(feed).mkdirs()
     val base = fixtureBase(spark, dir)
       .filter(col("event_type").isin("purchase", "click", "view"))
       .select(col("event_id").as("k"), col("user_id"))
@@ -282,7 +274,7 @@ object LifecycleQueries {
         }
     }
     val wideSchema = "k BIGINT, v STRING, w BIGINT, batch_id BIGINT"
-    drainWithRedelivery(spark, feed.getPath, ckpt) { (batch, id) =>
+    drainWithRedelivery(spark, feed, ckpt) { (batch, id) =>
       // normalize EACH batch to the wide shape: the image's own arity
       // (the TABLE_MAP that framed it) decides whether w exists
       val norm = batch.filter(col("event_type") === "WriteRowsEventV2")
@@ -332,83 +324,32 @@ object LifecycleQueries {
   // the frontier side is |files| rows; the data side is untouched until
   // the one broadcast-joined filter.
   def cdc56TxnAtomicApply(spark: SparkSession, dir: String): DataFrame = {
-    val root = tmpFixtureDir("graft_cdc56_", dir)
-    root.mkdirs()
-    val feed = new java.io.File(root, "feed"); feed.mkdirs()
-    val base = fixtureBase(spark, dir)
-      .filter(col("event_type").isin("purchase", "click", "view"))
-      .select(col("event_id").as("k"),
-        concat(lit("u"), col("user_id")).as("v"))
-    // committed bulk: many transactions per file through the sink
-    graft.ingest.BinlogSink.writeChanges(
-      base.filter(col("k") % 131 >= 2)
-        .select(lit(1).as("op"), col("k"), col("v"))
-        .repartitionByRange(3, col("k")),
-      feed.getPath, rowsPerTxn = 50)
+    val (_, feed, _, _) = streamDirs("graft_cdc56_", dir)
+    new java.io.File(feed).mkdirs()
+    val base = tailBase(spark, dir)
+    writeBulk(base, live = 2, files = 3, feed)
     // the tail file: txn A commits, txn B is torn (no XID — EOF inside
-    // the transaction). Bounded fixture classes, written driver-side
-    // with the byte-level builder because the torn shape is precisely
-    // what the distributed sink refuses to produce.
-    // explicit bound on the fixture collect (the other fixture writers'
-    // limit + require discipline): the two 1/131 classes are a few
-    // hundred rows at sf0.1; hitting the cap means the fixture stopped
-    // being a bounded test vector, which must fail loudly, not OOM
-    val fixtureCap = 200000
-    val t1 = base.filter(col("k") % 131 === 0).orderBy("k")
-      .limit(fixtureCap + 1).collect()
-    val t2 = base.filter(col("k") % 131 === 1).orderBy("k")
-      .limit(fixtureCap + 1).collect()
-    require(t1.length <= fixtureCap && t2.length <= fixtureCap,
-      s"cdc56 fixture classes must stay bounded test vectors, got " +
-        s"${t1.length}/${t2.length} rows (cap $fixtureCap)")
+    // the transaction); both are written even when their class is empty
+    val cls @ Seq(t1, t2) = boundedClasses(base, "cdc56", Seq(0L, 1L))
     if (t1.nonEmpty || t2.nonEmpty) {
-      import graft.ingest.BinlogBinaryWriter._
-      val bound = math.max(20,
-        (t1 ++ t2).map(_.getString(1).getBytes("UTF-8").length).max + 16)
-      val cols = Seq(ColDef.longlong, ColDef.varchar(bound))
-      def img(r: org.apache.spark.sql.Row): Seq[Option[Array[Byte]]] =
-        Seq(Some(encLongLong(r.getLong(0))),
-          Some(encVarchar(r.getString(1), bound)))
-      val t0 = 1714564800L
-      val sid = (1 to 16).map(_.toByte).toArray
-      val f = new FileBuilder(checksums = true)
-      f.fde(t0)
-      f.event(t0, 33, gtidBody(sid, 901L))
-      f.event(t0, 2, queryBody("sf", "BEGIN"))
-      t1.grouped(100).foreach { b =>
-        f.event(t0, 19, tableMapBody(11, "sf", "delta", cols))
-        f.event(t0, 30, rowsBody(11, cols.size, b.toSeq.map(img)))
-      }
-      f.event(t0, 16, xidBody(9001L))
-      // txn B: opened, rows flushed, never committed — the file ends here
-      f.event(t0, 33, gtidBody(sid, 902L))
-      f.event(t0, 2, queryBody("sf", "BEGIN"))
-      t2.grouped(100).foreach { b =>
-        f.event(t0, 19, tableMapBody(11, "sf", "delta", cols))
-        f.event(t0, 30, rowsBody(11, cols.size, b.toSeq.map(img)))
-      }
-      java.nio.file.Files.write(
-        new java.io.File(feed, "mysql-bin.000501").toPath, f.bytes)
+      val w = new TailFeedWriter(cls)
+      val (f, _) = w.newFile()
+      w.txn(f, Txn(901L, 9001L, t1))
+      w.txn(f, Txn(902L, 9002L, t2, commit = false))
+      writeFeedFile(feed, "mysql-bin.000501", f.bytes)
     }
-    val ev = spark.read.format("binlog").load(feed.getPath)
+    val ev = spark.read.format("binlog").load(feed)
     // per-file commit frontier: the last XID's event_index (XIDs are
     // sparse — this side is |files| rows, broadcast below)
     val frontier = ev.filter(col("event_type") === "XID")
       .groupBy("binlog_file").agg(max(col("event_index")).as("last_xid_idx"))
-    val committed = ev.filter(col("event_type") === "WriteRowsEventV2")
-      .select(col("binlog_file"), col("event_index"),
-        explode(col("row_images")).as("img"))
+    val committed = writtenKeys(ev
       .join(broadcast(frontier), Seq("binlog_file"), "left")
       // no XID after the row (or none in the file) ⇒ the transaction
       // never committed ⇒ held back
-      .filter(col("event_index") < coalesce(col("last_xid_idx"), lit(-1L)))
-      .select(element_at(col("img"), 1).cast("long").as("k"))
-    committed
-      .withColumn("src", when(col("k") % 131 === 0, "torn_file_committed")
-        .otherwise("sink"))
-      .groupBy("src")
-      .agg(count(lit(1)).as("n_rows"), sum(col("k")).as("k_sum"))
-      .orderBy("src")
+      .filter(col("event_index") < coalesce(col("last_xid_idx"), lit(-1L))))
+    census(committed.withColumn("src",
+      when(col("k") % 131 === 0, "torn_file_committed").otherwise("sink")))
   }
 
   // cdc57 — MULTI-TABLE DEMULTIPLEX: a real binlog is one totally-
@@ -435,12 +376,10 @@ object LifecycleQueries {
   // each) reads the feed N times.
   def cdc57MultiTableDemux(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.ViewMaintenance
-    val root = tmpFixtureDir("graft_cdc57_", dir)
-    root.mkdirs()
-    val feed = new java.io.File(root, "feed"); feed.mkdirs()
+    val (root, feed, _, ckpt) = streamDirs("graft_cdc57_", dir)
+    new java.io.File(feed).mkdirs()
     val stateA = new java.io.File(root, "state_ta").getPath
     val stateB = new java.io.File(root, "state_tb").getPath
-    val ckpt = new java.io.File(root, "ckpt").getPath
     val base = fixtureBase(spark, dir)
       .filter(col("event_type").isin("purchase", "click", "view"))
       .select(col("event_id").as("k"), col("user_id"))
@@ -468,7 +407,7 @@ object LifecycleQueries {
     stage("st2", tb.filter(col("k") <= mid), "tb", 22L, seq = 2)
     stage("st3", ta.filter(col("k") > mid), "ta", 21L, seq = 3)
     stage("st4", tb.filter(col("k") > mid), "tb", 22L, seq = 4)
-    drainWithRedelivery(spark, feed.getPath, ckpt) { (batch, id) =>
+    drainWithRedelivery(spark, feed, ckpt) { (batch, id) =>
       // ONE pass over the batch, N routed state writes
       val b = batch.filter(col("event_type") === "WriteRowsEventV2")
         .select(col("table"), explode(col("row_images")).as("img"))
@@ -580,81 +519,30 @@ object LifecycleQueries {
   // the split-index path — nothing scales with history size.
   def cdc58TailActive(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.ViewMaintenance
-    val root = tmpFixtureDir("graft_cdc58_", dir)
-    root.mkdirs()
-    val feed = new java.io.File(root, "feed")
-    val state = new java.io.File(root, "state").getPath
-    val ckpt = new java.io.File(root, "ckpt").getPath
-    val base = fixtureBase(spark, dir)
-      .filter(col("event_type").isin("purchase", "click", "view"))
-      .select(col("event_id").as("k"),
-        concat(lit("u"), col("user_id")).as("v"))
-    // closed bulk: three sink-written files, delivered complete up front
-    graft.ingest.BinlogSink.writeChanges(
-      base.filter(col("k") % 131 >= 4)
-        .select(lit(1).as("op"), col("k"), col("v"))
-        .repartitionByRange(3, col("k")),
-      feed.getPath, rowsPerTxn = 50)
-    // the ACTIVE file: bounded fixture classes, byte-crafted because a
-    // mid-event tear is precisely what the distributed sink refuses to
-    // produce (cdc56's discipline; cap + bound logic shared via
-    // CdcFixtures.boundedClass/TailFeedWriter)
-    val bc58 = boundedClasses(base, "cdc58", Seq(0L, 1L, 2L, 3L))
-    val (ta, tb, tc, td) = (bc58(0L), bc58(1L), bc58(2L), bc58(3L))
-    val activeFile = new java.io.File(feed, "mysql-bin.000500")
-    val appendTail: Option[Array[Byte]] =
-      if (ta.isEmpty && tb.isEmpty && tc.isEmpty && td.isEmpty) None
-      else {
-        val w = new TailFeedWriter(Seq(ta, tb, tc, td))
-        val (f, fdeOff) = w.newFile()
-        // the clean fallback cut when txn B is empty: after A's commit
-        // (or after the FDE when A is empty too)
-        var cleanCut = fdeOff
-        // txn A: committed entirely inside installment 1
-        if (ta.nonEmpty) cleanCut = w.txn(f, 801L, 8001L, ta)._2
-        // txn B: rows in installment 1, XID only in the appended bytes
-        val afterBRows =
-          if (tb.nonEmpty) w.txn(f, 802L, 8002L, tb)._1 else cleanCut
-        // txn C: committed, entirely in the appended bytes
-        if (tc.nonEmpty) w.txn(f, 803L, 8003L, tc)
-        // txn D: torn FOREVER — the file (and the fixture) end inside it
-        if (td.nonEmpty) w.txn(f, 804L, 8004L, td, commit = false)
-        val all = f.bytes
-        // installment 1 tears 7 bytes into B's XID header when B exists,
-        // else cleanly after A's commit
-        val cut = (if (tb.nonEmpty) math.min(afterBRows + 7, all.length.toLong)
-          else cleanCut).toInt
-        java.nio.file.Files.write(activeFile.toPath, all.slice(0, cut))
-        Some(all.slice(cut, all.length))
-      }
+    val (_, feed, state, ckpt) = streamDirs("graft_cdc58_", dir)
+    val base = tailBase(spark, dir)
+    writeBulk(base, live = 4, files = 3, feed)
+    val cls = boundedClasses(base, "cdc58", 0L to 3L)
+    val Seq(a, b, c, d) = txns(cls, 801L, 8001L)
+    val active = new TailFeedWriter(cls).activeFile(
+      new java.io.File(feed, "mysql-bin.000500"),
+      Seq(a), Some(b), Seq(c, d.copy(commit = false)))
+    active.foreach(_.writeFirst())
     // two AvailableNow runs on ONE checkpoint, the append in between;
     // batch 0's file(s) recorded for the injected redelivery
-    val batch0 = new Redelivery(spark, Seq(feed.getPath))
+    val batch0 = new Redelivery(spark, Seq(feed))
     def applyBatch(batch: DataFrame, id: Long): Unit = {
       batch0.record(batch, id)
-      ViewMaintenance.applyIdempotent(
-        batch.filter(col("event_type") === "WriteRowsEventV2")
-          .select(explode(col("row_images")).as("img"))
-          .select(element_at(col("img"), 1).cast("long").as("k")),
-        state, id)
+      ViewMaintenance.applyIdempotent(writtenKeys(batch), state, id)
     }
-    def drainTail(): Unit = drainBinlog(spark, Seq(feed.getPath), ckpt, tail = true)(applyBatch)
+    def drainTail(): Unit = drainBinlog(spark, Seq(feed), ckpt, tail = true)(applyBatch)
     drainTail()
-    appendTail.foreach { tail =>
-      java.nio.file.Files.write(activeFile.toPath, tail,
-        java.nio.file.StandardOpenOption.APPEND)
-    }
+    active.foreach(_.append())
     drainTail()
     // injected crash-after-commit redelivery of batch 0 (a whole closed
     // file — byte-range batches replay through the checkpoint instead)
     batch0.replay()(applyBatch)
-    ViewMaintenance.readState(spark, state, "k BIGINT, batch_id BIGINT")
-      .withColumn("src", when(col("k") % 131 === 0, "txn_a")
-        .when(col("k") % 131 === 1, "txn_b")
-        .when(col("k") % 131 === 2, "txn_c").otherwise("bulk"))
-      .groupBy("src")
-      .agg(count(lit(1)).as("n_rows"), sum(col("k")).as("k_sum"))
-      .orderBy("src")
+    stateCensus(spark, state, Seq("txn_a", "txn_b", "txn_c"))
   }
 
   // cdc64 — ROTATION MID-TAIL (the one tail posture cdc58/cdc63 never
@@ -685,69 +573,32 @@ object LifecycleQueries {
   // the per-trigger cost stays one listing + a walk of the new bytes.
   def cdc64TailRotate(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.ViewMaintenance
-    val root = tmpFixtureDir("graft_cdc64_", dir)
-    root.mkdirs()
-    val feed = new java.io.File(root, "feed")
-    val state = new java.io.File(root, "state").getPath
-    val ckpt = new java.io.File(root, "ckpt").getPath
-    val base = fixtureBase(spark, dir)
-      .filter(col("event_type").isin("purchase", "click", "view"))
-      .select(col("event_id").as("k"),
-        concat(lit("u"), col("user_id")).as("v"))
-    // closed bulk: sink-written files, delivered complete up front
-    graft.ingest.BinlogSink.writeChanges(
-      base.filter(col("k") % 131 >= 5)
-        .select(lit(1).as("op"), col("k"), col("v"))
-        .repartitionByRange(3, col("k")),
-      feed.getPath, rowsPerTxn = 50)
-    val bc64 = boundedClasses(base, "cdc64", Seq(0L, 1L, 2L, 3L, 4L))
-    val (ta, tb, tc, td, te) = (bc64(0L), bc64(1L), bc64(2L), bc64(3L), bc64(4L))
-    val file500 = new java.io.File(feed, "mysql-bin.000500")
-    val file501 = new java.io.File(feed, "mysql-bin.000501")
-    // (500's appended remainder, 501's full contents) — None on an empty
-    // fixture (degenerate inputs: no active files at all)
-    val rotation: Option[(Array[Byte], Array[Byte])] =
-      if (ta.isEmpty && tb.isEmpty && tc.isEmpty && td.isEmpty && te.isEmpty)
-        None
-      else {
-        val w = new TailFeedWriter(Seq(ta, tb, tc, td, te))
-        // file 500: A committed | cut | B's XID, C committed, ROTATE
-        val (f5, fdeOff) = w.newFile()
-        var cleanCut = fdeOff
-        if (ta.nonEmpty) cleanCut = w.txn(f5, 801L, 8001L, ta)._2
-        val afterBRows =
-          if (tb.nonEmpty) w.txn(f5, 802L, 8002L, tb)._1 else cleanCut
-        if (tc.nonEmpty) w.txn(f5, 803L, 8003L, tc)
-        w.rotate(f5, "mysql-bin.000501")
-        val all5 = f5.bytes
-        // the installment-1 cut: 7 bytes INTO B's XID header (mid-event),
-        // or cleanly after A's commit when B is empty
-        val cut = (if (tb.nonEmpty) math.min(afterBRows + 7, all5.length.toLong)
-          else cleanCut).toInt
-        java.nio.file.Files.write(file500.toPath, all5.slice(0, cut))
-        // file 501: D committed, E torn forever
-        val (f6, _) = w.newFile()
-        if (td.nonEmpty) w.txn(f6, 804L, 8004L, td)
-        if (te.nonEmpty) w.txn(f6, 805L, 8005L, te, commit = false)
-        Some((all5.slice(cut, all5.length), f6.bytes))
-      }
-    val batch0 = new Redelivery(spark, Seq(feed.getPath))
+    val (_, feed, state, ckpt) = streamDirs("graft_cdc64_", dir)
+    val base = tailBase(spark, dir)
+    writeBulk(base, live = 5, files = 3, feed)
+    val cls = boundedClasses(base, "cdc64", 0L to 4L)
+    val Seq(a, b, c, d, e) = txns(cls, 801L, 8001L)
+    val w = new TailFeedWriter(cls)
+    // (500 in installments, ending in the ROTATE; 501's contents)
+    val rotation = Option.when(!w.isEmpty) {
+      val (f500, cut) = w.tornFile(Seq(a), Some(b), Seq(c))
+      w.rotate(f500, "mysql-bin.000501")
+      (Installments(new java.io.File(feed, "mysql-bin.000500"), f500.bytes, cut),
+        w.file(d, e.copy(commit = false)))
+    }
+    rotation.foreach(_._1.writeFirst())
+    val batch0 = new Redelivery(spark, Seq(feed))
     var applied = 0L
     def applyBatch(batch: DataFrame, id: Long): Unit = {
       batch0.record(batch, id)
       applied += 1
-      ViewMaintenance.applyIdempotent(
-        batch.filter(col("event_type") === "WriteRowsEventV2")
-          .select(explode(col("row_images")).as("img"))
-          .select(element_at(col("img"), 1).cast("long").as("k")),
-        state, id)
+      ViewMaintenance.applyIdempotent(writtenKeys(batch), state, id)
     }
-    def drainTail(): Unit = drainBinlog(spark, Seq(feed.getPath), ckpt, tail = true)(applyBatch)
+    def drainTail(): Unit = drainBinlog(spark, Seq(feed), ckpt, tail = true)(applyBatch)
     drainTail()
-    rotation.foreach { case (rest500, bytes501) =>
-      java.nio.file.Files.write(file500.toPath, rest500,
-        java.nio.file.StandardOpenOption.APPEND)
-      java.nio.file.Files.write(file501.toPath, bytes501)
+    rotation.foreach { case (file500, bytes501) =>
+      file500.append()
+      writeFeedFile(feed, "mysql-bin.000501", bytes501)
     }
     drainTail()
     // the idle drain: a quiet server — no growth, so NO batch may run
@@ -759,14 +610,7 @@ object LifecycleQueries {
       s"idle tail drain must run no batches, ran ${applied - beforeIdle}")
     // injected crash-after-commit redelivery of batch 0
     batch0.replay()(applyBatch)
-    ViewMaintenance.readState(spark, state, "k BIGINT, batch_id BIGINT")
-      .withColumn("src", when(col("k") % 131 === 0, "txn_a")
-        .when(col("k") % 131 === 1, "txn_b")
-        .when(col("k") % 131 === 2, "txn_c")
-        .when(col("k") % 131 === 3, "txn_d").otherwise("bulk"))
-      .groupBy("src")
-      .agg(count(lit(1)).as("n_rows"), sum(col("k")).as("k_sum"))
-      .orderBy("src")
+    stateCensus(spark, state, Seq("txn_a", "txn_b", "txn_c", "txn_d"))
   }
 
   val cdc64Oracle: String =
@@ -811,64 +655,34 @@ object LifecycleQueries {
   // routine event that never pauses the other shards' ingestion.
   def cdc74GtidShardedFailover(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.ViewMaintenance
-    val root = tmpFixtureDir("graft_cdc74_", dir)
-    root.mkdirs()
-    val feedA = new java.io.File(root, "feed_a")
-    val feedB = new java.io.File(root, "feed_b")
-    val state = new java.io.File(root, "state").getPath
+    val (root, _, state, ckpt) = streamDirs("graft_cdc74_", dir)
+    val feeds @ Seq(feedA, feedB) =
+      Seq("feed_a", "feed_b").map(new java.io.File(root, _).getPath)
     val gtidState = new java.io.File(root, "gtid_state").getPath
-    val ckpt = new java.io.File(root, "ckpt").getPath
-    val base = fixtureBase(spark, dir)
-      .filter(col("event_type").isin("purchase", "click", "view"))
-      .select(col("event_id").as("k"),
-        concat(lit("u"), col("user_id")).as("v"))
+    val base = tailBase(spark, dir)
+    def shard(s: Long): DataFrame = base.filter(col("k") % 2 === s)
     // per-shard closed bulk, disjoint numbering (redelivery routing) —
     // two independent wire writes into disjoint feeds, overlapped (§2.6)
     graft.streaming.Drains.inParallel(
-      () => graft.ingest.BinlogSink.writeChanges(
-        base.filter(col("k") % 2 === 0 && col("k") % 131 >= 4)
-          .select(lit(1).as("op"), col("k"), col("v"))
-          .repartitionByRange(2, col("k")),
-        feedA.getPath, rowsPerTxn = 50, fileSeqStart = 1),
-      () => graft.ingest.BinlogSink.writeChanges(
-        base.filter(col("k") % 2 === 1 && col("k") % 131 >= 4)
-          .select(lit(1).as("op"), col("k"), col("v"))
-          .repartitionByRange(2, col("k")),
-        feedB.getPath, rowsPerTxn = 50, fileSeqStart = 101))
+      () => writeBulk(shard(0), live = 4, files = 2, feedA, fileSeqStart = 1),
+      () => writeBulk(shard(1), live = 4, files = 2, feedB, fileSeqStart = 101))
     val failoverSeq = 800L
-    // per shard: (server file P+Q, replica file Q@50+R+S-torn) under
-    // that shard's own server sid
-    def craft(shard: Long): Option[(Array[Byte], Array[Byte])] = {
-      val shardBase = base.filter(col("k") % 2 === shard)
-      val bc = boundedClasses(shardBase, s"cdc74/$shard", Seq(0L, 1L, 2L, 3L))
-      val (tp, tq, tr, ts) = (bc(0L), bc(1L), bc(2L), bc(3L))
-      if (tp.isEmpty && tq.isEmpty && tr.isEmpty && ts.isEmpty) None
-      else {
-        val w = new TailFeedWriter(Seq(tp, tq, tr, ts),
-          sid = (1 to 16).map(b => (b + 32 * (shard + 1)).toByte).toArray)
-        val (fA, _) = w.newFile()
-        if (tp.nonEmpty) w.txn(fA, 9001L, 17001L + shard, tp)
-        if (tq.nonEmpty) w.txn(fA, 9002L, 17002L + shard, tq)
-        val (fB, _) = w.newFile()
-        if (tq.nonEmpty) w.txn(fB, 9002L, 17002L + shard, tq, perEvent = 50)
-        if (tr.nonEmpty) w.txn(fB, 9003L, 17003L + shard, tr)
-        if (ts.nonEmpty) w.txn(fB, 9004L, 17004L + shard, ts, commit = false)
-        Some((fA.bytes, fB.bytes))
-      }
+    // per shard: the failover pair under that shard's own server sid
+    def craft(s: Long): Option[(Array[Byte], Array[Byte])] = {
+      val cls = boundedClasses(shard(s), s"cdc74/$s", 0L to 3L)
+      new TailFeedWriter(cls, serverSid(32 * (s.toInt + 1)))
+        .failoverPair(9001L, 17001L + s)
     }
     val craftedA = craft(0)
     val craftedB = craft(1)
     // crafted names stay DISJOINT per shard (A: 500/800, B: 600/900 —
     // cdc72's discipline): the redelivery routes names back to feeds
-    craftedA.foreach { case (a, _) => java.nio.file.Files.write(
-      new java.io.File(feedA, "mysql-bin.000500").toPath, a) }
-    craftedB.foreach { case (a, _) => java.nio.file.Files.write(
-      new java.io.File(feedB, "mysql-bin.000600").toPath, a) }
+    craftedA.foreach(p => writeFeedFile(feedA, "mysql-bin.000500", p._1))
+    craftedB.foreach(p => writeFeedFile(feedB, "mysql-bin.000600", p._1))
     val gno = substring_index(col("gtid_next"), ":", -1).cast("long")
     // the recovered fleet-wide marks: None before the failover restart,
     // then a FROZEN broadcast (sid, exec_gno) table read from the state
     var marks: Option[DataFrame] = None
-    val feeds = Seq(feedA.getPath, feedB.getPath)
     val batch0 = new Redelivery(spark, feeds)
     def applyBatch(batch: DataFrame, id: Long): Unit = {
       batch0.record(batch, id)
@@ -887,10 +701,7 @@ object LifecycleQueries {
       // (§2.6): ONE durable executed set for the whole fleet — per-sid
       // max gno this batch, whichever shard the rows rode in on
       graft.streaming.Drains.inParallel(
-        () => ViewMaintenance.applyIdempotent(
-          kept.select(explode(col("row_images")).as("img"))
-            .select(element_at(col("img"), 1).cast("long").as("k")),
-          state, id),
+        () => ViewMaintenance.applyIdempotent(imageKeys(kept), state, id),
         () => ViewMaintenance.applyIdempotent(
           rows.filter(col("gtid_next") =!= "")
             .select(substring_index(col("gtid_next"), ":", 1).as("sid"),
@@ -904,10 +715,8 @@ object LifecycleQueries {
     drain()
     // BOTH shards fail over: each replica's file arrives (disjoint
     // names; both >= failoverSeq so the discard guard covers them)
-    craftedA.foreach { case (_, b) => java.nio.file.Files.write(
-      new java.io.File(feedA, "mysql-bin.000800").toPath, b) }
-    craftedB.foreach { case (_, b) => java.nio.file.Files.write(
-      new java.io.File(feedB, "mysql-bin.000900").toPath, b) }
+    craftedA.foreach(p => writeFeedFile(feedA, "mysql-bin.000800", p._2))
+    craftedB.foreach(p => writeFeedFile(feedB, "mysql-bin.000900", p._2))
     // the restarted consumer recovers the fleet's executed set FROM
     // THE STATE before resubscribing
     marks = Some(ViewMaintenance.readState(spark, gtidState,
@@ -918,14 +727,7 @@ object LifecycleQueries {
     // injected batch-0 redelivery (bulk, pre-failover): the file_seq
     // guard keeps the recovered marks away from it — bit-identical
     batch0.replay()(applyBatch)
-    ViewMaintenance.readState(spark, state, "k BIGINT, batch_id BIGINT")
-      .withColumn("shard", (col("k") % 2).cast("long"))
-      .withColumn("src", when(col("k") % 131 === 0, "txn_p")
-        .when(col("k") % 131 === 1, "txn_q")
-        .when(col("k") % 131 === 2, "txn_r").otherwise("bulk"))
-      .groupBy("shard", "src")
-      .agg(count(lit(1)).as("n_rows"), sum(col("k")).as("k_sum"))
-      .orderBy("shard", "src")
+    stateCensus(spark, state, Seq("txn_p", "txn_q", "txn_r"), shards = 2)
   }
 
   val cdc74Oracle: String =
@@ -972,46 +774,19 @@ object LifecycleQueries {
   // number of failovers because the mark never references a file.
   def cdc73GtidSetCutover(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.ViewMaintenance
-    val root = tmpFixtureDir("graft_cdc73_", dir)
-    root.mkdirs()
-    val feed = new java.io.File(root, "feed")
-    val state = new java.io.File(root, "state").getPath
+    val (root, feed, state, ckpt) = streamDirs("graft_cdc73_", dir)
     val gtidState = new java.io.File(root, "gtid_state").getPath
-    val ckpt = new java.io.File(root, "ckpt").getPath
-    val base = fixtureBase(spark, dir)
-      .filter(col("event_type").isin("purchase", "click", "view"))
-      .select(col("event_id").as("k"),
-        concat(lit("u"), col("user_id")).as("v"))
+    val base = tailBase(spark, dir)
     // pre-snapshot history: bulk under the sink's sid, then server A's
     // last file (P, Q) — everything the snapshot will cover
-    graft.ingest.BinlogSink.writeChanges(
-      base.filter(col("k") % 131 >= 4)
-        .select(lit(1).as("op"), col("k"), col("v"))
-        .repartitionByRange(3, col("k")),
-      feed.getPath, rowsPerTxn = 50)
-    val bc73 = boundedClasses(base, "cdc73", Seq(0L, 1L, 2L, 3L))
-    val (tp, tq, tr, ts) = (bc73(0L), bc73(1L), bc73(2L), bc73(3L))
-    // (no uuid formatting here: unlike cdc66/cdc70, the discard keys on
-    // the raw per-sid set state, not on one hand-picked server's uuid)
-    val sidA = (33 to 48).map(_.toByte).toArray
+    writeBulk(base, live = 4, files = 3, feed)
+    val cls = boundedClasses(base, "cdc73", 0L to 3L)
+    // the discard keys on the raw per-sid set state, not on one server's
+    // uuid
+    val crafted = new TailFeedWriter(cls, serverSid(32))
+      .failoverPair(9001L, 17001L)
     val failoverSeq = 800L
-    val crafted: Option[(Array[Byte], Array[Byte])] =
-      if (tp.isEmpty && tq.isEmpty && tr.isEmpty && ts.isEmpty) None
-      else {
-        val w = new TailFeedWriter(Seq(tp, tq, tr, ts), sid = sidA)
-        val (fA, _) = w.newFile()
-        if (tp.nonEmpty) w.txn(fA, 9001L, 17001L, tp)
-        if (tq.nonEmpty) w.txn(fA, 9002L, 17002L, tq)
-        val (fB, _) = w.newFile()
-        if (tq.nonEmpty) w.txn(fB, 9002L, 17002L, tq, perEvent = 50) // overlap
-        if (tr.nonEmpty) w.txn(fB, 9003L, 17003L, tr)
-        if (ts.nonEmpty) w.txn(fB, 9004L, 17004L, ts, commit = false)
-        Some((fA.bytes, fB.bytes))
-      }
-    crafted.foreach { case (bytesA, _) =>
-      java.nio.file.Files.write(
-        new java.io.File(feed, "mysql-bin.000500").toPath, bytesA)
-    }
+    crafted.foreach(p => writeFeedFile(feed, "mysql-bin.000500", p._1))
     val gno = substring_index(col("gtid_next"), ":", -1).cast("long")
     // THE SNAPSHOT: state₀ = everything currently in the feed, and the
     // executed-GTID set — per-sid max gno — persisted WITH it as its
@@ -1019,17 +794,14 @@ object LifecycleQueries {
     // The positional high-water below is computed ONLY for the in-gate
     // negative proof that such a mark would break on failover.
     var posMark: Option[(Long, Long)] = None
-    val hasFiles = Option(feed.listFiles())
+    val hasFiles = Option(new java.io.File(feed).listFiles())
       .getOrElse(Array.empty[java.io.File])
       .exists(f => f.isFile && !f.getName.startsWith("."))
     if (hasFiles) {
-      val snap = spark.read.format("binlog").load(feed.getPath)
+      val snap = spark.read.format("binlog").load(feed)
         .filter(col("event_type") === "WriteRowsEventV2")
         .localCheckpoint(true)
-      ViewMaintenance.applyIdempotent(
-        snap.select(explode(col("row_images")).as("img"))
-          .select(element_at(col("img"), 1).cast("long").as("k")),
-        state, -1L)
+      ViewMaintenance.applyIdempotent(imageKeys(snap), state, -1L)
       ViewMaintenance.applyIdempotent(
         snap.filter(col("gtid_next") =!= "")
           .select(substring_index(col("gtid_next"), ":", 1).as("sid"),
@@ -1044,10 +816,7 @@ object LifecycleQueries {
     }
     // FAILOVER, before the backfill begins: the replica's file arrives
     // under a higher number, re-serving Q under the same gtid
-    crafted.foreach { case (_, bytesB) =>
-      java.nio.file.Files.write(
-        new java.io.File(feed, "mysql-bin.000800").toPath, bytesB)
-    }
+    crafted.foreach(p => writeFeedFile(feed, "mysql-bin.000800", p._2))
     // the backfill consumer recovers the mark FROM THE SET STATE (a
     // restart-survivable read, cdc70's discipline), frozen thereafter —
     // a tiny per-sid table broadcast into every batch's discard join
@@ -1060,7 +829,7 @@ object LifecycleQueries {
       .withColumn("__sid", substring_index(col("gtid_next"), ":", 1))
       .join(broadcast(executed), col("__sid") === col("sid"), "left")
       .filter(col("exec_gno").isNull || gno > col("exec_gno"))
-    val redelivery = new Redelivery(spark, Seq(feed.getPath))
+    val redelivery = new Redelivery(spark, Seq(feed))
     var failoverFiles = Seq.empty[String]
     var failoverId = -1L
     var failoverEnd = (0L, 0L) // the batch's recorded end position
@@ -1082,13 +851,9 @@ object LifecycleQueries {
           failoverEnd = (e.getLong(0), e.getLong(1))
         }
       }
-      ViewMaintenance.applyIdempotent(
-        keptRows(batch)
-          .select(explode(col("row_images")).as("img"))
-          .select(element_at(col("img"), 1).cast("long").as("k")),
-        state, id)
+      ViewMaintenance.applyIdempotent(imageKeys(keptRows(batch)), state, id)
     }
-    def drainTail(): Unit = drainBinlog(spark, Seq(feed.getPath), ckpt, tail = true)(applyBatch)
+    def drainTail(): Unit = drainBinlog(spark, Seq(feed), ckpt, tail = true)(applyBatch)
     drainTail()
     // the NEGATIVE proof: replica rows the GTID set discards but the
     // snapshot-time positional mark would ADMIT — the double-count a
@@ -1098,7 +863,7 @@ object LifecycleQueries {
     // writes the replica file this block reads.
     if (crafted.isDefined) posMark.foreach { case (ms, mi) =>
       val admittedByPos = spark.read.format("binlog")
-        .load(s"${feed.getPath}/mysql-bin.000800")
+        .load(s"$feed/mysql-bin.000800")
         .filter(col("event_type") === "WriteRowsEventV2")
         .withColumn("__sid", substring_index(col("gtid_next"), ":", 1))
         .join(broadcast(executed), col("__sid") === col("sid"), "left")
@@ -1106,10 +871,10 @@ object LifecycleQueries {
         .filter(col("file_seq") > ms ||
           (col("file_seq") === ms && col("event_index") > mi))
         .count()
-      require((admittedByPos > 0) == tq.nonEmpty,
+      require((admittedByPos > 0) == cls(1).nonEmpty,
         s"the positional mark must diverge from the GTID set exactly on " +
           s"the re-served overlap (got $admittedByPos admitted rows, " +
-          s"overlap ${tq.length} keys)")
+          s"overlap ${cls(1).length} keys)")
     }
     // injected replays: batch 0 (entirely covered by the set — an empty
     // overwrite) and the failover batch (partially discarded)
@@ -1119,13 +884,7 @@ object LifecycleQueries {
         (col("file_seq") === failoverEnd._1 &&
           col("event_index") <= failoverEnd._2)), id)
     }
-    ViewMaintenance.readState(spark, state, "k BIGINT, batch_id BIGINT")
-      .withColumn("src", when(col("k") % 131 === 0, "txn_p")
-        .when(col("k") % 131 === 1, "txn_q")
-        .when(col("k") % 131 === 2, "txn_r").otherwise("bulk"))
-      .groupBy("src")
-      .agg(count(lit(1)).as("n_rows"), sum(col("k")).as("k_sum"))
-      .orderBy("src")
+    stateCensus(spark, state, Seq("txn_p", "txn_q", "txn_r"))
   }
 
   // cdc72 — PURGE-SAFE × SHARDED UNION (the r14 verdict's top task: the
@@ -1151,68 +910,29 @@ object LifecycleQueries {
   // stay a server-side policy on every shard independently.
   def cdc72PurgeShardedUnion(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.ViewMaintenance
-    val root = tmpFixtureDir("graft_cdc72_", dir)
-    root.mkdirs()
-    val feedA = new java.io.File(root, "feed_a")
-    val feedB = new java.io.File(root, "feed_b")
-    val state = new java.io.File(root, "state").getPath
-    val ckpt = new java.io.File(root, "ckpt").getPath
-    val base = fixtureBase(spark, dir)
-      .filter(col("event_type").isin("purchase", "click", "view"))
-      .select(col("event_id").as("k"),
-        concat(lit("u"), col("user_id")).as("v"))
+    val (root, _, state, ckpt) = streamDirs("graft_cdc72_", dir)
+    val feeds @ Seq(feedA, feedB) =
+      Seq("feed_a", "feed_b").map(new java.io.File(root, _).getPath)
+    val base = tailBase(spark, dir)
+    def shard(s: Long): DataFrame = base.filter(col("k") % 2 === s)
     // per-shard closed bulk, disjoint file numbering (redelivery routing)
-    graft.ingest.BinlogSink.writeChanges(
-      base.filter(col("k") % 2 === 0 && col("k") % 131 >= 3)
-        .select(lit(1).as("op"), col("k"), col("v"))
-        .repartitionByRange(2, col("k")),
-      feedA.getPath, rowsPerTxn = 50, fileSeqStart = 1)
-    graft.ingest.BinlogSink.writeChanges(
-      base.filter(col("k") % 2 === 1 && col("k") % 131 >= 3)
-        .select(lit(1).as("op"), col("k"), col("v"))
-        .repartitionByRange(2, col("k")),
-      feedB.getPath, rowsPerTxn = 50, fileSeqStart = 101)
-    // one active file per shard: (installment 1, append, has-torn-class)
-    // or None when the shard's live classes are all empty
-    def craft(shard: Long): Option[(Array[Byte], Array[Byte], Boolean)] = {
-      val shardBase = base.filter(col("k") % 2 === shard)
-      val bc = boundedClasses(shardBase, s"cdc72/$shard", Seq(0L, 1L, 2L))
-      val (ta, tb, tc) = (bc(0L), bc(1L), bc(2L))
-      if (ta.isEmpty && tb.isEmpty && tc.isEmpty) None
-      else {
-        val w = new TailFeedWriter(Seq(ta, tb, tc),
-          sid = (1 to 16).map(b => (b + 16 * shard).toByte).toArray)
-        val (f, fdeOff) = w.newFile()
-        var cleanCut = fdeOff
-        if (ta.nonEmpty) cleanCut = w.txn(f, 801L + shard, 8001L + shard, ta)._2
-        val afterBRows =
-          if (tb.nonEmpty) w.txn(f, 811L + shard, 8011L + shard, tb)._1
-          else cleanCut
-        if (tc.nonEmpty)
-          w.txn(f, 821L + shard, 8021L + shard, tc, commit = false) // torn
-        val all = f.bytes
-        val cut = (if (tb.nonEmpty) math.min(afterBRows + 7, all.length.toLong)
-          else cleanCut).toInt
-        Some((all.slice(0, cut), all.slice(cut, all.length), tc.nonEmpty))
-      }
+    writeBulk(shard(0), live = 3, files = 2, feedA, fileSeqStart = 1)
+    writeBulk(shard(1), live = 3, files = 2, feedB, fileSeqStart = 101)
+    // one active file per shard, and whether it has a torn-forever class
+    def craft(s: Long, feed: String, name: String): (Option[Installments], Boolean) = {
+      val cls = boundedClasses(shard(s), s"cdc72/$s", 0L to 2L)
+      val Seq(a, b, c) = txns(cls, 801L + s, 8001L + s, step = 10L)
+      (new TailFeedWriter(cls, serverSid(16 * s.toInt)).activeFile(
+        new java.io.File(feed, name), Seq(a), Some(b), Seq(c.copy(commit = false))),
+        cls(2).nonEmpty)
     }
-    val craftedA = craft(0)
-    val craftedB = craft(1)
-    val activeA = new java.io.File(feedA, "mysql-bin.000500")
-    val activeB = new java.io.File(feedB, "mysql-bin.000600")
-    craftedA.foreach { case (i1, _, _) =>
-      java.nio.file.Files.write(activeA.toPath, i1) }
-    craftedB.foreach { case (i1, _, _) =>
-      java.nio.file.Files.write(activeB.toPath, i1) }
-    val feeds = Seq(feedA.getPath, feedB.getPath)
+    val crafted = Seq(craft(0, feedA, "mysql-bin.000500"),
+      craft(1, feedB, "mysql-bin.000600"))
+    crafted.foreach(_._1.foreach(_.writeFirst()))
     val batch0 = new Redelivery(spark, feeds)
     def applyBatch(batch: DataFrame, id: Long): Unit = {
       batch0.record(batch, id)
-      ViewMaintenance.applyIdempotent(
-        batch.filter(col("event_type") === "WriteRowsEventV2")
-          .select(explode(col("row_images")).as("img"))
-          .select(element_at(col("img"), 1).cast("long").as("k")),
-        state, id)
+      ViewMaintenance.applyIdempotent(writtenKeys(batch), state, id)
     }
     def drain(): Unit =
       drainBinlog(spark, feeds, ckpt, tail = true)(applyBatch)
@@ -1223,48 +943,33 @@ object LifecycleQueries {
     // retention on BOTH shards: every consumed closed file vanishes —
     // each listing shrinks to just its active file, which shifts every
     // index under any index-keyed offset on either source
-    def purge(feed: java.io.File, active: java.io.File,
-        crafted: Option[_]): Unit = {
-      Option(feed.listFiles()).getOrElse(Array.empty[java.io.File])
-        .filter(f => f.isFile && !f.getName.startsWith(".") &&
-          f.getName != active.getName)
+    def listed(feed: String): Array[java.io.File] =
+      Option(new java.io.File(feed).listFiles()).getOrElse(Array.empty[java.io.File])
+        .filter(f => f.isFile && !f.getName.startsWith("."))
+    feeds.zip(crafted).foreach { case (feed, (active, _)) =>
+      listed(feed).filter(f => !active.exists(_.file.getName == f.getName))
         .foreach(f => require(f.delete(), s"purge failed: $f"))
-      val left = Option(feed.listFiles()).getOrElse(Array.empty[java.io.File])
-        .count(f => f.isFile && !f.getName.startsWith("."))
-      require(left == (if (crafted.isDefined) 1 else 0),
+      val left = listed(feed).length
+      require(left == active.size,
         s"the purge must leave only the active file in $feed, got $left")
     }
-    purge(feedA, activeA, craftedA)
-    purge(feedB, activeB, craftedB)
     // BOTH shards grow past the purge
-    craftedA.foreach { case (_, i2, _) =>
-      java.nio.file.Files.write(activeA.toPath, i2,
-        java.nio.file.StandardOpenOption.APPEND) }
-    craftedB.foreach { case (_, i2, _) =>
-      java.nio.file.Files.write(activeB.toPath, i2,
-        java.nio.file.StandardOpenOption.APPEND) }
+    crafted.foreach(_._1.foreach(_.append()))
     drain()
     // per-source lag: one row per shard, paired in union plan order —
     // a drained consumer has no consumable lag anywhere, and held-back
     // bytes appear exactly on the shards with a torn-forever class
-    val lags = graft.sources.BinlogTailOps.lagMetricsUnion(
-      spark, Seq(feedA.getPath, feedB.getPath), ckpt)
-    lags.zip(Seq(craftedA, craftedB)).zipWithIndex.foreach {
-      case ((lag, crafted), shard) =>
+    val lags = graft.sources.BinlogTailOps.lagMetricsUnion(spark, feeds, ckpt)
+    lags.zip(crafted).zipWithIndex.foreach {
+      case ((lag, (active, hasTorn)), shard) =>
         require(lag.committedLagBytes == 0L,
           s"drained shard $shard must have zero consumable lag: $lag")
-        val torn = crafted.exists(_._3)
+        val torn = active.isDefined && hasTorn
         require((lag.heldBackBytes > 0L) == torn,
           s"shard $shard held-back bytes must track its torn-forever " +
             s"class (torn=$torn): $lag")
     }
-    ViewMaintenance.readState(spark, state, "k BIGINT, batch_id BIGINT")
-      .withColumn("shard", (col("k") % 2).cast("long"))
-      .withColumn("src", when(col("k") % 131 === 0, "live_committed")
-        .when(col("k") % 131 === 1, "live_appended").otherwise("bulk"))
-      .groupBy("shard", "src")
-      .agg(count(lit(1)).as("n_rows"), sum(col("k")).as("k_sum"))
-      .orderBy("shard", "src")
+    stateCensus(spark, state, Seq("live_committed", "live_appended"), shards = 2)
   }
 
   // cdc71 — BINLOG RETENTION: THE TAIL SURVIVES PURGES (the count-based
@@ -1290,75 +995,36 @@ object LifecycleQueries {
   // stream-breaking event.
   def cdc71TailPurge(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.ViewMaintenance
-    val root = tmpFixtureDir("graft_cdc71_", dir)
-    root.mkdirs()
-    val feed = new java.io.File(root, "feed")
-    val state = new java.io.File(root, "state").getPath
-    val ckpt = new java.io.File(root, "ckpt").getPath
-    val base = fixtureBase(spark, dir)
-      .filter(col("event_type").isin("purchase", "click", "view"))
-      .select(col("event_id").as("k"),
-        concat(lit("u"), col("user_id")).as("v"))
-    graft.ingest.BinlogSink.writeChanges(
-      base.filter(col("k") % 131 >= 4)
-        .select(lit(1).as("op"), col("k"), col("v"))
-        .repartitionByRange(3, col("k")),
-      feed.getPath, rowsPerTxn = 50)
-    val bc71 = boundedClasses(base, "cdc71", Seq(0L, 1L, 2L, 3L))
-    val (ta, tb, tc, td) = (bc71(0L), bc71(1L), bc71(2L), bc71(3L))
+    val (_, feed, state, ckpt) = streamDirs("graft_cdc71_", dir)
+    val base = tailBase(spark, dir)
+    writeBulk(base, live = 4, files = 3, feed)
+    val cls = boundedClasses(base, "cdc71", 0L to 3L)
+    val Seq(a, b, c, d) = txns(cls, 801L, 8001L)
     val activeFile = new java.io.File(feed, "mysql-bin.000500")
-    val appendTail: Option[Array[Byte]] =
-      if (ta.isEmpty && tb.isEmpty && tc.isEmpty && td.isEmpty) None
-      else {
-        val w = new TailFeedWriter(Seq(ta, tb, tc, td))
-        val (f, fdeOff) = w.newFile()
-        var cleanCut = fdeOff
-        if (ta.nonEmpty) cleanCut = w.txn(f, 801L, 8001L, ta)._2
-        val afterBRows =
-          if (tb.nonEmpty) w.txn(f, 802L, 8002L, tb)._1 else cleanCut
-        if (tc.nonEmpty) w.txn(f, 803L, 8003L, tc)
-        if (td.nonEmpty) w.txn(f, 804L, 8004L, td, commit = false) // torn
-        val all = f.bytes
-        val cut = (if (tb.nonEmpty) math.min(afterBRows + 7, all.length.toLong)
-          else cleanCut).toInt
-        java.nio.file.Files.write(activeFile.toPath, all.slice(0, cut))
-        Some(all.slice(cut, all.length))
-      }
-    val batch0 = new Redelivery(spark, Seq(feed.getPath))
+    val active = new TailFeedWriter(cls).activeFile(activeFile,
+      Seq(a), Some(b), Seq(c, d.copy(commit = false)))
+    active.foreach(_.writeFirst())
+    val batch0 = new Redelivery(spark, Seq(feed))
     def applyBatch(batch: DataFrame, id: Long): Unit = {
       batch0.record(batch, id)
-      ViewMaintenance.applyIdempotent(
-        batch.filter(col("event_type") === "WriteRowsEventV2")
-          .select(explode(col("row_images")).as("img"))
-          .select(element_at(col("img"), 1).cast("long").as("k")),
-        state, id)
+      ViewMaintenance.applyIdempotent(writtenKeys(batch), state, id)
     }
-    drainBinlog(spark, Seq(feed.getPath), ckpt, tail = true)(applyBatch)
+    drainBinlog(spark, Seq(feed), ckpt, tail = true)(applyBatch)
     // crash-after-commit redelivery happens BEFORE retention purges
     batch0.replay()(applyBatch)
     // retention: every consumed closed file vanishes; only the active
     // file survives — every index-based offset just shifted
-    Option(feed.listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isFile && !f.getName.startsWith(".") &&
-        f.getName != activeFile.getName)
+    def listed(): Array[java.io.File] =
+      Option(new java.io.File(feed).listFiles()).getOrElse(Array.empty[java.io.File])
+        .filter(f => f.isFile && !f.getName.startsWith("."))
+    listed().filter(_.getName != activeFile.getName)
       .foreach(f => require(f.delete(), s"purge failed: $f"))
-    if (appendTail.isDefined) {
-      val left = Option(feed.listFiles()).getOrElse(Array.empty[java.io.File])
-        .count(f => f.isFile && !f.getName.startsWith("."))
-      require(left == 1, s"the purge must leave only the active file, $left")
-    }
-    appendTail.foreach { tail =>
-      java.nio.file.Files.write(activeFile.toPath, tail,
-        java.nio.file.StandardOpenOption.APPEND)
-    }
-    drainBinlog(spark, Seq(feed.getPath), ckpt, tail = true)(applyBatch)
-    ViewMaintenance.readState(spark, state, "k BIGINT, batch_id BIGINT")
-      .withColumn("src", when(col("k") % 131 === 0, "txn_a")
-        .when(col("k") % 131 === 1, "txn_b")
-        .when(col("k") % 131 === 2, "txn_c").otherwise("bulk"))
-      .groupBy("src")
-      .agg(count(lit(1)).as("n_rows"), sum(col("k")).as("k_sum"))
-      .orderBy("src")
+    if (active.isDefined)
+      require(listed().length == 1,
+        s"the purge must leave only the active file, ${listed().length}")
+    active.foreach(_.append())
+    drainBinlog(spark, Seq(feed), ckpt, tail = true)(applyBatch)
+    stateCensus(spark, state, Seq("txn_a", "txn_b", "txn_c"))
   }
 
   val cdc71Oracle: String =
@@ -1399,90 +1065,38 @@ object LifecycleQueries {
   // no extra shuffle before the apply.
   def cdc69ShardedUnion(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.ViewMaintenance
-    val root = tmpFixtureDir("graft_cdc69_", dir)
-    root.mkdirs()
-    val feedA = new java.io.File(root, "feed_a")
-    val feedB = new java.io.File(root, "feed_b")
-    val state = new java.io.File(root, "state").getPath
-    val ckpt = new java.io.File(root, "ckpt").getPath
-    val base = fixtureBase(spark, dir)
-      .filter(col("event_type").isin("purchase", "click", "view"))
-      .select(col("event_id").as("k"),
-        concat(lit("u"), col("user_id")).as("v"))
+    val (root, _, state, ckpt) = streamDirs("graft_cdc69_", dir)
+    val feeds @ Seq(feedA, feedB) =
+      Seq("feed_a", "feed_b").map(new java.io.File(root, _).getPath)
+    val base = tailBase(spark, dir)
+    def shard(s: Long): DataFrame = base.filter(col("k") % 2 === s)
     // per-shard closed bulk, disjoint file numbering
-    graft.ingest.BinlogSink.writeChanges(
-      base.filter(col("k") % 2 === 0 && col("k") % 131 >= 3)
-        .select(lit(1).as("op"), col("k"), col("v"))
-        .repartitionByRange(2, col("k")),
-      feedA.getPath, rowsPerTxn = 50, fileSeqStart = 1)
-    graft.ingest.BinlogSink.writeChanges(
-      base.filter(col("k") % 2 === 1 && col("k") % 131 >= 3)
-        .select(lit(1).as("op"), col("k"), col("v"))
-        .repartitionByRange(2, col("k")),
-      feedB.getPath, rowsPerTxn = 50, fileSeqStart = 101)
-    // one active file per shard: (installment 1, append) or None when
-    // the shard's live classes are all empty; each shard writes under
-    // its own server uuid
-    def craft(shard: Long): Option[(Array[Byte], Array[Byte])] = {
-      val shardBase = base.filter(col("k") % 2 === shard)
-      val bc = boundedClasses(shardBase, s"cdc69/$shard", Seq(0L, 1L, 2L))
-      val (ta, tb, tc) = (bc(0L), bc(1L), bc(2L))
-      if (ta.isEmpty && tb.isEmpty && tc.isEmpty) None
-      else {
-        val w = new TailFeedWriter(Seq(ta, tb, tc),
-          sid = (1 to 16).map(b => (b + 16 * shard).toByte).toArray)
-        val (f, fdeOff) = w.newFile()
-        var cleanCut = fdeOff
-        if (ta.nonEmpty) cleanCut = w.txn(f, 801L + shard, 8001L + shard, ta)._2
-        val afterBRows =
-          if (tb.nonEmpty) w.txn(f, 811L + shard, 8011L + shard, tb)._1
-          else cleanCut
-        if (tc.nonEmpty)
-          w.txn(f, 821L + shard, 8021L + shard, tc, commit = false) // torn
-        val all = f.bytes
-        val cut = (if (tb.nonEmpty) math.min(afterBRows + 7, all.length.toLong)
-          else cleanCut).toInt
-        Some((all.slice(0, cut), all.slice(cut, all.length)))
-      }
+    writeBulk(shard(0), live = 3, files = 2, feedA, fileSeqStart = 1)
+    writeBulk(shard(1), live = 3, files = 2, feedB, fileSeqStart = 101)
+    // one active file per shard, each under its own server uuid
+    def craft(s: Long, feed: String, name: String): Option[Installments] = {
+      val cls = boundedClasses(shard(s), s"cdc69/$s", 0L to 2L)
+      val Seq(a, b, c) = txns(cls, 801L + s, 8001L + s, step = 10L)
+      new TailFeedWriter(cls, serverSid(16 * s.toInt)).activeFile(
+        new java.io.File(feed, name), Seq(a), Some(b), Seq(c.copy(commit = false)))
     }
-    val craftedA = craft(0)
-    val craftedB = craft(1)
-    val activeA = new java.io.File(feedA, "mysql-bin.000500")
-    val activeB = new java.io.File(feedB, "mysql-bin.000600")
-    craftedA.foreach { case (i1, _) =>
-      java.nio.file.Files.write(activeA.toPath, i1) }
-    craftedB.foreach { case (i1, _) =>
-      java.nio.file.Files.write(activeB.toPath, i1) }
-    val feeds = Seq(feedA.getPath, feedB.getPath)
+    val active = craft(0, feedA, "mysql-bin.000500") ++
+      craft(1, feedB, "mysql-bin.000600")
+    active.foreach(_.writeFirst())
     val batch0 = new Redelivery(spark, feeds)
     def applyBatch(batch: DataFrame, id: Long): Unit = {
       batch0.record(batch, id)
-      ViewMaintenance.applyIdempotent(
-        batch.filter(col("event_type") === "WriteRowsEventV2")
-          .select(explode(col("row_images")).as("img"))
-          .select(element_at(col("img"), 1).cast("long").as("k")),
-        state, id)
+      ViewMaintenance.applyIdempotent(writtenKeys(batch), state, id)
     }
     def drain(): Unit = drainBinlog(spark, feeds, ckpt, tail = true)(applyBatch)
     drain()
     // BOTH shards grow between the runs
-    craftedA.foreach { case (_, i2) =>
-      java.nio.file.Files.write(activeA.toPath, i2,
-        java.nio.file.StandardOpenOption.APPEND) }
-    craftedB.foreach { case (_, i2) =>
-      java.nio.file.Files.write(activeB.toPath, i2,
-        java.nio.file.StandardOpenOption.APPEND) }
+    active.foreach(_.append())
     drain()
     // injected batch-0 redelivery: recorded names route back to their
     // shard's directory (disjoint numbering makes this unambiguous)
     batch0.replay()(applyBatch)
-    ViewMaintenance.readState(spark, state, "k BIGINT, batch_id BIGINT")
-      .withColumn("shard", (col("k") % 2).cast("long"))
-      .withColumn("src", when(col("k") % 131 === 0, "live_committed")
-        .when(col("k") % 131 === 1, "live_appended").otherwise("bulk"))
-      .groupBy("shard", "src")
-      .agg(count(lit(1)).as("n_rows"), sum(col("k")).as("k_sum"))
-      .orderBy("shard", "src")
+    stateCensus(spark, state, Seq("live_committed", "live_appended"), shards = 2)
   }
 
   val cdc69Oracle: String =
@@ -1521,72 +1135,32 @@ object LifecycleQueries {
   // dropped installment loses B — hash mismatches either way.
   def cdc68CheckpointUpgrade(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.ViewMaintenance
-    val root = tmpFixtureDir("graft_cdc68_", dir)
-    root.mkdirs()
-    val feed = new java.io.File(root, "feed")
-    val state = new java.io.File(root, "state").getPath
-    val ckpt = new java.io.File(root, "ckpt").getPath
-    val base = fixtureBase(spark, dir)
-      .filter(col("event_type").isin("purchase", "click", "view"))
-      .select(col("event_id").as("k"),
-        concat(lit("u"), col("user_id")).as("v"))
-    graft.ingest.BinlogSink.writeChanges(
-      base.filter(col("k") % 131 >= 3)
-        .select(lit(1).as("op"), col("k"), col("v"))
-        .repartitionByRange(3, col("k")),
-      feed.getPath, rowsPerTxn = 50)
-    val bc68 = boundedClasses(base, "cdc68", Seq(0L, 1L, 2L))
-    val (ta, tb, tc) = (bc68(0L), bc68(1L), bc68(2L))
-    val activeFile = new java.io.File(feed, "mysql-bin.000500")
-    // (installment for run 2: A committed + B torn; append for run 3:
-    // B's completion + C torn forever)
-    val crafted: Option[(Array[Byte], Array[Byte])] =
-      if (ta.isEmpty && tb.isEmpty && tc.isEmpty) None
-      else {
-        val w = new TailFeedWriter(Seq(ta, tb, tc))
-        val (f, fdeOff) = w.newFile()
-        var cleanCut = fdeOff
-        if (ta.nonEmpty) cleanCut = w.txn(f, 801L, 8001L, ta)._2
-        val afterBRows =
-          if (tb.nonEmpty) w.txn(f, 802L, 8002L, tb)._1 else cleanCut
-        if (tc.nonEmpty) w.txn(f, 803L, 8003L, tc, commit = false) // torn
-        val all = f.bytes
-        val cut = (if (tb.nonEmpty) math.min(afterBRows + 7, all.length.toLong)
-          else cleanCut).toInt
-        Some((all.slice(0, cut), all.slice(cut, all.length)))
-      }
-    val batch0 = new Redelivery(spark, Seq(feed.getPath))
+    val (_, feed, state, ckpt) = streamDirs("graft_cdc68_", dir)
+    val base = tailBase(spark, dir)
+    writeBulk(base, live = 3, files = 3, feed)
+    val cls = boundedClasses(base, "cdc68", 0L to 2L)
+    val Seq(a, b, c) = txns(cls, 801L, 8001L)
+    val active = new TailFeedWriter(cls).activeFile(
+      new java.io.File(feed, "mysql-bin.000500"),
+      Seq(a), Some(b), Seq(c.copy(commit = false)))
+    val batch0 = new Redelivery(spark, Seq(feed))
     def applyBatch(batch: DataFrame, id: Long): Unit = {
       batch0.record(batch, id)
-      ViewMaintenance.applyIdempotent(
-        batch.filter(col("event_type") === "WriteRowsEventV2")
-          .select(explode(col("row_images")).as("img"))
-          .select(element_at(col("img"), 1).cast("long").as("k")),
-        state, id)
+      ViewMaintenance.applyIdempotent(writtenKeys(batch), state, id)
     }
     // run 1: the EXISTING deployment — count-based source, closed bulk
-    drainBinlog(spark, Seq(feed.getPath), ckpt)(applyBatch)
+    drainBinlog(spark, Seq(feed), ckpt)(applyBatch)
     // the active file appears; the deployment upgrades IN PLACE
-    crafted.foreach { case (inst1, _) =>
-      java.nio.file.Files.write(activeFile.toPath, inst1)
-    }
-    def drainTail(): Unit = drainBinlog(spark, Seq(feed.getPath), ckpt, tail = true)(applyBatch)
+    active.foreach(_.writeFirst())
+    def drainTail(): Unit = drainBinlog(spark, Seq(feed), ckpt, tail = true)(applyBatch)
     drainTail()
-    crafted.foreach { case (_, inst2) =>
-      java.nio.file.Files.write(activeFile.toPath, inst2,
-        java.nio.file.StandardOpenOption.APPEND)
-    }
+    active.foreach(_.append())
     drainTail()
     // injected crash-after-commit redelivery of batch 0 (a bulk file
     // consumed under the OLD source — the upgrade must not disturb its
     // partition's absorbability)
     batch0.replay()(applyBatch)
-    ViewMaintenance.readState(spark, state, "k BIGINT, batch_id BIGINT")
-      .withColumn("src", when(col("k") % 131 === 0, "txn_a")
-        .when(col("k") % 131 === 1, "txn_b").otherwise("bulk"))
-      .groupBy("src")
-      .agg(count(lit(1)).as("n_rows"), sum(col("k")).as("k_sum"))
-      .orderBy("src")
+    stateCensus(spark, state, Seq("txn_a", "txn_b"))
   }
 
   val cdc68Oracle: String =
@@ -1624,58 +1198,26 @@ object LifecycleQueries {
   // driver-side, callable while the stream runs.
   def cdc67TailLag(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.ViewMaintenance
-    val root = tmpFixtureDir("graft_cdc67_", dir)
-    root.mkdirs()
-    val feed = new java.io.File(root, "feed")
-    val state = new java.io.File(root, "state").getPath
-    val ckpt = new java.io.File(root, "ckpt").getPath
-    val base = fixtureBase(spark, dir)
-      .filter(col("event_type").isin("purchase", "click", "view"))
-      .select(col("event_id").as("k"),
-        concat(lit("u"), col("user_id")).as("v"))
-    graft.ingest.BinlogSink.writeChanges(
-      base.filter(col("k") % 131 >= 4)
-        .select(lit(1).as("op"), col("k"), col("v"))
-        .repartitionByRange(3, col("k")),
-      feed.getPath, rowsPerTxn = 50)
-    val bc67 = boundedClasses(base, "cdc67", Seq(0L, 1L, 2L, 3L))
-    val (ta, tb, tc, td) = (bc67(0L), bc67(1L), bc67(2L), bc67(3L))
-    val activeFile = new java.io.File(feed, "mysql-bin.000500")
-    val appendTail: Option[Array[Byte]] =
-      if (ta.isEmpty && tb.isEmpty && tc.isEmpty && td.isEmpty) None
-      else {
-        val w = new TailFeedWriter(Seq(ta, tb, tc, td))
-        val (f, fdeOff) = w.newFile()
-        var cleanCut = fdeOff
-        if (ta.nonEmpty) cleanCut = w.txn(f, 801L, 8001L, ta)._2
-        val afterBRows =
-          if (tb.nonEmpty) w.txn(f, 802L, 8002L, tb)._1 else cleanCut
-        if (tc.nonEmpty) w.txn(f, 803L, 8003L, tc)
-        if (td.nonEmpty) w.txn(f, 804L, 8004L, td, commit = false) // torn
-        val all = f.bytes
-        val cut = (if (tb.nonEmpty) math.min(afterBRows + 7, all.length.toLong)
-          else cleanCut).toInt
-        java.nio.file.Files.write(activeFile.toPath, all.slice(0, cut))
-        Some(all.slice(cut, all.length))
-      }
+    val (_, feed, state, ckpt) = streamDirs("graft_cdc67_", dir)
+    val base = tailBase(spark, dir)
+    writeBulk(base, live = 4, files = 3, feed)
+    val cls = boundedClasses(base, "cdc67", 0L to 3L)
+    val Seq(a, b, c, d) = txns(cls, 801L, 8001L)
+    val active = new TailFeedWriter(cls).activeFile(
+      new java.io.File(feed, "mysql-bin.000500"),
+      Seq(a), Some(b), Seq(c, d.copy(commit = false)))
+    active.foreach(_.writeFirst())
     def applyBatch(batch: DataFrame, id: Long): Unit =
-      ViewMaintenance.applyIdempotent(
-        batch.filter(col("event_type") === "WriteRowsEventV2")
-          .select(explode(col("row_images")).as("img"))
-          .select(element_at(col("img"), 1).cast("long").as("k")),
-        state, id)
-    def drainTail(): Unit = drainBinlog(spark, Seq(feed.getPath), ckpt, tail = true)(applyBatch)
+      ViewMaintenance.applyIdempotent(writtenKeys(batch), state, id)
+    def drainTail(): Unit = drainBinlog(spark, Seq(feed), ckpt, tail = true)(applyBatch)
     drainTail()
-    appendTail.foreach { tail =>
-      java.nio.file.Files.write(activeFile.toPath, tail,
-        java.nio.file.StandardOpenOption.APPEND)
-    }
+    active.foreach(_.append())
     drainTail()
     // the observability surface under test
-    val lag = graft.sources.BinlogTailOps.lagMetrics(spark, feed.getPath, ckpt)
+    val lag = graft.sources.BinlogTailOps.lagMetrics(spark, feed, ckpt)
     require(lag.committedLagBytes == 0L,
       s"a drained consumer must have zero consumable lag, got $lag")
-    require(appendTail.isEmpty || lag.heldBackBytes > 0L == td.nonEmpty,
+    require(active.isEmpty || lag.heldBackBytes > 0L == cls(3).nonEmpty,
       s"held-back bytes must track the torn-forever class exactly: $lag")
     // decode the held tail from the frontier the metric exposes: these
     // rows were never applied — together with the state they must
@@ -1684,21 +1226,12 @@ object LifecycleQueries {
       if (lag.frontierFile.isEmpty || lag.heldBackBytes == 0L)
         spark.emptyDataFrame.select(lit(0L).as("k")).limit(0)
       else
-        spark.read.format("binlog")
-          .load(s"${feed.getPath}/${lag.frontierFile}")
-          .filter(col("event_index") >= lag.frontierIdx &&
-            col("event_type") === "WriteRowsEventV2")
-          .select(explode(col("row_images")).as("img"))
-          .select(element_at(col("img"), 1).cast("long").as("k"))
+        writtenKeys(spark.read.format("binlog")
+          .load(s"$feed/${lag.frontierFile}")
+          .filter(col("event_index") >= lag.frontierIdx))
     val served = ViewMaintenance.readState(spark, state, "k BIGINT, batch_id BIGINT")
-      .select(col("k"),
-        when(col("k") % 131 === 0, "txn_a")
-          .when(col("k") % 131 === 1, "txn_b")
-          .when(col("k") % 131 === 2, "txn_c").otherwise("bulk").as("src"))
-    served.unionByName(held.select(col("k"), lit("held_back").as("src")))
-      .groupBy("src")
-      .agg(count(lit(1)).as("n_rows"), sum(col("k")).as("k_sum"))
-      .orderBy("src")
+      .select(col("k"), classLabel(Seq("txn_a", "txn_b", "txn_c")).as("src"))
+    census(served.unionByName(held.select(col("k"), lit("held_back").as("src"))))
   }
 
   val cdc67Oracle: String =
@@ -1738,66 +1271,30 @@ object LifecycleQueries {
   // the register-max fold.
   def cdc70GtidDurable(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.ViewMaintenance
-    val root = tmpFixtureDir("graft_cdc70_", dir)
-    root.mkdirs()
-    val feed = new java.io.File(root, "feed")
-    val state = new java.io.File(root, "state").getPath
+    val (root, feed, state, ckpt) = streamDirs("graft_cdc70_", dir)
     val gtidState = new java.io.File(root, "gtid_state").getPath
-    val ckpt = new java.io.File(root, "ckpt").getPath
-    val base = fixtureBase(spark, dir)
-      .filter(col("event_type").isin("purchase", "click", "view"))
-      .select(col("event_id").as("k"),
-        concat(lit("u"), col("user_id")).as("v"))
-    graft.ingest.BinlogSink.writeChanges(
-      base.filter(col("k") % 131 >= 4)
-        .select(lit(1).as("op"), col("k"), col("v"))
-        .repartitionByRange(3, col("k")),
-      feed.getPath, rowsPerTxn = 50)
-    val bc70 = boundedClasses(base, "cdc70", Seq(0L, 1L, 2L, 3L))
-    val (tp, tq, tr, ts) = (bc70(0L), bc70(1L), bc70(2L), bc70(3L))
-    val sidA = (33 to 48).map(_.toByte).toArray
-    val uuidA = {
-      val h = sidA.map(b => f"${b & 0xff}%02x").mkString
-      s"${h.substring(0, 8)}-${h.substring(8, 12)}-${h.substring(12, 16)}-" +
-        s"${h.substring(16, 20)}-${h.substring(20)}"
-    }
+    val base = tailBase(spark, dir)
+    writeBulk(base, live = 4, files = 3, feed)
+    val cls = boundedClasses(base, "cdc70", 0L to 3L)
+    val w = new TailFeedWriter(cls, serverSid(32))
+    val crafted = w.failoverPair(9001L, 17001L)
     val failoverSeq = 800L
-    val crafted: Option[(Array[Byte], Array[Byte])] =
-      if (tp.isEmpty && tq.isEmpty && tr.isEmpty && ts.isEmpty) None
-      else {
-        val w = new TailFeedWriter(Seq(tp, tq, tr, ts), sid = sidA)
-        val (fA, _) = w.newFile()
-        if (tp.nonEmpty) w.txn(fA, 9001L, 17001L, tp)
-        if (tq.nonEmpty) w.txn(fA, 9002L, 17002L, tq)
-        val (fB, _) = w.newFile()
-        if (tq.nonEmpty) w.txn(fB, 9002L, 17002L, tq, perEvent = 50) // overlap
-        if (tr.nonEmpty) w.txn(fB, 9003L, 17003L, tr)
-        if (ts.nonEmpty) w.txn(fB, 9004L, 17004L, ts, commit = false)
-        Some((fA.bytes, fB.bytes))
-      }
-    crafted.foreach { case (bytesA, _) =>
-      java.nio.file.Files.write(
-        new java.io.File(feed, "mysql-bin.000500").toPath, bytesA)
-    }
+    crafted.foreach(p => writeFeedFile(feed, "mysql-bin.000500", p._1))
     val gno = substring_index(col("gtid_next"), ":", -1).cast("long")
     // the recovered failover mark: read at run-2 start from the SET
     // STATE, not from any in-memory variable (None before failover)
     var recoveredMark: Option[Long] = None
-    val batch0 = new Redelivery(spark, Seq(feed.getPath))
+    val batch0 = new Redelivery(spark, Seq(feed))
     def applyBatch(batch: DataFrame, id: Long): Unit = {
       batch0.record(batch, id)
       val rows = batch.filter(col("event_type") === "WriteRowsEventV2")
         .localCheckpoint(true)
       val reServed = recoveredMark match {
         case Some(g) => col("file_seq") >= failoverSeq &&
-          col("gtid_next").startsWith(uuidA + ":") && gno <= g
+          col("gtid_next").startsWith(w.uuid + ":") && gno <= g
         case None => lit(false)
       }
-      ViewMaintenance.applyIdempotent(
-        rows.filter(!reServed)
-          .select(explode(col("row_images")).as("img"))
-          .select(element_at(col("img"), 1).cast("long").as("k")),
-        state, id)
+      ViewMaintenance.applyIdempotent(imageKeys(rows.filter(!reServed)), state, id)
       // the DURABLE executed set: per-sid max gno this batch, written
       // exactly-once next to the data (the idempotent-maxima fold class)
       ViewMaintenance.applyIdempotent(
@@ -1807,31 +1304,22 @@ object LifecycleQueries {
           .groupBy("sid").agg(max(col("gno")).as("gno")),
         gtidState, id)
     }
-    def drainTail(): Unit = drainBinlog(spark, Seq(feed.getPath), ckpt, tail = true)(applyBatch)
+    def drainTail(): Unit = drainBinlog(spark, Seq(feed), ckpt, tail = true)(applyBatch)
     // run 1: server A; the process then STOPS (nothing survives in
     // memory — recoveredMark is still None)
     drainTail()
     // failover: the replica's file arrives; the restarted consumer
     // recovers its executed set FROM THE STATE before subscribing
-    crafted.foreach { case (_, bytesB) =>
-      java.nio.file.Files.write(
-        new java.io.File(feed, "mysql-bin.000800").toPath, bytesB)
-    }
+    crafted.foreach(p => writeFeedFile(feed, "mysql-bin.000800", p._2))
     val markRow = ViewMaintenance.readState(spark, gtidState,
         "sid STRING, gno BIGINT, batch_id BIGINT")
-      .filter(col("sid") === uuidA)
+      .filter(col("sid") === w.uuid)
       .agg(max(col("gno"))).head()
     recoveredMark = if (markRow.isNullAt(0)) None else Some(markRow.getLong(0))
     drainTail()
     // injected batch-0 redelivery: both states must absorb it
     batch0.replay()(applyBatch)
-    ViewMaintenance.readState(spark, state, "k BIGINT, batch_id BIGINT")
-      .withColumn("src", when(col("k") % 131 === 0, "txn_p")
-        .when(col("k") % 131 === 1, "txn_q")
-        .when(col("k") % 131 === 2, "txn_r").otherwise("bulk"))
-      .groupBy("src")
-      .agg(count(lit(1)).as("n_rows"), sum(col("k")).as("k_sum"))
-      .orderBy("src")
+    stateCensus(spark, state, Seq("txn_p", "txn_q", "txn_r"))
   }
 
   // cdc66 — GTID-IDENTITY FAILOVER (the reason GTIDs exist: byte
@@ -1866,95 +1354,46 @@ object LifecycleQueries {
   // executed-set tracking one tiny aggregate per batch.
   def cdc66GtidFailover(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.ViewMaintenance
-    val root = tmpFixtureDir("graft_cdc66_", dir)
-    root.mkdirs()
-    val feed = new java.io.File(root, "feed")
-    val state = new java.io.File(root, "state").getPath
-    val ckpt = new java.io.File(root, "ckpt").getPath
-    val base = fixtureBase(spark, dir)
-      .filter(col("event_type").isin("purchase", "click", "view"))
-      .select(col("event_id").as("k"),
-        concat(lit("u"), col("user_id")).as("v"))
+    val (_, feed, state, ckpt) = streamDirs("graft_cdc66_", dir)
+    val base = tailBase(spark, dir)
     // server A's closed history: the sink's own sid (a SECOND server
     // uuid in the executed set)
-    graft.ingest.BinlogSink.writeChanges(
-      base.filter(col("k") % 131 >= 4)
-        .select(lit(1).as("op"), col("k"), col("v"))
-        .repartitionByRange(3, col("k")),
-      feed.getPath, rowsPerTxn = 50)
-    val (tp, tq, tr, ts) = (boundedClass(base, "cdc66", 0),
-      boundedClass(base, "cdc66", 1), boundedClass(base, "cdc66", 2),
-      boundedClass(base, "cdc66", 3))
-    // server A's uuid: sid bytes 33..48 (distinct from the sink's 1..16)
-    val sidA = (33 to 48).map(_.toByte).toArray
-    val uuidA = {
-      val h = sidA.map(b => f"${b & 0xff}%02x").mkString
-      s"${h.substring(0, 8)}-${h.substring(8, 12)}-${h.substring(12, 16)}-" +
-        s"${h.substring(16, 20)}-${h.substring(20)}"
-    }
+    writeBulk(base, live = 4, files = 3, feed)
+    val cls = boundedClasses(base, "cdc66", 0L to 3L)
+    // server A: sid bytes 33..48, distinct from the sink's 1..16
+    val w = new TailFeedWriter(cls, serverSid(32))
+    val crafted = w.failoverPair(9001L, 17001L)
     val failoverSeq = 800L
-    // the two byte-crafted files: A's last (P, Q @100 rows/event) and
-    // the replica's first (Q again @50 rows/event, R, S torn) — None on
-    // an empty fixture
-    val crafted: Option[(Array[Byte], Array[Byte])] =
-      if (tp.isEmpty && tq.isEmpty && tr.isEmpty && ts.isEmpty) None
-      else {
-        val w = new TailFeedWriter(Seq(tp, tq, tr, ts), sid = sidA)
-        val (fA, _) = w.newFile()
-        if (tp.nonEmpty) w.txn(fA, 9001L, 17001L, tp)
-        if (tq.nonEmpty) w.txn(fA, 9002L, 17002L, tq)
-        val (fB, _) = w.newFile()
-        if (tq.nonEmpty) w.txn(fB, 9002L, 17002L, tq, perEvent = 50) // overlap
-        if (tr.nonEmpty) w.txn(fB, 9003L, 17003L, tr)
-        if (ts.nonEmpty) w.txn(fB, 9004L, 17004L, ts, commit = false)
-        Some((fA.bytes, fB.bytes))
-      }
-    crafted.foreach { case (bytesA, _) =>
-      java.nio.file.Files.write(
-        new java.io.File(feed, "mysql-bin.000500").toPath, bytesA)
-    }
+    crafted.foreach(p => writeFeedFile(feed, "mysql-bin.000500", p._1))
     // the consumer's executed-GTID high-water for A's uuid, tracked per
     // batch while on server A, FROZEN at failover (the recorded mark)
     var executedG = -1L
     var frozen = false
     val gno = substring_index(col("gtid_next"), ":", -1).cast("long")
-    val batch0 = new Redelivery(spark, Seq(feed.getPath))
+    val batch0 = new Redelivery(spark, Seq(feed))
     def applyBatch(batch: DataFrame, id: Long): Unit = {
       batch0.record(batch, id)
       val rows = batch.filter(col("event_type") === "WriteRowsEventV2")
         .localCheckpoint(true) // one decode: the set agg + the apply
       if (!frozen) {
-        val g = rows.filter(col("gtid_next").startsWith(uuidA + ":"))
+        val g = rows.filter(col("gtid_next").startsWith(w.uuid + ":"))
           .agg(max(gno)).head()
         if (!g.isNullAt(0)) executedG = math.max(executedG, g.getLong(0))
       }
       // the failover discard: replica file, A's sid, already executed
       val reServed = col("file_seq") >= failoverSeq &&
-        col("gtid_next").startsWith(uuidA + ":") && gno <= executedG
-      ViewMaintenance.applyIdempotent(
-        rows.filter(!reServed)
-          .select(explode(col("row_images")).as("img"))
-          .select(element_at(col("img"), 1).cast("long").as("k")),
-        state, id)
+        col("gtid_next").startsWith(w.uuid + ":") && gno <= executedG
+      ViewMaintenance.applyIdempotent(imageKeys(rows.filter(!reServed)), state, id)
     }
-    def drainTail(): Unit = drainBinlog(spark, Seq(feed.getPath), ckpt, tail = true)(applyBatch)
+    def drainTail(): Unit = drainBinlog(spark, Seq(feed), ckpt, tail = true)(applyBatch)
     drainTail()
     frozen = true // failover: record the executed set ONCE
-    crafted.foreach { case (_, bytesB) =>
-      java.nio.file.Files.write(
-        new java.io.File(feed, "mysql-bin.000800").toPath, bytesB)
-    }
+    crafted.foreach(p => writeFeedFile(feed, "mysql-bin.000800", p._2))
     drainTail()
     // injected crash-after-commit redelivery of batch 0 (pre-failover —
     // the discard filter must leave it untouched, bit-for-bit)
     batch0.replay()(applyBatch)
-    ViewMaintenance.readState(spark, state, "k BIGINT, batch_id BIGINT")
-      .withColumn("src", when(col("k") % 131 === 0, "txn_p")
-        .when(col("k") % 131 === 1, "txn_q")
-        .when(col("k") % 131 === 2, "txn_r").otherwise("bulk"))
-      .groupBy("src")
-      .agg(count(lit(1)).as("n_rows"), sum(col("k")).as("k_sum"))
-      .orderBy("src")
+    stateCensus(spark, state, Seq("txn_p", "txn_q", "txn_r"))
   }
 
   val cdc66Oracle: String =
@@ -1988,12 +1427,8 @@ object LifecycleQueries {
   // PROVES it, per the r13 verdict.
   def cdc59CompactRestartIvm(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.ViewMaintenance
-    val root = tmpFixtureDir("graft_cdc59_", dir)
-    root.mkdirs()
+    val (root, feed, state, ckpt) = streamDirs("graft_cdc59_", dir)
     val staging = new java.io.File(root, "staging").getPath
-    val feed = new java.io.File(root, "feed").getPath
-    val state = new java.io.File(root, "state").getPath
-    val ckpt = new java.io.File(root, "ckpt").getPath
     val fx = ivmFixture(spark, dir)
     graft.ingest.BinlogSink.writeKeyedStrings(
       fx.aDelta.repartition(4, col("o_orderkey")), staging)
@@ -2039,7 +1474,7 @@ object LifecycleQueries {
   // bulk snapshot never rides the wire at all.
   def cdc60SnapshotCutover(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.ViewMaintenance
-    val (feed, state, ckpt) = streamDirs("graft_cdc60_", dir)
+    val (_, feed, state, ckpt) = streamDirs("graft_cdc60_", dir)
     val base = fixtureBase(spark, dir)
       .filter(col("event_type").isin("purchase", "click", "view"))
       .select(col("event_id").as("k"),
@@ -2140,24 +1575,13 @@ object LifecycleQueries {
   // header walk of the growth per trigger.
   def cdc65TailCutover(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.ViewMaintenance
-    val root = tmpFixtureDir("graft_cdc65_", dir)
-    root.mkdirs()
-    val feed = new java.io.File(root, "feed")
-    val state = new java.io.File(root, "state").getPath
-    val ckpt = new java.io.File(root, "ckpt").getPath
-    val base = fixtureBase(spark, dir)
-      .filter(col("event_type").isin("purchase", "click", "view"))
-      .select(col("event_id").as("k"),
-        concat(lit("u"), col("user_id")).as("v"))
+    val (_, feed, state, ckpt) = streamDirs("graft_cdc65_", dir)
+    val base = tailBase(spark, dir)
     // closed bulk (the table's history): everything but the live classes
-    graft.ingest.BinlogSink.writeChanges(
-      base.filter(col("k") % 131 >= 3)
-        .select(lit(1).as("op"), col("k"), col("v"))
-        .repartitionByRange(4, col("k")),
-      feed.getPath, rowsPerTxn = 50)
+    writeBulk(base, live = 3, files = 4, feed)
     // the recorded snapshot position: median row-event index of the
     // middle closed file (mid-file — no boundary aligns with it)
-    val files = Option(feed.listFiles())
+    val files = Option(new java.io.File(feed).listFiles())
       .getOrElse(Array.empty[java.io.File])
       .filter(f => f.isFile && !f.getName.startsWith("."))
       .map(_.getName).sorted.toSeq
@@ -2165,7 +1589,7 @@ object LifecycleQueries {
       if (files.isEmpty) (0L, -1L)
       else {
         val markFile = files((files.length - 1) / 2)
-        val mi = spark.read.format("binlog").load(s"${feed.getPath}/$markFile")
+        val mi = spark.read.format("binlog").load(s"$feed/$markFile")
           .filter(col("event_type") === "WriteRowsEventV2")
           .agg(min(col("event_index")), max(col("event_index"))).head()
         val seq = graft.ingest.BinlogTextParser.fileSeq(markFile).get
@@ -2184,32 +1608,21 @@ object LifecycleQueries {
     // state₀: the bulk snapshot AS OF the mark
     if (files.nonEmpty)
       ViewMaintenance.applyIdempotent(
-        rows(spark.read.format("binlog").load(feed.getPath))
+        rows(spark.read.format("binlog").load(feed))
           .filter(atOrBeforeMark).select("k", "v"),
         state, -1L)
-    // the LIVE side: one active file, growing between the two drains
-    val (ta, tb, tc) = (boundedClass(base, "cdc65", 0),
-      boundedClass(base, "cdc65", 1), boundedClass(base, "cdc65", 2))
-    val activeFile = new java.io.File(feed, "mysql-bin.000500")
-    val appendTail: Option[Array[Byte]] =
-      if (ta.isEmpty && tb.isEmpty && tc.isEmpty) None
-      else {
-        val w = new TailFeedWriter(Seq(ta, tb, tc))
-        val (f, fdeOff) = w.newFile()
-        var cleanCut = fdeOff
-        if (ta.nonEmpty) cleanCut = w.txn(f, 801L, 8001L, ta)._2
-        // installment 1 ends cleanly after A's commit; the append brings
-        // B (committed) and C (torn forever)
-        if (tb.nonEmpty) w.txn(f, 802L, 8002L, tb)
-        if (tc.nonEmpty) w.txn(f, 803L, 8003L, tc, commit = false)
-        val all = f.bytes
-        val cut = cleanCut.toInt
-        java.nio.file.Files.write(activeFile.toPath, all.slice(0, cut))
-        Some(all.slice(cut, all.length))
-      }
+    // the LIVE side: one active file, growing between the two drains —
+    // installment 1 ends cleanly after A's commit; the append brings B
+    // (committed) and C (torn forever)
+    val cls = boundedClasses(base, "cdc65", 0L to 2L)
+    val Seq(a, b, c) = txns(cls, 801L, 8001L)
+    val active = new TailFeedWriter(cls).activeFile(
+      new java.io.File(feed, "mysql-bin.000500"),
+      Seq(a), None, Seq(b, c.copy(commit = false)))
+    active.foreach(_.writeFirst())
     // the cutover drain: subscribe from the beginning, discard pre-mark
     // positionally; record batch 0 and the straddling batch for replays
-    val redelivery = new Redelivery(spark, Seq(feed.getPath))
+    val redelivery = new Redelivery(spark, Seq(feed))
     var straddleFiles = Seq.empty[String]
     var straddleId = -1L
     def applyBatch(batch: DataFrame, id: Long): Unit = {
@@ -2227,12 +1640,9 @@ object LifecycleQueries {
       ViewMaintenance.applyIdempotent(
         r.filter(!atOrBeforeMark).select("k", "v"), state, id)
     }
-    def drainTail(): Unit = drainBinlog(spark, Seq(feed.getPath), ckpt, tail = true)(applyBatch)
+    def drainTail(): Unit = drainBinlog(spark, Seq(feed), ckpt, tail = true)(applyBatch)
     drainTail()
-    appendTail.foreach { tail =>
-      java.nio.file.Files.write(activeFile.toPath, tail,
-        java.nio.file.StandardOpenOption.APPEND)
-    }
+    active.foreach(_.append())
     drainTail()
     // injected replays: batch 0 (entirely pre-mark — an EMPTY overwrite)
     // and the straddling cutover batch (both whole closed files — the
@@ -2279,12 +1689,10 @@ object LifecycleQueries {
   // feed once.
   def cdc61DemuxLifecycle(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.ViewMaintenance
-    val root = tmpFixtureDir("graft_cdc61_", dir)
-    root.mkdirs()
-    val feed = new java.io.File(root, "feed"); feed.mkdirs()
+    val (root, feed, _, ckpt) = streamDirs("graft_cdc61_", dir)
+    new java.io.File(feed).mkdirs()
     val stateA = new java.io.File(root, "state_ta").getPath
     val stateB = new java.io.File(root, "state_tb").getPath
-    val ckpt = new java.io.File(root, "ckpt").getPath
     val base = fixtureBase(spark, dir)
       .filter(col("event_type").isin("purchase", "click", "view"))
       .select(col("event_id").as("k"), col("user_id"))
@@ -2312,7 +1720,7 @@ object LifecycleQueries {
     stage("st4", tb.filter(col("k") > mid), "tb", 22L, seq = 4)
     val schemaA = "k BIGINT, v STRING, batch_id BIGINT"
     val schemaB = "k BIGINT, x BIGINT, batch_id BIGINT"
-    drainWithRedelivery(spark, feed.getPath, ckpt) { (batch, id) =>
+    drainWithRedelivery(spark, feed, ckpt) { (batch, id) =>
       val b = batch.filter(col("event_type") === "WriteRowsEventV2")
         .select(col("table"), explode(col("row_images")).as("img"))
         .localCheckpoint(true) // the feed is read ONCE per batch
@@ -2371,7 +1779,7 @@ object LifecycleQueries {
   // compaction boundary, or hash mismatch.
   def cdc62SketchCompaction(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.ViewMaintenance
-    val (feed, state, ckpt) = streamDirs("graft_cdc62_", dir)
+    val (_, feed, state, ckpt) = streamDirs("graft_cdc62_", dir)
     val base = fixtureBase(spark, dir)
       .filter(col("event_type").isin("purchase", "click", "view"))
     graft.ingest.BinlogSink.writeKeyedStrings(
@@ -2428,12 +1836,10 @@ object LifecycleQueries {
   // states stay compacted; nothing scales with history.
   def cdc63TailDemux(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.ViewMaintenance
-    val root = tmpFixtureDir("graft_cdc63_", dir)
-    root.mkdirs()
-    val feed = new java.io.File(root, "feed"); feed.mkdirs()
+    val (root, feed, _, ckpt) = streamDirs("graft_cdc63_", dir)
+    new java.io.File(feed).mkdirs()
     val stateA = new java.io.File(root, "state_ta").getPath
     val stateB = new java.io.File(root, "state_tb").getPath
-    val ckpt = new java.io.File(root, "ckpt").getPath
     val base = fixtureBase(spark, dir)
       .filter(col("event_type").isin("purchase", "click", "view"))
       .select(col("event_id").as("k"), col("user_id"))
@@ -2455,82 +1861,26 @@ object LifecycleQueries {
             s"fixture deliver failed: $f")
         }
     }
-    stageClosed("stA", base.filter(closedA)
-      .select(lit(1).as("op"), col("k"),
-        concat(lit("u"), col("user_id")).as("v")), "ta", 21L, seq = 1)
-    stageClosed("stB", base.filter(closedB)
-      .select(lit(1).as("op"), col("k"),
-        (col("user_id") * 3L).as("x")), "tb", 22L, seq = 2)
-    // the ACTIVE file: both tables' transactions interleaved, built
-    // byte-level (bounded classes, cdc56/cdc58's cap discipline)
-    val fixtureCap = 200000
-    def cls(m: Long): Array[org.apache.spark.sql.Row] = {
-      val rows = base.filter(col("k") % 13 === m).orderBy("k")
-        .limit(fixtureCap + 1).collect()
-      require(rows.length <= fixtureCap,
-        s"cdc63 fixture class $m must stay a bounded test vector, got " +
-          s"${rows.length} rows (cap $fixtureCap)")
-      rows
-    }
-    val (ta9, tb10, ta11, tb12) = (cls(9), cls(10), cls(11), cls(12))
-    val activeFile = new java.io.File(feed, "mysql-bin.000500")
-    val appendTail: Option[Array[Byte]] =
-      if (ta9.isEmpty && tb10.isEmpty && ta11.isEmpty && tb12.isEmpty) None
-      else {
-        import graft.ingest.BinlogBinaryWriter._
-        val boundA = math.max(20,
-          (ta9 ++ ta11).map(r => 1 + r.getLong(1).toString.length)
-            .foldLeft(0)(math.max) + 16)
-        val colsA = Seq(ColDef.longlong, ColDef.varchar(boundA))
-        val colsB = Seq(ColDef.longlong, ColDef.longlong)
-        def imgA(r: org.apache.spark.sql.Row): Seq[Option[Array[Byte]]] =
-          Seq(Some(encLongLong(r.getLong(0))),
-            Some(encVarchar("u" + r.getLong(1), boundA)))
-        def imgB(r: org.apache.spark.sql.Row): Seq[Option[Array[Byte]]] =
-          Seq(Some(encLongLong(r.getLong(0))),
-            Some(encLongLong(r.getLong(1) * 3L)))
-        val t0 = 1714564800L
-        val sid = (1 to 16).map(_.toByte).toArray
-        val f = new FileBuilder(checksums = true)
-        var lastRows = f.fde(t0)
-        var cleanCut = lastRows
-        def open(gno: Long): Unit = {
-          f.event(t0, 33, gtidBody(sid, gno))
-          f.event(t0, 2, queryBody("sf", "BEGIN"))
-        }
-        def rowsA(rs: Array[org.apache.spark.sql.Row]): Unit =
-          rs.grouped(100).foreach { b =>
-            f.event(t0, 19, tableMapBody(21L, "sf", "ta", colsA))
-            lastRows = f.event(t0, 30, rowsBody(21L, colsA.size, b.toSeq.map(imgA)))
-          }
-        def rowsB(rs: Array[org.apache.spark.sql.Row]): Unit =
-          rs.grouped(100).foreach { b =>
-            f.event(t0, 19, tableMapBody(22L, "sf", "tb", colsB))
-            lastRows = f.event(t0, 30, rowsBody(22L, colsB.size, b.toSeq.map(imgB)))
-          }
-        // txn A (ta): committed entirely inside installment 1
-        if (ta9.nonEmpty) {
-          open(821L); rowsA(ta9); cleanCut = f.event(t0, 16, xidBody(8201L))
-        }
-        // txn B (tb): rows in installment 1, XID only in the append
-        if (tb10.nonEmpty) { open(822L); rowsB(tb10) }
-        val afterBRows = lastRows
-        if (tb10.nonEmpty) f.event(t0, 16, xidBody(8202L))
-        // txn C (ta): committed, entirely in the append
-        if (ta11.nonEmpty) {
-          open(823L); rowsA(ta11); f.event(t0, 16, xidBody(8203L))
-        }
-        // txn D (tb): torn FOREVER
-        if (tb12.nonEmpty) { open(824L); rowsB(tb12) }
-        val all = f.bytes
-        val cut = (if (tb10.nonEmpty) math.min(afterBRows + 7, all.length.toLong)
-          else cleanCut).toInt
-        java.nio.file.Files.write(activeFile.toPath, all.slice(0, cut))
-        Some(all.slice(cut, all.length))
-      }
+    val ta = base.select(col("k"), concat(lit("u"), col("user_id")).as("v"))
+    val tb = base.select(col("k"), (col("user_id") * 3L).as("x"))
+    stageClosed("stA", ta.filter(closedA).select(lit(1).as("op"), col("k"), col("v")),
+      "ta", 21L, seq = 1)
+    stageClosed("stB", tb.filter(closedB).select(lit(1).as("op"), col("k"), col("x")),
+      "tb", 22L, seq = 2)
+    // the ACTIVE file: both tables' transactions interleaved
+    val Seq(ta9, ta11) = boundedClasses(ta, "cdc63", Seq(9L, 11L), modulus = 13L)
+    val Seq(tb10, tb12) = boundedClasses(tb, "cdc63", Seq(10L, 12L), modulus = 13L)
+    val cls = Seq(ta9, tb10, ta11, tb12)
+    val Seq(a, b, c, d) = txns(cls, 821L, 8201L)
+    def inTa(t: Txn): Txn = t.copy(table = "ta", tableId = 21L)
+    def inTb(t: Txn): Txn = t.copy(table = "tb", tableId = 22L)
+    val active = new TailFeedWriter(cls).activeFile(
+      new java.io.File(feed, "mysql-bin.000500"),
+      Seq(inTa(a)), Some(inTb(b)), Seq(inTa(c), inTb(d).copy(commit = false)))
+    active.foreach(_.writeFirst())
     val schemaA = "k BIGINT, v STRING, batch_id BIGINT"
     val schemaB = "k BIGINT, x BIGINT, batch_id BIGINT"
-    val batch0 = new Redelivery(spark, Seq(feed.getPath))
+    val batch0 = new Redelivery(spark, Seq(feed))
     def applyBatch(batch: DataFrame, id: Long): Unit = {
       batch0.record(batch, id)
       // ONE pass over the batch, N routed exactly-once writes, then the
@@ -2553,12 +1903,9 @@ object LifecycleQueries {
       ViewMaintenance.maybeCompact(spark, stateB, schemaB,
         maxLive = 1, keepLast = 0)(df => df)
     }
-    def drainTail(): Unit = drainBinlog(spark, Seq(feed.getPath), ckpt, tail = true)(applyBatch)
+    def drainTail(): Unit = drainBinlog(spark, Seq(feed), ckpt, tail = true)(applyBatch)
     drainTail()
-    appendTail.foreach { tail =>
-      java.nio.file.Files.write(activeFile.toPath, tail,
-        java.nio.file.StandardOpenOption.APPEND)
-    }
+    active.foreach(_.append())
     drainTail()
     // injected crash-after-commit redelivery of batch 0 (ta's closed
     // file): ta absorbs it as a covered ghost, tb as an empty no-op
@@ -2688,11 +2035,8 @@ object LifecycleQueries {
   private def reproFixtureDrain(spark: SparkSession, dir: String,
       prefix: String): String = {
     import graft.streaming.ViewMaintenance
-    val root = tmpFixtureDir(prefix, dir)
-    root.mkdirs()
-    val feed = new java.io.File(root, "feed"); feed.mkdirs()
-    val state = new java.io.File(root, "state").getPath
-    val ckpt = new java.io.File(root, "ckpt").getPath
+    val (root, feed, state, ckpt) = streamDirs(prefix, dir)
+    new java.io.File(feed).mkdirs()
     val fx = ivmFixture(spark, dir)
     val bPrime = fx.bBase.unionByName(fx.bDelta).localCheckpoint(true)
     // four independent class writes into disjoint staging dirs, under
@@ -2718,7 +2062,7 @@ object LifecycleQueries {
     }: _*)
     ViewMaintenance.applyIdempotent(fx.partials(fx.aBase, fx.bBase), state, -1L)
     ViewMaintenance.applyIdempotent(fx.partials(fx.aBase, fx.bDelta), state, -2L)
-    drainBinlog(spark, Seq(feed.getPath), ckpt) { (batch, id) =>
+    drainBinlog(spark, Seq(feed), ckpt) { (batch, id) =>
       ViewMaintenance.applyIdempotent(
         fx.partials(decodeIvmDelta(batch), bPrime), state, id)
       if (id == 1L) // first base: seeds + batch 0 folded, coverage 0
@@ -2770,15 +2114,10 @@ object LifecycleQueries {
   // the consistent read costs exactly a serving read per table.
   def cdc76ConsistentDemux(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.ViewMaintenance
-    val root = tmpFixtureDir("graft_cdc76_", dir)
-    root.mkdirs()
-    val feed = new java.io.File(root, "feed"); feed.mkdirs()
+    val (root, feed, _, ckpt) = streamDirs("graft_cdc76_", dir)
+    new java.io.File(feed).mkdirs()
     val group = new java.io.File(root, "out").getPath
-    val ckpt = new java.io.File(root, "ckpt").getPath
-    val base = fixtureBase(spark, dir)
-      .filter(col("event_type").isin("purchase", "click", "view"))
-      .select(col("event_id").as("k"),
-        concat(lit("u"), col("user_id").cast("string")).as("v"))
+    val base = tailBase(spark, dir)
     // file 1: ta class 0 (k%4=0) · file 2: tb class 0 (k%4=1) ·
     // file 3: ta class 1 (k%4=2) · file 4: tb class 1 (k%4=3) —
     // two files per trigger pairs each class's ta+tb into ONE batch
@@ -2805,7 +2144,7 @@ object LifecycleQueries {
         }
       }: _*)
     val sch = "k BIGINT, v STRING, batch_id BIGINT"
-    val redelivery = new Redelivery(spark, Seq(feed.getPath))
+    val redelivery = new Redelivery(spark, Seq(feed))
     var lastFiles = Seq.empty[String]
     var maxBatchId = -1L
     def applyBatch(batch: DataFrame, id: Long, publish: Boolean): Unit = {
@@ -2824,7 +2163,7 @@ object LifecycleQueries {
     }
     drain(spark, spark.readStream.format("binlog")
       .option("maxFilesPerTrigger", 2)
-      .load(feed.getPath)
+      .load(feed)
       .writeStream
       // the crash window: batch 1's states land, its publish does NOT
       .foreachBatch((b: DataFrame, id: Long) =>
@@ -2965,14 +2304,10 @@ object LifecycleQueries {
   // row-count one.
   def cdc78FollowCensus(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.ViewMaintenance
-    val root = tmpFixtureDir("graft_cdc78_", dir)
-    root.mkdirs()
-    val feed = new java.io.File(root, "feed"); feed.mkdirs()
+    val (root, feed, _, _) = streamDirs("graft_cdc78_", dir)
+    new java.io.File(feed).mkdirs()
     val out = new java.io.File(root, "out").getPath
-    val base = fixtureBase(spark, dir)
-      .filter(col("event_type").isin("purchase", "click", "view"))
-      .select(col("event_id").as("k"),
-        concat(lit("u"), col("user_id").cast("string")).as("v"))
+    val base = tailBase(spark, dir)
     Seq((1, "ta", 11L, 0L), (2, "tb", 12L, 1L),
         (3, "ta", 11L, 2L), (4, "tb", 12L, 3L)).foreach {
       case (seq, tbl, tid, cls) =>
@@ -2995,7 +2330,7 @@ object LifecycleQueries {
       // follow drains eagerly (AvailableNow to completion); its returned
       // census frame is discarded — the gate re-reads through the three
       // CLI read surfaces below
-      graft.cli.Main.follow(spark, Seq(feed.getPath), out,
+      graft.cli.Main.follow(spark, Seq(feed), out,
         maxFilesPerTrigger = Some(1),
         maxBytesPerTrigger = None)
     }
@@ -3054,14 +2389,10 @@ object LifecycleQueries {
   // guard broken) are all hash mismatches.
   def cdc79FollowGtid(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.ViewMaintenance
-    val root = tmpFixtureDir("graft_cdc79_", dir)
-    root.mkdirs()
-    val feed = new java.io.File(root, "feed"); feed.mkdirs()
+    val (root, feed, _, _) = streamDirs("graft_cdc79_", dir)
+    new java.io.File(feed).mkdirs()
     val out = new java.io.File(root, "out").getPath
-    val base = fixtureBase(spark, dir)
-      .filter(col("event_type").isin("purchase", "click", "view"))
-      .select(col("event_id").as("k"),
-        concat(lit("u"), col("user_id").cast("string")).as("v"))
+    val base = tailBase(spark, dir)
     // bulk: everything outside the three crafted txn classes, gno 1
     val stg = new java.io.File(root, "stage_bulk").getPath
     graft.ingest.BinlogSink.writeChanges(
@@ -3075,46 +2406,33 @@ object LifecycleQueries {
         require(f.renameTo(new java.io.File(feed, f.getName)),
           s"fixture deliver failed: $f")
       }
-    val (tp, tq, tr) = (boundedClass(base, "cdc79", 0),
-      boundedClass(base, "cdc79", 1), boundedClass(base, "cdc79", 2))
-    val w = new TailFeedWriter(Seq(tp, tq, tr))
-    val (fServer, _) = w.newFile()
-    if (tp.nonEmpty) w.txn(fServer, 9001L, 17001L, tp)
-    if (tq.nonEmpty) w.txn(fServer, 9002L, 17002L, tq)
-    java.nio.file.Files.write(
-      new java.io.File(feed, "mysql-bin.000500").toPath, fServer.bytes)
+    val cls = boundedClasses(base, "cdc79", 0L to 2L)
+    val Seq(p, q, _) = txns(cls, 9001L, 17001L)
+    // the replica's own xids for the re-served Q and the new R
+    val Seq(rq, rr) = txns(cls.tail, 9002L, 18002L)
+    val w = new TailFeedWriter(cls)
+    writeFeedFile(feed, "mysql-bin.000500", w.file(p, q))
     graft.streaming.Drains.withDrainPartitions(spark) {
-      graft.cli.Main.follow(spark, Seq(feed.getPath), out,
+      graft.cli.Main.follow(spark, Seq(feed), out,
         maxBytesPerTrigger = Some(1L << 30),
         gtidState = true)
     }
     // the failover: the replica re-serves Q (same gtid, 50-row framing)
     // and appends R under a higher-numbered file
-    val (fReplica, _) = w.newFile()
-    if (tq.nonEmpty) w.txn(fReplica, 9002L, 18002L, tq, perEvent = 50)
-    if (tr.nonEmpty) w.txn(fReplica, 9003L, 18003L, tr)
-    java.nio.file.Files.write(
-      new java.io.File(feed, "mysql-bin.000800").toPath, fReplica.bytes)
+    writeFeedFile(feed, "mysql-bin.000800", w.file(rq.copy(perEvent = 50), rr))
     graft.streaming.Drains.withDrainPartitions(spark) {
-      graft.cli.Main.follow(spark, Seq(feed.getPath), out,
+      graft.cli.Main.follow(spark, Seq(feed), out,
         maxBytesPerTrigger = Some(1L << 30),
         gtidState = true, gtidDiscardFrom = Some(800L))
     }
     // both wire shapes land in sf.delta (the sink and the crafted writer
     // share the default table identity)
     val state = graft.cli.Main.tableStateDir(s"$out/tables", "sf", "delta")
-    ViewMaintenance.readState(spark, state,
+    census(imageKeys(ViewMaintenance.readState(spark, state,
         "event_type STRING, binlog_file STRING, file_seq BIGINT, " +
           "event_index BIGINT, xid BIGINT, " +
-          "row_images ARRAY<ARRAY<STRING>>, batch_id BIGINT")
-      .select(explode(col("row_images")).as("img"))
-      .select(element_at(col("img"), 1).cast("long").as("k"))
-      .withColumn("src", when(col("k") % 131 === 0, "txn_p")
-        .when(col("k") % 131 === 1, "txn_q")
-        .when(col("k") % 131 === 2, "txn_r").otherwise("bulk"))
-      .groupBy("src")
-      .agg(count(lit(1)).as("n_rows"), sum(col("k")).as("k_sum"))
-      .orderBy("src")
+          "row_images ARRAY<ARRAY<STRING>>, batch_id BIGINT"))
+      .withColumn("src", classLabel(Seq("txn_p", "txn_q", "txn_r"))))
   }
 
   val cdc79Oracle: String =

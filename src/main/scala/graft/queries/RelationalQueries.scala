@@ -878,8 +878,7 @@ object RelationalQueries {
   // subsequent co-located join — the nightly-build pattern. Oracle is
   // the plain join: bucketing must change NOTHING but the plan.
   def q46BucketedJoin(spark: SparkSession, dir: String): DataFrame = {
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(6).map(b => f"${b & 0xFF}%02x").mkString
+    val tag = graft.streaming.Drains.fixtureTag(dir)
     val base = new java.io.File(
       System.getProperty("java.io.tmpdir"), s"graft_q46_$tag").getPath
     val li = s"graft_q46_li_$tag"

@@ -440,9 +440,8 @@ object StreamSearchQueries {
   // shared drainWithRedelivery injects the batch-0 replay.
   def s54WireVectorIngest(spark: SparkSession, dir: String): DataFrame = {
     val dim = 64
-    val (feed, state, ckpt) =
+    val (root, feed, state, ckpt) =
       graft.streaming.Drains.streamDirs("graft_s54_", dir)
-    val root = new java.io.File(feed).getParentFile
     val edgesOut = new java.io.File(root, "edges").getPath
     val emb = Tables.embeddings(spark, dir).select("vec_id", "embedding")
     val cent = graft.ops.Similarity.buildCentroids(

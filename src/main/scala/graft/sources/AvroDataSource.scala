@@ -218,7 +218,7 @@ private class AvroScan(path: String, avroSchema: Schema, required: StructType,
       (if (pushed.nonEmpty) s" prunedBy=[${pushed.mkString(", ")}]" else "")
 }
 
-private object AvroScanHelper {
+private[graft] object AvroScanHelper {
   def listAvroFiles(spark: org.apache.spark.sql.SparkSession,
       path: String, allowEmpty: Boolean = false): Seq[org.apache.hadoop.fs.FileStatus] = {
     val conf = spark.sparkContext.hadoopConfiguration

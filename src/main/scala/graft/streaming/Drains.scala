@@ -124,14 +124,19 @@ object Drains {
           }
         }))
 
+  /** The per-`dir` tag of fixture roots and tables: the first 6 bytes of
+    * the path's MD5, in hex. */
+  def fixtureTag(dir: String): String =
+    graft.ingest.BinlogBinaryParser.hex(java.security.MessageDigest
+      .getInstance("MD5").digest(dir.getBytes("UTF-8")).take(6))
+
   /** A per-(prefix, dir) fixture root under java.io.tmpdir, wiped clean on
     * entry. NOT created here: the Hadoop committer behind AvroSink-style
     * writes requires its output path to not exist; text-fixture writers
     * mkdirs(). */
   def tmpFixtureDir(prefix: String, dir: String): java.io.File = {
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(6).map(b => f"${b & 0xFF}%02x").mkString
-    val out = new java.io.File(System.getProperty("java.io.tmpdir"), prefix + tag)
+    val out = new java.io.File(System.getProperty("java.io.tmpdir"),
+      prefix + fixtureTag(dir))
     if (out.exists()) {
       // Files.walk holds directory handles — close it, or every fixture
       // call leaks an fd until GC (dozens of gates per sweep JVM)
@@ -143,12 +148,14 @@ object Drains {
     out
   }
 
-  /** The (feed, state, ckpt) path triple every streaming-IVM gate uses,
-    * under a fresh per-(prefix, dir) fixture root. */
-  def streamDirs(prefix: String, dir: String): (String, String, String) = {
+  /** A fresh per-(prefix, dir) fixture root, created, and the (feed,
+    * state, ckpt) paths under it every streaming gate uses; none of the
+    * three is created. */
+  def streamDirs(prefix: String, dir: String)
+      : (java.io.File, String, String, String) = {
     val root = tmpFixtureDir(prefix, dir)
     root.mkdirs()
-    (new java.io.File(root, "feed").getPath,
+    (root, new java.io.File(root, "feed").getPath,
       new java.io.File(root, "state").getPath,
       new java.io.File(root, "ckpt").getPath)
   }

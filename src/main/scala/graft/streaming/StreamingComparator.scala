@@ -132,10 +132,33 @@ object StreamingComparator {
     * data, and per the batch semantics should be reported MISMATCH_TS
     * out-of-band (see the divergence note on [[compareStreams]]). */
   def partitionUnparseableBinlog(binlogStream: DataFrame): (DataFrame, DataFrame) = {
-    val parseable = coalesce(
-      Normalize.parseRfc3339(col("immediate_commmit_timestamp")),
-      Normalize.parseRfc3339(col("timestamp"))).isNotNull
+    val parseable = coalesce(binlogCommitTimes: _*).isNotNull
     (binlogStream.filter(parseable), binlogStream.filter(!parseable))
+  }
+
+  /** The binlog row's commit time candidates, in order: the immediate
+    * commit timestamp, then the event timestamp (RFC3339 strings). */
+  private def binlogCommitTimes: Seq[Column] = Seq(
+    Normalize.parseRfc3339(col("immediate_commmit_timestamp")),
+    Normalize.parseRfc3339(col("timestamp")))
+
+  /** Both sides renamed and watermarked on their event times — binlog
+    * from its commit time (epoch 0 when neither parses), avro from
+    * `source_timestamp` epoch-millis (E9) — and the `maxSkew` event-time
+    * bound that lets Spark evict join state. */
+  private def timedSides(avroStream: DataFrame, binlogStream: DataFrame,
+      maxSkew: String, watermarkDelay: String): (DataFrame, DataFrame, Column) = {
+    val b = Comparator.renameBinlogSide(binlogStream
+      .withColumn("b_event_time",
+        coalesce(binlogCommitTimes :+ timestamp_seconds(lit(0)): _*))
+      .withWatermark("b_event_time", watermarkDelay), keep = Seq("b_event_time"))
+    val a = Comparator.renameAvroSide(avroStream
+      .withColumn("a_event_time", timestamp_millis(col("source_timestamp")))
+      .withWatermark("a_event_time", watermarkDelay), keep = Seq("a_event_time"))
+    val skew =
+      col("b_event_time") >= col("a_event_time") - expr(s"INTERVAL $maxSkew") &&
+        col("b_event_time") <= col("a_event_time") + expr(s"INTERVAL $maxSkew")
+    (a, b, skew)
   }
 
   def compareStreams(
@@ -144,24 +167,9 @@ object StreamingComparator {
       maxSkew: String = "10 minutes",
       watermarkDelay: String = "1 minute",
       cfg: Comparator.Config = Comparator.Config()): DataFrame = {
-    // event times: binlog side from its (already-normalized) RFC3339
-    // strings; avro side from source_timestamp epoch-millis (E9)
-    val bTimed = binlogStream
-      .withColumn("b_event_time", coalesce(
-        Normalize.parseRfc3339(col("immediate_commmit_timestamp")),
-        Normalize.parseRfc3339(col("timestamp")),
-        timestamp_seconds(lit(0))))
-      .withWatermark("b_event_time", watermarkDelay)
-    val aTimed = avroStream
-      .withColumn("a_event_time", timestamp_millis(col("source_timestamp")))
-      .withWatermark("a_event_time", watermarkDelay)
-
-    val b = Comparator.renameBinlogSide(bTimed, keep = Seq("b_event_time"))
-    val a = Comparator.renameAvroSide(aTimed, keep = Seq("a_event_time"))
+    val (a, b, skew) = timedSides(avroStream, binlogStream, maxSkew, watermarkDelay)
     val cond: Column =
-      a("a_file") === b("b_file") && a("a_pos") === b("b_pos") &&
-        b("b_event_time") >= a("a_event_time") - expr(s"INTERVAL $maxSkew") &&
-        b("b_event_time") <= a("a_event_time") + expr(s"INTERVAL $maxSkew")
+      a("a_file") === b("b_file") && a("a_pos") === b("b_pos") && skew
     Comparator.statusColumns(a.join(b, cond, "left_outer"), cfg)
       .drop("a_event_time", "b_event_time")
   }
@@ -201,24 +209,12 @@ object StreamingComparator {
       watermarkDelay: String = "1 minute",
       cfg: Comparator.Config = Comparator.Config()): DataFrame = {
     val band = new Comparator.ToleranceBand(tolerances)
-    val bTimed = binlogStream
-      .withColumn("b_event_time", coalesce(
-        Normalize.parseRfc3339(col("immediate_commmit_timestamp")),
-        Normalize.parseRfc3339(col("timestamp")),
-        timestamp_seconds(lit(0))))
-      .withWatermark("b_event_time", watermarkDelay)
-    val aTimed = avroStream
-      .withColumn("a_event_time", timestamp_millis(col("source_timestamp")))
-      .withWatermark("a_event_time", watermarkDelay)
-    val bBand = band.bucketBinlog(
-      Comparator.renameBinlogSide(bTimed, keep = Seq("b_event_time")))
-    val aBand = band.bucketAvro(
-      Comparator.renameAvroSide(aTimed, keep = Seq("a_event_time")))
+    val (a, b, skew) = timedSides(avroStream, binlogStream, maxSkew, watermarkDelay)
+    val bBand = band.bucketBinlog(b)
+    val aBand = band.bucketAvro(a)
     val cond: Column =
       aBand("a_file") === bBand("b_file") && aBand("a_pos") === bBand("b_pos") &&
-        band.inBand &&
-        bBand("b_event_time") >= aBand("a_event_time") - expr(s"INTERVAL $maxSkew") &&
-        bBand("b_event_time") <= aBand("a_event_time") + expr(s"INTERVAL $maxSkew")
+        band.inBand && skew
     band.statuses(aBand.join(bBand, cond, "left_outer"), band.delta, cfg)
       .drop("a_event_time", "b_event_time")
   }

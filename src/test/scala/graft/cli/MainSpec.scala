@@ -36,6 +36,30 @@ class MainSpec extends AnyFunSuite with SparkTestSession {
     intercept[IllegalArgumentException] { Main.jobMetrics(spark, bad) }
   }
 
+  test("jobMetrics counts what the binary and avro scans read: globs, " +
+    "MySQL 8 binlog.NNNNNN names") {
+    val dir = Files.createTempDirectory("mainglob").toFile
+    val bins = new java.io.File(dir, "bins"); bins.mkdirs()
+    val avros = new java.io.File(dir, "avros"); avros.mkdirs()
+    // MySQL 8's default basename; the hidden sidecar is no scan input
+    Seq("binlog.000001", "binlog.000002", ".binlog.000001.crc").foreach(n =>
+      Files.write(new java.io.File(bins, n).toPath, "x".getBytes))
+    Seq("a.avro", "b.avro", "notes.txt").foreach(n =>
+      Files.write(new java.io.File(avros, n).toPath, "x".getBytes))
+    def metrics(binlog: String, avro: String): Map[String, Long] =
+      Main.jobMetrics(spark, Main.Args(binlogBinary = Some(binlog), avro = Some(avro)))
+    val two = Map("binlog_files" -> 2L, "avro_files" -> 2L)
+    assert(metrics(bins.getPath, avros.getPath) == two)
+    assert(metrics(s"${bins.getPath}/binlog.*", s"${avros.getPath}/*.avro") == two)
+    // a side the scan would read nothing from still aborts
+    intercept[IllegalArgumentException] {
+      metrics(s"${bins.getPath}/mysql-bin.*", avros.getPath) }
+    intercept[IllegalArgumentException] {
+      metrics(bins.getPath, s"${avros.getPath}/none*.avro") }
+    intercept[IllegalArgumentException] {
+      metrics(new java.io.File(dir, "missing").getPath, avros.getPath) }
+  }
+
   test("text-parser + avro-json sources end to end") {
     val dir = Files.createTempDirectory("cli").toFile
     val binlogDir = new java.io.File(dir, "binlogs"); binlogDir.mkdirs()

@@ -137,6 +137,28 @@ class BinlogBinaryParserSpec extends AnyFunSuite with SparkTestSession {
     assert(del.row_images == Seq(Seq("7")))
   }
 
+  test("GTID server uuid: sid bytes 0x80-0xFF render as unsigned hex") {
+    // high bit set in every byte: 80 8f 90 9f … f0 ff
+    val sid = (0 until 16).map(i => (0x80 + (i / 2) * 16 + (i % 2) * 15).toByte).toArray
+    val f = new FileBuilder
+    f.event(T0, 15, new Array[Byte](84))
+    f.event(T0, 33, gtidBody(sid, 9))
+    f.event(T0, 19, tableMapBody(7, "shop", "orders"))
+    f.event(T0, 30, rowsBody(7, 1))
+    val write = BinlogBinaryParser.decodeFile(f.bytes, "mysql-bin.000001").toSeq(3)
+    val b = ByteBuffer.wrap(sid)
+    val uuid = new java.util.UUID(b.getLong, b.getLong).toString
+    assert(uuid == "808f909f-a0af-b0bf-c0cf-d0dfe0eff0ff")
+    assert(write.gtid_next == s"$uuid:9")
+  }
+
+  test("hex renders every byte value as the per-byte %02x formatter does") {
+    val all = (0 until 256).map(_.toByte).toArray
+    assert(BinlogBinaryParser.hex(all) == all.map(b => f"${b & 0xFF}%02x").mkString)
+    // the signed form index shard names were built with
+    assert(BinlogBinaryParser.hex(all) == all.map(b => f"$b%02x").mkString)
+  }
+
   test("decodes multi-type row images incl. NULLs and UPDATE before/after") {
     val f = new FileBuilder
     f.event(T0, 15, new Array[Byte](84))

@@ -12,18 +12,6 @@ import graft.SparkTestSession
   */
 class OpsSpec extends AnyFunSuite with SparkTestSession {
 
-  test("Dedup.lastWins keeps the max-seq row per key") {
-    import spark.implicits._
-    val df = Seq(
-      ("f", 1L, "old", 10L), ("f", 1L, "new", 20L),
-      ("f", 2L, "only", 5L), ("g", 1L, "other", 1L)
-    ).toDF("file", "pos", "payload", "arrival")
-    val got = Dedup.lastWins(df, Seq("file", "pos"), col("arrival"))
-      .orderBy("file", "pos")
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq
-    assert(got == Seq(("f", 1L, "new"), ("f", 2L, "only"), ("g", 1L, "other")))
-  }
-
   test("Dedup.exactKeepers keeps one min-id row per distinct text") {
     import spark.implicits._
     val df = Seq((3L, "dup"), (1L, "dup"), (2L, "uniq")).toDF("doc_id", "text")
