@@ -30,14 +30,13 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val benchStart = System.nanoTime()
-    // profile-mode listener-drain sleeps are excluded from the deadline
+    // profile-mode listener-bus drains are excluded from the deadline
     // clock, so a profiled run degrades passes at the same points a
-    // normal run would (r16 ADVICE: ~319 × 80 ms × 3 passes ≈ 75 s of
-    // sleep was eating the budget); profiled runs remain dev-only — the
-    // per-query walls themselves are unchanged either way
-    var profileSleepNs = 0L
+    // normal run would; profiled runs remain dev-only — the per-query
+    // walls themselves are unchanged either way
+    var profileDrainNs = 0L
     def elapsedS: Double =
-      (System.nanoTime() - benchStart - profileSleepNs) / 1e9
+      (System.nanoTime() - benchStart - profileDrainNs) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // total bench wall budget: passes after the first are skipped or cut
@@ -152,13 +151,13 @@ object Bench {
             System.err.println(s"[bench] $name failed: ${e.getMessage}")
             -1.0
         }
-      // outside the try: an interrupt during the drain sleep can no
-      // longer discard a valid wall sample (r16 ADVICE); counts are
-      // approximate — late listener events bleed into the next query
+      // outside the try: an interrupt during the drain can no longer
+      // discard a valid wall sample (r16 ADVICE); the drain delivers
+      // every event of this query before its counts are read
       if (profile) {
         val s0 = System.nanoTime()
-        Thread.sleep(80) // let the async listener bus drain
-        profileSleepNs += System.nanoTime() - s0
+        org.apache.spark.graftshim.ListenerBusShim.waitUntilEmpty(spark.sparkContext)
+        profileDrainNs += System.nanoTime() - s0
         def f2(v: Double): String =
           String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
         System.err.println(s"[profile] $name jobs=${profJobs.get - j0} " +

@@ -193,12 +193,14 @@ object Main {
         "auto-built index ranges); pass --split-index <path> or drop it")
 
     val spark = session("graft-cdc-compare")
-    compareDefaults(spark.sparkContext.getConf).foreach { case (k, v) => spark.conf.set(k, v) }
 
     // A3 — the reference's shell job metrics (comparator.sh:103-107,
     // avro_to_json.sh:75-85): count each side's input files up front and
     // abort loudly when a side has none, before any Spark work runs.
     val metrics = jobMetrics(spark, args)
+    compareDefaults(spark, spark.sparkContext.getConf,
+        metrics("binlog_bytes") + metrics("avro_bytes"))
+      .foreach { case (k, v) => spark.conf.set(k, v) }
     println(s"[graft] processing ${metrics("binlog_files")} binlog file(s), " +
       s"${metrics("avro_files")} avro file(s)")
 
@@ -210,21 +212,38 @@ object Main {
     spark.stop()
   }
 
-  /** The session settings compare mode applies over Spark's defaults,
-    * minus every key the deployment set itself in `deployed` (the
-    * SparkContext's conf: spark-defaults, `--conf`, `-Dspark.*`), which
-    * wins.
+  /** The session settings compare mode applies over `spark`'s current
+    * ones for an input of `inputBytes` (both sides' files), minus every
+    * key the deployment set itself in `deployed` (the SparkContext's conf:
+    * spark-defaults, `--conf`, `-Dspark.*`), which wins.
     *
-    * `canChangeCachedPlanOutputPartitioning` lets AQE coalesce the cached
-    * compare frame's partitions (the full-outer join's shuffle reads) from
-    * the measured map-output sizes. Spark's default keeps the join's
-    * `spark.sql.shuffle.partitions` partitions in the cache, so every
-    * report job over it ran that many tasks (200) however small the input.
-    * Coalescing only merges partitions, so a large input keeps the join's
-    * own parallelism. */
-  def compareDefaults(deployed: org.apache.spark.SparkConf): Map[String, String] =
-    Map("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true")
+    *  - `spark.sql.shuffle.partitions` is sized to the data: one bucket
+    *    per `spark.sql.adaptive.advisoryPartitionSizeInBytes` of input,
+    *    at least the default parallelism and at most the session's
+    *    current value (Spark's 200), so a large input keeps today's
+    *    width. Every map task writes one bucket per partition, and AQE
+    *    coalesced a small input's 200 buckets to a few reads anyway.
+    *  - `canChangeCachedPlanOutputPartitioning` lets AQE coalesce the
+    *    cached compare frame's partitions (the full-outer join's shuffle
+    *    reads) from the measured map-output sizes. Spark's default keeps
+    *    the join's partitions in the cache, so every report job over it
+    *    ran that many tasks however small the input.
+    *  - `inMemoryColumnarStorage.compressed=false`: the report cache is
+    *    built once, read twice (detail, rollup) and dropped, so
+    *    compressing it costs more than it saves. */
+  def compareDefaults(spark: SparkSession, deployed: org.apache.spark.SparkConf,
+      inputBytes: Long): Map[String, String] = {
+    val advisory = spark.sessionState.conf.getConf(
+      org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    val cores = spark.sparkContext.defaultParallelism
+    val width = spark.sessionState.conf.defaultNumShufflePartitions
+    val sized = math.min(width,
+      math.max(cores.toLong, (inputBytes + advisory - 1) / advisory)).toInt
+    Map("spark.sql.shuffle.partitions" -> sized.toString,
+      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
+      "spark.sql.inMemoryColumnarStorage.compressed" -> "false")
       .filter { case (k, _) => !deployed.contains(k) }
+  }
 
   /** Writes the compare-mode report of `prepared` under `out` and prints
     * the summary table (see the output list above). `compared` is cached
@@ -595,35 +614,39 @@ object Main {
     * a side with zero input files fails here with IllegalArgumentException
     * before any executor work is scheduled. The binary binlog and Avro
     * sides count the listing their scans read — a directory, a file or a
-    * glob, whatever the files are named. */
+    * glob, whatever the files are named. Each side's bytes
+    * (`binlog_bytes`, `avro_bytes`) come from the same listing. */
   def jobMetrics(spark: SparkSession, args: Args): Map[String, Long] = {
-    def count(path: String, pred: String => Boolean): Long = {
+    import org.apache.hadoop.fs.FileStatus
+    def listed(path: String, pred: String => Boolean): Seq[FileStatus] = {
       val p = new org.apache.hadoop.fs.Path(path)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) 0L
-      else if (fs.getFileStatus(p).isFile) 1L
-      else fs.listStatus(p).count(st => st.isFile && pred(st.getPath.getName)).toLong
+      if (!fs.exists(p)) Nil
+      else if (fs.getFileStatus(p).isFile) Seq(fs.getFileStatus(p))
+      else fs.listStatus(p).filter(st => st.isFile && pred(st.getPath.getName)).toSeq
     }
     // the scans' listings throw on a missing path: that reads nothing
-    def scanned(files: => Seq[_]): Long =
-      try files.size.toLong catch { case _: java.io.FileNotFoundException => 0L }
+    def scanned(files: => Seq[FileStatus]): Seq[FileStatus] =
+      try files catch { case _: java.io.FileNotFoundException => Nil }
     val binlogFiles = (args.binlogText, args.binlogBinary, args.binlogJson) match {
-      case (Some(dir), _, _) => count(dir, _.startsWith("mysql-bin."))
-      case (_, Some(path), _) => scanned(BinlogScan.listFiles(path).toSeq)
-      case (_, _, Some(path)) => count(path, _.endsWith(".json"))
-      case _ => 0L
+      case (Some(dir), _, _) => listed(dir, _.startsWith("mysql-bin."))
+      case (_, Some(path), _) => scanned(BinlogScan.listStatuses(path).toSeq)
+      case (_, _, Some(path)) => listed(path, _.endsWith(".json"))
+      case _ => Nil
     }
     val avroFiles = (args.avro, args.avroJson) match {
       case (Some(path), _) =>
         scanned(AvroScanHelper.listAvroFiles(spark, path, allowEmpty = true))
-      case (_, Some(path)) => count(path, _.endsWith(".json"))
-      case _ => 0L
+      case (_, Some(path)) => listed(path, _.endsWith(".json"))
+      case _ => Nil
     }
-    require(binlogFiles > 0,
+    require(binlogFiles.nonEmpty,
       s"no binlog input files found (reference aborts: comparator.sh:103-107)")
-    require(avroFiles > 0,
+    require(avroFiles.nonEmpty,
       s"no avro input files found (reference reports none-found: avro_to_json.sh:75-85)")
-    Map("binlog_files" -> binlogFiles, "avro_files" -> avroFiles)
+    Map("binlog_files" -> binlogFiles.size.toLong, "avro_files" -> avroFiles.size.toLong,
+      "binlog_bytes" -> binlogFiles.map(_.getLen).sum,
+      "avro_bytes" -> avroFiles.map(_.getLen).sum)
   }
 
   /** One prepared comparison: the compared frame, the per-source rejected

@@ -105,15 +105,25 @@ object CdcFixtures {
 
   /** The closed history a tail gate delivers up front: the rows of `rows`
     * outside the first `live` fixture classes (`k % 131 >= live`),
-    * range-split by `k` into `files` sink-written files of 50-row
-    * transactions, numbered from `fileSeqStart`. */
+    * split into `files` equal-width `k` ranges, one sink-written file of
+    * 50-row transactions per range in ascending `k`, numbered from
+    * `fileSeqStart`. The ranges come from the data's own `k` bounds, not
+    * from a sample, so the files are byte-identical however many jobs
+    * the session ran before. */
   def writeBulk(rows: DataFrame, live: Int, files: Int, feed: String,
-      fileSeqStart: Int = 1): Unit =
+      fileSeqStart: Int = 1): Unit = {
+    val bulk = rows.filter(col("k") % 131 >= live)
+    val bounds = bulk.agg(min(col("k")), max(col("k"))).head()
+    val (lo, hi) =
+      if (bounds.isNullAt(0)) (0L, 0L)
+      else (bounds.getAs[Number](0).longValue, bounds.getAs[Number](1).longValue)
+    val range = ((col("k") - lo) * files / (hi - lo + 1)).cast("int")
     graft.ingest.BinlogSink.writeChanges(
-      rows.filter(col("k") % 131 >= live)
-        .select(lit(1).as("op"), col("k"), col("v"))
-        .repartitionByRange(files, col("k")),
+      bulk.select(lit(1).as("op"), col("k"), col("v"))
+        .repartitionById(files, range)
+        .sortWithinPartitions(col("k")),
       feed, rowsPerTxn = 50, fileSeqStart = fileSeqStart)
+  }
 
   /** Writes a crafted file `name` into `feed`. */
   def writeFeedFile(feed: String, name: String, bytes: Array[Byte]): Unit =

@@ -4,7 +4,7 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
@@ -25,11 +25,14 @@ import graft.ingest.{BinlogBinaryParser, ParsedBinlogEvent}
   *
   * (registered via DataSourceRegister; the full class name works too).
   *
-  * Layout: one `InputPartition` per file (the decode is stateful within a
-  * file — TABLE_MAP/GTID association — so the file is the parallelism
-  * unit; binlog files are bounded by max_binlog_size, so at 100 TB the
-  * fan-out is the file count), or one per transaction-aligned byte range
-  * with a `splitIndex`. This is the one binlog binary scan: the CLI's
+  * Layout: the decode is stateful within a file (TABLE_MAP/GTID
+  * association), so the file is the unit of work; binlog files are
+  * bounded by max_binlog_size, so at 100 TB the fan-out is the file
+  * count. A batch read packs small whole files into per-core splits by
+  * Spark's file-source sizing rule ([[BinlogScan.pack]]); a stream reads
+  * one partition per file; with a `splitIndex` every read gets one
+  * partition per transaction-aligned byte range, never packed. This is
+  * the one binlog binary scan: the CLI's
   * `--binlog-binary` input and [[BinlogBinaryParser.parse]]'s typed view
   * both read through it. Column pruning is pushed into the reader:
   * unprojected columns are never materialized into rows.
@@ -180,20 +183,22 @@ private class BinlogScan(paths: Seq[String], required: StructType,
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
 
-  /** The files the pushed filters keep, planned by [[BinlogScan.plan]]:
-    * one partition per file, or per transaction-aligned range with a
-    * `splitIndex`. With `splitIndexAutoBuild=true` the header-only walk
-    * runs as its own small job before this scan's tasks launch — the
-    * "first pass records offsets" pattern with no separate orchestration
-    * step. */
+  /** The files the pushed filters keep: whole files packed into per-core
+    * splits by [[BinlogScan.pack]], or with a `splitIndex` one partition
+    * per transaction-aligned range by [[BinlogScan.plan]]. With
+    * `splitIndexAutoBuild=true` the header-only walk runs as its own
+    * small job before this scan's tasks launch — the "first pass records
+    * offsets" pattern with no separate orchestration step. */
   override def planInputPartitions(): Array[InputPartition] = {
-    val kept = BinlogScan.listFiles(paths).toSeq
-      .filter { p =>
-        val name = p.split('/').last
+    val kept = BinlogScan.listStatuses(paths).toSeq
+      .filter { st =>
+        val name = st.getPath.getName
         val seq = graft.ingest.BinlogTextParser.fileSeq(name)
         pushed.forall(BinlogFilePruning.keeps(_, name, seq))
       }
-    BinlogScan.plan(kept, splitIndex, autoBuild, splitBytes).toArray
+    (if (splitIndex.isEmpty) BinlogScan.pack(kept.map(st => st.getPath.toString -> st.getLen))
+      else BinlogScan.plan(kept.map(_.getPath.toString), splitIndex, autoBuild, splitBytes))
+      .toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -266,17 +271,60 @@ private[graft] object BinlogScan {
     * the explicit single-file branch qualifies too, so the same file
     * reached via two spellings (relative vs absolute, `//`, scheme
     * present vs defaulted) collapses onto one entry instead of being
-    * read twice. */
-  def listFiles(paths: Seq[String]): Array[String] =
-    paths.flatMap(p => listFiles(p)).distinct.toArray
-      .sortBy(p => (fileSeqKey(p.split('/').last), p.split('/').last))
+    * read twice. Each file comes with its status (its length among
+    * them). */
+  def listStatuses(paths: Seq[String]): Array[FileStatus] =
+    sortNatural(paths.flatMap(p => listStatuses(p)).distinctBy(_.getPath.toString).toArray)
+
+  private def sortNatural(files: Array[FileStatus]): Array[FileStatus] =
+    files.sortBy(st => (fileSeqKey(st.getPath.getName), st.getPath.getName))
 
   /** The natural-order sort key: suffix-less names sort last. */
   private[sources] def fileSeqKey(name: String): Long =
     graft.ingest.BinlogTextParser.fileSeq(name).getOrElse(Long.MaxValue)
 
-  /** The partitions for `files`, shared by the batch scan and the
-    * count-based stream: one per file, or with a `splitIndex` (a shard
+  /** Whole-file partitions for a batch read, packed by Spark's own
+    * file-source rule (`FilePartition.maxSplitBytes`):
+    * `maxSplitBytes = min(spark.sql.files.maxPartitionBytes,
+    * max(spark.sql.files.openCostInBytes, Σ(len + openCost) / minPartitionNum))`,
+    * where `minPartitionNum` is `spark.sql.files.minPartitionNum`, else the
+    * leaf-node default parallelism. Files fill splits next-fit in listing
+    * order, each costing its length plus `openCost`, so a file larger
+    * than `maxSplitBytes` stays alone and no more files than cores are
+    * never packed when their sizes are even. A split of several files
+    * is a [[BinlogFileGroup]], read file by file; the result does not
+    * depend on the grouping, since every row carries its own
+    * `file_seq`/`event_index`. */
+  def pack(files: Seq[(String, Long)]): Seq[InputPartition] = {
+    val spark = org.apache.spark.sql.SparkSession.active
+    val conf = spark.sessionState.conf
+    val openCost = conf.filesOpenCostInBytes
+    val minPartitions = conf.filesMinPartitionNum
+      .orElse(conf.getConf(org.apache.spark.sql.internal.SQLConf.LEAF_NODE_DEFAULT_PARALLELISM))
+      .getOrElse(spark.sparkContext.defaultParallelism)
+    val maxSplitBytes = math.min(conf.filesMaxPartitionBytes,
+      math.max(openCost, files.map(_._2 + openCost).sum / minPartitions))
+    val splits = Seq.newBuilder[Seq[BinlogInputPartition]]
+    var current = Vector.empty[BinlogInputPartition]
+    var size = 0L
+    files.foreach { case (file, len) =>
+      if (current.nonEmpty && size + len > maxSplitBytes) {
+        splits += current
+        current = Vector.empty
+        size = 0L
+      }
+      current :+= BinlogInputPartition(file)
+      size += len + openCost
+    }
+    if (current.nonEmpty) splits += current
+    splits.result().map {
+      case Seq(one) => one
+      case several => BinlogFileGroup(several)
+    }
+  }
+
+  /** The partitions for `files`, shared by the split-index batch scan and
+    * the count-based stream: one per file, or with a `splitIndex` (a shard
     * directory built by [[graft.ingest.BinlogOffsetIndex.build]]) one per
     * transaction-aligned byte range, so huge files fan out — each file's
     * ranges load from ITS OWN shard, never the siblings'. With
@@ -324,7 +372,11 @@ private[graft] object BinlogScan {
   /** All binlog files under `path`, in natural (`ls -v`) order: numeric
     * suffix first, then name — the reference's processing order
     * (comparator.sh:85). */
-  def listFiles(path: String): Array[String] = {
+  def listFiles(path: String): Array[String] =
+    listStatuses(path).map(_.getPath.toString)
+
+  /** [[listFiles]] of one path with each file's status. */
+  def listStatuses(path: String): Array[FileStatus] = {
     val hadoopPath = new Path(path)
     // driver-side listing with the session's conf (spark.hadoop.*
     // credentials / fs impls); bare Configuration() only as the
@@ -340,21 +392,23 @@ private[graft] object BinlogScan {
     // gets exactly that file, hidden-looking or not.
     def visible(p: Path): Boolean =
       !p.getName.startsWith(".") && !p.getName.startsWith("_")
-    val files: Array[Path] =
+    val named = if (fs.exists(hadoopPath)) Some(fs.getFileStatus(hadoopPath)) else None
+    val files: Array[FileStatus] = named match {
       // qualified like the listing branches below (listStatus/globStatus
       // return qualified paths), so multi-path dedup compares one form
-      if (fs.exists(hadoopPath) && fs.getFileStatus(hadoopPath).isFile)
-        Array(fs.makeQualified(hadoopPath))
-      else (Option(fs.globStatus(hadoopPath)) match {
+      case Some(st) if st.isFile =>
+        st.setPath(fs.makeQualified(hadoopPath))
+        Array(st)
+      case _ => (Option(fs.globStatus(hadoopPath)) match {
         case Some(matches) if matches.nonEmpty =>
           matches.flatMap { st =>
-            if (st.isFile) Array(st.getPath)
-            else fs.listStatus(st.getPath).filter(_.isFile).map(_.getPath)
+            if (st.isFile) Array(st)
+            else fs.listStatus(st.getPath).filter(_.isFile)
           }
-        case _ => fs.listStatus(hadoopPath).filter(_.isFile).map(_.getPath)
-      }).filter(visible)
-    files.map(_.toString)
-      .sortBy(p => (fileSeqKey(p.split('/').last), p.split('/').last))
+        case _ => fs.listStatus(hadoopPath).filter(_.isFile)
+      }).filter(st => visible(st.getPath))
+    }
+    sortNatural(files)
   }
 }
 
@@ -404,6 +458,11 @@ private case class BinlogInputPartition(file: String, start: Long = 0L,
     end: Long = Long.MaxValue, startIndex: Long = 0L, checksumLen: Int = 0)
     extends InputPartition
 
+/** Several whole files read by one task, in listing order
+  * ([[BinlogScan.pack]]). */
+private case class BinlogFileGroup(files: Seq[BinlogInputPartition])
+    extends InputPartition
+
 /** Factory construction happens on the DRIVER, where the session conf is
   * capturable; the readers themselves run executor-side and must receive
   * it (a bare `new Configuration()` there would lose `spark.hadoop.*`
@@ -414,8 +473,35 @@ private class BinlogReaderFactory(required: StructType,
     conf: org.apache.spark.graftshim.SerializableHadoopConf)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new BinlogPartitionReader(
-      partition.asInstanceOf[BinlogInputPartition], required, conf)
+    partition match {
+      case p: BinlogInputPartition => new BinlogPartitionReader(p, required, conf)
+      case BinlogFileGroup(files) => new BinlogGroupReader(
+        files.iterator.map(new BinlogPartitionReader(_, required, conf)))
+    }
+}
+
+/** Reads the files of a [[BinlogFileGroup]] one after another, each
+  * through its own reader, which is opened when the previous one is
+  * exhausted and closed then. */
+private class BinlogGroupReader(readers: Iterator[PartitionReader[InternalRow]])
+    extends PartitionReader[InternalRow] {
+
+  private var current: PartitionReader[InternalRow] = _
+
+  override def next(): Boolean = {
+    var found = current != null && current.next()
+    while (!found && readers.hasNext) {
+      close()
+      current = readers.next()
+      found = current.next()
+    }
+    found
+  }
+
+  override def get(): InternalRow = current.get()
+
+  override def close(): Unit =
+    if (current != null) { current.close(); current = null }
 }
 
 /** Streams one file-range's events through the incremental decoder — heap

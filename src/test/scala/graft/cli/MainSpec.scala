@@ -28,8 +28,8 @@ class MainSpec extends AnyFunSuite with SparkTestSession {
     Files.write(new java.io.File(binlogDir, "mysql-bin.000001").toPath, "x".getBytes)
     Files.write(new java.io.File(binlogDir, "mysql-bin.000002").toPath, "x".getBytes)
     Files.write(new java.io.File(binlogDir, "not-a-binlog.txt").toPath, "x".getBytes)
-    assert(Main.jobMetrics(spark, args) ==
-      Map("binlog_files" -> 2L, "avro_files" -> 1L))
+    assert(Main.jobMetrics(spark, args) == Map("binlog_files" -> 2L,
+      "avro_files" -> 1L, "binlog_bytes" -> 2L, "avro_bytes" -> 2L))
 
     // missing avro path aborts too
     val bad = args.copy(avroJson = Some(new java.io.File(dir, "nope.json").getPath))
@@ -48,7 +48,8 @@ class MainSpec extends AnyFunSuite with SparkTestSession {
       Files.write(new java.io.File(avros, n).toPath, "x".getBytes))
     def metrics(binlog: String, avro: String): Map[String, Long] =
       Main.jobMetrics(spark, Main.Args(binlogBinary = Some(binlog), avro = Some(avro)))
-    val two = Map("binlog_files" -> 2L, "avro_files" -> 2L)
+    val two = Map("binlog_files" -> 2L, "avro_files" -> 2L,
+      "binlog_bytes" -> 2L, "avro_bytes" -> 2L)
     assert(metrics(bins.getPath, avros.getPath) == two)
     assert(metrics(s"${bins.getPath}/binlog.*", s"${avros.getPath}/*.avro") == two)
     // a side the scan would read nothing from still aborts
@@ -332,10 +333,12 @@ class MainSpec extends AnyFunSuite with SparkTestSession {
           stages.synchronized { stages += si.name -> si.numTasks }
       }
     }
-    val defaults = Main.compareDefaults(spark.sparkContext.getConf).toSeq
+    val defaults = Main.compareDefaults(spark, spark.sparkContext.getConf, 0L).toSeq
     assert(defaults.nonEmpty)
-    withConfs(Seq("spark.sql.shuffle.partitions" -> "200",
-        "spark.sql.adaptive.enabled" -> "true") ++ defaults: _*) {
+    // 200 is set after the defaults, so it holds whatever width they size
+    withConfs(defaults ++ Seq("spark.sql.shuffle.partitions" -> "200",
+        "spark.sql.adaptive.enabled" -> "true"): _*) {
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == "200")
       spark.sparkContext.addSparkListener(listener)
       try {
         runReport(args)
@@ -348,12 +351,45 @@ class MainSpec extends AnyFunSuite with SparkTestSession {
       s"stages over the cache ran more than $cores tasks: $stages")
   }
 
+  private val widthKey = "spark.sql.shuffle.partitions"
+  private val advisoryKey = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+
   test("compareDefaults: a deployment's explicit setting wins") {
-    val key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    assert(Main.compareDefaults(new org.apache.spark.SparkConf(false)) ==
-      Map(key -> "true"))
-    assert(Main.compareDefaults(
-      new org.apache.spark.SparkConf(false).set(key, "false")).isEmpty)
+    val all = Map(widthKey -> "4",
+      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
+      "spark.sql.inMemoryColumnarStorage.compressed" -> "false")
+    def defaults(deployed: (String, String)*): Map[String, String] =
+      withConfs(widthKey -> "200") {
+        Main.compareDefaults(spark,
+          new org.apache.spark.SparkConf(false).setAll(deployed), 0L)
+      }
+    assert(defaults() == all)
+    all.keys.foreach(k => assert(defaults(k -> "7") == all - k, k))
+    assert(defaults(all.keys.map(_ -> "7").toSeq: _*).isEmpty)
+  }
+
+  test("compareDefaults: the shuffle width is one partition per advisory " +
+      "size of input, between the cores and the session's width") {
+    val mb = 1L << 20
+    def width(inputBytes: Long): Int = Main.compareDefaults(spark,
+      new org.apache.spark.SparkConf(false), inputBytes)(widthKey).toInt
+    val cores = spark.sparkContext.defaultParallelism
+    assert(cores == 4)
+    withConfs(widthKey -> "200", advisoryKey -> "1m") {
+      assert(width(0L) == cores)
+      assert(width(3 * mb) == cores)
+      assert(width(10 * mb) == 10)
+      assert(width(10 * mb + 1) == 11)
+      assert(width(1000 * mb) == 200)
+    }
+    // Spark's default advisory size (64 MB): both bench corpora get the cores
+    withConfs(widthKey -> "200") {
+      assert(width(6 * mb) == cores)
+      assert(width(64 * mb * 50) == 50)
+    }
+    withConfs(widthKey -> "8", advisoryKey -> "1m") {
+      assert(width(100 * mb) == 8)
+    }
   }
 
   test("argument parsing") {

@@ -257,4 +257,84 @@ class BinlogDataSourceSpec extends AnyFunSuite with SparkTestSession {
     assert(BinlogBinaryParser.parse(spark, dir.getPath).collect().toSeq.sortBy(order)
       == viaDecoder)
   }
+
+  /** `n` sink-written files of 100 rows each in 10-row transactions. */
+  private def writeSinkFiles(dir: java.io.File, n: Int): Unit =
+    graft.ingest.BinlogSink.writeChanges(
+      spark.range(0L, n * 100L, 1L, n)
+        .select(lit(1).as("op"), col("id").as("k"), concat(lit("v"), col("id")).as("v")),
+      dir.getPath, rowsPerTxn = 10)
+
+  private def withConf[T](k: String, v: String)(body: => T): T = {
+    val saved = spark.conf.getOption(k)
+    spark.conf.set(k, v)
+    try body finally saved.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+  }
+
+  /** Every row of `df` (all columns), in (file_seq, event_index) order. */
+  private def rowsInFileOrder(df: org.apache.spark.sql.DataFrame) =
+    df.collect().toSeq.sortBy(r =>
+      (r.getAs[Long]("file_seq"), r.getAs[Long]("event_index")))
+
+  test("a batch read packs small files into one split per core, with the " +
+      "rows of a one-file-per-partition read") {
+    val dir = Files.createTempDirectory("dsv2pack").toFile
+    writeSinkFiles(dir, 16)
+    assert(spark.sparkContext.defaultParallelism == 4)
+    val packed = spark.read.format("binlog").load(dir.getPath)
+    assert(packed.rdd.getNumPartitions == 4)
+    // next-fit in listing order: each split holds 4 consecutive files
+    val perSplit = packed.groupBy(spark_partition_id().as("p"))
+      .agg(collect_set("file_seq").as("seqs")).collect()
+      .map(_.getSeq[Long](1).sorted).sortBy(_.head).toSeq
+    assert(perSplit == (1L to 16L).grouped(4).map(_.toSeq).toSeq)
+    // a one-byte split limit leaves every file alone
+    val perFile = withConf("spark.sql.files.maxPartitionBytes", "1") {
+      val df = spark.read.format("binlog").load(dir.getPath)
+      assert(df.rdd.getNumPartitions == 16)
+      rowsInFileOrder(df)
+    }
+    assert(perFile.map(_.getAs[String]("binlog_file")).distinct.size == 16)
+    assert(rowsInFileOrder(packed) == perFile)
+  }
+
+  test("pack: a file larger than the split size stays alone") {
+    val mb = 1L << 20
+    val small = (1 to 8).map(i => s"f$i" -> mb)
+    // Σ(len + 4 MB open cost) / 4 cores = 61 MB per split
+    val parts = BinlogScan.pack(small.take(4) ++ Seq("big" -> 200 * mb) ++ small.drop(4))
+    assert(parts == Seq(
+      BinlogFileGroup(Seq("f1", "f2", "f3", "f4").map(BinlogInputPartition(_))),
+      BinlogInputPartition("big"),
+      BinlogFileGroup(Seq("f5", "f6", "f7", "f8").map(BinlogInputPartition(_)))))
+    // no more files than cores, of even sizes: never packed
+    assert(BinlogScan.pack(small.take(4)) == small.take(4).map(f => BinlogInputPartition(f._1)))
+  }
+
+  test("split-index ranges are never packed") {
+    val dir = Files.createTempDirectory("dsv2packsplit").toFile
+    writeSinkFiles(dir, 8)
+    val index = new java.io.File(dir.getParentFile, dir.getName + ".idx").getPath
+    graft.ingest.BinlogOffsetIndex.build(spark, dir.getPath, index, splitBytes = 512)
+    val ranges = dir.listFiles().filter(!_.getName.startsWith(".")).map(f =>
+      graft.ingest.BinlogOffsetIndex.loadFile(
+        spark.sparkContext.hadoopConfiguration, index, f.getPath).size).sum
+    assert(ranges > 8, s"expected several ranges per file, got $ranges")
+    val split = spark.read.format("binlog").option("splitIndex", index).load(dir.getPath)
+    assert(split.rdd.getNumPartitions == ranges)
+    val whole = spark.read.format("binlog").load(dir.getPath)
+    assert(whole.rdd.getNumPartitions == 4)
+    assert(rowsInFileOrder(split) == rowsInFileOrder(whole))
+  }
+
+  test("a count-based stream plans one partition per file") {
+    val dir = Files.createTempDirectory("dsv2packstream").toFile
+    writeSinkFiles(dir, 16)
+    val stream = new BinlogMicroBatchStream(dir.getPath, BinlogDataSource.schema)
+    val s0 = stream.initialOffset()
+    val s1 = stream.latestOffset(s0,
+      org.apache.spark.sql.connector.read.streaming.ReadLimit.allAvailable())
+    val parts = stream.planInputPartitions(s0, s1).toSeq
+    assert(parts.size == 16 && parts.forall(_.isInstanceOf[BinlogInputPartition]))
+  }
 }
