@@ -62,16 +62,21 @@ import graft.sources.{AvroScanHelper, BinlogScan}
   * `Comparator.BinlogCompareColumns` through its dedup, so the binary
   * `binlog` scan skips row images, event extras and query text.
   *
-  * Outputs under --out (default /tmp/graft_out), written by
-  * [[writeReport]]:
+  * Outputs under --out (default /tmp/graft_out), written concurrently by
+  * [[writeReport]], each as soon as what it reads exists:
   *   - `detail/status=<status>/` — every non-match row, sorted by
-  *     (binlog_file, position) within each status;
+  *     (binlog_file, position) within each status; waits for the cached
+  *     compare frame's declaration and runs beside the rollup;
   *   - `breakdown/` — row counts per (schema, table, status), sorted by
-  *     (schema, table, status);
+  *     (schema, table, status); waits for the collected rollup;
   *   - `summary/` — one row with the reference's five counters + verdict,
-  *     also printed to stdout;
-  *   - `quarantine/<side>/` — each JSON source's rejected rows (K3);
-  *   - `metrics/` — one row with the input file counts per side (A3).
+  *     also printed to stdout once every output is written; written after
+  *     `breakdown/`;
+  *   - `quarantine/<side>/` — each JSON source's rejected rows (K3); waits
+  *     for nothing;
+  *   - `metrics/` — one row with the input file counts per side (A3);
+  *     waits for nothing.
+  * Spark's default FIFO scheduler orders the concurrent jobs by submission.
   */
 object Main {
 
@@ -246,48 +251,103 @@ object Main {
   }
 
   /** Writes the compare-mode report of `prepared` under `out` and prints
-    * the summary table (see the output list above). `compared` is cached
-    * while the outputs are written and unpersisted after; the session
-    * stays up. Each output's jobs carry the description
-    * `graft report: <output>`. */
+    * the summary table (see the output list above). Each output starts as
+    * soon as its input exists, as Spark jobs from a driver pool with one
+    * thread per independent output:
+    *  - `metrics/` and every `quarantine/<side>/` start at once; neither
+    *    reads the compare;
+    *  - `detail/` and the rollup start side by side once `compared.cache()`
+    *    is declared. Whichever reaches a cache block first builds it;
+    *    Spark's per-block lock makes the other wait and then read it, so
+    *    the compare still runs once;
+    *  - `breakdown/` and then `summary/` chain off the collected rollup.
+    * Spark's default FIFO scheduler orders concurrent jobs by submission:
+    * an earlier job's pending tasks take free cores first, and a later
+    * job's tasks run on the cores the earlier ones leave idle.
+    *
+    * The pool threads get the caller's session and local properties
+    * through `SQLExecution.withThreadLocalCaptured`; the caller thread's
+    * own are left as they were. Each output's jobs carry the description
+    * `graft report: <output>` and a tag unique to the call. The first
+    * output to fail cancels every job of that tag, and no later output
+    * starts; once every output has ended, `compared` is unpersisted and
+    * that first failure rethrown. The summary table is printed after every
+    * output has been written. The session stays up. */
   def writeReport(spark: SparkSession, prepared: Prepared,
       metrics: Map[String, Long], out: String): Unit = {
+    import java.util.concurrent.{CompletableFuture, CompletionException, Executors}
+    import java.util.concurrent.atomic.AtomicReference
     import org.apache.spark.sql.Row
+    import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+    import org.apache.spark.sql.execution.SQLExecution
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val sc = spark.sparkContext
+    val tag = s"graft-report-${java.util.UUID.randomUUID()}"
+    val firstFailure = new AtomicReference[Throwable]()
     def described[T](output: String)(body: => T): T = {
-      spark.sparkContext.setJobDescription(s"graft report: $output")
-      try body finally spark.sparkContext.setJobDescription(null)
+      if (firstFailure.get != null) throw new java.util.concurrent.CancellationException(
+        s"graft report: $output not started, an earlier output failed")
+      sc.setJobDescription(s"graft report: $output")
+      try body catch { case e: Throwable =>
+        if (firstFailure.compareAndSet(null, e))
+          sc.cancelJobsWithTag(tag, s"graft report: $output failed")
+        throw e
+      }
     }
-    val compared = prepared.compared.cache()
+    // detail, the rollup chain, metrics and one per quarantined side
+    val pool = Executors.newFixedThreadPool(3 + prepared.quarantines.size)
+    val running = collection.mutable.ArrayBuffer.empty[CompletableFuture[_]]
+    def start[T](output: String)(body: => T): CompletableFuture[T] = {
+      val f = SQLExecution.withThreadLocalCaptured(spark, pool) {
+        sc.addJobTag(tag)
+        described(output)(body)
+      }
+      running += f
+      f
+    }
+    // waits for every started output; a failure outside `described` is
+    // recorded here
+    def settle(): Unit = running.foreach { f =>
+      try f.join() catch {
+        case e: CompletionException => firstFailure.compareAndSet(null, e.getCause)
+      }
+    }
     try {
-      // detail partitioned by status: per-status directories prune cleanly
-      // when a consumer reads only one discrepancy family at scale
-      described("detail") {
-        Report.detail(compared).write.mode("overwrite")
-          .partitionBy("status").json(s"$out/detail")
-      }
-      // breakdown and summary both come from one collected rollup
-      val rollup = described("rollup")(Report.rollup(compared).collect().toSeq)
-      described("breakdown") {
-        Report.breakdown(spark, rollup).write.mode("overwrite").json(s"$out/breakdown")
-      }
-      val summary = Report.summary(spark, rollup)
-      described("summary")(summary.write.mode("overwrite").json(s"$out/summary"))
-      // K3 — rejected source rows to a quarantine path (the reference's
-      // debug_log stderr redirect, comparator.sh:32,95)
-      prepared.quarantines.foreach { case (side, bad) =>
-        described("quarantine")(bad.write.mode("overwrite").json(s"$out/quarantine/$side"))
-      }
-      // a local relation: printing it runs no job
-      summary.show(truncate = false)
       // job metrics with the outputs (the reference's conversion summary)
-      described("metrics") {
+      start("metrics") {
         spark.createDataFrame(
             java.util.List.of(Row(metrics("binlog_files"), metrics("avro_files"))),
             StructType(Seq("binlog_files", "avro_files").map(StructField(_, LongType))))
           .write.mode("overwrite").json(s"$out/metrics")
       }
-    } finally compared.unpersist()
+      // K3 — rejected source rows to a quarantine path (the reference's
+      // debug_log stderr redirect, comparator.sh:32,95)
+      prepared.quarantines.foreach { case (side, bad) =>
+        start("quarantine")(bad.write.mode("overwrite").json(s"$out/quarantine/$side"))
+      }
+      val compared = prepared.compared.cache()
+      val summary = try {
+        // detail partitioned by status: per-status directories prune
+        // cleanly when a consumer reads only one discrepancy family at scale
+        start("detail") {
+          Report.detail(compared).write.mode("overwrite")
+            .partitionBy("status").json(s"$out/detail")
+        }
+        // breakdown and summary both come from one collected rollup
+        start("rollup") {
+          val rollup = Report.rollup(compared).collect().toSeq
+          described("breakdown") {
+            Report.breakdown(spark, rollup).write.mode("overwrite").json(s"$out/breakdown")
+          }
+          val summary = Report.summary(spark, rollup)
+          described("summary")(summary.write.mode("overwrite").json(s"$out/summary"))
+          summary
+        }
+      } finally { settle(); compared.unpersist() }
+      Option(firstFailure.get).foreach(e => throw e)
+      // a local relation: printing it runs no job
+      summary.join().show(truncate = false)
+    } finally { settle(); pool.shutdown() }
   }
 
   /** The FOLLOW posture — the cdc63 composition (ACTIVE-file tail →

@@ -351,6 +351,84 @@ class MainSpec extends AnyFunSuite with SparkTestSession {
       s"stages over the cache ran more than $cores tasks: $stages")
   }
 
+  /** `body`'s result and the (job id, description, tags) of every job
+    * that started while it ran. */
+  private def jobsOf[T](body: => T): (T, Seq[(Int, String, Set[String])]) = {
+    val jobs = collection.mutable.ArrayBuffer.empty[(Int, String, Set[String])]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        def prop(k: String) = props.flatMap(p => Option(p.getProperty(k)))
+        val tags = prop("spark.job.tags").toSeq.flatMap(_.split(",")).filter(_.nonEmpty)
+        jobs.synchronized { jobs += ((e.jobId, prop("spark.job.description").orNull, tags.toSet)) }
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val result = body
+      org.apache.spark.graftshim.ListenerBusShim.waitUntilEmpty(spark.sparkContext)
+      (result, jobs.synchronized(jobs.toSeq))
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private val reportDescriptions =
+    Set("metrics", "detail", "rollup", "breakdown", "summary").map("graft report: " + _)
+  private def runTags(tags: Set[String]) = tags.filter(_.startsWith("graft-report-"))
+
+  test("writeReport: every job carries its output's description and the " +
+      "run's tag; the caller thread's description and tags are left as they were") {
+    val args = reportCorpus()
+    val sc = spark.sparkContext
+    val prepared = Main.prepare(spark, args)
+    val metrics = Main.jobMetrics(spark, args)
+    val out = Files.createTempDirectory("clireport_out").toFile.getPath
+    sc.setJobDescription("caller")
+    sc.addJobTag("caller-tag")
+    val (callerAfter, jobs, later) = try {
+      val (after, report) = jobsOf {
+        Main.writeReport(spark, prepared, metrics, out)
+        (sc.getLocalProperty("spark.job.description"), sc.getJobTags())
+      }
+      (after, report, jobsOf(spark.range(3).count())._2)
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeJobTag("caller-tag")
+      prepared.release()
+    }
+    assert(callerAfter == ("caller", Set("caller-tag")))
+    // the scan and join run under whichever reader builds the cache first,
+    // so each job is checked against the set, and each output ran a job
+    assert(jobs.map(_._2).toSet == reportDescriptions, jobs)
+    val tag = runTags(jobs.head._3)
+    assert(tag.size == 1, jobs)
+    assert(jobs.forall { case (_, _, tags) => runTags(tags) == tag && tags("caller-tag") }, jobs)
+    // a job the caller runs afterwards carries neither
+    assert(later.nonEmpty)
+    assert(later.forall { case (_, d, tags) => d == "caller" && runTags(tags).isEmpty }, later)
+  }
+
+  test("writeReport: the first failed output cancels the rest; once every " +
+      "job has ended the cache is dropped and that failure rethrown") {
+    val args = reportCorpus()
+    val sc = spark.sparkContext
+    // every write under a regular file fails; the rollup's collect does not
+    val file = Files.createTempFile("clireport", ".txt").toString
+    val prepared = Main.prepare(spark, args)
+    val metrics = Main.jobMetrics(spark, args)
+    val (thrown, jobs) = try jobsOf {
+      intercept[Exception](Main.writeReport(spark, prepared, metrics, s"$file/out"))
+    } finally prepared.release()
+    val chain = Iterator.iterate[Throwable](thrown)(_.getCause).takeWhile(_ != null).toSeq
+    def says(s: String) = chain.exists(c => String.valueOf(c.getMessage).contains(s))
+    // a write's own failure, not a cancellation it set off
+    assert(says(file) && !says("cancel") &&
+      !chain.exists(_.isInstanceOf[java.util.concurrent.CancellationException]), chain)
+    assert(jobs.forall(j => reportDescriptions(j._2)), jobs)
+    assert(sc.statusTracker.getActiveJobIds.isEmpty)
+    assert(prepared.compared.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+    assert(spark.range(3).count() == 3)
+  }
+
   private val widthKey = "spark.sql.shuffle.partitions"
   private val advisoryKey = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
 
