@@ -17,40 +17,6 @@ import graft.functions.VectorFunctions.cosineSim
   */
 object Similarity {
 
-  /** Session-conf deployment dial for the bounded centroid fold's chunk
-    * count (see [[buildCentroids]]'s sizing note): operators that are not
-    * passed an explicit `chunks` resolve it from
-    * `spark.graft.centroid.chunks` (default 1024), so a deployment sizes
-    * the fold to its expected max cluster size without a code change
-    * (`--conf spark.graft.centroid.chunks=N` at launch). The value is part of the fold-order contract: any oracle
-    * mirroring the fold must bake the SAME value (the gate queries pin
-    * theirs via `SimilarityQueries.centroidChunks` on both engines). */
-  val ChunksConfKey = "spark.graft.centroid.chunks"
-  val DefaultChunks = 1024
-
-  /** Resolve the fold chunk count: an explicit positive `chunks` wins;
-    * otherwise the session conf; loud failure on a non-positive or
-    * non-integer setting. */
-  def resolveChunks(spark: org.apache.spark.sql.SparkSession, chunks: Int): Int = {
-    // exactly 0 means "resolve from conf"; a NEGATIVE explicit argument is
-    // a caller bug (e.g. a config subtraction gone negative) and must fail
-    // loudly, not silently fall back to the session default — the fold
-    // chunking is an oracle contract, so a masked wrong value surfaces as
-    // an inexplicable gate mismatch far from the cause
-    require(chunks >= 0,
-      s"chunks must be positive, or 0 to resolve from $ChunksConfKey; got $chunks")
-    if (chunks > 0) chunks
-    else {
-      val raw = spark.conf.get(ChunksConfKey, DefaultChunks.toString)
-      val v = try raw.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"$ChunksConfKey must be a positive integer, got '$raw'")
-      }
-      require(v > 0, s"$ChunksConfKey must be positive, got $v")
-      v
-    }
-  }
-
   /** Exact top-k neighbors per query by cosine. `corpus` (idCol, embCol);
     * `queries` (queryIdCol, queryEmbCol) — broadcast. Ties broken by
     * neighbor id. Output: (query_id, rank, neighbor_id, cos). */
@@ -203,20 +169,19 @@ object Similarity {
     *
     * Returns the centroid table after `iters` reassign+recompute
     * rounds. */
-  def kmeansCentroids(df: DataFrame, dim: Int, iters: Int, chunks: Int = 0,
+  def kmeansCentroids(df: DataFrame, dim: Int, iters: Int, chunks: Int,
       reseedEmpty: Boolean = false, labelCol: String = "label",
       idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
     require(iters >= 0, "iters must be non-negative")
     val spark = df.sparkSession
-    val nChunks = resolveChunks(spark, chunks)
-    var cent = buildCentroids(df, dim, nChunks, labelCol, idCol, embCol)
+    var cent = buildCentroids(df, dim, chunks, labelCol, idCol, embCol)
     (0 until iters).foreach { _ =>
       val cb = collectCodebook(cent)
       val centLit = codebookDf(spark, cb)
       val assigned = assignToCentroids(
         df.select(col(idCol), col(embCol)), centLit, Seq(idCol), embCol)
       var nextCb = collectCodebook(
-        buildCentroids(assigned, dim, nChunks, "cluster", idCol, embCol))
+        buildCentroids(assigned, dim, chunks, "cluster", idCol, embCol))
       if (reseedEmpty) {
         val emptied = cb.map(_._1).filterNot(nextCb.map(_._1).toSet)
         if (emptied.nonEmpty) {
@@ -338,20 +303,21 @@ object Similarity {
     * `chunks ≈ expectedMaxClusterSize / 10⁵` is ample at 64–1024 dims,
     * while level 2 stays absolutely bounded at `chunks` × dim doubles
     * (~512 KB at the defaults). The parameter is part of the fold-order
-    * contract — the oracle must use the same value (s03/s04 bake
-    * `SimilarityQueries.centroidChunks` into both engines), so change it
-    * per-deployment, not per-run. `chunks = 0` (the default) resolves the
-    * per-deployment value from [[ChunksConfKey]], the no-code-change dial
-    * the 100×-scale sizing note above calls for.
+    * contract — the oracle must use the same value (the gates' [[Ivf]]
+    * kit and oracles share `SimilarityQueries.centroidChunks`, set per
+    * deployment with `-Dgraft.centroidChunks`), so change it
+    * per-deployment, not per-run. Zero or a negative value fails.
     *
     * Output: (`clabel`, `cf` array<float>) — broadcast-sized, one row per
     * label. */
-  def buildCentroids(df: DataFrame, dim: Int, chunks: Int = 0,
+  def buildCentroids(df: DataFrame, dim: Int, chunks: Int,
       labelCol: String = "label", idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame = {
-    val nChunks = resolveChunks(df.sparkSession, chunks)
+    // a zero or negative count is a caller bug (a config subtraction gone
+    // negative): fail here, naming it, not as an oracle mismatch far away
+    require(chunks > 0, s"chunks must be positive, got $chunks")
     val partials = df
-      .groupBy(col(labelCol), (col(idCol) % nChunks).as("_chunk"))
+      .groupBy(col(labelCol), (col(idCol) % chunks).as("_chunk"))
       .agg(array_sort(collect_list(struct(col(idCol).as("id"), col(embCol).as("emb"))))
         .as("vs"))
       .select(col(labelCol), col("_chunk"),

@@ -872,10 +872,7 @@ object CdcQueries {
   // driver collect) and the returned frame is a lazy scan over it plus
   // the reconciliation join.
   def cdc12StreamDrain(spark: SparkSession, dir: String): DataFrame = {
-    val root = tmpFixtureDir("graft_cdc12_", dir)
-    val feed = new java.io.File(root, "feed").getPath
-    val sink = new java.io.File(root, "sink").getPath
-    val ckpt = new java.io.File(root, "ckpt").getPath
+    val (_, feed, sink, ckpt) = streamDirs("graft_cdc12_", dir, "sink")
     val (binlogStaticLazy, avroRaw) = sidesRaw(spark, dir)
     // static subtrees re-run per micro-batch unless materialized (cdc50's
     // measured lesson: −30% on its drain) — prepare the snapshot once
@@ -908,10 +905,9 @@ object CdcQueries {
   // to NativeStreamEndToEndSpec's synthetic vectors.
   def cdc13StreamBinlog(spark: SparkSession, dir: String): DataFrame = {
     val fixtureDir = writeCdc05Fixture(spark, dir)
-    val root = tmpFixtureDir("graft_cdc13_", dir) // wipes stale ckpt too —
-    root.mkdirs() //  a reused checkpoint would silently skip the re-decode
-    val sink = new java.io.File(root, "sink").getPath
-    val ckpt = new java.io.File(root, "ckpt").getPath
+    // streamDirs wipes a stale ckpt too: a reused checkpoint would
+    // silently skip the re-decode
+    val (_, _, sink, ckpt) = streamDirs("graft_cdc13_", dir, "sink")
     drainToParquet(cdc05Projection(
         spark.readStream.format("binlog").load(fixtureDir)), sink, ckpt)
       .orderBy("o_orderkey")
@@ -927,11 +923,8 @@ object CdcQueries {
   // arrival interleaving. The oracle is the distinct key set from the
   // shared `a` CTE. Drains to a parquet sink (no driver collect).
   def cdc14StreamDedup(spark: SparkSession, dir: String): DataFrame = {
-    val root = tmpFixtureDir("graft_cdc14_", dir)
-    root.mkdirs()
-    val feed = new java.io.File(root, "feed"); feed.mkdirs()
-    val sink = new java.io.File(root, "sink").getPath
-    val ckpt = new java.io.File(root, "ckpt").getPath
+    val (_, feedPath, sink, ckpt) = streamDirs("graft_cdc14_", dir, "sink")
+    val feed = new java.io.File(feedPath); feed.mkdirs()
     val (_, avroRaw) = sidesRaw(spark, dir)
     // pre-collapse to one row per key with min_by: avroMain/avroExtra
     // positions CAN collide once event_ids span ~20M (pos = id+4 vs
@@ -979,11 +972,8 @@ object CdcQueries {
   // Outputs are epoch-µs longs (integer gate discipline; timestamp
   // parquet annotations differ cross-engine).
   def cdc15StreamWindows(spark: SparkSession, dir: String): DataFrame = {
-    val root = tmpFixtureDir("graft_cdc15_", dir)
-    root.mkdirs()
-    val feed = new java.io.File(root, "feed"); feed.mkdirs()
-    val sink = new java.io.File(root, "sink").getPath
-    val ckpt = new java.io.File(root, "ckpt").getPath
+    val (_, feedPath, sink, ckpt) = streamDirs("graft_cdc15_", dir, "sink")
+    val feed = new java.io.File(feedPath); feed.mkdirs()
     val ev = graft.Tables.events(spark, dir)
       .select(col("event_id"), expr("ts div 1000").as("t_us"), col("event_type"))
     val aDir = new java.io.File(feed, "a"); val bDir = new java.io.File(feed, "b")
@@ -1097,10 +1087,7 @@ object CdcQueries {
   }
 
   def cdc16StreamParity(spark: SparkSession, dir: String): DataFrame = {
-    val root = tmpFixtureDir("graft_cdc16_", dir)
-    root.mkdirs()
-    val sink = new java.io.File(root, "sink").getPath
-    val ckpt = new java.io.File(root, "ckpt").getPath
+    val (root, _, sink, ckpt) = streamDirs("graft_cdc16_", dir, "sink")
 
     val binlogRaw = binlogRawSide(spark, dir)
     val (binlogStatic, avroRaw) = sidesRaw(spark, dir)
@@ -1146,11 +1133,9 @@ object CdcQueries {
   // crash/redeploy cycle every production streaming job lives through —
   // cdc12 gates one uninterrupted drain, cdc18 gates the restart seam.
   def cdc18RestartParity(spark: SparkSession, dir: String): DataFrame = {
-    val root = tmpFixtureDir("graft_cdc18_", dir)
+    val (root, feedPath, sink, ckpt) = streamDirs("graft_cdc18_", dir, "sink")
     val stage = new java.io.File(root, "stage")
-    val feed = new java.io.File(root, "feed")
-    val sink = new java.io.File(root, "sink").getPath
-    val ckpt = new java.io.File(root, "ckpt").getPath
+    val feed = new java.io.File(feedPath)
     val (binlogStaticLazy, avroRaw) = sidesRaw(spark, dir)
     val binlogStatic = binlogStaticLazy.localCheckpoint(true) // cdc12 note
     // ≥4 part files so the two installments are both non-trivial
@@ -1871,11 +1856,8 @@ object CdcQueries {
   // as (users × open sessions); the watermark is what bounds it — the
   // property this drain exists to pin.
   def cdc34StreamSessions(spark: SparkSession, dir: String): DataFrame = {
-    val root = tmpFixtureDir("graft_cdc34_", dir)
-    root.mkdirs()
-    val feed = new java.io.File(root, "feed"); feed.mkdirs()
-    val sink = new java.io.File(root, "sink").getPath
-    val ckpt = new java.io.File(root, "ckpt").getPath
+    val (_, feedPath, sink, ckpt) = streamDirs("graft_cdc34_", dir, "sink")
+    val feed = new java.io.File(feedPath); feed.mkdirs()
     val ev = graft.Tables.events(spark, dir)
       .select(col("user_id"), expr("ts div 1000").as("t_us"))
     val aDir = new java.io.File(feed, "a"); val bDir = new java.io.File(feed, "b")
@@ -2293,10 +2275,7 @@ object CdcQueries {
   // schema, as in Drains.drainToParquet (zero micro-batches leave no
   // files, and inference would throw where an empty snapshot is correct).
   def cdc39StreamRoute(spark: SparkSession, dir: String): DataFrame = {
-    val root = tmpFixtureDir("graft_cdc39_", dir)
-    val feedDir = new java.io.File(root, "feed").getPath
-    val sink = new java.io.File(root, "sink").getPath
-    val ckpt = new java.io.File(root, "ckpt").getPath
+    val (_, feedDir, sink, ckpt) = streamDirs("graft_cdc39_", dir, "sink")
     val feed = cdc17Feed(spark, dir)
     feed.write.mode("overwrite").json(feedDir)
     val s = spark.readStream.schema(feed.schema).json(feedDir)
@@ -2423,10 +2402,7 @@ object CdcQueries {
   // gates for the apply fold.
   def cdc41StreamDdlEpoch(spark: SparkSession, dir: String): DataFrame = {
     val fixtureDir = writeCdc37Fixture(spark, dir)
-    val root = tmpFixtureDir("graft_cdc41_", dir)
-    root.mkdirs()
-    val sink = new java.io.File(root, "sink").getPath
-    val ckpt = new java.io.File(root, "ckpt").getPath
+    val (_, _, sink, ckpt) = streamDirs("graft_cdc41_", dir, "sink")
     import spark.implicits._
     val ev = spark.readStream.format("binlog").load(fixtureDir)
       .filter(col("event_type") === "WriteRowsEventV2" ||
@@ -2468,12 +2444,8 @@ object CdcQueries {
   // apply fold.
   def cdc42StreamScd2(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val root = tmpFixtureDir("graft_cdc42_", dir)
-    root.mkdirs()
-    val feedDir = new java.io.File(root, "feed")
-    feedDir.mkdirs()
-    val sink = new java.io.File(root, "sink").getPath
-    val ckpt = new java.io.File(root, "ckpt").getPath
+    val (_, feedPath, sink, ckpt) = streamDirs("graft_cdc42_", dir, "sink")
+    val feedDir = new java.io.File(feedPath); feedDir.mkdirs()
     val feed = cdc17Feed(spark, dir).select("user_id", "src_ms", "ct", "pos")
     // coalesce: an empty feed has NULL min/max and the cut is unused
     val cut = feed
@@ -2856,10 +2828,7 @@ object CdcQueries {
   // band machinery (cdc46) and the tolerance semantics (cdc04).
   def cdc50StreamBandTolerance(spark: SparkSession, dir: String): DataFrame = {
     val tols = Seq(0L, 50L, 100L, 250L, 1000L)
-    val root = tmpFixtureDir("graft_cdc50_", dir)
-    val feed = new java.io.File(root, "feed").getPath
-    val sink = new java.io.File(root, "sink").getPath
-    val ckpt = new java.io.File(root, "ckpt").getPath
+    val (_, feed, sink, ckpt) = streamDirs("graft_cdc50_", dir, "sink")
     val (binlogStaticLazy, avroRaw) = sidesRaw(spark, dir)
     // materialize the static side ONCE: the main join and the band leg
     // would otherwise re-execute the prepare shuffle every micro-batch
@@ -2910,10 +2879,7 @@ object CdcQueries {
   def cdc52StreamStreamBand(spark: SparkSession, dir: String): DataFrame = {
     import graft.cdc.Schemas
     val tols = Seq(0L, 50L, 100L, 250L, 1000L)
-    val root = tmpFixtureDir("graft_cdc52_", dir)
-    root.mkdirs()
-    val sink = new java.io.File(root, "sink").getPath
-    val ckpt = new java.io.File(root, "ckpt").getPath
+    val (root, _, sink, ckpt) = streamDirs("graft_cdc52_", dir, "sink")
     val binlogRaw = binlogRawSide(spark, dir)
     val (binlogStaticLazy, avroRaw) = sidesRaw(spark, dir)
     val binlogStatic = binlogStaticLazy.localCheckpoint(true) // cdc12 note

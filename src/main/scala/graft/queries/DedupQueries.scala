@@ -1722,12 +1722,8 @@ object DedupQueries {
   // count, flagged-id checksum.
   def d32StreamLshIngest(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.ViewMaintenance
-    val root = graft.streaming.Drains.tmpFixtureDir("graft_d32_", dir)
-    root.mkdirs()
-    val feed = new java.io.File(root, "feed").getPath
-    val state = new java.io.File(root, "state").getPath
+    val (root, feed, state, ckpt) = graft.streaming.Drains.streamDirs("graft_d32_", dir)
     val flags = new java.io.File(root, "flags").getPath
-    val ckpt = new java.io.File(root, "ckpt").getPath
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
     // id-RANGE partitions → the sink's file numbering IS ingestion order
     graft.ingest.BinlogSink.writeKeyedStrings(
@@ -1821,12 +1817,8 @@ object DedupQueries {
   def d33StreamDecontaminate(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.ViewMaintenance
     def bit(i: Int, key: Column): Column = bloomBit(i, key) // d15's layout
-    val root = graft.streaming.Drains.tmpFixtureDir("graft_d33_", dir)
-    root.mkdirs()
-    val feed = new java.io.File(root, "feed").getPath
-    val state = new java.io.File(root, "state").getPath
+    val (root, feed, state, ckpt) = graft.streaming.Drains.streamDirs("graft_d33_", dir)
     val flags = new java.io.File(root, "flags").getPath
-    val ckpt = new java.io.File(root, "ckpt").getPath
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
     // the eval-set index: one append here; a refreshed eval set would be
     // another (distinct-at-read makes overlapping appends harmless)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.VectorFunctions.cosineSim
-import SimilarityQueries.{centroidChunks, duckCentroidCtes, duckCosOf}
+import SimilarityQueries.{duckCentroidCtes, duckCosOf, duckNearest, ivf}
 
 /** The GRAPH-ANN family (split from SimilarityQueries in r12 — same
   * code, same oracles): cluster-partitioned kNN-graph construction
@@ -67,13 +67,12 @@ object GraphAnnQueries {
     * these by default. Build cost: each vector joins ONE other
     * cluster's members — the same N²/k pair-mass class as the intra
     * kNN build, cluster-keyed, never all-pairs. Output: (id_a, id_b). */
-  private def bridgeEdges(emb: DataFrame, cent: DataFrame,
+  private def bridgeEdges(emb: DataFrame, kit: graft.ops.Ivf,
       assigned: DataFrame): DataFrame = {
     // each vector's SECOND-nearest cluster: the nprobe=2 probe minus the
     // assignment — both share the (ccos desc, clabel) tie-break, so the
     // leftover row is exactly rn = 2
-    val second = graft.ops.Similarity.probeCentroids(
-        emb.select("vec_id", "embedding"), cent, Seq("vec_id"), nprobe = 2)
+    val second = kit.probes(emb.select("vec_id", "embedding"), 2)
       .join(assigned.select(col("vec_id"), col("cluster").as("c1")), Seq("vec_id"))
       .filter(col("cluster") =!= col("c1"))
     // same norm hoist as [[knnEdges]] — each vector scores one other
@@ -107,9 +106,7 @@ object GraphAnnQueries {
 
   def s25KnnGraph(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    val cent = graft.ops.Similarity.buildCentroids(emb, dim = 64, chunks = centroidChunks)
-    val assigned = graft.ops.Similarity.assignToCentroids(
-      emb.select("vec_id", "embedding"), cent, Seq("vec_id"))
+    val assigned = ivf(emb).assigned
     val edges = knnEdges(assigned)
     val mutual = edges.join(
         edges.select(col("cluster"), col("id_b").as("id_a"), col("id_a").as("id_b")),
@@ -128,13 +125,8 @@ object GraphAnnQueries {
   }
 
   val s25Oracle: String =
-    s"""WITH ${duckCentroidCtes(64, centroidChunks)}, assigned AS (
-      |  SELECT vec_id, embedding, clabel FROM (
-      |    SELECT e.vec_id, e.embedding, c.clabel,
-      |      row_number() OVER (PARTITION BY e.vec_id
-      |        ORDER BY ${duckCosOf("e.embedding", "c.cf")} DESC, c.clabel) AS rn
-      |    FROM embeddings e, cent c)
-      |  WHERE rn = 1
+    s"""WITH ${duckCentroidCtes(64)}, assigned AS (
+      |  ${duckNearest(Seq("vec_id", "embedding"))}
       |), edges AS (
       |  SELECT clabel, id_a, id_b FROM (
       |    SELECT a.clabel, a.vec_id AS id_a, b.vec_id AS id_b,
@@ -191,16 +183,14 @@ object GraphAnnQueries {
   // shuffle.
   def s34GraphSearch(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    val cent = graft.ops.Similarity.buildCentroids(emb, dim = 64, chunks = centroidChunks)
-    val assigned = graft.ops.Similarity.assignToCentroids(
-      emb.select("vec_id", "embedding"), cent, Seq("vec_id"))
+    val kit = ivf(emb)
+    val assigned = kit.assigned
     val edges = knnEdges(assigned).select("id_a", "id_b")
-      .unionByName(bridgeEdges(emb, cent, assigned)) // served default
+      .unionByName(bridgeEdges(emb, kit, assigned)) // served default
       .localCheckpoint() // probed at hop 1 and hop 2 — build the graph once
     val qRows = emb.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val probes = graft.ops.Similarity.probeCentroids(
-      qRows, cent, Seq("query_id"), nprobe = servedNprobe, embCol = "qv")
+    val probes = kit.probes(qRows, servedNprobe, "query_id", "qv")
     val seeds = ivfSeeds(probes, assigned).localCheckpoint() // ≤3 rows/query
     graphBallSearch(edges, qRows, seeds, emb)
   }
@@ -312,19 +302,15 @@ object GraphAnnQueries {
     // cent 3x and assigned 2x — §2.4 "don't compute things you throw
     // away"; deterministic builds, so the persisted bytes are identical),
     // then land the three disjoint artifact dirs concurrently (§2.6)
-    val cent = graft.ops.Similarity
-      .buildCentroids(emb, dim = 64, chunks = centroidChunks)
-      .localCheckpoint(true)
-    val assigned = graft.ops.Similarity.assignToCentroids(
-        emb.select("vec_id", "embedding"), cent, Seq("vec_id"))
-      .localCheckpoint(true)
+    val kit = ivf(emb).checkpointed
+    val assigned = kit.assigned.localCheckpoint(true)
     graft.streaming.Drains.inParallel(
       () => knnEdges(assigned).select("id_a", "id_b")
-        .unionByName(bridgeEdges(emb, cent, assigned)) // served default
+        .unionByName(bridgeEdges(emb, kit, assigned)) // served default
         .write.mode("overwrite").parquet(new java.io.File(root, "edges").getPath),
       () => assigned.select("vec_id", "cluster")
         .write.mode("overwrite").parquet(new java.io.File(root, "assign").getPath),
-      () => cent.write.mode("overwrite").parquet(new java.io.File(root, "cent").getPath))
+      () => kit.centroids.write.mode("overwrite").parquet(new java.io.File(root, "cent").getPath))
     // ---- search (from the persisted artifacts + the vector store) ----
     val edgesR = spark.read.parquet(new java.io.File(root, "edges").getPath)
     val assignR = spark.read.parquet(new java.io.File(root, "assign").getPath)
@@ -346,13 +332,8 @@ object GraphAnnQueries {
     * oracle, s49's filtered variant, and s50's sweep so the
     * served-index SQL cannot drift between the gates. */
   private val duckServedGraphCtes: String =
-    s"""${duckCentroidCtes(64, centroidChunks)}, assigned AS MATERIALIZED (
-      |  SELECT vec_id, embedding, clabel FROM (
-      |    SELECT e.vec_id, e.embedding, c.clabel,
-      |      row_number() OVER (PARTITION BY e.vec_id
-      |        ORDER BY ${duckCosOf("e.embedding", "c.cf")} DESC, c.clabel) AS rn
-      |    FROM embeddings e, cent c)
-      |  WHERE rn = 1
+    s"""${duckCentroidCtes(64)}, assigned AS MATERIALIZED (
+      |  ${duckNearest(Seq("vec_id", "embedding"))}
       |), intra AS MATERIALIZED (
       |  SELECT id_a, id_b FROM (
       |    SELECT a.vec_id AS id_a, b.vec_id AS id_b,
@@ -362,12 +343,7 @@ object GraphAnnQueries {
       |      ON a.clabel = b.clabel AND a.vec_id <> b.vec_id)
       |  WHERE rk <= 3
       |), p2 AS MATERIALIZED (
-      |  SELECT vec_id, embedding, clabel FROM (
-      |    SELECT e.vec_id, e.embedding, c.clabel,
-      |      row_number() OVER (PARTITION BY e.vec_id
-      |        ORDER BY ${duckCosOf("e.embedding", "c.cf")} DESC, c.clabel) AS rn
-      |    FROM embeddings e, cent c)
-      |  WHERE rn = 2
+      |  ${duckNearest(Seq("vec_id", "embedding"), rank = 2)}
       |), bridge AS MATERIALIZED (
       |  SELECT id_a, id_b FROM (
       |    SELECT p.vec_id AS id_a, b.vec_id AS id_b,
@@ -459,16 +435,14 @@ object GraphAnnQueries {
   // falls back to the s17 per-predicate index for such queries).
   def s49GraphFiltered(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    val cent = graft.ops.Similarity.buildCentroids(emb, dim = 64, chunks = centroidChunks)
-    val assigned = graft.ops.Similarity.assignToCentroids(
-      emb.select("vec_id", "embedding"), cent, Seq("vec_id"))
+    val kit = ivf(emb)
+    val assigned = kit.assigned
     val edges = knnEdges(assigned).select("id_a", "id_b")
-      .unionByName(bridgeEdges(emb, cent, assigned)) // served default
+      .unionByName(bridgeEdges(emb, kit, assigned)) // served default
       .localCheckpoint()
     val qRows = emb.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val probes = graft.ops.Similarity.probeCentroids(
-      qRows, cent, Seq("query_id"), nprobe = servedNprobe, embCol = "qv")
+    val probes = kit.probes(qRows, servedNprobe, "query_id", "qv")
     val seeds = ivfSeeds(probes, assigned).localCheckpoint()
     val ball = hopBall(edges, seeds, emb, qRows) // carries the exact cos
       .localCheckpoint() // counted + filtered
@@ -538,17 +512,15 @@ object GraphAnnQueries {
   // crossJoined folds (the s40 shape).
   def s50BeamSweep(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    val cent = graft.ops.Similarity.buildCentroids(emb, dim = 64, chunks = centroidChunks)
-    val assigned = graft.ops.Similarity.assignToCentroids(
-      emb.select("vec_id", "embedding"), cent, Seq("vec_id"))
+    val kit = ivf(emb)
+    val assigned = kit.assigned
     val edges = knnEdges(assigned).select("id_a", "id_b")
-      .unionByName(bridgeEdges(emb, cent, assigned)) // served default
+      .unionByName(bridgeEdges(emb, kit, assigned)) // served default
       .localCheckpoint()
     val qRows = emb.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
       .localCheckpoint()
-    val probes = graft.ops.Similarity.probeCentroids(
-      qRows, cent, Seq("query_id"), nprobe = servedNprobe, embCol = "qv")
+    val probes = kit.probes(qRows, servedNprobe, "query_id", "qv")
     val seeds = ivfSeeds(probes, assigned).localCheckpoint()
     val truth = graft.ops.Similarity.cosineTopK(emb, qRows, 3)
       .select(col("query_id"), col("neighbor_id").as("cand"))
@@ -652,16 +624,14 @@ object GraphAnnQueries {
   // hits via (query, cand)-keyed semi-joins.
   def s38GraphRecall(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    val cent = graft.ops.Similarity.buildCentroids(emb, dim = 64, chunks = centroidChunks)
-    val assigned = graft.ops.Similarity.assignToCentroids(
-      emb.select("vec_id", "embedding"), cent, Seq("vec_id"))
+    val kit = ivf(emb)
+    val assigned = kit.assigned
     val edges = knnEdges(assigned).select("id_a", "id_b")
-      .unionByName(bridgeEdges(emb, cent, assigned)) // served default
+      .unionByName(bridgeEdges(emb, kit, assigned)) // served default
       .localCheckpoint()
     val qRows = emb.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val probes = graft.ops.Similarity.probeCentroids(
-      qRows, cent, Seq("query_id"), nprobe = servedNprobe, embCol = "qv")
+    val probes = kit.probes(qRows, servedNprobe, "query_id", "qv")
     val seeds = ivfSeeds(probes, assigned).localCheckpoint() // s34's entry rule
     val h1 = seeds.select(col("query_id"), col("seed").as("id_a"))
       .join(edges, Seq("id_a"))
@@ -705,13 +675,8 @@ object GraphAnnQueries {
   }
 
   val s38Oracle: String =
-    s"""WITH ${duckCentroidCtes(64, centroidChunks)}, assigned AS MATERIALIZED (
-      |  SELECT vec_id, embedding, clabel FROM (
-      |    SELECT e.vec_id, e.embedding, c.clabel,
-      |      row_number() OVER (PARTITION BY e.vec_id
-      |        ORDER BY ${duckCosOf("e.embedding", "c.cf")} DESC, c.clabel) AS rn
-      |    FROM embeddings e, cent c)
-      |  WHERE rn = 1
+    s"""WITH ${duckCentroidCtes(64)}, assigned AS MATERIALIZED (
+      |  ${duckNearest(Seq("vec_id", "embedding"))}
       |), intra AS MATERIALIZED (
       |  SELECT id_a, id_b FROM (
       |    SELECT a.vec_id AS id_a, b.vec_id AS id_b,
@@ -721,12 +686,7 @@ object GraphAnnQueries {
       |      ON a.clabel = b.clabel AND a.vec_id <> b.vec_id)
       |  WHERE rk <= 3
       |), p2 AS MATERIALIZED (
-      |  SELECT vec_id, embedding, clabel FROM (
-      |    SELECT e.vec_id, e.embedding, c.clabel,
-      |      row_number() OVER (PARTITION BY e.vec_id
-      |        ORDER BY ${duckCosOf("e.embedding", "c.cf")} DESC, c.clabel) AS rn
-      |    FROM embeddings e, cent c)
-      |  WHERE rn = 2
+      |  ${duckNearest(Seq("vec_id", "embedding"), rank = 2)}
       |), bridge AS MATERIALIZED (
       |  SELECT id_a, id_b FROM (
       |    SELECT p.vec_id AS id_a, b.vec_id AS id_b,
@@ -819,16 +779,14 @@ object GraphAnnQueries {
   // scalar-combine shape).
   def s40GraphSeedSweep(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    val cent = graft.ops.Similarity.buildCentroids(emb, dim = 64, chunks = centroidChunks)
+    val kit = ivf(emb)
     // the coarse-quantizer argmax is the heavy per-row kernel and rides
     // the scan (guide §2.5: a single-row-group input caps that stage at
     // ONE task) — spread the corpus once, and CHECKPOINT the assignment:
     // the three sweep arms probe it seven times between them, and each
     // probe used to re-run the whole argmax encode
-    val assigned = graft.ops.Similarity.assignToCentroids(
-        emb.select("vec_id", "embedding")
-          .repartition(spark.sparkContext.defaultParallelism, col("vec_id")),
-        cent, Seq("vec_id"))
+    val assigned = kit.assign(emb.select("vec_id", "embedding")
+        .repartition(spark.sparkContext.defaultParallelism, col("vec_id")))
       .localCheckpoint()
     val edges = knnEdges(assigned).select("id_a", "id_b")
       .localCheckpoint() // probed by all three arms' two hops
@@ -844,8 +802,7 @@ object GraphAnnQueries {
       .localCheckpoint()
     val nq = qRows.agg(count(lit(1)).as("n_queries"))
     val arms = Seq(1, 2, 4).map { np =>
-      val probes = graft.ops.Similarity.probeCentroids(
-        qRows, cent, Seq("query_id"), nprobe = np, embCol = "qv")
+      val probes = kit.probes(qRows, np, "query_id", "qv")
       val seedCost = probes
         .join(assigned.select(col("cluster"), col("vec_id").as("seed")),
           Seq("cluster"))
@@ -915,13 +872,8 @@ object GraphAnnQueries {
         |     WHERE EXISTS (SELECT 1 FROM ball$np b
         |       WHERE b.query_id = t.query_id AND b.cand = t.cand)) AS n_hits
         |  FROM nq""".stripMargin
-    s"""WITH ${duckCentroidCtes(64, centroidChunks)}, assigned AS MATERIALIZED (
-      |  SELECT vec_id, embedding, clabel FROM (
-      |    SELECT e.vec_id, e.embedding, c.clabel,
-      |      row_number() OVER (PARTITION BY e.vec_id
-      |        ORDER BY ${duckCosOf("e.embedding", "c.cf")} DESC, c.clabel) AS rn
-      |    FROM embeddings e, cent c)
-      |  WHERE rn = 1
+    s"""WITH ${duckCentroidCtes(64)}, assigned AS MATERIALIZED (
+      |  ${duckNearest(Seq("vec_id", "embedding"))}
       |), edges AS MATERIALIZED (
       |  SELECT id_a, id_b FROM (
       |    SELECT a.vec_id AS id_a, b.vec_id AS id_b,
@@ -974,19 +926,17 @@ object GraphAnnQueries {
   // vertex (edge list grows 4/3×), ball still ≤ 4 + 16 + 64.
   def s41GraphBridgedRecall(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    val cent = graft.ops.Similarity.buildCentroids(emb, dim = 64, chunks = centroidChunks)
-    val assigned = graft.ops.Similarity.assignToCentroids(
-      emb.select("vec_id", "embedding"), cent, Seq("vec_id"))
+    val kit = ivf(emb)
+    val assigned = kit.assigned
     val edges = knnEdges(assigned).select("id_a", "id_b")
       .localCheckpoint()
     val edgesB = edges
-      .unionByName(bridgeEdges(emb, cent, assigned)) // shared with s34/s36/s38
+      .unionByName(bridgeEdges(emb, kit, assigned)) // shared with s34/s36/s38
       .localCheckpoint()
     val qRows = emb.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
       .localCheckpoint()
-    val probesQ = graft.ops.Similarity.probeCentroids(
-      qRows, cent, Seq("query_id"), nprobe = 2, embCol = "qv")
+    val probesQ = kit.probes(qRows, 2, "query_id", "qv")
     val seeds = ivfSeeds(probesQ, assigned).localCheckpoint()
     val truth = graft.ops.Similarity.cosineTopK(emb, qRows, 3)
       .select(col("query_id"), col("neighbor_id").as("cand"))
@@ -1039,13 +989,8 @@ object GraphAnnQueries {
         |    JOIN $es e2 ON e2.id_a = e.id_b)
         |  WHERE cand <> query_id
         |)""".stripMargin
-    s"""WITH ${duckCentroidCtes(64, centroidChunks)}, assigned AS MATERIALIZED (
-      |  SELECT vec_id, embedding, clabel FROM (
-      |    SELECT e.vec_id, e.embedding, c.clabel,
-      |      row_number() OVER (PARTITION BY e.vec_id
-      |        ORDER BY ${duckCosOf("e.embedding", "c.cf")} DESC, c.clabel) AS rn
-      |    FROM embeddings e, cent c)
-      |  WHERE rn = 1
+    s"""WITH ${duckCentroidCtes(64)}, assigned AS MATERIALIZED (
+      |  ${duckNearest(Seq("vec_id", "embedding"))}
       |), edges AS MATERIALIZED (
       |  SELECT id_a, id_b FROM (
       |    SELECT a.vec_id AS id_a, b.vec_id AS id_b,
@@ -1055,12 +1000,7 @@ object GraphAnnQueries {
       |      ON a.clabel = b.clabel AND a.vec_id <> b.vec_id)
       |  WHERE rk <= 3
       |), p2 AS MATERIALIZED (
-      |  SELECT vec_id, embedding, clabel FROM (
-      |    SELECT e.vec_id, e.embedding, c.clabel,
-      |      row_number() OVER (PARTITION BY e.vec_id
-      |        ORDER BY ${duckCosOf("e.embedding", "c.cf")} DESC, c.clabel) AS rn
-      |    FROM embeddings e, cent c)
-      |  WHERE rn = 2
+      |  ${duckNearest(Seq("vec_id", "embedding"), rank = 2)}
       |), bridge AS MATERIALIZED (
       |  SELECT id_a, id_b FROM (
       |    SELECT p.vec_id AS id_a, b.vec_id AS id_b,

@@ -1206,11 +1206,7 @@ object GraphQueries {
   // aggregate; deletes cost the same as inserts, and the census never
   // rescans the edge history.
   def g16StreamDegreeRetract(spark: SparkSession, dir: String): DataFrame = {
-    val root = graft.streaming.Drains.tmpFixtureDir("graft_g16_", dir)
-    root.mkdirs()
-    val feed = new java.io.File(root, "feed").getPath
-    val state = new java.io.File(root, "state").getPath
-    val ckpt = new java.io.File(root, "ckpt").getPath
+    val (_, feed, state, ckpt) = graft.streaming.Drains.streamDirs("graft_g16_", dir)
     val pairs = weightedPairs(spark, dir)
     val dirs = pairs.select(col("pa").as("src"), col("pb").as("dst"))
       .unionByName(pairs.select(col("pb").as("src"), col("pa").as("dst")))
@@ -1261,12 +1257,8 @@ object GraphQueries {
   // Shares g16's oracle — a mismatch isolates the offset/restart seam
   // from the retraction algebra.
   def g17RestartDegree(spark: SparkSession, dir: String): DataFrame = {
-    val root = graft.streaming.Drains.tmpFixtureDir("graft_g17_", dir)
-    root.mkdirs()
+    val (root, feed, state, ckpt) = graft.streaming.Drains.streamDirs("graft_g17_", dir)
     val staging = new java.io.File(root, "staging").getPath
-    val feed = new java.io.File(root, "feed").getPath
-    val state = new java.io.File(root, "state").getPath
-    val ckpt = new java.io.File(root, "ckpt").getPath
     val pairs = weightedPairs(spark, dir)
     val dirs = pairs.select(col("pa").as("src"), col("pb").as("dst"))
       .unionByName(pairs.select(col("pb").as("src"), col("pa").as("dst")))

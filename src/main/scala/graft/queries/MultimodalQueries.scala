@@ -505,13 +505,9 @@ object MultimodalQueries {
   // boundaries, not the manifest arithmetic.
   def m10StreamManifest(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.ViewMaintenance
-    val root = graft.streaming.Drains.tmpFixtureDir("graft_m10_", dir)
-    root.mkdirs()
-    val feed = new java.io.File(root, "feed").getPath
-    val counts = new java.io.File(root, "counts").getPath
+    val (root, feed, counts, ckpt) = graft.streaming.Drains.streamDirs("graft_m10_", dir, "counts")
     val ph = new java.io.File(root, "ph").getPath
     val fh = new java.io.File(root, "fh").getPath
-    val ckpt = new java.io.File(root, "ckpt").getPath
     graft.ingest.BinlogSink.writeKeyedStrings(
       Tables.documents(spark, dir).select(col("doc_id"), col("text"))
         .repartitionByRange(4, col("doc_id")), feed) // VARCHAR bound derived from the data (r12 advice)
@@ -584,12 +580,8 @@ object MultimodalQueries {
   // the corpus never reshuffles.
   def m11StreamMediaDedup(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.ViewMaintenance
-    val root = graft.streaming.Drains.tmpFixtureDir("graft_m11_", dir)
-    root.mkdirs()
-    val feed = new java.io.File(root, "feed").getPath
-    val idx = new java.io.File(root, "idx").getPath
+    val (root, feed, idx, ckpt) = graft.streaming.Drains.streamDirs("graft_m11_", dir, "idx")
     val flags = new java.io.File(root, "flags").getPath
-    val ckpt = new java.io.File(root, "ckpt").getPath
     val base = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
     val corpus = base.unionByName(
       base.filter(col("doc_id") % 7 === 0)
@@ -688,12 +680,8 @@ object MultimodalQueries {
   // construction (m11 keeps the at-least-once posture for contrast).
   def m12CompactedMediaDedup(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.ViewMaintenance
-    val root = graft.streaming.Drains.tmpFixtureDir("graft_m12_", dir)
-    root.mkdirs()
-    val feed = new java.io.File(root, "feed").getPath
-    val idx = new java.io.File(root, "idx").getPath
+    val (root, feed, idx, ckpt) = graft.streaming.Drains.streamDirs("graft_m12_", dir, "idx")
     val flags = new java.io.File(root, "flags").getPath
-    val ckpt = new java.io.File(root, "ckpt").getPath
     val idxSchema = "content_hash STRING, keeper BIGINT, blen BIGINT, batch_id BIGINT"
     val flagSchema = "content_hash STRING, media_id BIGINT, byte_len BIGINT, batch_id BIGINT"
     val base = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
@@ -782,13 +770,9 @@ object MultimodalQueries {
   // exactly the right files. Shares m04's oracle.
   def m13RestartMediaDedup(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.ViewMaintenance
-    val root = graft.streaming.Drains.tmpFixtureDir("graft_m13_", dir)
-    root.mkdirs()
+    val (root, feed, idx, ckpt) = graft.streaming.Drains.streamDirs("graft_m13_", dir, "idx")
     val staging = new java.io.File(root, "staging").getPath
-    val feed = new java.io.File(root, "feed").getPath
-    val idx = new java.io.File(root, "idx").getPath
     val flags = new java.io.File(root, "flags").getPath
-    val ckpt = new java.io.File(root, "ckpt").getPath
     val base = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
     // the m12 adjacent-id remap: flag rows exist in EVERY batch, so both
     // installments of the two-run drain carry set-state work and the

@@ -1122,12 +1122,8 @@ object PipelineQueries {
   // state read/append — admission never shuffles the corpus.
   def p14StreamQuotaAdmission(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.ViewMaintenance
-    val root = graft.streaming.Drains.tmpFixtureDir("graft_p14_", dir)
-    root.mkdirs()
-    val feed = new java.io.File(root, "feed").getPath
-    val state = new java.io.File(root, "state").getPath
+    val (root, feed, state, ckpt) = graft.streaming.Drains.streamDirs("graft_p14_", dir)
     val admitted = new java.io.File(root, "admitted").getPath
-    val ckpt = new java.io.File(root, "ckpt").getPath
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"), col("text"))
     // data-derived per-language budget (integer-exact on both engines)
@@ -1237,9 +1233,7 @@ object PipelineQueries {
   // directly (applyIdempotent in a loop) and the gate stays batch-cheap.
   def p15StateMetrics(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.ViewMaintenance
-    val root = graft.streaming.Drains.tmpFixtureDir("graft_p15_", dir)
-    root.mkdirs()
-    val state = new java.io.File(root, "state").getPath
+    val (_, _, state, _) = graft.streaming.Drains.streamDirs("graft_p15_", dir)
     val stateSchema = "lang STRING, t BIGINT, batch_id BIGINT"
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"),
@@ -1309,9 +1303,7 @@ object PipelineQueries {
   // partials age out through compaction.
   def p16StateEvolution(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.ViewMaintenance
-    val root = graft.streaming.Drains.tmpFixtureDir("graft_p16_", dir)
-    root.mkdirs()
-    val state = new java.io.File(root, "state").getPath
+    val (_, _, state, _) = graft.streaming.Drains.streamDirs("graft_p16_", dir)
     val wideSchema = "lang STRING, t BIGINT, n_docs BIGINT, batch_id BIGINT"
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"),

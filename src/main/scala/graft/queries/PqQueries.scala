@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.VectorFunctions.cosineSim
-import SimilarityQueries.{centroidChunks, duckCentroidCtes, duckCosOf, duckCos, dotAxis, powerAxis, duckPowerCtes}
+import SimilarityQueries.{duckCentroidCtes, duckCosOf, duckRankedCtes, ivf, dotAxis, powerAxis, duckPowerCtes}
 
 /** The QUANTIZED-INDEX matrix (split from SimilarityQueries in r12 —
   * same code, same oracles): PQ (s05), IVF+PQ (s06/s10), residual
@@ -76,13 +76,12 @@ object PqQueries {
     import graft.functions.PqFunctions
     val m = 8
     val emb = Tables.embeddings(spark, dir)
-    val cent = graft.ops.Similarity.buildCentroids(emb, dim = 64, chunks = centroidChunks)
-    val codebook = graft.ops.Similarity.collectCodebook(cent)
+    val kit = ivf(emb)
     val encoded = emb.select(col("vec_id"),
-      PqFunctions.pqCodes(col("embedding"), codebook, m).as("codes"))
+      PqFunctions.pqCodes(col("embedding"), kit.codebook, m).as("codes"))
     val q = emb.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    pqSearch(emb, encoded, q, codebook, m, candK = 20,
+    pqSearch(emb, encoded, q, kit.codebook, m, candK = 20,
       joinCond = col("vec_id") =!= col("query_id"))
   }
 
@@ -97,16 +96,14 @@ object PqQueries {
     import graft.functions.PqFunctions
     val m = 8
     val emb = Tables.embeddings(spark, dir)
-    val cent = graft.ops.Similarity.buildCentroids(emb, dim = 64, chunks = centroidChunks)
-    val codebook = graft.ops.Similarity.collectCodebook(cent)
-    val assigned = graft.ops.Similarity.assignToCentroids(
-      emb.select("vec_id", "embedding"), cent, Seq("vec_id"))
+    val kit = ivf(emb)
+    val assigned = kit.assigned
     val encoded = assigned.select(col("vec_id"), col("cluster"),
-      PqFunctions.pqCodes(col("embedding"), codebook, m).as("codes"))
+      PqFunctions.pqCodes(col("embedding"), kit.codebook, m).as("codes"))
     val q = assigned.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         col("cluster").as("qc"))
-    pqSearch(emb, encoded, q, codebook, m, candK = 20,
+    pqSearch(emb, encoded, q, kit.codebook, m, candK = 20,
       joinCond = col("cluster") === col("qc") && col("vec_id") =!= col("query_id"))
   }
 
@@ -125,32 +122,23 @@ object PqQueries {
     import graft.functions.PqFunctions
     val m = 8
     val emb = Tables.embeddings(spark, dir)
-    val cent = graft.ops.Similarity.buildCentroids(emb, dim = 64, chunks = centroidChunks)
-    val codebook = graft.ops.Similarity.collectCodebook(cent)
-    val assigned = graft.ops.Similarity.assignToCentroids(
-      emb.select("vec_id", "embedding"), cent, Seq("vec_id"))
+    val kit = ivf(emb)
+    val assigned = kit.assigned
     val encoded = assigned.select(col("vec_id"), col("cluster"),
-      PqFunctions.pqCodes(col("embedding"), codebook, m).as("codes"))
+      PqFunctions.pqCodes(col("embedding"), kit.codebook, m).as("codes"))
     val qRows = assigned.filter(col("vec_id") % 50 === 0)
-    val probes = graft.ops.Similarity.probeCentroids(
-        qRows.select("vec_id", "embedding"), cent, Seq("vec_id"), nprobe = 2)
+    val probes = kit.probes(qRows.select("vec_id", "embedding"), 2)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         col("cluster").as("qc"))
-    pqSearch(emb, encoded, probes, codebook, m, candK = 20,
+    pqSearch(emb, encoded, probes, kit.codebook, m, candK = 20,
       joinCond = col("cluster") === col("qc") && col("vec_id") =!= col("query_id"),
       qExact = Some(qRows.select(col("vec_id").as("query_id"),
         col("embedding").as("qv"))))
   }
 
   val s10Oracle: String = duckPqSearchSql(8,
-    s"""WITH ${duckCentroidCtes(64, centroidChunks)}, ranked AS (
-      |  SELECT e.vec_id, e.embedding, c.clabel,
-      |    row_number() OVER (PARTITION BY e.vec_id
-      |      ORDER BY ${duckCosOf("e.embedding", "c.cf")} DESC, c.clabel) AS rn
-      |  FROM embeddings e, cent c
-      |), assigned AS (
-      |  SELECT vec_id, embedding, clabel FROM ranked WHERE rn = 1
-      |), qp AS (
+    s"""WITH ${duckCentroidCtes(64)},
+      |${duckRankedCtes("ranked", "assigned", Seq("vec_id", "embedding"))}, qp AS (
       |  SELECT vec_id AS query_id, clabel AS qc
       |  FROM ranked WHERE vec_id % 50 = 0 AND rn <= 2
       |), q AS (
@@ -225,20 +213,14 @@ object PqQueries {
   }
 
   val s05Oracle: String = duckPqSearchSql(8,
-    s"""WITH ${duckCentroidCtes(64, centroidChunks)}, q AS (
+    s"""WITH ${duckCentroidCtes(64)}, q AS (
       |  SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id % 50 = 0
       |)""".stripMargin,
     appPreJoins = "", appPostJoins = "")
 
   val s06Oracle: String = duckPqSearchSql(8,
-    s"""WITH ${duckCentroidCtes(64, centroidChunks)}, ranked AS (
-      |  SELECT e.vec_id, e.embedding, c.clabel,
-      |    row_number() OVER (PARTITION BY e.vec_id
-      |      ORDER BY ${duckCosOf("e.embedding", "c.cf")} DESC, c.clabel) AS rn
-      |  FROM embeddings e, cent c
-      |), assigned AS (
-      |  SELECT vec_id, embedding, clabel FROM ranked WHERE rn = 1
-      |), q AS (
+    s"""WITH ${duckCentroidCtes(64)},
+      |${duckRankedCtes("ranked", "assigned", Seq("vec_id", "embedding"))}, q AS (
       |  SELECT vec_id AS query_id, embedding AS qv, clabel AS qc
       |  FROM assigned WHERE vec_id % 50 = 0
       |)""".stripMargin,
@@ -267,17 +249,15 @@ object PqQueries {
     import graft.functions.VectorFunctions.vecSub
     val m = 8
     val emb = Tables.embeddings(spark, dir).select("vec_id", "label", "embedding")
-    val cent = graft.ops.Similarity.buildCentroids(emb, dim = 64, chunks = centroidChunks)
-    val assigned = graft.ops.Similarity.assignToCentroids(emb, cent, Seq("vec_id"))
-    val withRes = assigned.join(broadcast(cent), col("cluster") === col("clabel"))
+    val kit = ivf(emb)
+    val assigned = kit.assign(emb)
+    val withRes = assigned.join(broadcast(kit.centroids), col("cluster") === col("clabel"))
       .withColumn("res", vecSub(col("embedding"), col("cf")))
       .select("vec_id", "label", "cluster", "embedding", "res")
       // three actions consume this lineage (codebook fold, encode, the
       // query branch): materialize it once, bit-preserving (s16's pattern)
       .localCheckpoint()
-    val resCent = graft.ops.Similarity.buildCentroids(
-      withRes, dim = 64, chunks = centroidChunks, embCol = "res")
-    val resCodebook = graft.ops.Similarity.collectCodebook(resCent)
+    val resCodebook = ivf(withRes, embCol = "res").codebook
     val encoded = withRes.select(col("vec_id"), col("cluster"),
       PqFunctions.pqCodes(col("res"), resCodebook, m).as("codes"))
     val q = withRes.filter(col("vec_id") % 50 === 0)
@@ -287,29 +267,27 @@ object PqQueries {
       joinCond = col("cluster") === col("qc") && col("vec_id") =!= col("query_id"))
   }
 
-  val s08Oracle: String = {
-    val resExpr =
-      "list_transform(range(1, 65), i -> CAST(CAST(a.embedding[i] AS DOUBLE) - CAST(c.cf[i] AS DOUBLE) AS FLOAT))"
+  /** The residual gates' (s08, s11, s16) shared oracle prefix: the `cent`
+    * CTEs, each row's `r1` ranking and `a1` assignment, its `res` residual
+    * against its assigned centroid (VecSubToFloat's double-subtract-then-
+    * round) and the `centr` residual centroids over the original labels. */
+  private def duckResidualCtes: String =
+    s"""WITH ${duckCentroidCtes(64)},
+      |${duckRankedCtes("r1", "a1", Seq("vec_id", "label", "embedding"))}, res AS (
+      |  SELECT a.vec_id, a.label, a.clabel AS cluster, a.embedding,
+      |    list_transform(range(1, 65), i -> CAST(CAST(a.embedding[i] AS DOUBLE) - CAST(c.cf[i] AS DOUBLE) AS FLOAT)) AS res
+      |  FROM a1 a JOIN cent c ON c.clabel = a.clabel
+      |), ${duckCentroidCtes(64, src = "res", sfx = "r", embCol = "res")}""".stripMargin
+
+  val s08Oracle: String =
     duckPqSearchSql(8,
-      s"""WITH ${duckCentroidCtes(64, centroidChunks)}, r1 AS (
-        |  SELECT e.vec_id, e.label, e.embedding, c.clabel,
-        |    row_number() OVER (PARTITION BY e.vec_id
-        |      ORDER BY ${duckCosOf("e.embedding", "c.cf")} DESC, c.clabel) AS rn
-        |  FROM embeddings e, cent c
-        |), a1 AS (
-        |  SELECT vec_id, label, embedding, clabel FROM r1 WHERE rn = 1
-        |), res AS (
-        |  SELECT a.vec_id, a.label, a.clabel AS cluster, a.embedding,
-        |    $resExpr AS res
-        |  FROM a1 a JOIN cent c ON c.clabel = a.clabel
-        |), ${duckCentroidCtes(64, centroidChunks, src = "res", sfx = "r", embCol = "res")}, q AS (
+      s"""$duckResidualCtes, q AS (
         |  SELECT a.vec_id AS query_id, a.embedding AS qv, a.cluster AS qc
         |  FROM res a WHERE a.vec_id % 50 = 0
         |)""".stripMargin,
       appPreJoins = "  JOIN res a ON a.vec_id = co.vec_id\n",
       appPostJoins = "\n  JOIN q qq ON qq.query_id = q0.query_id AND qq.qc = a.cluster",
       corpusSrc = "res", corpusVec = "res", centName = "centr")
-  }
 
   /** Ascending-index dot product in doubles over two `array<float>`
     * columns — the exact Spark mirror of the oracle's
@@ -338,25 +316,22 @@ object PqQueries {
     import graft.functions.VectorFunctions.vecSub
     val m = 8
     val emb = Tables.embeddings(spark, dir).select("vec_id", "label", "embedding")
-    val cent = graft.ops.Similarity.buildCentroids(emb, dim = 64, chunks = centroidChunks)
-    val assigned = graft.ops.Similarity.assignToCentroids(emb, cent, Seq("vec_id"))
-    val withRes = assigned.join(broadcast(cent), col("cluster") === col("clabel"))
+    val kit = ivf(emb)
+    val assigned = kit.assign(emb)
+    val withRes = assigned.join(broadcast(kit.centroids), col("cluster") === col("clabel"))
       .withColumn("res", vecSub(col("embedding"), col("cf")))
       .select("vec_id", "label", "cluster", "embedding", "res")
       // three actions consume this lineage (codebook fold, encode, the
       // query branch): materialize it once, bit-preserving (s16's pattern)
       .localCheckpoint()
-    val resCent = graft.ops.Similarity.buildCentroids(
-      withRes, dim = 64, chunks = centroidChunks, embCol = "res")
-    val resCodebook = graft.ops.Similarity.collectCodebook(resCent)
+    val resCodebook = ivf(withRes, embCol = "res").codebook
     val encoded = withRes.select(col("vec_id"), col("cluster"),
       PqFunctions.pqCodes(col("res"), resCodebook, m).as("codes"))
     val qRows = withRes.filter(col("vec_id") % 50 === 0)
-    val probes = graft.ops.Similarity.probeCentroids(
-        qRows.select("vec_id", "embedding"), cent, Seq("vec_id"), nprobe = 2)
+    val probes = kit.probes(qRows.select("vec_id", "embedding"), 2)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         col("cluster").as("qc"))
-      .join(broadcast(cent), col("qc") === col("clabel"))
+      .join(broadcast(kit.centroids), col("qc") === col("clabel"))
       .withColumn("qcdot", dotD(col("qv"), col("cf")))
       .select("query_id", "qv", "qc", "qcdot")
     pqSearch(emb, encoded, probes, resCodebook, m, candK = 20,
@@ -370,18 +345,7 @@ object PqQueries {
     val dotQC =
       "list_sum(list_transform(list_zip(r.embedding, c.cf), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))"
     duckPqSearchSql(8,
-      s"""WITH ${duckCentroidCtes(64, centroidChunks)}, r1 AS (
-        |  SELECT e.vec_id, e.label, e.embedding, c.clabel,
-        |    row_number() OVER (PARTITION BY e.vec_id
-        |      ORDER BY ${duckCosOf("e.embedding", "c.cf")} DESC, c.clabel) AS rn
-        |  FROM embeddings e, cent c
-        |), a1 AS (
-        |  SELECT vec_id, label, embedding, clabel FROM r1 WHERE rn = 1
-        |), res AS (
-        |  SELECT a.vec_id, a.label, a.clabel AS cluster, a.embedding,
-        |    list_transform(range(1, 65), i -> CAST(CAST(a.embedding[i] AS DOUBLE) - CAST(c.cf[i] AS DOUBLE) AS FLOAT)) AS res
-        |  FROM a1 a JOIN cent c ON c.clabel = a.clabel
-        |), ${duckCentroidCtes(64, centroidChunks, src = "res", sfx = "r", embCol = "res")}, qp AS (
+      s"""$duckResidualCtes, qp AS (
         |  SELECT r.vec_id AS query_id, r.clabel AS qc, $dotQC AS qcdot
         |  FROM r1 r JOIN cent c ON c.clabel = r.clabel
         |  WHERE r.vec_id % 50 = 0 AND r.rn <= 2
@@ -419,15 +383,13 @@ object PqQueries {
     root.mkdirs()
     val emb = Tables.embeddings(spark, dir)
     // ---- index build (once) ----
-    val cent = graft.ops.Similarity.buildCentroids(emb, dim = 64, chunks = centroidChunks)
-    val codebook = graft.ops.Similarity.collectCodebook(cent)
-    val assigned = graft.ops.Similarity.assignToCentroids(
-      emb.select("vec_id", "embedding"), cent, Seq("vec_id"))
+    val kit = ivf(emb)
+    val assigned = kit.assigned
     assigned.select(col("vec_id"), col("cluster"),
-        PqFunctions.pqCodes(col("embedding"), codebook, m).as("codes"))
+        PqFunctions.pqCodes(col("embedding"), kit.codebook, m).as("codes"))
       .write.mode("overwrite").partitionBy("cluster")
       .parquet(new java.io.File(root, "codes").getPath)
-    graft.ops.Similarity.codebookDf(spark, codebook)
+    graft.ops.Similarity.codebookDf(spark, kit.codebook)
       .write.mode("overwrite").parquet(new java.io.File(root, "codebook").getPath)
     // ---- search (from the persisted artifacts only) ----
     val centRead = spark.read.parquet(new java.io.File(root, "codebook").getPath)
@@ -461,35 +423,25 @@ object PqQueries {
     val m = 8
     val emb = Tables.embeddings(spark, dir)
     val base = emb.filter(col("vec_id") % 10 =!= 0)
-    val cent = graft.ops.Similarity.buildCentroids(base, dim = 64, chunks = centroidChunks)
-    val codebook = graft.ops.Similarity.collectCodebook(cent)
+    val kit = ivf(base)
     def encode(rows: DataFrame): DataFrame =
-      graft.ops.Similarity.assignToCentroids(
-          rows.select("vec_id", "embedding"), cent, Seq("vec_id"))
+      kit.assign(rows.select("vec_id", "embedding"))
         .select(col("vec_id"), col("cluster"),
-          PqFunctions.pqCodes(col("embedding"), codebook, m).as("codes"))
+          PqFunctions.pqCodes(col("embedding"), kit.codebook, m).as("codes"))
     // base index + appended delta, both against the frozen artifacts
     val encoded = encode(base).unionByName(encode(emb.filter(col("vec_id") % 10 === 0)))
-    val q = graft.ops.Similarity.assignToCentroids(
-        emb.filter(col("vec_id") % 50 === 0).select("vec_id", "embedding"),
-        cent, Seq("vec_id"))
+    val q = kit.assign(emb.filter(col("vec_id") % 50 === 0).select("vec_id", "embedding"))
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         col("cluster").as("qc"))
-    pqSearch(emb, encoded, q, codebook, m, candK = 20,
+    pqSearch(emb, encoded, q, kit.codebook, m, candK = 20,
       joinCond = col("cluster") === col("qc") && col("vec_id") =!= col("query_id"))
   }
 
   val s13Oracle: String = duckPqSearchSql(8,
     s"""WITH base AS (
       |  SELECT vec_id, label, embedding FROM embeddings WHERE vec_id % 10 <> 0
-      |), ${duckCentroidCtes(64, centroidChunks, src = "base")}, ranked AS (
-      |  SELECT e.vec_id, e.embedding, c.clabel,
-      |    row_number() OVER (PARTITION BY e.vec_id
-      |      ORDER BY ${duckCosOf("e.embedding", "c.cf")} DESC, c.clabel) AS rn
-      |  FROM embeddings e, cent c
-      |), assigned AS (
-      |  SELECT vec_id, embedding, clabel FROM ranked WHERE rn = 1
-      |), q AS (
+      |), ${duckCentroidCtes(64, src = "base")},
+      |${duckRankedCtes("ranked", "assigned", Seq("vec_id", "embedding"))}, q AS (
       |  SELECT vec_id AS query_id, embedding AS qv, clabel AS qc
       |  FROM assigned WHERE vec_id % 50 = 0
       |)""".stripMargin,
@@ -604,9 +556,7 @@ object PqQueries {
     val mins = bounds.map(_.getFloat(1)).toSeq
     val scales = bounds.map(r =>
       (r.getFloat(2).toDouble - r.getFloat(1).toDouble) / 255.0).toSeq
-    val cent = graft.ops.Similarity.buildCentroids(emb, dim = dim, chunks = centroidChunks)
-    val assigned = graft.ops.Similarity.assignToCentroids(
-      emb.select("vec_id", "embedding"), cent, Seq("vec_id"))
+    val assigned = ivf(emb, dim = dim).assigned
     val encoded = assigned.select(col("vec_id"), col("cluster"),
       Sq8Functions.sq8Codes(col("embedding"), mins, scales).as("codes"))
     val q = assigned.filter(col("vec_id") % 50 === 0)
@@ -632,21 +582,15 @@ object PqQueries {
   }
 
   val s15Oracle: String =
-    s"""WITH ${duckCentroidCtes(64, centroidChunks)}, bounds AS (
+    s"""WITH ${duckCentroidCtes(64)}, bounds AS (
       |  SELECT i, MIN(e.embedding[i]) AS mn, MAX(e.embedding[i]) AS mx
       |  FROM embeddings e, range(1, 65) t(i) GROUP BY i
       |), b AS (
       |  SELECT list(CAST(mn AS FLOAT) ORDER BY i) AS mns,
       |    list((CAST(mx AS DOUBLE) - CAST(mn AS DOUBLE)) / 255.0 ORDER BY i) AS scs
       |  FROM bounds
-      |), ranked AS (
-      |  SELECT e.vec_id, e.embedding, c.clabel,
-      |    row_number() OVER (PARTITION BY e.vec_id
-      |      ORDER BY ${duckCosOf("e.embedding", "c.cf")} DESC, c.clabel) AS rn
-      |  FROM embeddings e, cent c
-      |), assigned AS (
-      |  SELECT vec_id, embedding, clabel FROM ranked WHERE rn = 1
-      |), dec AS (
+      |),
+      |${duckRankedCtes("ranked", "assigned", Seq("vec_id", "embedding"))}, dec AS (
       |  SELECT a.vec_id, a.clabel,
       |    list_transform(range(1, 65), i ->
       |      CAST(CAST(b.mns[i] AS DOUBLE) +
@@ -697,9 +641,9 @@ object PqQueries {
     import graft.functions.VectorFunctions.vecSub
     val m = 8
     val emb = Tables.embeddings(spark, dir).select("vec_id", "label", "embedding")
-    val cent = graft.ops.Similarity.buildCentroids(emb, dim = 64, chunks = centroidChunks)
-    val assigned = graft.ops.Similarity.assignToCentroids(emb, cent, Seq("vec_id"))
-    val withRes = assigned.join(broadcast(cent), col("cluster") === col("clabel"))
+    val kit = ivf(emb)
+    val assigned = kit.assign(emb)
+    val withRes = assigned.join(broadcast(kit.centroids), col("cluster") === col("clabel"))
       .withColumn("res", vecSub(col("embedding"), col("cf")))
       .select("vec_id", "label", "cluster", "embedding", "res")
     // The residual table feeds FOUR actions (codebook init fold, the
@@ -709,9 +653,7 @@ object PqQueries {
     // scan+assign+join per action — at scale this is "cache the training
     // sample before k-means", exactly what FAISS's train() does.
     val withResM = withRes.localCheckpoint()
-    val resCent = graft.ops.Similarity.kmeansCentroids(
-      withResM, dim = 64, iters = 1, chunks = centroidChunks, embCol = "res")
-    val resCodebook = graft.ops.Similarity.collectCodebook(resCent)
+    val resCodebook = ivf(withResM, embCol = "res").kmeans(iters = 1).codebook
     val encoded = withResM.select(col("vec_id"), col("cluster"),
       PqFunctions.pqCodes(col("res"), resCodebook, m).as("codes"))
     val q = withResM.filter(col("vec_id") % 50 === 0)
@@ -721,36 +663,22 @@ object PqQueries {
       joinCond = col("cluster") === col("qc") && col("vec_id") =!= col("query_id"))
   }
 
-  val s16Oracle: String = {
-    val resExpr =
-      "list_transform(range(1, 65), i -> CAST(CAST(a.embedding[i] AS DOUBLE) - CAST(c.cf[i] AS DOUBLE) AS FLOAT))"
+  val s16Oracle: String =
     duckPqSearchSql(8,
-      s"""WITH ${duckCentroidCtes(64, centroidChunks)}, r1 AS (
-        |  SELECT e.vec_id, e.label, e.embedding, c.clabel,
-        |    row_number() OVER (PARTITION BY e.vec_id
-        |      ORDER BY ${duckCosOf("e.embedding", "c.cf")} DESC, c.clabel) AS rn
-        |  FROM embeddings e, cent c
-        |), a1 AS (
-        |  SELECT vec_id, label, embedding, clabel FROM r1 WHERE rn = 1
-        |), res AS (
-        |  SELECT a.vec_id, a.label, a.clabel AS cluster, a.embedding,
-        |    $resExpr AS res
-        |  FROM a1 a JOIN cent c ON c.clabel = a.clabel
-        |), ${duckCentroidCtes(64, centroidChunks, src = "res", sfx = "r", embCol = "res")}, rl AS (
+      s"""$duckResidualCtes, rl AS (
         |  SELECT a.vec_id, a.res, c.clabel,
         |    row_number() OVER (PARTITION BY a.vec_id
         |      ORDER BY ${duckCosOf("a.res", "c.cf")} DESC, c.clabel) AS rn
         |  FROM res a, centr c
         |), al AS (
         |  SELECT vec_id, res, clabel AS label FROM rl WHERE rn = 1
-        |), ${duckCentroidCtes(64, centroidChunks, src = "al", sfx = "r2", embCol = "res")}, q AS (
+        |), ${duckCentroidCtes(64, src = "al", sfx = "r2", embCol = "res")}, q AS (
         |  SELECT a.vec_id AS query_id, a.embedding AS qv, a.cluster AS qc
         |  FROM res a WHERE a.vec_id % 50 = 0
         |)""".stripMargin,
       appPreJoins = "  JOIN res a ON a.vec_id = co.vec_id\n",
       appPostJoins = "\n  JOIN q qq ON qq.query_id = q0.query_id AND qq.qc = a.cluster",
       corpusSrc = "res", corpusVec = "res", centName = "centr2")
-  }
 
   // s20 — tombstone-aware search: FAISS remove_ids() semantics, the
   // DELETE leg of index maintenance (s12 persists, s13 appends, s20
@@ -767,12 +695,10 @@ object PqQueries {
     import graft.functions.PqFunctions
     val m = 8
     val emb = Tables.embeddings(spark, dir)
-    val cent = graft.ops.Similarity.buildCentroids(emb, dim = 64, chunks = centroidChunks)
-    val codebook = graft.ops.Similarity.collectCodebook(cent)
-    val assigned = graft.ops.Similarity.assignToCentroids(
-      emb.select("vec_id", "embedding"), cent, Seq("vec_id"))
+    val kit = ivf(emb)
+    val assigned = kit.assigned
     val encoded = assigned.select(col("vec_id"), col("cluster"),
-      PqFunctions.pqCodes(col("embedding"), codebook, m).as("codes"))
+      PqFunctions.pqCodes(col("embedding"), kit.codebook, m).as("codes"))
     val tombstones = emb.filter(col("vec_id") % 9 === 0).select("vec_id")
     val live = encoded.join(tombstones, Seq("vec_id"), "left_anti")
     // queries are NOT filtered: a deleted vector may still arrive as a
@@ -780,21 +706,15 @@ object PqQueries {
     val q = assigned.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         col("cluster").as("qc"))
-    pqSearch(emb, live, q, codebook, m, candK = 20,
+    pqSearch(emb, live, q, kit.codebook, m, candK = 20,
       joinCond = col("cluster") === col("qc") && col("vec_id") =!= col("query_id"))
   }
 
   val s20Oracle: String = duckPqSearchSql(8,
-    s"""WITH ${duckCentroidCtes(64, centroidChunks)}, live AS (
+    s"""WITH ${duckCentroidCtes(64)}, live AS (
       |  SELECT vec_id, embedding FROM embeddings WHERE vec_id % 9 <> 0
-      |), ranked AS (
-      |  SELECT e.vec_id, e.embedding, c.clabel,
-      |    row_number() OVER (PARTITION BY e.vec_id
-      |      ORDER BY ${duckCosOf("e.embedding", "c.cf")} DESC, c.clabel) AS rn
-      |  FROM embeddings e, cent c
-      |), assigned AS (
-      |  SELECT vec_id, embedding, clabel FROM ranked WHERE rn = 1
-      |), q AS (
+      |),
+      |${duckRankedCtes("ranked", "assigned", Seq("vec_id", "embedding"))}, q AS (
       |  SELECT vec_id AS query_id, embedding AS qv, clabel AS qc
       |  FROM assigned WHERE vec_id % 50 = 0
       |)""".stripMargin,
@@ -821,13 +741,12 @@ object PqQueries {
     import graft.functions.PqFunctions
     val m = 8
     val emb = Tables.embeddings(spark, dir)
-    val cent = graft.ops.Similarity.buildCentroids(emb, dim = 64, chunks = centroidChunks)
-    val codebook = graft.ops.Similarity.collectCodebook(cent)
+    val kit = ivf(emb)
     val encoded = emb.select(col("vec_id"), col("embedding"),
-      PqFunctions.pqCodes(col("embedding"), codebook, m).as("codes"))
+      PqFunctions.pqCodes(col("embedding"), kit.codebook, m).as("codes"))
     encoded
       .select(posexplode(PqFunctions.pqSqError(
-        col("embedding"), col("codes"), codebook, m)).as(Seq("subspace", "err")))
+        col("embedding"), col("codes"), kit.codebook, m)).as(Seq("subspace", "err")))
       .select(col("subspace"),
         floor(col("err") * 1000000d).cast("long").as("err_micros"))
       .groupBy("subspace")
@@ -848,7 +767,7 @@ object PqQueries {
       s"    MAX(CASE WHEN r$s = 1 THEN clabel END) AS code$s").mkString(",\n")
     val codeList = (0 until m).map(s => s"co.code$s").mkString("[", ", ", "]")
     val diff = "(CAST(e.embedding[s.s*8 + i] AS DOUBLE) - CAST(c.cf[s.s*8 + i] AS DOUBLE))"
-    s"""WITH ${duckCentroidCtes(64, centroidChunks)}, ecd AS (
+    s"""WITH ${duckCentroidCtes(64)}, ecd AS (
       |  SELECT e.vec_id, c.clabel,
       |$eds
       |  FROM embeddings e CROSS JOIN cent c
@@ -893,38 +812,29 @@ object PqQueries {
     import graft.functions.PqFunctions
     val m = 8
     val emb = Tables.embeddings(spark, dir)
-    val cent = graft.ops.Similarity.buildCentroids(emb, dim = 64, chunks = centroidChunks)
-    val codebook = graft.ops.Similarity.collectCodebook(cent)
-    val assigned = graft.ops.Similarity.assignToCentroids(
-      emb.select("vec_id", "label", "embedding"), cent, Seq("vec_id"))
+    val kit = ivf(emb)
+    val assigned = kit.assign(emb.select("vec_id", "label", "embedding"))
     val encoded = assigned.select(col("vec_id"), col("cluster"), col("label"),
-      PqFunctions.pqCodes(col("embedding"), codebook, m).as("codes"))
+      PqFunctions.pqCodes(col("embedding"), kit.codebook, m).as("codes"))
     val tombstones = emb.filter(col("vec_id") % 9 === 0).select("vec_id")
     val searchable = encoded.filter(col("label") % 2 === 0)
       .join(tombstones, Seq("vec_id"), "left_anti")
     val qRows = assigned.filter(col("vec_id") % 50 === 0)
-    val probes = graft.ops.Similarity.probeCentroids(
-        qRows.select("vec_id", "embedding"), cent, Seq("vec_id"), nprobe = 2)
+    val probes = kit.probes(qRows.select("vec_id", "embedding"), 2)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         col("cluster").as("qc"))
-    pqSearch(emb, searchable, probes, codebook, m, candK = 20,
+    pqSearch(emb, searchable, probes, kit.codebook, m, candK = 20,
       joinCond = col("cluster") === col("qc") && col("vec_id") =!= col("query_id"),
       qExact = Some(qRows.select(col("vec_id").as("query_id"),
         col("embedding").as("qv"))))
   }
 
   val s26Oracle: String = duckPqSearchSql(8,
-    s"""WITH ${duckCentroidCtes(64, centroidChunks)}, live AS (
+    s"""WITH ${duckCentroidCtes(64)}, live AS (
       |  SELECT vec_id, embedding FROM embeddings
       |  WHERE vec_id % 9 <> 0 AND label % 2 = 0
-      |), ranked AS (
-      |  SELECT e.vec_id, e.embedding, c.clabel,
-      |    row_number() OVER (PARTITION BY e.vec_id
-      |      ORDER BY ${duckCosOf("e.embedding", "c.cf")} DESC, c.clabel) AS rn
-      |  FROM embeddings e, cent c
-      |), assigned AS (
-      |  SELECT vec_id, embedding, clabel FROM ranked WHERE rn = 1
-      |), qp AS (
+      |),
+      |${duckRankedCtes("ranked", "assigned", Seq("vec_id", "embedding"))}, qp AS (
       |  SELECT vec_id AS query_id, clabel AS qc
       |  FROM ranked WHERE vec_id % 50 = 0 AND rn <= 2
       |), q AS (
@@ -958,8 +868,7 @@ object PqQueries {
     val m = 8
     val emb = Tables.embeddings(spark, dir)
     def arm(src: DataFrame, variant: String): DataFrame = {
-      val cent = graft.ops.Similarity.buildCentroids(src, dim = 64, chunks = centroidChunks)
-      val codebook = graft.ops.Similarity.collectCodebook(cent)
+      val kit = ivf(src)
       // the encode + distortion eval is the heavy per-row stage and it
       // rides the SCAN (narrow pipeline — no exchange before it), so its
       // parallelism is the input split count: a single-row-group parquet
@@ -975,10 +884,10 @@ object PqQueries {
       src.repartition(src.sparkSession.sparkContext.defaultParallelism,
           col("vec_id"))
         .select(col("vec_id"),
-          PqFunctions.pqCodes(col("embedding"), codebook, m).as("codes"),
+          PqFunctions.pqCodes(col("embedding"), kit.codebook, m).as("codes"),
           col("embedding"))
         .select(posexplode(PqFunctions.pqSqError(
-          col("embedding"), col("codes"), codebook, m)).as(Seq("subspace", "err")))
+          col("embedding"), col("codes"), kit.codebook, m)).as(Seq("subspace", "err")))
         .select(lit(variant).as("variant"), col("subspace"),
           floor(col("err") * 1000000d).cast("long").as("err_micros"))
     }
@@ -1062,8 +971,8 @@ object PqQueries {
       |  SELECT vec_id, label, list_transform(range(1, 65),
       |    d -> CAST(CAST(embedding[d] AS DOUBLE) - w * u[d] AS FLOAT)) AS r
       |  FROM rw
-      |), ${duckCentroidCtes(64, centroidChunks)},
-      |${duckCentroidCtes(64, centroidChunks, src = "rot", sfx = "r", embCol = "r")},
+      |), ${duckCentroidCtes(64)},
+      |${duckCentroidCtes(64, src = "rot", sfx = "r", embCol = "r")},
       |${errCtes("_i", "embeddings", "embedding", "")},
       |${errCtes("_r", "rot", "r", "r")}
       |SELECT variant, subspace, n_vecs, err_micros_sum, max_err_micros FROM (
@@ -1093,10 +1002,9 @@ object PqQueries {
     import graft.functions.VectorFunctions.vecSub
     val dim = 64
     val emb = Tables.embeddings(spark, dir)
-    val cent = graft.ops.Similarity.buildCentroids(emb, dim = dim, chunks = centroidChunks)
-    val assigned = graft.ops.Similarity.assignToCentroids(
-      emb.select("vec_id", "embedding"), cent, Seq("vec_id"))
-    val withRes = assigned.join(broadcast(cent), col("cluster") === col("clabel"))
+    val kit = ivf(emb, dim = dim)
+    val assigned = kit.assigned
+    val withRes = assigned.join(broadcast(kit.centroids), col("cluster") === col("clabel"))
       .withColumn("res", vecSub(col("embedding"), col("cf")))
       .select("vec_id", "cluster", "embedding", "res")
       .localCheckpoint() // feeds bounds, encode, and the query branch
@@ -1117,7 +1025,7 @@ object PqQueries {
     val wA = Window.partitionBy("query_id").orderBy(col("approx").desc, col("vec_id"))
     val cand = encoded.join(broadcast(q),
         col("cluster") === col("qc") && col("vec_id") =!= col("query_id"))
-      .join(broadcast(cent.withColumnRenamed("clabel", "cluster")), Seq("cluster"))
+      .join(broadcast(kit.centroids.withColumnRenamed("clabel", "cluster")), Seq("cluster"))
       .withColumn("dec", Sq8Functions.sq8Decode(col("codes"), mins, scales))
       // reconstruction = centroid + dequantized residual, one rounded
       // double add per dimension — the oracle's exact textual mirror
@@ -1139,14 +1047,8 @@ object PqQueries {
   }
 
   val s39Oracle: String =
-    s"""WITH ${duckCentroidCtes(64, centroidChunks)}, ranked AS (
-      |  SELECT e.vec_id, e.embedding, c.clabel,
-      |    row_number() OVER (PARTITION BY e.vec_id
-      |      ORDER BY ${duckCosOf("e.embedding", "c.cf")} DESC, c.clabel) AS rn
-      |  FROM embeddings e, cent c
-      |), assigned AS (
-      |  SELECT vec_id, embedding, clabel FROM ranked WHERE rn = 1
-      |), res AS MATERIALIZED (
+    s"""WITH ${duckCentroidCtes(64)},
+      |${duckRankedCtes("ranked", "assigned", Seq("vec_id", "embedding"))}, res AS MATERIALIZED (
       |  SELECT a.vec_id, a.clabel AS cluster, a.embedding,
       |    list_transform(range(1, 65), i ->
       |      CAST(CAST(a.embedding[i] AS DOUBLE) - CAST(c.cf[i] AS DOUBLE) AS FLOAT)) AS res

@@ -52,17 +52,14 @@ object SimilarityQueries {
   lazy val lshTables: Seq[Seq[Seq[Int]]] =
     (0 until 8).map(t => planeTable(s"tplane_$t", 8))
 
-  /** Chunk count for the bounded centroid fold (s03–s10): bounds the
-    * level-2 fold row at `chunks` × 64 doubles (~512 KB) no matter how
-    * large a cluster grows. Baked identically into the Spark plan and the
-    * oracle — the chunking is part of the deterministic-fold contract.
-    * Deployment-overridable WITHOUT code via `-Dgraft.centroidChunks=N`:
-    * a JVM property (not a session conf) because the oracle SQL strings
-    * are object-init vals — both the Spark plans and the oracle text
-    * derive from this one value, so the gate stays exact at any setting.
-    * (The operator layer's session dial is
-    * [[graft.ops.Similarity.ChunksConfKey]]; the gate queries pass this
-    * value explicitly so query and oracle can never disagree.) */
+  /** Chunk count for the bounded centroid fold of every IVF gate: bounds
+    * the level-2 fold row at `chunks` × 64 doubles (~512 KB) no matter how
+    * large a cluster grows. The one value both the [[ivf]] kit and the
+    * oracle's [[duckCentroidCtes]] bake in — the chunking is part of the
+    * deterministic-fold contract. Deployment-overridable WITHOUT code via
+    * `-Dgraft.centroidChunks=N`: a JVM property because the oracle SQL
+    * strings are object-init vals, so the Spark plans and the oracle text
+    * derive from this one value and the gates stay exact at any setting. */
   val centroidChunks: Int = {
     val v = sys.props.get("graft.centroidChunks").map { raw =>
       // name the property on a bad value: a bare NumberFormatException
@@ -120,12 +117,12 @@ object SimilarityQueries {
     * within a chunk, same chunk-order fold of the partials), so the
     * centroid doubles are bit-identical cross-engine without either engine
     * ever holding a whole cluster in one row. */
-  private[queries] def duckCentroidCtes(dim: Int, chunks: Int, src: String = "embeddings",
+  private[queries] def duckCentroidCtes(dim: Int, src: String = "embeddings",
       sfx: String = "", embCol: String = "embedding"): String =
     s"""cpart$sfx AS (
-      |  SELECT label, vec_id % $chunks AS chunk,
+      |  SELECT label, vec_id % $centroidChunks AS chunk,
       |    list(struct_pack(id := vec_id, emb := $embCol) ORDER BY vec_id) AS vs
-      |  FROM $src GROUP BY label, vec_id % $chunks
+      |  FROM $src GROUP BY label, vec_id % $centroidChunks
       |), cpsum$sfx AS (
       |  SELECT label, chunk,
       |    list_transform(range(1, ${dim + 1}), d -> list_sum(list_transform(vs, v -> CAST(v.emb[d] AS DOUBLE)))) AS psum,
@@ -140,6 +137,42 @@ object SimilarityQueries {
       |      CAST(list_sum(list_transform(ps, p -> p.psum[d])) /
       |           list_sum(list_transform(ps, p -> p.pcnt)) AS FLOAT)) AS cf
       |  FROM cfold$sfx
+      |)""".stripMargin
+
+  /** The IVF kit of `src` at the gates' one chunk count. */
+  private[queries] def ivf(src: DataFrame, dim: Int = 64,
+      embCol: String = "embedding"): graft.ops.Ivf =
+    graft.ops.Ivf(src, dim, centroidChunks, embCol)
+
+  /** The nearest-centroid ranking every IVF oracle shares: each row of
+    * `src` (alias `e`, carrying `cols`) against each centroid of `cent`
+    * (alias `c`), numbered by cosine DESC then label — the SQL mirror of
+    * [[graft.ops.Similarity.probeCentroids]]' order (`rn = 1` is
+    * `assignToCentroids`' argmax). */
+  private[queries] def duckRanking(cols: Seq[String], src: String = "embeddings",
+      cent: String = "cent"): String =
+    s"""SELECT ${(cols.map("e." + _) :+ "c.clabel").mkString(", ")},
+      |  row_number() OVER (PARTITION BY e.vec_id
+      |    ORDER BY ${duckCosOf("e.embedding", "c.cf")} DESC, c.clabel) AS rn
+      |FROM $src e, $cent c""".stripMargin
+
+  /** `SELECT cols, label FROM (<ranking>) WHERE rn = rank`: each row's
+    * `rank`-th nearest centroid as one subquery (a CTE body). */
+  private[queries] def duckNearest(cols: Seq[String], src: String = "embeddings",
+      cent: String = "cent", label: String = "clabel", rank: Int = 1): String =
+    s"""SELECT ${(cols :+ label).mkString(", ")} FROM (
+      |${duckRanking(cols, src, cent)})
+      |WHERE rn = $rank""".stripMargin
+
+  /** The `ranked` CTE (the full [[duckRanking]], for `rn <= n` probes)
+    * followed by the `assigned` CTE of its `rn = 1` rows. */
+  private[queries] def duckRankedCtes(ranked: String, assigned: String,
+      cols: Seq[String], src: String = "embeddings", cent: String = "cent",
+      label: String = "clabel"): String =
+    s"""$ranked AS (
+      |${duckRanking(cols, src, cent)}
+      |), $assigned AS (
+      |  SELECT ${(cols :+ label).mkString(", ")} FROM $ranked WHERE rn = 1
       |)""".stripMargin
 
   private[queries] val duckCos: String =
@@ -212,9 +245,7 @@ object SimilarityQueries {
   // shuffles on the cluster id — the standard IVF layout.
   def s03AnnIvf(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    val cent = graft.ops.Similarity.buildCentroids(emb, dim = 64, chunks = centroidChunks)
-    val assigned = graft.ops.Similarity.assignToCentroids(
-      emb.select("vec_id", "embedding"), cent, Seq("vec_id"))
+    val assigned = ivf(emb).assigned
     val q = assigned.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"), col("cluster").as("qc"))
     val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("vec_id"))
@@ -240,9 +271,7 @@ object SimilarityQueries {
   // by the pair — no step holds more than a cluster's candidates.
   def s45MutualNn(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    val cent = graft.ops.Similarity.buildCentroids(emb, dim = 64, chunks = centroidChunks)
-    val assigned = graft.ops.Similarity.assignToCentroids(
-      emb.select("vec_id", "embedding", "label"), cent, Seq("vec_id"))
+    val assigned = ivf(emb).assign(emb.select("vec_id", "embedding", "label"))
     val a = assigned.filter(col("label") % 2 === 0)
       .select(col("vec_id").as("id_a"), col("embedding").as("va"), col("cluster"))
     val b = assigned.filter(col("label") % 2 === 1)
@@ -261,17 +290,8 @@ object SimilarityQueries {
   }
 
   val s45Oracle: String = {
-    def cos(a: String, b: String) =
-      s"list_sum(list_transform(list_zip($a, $b), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))" +
-        s" / sqrt(list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))" +
-        s" * list_sum(list_transform($b, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
-    s"""WITH ${duckCentroidCtes(64, centroidChunks)}, assigned AS (
-      |  SELECT vec_id, embedding, label, clabel FROM (
-      |    SELECT e.vec_id, e.embedding, e.label, c.clabel,
-      |      row_number() OVER (PARTITION BY e.vec_id
-      |        ORDER BY ${cos("e.embedding", "c.cf")} DESC, c.clabel) AS rn
-      |    FROM embeddings e, cent c)
-      |  WHERE rn = 1
+    s"""WITH ${duckCentroidCtes(64)}, assigned AS (
+      |  ${duckNearest(Seq("vec_id", "embedding", "label"))}
       |), a AS (
       |  SELECT vec_id AS id_a, embedding AS va, clabel AS cluster
       |  FROM assigned WHERE label % 2 = 0
@@ -279,7 +299,7 @@ object SimilarityQueries {
       |  SELECT vec_id AS id_b, embedding AS vb, clabel AS cluster
       |  FROM assigned WHERE label % 2 = 1
       |), scored AS (
-      |  SELECT a.cluster, id_a, id_b, ${cos("va", "vb")} AS cos
+      |  SELECT a.cluster, id_a, id_b, ${duckCosOf("va", "vb")} AS cos
       |  FROM a JOIN b USING (cluster)
       |), tab AS (
       |  SELECT cluster, id_a, id_b FROM (
@@ -298,22 +318,13 @@ object SimilarityQueries {
   }
 
   val s03Oracle: String = {
-    def cos(a: String, b: String) =
-      s"list_sum(list_transform(list_zip($a, $b), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))" +
-        s" / sqrt(list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))" +
-        s" * list_sum(list_transform($b, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
-    s"""WITH ${duckCentroidCtes(64, centroidChunks)}, assigned AS (
-      |  SELECT vec_id, embedding, clabel FROM (
-      |    SELECT e.vec_id, e.embedding, c.clabel,
-      |      row_number() OVER (PARTITION BY e.vec_id
-      |        ORDER BY ${cos("e.embedding", "c.cf")} DESC, c.clabel) AS rn
-      |    FROM embeddings e, cent c)
-      |  WHERE rn = 1
+    s"""WITH ${duckCentroidCtes(64)}, assigned AS (
+      |  ${duckNearest(Seq("vec_id", "embedding"))}
       |), q AS (
       |  SELECT vec_id AS query_id, embedding AS qv, clabel AS qc
       |  FROM assigned WHERE vec_id % 50 = 0
       |), scored AS (
-      |  SELECT query_id, qc, a.vec_id, ${cos("qv", "a.embedding")} AS cos
+      |  SELECT query_id, qc, a.vec_id, ${duckCosOf("qv", "a.embedding")} AS cos
       |  FROM assigned a JOIN q ON a.clabel = q.qc AND a.vec_id <> q.query_id
       |)
       |SELECT query_id, cluster, rank, neighbor_id FROM (
@@ -331,12 +342,10 @@ object SimilarityQueries {
   // row has one home cluster), so the union needs no dedup.
   def s04AnnIvfProbe(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    val cent = graft.ops.Similarity.buildCentroids(emb, dim = 64, chunks = centroidChunks)
-    val assigned = graft.ops.Similarity.assignToCentroids(
-      emb.select("vec_id", "embedding"), cent, Seq("vec_id"))
-    val probes = graft.ops.Similarity.probeCentroids(
-        assigned.filter(col("vec_id") % 50 === 0).select("vec_id", "embedding"),
-        cent, Seq("vec_id"), nprobe = 2)
+    val kit = ivf(emb)
+    val assigned = kit.assigned
+    val probes = kit.probes(
+        assigned.filter(col("vec_id") % 50 === 0).select("vec_id", "embedding"), 2)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         col("cluster").as("qc"))
     val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("vec_id"))
@@ -350,22 +359,12 @@ object SimilarityQueries {
   }
 
   val s04Oracle: String = {
-    def cos(a: String, b: String) =
-      s"list_sum(list_transform(list_zip($a, $b), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))" +
-        s" / sqrt(list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))" +
-        s" * list_sum(list_transform($b, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
-    s"""WITH ${duckCentroidCtes(64, centroidChunks)}, ranked AS (
-      |  SELECT e.vec_id, e.embedding, c.clabel,
-      |    row_number() OVER (PARTITION BY e.vec_id
-      |      ORDER BY ${cos("e.embedding", "c.cf")} DESC, c.clabel) AS rn
-      |  FROM embeddings e, cent c
-      |), assigned AS (
-      |  SELECT vec_id, embedding, clabel FROM ranked WHERE rn = 1
-      |), q AS (
+    s"""WITH ${duckCentroidCtes(64)},
+      |${duckRankedCtes("ranked", "assigned", Seq("vec_id", "embedding"))}, q AS (
       |  SELECT vec_id AS query_id, embedding AS qv, clabel AS qc
       |  FROM ranked WHERE vec_id % 50 = 0 AND rn <= 2
       |), scored AS (
-      |  SELECT query_id, a.vec_id, ${cos("qv", "a.embedding")} AS cos
+      |  SELECT query_id, a.vec_id, ${duckCosOf("qv", "a.embedding")} AS cos
       |  FROM assigned a JOIN q ON a.clabel = q.qc AND a.vec_id <> q.query_id
       |)
       |SELECT query_id, rank, neighbor_id FROM (
@@ -509,9 +508,7 @@ object SimilarityQueries {
   // always keeps its minimum id, so the kept side never vanishes.
   def d14SemDedup(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    val cent = graft.ops.Similarity.buildCentroids(emb, dim = 64, chunks = centroidChunks)
-    val assigned = graft.ops.Similarity.assignToCentroids(
-      emb.select("vec_id", "embedding"), cent, Seq("vec_id"))
+    val assigned = ivf(emb).assigned
     val left = assigned.select(col("cluster"), col("vec_id").as("id_a"),
       col("embedding").as("va"))
     val right = assigned.select(col("cluster"), col("vec_id").as("id_b"),
@@ -534,14 +531,8 @@ object SimilarityQueries {
   }
 
   val d14Oracle: String =
-    s"""WITH ${duckCentroidCtes(64, centroidChunks)}, ranked AS (
-      |  SELECT e.vec_id, e.embedding, c.clabel,
-      |    row_number() OVER (PARTITION BY e.vec_id
-      |      ORDER BY ${duckCosOf("e.embedding", "c.cf")} DESC, c.clabel) AS rn
-      |  FROM embeddings e, cent c
-      |), assigned AS (
-      |  SELECT vec_id, embedding, clabel FROM ranked WHERE rn = 1
-      |), drops AS (
+    s"""WITH ${duckCentroidCtes(64)},
+      |${duckRankedCtes("ranked", "assigned", Seq("vec_id", "embedding"))}, drops AS (
       |  SELECT DISTINCT b.vec_id
       |  FROM assigned a JOIN assigned b
       |    ON a.clabel = b.clabel AND a.vec_id < b.vec_id
@@ -554,7 +545,7 @@ object SimilarityQueries {
       |FROM assigned s LEFT JOIN drops d ON s.vec_id = d.vec_id
       |GROUP BY s.clabel ORDER BY cluster""".stripMargin
 
-  /** One cosine text used by every oracle below (ascending fold in
+  /** The one cosine text the ANN oracles share (ascending fold in
     * doubles — duckCos's shape with nameable operands). */
   private[queries] def duckCosOf(a: String, b: String): String =
     s"list_sum(list_transform(list_zip($a, $b), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))" +
@@ -570,10 +561,7 @@ object SimilarityQueries {
   // floats only decide assignments, where both engines are bit-identical.
   def s07Kmeans(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir).select("vec_id", "label", "embedding")
-    val cent1 = graft.ops.Similarity.kmeansCentroids(
-      emb, dim = 64, iters = 1, chunks = centroidChunks)
-    graft.ops.Similarity.assignToCentroids(
-        emb.select("vec_id", "embedding"), cent1, Seq("vec_id"))
+    ivf(emb).kmeans(iters = 1).assigned
       .groupBy(col("cluster").cast("long").as("cluster"))
       .agg(count(lit(1)).as("n_vecs"),
         sum(col("vec_id")).cast("long").as("id_sum"))
@@ -581,18 +569,10 @@ object SimilarityQueries {
   }
 
   val s07Oracle: String = {
-    s"""WITH ${duckCentroidCtes(64, centroidChunks)}, r1 AS (
-      |  SELECT e.vec_id, e.embedding, c.clabel,
-      |    row_number() OVER (PARTITION BY e.vec_id
-      |      ORDER BY ${duckCosOf("e.embedding", "c.cf")} DESC, c.clabel) AS rn
-      |  FROM embeddings e, cent c
-      |), a1 AS (
-      |  SELECT vec_id, embedding, clabel AS label FROM r1 WHERE rn = 1
-      |), ${duckCentroidCtes(64, centroidChunks, src = "a1", sfx = "2")}, r2 AS (
-      |  SELECT e.vec_id, c.clabel,
-      |    row_number() OVER (PARTITION BY e.vec_id
-      |      ORDER BY ${duckCosOf("e.embedding", "c.cf")} DESC, c.clabel) AS rn
-      |  FROM embeddings e, cent2 c
+    s"""WITH ${duckCentroidCtes(64)},
+      |${duckRankedCtes("r1", "a1", Seq("vec_id", "embedding"), label = "clabel AS label")},
+      |${duckCentroidCtes(64, src = "a1", sfx = "2")}, r2 AS (
+      |  ${duckRanking(Seq("vec_id"), cent = "cent2")}
       |)
       |SELECT CAST(clabel AS BIGINT) AS cluster, COUNT(*) AS n_vecs,
       |  CAST(SUM(vec_id) AS BIGINT) AS id_sum
@@ -614,10 +594,7 @@ object SimilarityQueries {
   // does, that the reseed rule is the documented one.
   def s09KmeansMulti(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir).select("vec_id", "label", "embedding")
-    val cent3 = graft.ops.Similarity.kmeansCentroids(
-      emb, dim = 64, iters = 3, chunks = centroidChunks, reseedEmpty = true)
-    graft.ops.Similarity.assignToCentroids(
-        emb.select("vec_id", "embedding"), cent3, Seq("vec_id"))
+    ivf(emb).kmeans(iters = 3, reseedEmpty = true).assigned
       .groupBy(col("cluster").cast("long").as("cluster"))
       .agg(count(lit(1)).as("n_vecs"),
         sum(col("vec_id")).cast("long").as("id_sum"))
@@ -628,24 +605,16 @@ object SimilarityQueries {
     * (argmax by cosine, ties by label), then refold with the bounded
     * two-level centroid CTEs — the exact SQL s07 uses, chained. */
   private def duckLloydRound(prev: String, next: String): String =
-    s"""r$next AS (
-      |  SELECT e.vec_id, e.embedding, c.clabel,
-      |    row_number() OVER (PARTITION BY e.vec_id
-      |      ORDER BY ${duckCosOf("e.embedding", "c.cf")} DESC, c.clabel) AS rn
-      |  FROM embeddings e, cent$prev c
-      |), a$next AS (
-      |  SELECT vec_id, embedding, clabel AS label FROM r$next WHERE rn = 1
-      |), ${duckCentroidCtes(64, centroidChunks, src = s"a$next", sfx = next)}""".stripMargin
+    duckRankedCtes(s"r$next", s"a$next", Seq("vec_id", "embedding"),
+      cent = s"cent$prev", label = "clabel AS label") + ", " +
+      duckCentroidCtes(64, src = s"a$next", sfx = next)
 
   val s09Oracle: String =
-    s"""WITH ${duckCentroidCtes(64, centroidChunks)},
+    s"""WITH ${duckCentroidCtes(64)},
       |${duckLloydRound("", "2")},
       |${duckLloydRound("2", "3")},
       |${duckLloydRound("3", "4")}, rf AS (
-      |  SELECT e.vec_id, c.clabel,
-      |    row_number() OVER (PARTITION BY e.vec_id
-      |      ORDER BY ${duckCosOf("e.embedding", "c.cf")} DESC, c.clabel) AS rn
-      |  FROM embeddings e, cent4 c
+      |  ${duckRanking(Seq("vec_id"), cent = "cent4")}
       |)
       |SELECT CAST(clabel AS BIGINT) AS cluster, COUNT(*) AS n_vecs,
       |  CAST(SUM(vec_id) AS BIGINT) AS id_sum
@@ -664,9 +633,7 @@ object SimilarityQueries {
   // gate also proves the filter held.
   def s17AnnFiltered(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    val cent = graft.ops.Similarity.buildCentroids(emb, dim = 64, chunks = centroidChunks)
-    val assigned = graft.ops.Similarity.assignToCentroids(
-      emb.select("vec_id", "label", "embedding"), cent, Seq("vec_id"))
+    val assigned = ivf(emb).assign(emb.select("vec_id", "label", "embedding"))
     val q = assigned.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         col("cluster").as("qc"))
@@ -683,22 +650,13 @@ object SimilarityQueries {
   }
 
   val s17Oracle: String = {
-    def cos(a: String, b: String) =
-      s"list_sum(list_transform(list_zip($a, $b), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))" +
-        s" / sqrt(list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))" +
-        s" * list_sum(list_transform($b, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
-    s"""WITH ${duckCentroidCtes(64, centroidChunks)}, assigned AS (
-      |  SELECT vec_id, label, embedding, clabel FROM (
-      |    SELECT e.vec_id, e.label, e.embedding, c.clabel,
-      |      row_number() OVER (PARTITION BY e.vec_id
-      |        ORDER BY ${cos("e.embedding", "c.cf")} DESC, c.clabel) AS rn
-      |    FROM embeddings e, cent c)
-      |  WHERE rn = 1
+    s"""WITH ${duckCentroidCtes(64)}, assigned AS (
+      |  ${duckNearest(Seq("vec_id", "label", "embedding"))}
       |), q AS (
       |  SELECT vec_id AS query_id, embedding AS qv, clabel AS qc
       |  FROM assigned WHERE vec_id % 50 = 0
       |), scored AS (
-      |  SELECT query_id, a.vec_id, a.label, ${cos("qv", "a.embedding")} AS cos
+      |  SELECT query_id, a.vec_id, a.label, ${duckCosOf("qv", "a.embedding")} AS cos
       |  FROM assigned a JOIN q ON a.clabel = q.qc AND a.vec_id <> q.query_id
       |  WHERE a.label % 2 = 0
       |)
@@ -720,9 +678,7 @@ object SimilarityQueries {
   // over cluster-sized rows, never the corpus.
   def s18ClusterPurity(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    val cent = graft.ops.Similarity.buildCentroids(emb, dim = 64, chunks = centroidChunks)
-    val assigned = graft.ops.Similarity.assignToCentroids(
-      emb.select("vec_id", "embedding"), cent, Seq("vec_id"))
+    val assigned = ivf(emb).assigned
     val byLang = assigned
       .join(Tables.documents(spark, dir).select(col("doc_id"), col("lang")),
         col("vec_id") === col("doc_id"))
@@ -740,13 +696,8 @@ object SimilarityQueries {
   }
 
   val s18Oracle: String =
-    s"""WITH ${duckCentroidCtes(64, centroidChunks)}, assigned AS (
-      |  SELECT vec_id, clabel FROM (
-      |    SELECT e.vec_id, c.clabel,
-      |      row_number() OVER (PARTITION BY e.vec_id
-      |        ORDER BY ${duckCosOf("e.embedding", "c.cf")} DESC, c.clabel) AS rn
-      |    FROM embeddings e, cent c)
-      |  WHERE rn = 1
+    s"""WITH ${duckCentroidCtes(64)}, assigned AS (
+      |  ${duckNearest(Seq("vec_id"))}
       |), byl AS (
       |  SELECT CAST(a.clabel AS BIGINT) AS cluster, d.lang, COUNT(*) AS n
       |  FROM assigned a JOIN documents d ON d.doc_id = a.vec_id
@@ -815,12 +766,10 @@ object SimilarityQueries {
   // is live on the synthetic embeddings (2–4 hits per query at sf0.01).
   def s21AnnRange(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    val cent = graft.ops.Similarity.buildCentroids(emb, dim = 64, chunks = centroidChunks)
-    val assigned = graft.ops.Similarity.assignToCentroids(
-      emb.select("vec_id", "embedding"), cent, Seq("vec_id"))
+    val kit = ivf(emb)
+    val assigned = kit.assigned
     val qSet = assigned.filter(col("vec_id") % 50 === 0)
-    val probes = graft.ops.Similarity.probeCentroids(
-        qSet.select("vec_id", "embedding"), cent, Seq("vec_id"), nprobe = 2)
+    val probes = kit.probes(qSet.select("vec_id", "embedding"), 2)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         col("cluster").as("qc"))
     val hits = assigned.join(broadcast(probes),
@@ -840,14 +789,8 @@ object SimilarityQueries {
   }
 
   val s21Oracle: String =
-    s"""WITH ${duckCentroidCtes(64, centroidChunks)}, ranked AS (
-      |  SELECT e.vec_id, e.embedding, c.clabel,
-      |    row_number() OVER (PARTITION BY e.vec_id
-      |      ORDER BY ${duckCosOf("e.embedding", "c.cf")} DESC, c.clabel) AS rn
-      |  FROM embeddings e, cent c
-      |), assigned AS (
-      |  SELECT vec_id, embedding, clabel FROM ranked WHERE rn = 1
-      |), q AS (
+    s"""WITH ${duckCentroidCtes(64)},
+      |${duckRankedCtes("ranked", "assigned", Seq("vec_id", "embedding"))}, q AS (
       |  SELECT vec_id AS query_id, embedding AS qv, clabel AS qc
       |  FROM ranked WHERE vec_id % 50 = 0 AND rn <= 2
       |), scored AS (
@@ -876,9 +819,7 @@ object SimilarityQueries {
   // on the cluster key; constant-size output at any corpus scale.
   def s23IvfStats(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    val cent = graft.ops.Similarity.buildCentroids(emb, dim = 64, chunks = centroidChunks)
-    val assigned = graft.ops.Similarity.assignToCentroids(
-      emb.select("vec_id", "embedding"), cent, Seq("vec_id"))
+    val assigned = ivf(emb).assigned
     assigned.groupBy("cluster").agg(count(lit(1)).as("n"))
       .agg(count(lit(1)).as("k_nonempty"),
         sum(col("n")).as("n_total"),
@@ -888,13 +829,8 @@ object SimilarityQueries {
   }
 
   val s23Oracle: String =
-    s"""WITH ${duckCentroidCtes(64, centroidChunks)}, assigned AS (
-      |  SELECT vec_id, clabel FROM (
-      |    SELECT e.vec_id, c.clabel,
-      |      row_number() OVER (PARTITION BY e.vec_id
-      |        ORDER BY ${duckCosOf("e.embedding", "c.cf")} DESC, c.clabel) AS rn
-      |    FROM embeddings e, cent c)
-      |  WHERE rn = 1
+    s"""WITH ${duckCentroidCtes(64)}, assigned AS (
+      |  ${duckNearest(Seq("vec_id"))}
       |), sizes AS (
       |  SELECT clabel, COUNT(*) AS n FROM assigned GROUP BY clabel
       |)
@@ -921,12 +857,11 @@ object SimilarityQueries {
   // thousands of lists at scale, bounded by the s23 balance profile.
   def s24ClusterPrototypes(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    val cent = graft.ops.Similarity.buildCentroids(emb, dim = 64, chunks = centroidChunks)
-    val assigned = graft.ops.Similarity.assignToCentroids(
-      emb.select("vec_id", "embedding"), cent, Seq("vec_id"))
+    val kit = ivf(emb)
+    val assigned = kit.assigned
     val w = Window.partitionBy("cluster").orderBy(col("ccos").desc, col("vec_id"))
     assigned
-      .join(broadcast(cent.withColumnRenamed("clabel", "cluster")), Seq("cluster"))
+      .join(broadcast(kit.centroids.withColumnRenamed("clabel", "cluster")), Seq("cluster"))
       .withColumn("ccos", cosineSim(col("embedding"), col("cf")))
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= 8)
@@ -938,13 +873,8 @@ object SimilarityQueries {
   }
 
   val s24Oracle: String =
-    s"""WITH ${duckCentroidCtes(64, centroidChunks)}, assigned AS (
-      |  SELECT vec_id, embedding, clabel FROM (
-      |    SELECT e.vec_id, e.embedding, c.clabel,
-      |      row_number() OVER (PARTITION BY e.vec_id
-      |        ORDER BY ${duckCosOf("e.embedding", "c.cf")} DESC, c.clabel) AS rn
-      |    FROM embeddings e, cent c)
-      |  WHERE rn = 1
+    s"""WITH ${duckCentroidCtes(64)}, assigned AS (
+      |  ${duckNearest(Seq("vec_id", "embedding"))}
       |), scored AS (
       |  SELECT a.vec_id, a.clabel,
       |    row_number() OVER (PARTITION BY a.clabel
@@ -1249,12 +1179,9 @@ object SimilarityQueries {
   // |labels|-row join — nothing corpus-sized moves.
   def s31CentroidDrift(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    val cA = graft.ops.Similarity
-      .buildCentroids(emb.filter(col("vec_id") % 2 === 0), dim = 64,
-        chunks = centroidChunks)
+    val cA = ivf(emb.filter(col("vec_id") % 2 === 0)).centroids
       .select(col("clabel"), col("cf").as("cfa"))
-    val cB = graft.ops.Similarity
-      .buildCentroids(emb, dim = 64, chunks = centroidChunks)
+    val cB = ivf(emb).centroids
       .select(col("clabel"), col("cf").as("cfb"))
     val counts = emb.groupBy(col("label").as("clabel"))
       .agg(count(lit(1)).as("n_full"),
@@ -1273,8 +1200,8 @@ object SimilarityQueries {
   val s31Oracle: String =
     s"""WITH half AS (
       |  SELECT vec_id, label, embedding FROM embeddings WHERE vec_id % 2 = 0
-      |), ${duckCentroidCtes(64, centroidChunks, src = "half", sfx = "_a")},
-      |${duckCentroidCtes(64, centroidChunks, sfx = "_b")},
+      |), ${duckCentroidCtes(64, src = "half", sfx = "_a")},
+      |${duckCentroidCtes(64, sfx = "_b")},
       |counts AS (
       |  SELECT label AS clabel, COUNT(*) AS n_full,
       |    CAST(SUM(CASE WHEN vec_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_half

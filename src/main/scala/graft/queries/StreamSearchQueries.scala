@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.VectorFunctions.cosineSim
-import SimilarityQueries.{centroidChunks, duckCentroidCtes, duckCosOf}
+import SimilarityQueries.{duckCentroidCtes, duckCosOf, duckNearest, ivf}
 import PqQueries.pqSearch
 
 /** The STREAMING/SERVING search family (split from SimilarityQueries in
@@ -31,9 +31,7 @@ object StreamSearchQueries {
   // bounded centroid table inside the assignment argmax).
   def s44BatchSearch(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    val cent = graft.ops.Similarity.buildCentroids(emb, dim = 64, chunks = centroidChunks)
-    val assigned = graft.ops.Similarity.assignToCentroids(
-      emb.select("vec_id", "embedding"), cent, Seq("vec_id"))
+    val assigned = ivf(emb).assigned
     val q = assigned.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"), col("cluster").as("qc"))
     val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("vec_id"))
@@ -60,8 +58,7 @@ object StreamSearchQueries {
   // never match). Batch form of the s42 stream (drain ≡ batch there).
   def s46CdcIndexSync(spark: SparkSession, dir: String): DataFrame = {
     val base = Tables.embeddings(spark, dir).select("vec_id", "embedding")
-    val cent = graft.ops.Similarity.buildCentroids(
-      Tables.embeddings(spark, dir), dim = 64, chunks = centroidChunks)
+    val kit = ivf(Tables.embeddings(spark, dir))
     val events = base.withColumn("version", lit(0L))
       .unionByName(base.filter(col("vec_id") % 3 === 0)
         .withColumn("embedding", reverse(col("embedding")))
@@ -69,8 +66,7 @@ object StreamSearchQueries {
     val applied = events.groupBy("vec_id")
       .agg(max_by(col("embedding"), col("version")).as("embedding"),
         max(col("version")).as("version"))
-    val assigned = graft.ops.Similarity.assignToCentroids(
-      applied, cent, Seq("vec_id"))
+    val assigned = kit.assign(applied)
     val q = assigned.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         col("cluster").as("qc"))
@@ -86,11 +82,7 @@ object StreamSearchQueries {
   }
 
   val s46Oracle: String = {
-    def cos(a: String, b: String) =
-      s"list_sum(list_transform(list_zip($a, $b), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))" +
-        s" / sqrt(list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))" +
-        s" * list_sum(list_transform($b, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
-    s"""WITH ${duckCentroidCtes(64, centroidChunks)}, applied AS (
+    s"""WITH ${duckCentroidCtes(64)}, applied AS (
       |  SELECT vec_id, embedding, version FROM (
       |    SELECT vec_id, embedding, version,
       |      row_number() OVER (PARTITION BY vec_id ORDER BY version DESC) AS vr
@@ -101,17 +93,12 @@ object StreamSearchQueries {
       |      FROM embeddings WHERE vec_id % 3 = 0))
       |  WHERE vr = 1
       |), assigned AS (
-      |  SELECT vec_id, embedding, version, clabel FROM (
-      |    SELECT e.vec_id, e.embedding, e.version, c.clabel,
-      |      row_number() OVER (PARTITION BY e.vec_id
-      |        ORDER BY ${cos("e.embedding", "c.cf")} DESC, c.clabel) AS rn
-      |    FROM applied e, cent c)
-      |  WHERE rn = 1
+      |  ${duckNearest(Seq("vec_id", "embedding", "version"), src = "applied")}
       |), q AS (
       |  SELECT vec_id AS query_id, embedding AS qv, clabel AS qc
       |  FROM assigned WHERE vec_id % 50 = 0
       |), scored AS (
-      |  SELECT query_id, a.vec_id, a.version, ${cos("qv", "a.embedding")} AS cos
+      |  SELECT query_id, a.vec_id, a.version, ${duckCosOf("qv", "a.embedding")} AS cos
       |  FROM assigned a JOIN q ON a.clabel = q.qc AND a.vec_id <> q.query_id
       |)
       |SELECT query_id, rank, neighbor_id, neighbor_updated FROM (
@@ -139,20 +126,14 @@ object StreamSearchQueries {
   def s42StreamIndexIngest(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.PqFunctions
     val m = 8
-    val root = graft.streaming.Drains.tmpFixtureDir("graft_s42_", dir)
-    root.mkdirs()
-    val feed = new java.io.File(root, "feed").getPath
-    val sink = new java.io.File(root, "sink").getPath
-    val ckpt = new java.io.File(root, "ckpt").getPath
+    val (_, feed, sink, ckpt) = graft.streaming.Drains.streamDirs("graft_s42_", dir, "sink")
     val emb = Tables.embeddings(spark, dir)
     val base = emb.filter(col("vec_id") % 10 =!= 0)
-    val cent = graft.ops.Similarity.buildCentroids(base, dim = 64, chunks = centroidChunks)
-    val codebook = graft.ops.Similarity.collectCodebook(cent)
+    val kit = ivf(base)
     def encode(rows: DataFrame): DataFrame =
-      graft.ops.Similarity.assignToCentroids(
-          rows.select("vec_id", "embedding"), cent, Seq("vec_id"))
+      kit.assign(rows.select("vec_id", "embedding"))
         .select(col("vec_id"), col("cluster"),
-          PqFunctions.pqCodes(col("embedding"), codebook, m).as("codes"))
+          PqFunctions.pqCodes(col("embedding"), kit.codebook, m).as("codes"))
     // two installments → two micro-batches; adversarially interleaved
     // by id parity-of-20 so neither batch is a contiguous id range
     val delta = emb.filter(col("vec_id") % 10 === 0)
@@ -174,12 +155,10 @@ object StreamSearchQueries {
       .schema("vec_id BIGINT, cluster BIGINT, codes ARRAY<BIGINT>")
       .parquet(sink)
     val encoded = encode(base).unionByName(deltaCodes)
-    val q = graft.ops.Similarity.assignToCentroids(
-        emb.filter(col("vec_id") % 50 === 0).select("vec_id", "embedding"),
-        cent, Seq("vec_id"))
+    val q = kit.assign(emb.filter(col("vec_id") % 50 === 0).select("vec_id", "embedding"))
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         col("cluster").as("qc"))
-    pqSearch(emb, encoded, q, codebook, m, candK = 20,
+    pqSearch(emb, encoded, q, kit.codebook, m, candK = 20,
       joinCond = col("cluster") === col("qc") && col("vec_id") =!= col("query_id"))
   }
 
@@ -199,18 +178,12 @@ object StreamSearchQueries {
   // keyed equi-join against the parquet index scan, per-query top-5
   // window over ≤ cluster-sized candidates.
   def s43StreamSearch(spark: SparkSession, dir: String): DataFrame = {
-    val root = graft.streaming.Drains.tmpFixtureDir("graft_s43_", dir)
-    root.mkdirs()
-    val feed = new java.io.File(root, "feed").getPath
+    val (root, feed, sink, ckpt) = graft.streaming.Drains.streamDirs("graft_s43_", dir, "sink")
     val index = new java.io.File(root, "index").getPath
-    val sink = new java.io.File(root, "sink").getPath
-    val ckpt = new java.io.File(root, "ckpt").getPath
     val emb = Tables.embeddings(spark, dir)
-    val cent = graft.ops.Similarity.buildCentroids(emb, dim = 64, chunks = centroidChunks)
-      .localCheckpoint()
+    val kit = ivf(emb).checkpointed
     // freeze the index as an artifact: cluster-assigned corpus, on disk
-    graft.ops.Similarity.assignToCentroids(
-        emb.select("vec_id", "embedding"), cent, Seq("vec_id"))
+    kit.assigned
       .write.mode("overwrite").parquet(index)
     val assigned = spark.read.parquet(index) // footer schema — always written
     // query stream: s03's query set, adversarially split so neither
@@ -226,7 +199,7 @@ object StreamSearchQueries {
       .parquet(feed)
       .writeStream
       .foreachBatch { (b: DataFrame, _: Long) =>
-        val q = graft.ops.Similarity.assignToCentroids(b, cent, Seq("vec_id"))
+        val q = kit.assign(b)
           .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
             col("cluster").as("qc"))
         val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("vec_id"))
@@ -284,7 +257,7 @@ object StreamSearchQueries {
     * same-batch members with SMALLER ids (the strict id-prefix rule that
     * makes the maintained edge set batch-split-independent); directed
     * top-3 edges and the vectors land under the exactly-once discipline. */
-  private def maintainGraphInsert(spark: SparkSession, cent: DataFrame,
+  private def maintainGraphInsert(spark: SparkSession, kit: graft.ops.Ivf,
       state: String, edgesOut: String)(ins: DataFrame, id: Long): Unit = {
     import graft.streaming.ViewMaintenance
     // candidates AND probe side AND append: ONE eager single-partition
@@ -294,8 +267,7 @@ object StreamSearchQueries {
     // per-shuffle-partition fan-out quadratically inflates every later
     // readState scan as batches accumulate), and the eager checkpoint
     // keeps every per-batch plan starting from a flat LogicalRDD
-    val a = graft.ops.Similarity.assignToCentroids(
-        ins.select("vec_id", "embedding"), cent, Seq("vec_id"))
+    val a = kit.assign(ins.select("vec_id", "embedding"))
       .select("vec_id", "cluster", "embedding")
       .coalesce(1)
       .localCheckpoint(true)
@@ -371,9 +343,8 @@ object StreamSearchQueries {
     val edgesOut = new java.io.File(root, "edges").getPath
     val ckpt = new java.io.File(root, "ckpt").getPath
     val emb = Tables.embeddings(spark, dir).select("vec_id", "embedding")
-    val cent = graft.ops.Similarity.buildCentroids(
-        Tables.embeddings(spark, dir), dim = 64, chunks = centroidChunks)
-      .localCheckpoint(true) // FROZEN quantizer: built once, not per batch
+    // FROZEN quantizer: built once, not per batch
+    val kit = ivf(Tables.embeddings(spark, dir)).checkpointed
     val maxRow = emb.agg(max(col("vec_id"))).head()
     if (!maxRow.isNullAt(0)) {
       val mx = maxRow.getLong(0)
@@ -403,7 +374,7 @@ object StreamSearchQueries {
         if (id == 0L && batch0Files.isEmpty)
           batch0Files ++= batch.select(input_file_name()).distinct()
             .collect().map(_.getString(0)).filter(_.nonEmpty)
-        maintainGraphInsert(spark, cent, state, edgesOut)(batch, id)
+        maintainGraphInsert(spark, kit, state, edgesOut)(batch, id)
     }
     // the drain dial (partitions + AQE-off) covers the whole drain AND
     // the injected replay — the same micro-batch-sized queries either way
@@ -444,9 +415,8 @@ object StreamSearchQueries {
       graft.streaming.Drains.streamDirs("graft_s54_", dir)
     val edgesOut = new java.io.File(root, "edges").getPath
     val emb = Tables.embeddings(spark, dir).select("vec_id", "embedding")
-    val cent = graft.ops.Similarity.buildCentroids(
-        Tables.embeddings(spark, dir), dim = dim, chunks = centroidChunks)
-      .localCheckpoint(true) // FROZEN quantizer (s51's discipline)
+    // FROZEN quantizer (s51's discipline)
+    val kit = ivf(Tables.embeddings(spark, dir), dim = dim).checkpointed
     graft.ingest.BinlogSink.writeChanges(
       emb.select(lit(1).as("op") +: col("vec_id") +:
         (0 until dim).map(i => col("embedding")(i).as(s"f$i")): _*)
@@ -458,7 +428,7 @@ object StreamSearchQueries {
         .select(element_at(col("img"), 1).cast("long").as("vec_id"),
           array((2 to dim + 1).map(i =>
             element_at(col("img"), i).cast("float")): _*).as("embedding"))
-      maintainGraphInsert(spark, cent, state, edgesOut)(ins, id)
+      maintainGraphInsert(spark, kit, state, edgesOut)(ins, id)
       // compaction composes with the GRAPH maintenance: both states are
       // exactly-once row sets, so the fold is the identity; the covered
       // batch-0 replay after compaction still sees its original candidate
@@ -500,17 +470,13 @@ object StreamSearchQueries {
   // per-batch cost unchanged from s51's cluster-keyed probe.
   def s56ShardedWireVectors(spark: SparkSession, dir: String): DataFrame = {
     val dim = 64
-    val root = graft.streaming.Drains.tmpFixtureDir("graft_s56_", dir)
-    root.mkdirs()
+    val (root, _, state, ckpt) = graft.streaming.Drains.streamDirs("graft_s56_", dir)
     val feedA = new java.io.File(root, "feed_a"); feedA.mkdirs()
     val feedB = new java.io.File(root, "feed_b"); feedB.mkdirs()
-    val state = new java.io.File(root, "state").getPath
     val edgesOut = new java.io.File(root, "edges").getPath
-    val ckpt = new java.io.File(root, "ckpt").getPath
     val emb = Tables.embeddings(spark, dir).select("vec_id", "embedding")
-    val cent = graft.ops.Similarity.buildCentroids(
-        Tables.embeddings(spark, dir), dim = dim, chunks = centroidChunks)
-      .localCheckpoint(true) // FROZEN quantizer (s51's discipline)
+    // FROZEN quantizer (s51's discipline)
+    val kit = ivf(Tables.embeddings(spark, dir), dim = dim).checkpointed
     val maxRow = emb.agg(max(col("vec_id"))).head()
     if (!maxRow.isNullAt(0)) {
       val mx = maxRow.getLong(0)
@@ -552,7 +518,7 @@ object StreamSearchQueries {
         .select(element_at(col("img"), 1).cast("long").as("vec_id"),
           array((2 to dim + 1).map(i =>
             element_at(col("img"), i).cast("float")): _*).as("embedding"))
-      maintainGraphInsert(spark, cent, state, edgesOut)(ins, id)
+      maintainGraphInsert(spark, kit, state, edgesOut)(ins, id)
     }
     graft.streaming.Drains.drainBinlog(spark, feeds, ckpt, tail = true)(applyBatch)
     // injected batch-0 redelivery, routed back to the owning shard
@@ -561,13 +527,8 @@ object StreamSearchQueries {
   }
 
   val s51Oracle: String =
-    s"""WITH ${duckCentroidCtes(64, centroidChunks)}, assigned AS MATERIALIZED (
-      |  SELECT vec_id, embedding, clabel AS cluster FROM (
-      |    SELECT e.vec_id, e.embedding, c.clabel,
-      |      row_number() OVER (PARTITION BY e.vec_id
-      |        ORDER BY ${duckCosOf("e.embedding", "c.cf")} DESC, c.clabel) AS rn
-      |    FROM embeddings e, cent c)
-      |  WHERE rn = 1
+    s"""WITH ${duckCentroidCtes(64)}, assigned AS MATERIALIZED (
+      |  ${duckNearest(Seq("vec_id", "embedding"), label = "clabel AS cluster")}
       |), edges AS (
       |  SELECT cluster, vec_id, nbr FROM (
       |    SELECT a.cluster, a.vec_id, b.vec_id AS nbr,
@@ -606,9 +567,9 @@ object StreamSearchQueries {
   // 100 TB: a delete costs one ≤|batch|-row state write; serving pays
   // two keyed anti-joins against the (small, compactable) tombstone set.
   /** s52/s53/s55's shared drain: s51's insert maintenance + the tombstone
-    * delete path, with both replay classes injected. Returns the
-    * (vectors, edges, tombstones) state dirs for the caller's serve (or
-    * repair) step.
+    * delete path, with both replay classes injected. Returns the frozen
+    * quantizer and the (vectors, edges, tombstones) state dirs for the
+    * caller's serve (or repair) step.
     *
     * `restart = true` delivers the six slices in two installments against
     * ONE checkpoint (slices 0–2, drain to completion, the query STOPS;
@@ -622,7 +583,7 @@ object StreamSearchQueries {
     * overwrite. */
   private def graphDeleteDrain(spark: SparkSession, dir: String,
       prefix: String, restart: Boolean = false,
-      compactInDrain: Boolean = false): (DataFrame, String, String, String) = {
+      compactInDrain: Boolean = false): (graft.ops.Ivf, String, String, String) = {
     import graft.streaming.ViewMaintenance
     val root = graft.streaming.Drains.tmpFixtureDir(prefix, dir)
     root.mkdirs()
@@ -633,9 +594,8 @@ object StreamSearchQueries {
     val tomb = new java.io.File(root, "tomb").getPath
     val ckpt = new java.io.File(root, "ckpt").getPath
     val emb = Tables.embeddings(spark, dir).select("vec_id", "embedding")
-    val cent = graft.ops.Similarity.buildCentroids(
-        Tables.embeddings(spark, dir), dim = 64, chunks = centroidChunks)
-      .localCheckpoint(true) // FROZEN quantizer (s51's discipline)
+    // FROZEN quantizer (s51's discipline)
+    val kit = ivf(Tables.embeddings(spark, dir)).checkpointed
     // four id-range INSERT slices then two DELETE slices, arrival order
     // forced by mtime (the s51/cdc16 bump discipline); deletes arrive
     // after every insert — the maintained-then-deleted lifecycle
@@ -694,7 +654,7 @@ object StreamSearchQueries {
               b.filter(col("op") === -1).select("vec_id"), tomb, id),
             // inserts → the shared s51 edge maintenance (anti-joined state
             // probe, strict id-prefix rule, bounded top-3 window)
-            () => maintainGraphInsert(spark, cent, state, edgesOut)(
+            () => maintainGraphInsert(spark, kit, state, edgesOut)(
               b.filter(col("op") === 1), id))
           if (compactInDrain) {
             // the maintenance loop: all three states, every batch —
@@ -746,7 +706,7 @@ object StreamSearchQueries {
     // the FROZEN quantizer rides along so serve-time callers never
     // rebuild it — buildCentroids is deterministic, so reusing the
     // drain's checkpointed table is the identical values for free
-    (cent, state, edgesOut, tomb)
+    (kit, state, edgesOut, tomb)
   }
 
   def s52StreamGraphDelete(spark: SparkSession, dir: String): DataFrame = {
@@ -849,13 +809,8 @@ object StreamSearchQueries {
   }
 
   val s53Oracle: String =
-    s"""WITH ${duckCentroidCtes(64, centroidChunks)}, assigned AS MATERIALIZED (
-      |  SELECT vec_id, embedding, clabel AS cluster FROM (
-      |    SELECT e.vec_id, e.embedding, c.clabel,
-      |      row_number() OVER (PARTITION BY e.vec_id
-      |        ORDER BY ${duckCosOf("e.embedding", "c.cf")} DESC, c.clabel) AS rn
-      |    FROM embeddings e, cent c)
-      |  WHERE rn = 1
+    s"""WITH ${duckCentroidCtes(64)}, assigned AS MATERIALIZED (
+      |  ${duckNearest(Seq("vec_id", "embedding"), label = "clabel AS cluster")}
       |), full_edges AS (
       |  SELECT cluster, vec_id, nbr FROM (
       |    SELECT a.cluster, a.vec_id, b.vec_id AS nbr,
@@ -893,13 +848,8 @@ object StreamSearchQueries {
       |GROUP BY 1, 2, 3, 4, 5 ORDER BY c.cluster""".stripMargin
 
   val s52Oracle: String =
-    s"""WITH ${duckCentroidCtes(64, centroidChunks)}, assigned AS MATERIALIZED (
-      |  SELECT vec_id, embedding, clabel AS cluster FROM (
-      |    SELECT e.vec_id, e.embedding, c.clabel,
-      |      row_number() OVER (PARTITION BY e.vec_id
-      |        ORDER BY ${duckCosOf("e.embedding", "c.cf")} DESC, c.clabel) AS rn
-      |    FROM embeddings e, cent c)
-      |  WHERE rn = 1
+    s"""WITH ${duckCentroidCtes(64)}, assigned AS MATERIALIZED (
+      |  ${duckNearest(Seq("vec_id", "embedding"), label = "clabel AS cluster")}
       |), edges AS (
       |  SELECT cluster, vec_id, nbr FROM (
       |    SELECT a.cluster, a.vec_id, b.vec_id AS nbr,
@@ -944,9 +894,9 @@ object StreamSearchQueries {
   // — the graph-walk economics that make navigable indexes serve, while
   // every maintenance state stays compacted and exactly-once.
   def s55LifecycleServe(spark: SparkSession, dir: String): DataFrame = {
-    val (cent, state, edgesOut, tomb) = graphDeleteDrain(spark, dir,
+    val (kit, state, edgesOut, tomb) = graphDeleteDrain(spark, dir,
       "graft_s55_", restart = true, compactInDrain = true)
-    repairAndServe(spark, dir, cent, state, edgesOut, tomb)
+    repairAndServe(spark, dir, kit, state, edgesOut, tomb)
   }
 
   /** s55/s57's shared repair-then-serve: [[repairGraph]] the maintained
@@ -957,7 +907,7 @@ object StreamSearchQueries {
     * lifecycle the states lived through, the index serves exactly what
     * a fresh survivors-only build would. */
   private def repairAndServe(spark: SparkSession, dir: String,
-      cent: DataFrame, state: String, edgesOut: String, tomb: String): DataFrame = {
+      kit: graft.ops.Ivf, state: String, edgesOut: String, tomb: String): DataFrame = {
     val (survivors, _, graph0) = repairGraph(spark, state, edgesOut, tomb)
     val graph = graph0.localCheckpoint(true) // probed per hop below
     // entry per cluster: the surviving apex (see scaladoc above)
@@ -971,13 +921,11 @@ object StreamSearchQueries {
     val cand = entry.unionByName(hop1).unionByName(hop2).distinct()
       .join(survivors.select(col("cluster"), col("vec_id").as("id"),
         col("embedding").as("cv")), Seq("cluster", "id"))
-    // `cent` is the caller's FROZEN quantizer (the drain already built
+    // `kit` is the caller's FROZEN quantizer (the drain already built
     // and checkpointed it; buildCentroids is deterministic, so reuse is
     // bit-identical to a rebuild — and one less double-shuffle pass)
-    val q = graft.ops.Similarity.assignToCentroids(
-        Tables.embeddings(spark, dir).filter(col("vec_id") % 17 === 3)
-          .select("vec_id", "embedding"),
-        cent, Seq("vec_id"))
+    val q = kit.assign(Tables.embeddings(spark, dir).filter(col("vec_id") % 17 === 3)
+        .select("vec_id", "embedding"))
       .select(col("vec_id").as("query_id"), col("cluster"),
         col("embedding").as("qv"))
     val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("id"))
@@ -995,13 +943,8 @@ object StreamSearchQueries {
   }
 
   val s55Oracle: String =
-    s"""WITH ${duckCentroidCtes(64, centroidChunks)}, assigned AS MATERIALIZED (
-      |  SELECT vec_id, embedding, clabel AS cluster FROM (
-      |    SELECT e.vec_id, e.embedding, c.clabel,
-      |      row_number() OVER (PARTITION BY e.vec_id
-      |        ORDER BY ${duckCosOf("e.embedding", "c.cf")} DESC, c.clabel) AS rn
-      |    FROM embeddings e, cent c)
-      |  WHERE rn = 1
+    s"""WITH ${duckCentroidCtes(64)}, assigned AS MATERIALIZED (
+      |  ${duckNearest(Seq("vec_id", "embedding"), label = "clabel AS cluster")}
       |), surv AS (
       |  SELECT vec_id, embedding, cluster FROM assigned WHERE vec_id % 9 <> 0
       |), repaired_graph AS (
@@ -1072,9 +1015,8 @@ object StreamSearchQueries {
     val tomb = new java.io.File(root, "tomb").getPath
     val ckpt = new java.io.File(root, "ckpt").getPath
     val emb = Tables.embeddings(spark, dir).select("vec_id", "embedding")
-    val cent = graft.ops.Similarity.buildCentroids(
-        Tables.embeddings(spark, dir), dim = dim, chunks = centroidChunks)
-      .localCheckpoint(true) // FROZEN quantizer (s51's discipline)
+    // FROZEN quantizer (s51's discipline)
+    val kit = ivf(Tables.embeddings(spark, dir), dim = dim).checkpointed
     def deliver(staging: String): Unit =
       Option(new java.io.File(staging).listFiles())
         .getOrElse(Array.empty[java.io.File])
@@ -1131,7 +1073,7 @@ object StreamSearchQueries {
               .select(explode(col("row_images")).as("img"))
               .select(element_at(col("img"), 1).cast("long").as("vec_id")),
             tomb, id),
-          () => maintainGraphInsert(spark, cent, state, edgesOut)(
+          () => maintainGraphInsert(spark, kit, state, edgesOut)(
             b.filter(col("event_type") === "WriteRowsEventV2")
               .select(explode(col("row_images")).as("img"))
               .select(element_at(col("img"), 1).cast("long").as("vec_id"),
@@ -1191,7 +1133,7 @@ object StreamSearchQueries {
     // already foreclosed)
     if (lastId > 0L && lastFiles.forall(f => new java.io.File(feed, f).isFile))
       batches.replay(lastFiles, lastId)(applyBatch)
-    repairAndServe(spark, dir, cent, state, edgesOut, tomb)
+    repairAndServe(spark, dir, kit, state, edgesOut, tomb)
   }
 
   // s58 — VERSION-PINNED INDEX SERVING (the reproducibility layer
@@ -1248,13 +1190,8 @@ object StreamSearchQueries {
   }
 
   val s58Oracle: String =
-    s"""WITH ${duckCentroidCtes(64, centroidChunks)}, assigned AS MATERIALIZED (
-      |  SELECT vec_id, embedding, clabel AS cluster FROM (
-      |    SELECT e.vec_id, e.embedding, c.clabel,
-      |      row_number() OVER (PARTITION BY e.vec_id
-      |        ORDER BY ${duckCosOf("e.embedding", "c.cf")} DESC, c.clabel) AS rn
-      |    FROM embeddings e, cent c)
-      |  WHERE rn = 1
+    s"""WITH ${duckCentroidCtes(64)}, assigned AS MATERIALIZED (
+      |  ${duckNearest(Seq("vec_id", "embedding"), label = "clabel AS cluster")}
       |), rel AS (
       |  SELECT 'r1_pinned' AS mark,
       |    (SELECT MAX(vec_id) // 2 FROM embeddings) AS cut

@@ -1421,11 +1421,7 @@ object TextQueries {
   // the crawl as it lands": no global state, restart-safe checkpointing,
   // per-batch cost proportional to batch size.
   def t30StreamQuality(spark: SparkSession, dir: String): DataFrame = {
-    val root = graft.streaming.Drains.tmpFixtureDir("graft_t30_", dir)
-    root.mkdirs()
-    val feed = new java.io.File(root, "feed").getPath
-    val sink = new java.io.File(root, "sink").getPath
-    val ckpt = new java.io.File(root, "ckpt").getPath
+    val (_, feed, sink, ckpt) = graft.streaming.Drains.streamDirs("graft_t30_", dir, "sink")
     val docs = Tables.documents(spark, dir).select("doc_id", "lang", "text")
     docs.filter(col("doc_id") % 7 === 0).coalesce(1)
       .write.mode("append").parquet(feed)

@@ -149,14 +149,14 @@ object Drains {
   }
 
   /** A fresh per-(prefix, dir) fixture root, created, and the (feed,
-    * state, ckpt) paths under it every streaming gate uses; none of the
-    * three is created. */
-  def streamDirs(prefix: String, dir: String)
+    * `out`, ckpt) paths under it every streaming gate uses — `out` names
+    * the gate's state or sink directory; none of the three is created. */
+  def streamDirs(prefix: String, dir: String, out: String = "state")
       : (java.io.File, String, String, String) = {
     val root = tmpFixtureDir(prefix, dir)
     root.mkdirs()
     (root, new java.io.File(root, "feed").getPath,
-      new java.io.File(root, "state").getPath,
+      new java.io.File(root, out).getPath,
       new java.io.File(root, "ckpt").getPath)
   }
 

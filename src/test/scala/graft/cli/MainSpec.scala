@@ -481,44 +481,6 @@ class MainSpec extends AnyFunSuite with SparkTestSession {
     intercept[IllegalArgumentException](Main.parseArgs(List("--nope")))
   }
 
-  test("spark.graft.centroid.chunks: honored by the fold operators") {
-    // buildCentroids with the default chunks=0 resolves from
-    // spark.graft.centroid.chunks (settable with --conf) — prove
-    // the dial actually reaches the FOLD'S CHUNK KEYING (the `% chunks`
-    // level-1 grouping expression in the analyzed plan), not just that a
-    // value was parsed somewhere: the fold mean is chunking-invariant on
-    // friendly data, so a value assertion alone cannot catch a dial that
-    // validates but never reaches the groupBy
-    import spark.implicits._
-    val df = (0L until 8L).map(i =>
-      (i, 0L, Seq(i.toFloat, 1.0f))).toDF("vec_id", "label", "embedding")
-    def chunkKeying(chunks: Int): String = {
-      val plan = graft.ops.Similarity.buildCentroids(df, dim = 2, chunks = chunks)
-        .queryExecution.analyzed.toString
-      val m = "% cast\\((\\d+) as bigint\\)".r.findFirstMatchIn(plan)
-      assert(m.isDefined, s"no chunk-keying modulo found in plan:\n$plan")
-      m.get.group(1)
-    }
-    try {
-      spark.conf.set(graft.ops.Similarity.ChunksConfKey, "2")
-      assert(chunkKeying(0) == "2", "conf value did not reach the fold's chunk keying")
-      assert(chunkKeying(16) == "16", "explicit chunks must win over the conf")
-      val cb = graft.ops.Similarity.collectCodebook(
-        graft.ops.Similarity.buildCentroids(df, dim = 2))
-      // mean over ids 0..7 dim0 = 3.5 regardless of chunking — value check
-      assert(cb.map(_._1) == Seq(0L) && cb.head._2.head == 3.5f)
-      // an invalid conf fails loudly, naming the key
-      spark.conf.set(graft.ops.Similarity.ChunksConfKey, "nope")
-      val e = intercept[IllegalArgumentException](
-        graft.ops.Similarity.buildCentroids(df, dim = 2))
-      assert(e.getMessage.contains(graft.ops.Similarity.ChunksConfKey))
-      // and a NEGATIVE explicit argument is a caller bug, not a conf fallback
-      val e2 = intercept[IllegalArgumentException](
-        graft.ops.Similarity.buildCentroids(df, dim = 2, chunks = -8))
-      assert(e2.getMessage.contains("-8"))
-    } finally spark.conf.unset(graft.ops.Similarity.ChunksConfKey)
-  }
-
   test("parseArgs: repeated --follow accumulates dirs IN ORDER (the " +
       "order is the checkpoint's offset pairing); pacing flags parse") {
     val a = Main.parseArgs(List("--follow", "/a", "--follow", "/b",

@@ -98,4 +98,36 @@ class KmeansSpec extends AnyFunSuite with SparkTestSession {
         s"a cluster emptied at $dir / chunks=$chunks")
     }
   }
+
+  test("chunks: an explicit count keys the fold; zero or negative fails loudly") {
+    // prove the count reaches the FOLD'S CHUNK KEYING (the `% chunks`
+    // level-1 grouping expression in the analyzed plan), not just that a
+    // value was accepted: the fold mean is chunking-invariant on friendly
+    // data, so a value assertion alone cannot catch a count that
+    // validates but never reaches the groupBy
+    import spark.implicits._
+    val df = (0L until 8L).map(i =>
+      (i, 0L, Seq(i.toFloat, 1.0f))).toDF("vec_id", "label", "embedding")
+    def chunkKeying(chunks: Int): String = {
+      val plan = Similarity.buildCentroids(df, dim = 2, chunks = chunks)
+        .queryExecution.analyzed.toString
+      val m = "% cast\\((\\d+) as bigint\\)".r.findFirstMatchIn(plan)
+      assert(m.isDefined, s"no chunk-keying modulo found in plan:\n$plan")
+      m.get.group(1)
+    }
+    assert(chunkKeying(2) == "2")
+    assert(chunkKeying(16) == "16")
+    // mean over ids 0..7 dim0 = 3.5 regardless of chunking — value check
+    val cb = Similarity.collectCodebook(Similarity.buildCentroids(df, dim = 2, chunks = 2))
+    assert(cb.map(_._1) == Seq(0L) && cb.head._2.head == 3.5f)
+    // a zero or negative count is a caller bug: loud, naming the value
+    Seq(0, -8).foreach { bad =>
+      val e = intercept[IllegalArgumentException](
+        Similarity.buildCentroids(df, dim = 2, chunks = bad))
+      assert(e.getMessage.contains(s"got $bad"), e.getMessage)
+      val k = intercept[IllegalArgumentException](
+        Similarity.kmeansCentroids(df, dim = 2, iters = 1, chunks = bad))
+      assert(k.getMessage.contains(s"got $bad"), k.getMessage)
+    }
+  }
 }

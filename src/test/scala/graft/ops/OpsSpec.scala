@@ -134,6 +134,45 @@ class OpsSpec extends AnyFunSuite with SparkTestSession {
     assert(assigned == Map(10L -> 0L, 11L -> 0L))
   }
 
+  test("probeCentroids: min_by (nprobe=1) and window (nprobe>=2) paths rank alike") {
+    import spark.implicits._
+    // Each case: rows, a centroid table, and the cluster the window's
+    // (cos DESC NULLS LAST, label) order puts first. The window path's
+    // rank 1 is read by probing a DOUBLED table at nprobe = 2: both copies
+    // of the best centroid tie on (cos, label) and outrank every other
+    // centroid, so the two probe rows of a vector name its rank-1 cluster.
+    // The cosine kernel's accumulators start at +0.0, so a zero dot is
+    // +0.0 whatever the signs of the zero components: the signed-zero
+    // case feeds -0.0 components and must fall to the label tie-break.
+    def cent(cs: (Long, Option[Seq[Float]])*) = cs.toDF("clabel", "cf")
+    def v(xs: Float*) = Option(xs.toSeq)
+    val cases = Seq(
+      ("tied cosines break by label", cent(7L -> v(1f, 0f), 3L -> v(1f, 0f), 5L -> v(0f, 1f)),
+        Seq(1L -> Seq(2f, 0f), 2L -> Seq(0f, 3f)), Map(1L -> 3L, 2L -> 5L)),
+      ("zero-norm embedding: every cosine NaN, label decides",
+        cent(4L -> v(1f, 0f), 2L -> v(0f, 1f)), Seq(3L -> Seq(0f, 0f)), Map(3L -> 2L)),
+      ("zero-norm centroid: its NaN cosine ranks first",
+        cent(1L -> v(1f, 0f), 9L -> v(0f, 0f)), Seq(4L -> Seq(1f, 0f)), Map(4L -> 9L)),
+      ("-0.0 against 0.0", cent(6L -> v(1f, 0f), 8L -> v(-1f, 0f), 0L -> v(0f, -1f)),
+        Seq(5L -> Seq(-0.0f, 1f), 6L -> Seq(-0.0f, -0.0f)), Map(5L -> 6L, 6L -> 0L)),
+      ("a null centroid ranks last", cent(0L -> None, 1L -> v(0f, 1f)),
+        Seq(7L -> Seq(1f, 0f)), Map(7L -> 1L)))
+    cases.foreach { case (name, c, rows, expected) =>
+      val df = rows.toDF("vec_id", "embedding")
+      val byMinBy = Similarity.assignToCentroids(df, c, Seq("vec_id"))
+        .select("vec_id", "cluster").as[(Long, Long)].collect().toMap
+      val byWindow = Similarity.probeCentroids(df, c.unionByName(c), Seq("vec_id"), nprobe = 2)
+        .select("vec_id", "cluster").as[(Long, Long)].collect()
+        .groupBy(_._1).map { case (id, ps) =>
+          assert(ps.length == 2 && ps.map(_._2).distinct.length == 1,
+            s"$name: vector $id's two probes are not both its best cluster: ${ps.toSeq}")
+          id -> ps.head._2
+        }
+      assert(byMinBy == byWindow, s"$name: min_by $byMinBy, window $byWindow")
+      assert(byMinBy == expected, s"$name: got $byMinBy, want $expected")
+    }
+  }
+
   test("TextOps.mixtureSample: deterministic, rate-proportional, default-keep") {
     import spark.implicits._
     val df = (0L until 4000L).map(i => (i, if (i % 2 == 0) "en" else "zh"))

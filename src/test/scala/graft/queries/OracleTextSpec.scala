@@ -38,8 +38,8 @@ class OracleTextSpec extends AnyFunSuite {
     val added = now.keySet -- recorded.keySet
     val removed = recorded.keySet -- now.keySet
     def names(s: Set[String]) = if (s.isEmpty) "none" else s.toSeq.sorted.mkString(", ")
-    assert(changed.isEmpty && added.isEmpty && removed.isEmpty,
-      s"oracle text differs from the recorded digests: changed [${names(changed)}]; " +
+    if (changed.nonEmpty || added.nonEmpty || removed.nonEmpty)
+      fail(s"oracle text differs from the recorded digests: changed [${names(changed)}]; " +
         s"added [${names(added)}]; removed [${names(removed)}]")
   }
 }
