@@ -24,9 +24,7 @@ object PlanDump {
     names.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name,
         sys.error(s"unknown query: $name"))
-      val df = fn(spark, sfDir)
-      val txt = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+      val txt = formatted(fn(spark, sfDir))
       val out = new java.io.File(outDir, s"$name$suffix.txt")
       java.nio.file.Files.write(out.toPath,
         txt.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -34,4 +32,22 @@ object PlanDump {
     }
     spark.stop()
   }
+
+  /** `df`'s `explain("formatted")` text with no field list cut: Spark's
+    * default `spark.sql.debug.maxToStringFields` (25) ends a long literal
+    * argument list in `... N more fields`, hiding every later literal from
+    * a plan diff. The limit is lifted for the formatting only. */
+  def formatted(df: org.apache.spark.sql.DataFrame): String = {
+    val conf = df.sparkSession.conf
+    val prev = conf.getOption(MaxFieldsKey)
+    conf.set(MaxFieldsKey, Int.MaxValue.toLong)
+    try df.queryExecution.explainString(
+      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    finally prev match {
+      case Some(v) => conf.set(MaxFieldsKey, v)
+      case None    => conf.unset(MaxFieldsKey)
+    }
+  }
+
+  private val MaxFieldsKey = "spark.sql.debug.maxToStringFields"
 }

@@ -7,10 +7,10 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.cdc.{Comparator, Report}
-import graft.queries.CdcFixtures.{fixtureBase, ivmFixture, decodeIvmDelta,
-  ivmReport}
+import graft.queries.CdcFixtures.{dmlEvents, fixtureBase, ivmFixture, ivmReport,
+  SketchFixture}
 import graft.streaming.Drains.{drain, drainBinlog, drainIdempotentWithRedelivery,
-  drainToParquet, drainWithRedelivery, streamDirs, tmpFixtureDir}
+  drainToParquet, streamDirs, tmpFixtureDir}
 
 /** The CDC comparison engine (graft.cdc, SURVEY §2.5/§3.3) exercised through
   * the driver's oracle gate: both comparator inputs are synthesized
@@ -873,24 +873,13 @@ object CdcQueries {
   // the reconciliation join.
   def cdc12StreamDrain(spark: SparkSession, dir: String): DataFrame = {
     val (_, feed, sink, ckpt) = streamDirs("graft_cdc12_", dir, "sink")
-    val (binlogStaticLazy, avroRaw) = sidesRaw(spark, dir)
-    // static subtrees re-run per micro-batch unless materialized (cdc50's
-    // measured lesson: −30% on its drain) — prepare the snapshot once
-    val binlogStatic = binlogStaticLazy.localCheckpoint(true)
-    avroRaw.write.mode("overwrite").json(feed)
-    val avroStream = Comparator.prepareAvro(
-      spark.readStream.schema(avroRaw.schema).json(feed))
+    val (binlogStatic, avroRaw) = streamSides(spark, dir)
     // an empty feed drains to an empty relation, and the reconciliation
     // then yields BINLOG_ONLY-only counts
     val drained = drainToParquet(graft.streaming.StreamingComparator
-      .compareStream(avroStream, binlogStatic)
+      .compareStream(avroFeedStream(avroRaw, feed), binlogStatic)
       .select("binlog_file", "position", "status"), sink, ckpt)
-    val binlogOnly = graft.streaming.StreamingComparator.reconcileBinlogOnly(
-        binlogStatic,
-        drained.select(col("binlog_file"), col("position").as("binlog_position")))
-      .select("binlog_file", "position", "status")
-    drained.unionByName(binlogOnly)
-      .groupBy("status").count().orderBy("status")
+    statusCounts(drained, binlogStatic, drainedKeys(drained))
   }
 
   // cdc13 — the native binlog DSv2 source in its STREAMING role under the
@@ -1015,23 +1004,6 @@ object CdcQueries {
       |FROM events
       |GROUP BY 1, 2, 3 ORDER BY 1, 3""".stripMargin
 
-  // cdc16 — the STREAM-STREAM comparator under the gate: both sides of
-  // cdc01's fixture stream from disk (binlog raw → normalizeBinlog, avro
-  // raw → prepareAvro, both inside the streaming plan), joined by
-  // `compareStreamsWithParity`'s watermarked interval join, drained with
-  // AvailableNow to a parquet sink, then the documented terminal batch
-  // steps (reclassifyUnparseable + reconcileBinlogOnly) — and the status
-  // counts must equal cdc01's: the oracle IS cdc01's oracle, so this
-  // gates the full parity contract, not a weaker stream-only shape.
-  // Sentinel rows a day ahead on BOTH feeds (the join watermark is the
-  // min across inputs), written as separate later-mtime files so
-  // maxFilesPerTrigger=1 forces them into later micro-batches, advance
-  // the watermark past every real row; the outer join's null side then
-  // flushes in the engine's no-data batches before AvailableNow
-  // terminates (the StreamingComparatorSpec parity construction, run on
-  // the real fixture). The sentinels' own keys (≥ 7e8, outside the
-  // fixture's id+2e7 space) never emit (nothing ever passes THEIR
-  // watermark bound) and are filtered defensively.
   /** cdc16/cdc52's shared two-sided streaming fixture: both cdc01 sides
     * written as JSON feeds (one real file each) plus far-future sentinel
     * files on BOTH feeds — written with later mtimes so
@@ -1040,10 +1012,12 @@ object CdcQueries {
     * flushing the outer join's null side in the engine's no-data batches
     * before AvailableNow terminates. Sentinel keys (pos ≥ 7e8,
     * mysql-bin.000000) never emit and are filtered defensively
-    * post-drain. */
-  private def parityFeeds(spark: SparkSession, dir: String,
+    * post-drain. Returns the two feeds streamed back file by file and
+    * prepared inside the streaming plan: (binlog → normalizeBinlog,
+    * avro → prepareAvro). */
+  private def parityStreams(spark: SparkSession, dir: String,
       root: java.io.File, binlogRaw: DataFrame, avroRaw: DataFrame)
-      : (java.io.File, java.io.File) = {
+      : (DataFrame, DataFrame) = {
     val bFeed = new java.io.File(root, "bfeed"); bFeed.mkdirs()
     val aFeed = new java.io.File(root, "afeed"); aFeed.mkdirs()
     binlogRaw.coalesce(1).write.mode("overwrite")
@@ -1083,24 +1057,85 @@ object CdcQueries {
     }
     bump(new java.io.File(bFeed, "b2"), new java.io.File(bFeed, "b1"))
     bump(new java.io.File(aFeed, "a2"), new java.io.File(aFeed, "a1"))
-    (bFeed, aFeed)
+    def stream(raw: DataFrame, feed: java.io.File): DataFrame =
+      spark.readStream.schema(raw.schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("recursiveFileLookup", "true").json(feed.getPath)
+    (Comparator.normalizeBinlog(stream(binlogRaw, bFeed)),
+      Comparator.prepareAvro(stream(avroRaw, aFeed)))
   }
 
+  /** The stream-static compares' sides: the prepared binlog snapshot,
+    * materialized once — a static subtree re-runs per micro-batch unless
+    * materialized (cdc50's measured lesson: −30% on its drain) — and the
+    * raw avro side. */
+  private def streamSides(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val (binlog, avroRaw) = sidesRaw(spark, dir)
+    (binlog.localCheckpoint(true), avroRaw)
+  }
+
+  /** The raw avro rows in the JSON-lines feed `feed`, streamed back and
+    * prepared inside the streaming plan. */
+  private def avroStream(avroRaw: DataFrame, feed: String): DataFrame =
+    Comparator.prepareAvro(
+      avroRaw.sparkSession.readStream.schema(avroRaw.schema).json(feed))
+
+  /** [[avroStream]] over `avroRaw` written as the feed first. */
+  private def avroFeedStream(avroRaw: DataFrame, feed: String): DataFrame = {
+    avroRaw.write.mode("overwrite").json(feed)
+    avroStream(avroRaw, feed)
+  }
+
+  /** The avro keys a drained compare covered. */
+  private def drainedKeys(drained: DataFrame): DataFrame =
+    drained.select(col("binlog_file"), col("position").as("binlog_position"))
+
+  /** The documented end-of-stream batch step of the streaming compares:
+    * the drained `(binlog_file, position, status)` rows plus the
+    * BINLOG_ONLY rows — the keys of `binlogStatic` no avro key
+    * `(binlog_file, binlog_position)` of `avroKeys` covers — counted per
+    * status. With a tolerance sweep `tols`, BINLOG_ONLY is
+    * tolerance-independent, so it is replicated across the sweep by
+    * explode (cdc50's device) and the counts are per (tolerance_ms,
+    * status). */
+  private def statusCounts(drained: DataFrame, binlogStatic: DataFrame,
+      avroKeys: DataFrame, tols: Seq[Long] = Nil): DataFrame = {
+    val tol = if (tols.isEmpty) Nil else Seq(col("tolerance_ms"))
+    val rows = tol ++ Seq(col("binlog_file"), col("position"), col("status"))
+    val binlogOnly = graft.streaming.StreamingComparator
+      .reconcileBinlogOnly(binlogStatic, avroKeys)
+    val spread =
+      if (tols.isEmpty) binlogOnly
+      else binlogOnly.withColumn("tolerance_ms", explode(typedlit(tols)))
+    drained.select(rows: _*).unionByName(spread.select(rows: _*))
+      .groupBy(tol :+ col("status"): _*).agg(count(lit(1)).as("count"))
+      .orderBy(tol :+ col("status"): _*)
+  }
+
+  // cdc16 — the STREAM-STREAM comparator under the gate: both sides of
+  // cdc01's fixture stream from disk (binlog raw → normalizeBinlog, avro
+  // raw → prepareAvro, both inside the streaming plan), joined by
+  // `compareStreamsWithParity`'s watermarked interval join, drained with
+  // AvailableNow to a parquet sink, then the documented terminal batch
+  // steps (reclassifyUnparseable + reconcileBinlogOnly) — and the status
+  // counts must equal cdc01's: the oracle IS cdc01's oracle, so this
+  // gates the full parity contract, not a weaker stream-only shape.
+  // Sentinel rows a day ahead on BOTH feeds (the join watermark is the
+  // min across inputs), written as separate later-mtime files so
+  // maxFilesPerTrigger=1 forces them into later micro-batches, advance
+  // the watermark past every real row; the outer join's null side then
+  // flushes in the engine's no-data batches before AvailableNow
+  // terminates (the StreamingComparatorSpec parity construction, run on
+  // the real fixture). The sentinels' own keys (≥ 7e8, outside the
+  // fixture's id+2e7 space) never emit (nothing ever passes THEIR
+  // watermark bound) and are filtered defensively.
   def cdc16StreamParity(spark: SparkSession, dir: String): DataFrame = {
     val (root, _, sink, ckpt) = streamDirs("graft_cdc16_", dir, "sink")
 
     val binlogRaw = binlogRawSide(spark, dir)
     val (binlogStatic, avroRaw) = sidesRaw(spark, dir)
-    val (bFeed, aFeed) = parityFeeds(spark, dir, root, binlogRaw, avroRaw)
-
-    val binlogStream = Comparator.normalizeBinlog(
-      spark.readStream.schema(binlogRaw.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true").json(bFeed.getPath))
-    val avroStream = Comparator.prepareAvro(
-      spark.readStream.schema(avroRaw.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true").json(aFeed.getPath))
+    val (binlogStream, avroStream) =
+      parityStreams(spark, dir, root, binlogRaw, avroRaw)
     val (main, _) = graft.streaming.StreamingComparator.compareStreamsWithParity(
       avroStream, binlogStream, maxSkew = "10 minutes", watermarkDelay = "1 second")
     val drained = drainToParquet(main.select("binlog_file", "position", "status"), sink, ckpt)
@@ -1109,15 +1144,9 @@ object CdcQueries {
     // terminal batch steps over the same snapshot (the documented contract)
     val untimed = graft.streaming.StreamingComparator
       .partitionUnparseableBinlog(Comparator.normalizeBinlog(binlogRaw))._2
-    val reclassified = graft.streaming.StreamingComparator
-      .reclassifyUnparseable(drained, untimed)
-    val reconciled = graft.streaming.StreamingComparator.reconcileBinlogOnly(
-        binlogStatic,
-        avroRaw.select(col("binlog_file"), col("binlog_position")))
-      .select("binlog_file", "position", "status")
-    reclassified.select("binlog_file", "position", "status")
-      .unionByName(reconciled)
-      .groupBy("status").count().orderBy("status")
+    statusCounts(
+      graft.streaming.StreamingComparator.reclassifyUnparseable(drained, untimed),
+      binlogStatic, avroRaw.select(col("binlog_file"), col("binlog_position")))
   }
 
   // cdc18 — checkpoint-restart parity: the fault-tolerance contract of
@@ -1136,8 +1165,7 @@ object CdcQueries {
     val (root, feedPath, sink, ckpt) = streamDirs("graft_cdc18_", dir, "sink")
     val stage = new java.io.File(root, "stage")
     val feed = new java.io.File(feedPath)
-    val (binlogStaticLazy, avroRaw) = sidesRaw(spark, dir)
-    val binlogStatic = binlogStaticLazy.localCheckpoint(true) // cdc12 note
+    val (binlogStatic, avroRaw) = streamSides(spark, dir)
     // ≥4 part files so the two installments are both non-trivial
     avroRaw.repartition(4).write.mode("overwrite").json(stage.getPath)
     feed.mkdirs()
@@ -1149,19 +1177,13 @@ object CdcQueries {
         new java.io.File(feed, s"${tag}_${f.getName}").toPath)
     }
     def drain(): DataFrame = drainToParquet(graft.streaming.StreamingComparator
-      .compareStream(Comparator.prepareAvro(
-        spark.readStream.schema(avroRaw.schema).json(feed.getPath)), binlogStatic)
+      .compareStream(avroStream(avroRaw, feed.getPath), binlogStatic)
       .select("binlog_file", "position", "status"), sink, ckpt)
     val (first, second) = parts.splitAt(parts.length / 2)
     deliver(first, "h1"); drain() // installment one, then the query stops
     deliver(second, "h2") // restart from the same checkpoint
     val drained = drain()
-    val binlogOnly = graft.streaming.StreamingComparator.reconcileBinlogOnly(
-        binlogStatic,
-        drained.select(col("binlog_file"), col("position").as("binlog_position")))
-      .select("binlog_file", "position", "status")
-    drained.unionByName(binlogOnly)
-      .groupBy("status").count().orderBy("status")
+    statusCounts(drained, binlogStatic, drainedKeys(drained))
   }
 
   // cdc17 — the canonical CDC CONSUMER: apply an ordered change feed
@@ -2585,21 +2607,16 @@ object CdcQueries {
   def cdc45StreamIvm(spark: SparkSession, dir: String): DataFrame = {
     val (_, feed, state, ckpt) = streamDirs("graft_cdc45_", dir)
     val fx = ivmFixture(spark, dir)
-    // ΔA → four real binlog files (keyed repartition: deterministic
-    // membership, any partitioning sums to the same view)
-    graft.ingest.BinlogSink.writeKeyedStrings(
-      fx.aDelta.repartition(4, col("o_orderkey")), feed)
+    fx.writeDelta(feed)
     // state₀ = old view's partials + the A⋈ΔB leg (ΔB applied batch-side
     // — the feed under maintenance here is A's; q66 already gates the
     // both-sides algebra, so B′ enters as the static join side)
     fx.partials(fx.aBase, fx.bBase)
       .unionByName(fx.partials(fx.aBase, fx.bDelta))
       .write.mode("overwrite").parquet(state)
-    val bPrime = fx.bBase.unionByName(fx.bDelta)
-      .localCheckpoint(true) // B′ = B ∪ ΔB: built once, probed per batch
+    fx.bPrime // B′ = B ∪ ΔB: built once, before the drain, probed per batch
     drainBinlog(spark, Seq(feed), ckpt) { (batch, _) =>
-      graft.streaming.ViewMaintenance.appendBatch(
-        fx.partials(decodeIvmDelta(batch), bPrime), state)
+      graft.streaming.ViewMaintenance.appendBatch(fx.deltaPartials(batch), state)
     }
     ivmReport(fx, graft.streaming.ViewMaintenance.readState(spark, state,
       "o_orderpriority STRING, cents BIGINT, n BIGINT"))
@@ -2651,8 +2668,7 @@ object CdcQueries {
   // point of signed partials — no base-view lookup, no rescan).
   def cdc47StreamRetract(spark: SparkSession, dir: String): DataFrame = {
     val (_, feed, state, ckpt) = streamDirs("graft_cdc47_", dir)
-    val base = fixtureBase(spark, dir)
-      .filter(col("event_type").isin("purchase", "click", "view"))
+    val base = dmlEvents(spark, dir)
     // signed changelog: every DML row inserts; every %3 row is later
     // retracted (same key/group — a genuine delete of an existing row)
     val ins = base.select(lit(1).as("op"), col("user_id").as("k"),
@@ -2715,24 +2731,16 @@ object CdcQueries {
   // parity (offsets); cdc48 gates SINK redelivery parity (writes) —
   // together the two halves of streaming exactly-once.
   def cdc48IdempotentSink(spark: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.ViewMaintenance
     val (_, feed, state, ckpt) = streamDirs("graft_cdc48_", dir)
     val fx = ivmFixture(spark, dir)
-    graft.ingest.BinlogSink.writeKeyedStrings(
-      fx.aDelta.repartition(4, col("o_orderkey")), feed)
-    val bPrime = fx.bBase.unionByName(fx.bDelta).localCheckpoint(true)
+    fx.writeDelta(feed)
     // state₀ under the same discipline (batch_id −1 = the old view's
-    // partials against the OLD B, −2 = the one-shot A⋈ΔB leg — NOT a
-    // B′ join, which would double-count ΔB)
-    ViewMaintenance.applyIdempotent(fx.partials(fx.aBase, fx.bBase), state, -1L)
-    ViewMaintenance.applyIdempotent(fx.partials(fx.aBase, fx.bDelta), state, -2L)
+    // partials against the OLD B, −2 = the one-shot A⋈ΔB leg)
+    fx.seedState(state)
     // drain + the injected batch-0 redelivery the partition overwrite
     // must absorb (see drainIdempotentWithRedelivery)
-    drainIdempotentWithRedelivery(spark, feed, ckpt, state)(b =>
-      fx.partials(decodeIvmDelta(b), bPrime))
-    ivmReport(fx, ViewMaintenance.readState(spark, state,
-      "o_orderpriority STRING, cents BIGINT, n BIGINT, batch_id BIGINT")
-      .drop("batch_id"))
+    drainIdempotentWithRedelivery(spark, feed, ckpt, state)(fx.deltaPartials)
+    fx.report(spark, state)
   }
 
   // cdc49 — STREAMING SKETCH-VIEW MAINTENANCE: the third face of the IVM
@@ -2752,34 +2760,13 @@ object CdcQueries {
   // contract, cdc47 is the retraction story).
   def cdc49StreamSketch(spark: SparkSession, dir: String): DataFrame = {
     val (_, feed, state, ckpt) = streamDirs("graft_cdc49_", dir)
-    val base = fixtureBase(spark, dir)
-      .filter(col("event_type").isin("purchase", "click", "view"))
-    graft.ingest.BinlogSink.writeKeyedStrings(
-      base.select(col("user_id"), col("event_type"))
-        .repartition(4, col("user_id")), feed)
+    val sketch = SketchFixture(dmlEvents(spark, dir))
+    sketch.writeFeed(feed)
     drainBinlog(spark, Seq(feed), ckpt) { (batch, _) =>
-      graft.streaming.ViewMaintenance.appendBatch(
-        graft.ops.Hll.withRegRho(
-            batch.filter(col("event_type") === "WriteRowsEventV2")
-              .select(explode(col("row_images")).as("img"))
-              .select(element_at(col("img"), 1).cast("long").as("user_id"),
-                element_at(col("img"), 2).as("event_type")),
-            col("user_id"))
-          .groupBy("event_type", "reg").agg(max(col("rho")).as("r")),
-        state)
+      graft.streaming.ViewMaintenance.appendBatch(sketch.partials(batch), state)
     }
-    val regs = graft.streaming.ViewMaintenance.readState(spark, state,
-        "event_type STRING, reg BIGINT, r INT")
-      .groupBy("event_type", "reg").agg(max(col("r")).as("r"))
-    val sums = regs.groupBy("event_type")
-      .agg(graft.ops.Hll.sum48OverR.as("sum48"),
-        count(lit(1)).as("n_regs_hit"))
-    val exact = base.groupBy("event_type")
-      .agg(countDistinct(col("user_id")).as("n_exact"))
-    sums.join(exact, "event_type")
-      .select(col("event_type"), col("n_exact"), col("n_regs_hit"),
-        col("sum48"), graft.ops.Hll.estExpr("sum48").as("est"))
-      .orderBy("event_type")
+    sketch.report(graft.streaming.ViewMaintenance.readState(spark, state,
+      "event_type STRING, reg BIGINT, r INT"))
   }
 
   val cdc49Oracle: String =
@@ -2829,31 +2816,18 @@ object CdcQueries {
   def cdc50StreamBandTolerance(spark: SparkSession, dir: String): DataFrame = {
     val tols = Seq(0L, 50L, 100L, 250L, 1000L)
     val (_, feed, sink, ckpt) = streamDirs("graft_cdc50_", dir, "sink")
-    val (binlogStaticLazy, avroRaw) = sidesRaw(spark, dir)
-    // materialize the static side ONCE: the main join and the band leg
+    // the static side materialized ONCE: the main join and the band leg
     // would otherwise re-execute the prepare shuffle every micro-batch
-    // (a static subtree is re-run per micro-batch unless materialized)
-    val binlogStatic = binlogStaticLazy.localCheckpoint(true)
-    avroRaw.write.mode("overwrite").json(feed)
-    val avroStream = Comparator.prepareAvro(
-      spark.readStream.schema(avroRaw.schema).json(feed))
+    val (binlogStatic, avroRaw) = streamSides(spark, dir)
     // the whole sweep in ONE stream-static plan: one main join + one
     // coarsest-band leg + a stateless per-tolerance explode (the
     // nesting argument on Comparator.ToleranceBand)
     val drained = drainToParquet(graft.streaming.StreamingComparator
-      .compareStreamBandSweep(avroStream, binlogStatic, tols)
+      .compareStreamBandSweep(avroFeedStream(avroRaw, feed), binlogStatic, tols)
       .select(col("tolerance_ms"), col("binlog_file"),
         col("position"), col("status")), sink, ckpt)
-    val binlogOnly = graft.streaming.StreamingComparator.reconcileBinlogOnly(
-        binlogStatic,
-        drained.filter(col("tolerance_ms") === 0L)
-          .select(col("binlog_file"), col("position").as("binlog_position")))
-      .select(col("binlog_file"), col("position"), col("status"),
-        explode(typedlit(tols)).as("tolerance_ms"))
-    drained.unionByName(binlogOnly.select(
-        "tolerance_ms", "binlog_file", "position", "status"))
-      .groupBy("tolerance_ms", "status").agg(count(lit(1)).as("count"))
-      .orderBy("tolerance_ms", "status")
+    statusCounts(drained, binlogStatic,
+      drainedKeys(drained.filter(col("tolerance_ms") === 0L)), tols)
   }
 
 
@@ -2881,17 +2855,9 @@ object CdcQueries {
     val tols = Seq(0L, 50L, 100L, 250L, 1000L)
     val (root, _, sink, ckpt) = streamDirs("graft_cdc52_", dir, "sink")
     val binlogRaw = binlogRawSide(spark, dir)
-    val (binlogStaticLazy, avroRaw) = sidesRaw(spark, dir)
-    val binlogStatic = binlogStaticLazy.localCheckpoint(true) // cdc12 note
-    val (bFeed, aFeed) = parityFeeds(spark, dir, root, binlogRaw, avroRaw)
-    val binlogStream = Comparator.normalizeBinlog(
-      spark.readStream.schema(binlogRaw.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true").json(bFeed.getPath))
-    val avroStream = Comparator.prepareAvro(
-      spark.readStream.schema(avroRaw.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true").json(aFeed.getPath))
+    val (binlogStatic, avroRaw) = streamSides(spark, dir)
+    val (binlogStream, avroStream) =
+      parityStreams(spark, dir, root, binlogRaw, avroRaw)
     // the E8 parse-error class carries no event time — split off
     // pre-join; its pairs resolve at the terminal presence check
     val (timed, _) = graft.streaming.StreamingComparator
@@ -2914,16 +2880,8 @@ object CdcQueries {
           lit(Schemas.Status.MismatchTs)).otherwise(col("status")))
       .drop("_k_file", "_k_pos")
     // terminal (b): BINLOG_ONLY, tolerance-independent → explode (cdc50)
-    val binlogOnly = graft.streaming.StreamingComparator.reconcileBinlogOnly(
-        binlogStatic,
-        avroRaw.select(col("binlog_file"), col("binlog_position")))
-      .select(col("binlog_file"), col("position"), col("status"),
-        explode(typedlit(tols)).as("tolerance_ms"))
-    reclassified.select("tolerance_ms", "binlog_file", "position", "status")
-      .unionByName(binlogOnly.select(
-        "tolerance_ms", "binlog_file", "position", "status"))
-      .groupBy("tolerance_ms", "status").agg(count(lit(1)).as("count"))
-      .orderBy("tolerance_ms", "status")
+    statusCounts(reclassified, binlogStatic,
+      avroRaw.select(col("binlog_file"), col("binlog_position")), tols)
   }
 
   val gates: Seq[Gate] = Seq(

@@ -3,11 +3,12 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.queries.CdcFixtures.{boundedClasses, census, classLabel, decodeIvmDelta,
-  fixtureBase, imageKeys, Installments, ivmFixture, ivmReport, stateCensus, serverSid,
-  tailBase, TailFeedWriter, Txn, txns, writeBulk, writeFeedFile, writtenKeys}
-import graft.streaming.Drains.{drain, drainBinlog, drainWithRedelivery, streamDirs,
-  Redelivery}
+import graft.queries.CdcFixtures.{boundedClasses, census, censusOracle, classLabel,
+  Cutover, Demux, dmlEvents, imageKeys, Installments, ivmFixture, ivmFold,
+  IvmStateSchema, keyedBase, SketchFixture, stateCensus, serverSid, tailBase,
+  TailFeedWriter, Txn, txns, writeBulk, writeFeedFile, writtenKeys}
+import graft.streaming.Drains.{deliver, drain, drainBinlog, drainWithRedelivery,
+  streamDirs, visibleFiles, Redelivery}
 
 /** The maintained-state LIFECYCLE family (split out of CdcQueries in r14
   * — the r13 verdict's mechanics task): the gates a long-running CDC
@@ -53,25 +54,16 @@ object LifecycleQueries {
     import graft.streaming.ViewMaintenance
     val (_, feed, state, ckpt) = streamDirs("graft_cdc51_", dir)
     val fx = ivmFixture(spark, dir)
-    graft.ingest.BinlogSink.writeKeyedStrings(
-      fx.aDelta.repartition(4, col("o_orderkey")), feed)
-    val bPrime = fx.bBase.unionByName(fx.bDelta).localCheckpoint(true)
-    ViewMaintenance.applyIdempotent(fx.partials(fx.aBase, fx.bBase), state, -1L)
-    ViewMaintenance.applyIdempotent(fx.partials(fx.aBase, fx.bDelta), state, -2L)
-    val stateSchema =
-      "o_orderpriority STRING, cents BIGINT, n BIGINT, batch_id BIGINT"
-    def foldPartials(df: DataFrame): DataFrame =
-      df.groupBy("o_orderpriority")
-        .agg(sum(col("cents")).as("cents"), sum(col("n")).as("n"))
+    fx.writeDelta(feed)
+    fx.seedState(state)
     // the last batch's file set, recorded in-drain (bounded:
     // maxFilesPerTrigger=1) for the in-flight replay below
     val lateFiles = scala.collection.mutable.ArrayBuffer.empty[String]
     var lateId = -1L
     def applyBatch(batch: DataFrame, id: Long): Unit = {
-      ViewMaintenance.applyIdempotent(
-        fx.partials(decodeIvmDelta(batch), bPrime), state, id)
+      fx.applyDelta(batch, state, id)
       if (id == 1L) // MID-stream: seeds + batch 0 → base; batch 1+ live
-        ViewMaintenance.compact(spark, state, stateSchema, upto = 0L)(foldPartials)
+        ViewMaintenance.compact(spark, state, IvmStateSchema, upto = 0L)(ivmFold)
       if (id > 0L) {
         lateFiles.clear()
         lateFiles ++= batch.select(col("binlog_file")).distinct()
@@ -87,8 +79,7 @@ object LifecycleQueries {
     if (lateFiles.nonEmpty)
       applyBatch(spark.read.format("binlog")
         .load(lateFiles.toSeq.map(f => s"$feed/$f"): _*), lateId)
-    ivmReport(fx,
-      ViewMaintenance.readState(spark, state, stateSchema).drop("batch_id"))
+    fx.report(spark, state)
   }
 
   // cdc53 — RESTART-MID-DRAIN for the maintenance matrix (additive
@@ -106,23 +97,14 @@ object LifecycleQueries {
   // redelivery). Shares q66's oracle: reprocessed files, restarted
   // counters, and unabsorbed replays are all hash mismatches.
   def cdc53RestartIvm(spark: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.ViewMaintenance
     val (root, feed, state, ckpt) = streamDirs("graft_cdc53_", dir)
     val staging = new java.io.File(root, "staging").getPath
     val fx = ivmFixture(spark, dir)
-    graft.ingest.BinlogSink.writeKeyedStrings(
-      fx.aDelta.repartition(4, col("o_orderkey")), staging)
-    val bPrime = fx.bBase.unionByName(fx.bDelta).localCheckpoint(true)
-    ViewMaintenance.applyIdempotent(fx.partials(fx.aBase, fx.bBase), state, -1L)
-    ViewMaintenance.applyIdempotent(fx.partials(fx.aBase, fx.bDelta), state, -2L)
+    fx.writeDelta(staging)
+    fx.seedState(state)
     graft.streaming.Drains.drainBinlogRestartWithRedelivery(
-        spark, staging, feed, ckpt) { (batch, id) =>
-      ViewMaintenance.applyIdempotent(
-        fx.partials(decodeIvmDelta(batch), bPrime), state, id)
-    }
-    ivmReport(fx, ViewMaintenance.readState(spark, state,
-      "o_orderpriority STRING, cents BIGINT, n BIGINT, batch_id BIGINT")
-      .drop("batch_id"))
+      spark, staging, feed, ckpt)(fx.applyDelta(_, state, _))
+    fx.report(spark, state)
   }
 
   // cdc54 — FULL-DML WIRE APPLY: the last wire shape the distributed
@@ -152,9 +134,7 @@ object LifecycleQueries {
   // At 100 TB: one shuffle on the key (max_by hash agg), the cdc17 plan.
   def cdc54WireDmlApply(spark: SparkSession, dir: String): DataFrame = {
     val (_, feed, _, _) = streamDirs("graft_cdc54_", dir)
-    val base = fixtureBase(spark, dir)
-      .filter(col("event_type").isin("purchase", "click", "view"))
-      .select(col("event_id").as("k"), col("user_id"))
+    val base = keyedBase(spark, dir)
     val maxKRow = base.agg(max(col("k"))).head()
     val moveOff = (if (maxKRow.isNullAt(0)) 0L else maxKRow.getLong(0)) + 1L
     val nullK = lit(null).cast("bigint")
@@ -244,10 +224,7 @@ object LifecycleQueries {
     val (root, feed, state, ckpt) = streamDirs("graft_cdc55_", dir)
     val stageN = new java.io.File(root, "stage_narrow").getPath
     val stageW = new java.io.File(root, "stage_wide").getPath
-    new java.io.File(feed).mkdirs()
-    val base = fixtureBase(spark, dir)
-      .filter(col("event_type").isin("purchase", "click", "view"))
-      .select(col("event_id").as("k"), col("user_id"))
+    val base = keyedBase(spark, dir)
     val maxRow = base.agg(max(col("k"))).head()
     val mid = if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0) / 2
     val v = concat(lit("u"), col("user_id"))
@@ -265,14 +242,7 @@ object LifecycleQueries {
           (col("k") * 3L + 1L).as("w"))
         .repartitionByRange(2, col("k")),
       stageW, fileSeqStart = 101)
-    Seq(stageN, stageW).foreach { st =>
-      Option(new java.io.File(st).listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isFile && !f.getName.startsWith("."))
-        .foreach { f =>
-          require(f.renameTo(new java.io.File(feed, f.getName)),
-            s"fixture deliver failed: $f")
-        }
-    }
+    Seq(stageN, stageW).foreach(deliver(_, feed))
     val wideSchema = "k BIGINT, v STRING, w BIGINT, batch_id BIGINT"
     drainWithRedelivery(spark, feed, ckpt) { (batch, id) =>
       // normalize EACH batch to the wide shape: the image's own arity
@@ -349,7 +319,7 @@ object LifecycleQueries {
       // never committed ⇒ held back
       .filter(col("event_index") < coalesce(col("last_xid_idx"), lit(-1L))))
     census(committed.withColumn("src",
-      when(col("k") % 131 === 0, "torn_file_committed").otherwise("sink")))
+      classLabel(Seq("torn_file_committed"), rest = "sink")))
   }
 
   // cdc57 — MULTI-TABLE DEMULTIPLEX: a real binlog is one totally-
@@ -375,67 +345,14 @@ object LifecycleQueries {
   // states — the alternative (N subscriptions filtering one table
   // each) reads the feed N times.
   def cdc57MultiTableDemux(spark: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.ViewMaintenance
     val (root, feed, _, ckpt) = streamDirs("graft_cdc57_", dir)
-    new java.io.File(feed).mkdirs()
-    val stateA = new java.io.File(root, "state_ta").getPath
-    val stateB = new java.io.File(root, "state_tb").getPath
-    val base = fixtureBase(spark, dir)
-      .filter(col("event_type").isin("purchase", "click", "view"))
-      .select(col("event_id").as("k"), col("user_id"))
-    val maxRow = base.agg(max(col("k"))).head()
-    val mid = if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0) / 2
+    val demux = new Demux(keyedBase(spark, dir), root)
     // four staged installments, numbered so the feed ALTERNATES tables
     // in natural-version order: ta(1), tb(2), ta(3), tb(4)
-    def stage(name: String, df: DataFrame, table: String, tableId: Long,
-        seq: Int): Unit = {
-      val st = new java.io.File(root, name).getPath
-      graft.ingest.BinlogSink.writeChanges(df.coalesce(1), st,
-        table = table, tableId = tableId, fileSeqStart = seq)
-      Option(new java.io.File(st).listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isFile && !f.getName.startsWith("."))
-        .foreach { f =>
-          require(f.renameTo(new java.io.File(feed, f.getName)),
-            s"fixture deliver failed: $f")
-        }
-    }
-    val ta = base.select(lit(1).as("op"), col("k"),
-      concat(lit("u"), col("user_id")).as("v"))
-    val tb = base.select(lit(1).as("op"), col("k"),
-      (col("user_id") * 3L).as("x"))
-    stage("st1", ta.filter(col("k") <= mid), "ta", 21L, seq = 1)
-    stage("st2", tb.filter(col("k") <= mid), "tb", 22L, seq = 2)
-    stage("st3", ta.filter(col("k") > mid), "ta", 21L, seq = 3)
-    stage("st4", tb.filter(col("k") > mid), "tb", 22L, seq = 4)
-    drainWithRedelivery(spark, feed, ckpt) { (batch, id) =>
-      // ONE pass over the batch, N routed state writes
-      val b = batch.filter(col("event_type") === "WriteRowsEventV2")
-        .select(col("table"), explode(col("row_images")).as("img"))
-        .localCheckpoint(true)
-      ViewMaintenance.applyIdempotent(
-        b.filter(col("table") === "ta")
-          .select(element_at(col("img"), 1).cast("long").as("k"),
-            element_at(col("img"), 2).as("v")),
-        stateA, id)
-      ViewMaintenance.applyIdempotent(
-        b.filter(col("table") === "tb")
-          .select(element_at(col("img"), 1).cast("long").as("k"),
-            element_at(col("img"), 2).cast("long").as("x")),
-        stateB, id)
-    }
-    val servedA = ViewMaintenance.readState(spark, stateA,
-        "k BIGINT, v STRING, batch_id BIGINT")
-      .withColumn("tbl", lit("ta"))
-      .groupBy("tbl")
-      .agg(count(lit(1)).as("n_rows"), sum(col("k")).as("k_sum"),
-        sum(length(col("v"))).as("payload_sum"))
-    val servedB = ViewMaintenance.readState(spark, stateB,
-        "k BIGINT, x BIGINT, batch_id BIGINT")
-      .withColumn("tbl", lit("tb"))
-      .groupBy("tbl")
-      .agg(count(lit(1)).as("n_rows"), sum(col("k")).as("k_sum"),
-        sum(col("x")).as("payload_sum"))
-    servedA.unionByName(servedB).orderBy("tbl")
+    demux.stageHalves(feed)
+    // ONE pass over the batch, N routed state writes
+    drainWithRedelivery(spark, feed, ckpt)(demux.apply)
+    demux.served(spark)
   }
 
   val cdc57Oracle: String =
@@ -453,15 +370,7 @@ object LifecycleQueries {
       |ORDER BY tbl""".stripMargin
 
   val cdc56Oracle: String =
-    """WITH base AS (
-      |  SELECT event_id AS k FROM events
-      |  WHERE event_type IN ('purchase', 'click', 'view')
-      |)
-      |SELECT CASE WHEN k % 131 = 0 THEN 'torn_file_committed'
-      |            ELSE 'sink' END AS src,
-      |  COUNT(*) AS n_rows, CAST(SUM(k) AS BIGINT) AS k_sum
-      |FROM base WHERE k % 131 <> 1
-      |GROUP BY 1 ORDER BY 1""".stripMargin
+    censusOracle(Seq("torn_file_committed"), excluded = Some(1), rest = "sink")
 
   val cdc55Oracle: String =
     """WITH base AS (
@@ -614,18 +523,7 @@ object LifecycleQueries {
   }
 
   val cdc64Oracle: String =
-    """WITH base AS (
-      |  SELECT event_id AS k FROM events
-      |  WHERE event_type IN ('purchase', 'click', 'view')
-      |)
-      |SELECT CASE WHEN k % 131 = 0 THEN 'txn_a'
-      |            WHEN k % 131 = 1 THEN 'txn_b'
-      |            WHEN k % 131 = 2 THEN 'txn_c'
-      |            WHEN k % 131 = 3 THEN 'txn_d'
-      |            ELSE 'bulk' END AS src,
-      |  COUNT(*) AS n_rows, CAST(SUM(k) AS BIGINT) AS k_sum
-      |FROM base WHERE k % 131 <> 4
-      |GROUP BY 1 ORDER BY 1""".stripMargin
+    censusOracle(Seq("txn_a", "txn_b", "txn_c", "txn_d"), excluded = Some(4))
 
   // cdc74 — GTID FAILOVER ACROSS THE SHARDED UNION (the composition
   // matrix's last live cell: cdc69/cdc72 prove N shards under one
@@ -731,18 +629,7 @@ object LifecycleQueries {
   }
 
   val cdc74Oracle: String =
-    """WITH base AS (
-      |  SELECT event_id AS k FROM events
-      |  WHERE event_type IN ('purchase', 'click', 'view')
-      |)
-      |SELECT k % 2 AS shard,
-      |  CASE WHEN k % 131 = 0 THEN 'txn_p'
-      |       WHEN k % 131 = 1 THEN 'txn_q'
-      |       WHEN k % 131 = 2 THEN 'txn_r'
-      |       ELSE 'bulk' END AS src,
-      |  COUNT(*) AS n_rows, CAST(SUM(k) AS BIGINT) AS k_sum
-      |FROM base WHERE k % 131 <> 3
-      |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
+    censusOracle(Seq("txn_p", "txn_q", "txn_r"), excluded = Some(3), shards = 2)
 
   // cdc73 — SNAPSHOT CUTOVER ON THE EXECUTED-GTID SET (the r14 verdict's
   // second task: cdc60's bootstrap discards by (file_seq, event_index) —
@@ -794,10 +681,7 @@ object LifecycleQueries {
     // The positional high-water below is computed ONLY for the in-gate
     // negative proof that such a mark would break on failover.
     var posMark: Option[(Long, Long)] = None
-    val hasFiles = Option(new java.io.File(feed).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .exists(f => f.isFile && !f.getName.startsWith("."))
-    if (hasFiles) {
+    if (visibleFiles(feed).nonEmpty) {
       val snap = spark.read.format("binlog").load(feed)
         .filter(col("event_type") === "WriteRowsEventV2")
         .localCheckpoint(true)
@@ -943,13 +827,10 @@ object LifecycleQueries {
     // retention on BOTH shards: every consumed closed file vanishes —
     // each listing shrinks to just its active file, which shifts every
     // index under any index-keyed offset on either source
-    def listed(feed: String): Array[java.io.File] =
-      Option(new java.io.File(feed).listFiles()).getOrElse(Array.empty[java.io.File])
-        .filter(f => f.isFile && !f.getName.startsWith("."))
     feeds.zip(crafted).foreach { case (feed, (active, _)) =>
-      listed(feed).filter(f => !active.exists(_.file.getName == f.getName))
+      visibleFiles(feed).filter(f => !active.exists(_.file.getName == f.getName))
         .foreach(f => require(f.delete(), s"purge failed: $f"))
-      val left = listed(feed).length
+      val left = visibleFiles(feed).length
       require(left == active.size,
         s"the purge must leave only the active file in $feed, got $left")
     }
@@ -1014,31 +895,18 @@ object LifecycleQueries {
     batch0.replay()(applyBatch)
     // retention: every consumed closed file vanishes; only the active
     // file survives — every index-based offset just shifted
-    def listed(): Array[java.io.File] =
-      Option(new java.io.File(feed).listFiles()).getOrElse(Array.empty[java.io.File])
-        .filter(f => f.isFile && !f.getName.startsWith("."))
-    listed().filter(_.getName != activeFile.getName)
+    visibleFiles(feed).filter(_.getName != activeFile.getName)
       .foreach(f => require(f.delete(), s"purge failed: $f"))
     if (active.isDefined)
-      require(listed().length == 1,
-        s"the purge must leave only the active file, ${listed().length}")
+      require(visibleFiles(feed).length == 1,
+        s"the purge must leave only the active file, ${visibleFiles(feed).length}")
     active.foreach(_.append())
     drainBinlog(spark, Seq(feed), ckpt, tail = true)(applyBatch)
     stateCensus(spark, state, Seq("txn_a", "txn_b", "txn_c"))
   }
 
   val cdc71Oracle: String =
-    """WITH base AS (
-      |  SELECT event_id AS k FROM events
-      |  WHERE event_type IN ('purchase', 'click', 'view')
-      |)
-      |SELECT CASE WHEN k % 131 = 0 THEN 'txn_a'
-      |            WHEN k % 131 = 1 THEN 'txn_b'
-      |            WHEN k % 131 = 2 THEN 'txn_c'
-      |            ELSE 'bulk' END AS src,
-      |  COUNT(*) AS n_rows, CAST(SUM(k) AS BIGINT) AS k_sum
-      |FROM base WHERE k % 131 <> 3
-      |GROUP BY 1 ORDER BY 1""".stripMargin
+    censusOracle(Seq("txn_a", "txn_b", "txn_c"), excluded = Some(3))
 
   // cdc69 — SHARDED MULTI-SOURCE TAIL (the scale-out ingest shape: a
   // fleet of database SHARDS, each with its own growing binlog, tailed
@@ -1100,17 +968,8 @@ object LifecycleQueries {
   }
 
   val cdc69Oracle: String =
-    """WITH base AS (
-      |  SELECT event_id AS k FROM events
-      |  WHERE event_type IN ('purchase', 'click', 'view')
-      |)
-      |SELECT k % 2 AS shard,
-      |  CASE WHEN k % 131 = 0 THEN 'live_committed'
-      |       WHEN k % 131 = 1 THEN 'live_appended'
-      |       ELSE 'bulk' END AS src,
-      |  COUNT(*) AS n_rows, CAST(SUM(k) AS BIGINT) AS k_sum
-      |FROM base WHERE k % 131 <> 2
-      |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
+    censusOracle(Seq("live_committed", "live_appended"), excluded = Some(2),
+      shards = 2)
 
   // cdc68 — IN-PLACE CHECKPOINT UPGRADE, count-based → tailActive (how
   // an EXISTING deployment adopts tailing: every count-based consumer
@@ -1164,16 +1023,7 @@ object LifecycleQueries {
   }
 
   val cdc68Oracle: String =
-    """WITH base AS (
-      |  SELECT event_id AS k FROM events
-      |  WHERE event_type IN ('purchase', 'click', 'view')
-      |)
-      |SELECT CASE WHEN k % 131 = 0 THEN 'txn_a'
-      |            WHEN k % 131 = 1 THEN 'txn_b'
-      |            ELSE 'bulk' END AS src,
-      |  COUNT(*) AS n_rows, CAST(SUM(k) AS BIGINT) AS k_sum
-      |FROM base WHERE k % 131 <> 2
-      |GROUP BY 1 ORDER BY 1""".stripMargin
+    censusOracle(Seq("txn_a", "txn_b"), excluded = Some(2))
 
   // cdc67 — TAIL LAG OBSERVABILITY (the surface an operator actually
   // alerts on: every tail gate so far proves the torn tail is held back;
@@ -1235,18 +1085,7 @@ object LifecycleQueries {
   }
 
   val cdc67Oracle: String =
-    """WITH base AS (
-      |  SELECT event_id AS k FROM events
-      |  WHERE event_type IN ('purchase', 'click', 'view')
-      |)
-      |SELECT CASE WHEN k % 131 = 0 THEN 'txn_a'
-      |            WHEN k % 131 = 1 THEN 'txn_b'
-      |            WHEN k % 131 = 2 THEN 'txn_c'
-      |            WHEN k % 131 = 3 THEN 'held_back'
-      |            ELSE 'bulk' END AS src,
-      |  COUNT(*) AS n_rows, CAST(SUM(k) AS BIGINT) AS k_sum
-      |FROM base
-      |GROUP BY 1 ORDER BY 1""".stripMargin
+    censusOracle(Seq("txn_a", "txn_b", "txn_c", "held_back"))
 
   // cdc70 — DURABLE EXECUTED-GTID SET, FAILOVER ACROSS A RESTART
   // (cdc66's deliberate weakness made durable: there the executed
@@ -1397,17 +1236,7 @@ object LifecycleQueries {
   }
 
   val cdc66Oracle: String =
-    """WITH base AS (
-      |  SELECT event_id AS k FROM events
-      |  WHERE event_type IN ('purchase', 'click', 'view')
-      |)
-      |SELECT CASE WHEN k % 131 = 0 THEN 'txn_p'
-      |            WHEN k % 131 = 1 THEN 'txn_q'
-      |            WHEN k % 131 = 2 THEN 'txn_r'
-      |            ELSE 'bulk' END AS src,
-      |  COUNT(*) AS n_rows, CAST(SUM(k) AS BIGINT) AS k_sum
-      |FROM base WHERE k % 131 <> 3
-      |GROUP BY 1 ORDER BY 1""".stripMargin
+    censusOracle(Seq("txn_p", "txn_q", "txn_r"), excluded = Some(3))
 
   // cdc59 — COMPACTION × RESTART COMPOSITION (the seam cdc51 and cdc53
   // each prove alone: cdc51 compacts mid-drain, cdc53 restarts mid-drain;
@@ -1430,25 +1259,15 @@ object LifecycleQueries {
     val (root, feed, state, ckpt) = streamDirs("graft_cdc59_", dir)
     val staging = new java.io.File(root, "staging").getPath
     val fx = ivmFixture(spark, dir)
-    graft.ingest.BinlogSink.writeKeyedStrings(
-      fx.aDelta.repartition(4, col("o_orderkey")), staging)
-    val bPrime = fx.bBase.unionByName(fx.bDelta).localCheckpoint(true)
-    ViewMaintenance.applyIdempotent(fx.partials(fx.aBase, fx.bBase), state, -1L)
-    ViewMaintenance.applyIdempotent(fx.partials(fx.aBase, fx.bDelta), state, -2L)
-    val stateSchema =
-      "o_orderpriority STRING, cents BIGINT, n BIGINT, batch_id BIGINT"
-    def foldPartials(df: DataFrame): DataFrame =
-      df.groupBy("o_orderpriority")
-        .agg(sum(col("cents")).as("cents"), sum(col("n")).as("n"))
+    fx.writeDelta(staging)
+    fx.seedState(state)
     graft.streaming.Drains.drainBinlogRestartWithRedelivery(
         spark, staging, feed, ckpt) { (batch, id) =>
-      ViewMaintenance.applyIdempotent(
-        fx.partials(decodeIvmDelta(batch), bPrime), state, id)
+      fx.applyDelta(batch, state, id)
       if (id == 1L) // RUN 1, mid-drain: seeds + batch 0 fold into a base
-        ViewMaintenance.compact(spark, state, stateSchema, upto = 0L)(foldPartials)
+        ViewMaintenance.compact(spark, state, IvmStateSchema, upto = 0L)(ivmFold)
     }
-    ivmReport(fx,
-      ViewMaintenance.readState(spark, state, stateSchema).drop("batch_id"))
+    fx.report(spark, state)
   }
 
   // cdc60 — SNAPSHOT-BOOTSTRAP → STREAM CUTOVER AT A RECORDED POSITION
@@ -1473,81 +1292,24 @@ object LifecycleQueries {
   // 100 TB the filter is one codegen'd comparison per event, and the
   // bulk snapshot never rides the wire at all.
   def cdc60SnapshotCutover(spark: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.ViewMaintenance
     val (_, feed, state, ckpt) = streamDirs("graft_cdc60_", dir)
-    val base = fixtureBase(spark, dir)
-      .filter(col("event_type").isin("purchase", "click", "view"))
-      .select(col("event_id").as("k"),
-        concat(lit("u"), col("user_id")).as("v"))
     graft.ingest.BinlogSink.writeChanges(
-      base.select(lit(1).as("op"), col("k"), col("v"))
+      tailBase(spark, dir).select(lit(1).as("op"), col("k"), col("v"))
         .repartitionByRange(4, col("k")),
       feed, rowsPerTxn = 50)
     // the recorded position: the data-derived median row-event index of
-    // the MIDDLE file — a mark no file boundary aligns with
-    val files = Option(new java.io.File(feed).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isFile && !f.getName.startsWith("."))
-      .map(_.getName).sorted.toSeq
-    val (markSeq, markIdx) =
-      if (files.isEmpty) (0L, -1L)
-      else {
-        val markFile = files((files.length - 1) / 2)
-        val mi = spark.read.format("binlog").load(s"$feed/$markFile")
-          .filter(col("event_type") === "WriteRowsEventV2")
-          .agg(min(col("event_index")), max(col("event_index"))).head()
-        val seq = graft.ingest.BinlogTextParser.fileSeq(markFile).get
-        if (mi.isNullAt(0)) (seq, -1L)
-        else (seq, (mi.getLong(0) + mi.getLong(1)) / 2)
-      }
-    val atOrBeforeMark = col("file_seq") < markSeq ||
-      (col("file_seq") === markSeq && col("event_index") <= markIdx)
-    def rows(ev: DataFrame): DataFrame = ev
-      .filter(col("event_type") === "WriteRowsEventV2")
-      .select(col("file_seq"), col("event_index"),
-        explode(col("row_images")).as("img"))
-      .select(col("file_seq"), col("event_index"),
-        element_at(col("img"), 1).cast("long").as("k"),
-        element_at(col("img"), 2).as("v"))
-    // state₀: the bulk snapshot AS OF the mark (the batch-side apply of
-    // everything at-or-before it) — in a real deployment this is the
-    // table dump; here it is reconstructed from the same wire so the
-    // oracle covers both paths
-    if (files.nonEmpty)
-      ViewMaintenance.applyIdempotent(
-        rows(spark.read.format("binlog").load(feed)).filter(atOrBeforeMark)
-          .select("k", "v"),
-        state, -1L)
+    // the MIDDLE file — a mark no file boundary aligns with — and state₀,
+    // the bulk snapshot AS OF it
+    val cutover = new Cutover(spark, feed, state)
+    cutover.seed()
     // the cutover drain: subscribe from the BEGINNING, discard at-or-
     // before-mark POSITIONALLY, land the rest exactly-once; record the
     // straddling batch for the second injected replay
-    val straddle = new Redelivery(spark, Seq(feed))
-    var straddleFiles = Seq.empty[String]
-    var straddleId = -1L
-    def applyBatch(batch: DataFrame, id: Long): Unit = {
-      val r = rows(batch).localCheckpoint(true) // one decode, two probes
-      if (straddleFiles.isEmpty) {
-        // one aggregate decides "does this batch straddle the mark"
-        val flags = r.agg(
-          max(when(atOrBeforeMark, 1).otherwise(0)).as("pre"),
-          max(when(atOrBeforeMark, 0).otherwise(1)).as("post")).head()
-        if (!flags.isNullAt(0) && flags.getInt(0) == 1 && flags.getInt(1) == 1) {
-          straddleFiles = straddle.files(batch)
-          straddleId = id
-        }
-      }
-      ViewMaintenance.applyIdempotent(
-        r.filter(!atOrBeforeMark).select("k", "v"), state, id)
-    }
-    drainWithRedelivery(spark, feed, ckpt)(applyBatch)
+    drainWithRedelivery(spark, feed, ckpt)(cutover.apply)
     // injected replay (b): the straddling cutover batch (replay (a),
     // batch 0 — entirely pre-mark — is the scaffold's)
-    straddle.replay(straddleFiles, straddleId)(applyBatch)
-    ViewMaintenance.readState(spark, state, "k BIGINT, v STRING, batch_id BIGINT")
-      .groupBy((col("k") % 10).as("grp"))
-      .agg(count(lit(1)).as("n_rows"), sum(col("k")).as("k_sum"),
-        sum(length(col("v"))).as("payload_sum"))
-      .orderBy("grp")
+    cutover.replayStraddle()
+    cutover.report()
   }
 
   // cdc65 — SNAPSHOT BOOTSTRAP → LIVE-TAIL CUTOVER (cdc60's Datastream
@@ -1574,43 +1336,15 @@ object LifecycleQueries {
   // the filter is one codegen'd comparison, and the tail costs one
   // header walk of the growth per trigger.
   def cdc65TailCutover(spark: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.ViewMaintenance
     val (_, feed, state, ckpt) = streamDirs("graft_cdc65_", dir)
     val base = tailBase(spark, dir)
     // closed bulk (the table's history): everything but the live classes
     writeBulk(base, live = 3, files = 4, feed)
     // the recorded snapshot position: median row-event index of the
-    // middle closed file (mid-file — no boundary aligns with it)
-    val files = Option(new java.io.File(feed).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isFile && !f.getName.startsWith("."))
-      .map(_.getName).sorted.toSeq
-    val (markSeq, markIdx) =
-      if (files.isEmpty) (0L, -1L)
-      else {
-        val markFile = files((files.length - 1) / 2)
-        val mi = spark.read.format("binlog").load(s"$feed/$markFile")
-          .filter(col("event_type") === "WriteRowsEventV2")
-          .agg(min(col("event_index")), max(col("event_index"))).head()
-        val seq = graft.ingest.BinlogTextParser.fileSeq(markFile).get
-        if (mi.isNullAt(0)) (seq, -1L)
-        else (seq, (mi.getLong(0) + mi.getLong(1)) / 2)
-      }
-    val atOrBeforeMark = col("file_seq") < markSeq ||
-      (col("file_seq") === markSeq && col("event_index") <= markIdx)
-    def rows(ev: DataFrame): DataFrame = ev
-      .filter(col("event_type") === "WriteRowsEventV2")
-      .select(col("file_seq"), col("event_index"),
-        explode(col("row_images")).as("img"))
-      .select(col("file_seq"), col("event_index"),
-        element_at(col("img"), 1).cast("long").as("k"),
-        element_at(col("img"), 2).as("v"))
-    // state₀: the bulk snapshot AS OF the mark
-    if (files.nonEmpty)
-      ViewMaintenance.applyIdempotent(
-        rows(spark.read.format("binlog").load(feed))
-          .filter(atOrBeforeMark).select("k", "v"),
-        state, -1L)
+    // middle closed file (mid-file — no boundary aligns with it), and
+    // state₀, the bulk snapshot AS OF the mark
+    val cutover = new Cutover(spark, feed, state)
+    cutover.seed()
     // the LIVE side: one active file, growing between the two drains —
     // installment 1 ends cleanly after A's commit; the append brings B
     // (committed) and C (torn forever)
@@ -1623,22 +1357,9 @@ object LifecycleQueries {
     // the cutover drain: subscribe from the beginning, discard pre-mark
     // positionally; record batch 0 and the straddling batch for replays
     val redelivery = new Redelivery(spark, Seq(feed))
-    var straddleFiles = Seq.empty[String]
-    var straddleId = -1L
     def applyBatch(batch: DataFrame, id: Long): Unit = {
       redelivery.record(batch, id)
-      val r = rows(batch).localCheckpoint(true) // one decode, two probes
-      if (straddleFiles.isEmpty) {
-        val flags = r.agg(
-          max(when(atOrBeforeMark, 1).otherwise(0)).as("pre"),
-          max(when(atOrBeforeMark, 0).otherwise(1)).as("post")).head()
-        if (!flags.isNullAt(0) && flags.getInt(0) == 1 && flags.getInt(1) == 1) {
-          straddleFiles = redelivery.files(batch)
-          straddleId = id
-        }
-      }
-      ViewMaintenance.applyIdempotent(
-        r.filter(!atOrBeforeMark).select("k", "v"), state, id)
+      cutover.apply(batch, id)
     }
     def drainTail(): Unit = drainBinlog(spark, Seq(feed), ckpt, tail = true)(applyBatch)
     drainTail()
@@ -1649,12 +1370,8 @@ object LifecycleQueries {
     // tail source completes closed files whole, so the file-name replay
     // reproduces the batch exactly)
     redelivery.replay()(applyBatch)
-    redelivery.replay(straddleFiles, straddleId)(applyBatch)
-    ViewMaintenance.readState(spark, state, "k BIGINT, v STRING, batch_id BIGINT")
-      .groupBy((col("k") % 10).as("grp"))
-      .agg(count(lit(1)).as("n_rows"), sum(col("k")).as("k_sum"),
-        sum(length(col("v"))).as("payload_sum"))
-      .orderBy("grp")
+    cutover.replayStraddle()
+    cutover.report()
   }
 
   val cdc65Oracle: String =
@@ -1690,61 +1407,19 @@ object LifecycleQueries {
   def cdc61DemuxLifecycle(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.ViewMaintenance
     val (root, feed, _, ckpt) = streamDirs("graft_cdc61_", dir)
-    new java.io.File(feed).mkdirs()
-    val stateA = new java.io.File(root, "state_ta").getPath
-    val stateB = new java.io.File(root, "state_tb").getPath
-    val base = fixtureBase(spark, dir)
-      .filter(col("event_type").isin("purchase", "click", "view"))
-      .select(col("event_id").as("k"), col("user_id"))
-    val maxRow = base.agg(max(col("k"))).head()
-    val mid = if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0) / 2
-    def stage(name: String, df: DataFrame, table: String, tableId: Long,
-        seq: Int): Unit = {
-      val st = new java.io.File(root, name).getPath
-      graft.ingest.BinlogSink.writeChanges(df.coalesce(1), st,
-        table = table, tableId = tableId, fileSeqStart = seq)
-      Option(new java.io.File(st).listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isFile && !f.getName.startsWith("."))
-        .foreach { f =>
-          require(f.renameTo(new java.io.File(feed, f.getName)),
-            s"fixture deliver failed: $f")
-        }
-    }
-    val ta = base.select(lit(1).as("op"), col("k"),
-      concat(lit("u"), col("user_id")).as("v"))
-    val tb = base.select(lit(1).as("op"), col("k"),
-      (col("user_id") * 3L).as("x"))
-    stage("st1", ta.filter(col("k") <= mid), "ta", 21L, seq = 1)
-    stage("st2", tb.filter(col("k") <= mid), "tb", 22L, seq = 2)
-    stage("st3", ta.filter(col("k") > mid), "ta", 21L, seq = 3)
-    stage("st4", tb.filter(col("k") > mid), "tb", 22L, seq = 4)
-    val schemaA = "k BIGINT, v STRING, batch_id BIGINT"
-    val schemaB = "k BIGINT, x BIGINT, batch_id BIGINT"
+    val demux = new Demux(keyedBase(spark, dir), root)
+    demux.stageHalves(feed)
     drainWithRedelivery(spark, feed, ckpt) { (batch, id) =>
-      val b = batch.filter(col("event_type") === "WriteRowsEventV2")
-        .select(col("table"), explode(col("row_images")).as("img"))
-        .localCheckpoint(true) // the feed is read ONCE per batch
-      ViewMaintenance.applyIdempotent(
-        b.filter(col("table") === "ta")
-          .select(element_at(col("img"), 1).cast("long").as("k"),
-            element_at(col("img"), 2).as("v")),
-        stateA, id)
-      ViewMaintenance.applyIdempotent(
-        b.filter(col("table") === "tb")
-          .select(element_at(col("img"), 1).cast("long").as("k"),
-            element_at(col("img"), 2).cast("long").as("x")),
-        stateB, id)
+      demux.apply(batch, id) // the feed is read ONCE per batch
       // the maintenance loop: EVERY routed state, EVERY batch — the
       // exactly-once row sets fold by identity
-      ViewMaintenance.maybeCompact(spark, stateA, schemaA,
-        maxLive = 1, keepLast = 0)(df => df)
-      ViewMaintenance.maybeCompact(spark, stateB, schemaB,
-        maxLive = 1, keepLast = 0)(df => df)
+      demux.compact(spark)
     }
-    def report(stateDir: String, schema: String, tbl: String,
-        served: DataFrame): DataFrame = {
-      val m = ViewMaintenance.stateMetrics(spark, stateDir, schema)
-      val shape = m.agg(
+    // per table: the served rows next to the stateMetrics shape
+    def report(state: String, schema: String, tbl: String): DataFrame = {
+      val served = ViewMaintenance.readState(spark, state, schema)
+        .agg(count(lit(1)).as("n_rows"), sum(col("k")).as("k_sum"))
+      val shape = ViewMaintenance.stateMetrics(spark, state, schema).agg(
         sum(when(col("is_base"), 1L).otherwise(0L)).as("n_bases"),
         sum(when(col("is_base"), col("n_rows")).otherwise(0L)).as("base_rows"),
         sum(when(!col("is_base"), col("n_rows")).otherwise(0L)).as("ghost_rows"))
@@ -1752,12 +1427,8 @@ object LifecycleQueries {
       served.crossJoin(broadcast(shape)).withColumn("tbl", lit(tbl))
         .select("tbl", "n_rows", "k_sum", "n_bases", "base_rows", "ghost_rows")
     }
-    val servedA = ViewMaintenance.readState(spark, stateA, schemaA)
-      .agg(count(lit(1)).as("n_rows"), sum(col("k")).as("k_sum"))
-    val servedB = ViewMaintenance.readState(spark, stateB, schemaB)
-      .agg(count(lit(1)).as("n_rows"), sum(col("k")).as("k_sum"))
-    report(stateA, schemaA, "ta", servedA)
-      .unionByName(report(stateB, schemaB, "tb", servedB))
+    report(demux.stateA, demux.schemaA, "ta")
+      .unionByName(report(demux.stateB, demux.schemaB, "tb"))
       .orderBy("tbl")
   }
 
@@ -1780,38 +1451,15 @@ object LifecycleQueries {
   def cdc62SketchCompaction(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.ViewMaintenance
     val (_, feed, state, ckpt) = streamDirs("graft_cdc62_", dir)
-    val base = fixtureBase(spark, dir)
-      .filter(col("event_type").isin("purchase", "click", "view"))
-    graft.ingest.BinlogSink.writeKeyedStrings(
-      base.select(col("user_id"), col("event_type"))
-        .repartition(4, col("user_id")), feed)
+    val sketch = SketchFixture(dmlEvents(spark, dir))
+    sketch.writeFeed(feed)
     val regSchema = "event_type STRING, reg BIGINT, r INT, batch_id BIGINT"
-    def regFold(df: DataFrame): DataFrame =
-      df.groupBy("event_type", "reg").agg(max(col("r")).as("r"))
     drainWithRedelivery(spark, feed, ckpt) { (batch, id) =>
-      ViewMaintenance.applyIdempotent(
-        graft.ops.Hll.withRegRho(
-            batch.filter(col("event_type") === "WriteRowsEventV2")
-              .select(explode(col("row_images")).as("img"))
-              .select(element_at(col("img"), 1).cast("long").as("user_id"),
-                element_at(col("img"), 2).as("event_type")),
-            col("user_id"))
-          .groupBy("event_type", "reg").agg(max(col("rho")).as("r")),
-        state, id)
+      ViewMaintenance.applyIdempotent(sketch.partials(batch), state, id)
       ViewMaintenance.maybeCompact(spark, state, regSchema,
-        maxLive = 2, keepLast = 1)(regFold)
+        maxLive = 2, keepLast = 1)(CdcFixtures.registerFold)
     }
-    val regs = ViewMaintenance.readState(spark, state, regSchema)
-      .groupBy("event_type", "reg").agg(max(col("r")).as("r"))
-    val sums = regs.groupBy("event_type")
-      .agg(graft.ops.Hll.sum48OverR.as("sum48"),
-        count(lit(1)).as("n_regs_hit"))
-    val exact = base.groupBy("event_type")
-      .agg(countDistinct(col("user_id")).as("n_exact"))
-    sums.join(exact, "event_type")
-      .select(col("event_type"), col("n_exact"), col("n_regs_hit"),
-        col("sum48"), graft.ops.Hll.estExpr("sum48").as("est"))
-      .orderBy("event_type")
+    sketch.report(ViewMaintenance.readState(spark, state, regSchema))
   }
 
   // cdc63 — THE FULL DEPLOYMENT SHAPE, ONE GATE: a GROWING binlog
@@ -1835,73 +1483,34 @@ object LifecycleQueries {
   // subscription reads the feed once at wire-growth granularity; N
   // states stay compacted; nothing scales with history.
   def cdc63TailDemux(spark: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.ViewMaintenance
     val (root, feed, _, ckpt) = streamDirs("graft_cdc63_", dir)
-    new java.io.File(feed).mkdirs()
-    val stateA = new java.io.File(root, "state_ta").getPath
-    val stateB = new java.io.File(root, "state_tb").getPath
-    val base = fixtureBase(spark, dir)
-      .filter(col("event_type").isin("purchase", "click", "view"))
-      .select(col("event_id").as("k"), col("user_id"))
+    val demux = new Demux(keyedBase(spark, dir), root)
+    import demux.{ta, tb}
     // each table's closed file carries everything EXCEPT the classes that
     // ride the active file for THAT table (ta: 9/11, tb: 10/12) — both
     // tables' full row sets are on the wire exactly once
     val closedA = col("k") % 13 =!= 9 && col("k") % 13 =!= 11
     val closedB = col("k") % 13 =!= 10 && col("k") % 13 =!= 12
     // closed per-table files: ta then tb in natural-version order
-    def stageClosed(name: String, df: DataFrame, table: String,
-        tableId: Long, seq: Int): Unit = {
-      val st = new java.io.File(root, name).getPath
-      graft.ingest.BinlogSink.writeChanges(df.coalesce(1), st,
-        table = table, tableId = tableId, fileSeqStart = seq, rowsPerTxn = 50)
-      Option(new java.io.File(st).listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isFile && !f.getName.startsWith("."))
-        .foreach { f =>
-          require(f.renameTo(new java.io.File(feed, f.getName)),
-            s"fixture deliver failed: $f")
-        }
-    }
-    val ta = base.select(col("k"), concat(lit("u"), col("user_id")).as("v"))
-    val tb = base.select(col("k"), (col("user_id") * 3L).as("x"))
-    stageClosed("stA", ta.filter(closedA).select(lit(1).as("op"), col("k"), col("v")),
-      "ta", 21L, seq = 1)
-    stageClosed("stB", tb.filter(closedB).select(lit(1).as("op"), col("k"), col("x")),
-      "tb", 22L, seq = 2)
+    demux.stage("stA", ta.filter(closedA), "ta", 1, feed, rowsPerTxn = 50)
+    demux.stage("stB", tb.filter(closedB), "tb", 2, feed, rowsPerTxn = 50)
     // the ACTIVE file: both tables' transactions interleaved
     val Seq(ta9, ta11) = boundedClasses(ta, "cdc63", Seq(9L, 11L), modulus = 13L)
     val Seq(tb10, tb12) = boundedClasses(tb, "cdc63", Seq(10L, 12L), modulus = 13L)
     val cls = Seq(ta9, tb10, ta11, tb12)
     val Seq(a, b, c, d) = txns(cls, 821L, 8201L)
-    def inTa(t: Txn): Txn = t.copy(table = "ta", tableId = 21L)
-    def inTb(t: Txn): Txn = t.copy(table = "tb", tableId = 22L)
     val active = new TailFeedWriter(cls).activeFile(
       new java.io.File(feed, "mysql-bin.000500"),
-      Seq(inTa(a)), Some(inTb(b)), Seq(inTa(c), inTb(d).copy(commit = false)))
+      Seq(demux.inTable(a, "ta")), Some(demux.inTable(b, "tb")),
+      Seq(demux.inTable(c, "ta"), demux.inTable(d, "tb").copy(commit = false)))
     active.foreach(_.writeFirst())
-    val schemaA = "k BIGINT, v STRING, batch_id BIGINT"
-    val schemaB = "k BIGINT, x BIGINT, batch_id BIGINT"
     val batch0 = new Redelivery(spark, Seq(feed))
     def applyBatch(batch: DataFrame, id: Long): Unit = {
       batch0.record(batch, id)
       // ONE pass over the batch, N routed exactly-once writes, then the
       // per-state maintenance loop (cdc61's discipline)
-      val b = batch.filter(col("event_type") === "WriteRowsEventV2")
-        .select(col("table"), explode(col("row_images")).as("img"))
-        .localCheckpoint(true)
-      ViewMaintenance.applyIdempotent(
-        b.filter(col("table") === "ta")
-          .select(element_at(col("img"), 1).cast("long").as("k"),
-            element_at(col("img"), 2).as("v")),
-        stateA, id)
-      ViewMaintenance.applyIdempotent(
-        b.filter(col("table") === "tb")
-          .select(element_at(col("img"), 1).cast("long").as("k"),
-            element_at(col("img"), 2).cast("long").as("x")),
-        stateB, id)
-      ViewMaintenance.maybeCompact(spark, stateA, schemaA,
-        maxLive = 1, keepLast = 0)(df => df)
-      ViewMaintenance.maybeCompact(spark, stateB, schemaB,
-        maxLive = 1, keepLast = 0)(df => df)
+      demux.apply(batch, id)
+      demux.compact(spark)
     }
     def drainTail(): Unit = drainBinlog(spark, Seq(feed), ckpt, tail = true)(applyBatch)
     drainTail()
@@ -1910,17 +1519,7 @@ object LifecycleQueries {
     // injected crash-after-commit redelivery of batch 0 (ta's closed
     // file): ta absorbs it as a covered ghost, tb as an empty no-op
     batch0.replay()(applyBatch)
-    val servedA = ViewMaintenance.readState(spark, stateA, schemaA)
-      .withColumn("tbl", lit("ta"))
-      .groupBy("tbl")
-      .agg(count(lit(1)).as("n_rows"), sum(col("k")).as("k_sum"),
-        sum(length(col("v"))).as("payload_sum"))
-    val servedB = ViewMaintenance.readState(spark, stateB, schemaB)
-      .withColumn("tbl", lit("tb"))
-      .groupBy("tbl")
-      .agg(count(lit(1)).as("n_rows"), sum(col("k")).as("k_sum"),
-        sum(col("x")).as("payload_sum"))
-    servedA.unionByName(servedB).orderBy("tbl")
+    demux.served(spark)
   }
 
   val cdc63Oracle: String =
@@ -1968,17 +1567,7 @@ object LifecycleQueries {
       |ORDER BY tbl""".stripMargin
 
   val cdc58Oracle: String =
-    """WITH base AS (
-      |  SELECT event_id AS k FROM events
-      |  WHERE event_type IN ('purchase', 'click', 'view')
-      |)
-      |SELECT CASE WHEN k % 131 = 0 THEN 'txn_a'
-      |            WHEN k % 131 = 1 THEN 'txn_b'
-      |            WHEN k % 131 = 2 THEN 'txn_c'
-      |            ELSE 'bulk' END AS src,
-      |  COUNT(*) AS n_rows, CAST(SUM(k) AS BIGINT) AS k_sum
-      |FROM base WHERE k % 131 <> 3
-      |GROUP BY 1 ORDER BY 1""".stripMargin
+    censusOracle(Seq("txn_a", "txn_b", "txn_c"), excluded = Some(3))
 
   // cdc75 — TIME-TRAVEL READ over a maintained state (the REPRODUCIBILITY
   // residual of the maintenance layer: cdc51/59/62 prove the serving read
@@ -2008,20 +1597,12 @@ object LifecycleQueries {
     import graft.streaming.ViewMaintenance
     val state = reproFixtureDrain(spark, dir, "graft_cdc75_")
     def asOf(m: Long): DataFrame =
-      reproFold(ViewMaintenance.readStateAsOf(spark, state, reproStateSchema, m))
+      ivmFold(ViewMaintenance.readStateAsOf(spark, state, IvmStateSchema, m))
         .withColumn("as_of", lit(m))
     asOf(0L).unionByName(asOf(2L)).unionByName(asOf(3L))
       .select("as_of", "o_orderpriority", "cents", "n")
       .orderBy("as_of", "o_orderpriority")
   }
-
-  /** cdc75/cdc77's shared state shape: q66's priority partials under the
-    * exactly-once discipline. */
-  private val reproStateSchema =
-    "o_orderpriority STRING, cents BIGINT, n BIGINT, batch_id BIGINT"
-  private def reproFold(df: DataFrame): DataFrame =
-    df.groupBy("o_orderpriority")
-      .agg(sum(col("cents")).as("cents"), sum(col("n")).as("n"))
 
   /** cdc75/cdc77's shared fixture drain (factored so the two gates over
     * the same retention posture cannot drift): four delta installments
@@ -2038,7 +1619,6 @@ object LifecycleQueries {
     val (root, feed, state, ckpt) = streamDirs(prefix, dir)
     new java.io.File(feed).mkdirs()
     val fx = ivmFixture(spark, dir)
-    val bPrime = fx.bBase.unionByName(fx.bDelta).localCheckpoint(true)
     // four independent class writes into disjoint staging dirs, under
     // ascending sequence numbers (the source orders by name, and all are
     // delivered before the drain starts) — overlapped (§2.6)
@@ -2050,27 +1630,18 @@ object LifecycleQueries {
             .select(lit(1).as("op"), col("o_orderkey"), col("o_orderpriority"))
             .repartition(1),
           stg.getPath, fileSeqStart = i + 1)
-        val files = Option(stg.listFiles()).getOrElse(Array.empty[java.io.File])
-          .filter(f => f.isFile && !f.getName.startsWith("."))
-        require(files.nonEmpty, s"$prefix fixture class $i wrote no file — an " +
-          "empty delta class would shift every later batch id")
-        files.foreach { f =>
-          require(f.renameTo(new java.io.File(feed, f.getName)),
-            s"fixture deliver failed: $f")
-        }
+        require(deliver(stg.getPath, feed).nonEmpty, s"$prefix fixture class " +
+          s"$i wrote no file — an empty delta class would shift every later batch id")
       }
     }: _*)
-    ViewMaintenance.applyIdempotent(fx.partials(fx.aBase, fx.bBase), state, -1L)
-    ViewMaintenance.applyIdempotent(fx.partials(fx.aBase, fx.bDelta), state, -2L)
+    fx.seedState(state)
     drainBinlog(spark, Seq(feed), ckpt) { (batch, id) =>
-      ViewMaintenance.applyIdempotent(
-        fx.partials(decodeIvmDelta(batch), bPrime), state, id)
+      fx.applyDelta(batch, state, id)
       if (id == 1L) // first base: seeds + batch 0 folded, coverage 0
-        ViewMaintenance.compact(spark, state, reproStateSchema,
-          upto = 0L)(reproFold)
+        ViewMaintenance.compact(spark, state, IvmStateSchema, upto = 0L)(ivmFold)
       if (id == 3L) // second base RETAINS the first; batch 3 stays live
-        ViewMaintenance.compact(spark, state, reproStateSchema, upto = 2L,
-          retainBases = 1)(reproFold)
+        ViewMaintenance.compact(spark, state, IvmStateSchema, upto = 2L,
+          retainBases = 1)(ivmFold)
     }
     state
   }
@@ -2133,14 +1704,9 @@ object LifecycleQueries {
             base.filter(col("k") % 4 === lit(cls))
               .select(lit(1).as("op"), col("k"), col("v")).repartition(1),
             stg.getPath, table = tbl, tableId = tid, fileSeqStart = seq)
-          val files = Option(stg.listFiles()).getOrElse(Array.empty[java.io.File])
-            .filter(f => f.isFile && !f.getName.startsWith("."))
-          require(files.nonEmpty, s"cdc76 fixture file $seq wrote nothing — " +
-            "an empty class would unpair the per-batch table installments")
-          files.foreach { f =>
-            require(f.renameTo(new java.io.File(feed, f.getName)),
-              s"fixture deliver failed: $f")
-          }
+          require(deliver(stg.getPath, feed).nonEmpty, s"cdc76 fixture file " +
+            s"$seq wrote nothing — an empty class would unpair the per-batch " +
+            "table installments")
         }
       }: _*)
     val sch = "k BIGINT, v STRING, batch_id BIGINT"
@@ -2258,8 +1824,8 @@ object LifecycleQueries {
     def negate(df: DataFrame): DataFrame =
       df.withColumn("cents", -col("cents")).withColumn("n", -col("n"))
     def span(tag: String, from: Long, to: Long): DataFrame =
-      reproFold(
-        ViewMaintenance.readStateDiff(spark, state, reproStateSchema,
+      ivmFold(
+        ViewMaintenance.readStateDiff(spark, state, IvmStateSchema,
           from, to)(negate).drop("batch_id"))
         .withColumn("span", lit(tag))
     span("compacted_0to2", 0L, 2L).unionByName(span("live_2to3", 2L, 3L))
@@ -2305,7 +1871,6 @@ object LifecycleQueries {
   def cdc78FollowCensus(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.ViewMaintenance
     val (root, feed, _, _) = streamDirs("graft_cdc78_", dir)
-    new java.io.File(feed).mkdirs()
     val out = new java.io.File(root, "out").getPath
     val base = tailBase(spark, dir)
     Seq((1, "ta", 11L, 0L), (2, "tb", 12L, 1L),
@@ -2316,15 +1881,9 @@ object LifecycleQueries {
           base.filter(col("k") % 4 === lit(cls))
             .select(lit(1).as("op"), col("k"), col("v")).coalesce(1),
           stg.getPath, table = tbl, tableId = tid, fileSeqStart = seq)
-        val files = Option(stg.listFiles()).getOrElse(Array.empty[java.io.File])
-          .filter(f => f.isFile && !f.getName.startsWith("."))
-        require(files.nonEmpty, s"cdc78 fixture class $cls is empty — the " +
-          "class->mark arithmetic this gate pins needs all four " +
-          "installments (run at sf >= 0.01)")
-        files.foreach { f =>
-          require(f.renameTo(new java.io.File(feed, f.getName)),
-            s"fixture deliver failed: $f")
-        }
+        require(deliver(stg.getPath, feed).nonEmpty, s"cdc78 fixture class " +
+          s"$cls is empty — the class->mark arithmetic this gate pins needs " +
+          "all four installments (run at sf >= 0.01)")
     }
     graft.streaming.Drains.withDrainPartitions(spark) {
       // follow drains eagerly (AvailableNow to completion); its returned
@@ -2390,7 +1949,6 @@ object LifecycleQueries {
   def cdc79FollowGtid(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.ViewMaintenance
     val (root, feed, _, _) = streamDirs("graft_cdc79_", dir)
-    new java.io.File(feed).mkdirs()
     val out = new java.io.File(root, "out").getPath
     val base = tailBase(spark, dir)
     // bulk: everything outside the three crafted txn classes, gno 1
@@ -2399,13 +1957,7 @@ object LifecycleQueries {
       base.filter(col("k") % 131 >= 3)
         .select(lit(1).as("op"), col("k"), col("v")).coalesce(1),
       stg, fileSeqStart = 1)
-    Option(new java.io.File(stg).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isFile && !f.getName.startsWith("."))
-      .foreach { f =>
-        require(f.renameTo(new java.io.File(feed, f.getName)),
-          s"fixture deliver failed: $f")
-      }
+    deliver(stg, feed)
     val cls = boundedClasses(base, "cdc79", 0L to 2L)
     val Seq(p, q, _) = txns(cls, 9001L, 17001L)
     // the replica's own xids for the re-served Q and the new R
@@ -2436,17 +1988,7 @@ object LifecycleQueries {
   }
 
   val cdc79Oracle: String =
-    """WITH base AS (
-      |  SELECT event_id AS k FROM events
-      |  WHERE event_type IN ('purchase', 'click', 'view')
-      |)
-      |SELECT CASE WHEN k % 131 = 0 THEN 'txn_p'
-      |            WHEN k % 131 = 1 THEN 'txn_q'
-      |            WHEN k % 131 = 2 THEN 'txn_r'
-      |            ELSE 'bulk' END AS src,
-      |  COUNT(*) AS n_rows, CAST(SUM(k) AS BIGINT) AS k_sum
-      |FROM base
-      |GROUP BY 1 ORDER BY 1""".stripMargin
+    censusOracle(Seq("txn_p", "txn_q", "txn_r"))
 
   val gates: Seq[Gate] = Seq(
     // mid-stream compaction + covered AND in-flight replays absorbed =>

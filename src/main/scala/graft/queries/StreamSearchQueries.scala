@@ -500,13 +500,8 @@ object StreamSearchQueries {
                 (0 until dim).map(i => col("embedding")(i).as(s"f$i")): _*)
               .coalesce(1),
             staging, fileSeqStart = seqBase + k)
-          Option(new java.io.File(staging).listFiles())
-            .getOrElse(Array.empty)
-            .filter(f => f.isFile && !f.getName.startsWith("."))
-            .foreach { f =>
-              require(f.renameTo(new java.io.File(feed, f.getName)),
-                s"fixture deliver failed: $f")
-            }
+          graft.streaming.Drains.deliver(staging, feed.getPath)
+          ()
         }): _*)
     }
     val feeds = Seq(feedA.getPath, feedB.getPath)
@@ -1018,13 +1013,7 @@ object StreamSearchQueries {
     // FROZEN quantizer (s51's discipline)
     val kit = ivf(Tables.embeddings(spark, dir), dim = dim).checkpointed
     def deliver(staging: String): Unit =
-      Option(new java.io.File(staging).listFiles())
-        .getOrElse(Array.empty[java.io.File])
-        .filter(f => f.isFile && !f.getName.startsWith("."))
-        .foreach { f =>
-          require(f.renameTo(new java.io.File(feed, f.getName)),
-            s"fixture deliver failed: $f")
-        }
+      graft.streaming.Drains.deliver(staging, feed.getPath)
     // the insert wire: four id-range files (the strict id-prefix rule's
     // arrival order), staged so each range is one numbered file
     val maxRow = emb.agg(max(col("vec_id"))).head()

@@ -10,29 +10,32 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
   *
   *   - [[drain]]/[[drainToParquet]] — the drain policy: AvailableNow to
   *     completion on a checkpoint, started under [[withDrainPartitions]]'
-  *     dial; [[drainToParquet]] adds the parquet sink and its read-back;
+  *     fixed settings; [[drainToParquet]] adds the parquet sink and its
+  *     read-back;
   *   - [[drainBinlog]] — the one binlog feed: N feeds unioned into one
   *     query, file by file (`maxFilesPerTrigger=1`), optionally in the
   *     `tailActive` posture, `foreachBatch`;
   *   - [[Redelivery]] — the exactly-once proof's recorder: remember which
   *     file(s) batch 0 ACTUALLY processed, then re-apply that batch from
-  *     them after the drain, under the same dial — the injected
+  *     them after the drain, under the same settings — the injected
   *     crash-after-commit redelivery a replay-safe sink must absorb
   *     bit-for-bit (foreachBatch's documented at-least-once hazard, made
   *     concrete). [[drainWithRedelivery]],
   *     [[drainIdempotentWithRedelivery]] and
   *     [[drainBinlogRestartWithRedelivery]] are built on it.
   *
-  * [[tmpFixtureDir]]/[[streamDirs]] are the fixture roots, and
-  * [[inParallel]] overlaps independent per-batch maintenance actions.
+  * [[tmpFixtureDir]]/[[streamDirs]] are the fixture roots, [[deliver]]
+  * moves a staging dir's [[visibleFiles]] into a feed, and [[inParallel]]
+  * overlaps independent per-batch maintenance actions.
   */
 object Drains {
 
-  /** Pin `spark.sql.shuffle.partitions` (and AQE) to the drain dials for
-    * `body`.
+  /** Pin `spark.sql.shuffle.partitions`, AQE and the scan split to the
+    * fixed drain settings for `body`: [[DrainPartitions]],
+    * [[DrainAdaptive]] and [[DrainScanPartitions]].
     *
     * Gates pair with a fresh checkpoint per run (tmpFixtureDir wipes stale
-    * state), so the state partition count is a per-run dial, not a
+    * state), so the state partition count is a per-run setting, not a
     * compatibility surface — and the drained results (status counts,
     * keyed rows) are partition-count-invariant. At the batch default of
     * 32, each micro-batch of a few-hundred-row fixture pays 32
@@ -42,11 +45,10 @@ object Drains {
     * the value into the checkpoint's offset metadata at query start, so
     * the conf is held across the whole drain and restored after — a
     * restart drain (cdc18) re-reads the pinned value from the checkpoint
-    * regardless. At 100 TB this dial goes the other way (hundreds of
-    * partitions); the point is that it IS the deployment dial, per feed
-    * volume.
+    * regardless. At 100 TB this value goes the other way (hundreds of
+    * partitions), sized to the feed volume.
     *
-    * AQE is the second dial (r17, guide §1.2 "algorithm before config"
+    * AQE is the second setting (r17, guide §1.2 "algorithm before config"
     * applied to the micro-batch loop): with AQE on, every per-batch
     * foreachBatch query materializes each Exchange as its OWN job —
     * a 2-shuffle state write becomes 3-4 sequential job submissions of
@@ -56,8 +58,7 @@ object Drains {
     * (AQE is physical-only, and Spark already force-disables it for
     * the streaming plan itself — this extends the batch queries INSIDE
     * the drain loop). At deployment batch volume, runtime re-planning
-    * earns its latency back: flip `spark.graft.drain.adaptive=true`
-    * (and size `spark.graft.drain.partitions` to the feed). */
+    * earns its latency back, and AQE would be on. */
   def withDrainPartitions[T](spark: SparkSession)(body: => T): T = {
     val pKey = "spark.sql.shuffle.partitions"
     val aKey = "spark.sql.adaptive.enabled"
@@ -65,15 +66,9 @@ object Drains {
     val prevP = spark.conf.get(pKey)
     val prevA = spark.conf.get(aKey)
     val prevM = spark.conf.getOption(mKey)
-    spark.conf.set(pKey, spark.conf.get("spark.graft.drain.partitions", "4"))
-    spark.conf.set(aKey, spark.conf.get("spark.graft.drain.adaptive", "false"))
-    // the bench session splits scans to the core count for the
-    // compute-heavy corpus queries (Bench.scala's minPartitionNum note);
-    // inside a drain every scan is a micro-batch file or a few-row state
-    // partition, and a 32-way split of those is 32 tasks of pure open
-    // cost per read — pin scan parallelism to the drain dial here, sized
-    // by feed volume at deployment like the other two dials
-    spark.conf.set(mKey, spark.conf.get("spark.graft.drain.scan.partitions", "1"))
+    spark.conf.set(pKey, DrainPartitions)
+    spark.conf.set(aKey, DrainAdaptive)
+    spark.conf.set(mKey, DrainScanPartitions)
     try body finally {
       spark.conf.set(pKey, prevP)
       spark.conf.set(aKey, prevA)
@@ -83,6 +78,20 @@ object Drains {
       }
     }
   }
+
+  /** The drain's shuffle (and state store) partition count. */
+  val DrainPartitions = 4L
+
+  /** AQE inside the drain: off (see [[withDrainPartitions]]). */
+  val DrainAdaptive = false
+
+  /** The drain's scan split floor: the bench session splits scans to the
+    * core count for the compute-heavy corpus queries (Bench.scala's
+    * minPartitionNum note); inside a drain every scan is a micro-batch
+    * file or a few-row state partition, and a 32-way split of those is 32
+    * tasks of pure open cost per read. Like the other two settings it
+    * would be sized by feed volume at deployment. */
+  val DrainScanPartitions = 1L
 
   /** Run independent maintenance actions CONCURRENTLY and wait for all
     * (guide §2.6 — Spark happily runs several jobs at once; per-batch
@@ -160,9 +169,33 @@ object Drains {
       new java.io.File(root, "ckpt").getPath)
   }
 
+  /** The visible files of `dir` in name order: dot-prefixed sidecars
+    * (`.crc`) and subdirectories are not listed; a missing dir lists
+    * none. */
+  def visibleFiles(dir: String): Seq[java.io.File] =
+    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty[java.io.File])
+      .filter(f => f.isFile && !f.getName.startsWith("."))
+      .sortBy(_.getName).toSeq
+
+  /** Moves the first `limit` [[visibleFiles]] of `staging` into `feed`
+    * (created if missing) under their own names — a fixture's delivery of
+    * staged wire files to the watched dir. Hidden sidecars stay in
+    * `staging`. Returns the moved files at their new paths, in name
+    * order. */
+  def deliver(staging: String, feed: String,
+      limit: Int = Int.MaxValue): Seq[java.io.File] = {
+    val fd = new java.io.File(feed)
+    fd.mkdirs()
+    visibleFiles(staging).take(limit).map { f =>
+      val to = new java.io.File(fd, f.getName)
+      require(f.renameTo(to), s"fixture deliver failed: $f")
+      to
+    }
+  }
+
   /** The drain policy: run `w`'s query AvailableNow to completion on the
-    * checkpoint `ckpt`, started under the drain dial (streaming pins the
-    * dial into the checkpoint at start, and every micro-batch plans under
+    * checkpoint `ckpt`, started under the drain settings (streaming pins
+    * them into the checkpoint at start, and every micro-batch plans under
     * it). */
   def drain(spark: SparkSession, w: DataStreamWriter[Row], ckpt: String): Unit =
     withDrainPartitions(spark) {
@@ -220,7 +253,7 @@ object Drains {
     * instead of isolating a sink bug. [[files]] serves the gates that
     * also capture a later batch (failover, straddle, last-batch
     * replays). [[replay]] re-applies a batch from its names under the
-    * drain dial, like the drain it replays; with nothing recorded (an
+    * drain settings, like the drain it replays; with nothing recorded (an
     * empty feed wrote no files and ran no batches) nothing is replayed.
     *
     * Each name resolves to the ONE feed holding it — a name present in
@@ -287,24 +320,15 @@ object Drains {
   def drainBinlogRestartWithRedelivery(spark: SparkSession,
       staging: String, feed: String, ckpt: String)
       (apply: (DataFrame, Long) => Unit): Unit = {
-    val fd = new java.io.File(feed); fd.mkdirs()
-    val staged = Option(new java.io.File(staging).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isFile && !f.getName.startsWith("."))
-      .sortBy(_.getName)
-    val (h1, h2) = staged.splitAt((staged.length + 1) / 2)
-    def deliver(fs: Array[java.io.File]): Unit = fs.foreach { f =>
-      require(f.renameTo(new java.io.File(fd, f.getName)),
-        s"fixture deliver failed: $f")
-    }
+    val half = (visibleFiles(staging).length + 1) / 2
     val batch0 = new Redelivery(spark, Seq(feed))
     def drainOnce(): Unit = drainBinlog(spark, Seq(feed), ckpt) { (batch, id) =>
       batch0.record(batch, id)
       apply(batch, id)
     }
-    deliver(h1)
+    deliver(staging, feed, half)
     drainOnce()
-    deliver(h2)
+    deliver(staging, feed)
     drainOnce()
     batch0.replay()(apply)
   }
