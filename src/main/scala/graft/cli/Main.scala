@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.cdc.{Comparator, Report}
 import graft.ingest.{AvroSource, BinlogBinaryParser, BinlogTextParser, Sources}
-import graft.sources.{AvroScanHelper, BinlogScan}
+import graft.sources.{AvroDataSource, BinlogScan}
 
 /** End-to-end CDC comparison driver — the engine's equivalent of the
   * reference's `comparator.sh` + `avro_to_json.sh` + `compare_timestamps`
@@ -690,13 +690,13 @@ object Main {
       try files catch { case _: java.io.FileNotFoundException => Nil }
     val binlogFiles = (args.binlogText, args.binlogBinary, args.binlogJson) match {
       case (Some(dir), _, _) => listed(dir, _.startsWith("mysql-bin."))
-      case (_, Some(path), _) => scanned(BinlogScan.listStatuses(path).toSeq)
+      case (_, Some(path), _) => scanned(BinlogScan.files(Seq(path)).toSeq)
       case (_, _, Some(path)) => listed(path, _.endsWith(".json"))
       case _ => Nil
     }
     val avroFiles = (args.avro, args.avroJson) match {
       case (Some(path), _) =>
-        scanned(AvroScanHelper.listAvroFiles(spark, path, allowEmpty = true))
+        scanned(AvroDataSource.files(Seq(path)).toSeq)
       case (_, Some(path)) => listed(path, _.endsWith(".json"))
       case _ => Nil
     }

@@ -14,8 +14,9 @@ import org.apache.spark.sql.types._
   * The reference shells out to `avro-tools tojson` once per file
   * (avro_to_json.sh:52-70); here the container files are read in place by
   * graft's own DSv2 connector, [[graft.sources.AvroDataSource]]
-  * (`spark.read.format("avrofile")`: byte ranges split at sync markers, so
-  * large files fan out across tasks), and `["null", T]` unions resolve
+  * (`spark.read.format("avrofile")`: small files pack several to a task
+  * and large ones split into byte ranges at sync markers, by Spark's
+  * file-source rule), and `["null", T]` unions resolve
   * directly to nullable `T` — no union-wrapper structs, no per-file JVM
   * forks, no JSON intermediate. This object holds the driver-side schema
   * pieces the connector uses: the writer schema from the first file's
@@ -30,7 +31,8 @@ object AvroSource {
   /** Read `.avro` container files (a concrete path, directory, or glob)
     * into a DataFrame — delegates to the DSv2 connector
     * ([[graft.sources.AvroDataSource]], `spark.read.format("avrofile")`):
-    * splittable by sync-marker byte range, direct InternalRow conversion
+    * small files packed and large ones split by sync-marker byte range
+    * under Spark's file-source rule, direct InternalRow conversion
     * (no external-Row round-trip), top-level column pruning. Reader
     * schema comes from the first file's header (one cheap driver-side
     * metadata read); each file then resolves writer→reader by Avro rules —
@@ -42,9 +44,10 @@ object AvroSource {
 
   /** Resolve the writer schema from the header of the first file the
     * `avrofile` scan would read. */
-  def readSchema(spark: SparkSession, path: String): Schema = {
+  def readSchema(spark: SparkSession, paths: String*): Schema = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val first = graft.sources.AvroScanHelper.listAvroFiles(spark, path).head.getPath
+    val first = graft.sources.AvroDataSource.files(paths).headOption.getOrElse(
+      throw new IllegalArgumentException(s"no .avro files under ${paths.mkString(", ")}")).getPath
     val reader = new DataFileReader[GenericRecord](
       new FsInput(first, conf),
       new org.apache.avro.generic.GenericDatumReader[GenericRecord]())

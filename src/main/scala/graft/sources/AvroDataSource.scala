@@ -8,7 +8,8 @@ import org.apache.avro.Schema
 import org.apache.avro.file.DataFileReader
 import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.avro.mapred.FsInput
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
@@ -25,12 +26,16 @@ import graft.ingest.AvroSource
   *
   *   spark.read.format("avrofile").load("/path/to/files")
   *
-  * [[AvroSource.read]] is this connector. What it does:
-  *   - **Splittable files**: Avro's sync markers make any byte range
-  *     readable (`DataFileReader.sync(start)` seeks to the next block
-  *     boundary; read while `!pastSync(end)`). Files larger than
-  *     `spark.sql.files.maxPartitionBytes` fan out across tasks — at
-  *     100 TB one giant container no longer serializes into one task.
+  * [[AvroSource.read]] is this connector, on the shared file-scan core
+  * ([[FileScan]]: `.avro` names, the path contract and the reader of the
+  * `binlog` source). What it does:
+  *   - **Packed and split by Spark's file-source rule**: a batch read
+  *     packs small containers several to a task and cuts a container
+  *     longer than the split size (`FilePartition.maxSplitBytes`, at most
+  *     `spark.sql.files.maxPartitionBytes`) into byte ranges. Avro's sync
+  *     markers make any byte range readable (`DataFileReader.sync(start)`
+  *     seeks to the next block boundary; read while `!pastSync(end)`), so
+  *     at 100 TB one giant container no longer serializes into one task.
   *   - **Direct InternalRow conversion**: GenericRecord → catalyst values
   *     in one pass (UTF8String / micros / epoch-days / Decimal), skipping
   *     the external Row + encoder round-trip.
@@ -53,14 +58,14 @@ class AvroDataSource extends TableProvider
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val spark = org.apache.spark.sql.SparkSession.active
-    AvroSource.toStructType(AvroSource.readSchema(spark, options.get("path")))
+    AvroSource.toStructType(AvroSource.readSchema(spark, FileScan.resolvePaths(options): _*))
   }
 
   override def getTable(
       schema: StructType,
       partitioning: Array[Transform],
       properties: util.Map[String, String]): Table =
-    new AvroTable(properties.get("path"), Option(schema),
+    new AvroTable(FileScan.resolvePaths(properties), Option(schema),
       Option(properties.get("maxFilesPerTrigger")).map(_.toInt),
       Option(properties.get("fileNameColumn")))
 
@@ -73,16 +78,22 @@ class AvroDataSource extends TableProvider
   override def supportsExternalMetadata(): Boolean = true
 }
 
+private[graft] object AvroDataSource {
+  /** The Avro containers under `paths`, in name order ([[FileScan.list]]). */
+  def files(paths: Seq[String]): Array[FileStatus] =
+    FileScan.list(paths, _.endsWith(".avro"))
+}
+
 /** `fileNameColumn`: name of a virtual partition-style STRING column
   * holding each record's source-file basename. CDC delivery directories
   * are name-bucketed (Datastream drops `<stream>_<timestamp>.avro` files),
   * so predicates on this column prune whole files at planning — the
   * file-level analogue of `BinlogFilePruning` (Avro blocks carry no
   * column stats; file name is the pruning ceiling for this format). */
-private class AvroTable(path: String, userSchema: Option[StructType],
+private class AvroTable(paths: Seq[String], userSchema: Option[StructType],
     maxFilesPerTrigger: Option[Int], fileNameColumn: Option[String] = None)
     extends Table with SupportsRead {
-  require(path != null, "avro source requires a path (use .load(path))")
+  require(paths.nonEmpty, "avro source requires a path (use .load(path))")
 
   private lazy val spark = org.apache.spark.sql.SparkSession.active
   // the FILE-HEADER schema always wins when a file exists (it carries
@@ -90,7 +101,7 @@ private class AvroTable(path: String, userSchema: Option[StructType],
   // caller-provided StructType is only the fallback that lets a
   // streaming tail start on a still-empty delivery directory
   private lazy val avroSchema =
-    try AvroSource.readSchema(spark, path)
+    try AvroSource.readSchema(spark, paths: _*)
     catch {
       case e: IllegalArgumentException =>
         userSchema match {
@@ -99,7 +110,7 @@ private class AvroTable(path: String, userSchema: Option[StructType],
         }
     }
 
-  override def name(): String = s"avro($path)"
+  override def name(): String = s"avro(${paths.mkString(", ")})"
   override def schema(): StructType = {
     val base = AvroSource.toStructType(avroSchema)
     fileNameColumn match {
@@ -114,44 +125,16 @@ private class AvroTable(path: String, userSchema: Option[StructType],
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new AvroScanBuilder(path, avroSchema, schema(), maxFilesPerTrigger, fileNameColumn)
+    new FileScanBuilder(schema(), AvroFilePruning(fileNameColumn))((required, pushed) =>
+      new AvroScan(paths, avroSchema, required, maxFilesPerTrigger, fileNameColumn, pushed))
 }
 
-private class AvroScanBuilder(path: String, avroSchema: Schema, full: StructType,
-    maxFilesPerTrigger: Option[Int] = None, fileNameColumn: Option[String] = None)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with org.apache.spark.sql.connector.read.SupportsPushDownFilters {
-
-  private var required: StructType = full
-  private var pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  /** File-name pruning: predicates on the virtual `fileNameColumn` are
-    * decidable per FILE, so they skip whole containers at planning. All
-    * filters are also returned as residual — Spark re-evaluates them, so
-    * pruning is an optimization, never a correctness dependency. */
-  override def pushFilters(filters: Array[org.apache.spark.sql.sources.Filter])
-      : Array[org.apache.spark.sql.sources.Filter] = {
-    pushed = fileNameColumn match {
-      case Some(c) => filters.filter(AvroFilePruning.prunable(_, c))
-      case None => Array.empty
-    }
-    filters
-  }
-
-  override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] = pushed
-
-  override def build(): Scan =
-    new AvroScan(path, avroSchema, required, maxFilesPerTrigger,
-      fileNameColumn, pushed)
-}
-
-private object AvroFilePruning {
+/** File-name pruning: predicates on the virtual `fileNameColumn` are
+  * decidable per FILE, so they skip whole containers at planning. */
+private case class AvroFilePruning(fileNameColumn: Option[String]) extends FileNameRules {
   import org.apache.spark.sql.sources._
 
-  def prunable(f: Filter, col: String): Boolean = f match {
+  override def prunable(f: Filter): Boolean = fileNameColumn.exists(col => f match {
     case EqualTo(a, _: String) => a == col
     case In(a, vs) => a == col && vs.forall(_.isInstanceOf[String])
     case StringStartsWith(a, _) => a == col
@@ -160,11 +143,9 @@ private object AvroFilePruning {
     case LessThan(a, _: String) => a == col
     case LessThanOrEqual(a, _: String) => a == col
     case _ => false
-  }
+  })
 
-  /** Does a file with this basename possibly satisfy the filter?
-    * Conservative: anything undecidable keeps the file. */
-  def keeps(f: Filter, name: String): Boolean = f match {
+  override def keeps(f: Filter, name: String): Boolean = f match {
     case EqualTo(_, v: String) => name == v
     case In(_, vs) => vs.exists(v => v == name)
     case StringStartsWith(_, p) => name.startsWith(p)
@@ -176,7 +157,7 @@ private object AvroFilePruning {
   }
 }
 
-private class AvroScan(path: String, avroSchema: Schema, required: StructType,
+private class AvroScan(paths: Seq[String], avroSchema: Schema, required: StructType,
     maxFilesPerTrigger: Option[Int] = None,
     fileNameColumn: Option[String] = None,
     pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
@@ -191,101 +172,58 @@ private class AvroScan(path: String, avroSchema: Schema, required: StructType,
     * [[FileCountMicroBatchStream]]). Whole files per trigger (a file is
     * only listed once fully written). */
   override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new AvroMicroBatchStream(path, avroSchema.toString, required,
-      maxFilesPerTrigger, fileNameColumn)
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val splitSize = spark.sessionState.conf.filesMaxPartitionBytes
-    AvroScanHelper.listAvroFiles(spark, path)
-      .filter(st => pushed.forall(AvroFilePruning.keeps(_, st.getPath.getName)))
-      .flatMap { st =>
-        val len = st.getLen
-        if (len <= splitSize) Seq(AvroInputPartition(st.getPath.toString, 0L, len))
-        else (0L until len by splitSize).map { start =>
-          AvroInputPartition(st.getPath.toString, start, math.min(splitSize, len - start))
-        }
-      }.map(p => p: InputPartition).toArray
+      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
+    require(paths.length == 1,
+      s"an avrofile STREAM watches exactly one directory, got ${paths.length} paths")
+    new AvroMicroBatchStream(paths.head, rows, maxFilesPerTrigger)
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new AvroReaderFactory(avroSchema.toString, required, fileNameColumn,
-      org.apache.spark.graftshim.SerializableHadoopConf.session())
+  override def planInputPartitions(): Array[InputPartition] = {
+    val kept = AvroFilePruning(fileNameColumn).kept(AvroDataSource.files(paths).toSeq, pushed.toSeq)
+    FileScan.packed(kept, splittable = true)(AvroRange(_, _, _)).toArray
+  }
+
+  override def createReaderFactory(): PartitionReaderFactory = FileReaderFactory(rows)
+
+  private def rows = AvroRows(avroSchema.toString, required, fileNameColumn)
 
   override def description(): String =
-    s"avro($path) ReadSchema=[${required.fieldNames.mkString(", ")}]" +
+    s"avro(${paths.mkString(", ")}) ReadSchema=[${required.fieldNames.mkString(", ")}]" +
       (if (pushed.nonEmpty) s" prunedBy=[${pushed.mkString(", ")}]" else "")
 }
 
-private[graft] object AvroScanHelper {
-  def listAvroFiles(spark: org.apache.spark.sql.SparkSession,
-      path: String, allowEmpty: Boolean = false): Seq[org.apache.hadoop.fs.FileStatus] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val files =
-      if (fs.exists(p) && fs.getFileStatus(p).isFile) Seq(fs.getFileStatus(p))
-      else Option(fs.globStatus(new Path(
-          if (path.endsWith(".avro")) path else path.stripSuffix("/") + "/*.avro")))
-        .getOrElse(Array.empty).filter(_.isFile).toSeq
-    require(allowEmpty || files.nonEmpty, s"no .avro files under $path")
-    files.sortBy(_.getPath.getName)
-  }
+// a transiently-empty listing is fine for a tail (batch reads keep the
+// loud no-files require of the schema read)
+private class AvroMicroBatchStream(path: String, rows: AvroRows,
+    maxFilesPerTrigger: Option[Int])
+    extends FileCountMicroBatchStream(
+      () => AvroDataSource.files(Seq(path)).toIndexedSeq, maxFilesPerTrigger) {
+
+  override protected def planSlice(slice: Seq[FileStatus]): Seq[InputPartition] =
+    slice.map(st => FileSplit(Seq(AvroRange(st.getPath.toString, 0L, st.getLen))))
+
+  override def createReaderFactory(): PartitionReaderFactory = FileReaderFactory(rows)
 }
 
-private class AvroMicroBatchStream(path: String, schemaJson: String,
-    required: StructType, maxFilesPerTrigger: Option[Int],
-    fileNameColumn: Option[String] = None)
-    extends FileCountMicroBatchStream[(String, Long)](
-      () => {
-        val spark = org.apache.spark.sql.SparkSession.active
-        // a transiently-empty listing is fine for a tail (batch reads
-        // keep the loud no-files require)
-        AvroScanHelper.listAvroFiles(spark, path, allowEmpty = true)
-          .map(st => (st.getPath.toString, st.getLen)).toIndexedSeq
-      },
-      maxFilesPerTrigger) {
+/** One container's byte range `[start, start + length)`. */
+private case class AvroRange(file: String, start: Long, length: Long)
 
-  override protected def planSlice(slice: Seq[(String, Long)]): Seq[InputPartition] =
-    slice.map(f => AvroInputPartition(f._1, 0L, f._2))
-
-  // the lister already stats lengths — bytesBehind is free here
-  override protected def byteLen(f: (String, Long)): Long = f._2
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new AvroReaderFactory(schemaJson, required, fileNameColumn,
-      org.apache.spark.graftshim.SerializableHadoopConf.session())
-}
-
-private case class AvroInputPartition(file: String, start: Long, length: Long)
-    extends InputPartition
-
-/** Factory construction happens on the DRIVER (see BinlogReaderFactory's
-  * note); `conf` is REQUIRED so an executor-side default can never
-  * resurface. */
-private class AvroReaderFactory(readerSchemaJson: String, required: StructType,
-    fileNameColumn: Option[String],
-    conf: org.apache.spark.graftshim.SerializableHadoopConf)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new AvroPartitionReader(
-      partition.asInstanceOf[AvroInputPartition], readerSchemaJson, required,
-      fileNameColumn, conf)
+/** The Avro reader of one range, for [[FileReaderFactory]]. */
+private case class AvroRows(readerSchemaJson: String, required: StructType,
+    fileNameColumn: Option[String]) extends RangeReader[AvroRange] {
+  override def open(range: AvroRange, conf: Configuration): PartitionReader[InternalRow] =
+    new AvroPartitionReader(range, this, conf)
 }
 
 /** Reads one (file, byte-range) slice: seek to the first sync point at or
   * after `start`, read blocks until past `start + length` — the standard
   * splittable-Avro contract (each record belongs to exactly one range). */
-private class AvroPartitionReader(part: AvroInputPartition,
-    readerSchemaJson: String, required: StructType,
-    fileNameColumn: Option[String],
-    sconf: org.apache.spark.graftshim.SerializableHadoopConf)
+private class AvroPartitionReader(part: AvroRange, rows: AvroRows, conf: Configuration)
     extends PartitionReader[InternalRow] {
+  import rows.{fileNameColumn, required}
 
-  private val readerSchema = new Schema.Parser().parse(readerSchemaJson)
+  private val readerSchema = new Schema.Parser().parse(rows.readerSchemaJson)
   private val reader: DataFileReader[GenericRecord] = {
-    val conf = sconf.value
     val r = new DataFileReader[GenericRecord](
       new FsInput(new Path(part.file), conf),
       new GenericDatumReader[GenericRecord](null, readerSchema))
@@ -294,7 +232,7 @@ private class AvroPartitionReader(part: AvroInputPartition,
   }
 
   /** Record → row, with the virtual file-name column (constant per
-    * partition) spliced in at its projected ordinal when requested. */
+    * file) spliced in at its projected ordinal when requested. */
   private val converter: GenericRecord => InternalRow =
     fileNameColumn.filter(required.fieldNames.contains) match {
       case Some(c) =>

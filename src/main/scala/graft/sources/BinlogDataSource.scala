@@ -4,6 +4,7 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -29,9 +30,10 @@ import graft.ingest.{BinlogBinaryParser, ParsedBinlogEvent}
   * association), so the file is the unit of work; binlog files are
   * bounded by max_binlog_size, so at 100 TB the fan-out is the file
   * count. A batch read packs small whole files into per-core splits by
-  * Spark's file-source sizing rule ([[BinlogScan.pack]]); a stream reads
-  * one partition per file; with a `splitIndex` every read gets one
-  * partition per transaction-aligned byte range, never packed. This is
+  * Spark's file-source rule ([[FileScan.packed]]; a binlog file is never
+  * cut); a stream reads one partition per file; with a `splitIndex` every
+  * read gets one partition per transaction-aligned byte range, never
+  * packed. This is
   * the one binlog binary scan: the CLI's
   * `--binlog-binary` input and [[BinlogBinaryParser.parse]]'s typed view
   * both read through it. Column pruning is pushed into the reader:
@@ -54,7 +56,7 @@ class BinlogDataSource extends TableProvider with DataSourceRegister {
       "the binlog source's purgeSafe option is gone: tail offsets are " +
         "always keyed by the file's own suffix and survive retention — " +
         "use tailActive=true")
-    new BinlogTable(BinlogScan.resolvePaths(properties),
+    new BinlogTable(FileScan.resolvePaths(properties),
       Option(properties.get("maxFilesPerTrigger")).map(_.toInt),
       Option(properties.get("splitIndex")),
       Option(properties.get("splitIndexAutoBuild")).exists(_.toBoolean),
@@ -100,51 +102,28 @@ private class BinlogTable(paths: Seq[String], maxFilesPerTrigger: Option[Int],
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new BinlogScanBuilder(paths, maxFilesPerTrigger, splitIndex, autoBuild,
-      splitBytes, tailActive, maxBytesPerTrigger)
+    new FileScanBuilder(BinlogDataSource.schema, BinlogFilePruning)((required, pushed) =>
+      new BinlogScan(paths, required, pushed, maxFilesPerTrigger, splitIndex,
+        autoBuild, splitBytes, tailActive, maxBytesPerTrigger))
 }
 
-private class BinlogScanBuilder(paths: Seq[String], maxFilesPerTrigger: Option[Int] = None,
-    splitIndex: Option[String] = None, autoBuild: Boolean = false,
-    splitBytes: Option[Long] = None, tailActive: Boolean = false,
-    maxBytesPerTrigger: Option[Long] = None)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters {
-
-  private var required: StructType = BinlogDataSource.schema
-  private var pushed: Array[Filter] = Array.empty
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  /** File-pruning pushdown: predicates on `binlog_file`/`file_seq` are
-    * decidable per FILE, so matching filters skip whole files at planning
-    * (the source's partition pruning — at 100 TB a `file_seq >= N` tail
-    * read touches only the N+ files). All filters are also returned as
-    * residual so Spark re-evaluates them — pruning is an optimization,
-    * never a correctness dependency. */
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters.filter(BinlogFilePruning.prunable)
-    filters
-  }
-
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def build(): Scan =
-    new BinlogScan(paths, required, pushed, maxFilesPerTrigger, splitIndex,
-      autoBuild, splitBytes, tailActive, maxBytesPerTrigger)
-}
-
-private object BinlogFilePruning {
+/** File pruning: predicates on `binlog_file`/`file_seq` are decidable per
+  * FILE, so matching filters skip whole files at planning (the source's
+  * partition pruning — at 100 TB a `file_seq >= N` tail read touches only
+  * the N+ files). */
+private object BinlogFilePruning extends FileNameRules {
   private val cols = Set("binlog_file", "file_seq")
 
-  def prunable(f: Filter): Boolean = f match {
+  override def prunable(f: Filter): Boolean = f match {
     case EqualTo(a, _) => cols(a)
     case In(a, _) => cols(a)
     case GreaterThan("file_seq", _) | GreaterThanOrEqual("file_seq", _) |
          LessThan("file_seq", _) | LessThanOrEqual("file_seq", _) => true
     case _ => false
   }
+
+  override def keeps(f: Filter, name: String): Boolean =
+    keeps(f, name, graft.ingest.BinlogTextParser.fileSeq(name))
 
   /** Does a file with this (basename, seq) possibly satisfy the filter?
     * Conservative by construction: a null or non-numeric comparison value
@@ -184,26 +163,21 @@ private class BinlogScan(paths: Seq[String], required: StructType,
   override def toBatch: Batch = this
 
   /** The files the pushed filters keep: whole files packed into per-core
-    * splits by [[BinlogScan.pack]], or with a `splitIndex` one partition
+    * splits by [[FileScan.packed]], or with a `splitIndex` one partition
     * per transaction-aligned range by [[BinlogScan.plan]]. With
     * `splitIndexAutoBuild=true` the header-only walk runs as its own
     * small job before this scan's tasks launch — the "first pass records
     * offsets" pattern with no separate orchestration step. */
   override def planInputPartitions(): Array[InputPartition] = {
-    val kept = BinlogScan.listStatuses(paths).toSeq
-      .filter { st =>
-        val name = st.getPath.getName
-        val seq = graft.ingest.BinlogTextParser.fileSeq(name)
-        pushed.forall(BinlogFilePruning.keeps(_, name, seq))
-      }
-    (if (splitIndex.isEmpty) BinlogScan.pack(kept.map(st => st.getPath.toString -> st.getLen))
-      else BinlogScan.plan(kept.map(_.getPath.toString), splitIndex, autoBuild, splitBytes))
+    val kept = BinlogFilePruning.kept(BinlogScan.files(paths).toSeq, pushed.toSeq)
+    (if (splitIndex.isEmpty)
+      FileScan.packed(kept, splittable = false)((file, _, _) => BinlogRange(file))
+    else BinlogScan.plan(kept.map(_.getPath.toString), splitIndex, autoBuild, splitBytes))
       .toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new BinlogReaderFactory(required,
-      org.apache.spark.graftshim.SerializableHadoopConf.session())
+    FileReaderFactory(BinlogRows(required))
 
   /** Two streaming postures: the default count-based stream consumes
     * whole (closed, immutable) files; `tailActive=true` switches to
@@ -250,78 +224,14 @@ private class BinlogScan(paths: Seq[String], required: StructType,
 }
 
 private[graft] object BinlogScan {
-  /** The DSv2 path contract: `.load(p)` arrives as the `path` property,
-    * `.load(p1, p2, …)` as a JSON-array `paths` property (plus an
-    * optional `path`) — resolve both forms. Jackson is Spark's own
-    * bundled JSON mapper, so the array parse matches what Spark wrote. */
-  def resolvePaths(properties: util.Map[String, String]): Seq[String] = {
-    val multi = Option(properties.get("paths")).map { json =>
-      new com.fasterxml.jackson.databind.ObjectMapper()
-        .readValue(json, classOf[Array[String]]).toSeq
-    }.getOrElse(Seq.empty)
-    val single = Option(properties.get("path")).toSeq
-    (single ++ multi).distinct
-  }
+  /** The binlog files under `paths` with their statuses, in natural
+    * order ([[FileScan.list]]; every visible name is a binlog file). */
+  def files(paths: Seq[String]): Array[FileStatus] =
+    FileScan.list(paths, _ => true)
 
-  /** Natural-order listing across SEVERAL roots (multi-path batch read):
-    * each root lists as usual, then the union re-sorts globally by the
-    * same (numeric suffix, basename) key — duplicate files named twice
-    * count once. The dedup works on FULLY-QUALIFIED paths: directory
-    * and glob listings come back qualified from the filesystem, and
-    * the explicit single-file branch qualifies too, so the same file
-    * reached via two spellings (relative vs absolute, `//`, scheme
-    * present vs defaulted) collapses onto one entry instead of being
-    * read twice. Each file comes with its status (its length among
-    * them). */
-  def listStatuses(paths: Seq[String]): Array[FileStatus] =
-    sortNatural(paths.flatMap(p => listStatuses(p)).distinctBy(_.getPath.toString).toArray)
-
-  private def sortNatural(files: Array[FileStatus]): Array[FileStatus] =
-    files.sortBy(st => (fileSeqKey(st.getPath.getName), st.getPath.getName))
-
-  /** The natural-order sort key: suffix-less names sort last. */
-  private[sources] def fileSeqKey(name: String): Long =
-    graft.ingest.BinlogTextParser.fileSeq(name).getOrElse(Long.MaxValue)
-
-  /** Whole-file partitions for a batch read, packed by Spark's own
-    * file-source rule (`FilePartition.maxSplitBytes`):
-    * `maxSplitBytes = min(spark.sql.files.maxPartitionBytes,
-    * max(spark.sql.files.openCostInBytes, Σ(len + openCost) / minPartitionNum))`,
-    * where `minPartitionNum` is `spark.sql.files.minPartitionNum`, else the
-    * leaf-node default parallelism. Files fill splits next-fit in listing
-    * order, each costing its length plus `openCost`, so a file larger
-    * than `maxSplitBytes` stays alone and no more files than cores are
-    * never packed when their sizes are even. A split of several files
-    * is a [[BinlogFileGroup]], read file by file; the result does not
-    * depend on the grouping, since every row carries its own
-    * `file_seq`/`event_index`. */
-  def pack(files: Seq[(String, Long)]): Seq[InputPartition] = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val conf = spark.sessionState.conf
-    val openCost = conf.filesOpenCostInBytes
-    val minPartitions = conf.filesMinPartitionNum
-      .orElse(conf.getConf(org.apache.spark.sql.internal.SQLConf.LEAF_NODE_DEFAULT_PARALLELISM))
-      .getOrElse(spark.sparkContext.defaultParallelism)
-    val maxSplitBytes = math.min(conf.filesMaxPartitionBytes,
-      math.max(openCost, files.map(_._2 + openCost).sum / minPartitions))
-    val splits = Seq.newBuilder[Seq[BinlogInputPartition]]
-    var current = Vector.empty[BinlogInputPartition]
-    var size = 0L
-    files.foreach { case (file, len) =>
-      if (current.nonEmpty && size + len > maxSplitBytes) {
-        splits += current
-        current = Vector.empty
-        size = 0L
-      }
-      current :+= BinlogInputPartition(file)
-      size += len + openCost
-    }
-    if (current.nonEmpty) splits += current
-    splits.result().map {
-      case Seq(one) => one
-      case several => BinlogFileGroup(several)
-    }
-  }
+  /** [[files]] of one path, as path strings. */
+  def listFiles(path: String): Array[String] =
+    files(Seq(path)).map(_.getPath.toString)
 
   /** The partitions for `files`, shared by the split-index batch scan and
     * the count-based stream: one per file, or with a `splitIndex` (a shard
@@ -340,9 +250,9 @@ private[graft] object BinlogScan {
     * decodes whole-file — the index is an optimization, never a
     * correctness dependency. */
   def plan(files: Seq[String], splitIndex: Option[String],
-      autoBuild: Boolean, splitBytes: Option[Long]): Seq[InputPartition] =
-    splitIndex match {
-      case None => files.map(BinlogInputPartition(_))
+      autoBuild: Boolean, splitBytes: Option[Long]): Seq[FileSplit[BinlogRange]] =
+    (splitIndex match {
+      case None => files.map(BinlogRange(_))
       case Some(ip) =>
         // the SESSION's Hadoop conf, not a bare new Configuration(): index
         // paths on filesystems configured via spark.hadoop.* (credentials,
@@ -362,54 +272,11 @@ private[graft] object BinlogScan {
         files.flatMap { p =>
           ranges(p) match {
             case rs if rs.nonEmpty && lens.get(p).contains(rs.head.fileLen) =>
-              rs.map(r => BinlogInputPartition(
-                p, r.start, r.end, r.startIndex, r.checksumLen))
-            case _ => Seq(BinlogInputPartition(p))
+              rs.map(r => BinlogRange(p, r.start, r.end, r.startIndex, r.checksumLen))
+            case _ => Seq(BinlogRange(p))
           }
         }
-    }
-
-  /** All binlog files under `path`, in natural (`ls -v`) order: numeric
-    * suffix first, then name — the reference's processing order
-    * (comparator.sh:85). */
-  def listFiles(path: String): Array[String] =
-    listStatuses(path).map(_.getPath.toString)
-
-  /** [[listFiles]] of one path with each file's status. */
-  def listStatuses(path: String): Array[FileStatus] = {
-    val hadoopPath = new Path(path)
-    // driver-side listing with the session's conf (spark.hadoop.*
-    // credentials / fs impls); bare Configuration() only as the
-    // sessionless fallback
-    val conf = org.apache.spark.sql.SparkSession.getActiveSession
-      .map(_.sparkContext.hadoopConfiguration)
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
-    val fs = hadoopPath.getFileSystem(conf)
-    // hidden-file convention (Spark's file sources do the same): "."/"_"
-    // prefixed names are metadata (checksum sidecars, _SUCCESS markers,
-    // in-progress temp files), never binlog data. Applied to DIRECTORY
-    // and glob LISTINGS only — a caller who names one file explicitly
-    // gets exactly that file, hidden-looking or not.
-    def visible(p: Path): Boolean =
-      !p.getName.startsWith(".") && !p.getName.startsWith("_")
-    val named = if (fs.exists(hadoopPath)) Some(fs.getFileStatus(hadoopPath)) else None
-    val files: Array[FileStatus] = named match {
-      // qualified like the listing branches below (listStatus/globStatus
-      // return qualified paths), so multi-path dedup compares one form
-      case Some(st) if st.isFile =>
-        st.setPath(fs.makeQualified(hadoopPath))
-        Array(st)
-      case _ => (Option(fs.globStatus(hadoopPath)) match {
-        case Some(matches) if matches.nonEmpty =>
-          matches.flatMap { st =>
-            if (st.isFile) Array(st)
-            else fs.listStatus(st.getPath).filter(_.isFile)
-          }
-        case _ => fs.listStatus(hadoopPath).filter(_.isFile)
-      }).filter(st => visible(st.getPath))
-    }
-    sortNatural(files)
-  }
+    }).map(r => FileSplit(Seq(r)))
 }
 
 /** Micro-batch binlog tail: the offset is a position in the naturally-
@@ -433,84 +300,36 @@ private class BinlogMicroBatchStream(path: String, required: StructType,
     maxFilesPerTrigger: Option[Int] = None,
     splitIndex: Option[String] = None, autoBuild: Boolean = false,
     splitBytes: Option[Long] = None)
-    extends FileCountMicroBatchStream[String](
-      () => BinlogScan.listFiles(path).toIndexedSeq, maxFilesPerTrigger) {
+    extends FileCountMicroBatchStream(
+      () => BinlogScan.files(Seq(path)).toIndexedSeq, maxFilesPerTrigger) {
 
   // auto-build walks just the files new to this trigger
-  override protected def planSlice(files: Seq[String]): Seq[InputPartition] =
-    BinlogScan.plan(files, splitIndex, autoBuild, splitBytes)
-
-  // bytesBehind for the in-band metrics: one best-effort stat per
-  // not-yet-consumed file per progress event (0-on-error is fine for
-  // an observability number)
-  override protected def byteLen(f: String): Long =
-    TailWalk.statLen(f,
-      org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration)
+  override protected def planSlice(files: Seq[FileStatus]): Seq[InputPartition] =
+    BinlogScan.plan(files.map(_.getPath.toString), splitIndex, autoBuild, splitBytes)
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new BinlogReaderFactory(required,
-      org.apache.spark.graftshim.SerializableHadoopConf.session())
+    FileReaderFactory(BinlogRows(required))
 }
 
-/** `start == 0 && end == Long.MaxValue` is the whole-file partition; any
-  * other range comes from the transaction-aligned offset index. */
-private case class BinlogInputPartition(file: String, start: Long = 0L,
+/** One binlog file range: `start == 0 && end == Long.MaxValue` is the
+  * whole file, decoded to EOF; any other range comes from the
+  * transaction-aligned offset index or the tail stream's frontiers, with
+  * the decoder state (event index, checksum-tail length) at `start`. */
+private[sources] case class BinlogRange(file: String, start: Long = 0L,
     end: Long = Long.MaxValue, startIndex: Long = 0L, checksumLen: Int = 0)
-    extends InputPartition
 
-/** Several whole files read by one task, in listing order
-  * ([[BinlogScan.pack]]). */
-private case class BinlogFileGroup(files: Seq[BinlogInputPartition])
-    extends InputPartition
-
-/** Factory construction happens on the DRIVER, where the session conf is
-  * capturable; the readers themselves run executor-side and must receive
-  * it (a bare `new Configuration()` there would lose `spark.hadoop.*`
-  * credentials / fs impls on object stores; `SparkSession.active` would
-  * throw). Hence `conf` is REQUIRED — no default that only works
-  * driver-side. */
-private class BinlogReaderFactory(required: StructType,
-    conf: org.apache.spark.graftshim.SerializableHadoopConf)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    partition match {
-      case p: BinlogInputPartition => new BinlogPartitionReader(p, required, conf)
-      case BinlogFileGroup(files) => new BinlogGroupReader(
-        files.iterator.map(new BinlogPartitionReader(_, required, conf)))
-    }
-}
-
-/** Reads the files of a [[BinlogFileGroup]] one after another, each
-  * through its own reader, which is opened when the previous one is
-  * exhausted and closed then. */
-private class BinlogGroupReader(readers: Iterator[PartitionReader[InternalRow]])
-    extends PartitionReader[InternalRow] {
-
-  private var current: PartitionReader[InternalRow] = _
-
-  override def next(): Boolean = {
-    var found = current != null && current.next()
-    while (!found && readers.hasNext) {
-      close()
-      current = readers.next()
-      found = current.next()
-    }
-    found
-  }
-
-  override def get(): InternalRow = current.get()
-
-  override def close(): Unit =
-    if (current != null) { current.close(); current = null }
+/** The binlog reader of one range, for [[FileReaderFactory]]. */
+private[sources] case class BinlogRows(required: StructType) extends RangeReader[BinlogRange] {
+  override def open(range: BinlogRange, conf: Configuration): PartitionReader[InternalRow] =
+    new BinlogPartitionReader(range, required, conf)
 }
 
 /** Streams one file-range's events through the incremental decoder — heap
   * holds one event body at a time (not the file), so arbitrarily large
   * binlogs (≥2 GiB included) decode correctly. Projects only the required
   * columns, each through a converter resolved once per reader. */
-private class BinlogPartitionReader(part: BinlogInputPartition, required: StructType,
-    sconf: org.apache.spark.graftshim.SerializableHadoopConf)
-    extends PartitionReader[InternalRow] {
+private class BinlogPartitionReader(part: BinlogRange, required: StructType,
+    conf: Configuration) extends PartitionReader[InternalRow] {
 
   private val converters = required.fieldNames.map(BinlogPartitionReader.converter)
 
@@ -518,7 +337,7 @@ private class BinlogPartitionReader(part: BinlogInputPartition, required: Struct
 
   private lazy val events: Iterator[ParsedBinlogEvent] = {
     val p = new Path(part.file)
-    val fs = p.getFileSystem(sconf.value)
+    val fs = p.getFileSystem(conf)
     val raw = fs.open(p)
     if (part.start > 0) raw.seek(part.start) // range partition: event boundary
     val in = new java.io.BufferedInputStream(raw, 1 << 16)

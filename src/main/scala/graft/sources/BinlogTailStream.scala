@@ -192,28 +192,27 @@ private class BinlogTailMicroBatchStream(path: String, required: StructType,
     require(e.pos == 0L || listing.exists(f => seqOf(f) == e.seq),
       s"binlog tail: batch end inside file with suffix ${e.seq} " +
         "but it is missing from the listing")
-    val parts = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
+    val parts = scala.collection.mutable.ArrayBuffer.empty[BinlogRange]
     listing.foreach { f =>
       val fs = seqOf(f)
       if (fs == s.seq && fs == e.seq) {
         if (e.pos > s.pos)
-          parts += BinlogInputPartition(f, s.pos, e.pos, s.idx, s.ck)
+          parts += BinlogRange(f, s.pos, e.pos, s.idx, s.ck)
       } else if (fs == s.seq) {
         // closed by rotation: the remainder reads to EOF
-        parts += BinlogInputPartition(f, s.pos, Long.MaxValue, s.idx, s.ck)
+        parts += BinlogRange(f, s.pos, Long.MaxValue, s.idx, s.ck)
       } else if (fs > s.seq && fs < e.seq) {
-        parts += BinlogInputPartition(f)
+        parts += BinlogRange(f)
       } else if (fs == e.seq && e.pos > 0L) {
-        parts += BinlogInputPartition(f, 0L, e.pos, 0L, 0)
+        parts += BinlogRange(f, 0L, e.pos, 0L, 0)
       }
     }
-    parts.toArray
+    parts.map(r => FileSplit(Seq(r)): InputPartition).toArray
   }
 
   override def createReaderFactory()
       : org.apache.spark.sql.connector.read.PartitionReaderFactory =
-    new BinlogReaderFactory(required,
-      org.apache.spark.graftshim.SerializableHadoopConf.session())
+    FileReaderFactory(BinlogRows(required))
 
   /** In-band lag for `StreamingQueryProgress.sources[].metrics`
     * (DSv2 `ReportsSourceMetrics`), computed from the planning cycle's
@@ -325,7 +324,7 @@ private[sources] object TailWalk {
 
 private[sources] object BinlogTailMicroBatchStream {
 
-  def seqOf(file: String): Long = BinlogScan.fileSeqKey(file.split('/').last)
+  def seqOf(file: String): Long = FileScan.fileSeqKey(file.split('/').last)
 
   /** The watched directory's natural-order listing, checked: suffix-keyed
     * offsets need the suffix to be a REAL key — every listed file must

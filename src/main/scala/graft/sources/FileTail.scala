@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.connector.read.InputPartition
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, ReportsSourceMetrics, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 
@@ -12,11 +13,12 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, 
   * the stream (or its checkpoint) is live — purging old files would
   * shift the listing under a count-based offset.
   *
-  * `A` is the lister's element (file path, FileStatus, …); listing and
-  * partition planning happen on the driver only.
+  * The lister returns each file's status, so the byte lag comes with
+  * the listing; listing and partition planning happen on the driver
+  * only.
   */
-private[sources] abstract class FileCountMicroBatchStream[A](
-    list: () => IndexedSeq[A],
+private[sources] abstract class FileCountMicroBatchStream(
+    list: () => IndexedSeq[FileStatus],
     maxFilesPerTrigger: Option[Int])
     extends MicroBatchStream
     with SupportsAdmissionControl with SupportsTriggerAvailableNow
@@ -27,15 +29,7 @@ private[sources] abstract class FileCountMicroBatchStream[A](
     * huge file into several, and may do a batch side effect for the
     * whole slice (building the shards of every file new to this trigger
     * in ONE job) instead of once per file. */
-  protected def planSlice(slice: Seq[A]): Seq[InputPartition]
-
-  /** Byte length of one unconsumed listing element for the in-band
-    * `bytesBehind` metric; a negative return means "unknown" and
-    * suppresses the byte metric (the file-count metric always
-    * reports). Subclasses whose lister already carries lengths (avro)
-    * answer for free; the binlog subclass pays one stat per
-    * not-yet-consumed file per progress event. */
-  protected def byteLen(a: A): Long = -1L
+  protected def planSlice(slice: Seq[FileStatus]): Seq[InputPartition]
 
   private case class FileCountOffset(n: Int) extends Offset {
     override def json(): String = s"""{"n":$n}"""
@@ -43,7 +37,7 @@ private[sources] abstract class FileCountMicroBatchStream[A](
 
   // snapshot the listing per planning cycle so latestOffset and
   // planInputPartitions agree within one trigger
-  @volatile private var lastListing: IndexedSeq[A] = Vector.empty
+  @volatile private var lastListing: IndexedSeq[FileStatus] = Vector.empty
   // AvailableNow bound: files present when the trigger started
   @volatile private var availableNowCap: Option[Int] = None
 
@@ -111,15 +105,10 @@ private[sources] abstract class FileCountMicroBatchStream[A](
 
   /** In-band lag for `StreamingQueryProgress.sources[].metrics`, the
     * count-based analogue of [[BinlogTailMicroBatchStream]]'s:
-    * `filesBehind` vs the planning cycle's listing snapshot, plus
-    * `bytesBehind` when [[byteLen]] answers. Raw serialized offsets
-    * (the pending-batch re-execution path) convert via the json form,
-    * never a blind cast. */
-  // rotated files never change size, so their byteLen is cached after
-  // the first stat; only the LAST listed file (possibly still growing)
-  // is re-measured per progress event — without this a file-capped
-  // drain over a B-file backlog would pay ~B^2/2 stats
-  private val lenCache = scala.collection.mutable.HashMap.empty[A, Long]
+    * `filesBehind` and `bytesBehind` vs the planning cycle's listing
+    * snapshot, whose statuses carry the lengths (no filesystem call).
+    * Raw serialized offsets (the pending-batch re-execution path)
+    * convert via the json form, never a blind cast. */
 
   override def metrics(latestConsumedOffset: java.util.Optional[Offset])
       : java.util.Map[String, String] = {
@@ -132,12 +121,7 @@ private[sources] abstract class FileCountMicroBatchStream[A](
       }
     val m = new java.util.HashMap[String, String]()
     m.put("filesBehind", math.max(0, listing.length - n).toString)
-    val behind = listing.drop(math.max(0, n))
-    val lens = behind.zipWithIndex.map { case (a, i) =>
-      if (i == behind.length - 1) byteLen(a) // the active file: fresh
-      else lenCache.getOrElseUpdate(a, byteLen(a))
-    }
-    if (lens.forall(_ >= 0L)) m.put("bytesBehind", lens.sum.toString)
+    m.put("bytesBehind", listing.drop(math.max(0, n)).map(_.getLen).sum.toString)
     m
   }
 

@@ -11,7 +11,7 @@ import graft.ingest.AvroSink
 /** DSv2 route into Avro containers: spark.read.format("avrofile"). The
   * schema/evolution/logical-type behavior is covered by AvroSourceSpec
   * (AvroSource.read delegates here); this spec pins the scan properties —
-  * sync-marker splitting and column pruning. */
+  * sync-marker splitting, packing, the listing and column pruning. */
 class AvroDataSourceSpec extends AnyFunSuite with SparkTestSession {
 
   test("large files split by sync-marker byte ranges, small ones don't") {
@@ -160,5 +160,68 @@ class AvroDataSourceSpec extends AnyFunSuite with SparkTestSession {
     assert(mixed.rdd.getNumPartitions == 3) // Not(EqualTo) isn't prunable
     assert(mixed.select("id").as[Long].collect().sorted.toSeq
       == Seq(3L, 4L, 5L, 6L))
+  }
+
+  test("hidden containers are neither read nor counted") {
+    val spark2 = spark
+    import spark2.implicits._
+    val root = Files.createTempDirectory("avrohidden").toFile
+    val in = new java.io.File(root, "in"); in.mkdirs()
+    container(in, "a.avro", Seq(1L, 2L))
+    container(in, "_b.avro", Seq(3L))
+    container(in, ".c.avro", Seq(4L))
+    val ids = spark.read.format("avrofile").load(in.getPath)
+      .select("id").as[Long].collect().sorted.toSeq
+    assert(ids == Seq(1L, 2L))
+    val bins = new java.io.File(root, "bins"); bins.mkdirs()
+    Files.write(new java.io.File(bins, "mysql-bin.000001").toPath, "x".getBytes)
+    val metrics = graft.cli.Main.jobMetrics(spark, graft.cli.Main.Args(
+      binlogBinary = Some(bins.getPath), avro = Some(in.getPath)))
+    assert(metrics("avro_files") == 1L)
+  }
+
+  test("a batch read packs small containers into one split per core, with " +
+      "the rows and file names of a one-file-per-partition read") {
+    val root = Files.createTempDirectory("avropack").toFile
+    val names = (1 to 16).map(i => f"d$i%02d.avro")
+    names.zipWithIndex.foreach { case (n, i) =>
+      container(root, n, Seq(10L * (i + 1), 10L * (i + 1) + 1)) }
+    assert(spark.sparkContext.defaultParallelism == 4)
+    def read() = spark.read.format("avrofile")
+      .option("fileNameColumn", "src_file").load(root.getPath)
+    val packed = read()
+    assert(packed.rdd.getNumPartitions == 4)
+    // next-fit in listing order: each split holds 4 consecutive files
+    val perSplit = packed.groupBy(spark_partition_id().as("p"))
+      .agg(collect_set("src_file").as("files")).collect()
+      .map(_.getSeq[String](1).sorted).sortBy(_.head).toSeq
+    assert(perSplit == names.grouped(4).toSeq)
+    // an open cost above the split size leaves every file alone (a
+    // one-byte split size would cut these splittable containers into
+    // one-byte ranges instead)
+    val old = spark.conf.get("spark.sql.files.openCostInBytes", "4194304")
+    val perFile = try {
+      spark.conf.set("spark.sql.files.openCostInBytes", (1L << 30).toString)
+      val df = read()
+      assert(df.rdd.getNumPartitions == 16)
+      df.collect().toSeq
+    } finally spark.conf.set("spark.sql.files.openCostInBytes", old)
+    val rows = packed.collect().toSeq
+    assert(rows == perFile)
+    assert(rows.size == 32)
+    // the virtual column is set per file, not once per split
+    rows.foreach { r =>
+      assert(r.getAs[String]("src_file") == names((r.getAs[Long]("id") / 10 - 1).toInt), r)
+    }
+  }
+
+  /** One container of `(id, "v<id>")` rows, moved into `dir` as `name`. */
+  private def container(dir: java.io.File, name: String, ids: Seq[Long]): Unit = {
+    val spark2 = spark
+    import spark2.implicits._
+    val tmp = Files.createTempDirectory("avrotmp").toFile.getPath + "/out"
+    AvroSink.write(ids.map(i => (i, s"v$i")).toDF("id", "s").repartition(1), tmp)
+    val avro = new java.io.File(tmp).listFiles().filter(_.getName.endsWith(".avro")).head
+    Files.move(avro.toPath, new java.io.File(dir, name).toPath)
   }
 }

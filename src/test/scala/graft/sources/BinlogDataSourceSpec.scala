@@ -302,13 +302,13 @@ class BinlogDataSourceSpec extends AnyFunSuite with SparkTestSession {
     val mb = 1L << 20
     val small = (1 to 8).map(i => s"f$i" -> mb)
     // Σ(len + 4 MB open cost) / 4 cores = 61 MB per split
-    val parts = BinlogScan.pack(small.take(4) ++ Seq("big" -> 200 * mb) ++ small.drop(4))
+    val parts = pack(small.take(4) ++ Seq("big" -> 200 * mb) ++ small.drop(4))
     assert(parts == Seq(
-      BinlogFileGroup(Seq("f1", "f2", "f3", "f4").map(BinlogInputPartition(_))),
-      BinlogInputPartition("big"),
-      BinlogFileGroup(Seq("f5", "f6", "f7", "f8").map(BinlogInputPartition(_)))))
+      split("f1", "f2", "f3", "f4"),
+      split("big"),
+      split("f5", "f6", "f7", "f8")))
     // no more files than cores, of even sizes: never packed
-    assert(BinlogScan.pack(small.take(4)) == small.take(4).map(f => BinlogInputPartition(f._1)))
+    assert(pack(small.take(4)) == small.take(4).map(f => split(f._1)))
   }
 
   test("split-index ranges are never packed") {
@@ -335,6 +335,17 @@ class BinlogDataSourceSpec extends AnyFunSuite with SparkTestSession {
     val s1 = stream.latestOffset(s0,
       org.apache.spark.sql.connector.read.streaming.ReadLimit.allAvailable())
     val parts = stream.planInputPartitions(s0, s1).toSeq
-    assert(parts.size == 16 && parts.forall(_.isInstanceOf[BinlogInputPartition]))
+    assert(parts.size == 16 && parts.forall {
+      case FileSplit(Seq(_: BinlogRange)) => true
+      case _ => false
+    })
   }
+
+  /** The core's batch planner over whole binlog files of these lengths. */
+  private def pack(files: Seq[(String, Long)]) = FileScan.packed(
+    files.map { case (f, len) =>
+      new org.apache.hadoop.fs.FileStatus(len, false, 1, 0L, 0L, new org.apache.hadoop.fs.Path(f))
+    }, splittable = false)((f, _, _) => BinlogRange(f))
+
+  private def split(files: String*) = FileSplit(files.map(BinlogRange(_)))
 }

@@ -10,8 +10,10 @@ Each `<gate>.txt` is one gate's `explain("formatted")`. Gates are matched
 by file name, so dump both sides with the same suffix. Before comparing,
 the ids a fresh session numbers differently are replaced by placeholders:
 expression ids (`#123`), exchange plan ids (`plan_id=42`), RDD ids
-(`MapPartitionsRDD[4493]`) and the source position an RDD was created at
-(`at localCheckpoint at Foo.scala:338`). Everything else, operators and
+(`MapPartitionsRDD[4493]`), the source position an RDD was created at
+(`at localCheckpoint at Foo.scala:338`) and the JVM's name and identity
+of a lambda argument (`$$Lambda$5160/0x00007f0a9145a5d0@626967a0`, as a
+typed `map` prints it). Everything else, operators and
 their arguments, file locations included, must match.
 
 Prints one line per differing gate and per gate present on one side only,
@@ -28,6 +30,7 @@ NORMALIZE = [
     (re.compile(r'plan_id=\d+'), 'plan_id=N'),
     (re.compile(r'(\w*RDD)\[\d+\]'), r'\1[N]'),
     (re.compile(r' at [\w$]+\.(?:scala|java):\d+'), ' at <src>'),
+    (re.compile(r'\$Lambda(?:\$\d+)?/0x[0-9a-f]+@[0-9a-f]+'), '$Lambda@N'),
 ]
 
 

@@ -68,6 +68,12 @@ class PlanDiffTest(unittest.TestCase):
         self.assertEqual(r.returncode, 0, r.stdout + r.stderr)
         self.assertIn('1 gate(s) equal, 0 changed', r.stdout)
 
+    def test_lambda_identity_differs_only_equal(self):
+        arg = 'Arguments: org.apache.spark.sql.internal.UDFAdaptors$$$Lambda${}/0x{}@{}, obj#9\n'
+        a, b = self.dirs({'cdc06_text_source': plan(1, arg.format(5160, '00007f0a9145a5d0', '626967a0'))},
+                         {'cdc06_text_source': plan(1, arg.format(5130, '00007f62b9453ba0', '6b0796d4'))})
+        self.assertEqual(plan_diff.diff(a, b), (['cdc06_text_source'], [], [], []))
+
     def test_added_exchange_listed(self):
         a, b = self.dirs({'s03_ann_ivf': plan(100), 's04_ann_ivf_nprobe': plan(5)},
                          {'s03_ann_ivf': plan(200, EXCHANGE), 's04_ann_ivf_nprobe': plan(6)})
